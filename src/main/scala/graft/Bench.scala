@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, forcing FULL materialization through a noop sink
   * (a bare .count() would let Catalyst prune the projections we mean to
@@ -10,25 +8,11 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Keep AQE's skew handling but not its partition coalescing: the
-      // 64 MB advisory target is a cluster-network setting; on a single
-      // 32-thread node it collapses ~200 MB reduce stages to 2-3 tasks
-      // and serializes them (measured 8x on the LSH bucket aggregation).
-      // shuffle.partitions is already sized to the box.
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // JVM/codegen warmup on the smallest SF so per-query numbers measure
-    // the plan, not first-query class-loading.
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
+    val spark = GraftSession(defaultCpus = 32, logLevel = "ERROR")
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
+    // JVM/codegen warmup so per-query numbers measure the plan, not
+    // first-query class-loading.
+    try SparkEntry.entry(spark, sfDir).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
     // Stage pre-build (r17 verdict #3): build every staged store
     // (target/graft-stage) in this labeled untimed phase so a fresh

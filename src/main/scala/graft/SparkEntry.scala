@@ -612,11 +612,12 @@ object SparkEntry {
   private val tsSec: Column = TimeFns.floorDiv(col("ts"), 1000000000L)
 
   // ===========================================================================
-  // Flagship: composite scoring pipeline on sf0.001 (scan → broadcast joins →
-  // hierarchical z-score windows → weighted blend → band → rank)
+  // Flagship: composite scoring pipeline over the tables in `sfDir` (scan →
+  // broadcast joins → hierarchical z-score windows → weighted blend → band →
+  // rank)
   // ===========================================================================
-  def entry(spark: SparkSession): DataFrame =
-    queries("q07_composite_zscore")(spark, "/root/testdata/sf0.001")
+  def entry(spark: SparkSession, sfDir: String): DataFrame =
+    queries("q07_composite_zscore")(spark, sfDir)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,23 +14,7 @@ object Verify {
     only.foreach(o => System.err.println(
       s"[verify] partial run (${o.size} queries) — stale outputs of other " +
         "queries in outDir are NOT refreshed"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // see Bench.scala: coalescing serializes mid-size reduce stages
-      // on a single node; partitions are already sized to the box
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      // events.ts physical type has drifted across driver testdata
-      // regenerations (NANOS pre-r10, MICROS since). Tables.normalizeTs
-      // converts either to long nanos; this conf covers the NANOS form
-      // (Spark rejects it outright without the legacy flag).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(defaultCpus = 4, logLevel = "WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

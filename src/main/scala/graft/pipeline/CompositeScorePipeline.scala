@@ -92,9 +92,4 @@ object CompositeScorePipeline {
       outer = Seq("market_cap_category", "sector"),
       outCol = "composite_score")
   }
-
-  /** Top-10 by composite score (ref :397-399). */
-  def top10(scored: DataFrame): DataFrame =
-    RankOps.topK(scored, 10, col("composite_score"), col("symbol"))
-      .select(col("symbol"), col("market_cap_category"), col("composite_score"))
 }

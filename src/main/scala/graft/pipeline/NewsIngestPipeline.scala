@@ -4,14 +4,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Cleanse
 import graft.operators.Dedup
-import graft.streaming.Streams
 
 /** The reference's news ingestion flow (ref newsflow_scraper.py):
   * scraped items → premium filter → headline truncation → md5 surrogate
   * key → URL dedup against everything already stored → append.
   *
   * Batch form: left-anti join (replacing the driver-side seen-URL set,
-  * ref :243-327). Streaming form: watermarked dropDuplicates, state
+  * ref :243-327). Streaming form: [[prepare]] followed by
+  * `Streams.dedupByKey` on the URL (watermarked dropDuplicates), state
   * bounded by the watermark instead of an ever-growing DB read.
   */
 object NewsIngestPipeline {
@@ -32,9 +32,4 @@ object NewsIngestPipeline {
   /** Batch: keep only unseen URLs then append (S10). */
   def newItems(scraped: DataFrame, existing: DataFrame): DataFrame =
     Dedup.antiJoinAppend(prepare(scraped), existing, "article_url")
-
-  /** Streaming: same semantics over a stream with event-time watermark. */
-  def streamNewItems(stream: DataFrame, eventTime: String,
-      watermark: String = "1 hour"): DataFrame =
-    Streams.dedupByKey(prepare(stream), "article_url", eventTime, watermark)
 }

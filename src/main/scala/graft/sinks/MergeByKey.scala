@@ -25,24 +25,24 @@ import org.apache.spark.sql.functions._
   *   path/v=N/          immutable, fully-written version directories
   *   path/_manifest     tiny file holding the committed version number N
   *   path/.stage-<uuid> invisible per-writer staging dirs (pre-claim)
-  *   path/_legacy       migration tombstone: pre-versioned entries to GC
   * }}}
-  * A writer stages version N+1 COMPLETELY in a private `.stage-<uuid>`
-  * directory, then CLAIMS the version with an atomic
-  * rename-without-overwrite onto `v=N+1` (`FileContext.rename` with
-  * `Rename.NONE` — fails if the destination exists, a single metadata op
-  * on HDFS and local fs). Exactly one concurrent writer wins the claim;
-  * the loser deletes its staging dir, waits for the winner's manifest
-  * flip, and RETRIES its merge against the winner's committed snapshot —
-  * a compare-and-swap loop, so concurrent upserts serialize instead of
-  * interleaving files in a shared directory. Only the claim winner for
-  * N+1 ever flips the manifest to N+1, and a claimant of N+2 exists only
-  * after observing the manifest at N+1, so manifest flips are strictly
-  * monotone. Readers resolve the manifest first ([[readCommitted]]) and
-  * only ever see a version that finished writing: a reader that resolved
-  * N before the flip keeps scanning the untouched `v=N` directory while
-  * N+1 commits — snapshot isolation. This is the single-table core of a
-  * lakehouse manifest commit (Delta/Iceberg pattern, public design).
+  * [[upsert]] and [[overwrite]] share one commit loop. A writer stages
+  * version N+1 COMPLETELY in a private `.stage-<uuid>` directory, then
+  * CLAIMS the version with an atomic rename-without-overwrite onto
+  * `v=N+1` (`FileContext.rename` with `Rename.NONE` — fails if the
+  * destination exists, a single metadata op on HDFS and local fs).
+  * Exactly one concurrent writer wins the claim; the loser deletes its
+  * staging dir, waits for the winner's manifest flip, and RETRIES against
+  * the winner's committed snapshot — a compare-and-swap loop, so
+  * concurrent writers serialize instead of interleaving files in a
+  * shared directory. Only the claim winner for N+1 ever flips the
+  * manifest to N+1, and a claimant of N+2 exists only after observing
+  * the manifest at N+1, so manifest flips are strictly monotone. Readers
+  * resolve the manifest first ([[readCommitted]]) and only ever see a
+  * version that finished writing: a reader that resolved N before the
+  * flip keeps scanning the untouched `v=N` directory while N+1 commits —
+  * snapshot isolation. This is the single-table core of a lakehouse
+  * manifest commit (Delta/Iceberg pattern, public design).
   *
   * Crash window: a writer that dies AFTER claiming `v=N+1` but BEFORE
   * flipping the manifest leaves the claim dir orphaned; concurrent
@@ -51,24 +51,19 @@ import org.apache.spark.sql.functions._
   * hand after inspecting it). A writer that dies pre-claim leaves only
   * an invisible `.stage-*` dir, which never affects readers.
   *
-  * Retention: versions more than `retain - 1` behind the head are
-  * deleted AFTER the flip (`retain = 2` by default: head + one prior),
-  * so an in-flight reader of the prior version has one full merge
-  * cycle of slack. `retain` is surfaced on [[upsert]]/[[overwrite]] —
-  * a reader holding a snapshot across k concurrent commits needs
-  * `retain > k`, and a read of an evicted version fails with the NAMED
-  * retain-window error in [[readVersion]], never a raw
-  * FileNotFoundException mid-scan of a half-deleted directory. Legacy flat stores
-  * (pre-versioned parquet directly under `path` — flat files OR
-  * partitioned directory layouts, detected by probing the path as
-  * parquet) are read as the existing side on the first versioned
-  * commit; their root entries are recorded in a `_legacy` tombstone at
-  * migration and deleted only at the NEXT commit's GC, so a reader
-  * that resolved the store via the flat fallback gets the same
-  * one-cycle slack as versioned readers. GC deletes nothing it cannot
-  * positively identify: expired `v=N` dirs and tombstoned legacy
-  * entries only — foreign files or directories under the store root
-  * are never touched.
+  * Retention: GC runs AFTER the flip and keeps the head and one prior
+  * version, so an in-flight reader of the prior version has one full
+  * commit cycle of slack. A read of an evicted version fails with the
+  * NAMED retain-window error in [[readVersion]], never a raw
+  * FileNotFoundException mid-scan of a half-deleted directory. GC
+  * deletes only expired `v=N` dirs: foreign files or directories under
+  * the store root are never touched.
+  *
+  * Only versioned stores are read or written. A path with no
+  * `_manifest` that holds anything besides `.`-prefixed writer files and
+  * `v=N` claim dirs is refused by both writers before anything is
+  * staged, and [[readCommitted]] on a path with no manifest fails by
+  * name — data this sink did not write is never merged, hidden or read.
   *
   * Scale: the merge is one full-outer shuffle join on the key. For
   * repeated merges at 100 TB the existing side should be bucketed by the
@@ -99,21 +94,24 @@ object MergeByKey {
     joined.select(keyOut +: merged: _*)
   }
 
-  /** A8 — per-merge success accounting (the reference logs rows-in /
-    * rows-out per batch, uploadtodb.py:160-197; SURVEY §5 count
-    * reconciliation). Counts come from the sink's own write, not an
-    * extra pass. */
-  case class MergeStats(incomingRows: Long, mergedRows: Long)
+  /** Commit attempts before contention fails the write loudly. */
+  private val maxAttempts = 5
+
+  /** Versions GC keeps: the head and one prior. A reader pinned to
+    * version N keeps reading while one further commit lands; the next
+    * commit evicts N and the reader (or a time-travel [[readVersion]])
+    * fails with the NAMED retain-window error. */
+  private val retain = 2
 
   private def fs(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** The committed version number, or None when the store has never
-    * had a versioned commit (absent, or a legacy flat parquet dir).
-    * Reads the manifest to EOF — `InputStream.read` may return fewer
-    * bytes than the file holds, and a short read of "12" as "1" would
-    * silently resolve an older (possibly GC'd) snapshot — and fails
-    * loudly on an empty or non-numeric manifest rather than guessing. */
+    * had a versioned commit. Reads the manifest to EOF —
+    * `InputStream.read` may return fewer bytes than the file holds, and
+    * a short read of "12" as "1" would silently resolve an older
+    * (possibly GC'd) snapshot — and fails loudly on an empty or
+    * non-numeric manifest rather than guessing. */
   def committedVersion(spark: SparkSession, path: String): Option[Long] = {
     val f = fs(spark, path)
     val manifest = new Path(s"$path/_manifest")
@@ -128,13 +126,14 @@ object MergeByKey {
     }
   }
 
-  /** Read the committed snapshot of a versioned store; falls back to a
-    * flat parquet read for legacy (pre-versioned) directories so old
-    * stores keep resolving until their first versioned commit. */
+  /** Read the committed snapshot of a versioned store. A path with no
+    * manifest fails by name instead of being read as plain parquet. */
   def readCommitted(spark: SparkSession, path: String): DataFrame =
     committedVersion(spark, path) match {
       case Some(v) => spark.read.parquet(s"$path/v=$v")
-      case None => spark.read.parquet(path)
+      case None => throw new IllegalStateException(
+        s"$path is not a versioned store: it has no _manifest, so there " +
+          "is no committed version to read")
     }
 
   /** Name of the per-version commit record the claim winner drops into
@@ -155,9 +154,9 @@ object MergeByKey {
   /** TIME-TRAVEL read: resolve a specific historical version of the
     * store — "what did the table say before last night's merge?" is a
     * one-call diff against `readCommitted`. Only versions inside the
-    * GC retain window still exist (gc keeps `retain` behind the
-    * committed head); asking for an evicted or future version fails
-    * loudly with the live range instead of resolving the wrong
+    * GC retain window still exist (the head and one prior); asking
+    * for an evicted or future version fails loudly with the live range
+    * instead of resolving the wrong
     * snapshot, and a surviving `v=` dir WITHOUT a commit record (a
     * stale CAS claim mid-recheck, or debris from a GC failure) is
     * rejected the same way rather than served as history. The head
@@ -178,12 +177,10 @@ object MergeByKey {
           "version dir without a commit record is an uncommitted stale " +
           "claim, never history — live committed versions: " +
           f.listStatus(new Path(path))
-            .map(_.getPath.getName)
-            .filter(n => n.startsWith("v=") &&
-              n.stripPrefix("v=").forall(_.isDigit))
-            .filter(n => n == s"v=$cur" ||
-              f.exists(new Path(s"$path/$n/$CommitRecord")))
-            .sortBy(_.stripPrefix("v=").toLong).mkString(", "))
+            .flatMap(st => versionOf(st.getPath.getName))
+            .filter(v => v == cur ||
+              f.exists(new Path(s"$path/v=$v/$CommitRecord")))
+            .sorted.map(v => s"v=$v").mkString(", "))
     spark.read.parquet(dir.toString)
   }
 
@@ -194,9 +191,9 @@ object MergeByKey {
     * `added` (absent from vOld), `removed` (absent from vNew — a
     * truncate-and-load can drop keys; upsert never does), `changed`
     * (any shared non-key column differs, null-safe), or `unchanged`.
-    * Both versions must be inside the retain window ([[readVersion]]
-    * enforces the commit record + the named eviction error), so size
-    * `retain` to the diff horizon you need. One full-outer shuffle
+    * Both versions must be inside the retain window — the head and one
+    * prior ([[readVersion]] enforces the commit record + the named
+    * eviction error). One full-outer shuffle
     * join on the key — the merge's own cost shape; at 100 TB bucket
     * the store by the key and the diff co-locates like the merge. */
   def diffVersions(spark: SparkSession, path: String, key: String,
@@ -262,11 +259,11 @@ object MergeByKey {
   }
 
   /** Block until the manifest reaches `version` (a lost claim means the
-    * winner is mid-commit). Fails loudly after `timeoutMs` naming the
-    * orphaned claim dir — the crashed-winner window documented above. */
-  private def awaitCommit(spark: SparkSession, path: String, version: Long,
-      timeoutMs: Long = 60000L): Unit = {
-    val deadline = System.nanoTime() + timeoutMs * 1000000L
+    * winner is mid-commit). Fails loudly after 60 s naming the orphaned
+    * claim dir — the crashed-winner window documented above. */
+  private def awaitCommit(spark: SparkSession, path: String,
+      version: Long): Unit = {
+    val deadline = System.nanoTime() + 60L * 1000000000L
     while (committedVersion(spark, path).getOrElse(-1L) < version) {
       if (System.nanoTime() > deadline) throw new IllegalStateException(
         s"lost the claim on $path/v=$version but its writer never " +
@@ -274,41 +271,6 @@ object MergeByKey {
           "delete the orphan dir or flip _manifest to it by hand")
       Thread.sleep(50)
     }
-  }
-
-  /** Is this root entry positively identifiable as parquet writer
-    * output — flat data files, writer sidecars, or a `col=value`
-    * partition directory? Only such entries are ever tombstoned for
-    * legacy GC; anything else at the root is foreign content and is
-    * left alone forever. (A legacy partition column literally named
-    * `v` would collide with the version layout and is unsupported.) */
-  private def looksLikeParquetOutput(name: String): Boolean =
-    name.endsWith(".parquet") || name.endsWith(".crc") ||
-      name == "_SUCCESS" || name == "_metadata" ||
-      name == "_common_metadata" || name.startsWith("part-") ||
-      (name.contains("=") && !name.startsWith("v="))
-
-  /** Entries the migration commit will tombstone: the root entries the
-    * legacy read actually consumed, filtered to positively-identified
-    * parquet output. Recorded at the moment the legacy data is READ,
-    * so GC later deletes exactly what the migration consumed — never
-    * a guess. */
-  private def legacyRootEntries(spark: SparkSession, path: String): Seq[String] = {
-    val f = fs(spark, path)
-    val root = new Path(path)
-    if (!f.exists(root)) Seq.empty
-    else f.listStatus(root).map(_.getPath.getName)
-      .filterNot(n => n.startsWith("v=") || n.startsWith("_manifest") ||
-        n.startsWith(".stage-") || n.startsWith(".manifest-") ||
-        n == "_legacy")
-      .filter(looksLikeParquetOutput).toSeq
-  }
-
-  private def writeLegacyTombstone(spark: SparkSession, path: String,
-      entries: Seq[String]): Unit = {
-    val f = fs(spark, path)
-    val out = f.create(new Path(s"$path/_legacy"), true)
-    try out.write(entries.mkString("\n").getBytes("UTF-8")) finally out.close()
   }
 
   /** Read a small control file to EOF (see [[committedVersion]] for why
@@ -324,208 +286,108 @@ object MergeByKey {
     new String(bytes.toByteArray, "UTF-8")
   }
 
-  /** Post-flip garbage collection. Deletes ONLY what it can positively
-    * identify: `v=N` dirs at least `retain` behind the committed
-    * version, and — one full commit cycle after a legacy migration —
-    * the root entries the `_legacy` tombstone recorded as consumed by
-    * that migration (its `#v=M` header says which commit wrote it; the
-    * migration's own gc call sees committed == M and leaves everything
-    * for the deferred cycle). Unknown files/dirs at the root are never
-    * touched (a store path accidentally shared with other content must
-    * not lose it), and live `.stage-*` dirs belong to in-flight
-    * writers. */
-  private def gc(spark: SparkSession, path: String, committed: Long,
-      retain: Int = 2): Unit = {
+  /** The N of a `v=N` entry; None for any other name, including a
+    * foreign `v=x`, which is never-touch content rather than a
+    * NumberFormatException for every later commit. */
+  private def versionOf(name: String): Option[Long] = {
+    val suffix = name.stripPrefix("v=")
+    if (name.startsWith("v=") && suffix.nonEmpty && suffix.forall(_.isDigit))
+      Some(suffix.toLong)
+    else None
+  }
+
+  /** A path with no manifest may hold only `.`-prefixed writer files and
+    * `v=N` dirs claimed by a first commit still in flight. Anything else
+    * is content this sink did not write: refuse before staging, so the
+    * path is left exactly as found. */
+  private def requireNoForeignContent(spark: SparkSession,
+      path: String): Unit = {
     val f = fs(spark, path)
-    f.listStatus(new Path(path)).foreach { st =>
-      val name = st.getPath.getName
-      // suffix must parse as a version: a foreign `v=x` entry (e.g. a
-      // legacy partition column named v) is never-touch content, not a
-      // permanent NumberFormatException for every later commit
-      val suffix = name.stripPrefix("v=")
-      if (name.startsWith("v=") && suffix.nonEmpty && suffix.forall(_.isDigit)) {
-        val v = suffix.toLong
-        if (v <= committed - retain) f.delete(st.getPath, true)
-      }
-    }
-    val tomb = new Path(s"$path/_legacy")
-    if (f.exists(tomb)) {
-      val lines = readFully(spark, tomb).split("\n")
-        .map(_.trim).filter(_.nonEmpty)
-      val writtenAt = lines.headOption.filter(_.startsWith("#v="))
-        .map(_.stripPrefix("#v=").toLong).getOrElse(0L)
-      if (committed > writtenAt) {
-        lines.filterNot(_.startsWith("#")).foreach { entry =>
-          val p = new Path(s"$path/$entry")
-          if (f.exists(p)) f.delete(p, true)
-        }
-        f.delete(tomb, false)
-      }
+    val root = new Path(path)
+    if (f.exists(root)) {
+      val foreign = f.listStatus(root).filterNot { st =>
+        val name = st.getPath.getName
+        name.startsWith(".") || (st.isDirectory && versionOf(name).isDefined)
+      }.map(_.getPath.getName).sorted
+      if (foreign.nonEmpty) throw new IllegalStateException(
+        s"$path is not a versioned store: it has no _manifest but holds " +
+          s"${foreign.mkString(", ")} — move that content away or write " +
+          "to an empty path")
     }
   }
 
-  /** Directory-aware legacy detection: a pre-versioned store may be
-    * flat root files OR a partitioned/nested parquet layout with no
-    * root `*.parquet` at all. Probe by reading ONLY the positively-
-    * identified parquet entries (with `basePath` so partition columns
-    * survive) — a foreign file sitting next to the legacy data must
-    * neither break the probe nor exclude the data from the merge. */
-  private def probeLegacy(spark: SparkSession, path: String): Option[DataFrame] = {
-    val dataEntries = legacyRootEntries(spark, path)
-      .filterNot(n => n.endsWith(".crc") || n == "_SUCCESS" ||
-        n == "_metadata" || n == "_common_metadata")
-    if (dataEntries.isEmpty) None
-    else try {
-      val df = spark.read.option("basePath", path)
-        .parquet(dataEntries.map(n => s"$path/$n"): _*)
-      df.schema // force schema resolution
-      Some(df)
-    } catch {
-      // Only an AnalysisException (schema inference rejected the
-      // content) means "not legacy parquet". Anything else — an
-      // IOException, a corrupt footer in a positively-identified
-      // parquet entry — must NOT read as None (r17 ADVICE, medium):
-      // readCommitted never falls back once a manifest exists, so
-      // swallowing it would make the first versioned commit contain
-      // only incoming rows and the flat-store data would silently
-      // disappear from the committed view. Rethrow so a flaky or
-      // corrupt read fails THIS commit instead.
-      case _: org.apache.spark.sql.AnalysisException => None
+  /** Post-flip garbage collection: deletes ONLY `v=N` dirs at least
+    * `retain` behind the committed version. Unknown files/dirs at the
+    * root are never touched (a store path accidentally shared with other
+    * content must not lose it), and live `.stage-*` dirs belong to
+    * in-flight writers. */
+  private def gc(spark: SparkSession, path: String, committed: Long): Unit = {
+    val f = fs(spark, path)
+    f.listStatus(new Path(path)).foreach { st =>
+      if (versionOf(st.getPath.getName).exists(_ <= committed - retain))
+        f.delete(st.getPath, true)
+    }
+  }
+
+  /** The one commit loop behind [[upsert]] and [[overwrite]]. `stageNext`
+    * derives version N+1 from the committed head (None for a new store);
+    * the head is read only if `stageNext` uses it. The loop stages N+1 in
+    * a private dir, claims `v=N+1` with an atomic no-overwrite rename,
+    * rechecks the claim, writes the commit record, flips the manifest and
+    * GCs. A lost claim waits for the winner's flip and retries against
+    * the NEW head — the staged data was derived from a now-stale one. */
+  @annotation.tailrec
+  private def commit(spark: SparkSession, path: String, op: String,
+      attempt: Int = 1)(stageNext: (=> Option[DataFrame]) => DataFrame): Unit = {
+    val cur = committedVersion(spark, path)
+    if (cur.isEmpty) requireNoForeignContent(spark, path)
+    val next = cur.getOrElse(-1L) + 1L
+    val stage = new Path(s"$path/.stage-${java.util.UUID.randomUUID()}")
+    stageNext(cur.map(v => spark.read.parquet(s"$path/v=$v")))
+      .write.mode(SaveMode.Overwrite).parquet(stage.toString)
+    val claimed = new Path(s"$path/v=$next")
+    val won = claimVersion(spark, stage, claimed)
+    // Stale-claim recheck: the claim can succeed against a GC'd slot — a
+    // writer that read cur=N and staged slowly wins v=N+1 after
+    // concurrent writers advanced the manifest past it and gc deleted
+    // the original v=N+1. Winning the claim is only a lock when the
+    // manifest still reads next-1; otherwise the staged base is stale.
+    // (When the recheck passes, nothing can advance the manifest before
+    // our flip: any later commit must first claim v=next, which we hold.)
+    if (won && committedVersion(spark, path).getOrElse(-1L) == next - 1L) {
+      // commit record BEFORE the flip, while we still hold the claim
+      // (nothing can commit in between), so every version behind the
+      // head carries proof it was really committed — see readVersion
+      writeCommitRecord(spark, claimed)
+      commitManifest(spark, path, next)
+      gc(spark, path, next)
+      // the store gained a version: drop any cached listing of the root
+      spark.catalog.refreshByPath(path)
+    } else {
+      fs(spark, path).delete(if (won) claimed else stage, true)
+      if (attempt >= maxAttempts) throw new IllegalStateException(
+        s"$op of $path lost the version claim $maxAttempts times — " +
+          "writer contention exceeds the CAS retry budget")
+      // a stale won claim needs no wait (the manifest is already past
+      // next-1); a lost claim waits for the winner to flip v=next
+      if (!won) awaitCommit(spark, path, next)
+      commit(spark, path, op, attempt + 1)(stageNext)
     }
   }
 
   /** Merge `incoming` into the versioned store at `path` (created if
-    * absent): stage version N+1 fully in a private dir, claim `v=N+1`
-    * with an atomic no-overwrite rename, flip the manifest, GC. A lost
-    * claim (concurrent writer) waits for the winner's flip and retries
-    * the merge against the NEW committed snapshot — CAS semantics, up
-    * to `maxAttempts` rounds. Readers concurrent with the merge keep
-    * their resolved snapshot throughout. Returns count reconciliation
-    * stats. */
+    * absent) through the commit loop. Readers concurrent with the merge
+    * keep their resolved snapshot throughout. */
   def upsert(spark: SparkSession, incoming: DataFrame, path: String,
-      key: String, overwriteColumns: Option[Seq[String]] = None,
-      outputPartitions: Int = 0, maxAttempts: Int = 5,
-      retain: Int = 2): MergeStats = {
-    // retain is the reader-slack contract: a reader pinned to version N
-    // keeps reading while up to retain-1 further commits land; commit
-    // retain+k evicts N and the reader (or a time-travel readVersion)
-    // fails with the NAMED retain-window error, never a raw
-    // FileNotFoundException from a half-deleted directory — size it to
-    // the store's slowest reader (e.g. a long training job holding a
-    // snapshot across many merge cycles needs retain > cycles).
-    require(retain >= 1, s"retain must keep at least the head (got $retain)")
-    val f = fs(spark, path)
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val cur = committedVersion(spark, path)
-      val legacyDf = if (cur.isEmpty) probeLegacy(spark, path) else None
-      val legacyEntries =
-        if (legacyDf.isDefined) legacyRootEntries(spark, path) else Seq.empty
-      val existing: Option[DataFrame] =
-        if (cur.isDefined) Some(readCommitted(spark, path)) else legacyDf
-      val merged = existing match {
-        case Some(e) => merge(e, incoming, key, overwriteColumns)
-        case None => incoming
-      }
-      // repeated merges otherwise accumulate shuffle-partition-many small
-      // files per cycle; hash-repartitioning on the key also keeps rows
-      // with the same key in one file (compact + predictable)
-      val out =
-        if (outputPartitions > 0) merged.repartition(outputPartitions, col(key))
-        else merged
-      val next = cur.getOrElse(-1L) + 1L
-      val stage = new Path(s"$path/.stage-${java.util.UUID.randomUUID()}")
-      out.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-      // count BEFORE the flip: the incoming lineage may itself read the
-      // committed snapshot (e.g. a score column derived from the previous
-      // table version); versioning keeps those files intact until GC, but
-      // counting first also survives retain-window eviction
-      val incomingRows = incoming.count()
-      val claimed = new Path(s"$path/v=$next")
-      if (claimVersion(spark, stage, claimed)) {
-        // Stale-claim recheck (r17 ADVICE, high): the claim can succeed
-        // against a GC'd slot — a writer that read cur=N and staged
-        // slowly wins v=N+1 after concurrent writers advanced the
-        // manifest past it and gc deleted the original v=N+1. Winning
-        // the claim is only a lock when the manifest still reads
-        // next-1; otherwise our merge base is stale — discard the
-        // claimed dir and retry against the new snapshot. (When the
-        // recheck passes, nothing can advance the manifest before our
-        // flip: any later commit must first claim v=next, which we
-        // hold.)
-        if (committedVersion(spark, path).getOrElse(-1L) != next - 1L) {
-          f.delete(claimed, true)
-          if (attempt >= maxAttempts) throw new IllegalStateException(
-            s"upsert to $path lost the version claim $maxAttempts times — " +
-              "writer contention exceeds the CAS retry budget")
-          // no awaitCommit: the manifest has already moved past next-1
-        } else {
-          if (legacyEntries.nonEmpty)
-            writeLegacyTombstone(spark, path,
-              s"#v=$next" +: legacyEntries)
-          // commit record BEFORE the flip, while we still hold the claim
-          // (nothing can commit in between), so every version behind the
-          // head carries proof it was really committed — see readVersion
-          writeCommitRecord(spark, claimed)
-          commitManifest(spark, path, next)
-          gc(spark, path, next, retain)
-          // the store gained a version: drop any cached listing of the root
-          spark.catalog.refreshByPath(path)
-          return MergeStats(incomingRows, readCommitted(spark, path).count())
-        }
-      } else {
-        // lost the race: discard the stage, wait for the winner's commit
-        // so the retry merges against it (re-merging is required — the
-        // staged data was computed against a now-stale snapshot)
-        f.delete(stage, true)
-        if (attempt >= maxAttempts) throw new IllegalStateException(
-          s"upsert to $path lost the version claim $maxAttempts times — " +
-            "writer contention exceeds the CAS retry budget")
-        awaitCommit(spark, path, next)
-      }
+      key: String, overwriteColumns: Option[Seq[String]] = None): Unit =
+    commit(spark, path, "upsert") { head =>
+      head.fold(incoming)(merge(_, incoming, key, overwriteColumns))
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** S8 truncate-and-load (ref sectormerged_improved.py:629-645) — the
-    * same staged-claim-flip commit with the new snapshot REPLACING the
-    * table: a reader mid-scan of the previous version is undisturbed;
-    * the next manifest resolution sees only the loaded snapshot. A lost
-    * claim just re-derives the next version (no re-merge needed — the
-    * load does not depend on prior content). */
-  def overwrite(df: DataFrame, path: String, maxAttempts: Int = 5,
-      retain: Int = 2): Unit = {
-    val spark = df.sparkSession
-    require(retain >= 1, s"retain must keep at least the head (got $retain)")
-    val f = fs(spark, path)
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val next = committedVersion(spark, path).getOrElse(-1L) + 1L
-      val stage = new Path(s"$path/.stage-${java.util.UUID.randomUUID()}")
-      df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-      val claimed = new Path(s"$path/v=$next")
-      if (claimVersion(spark, stage, claimed)) {
-        // same stale-claim recheck as upsert: a claim won against a
-        // GC'd slot must not flip the manifest backward
-        if (committedVersion(spark, path).getOrElse(-1L) != next - 1L) {
-          f.delete(claimed, true)
-          if (attempt >= maxAttempts) throw new IllegalStateException(
-            s"overwrite of $path lost the version claim $maxAttempts times")
-        } else {
-          writeCommitRecord(spark, claimed)
-          commitManifest(spark, path, next)
-          gc(spark, path, next, retain)
-          spark.catalog.refreshByPath(path)
-          return
-        }
-      } else {
-        f.delete(stage, true)
-        if (attempt >= maxAttempts) throw new IllegalStateException(
-          s"overwrite of $path lost the version claim $maxAttempts times")
-        awaitCommit(spark, path, next)
-      }
-    }
-  }
+    * same commit loop with the new snapshot REPLACING the table: a
+    * reader mid-scan of the previous version is undisturbed; the next
+    * manifest resolution sees only the loaded snapshot. */
+  def overwrite(df: DataFrame, path: String): Unit =
+    commit(df.sparkSession, path, "overwrite")(_ => df)
 }

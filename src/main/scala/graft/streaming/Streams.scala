@@ -640,7 +640,6 @@ object Streams {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         MergeByKey.upsert(batch.sparkSession, batch, path, key)
-        ()
       }
 
   /** Streaming decontamination sink: per micro-batch, run the exact

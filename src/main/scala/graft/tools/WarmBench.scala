@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Steady-state timing probe: runs each named query REPS times inside
   * one session and prints every run's seconds. Run 1 pays codegen /
@@ -19,17 +18,7 @@ object WarmBench {
     }
     require(names.nonEmpty, "usage: WarmBench [reps] queryName ...")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(defaultCpus = 32, logLevel = "ERROR")
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       val times = (1 to reps).map { _ =>

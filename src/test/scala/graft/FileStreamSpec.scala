@@ -42,6 +42,45 @@ class FileStreamSpec extends SparkSpec {
       Set(Seq("A", 1.0), Seq("B", 20.0), Seq("C", 3.0)))
   }
 
+  test("kill and resume: a batch merged but not checkpointed replays once") {
+    val root = Files.createTempDirectory("graft_resume")
+    val src = s"$root/incoming"
+    new java.io.File(src).mkdirs()
+    val schema = StructType(Seq(
+      StructField("k", StringType), StructField("v", DoubleType)))
+    def runOnce(target: String, checkpoint: String): Unit =
+      Streams.runAvailableNow(Streams.mergeSink(
+        spark.readStream.schema(schema).parquet(src), target, "k"),
+        checkpoint).awaitTermination()
+    // three file batches, each updating keys the earlier ones wrote; the
+    // killed run and the uninterrupted run see the same batch sequence
+    val batches = Seq(
+      Seq(("A", 1.0), ("B", 2.0)),
+      Seq(("B", 20.0), ("C", 3.0)),
+      Seq(("C", 30.0), ("A", 10.0), ("D", 4.0)))
+    batches.foreach { rows =>
+      rows.toDF("k", "v").write.mode("append").parquet(src)
+      runOnce(s"$root/killed", s"$root/killed-ckpt")
+      runOnce(s"$root/clean", s"$root/clean-ckpt")
+    }
+    val killed = s"$root/killed"
+    assert(graft.sinks.MergeByKey.committedVersion(spark, killed) === Some(2L))
+    // the kill: batch 2's merge landed but its offset commit did not
+    val commits = new java.io.File(s"$root/killed-ckpt/commits")
+    Seq("2", ".2.crc").foreach(n => new java.io.File(commits, n).delete())
+    assert(!new java.io.File(commits, "2").exists())
+    runOnce(killed, s"$root/killed-ckpt")
+    // batch 2 re-ran (one more commit) and the store matches, row for
+    // row, the store of the run that was never interrupted
+    assert(graft.sinks.MergeByKey.committedVersion(spark, killed) === Some(3L))
+    assert(new java.io.File(commits, "2").exists())
+    def rows(path: String) = graft.sinks.MergeByKey.readCommitted(spark, path)
+      .orderBy("k").collect().map(_.toSeq).toSeq
+    assert(rows(killed) == rows(s"$root/clean"))
+    assert(rows(killed) == Seq(Seq("A", 10.0), Seq("B", 20.0),
+      Seq("C", 30.0), Seq("D", 4.0)))
+  }
+
   test("streaming decontamination drops benchmark-contaminated docs per batch") {
     val root = Files.createTempDirectory("graft_decontam_stream")
     val src = s"$root/incoming"

@@ -40,16 +40,6 @@ class MergeByKeySpec extends SparkSpec {
     assert(out == Set(Seq("A", 1.0), Seq("B", 20.0), Seq("C", 3.0)))
   }
 
-  test("upsert with outputPartitions bounds the file count") {
-    val dir = Files.createTempDirectory("graft_merge_parts").toString + "/t"
-    val df = (1L to 1000L).map(i => (i, i * 2.0)).toDF("k", "v")
-    MergeByKey.upsert(spark, df, dir, "k", outputPartitions = 2)
-    val files = new java.io.File(dir + "/v=0").listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(files == 2)
-    assert(MergeByKey.readCommitted(spark, dir).count() == 1000)
-  }
-
   test("overwrite: truncate-and-load") {
     val dir = Files.createTempDirectory("graft_ovw").toString + "/t"
     MergeByKey.overwrite(Seq(("A", 1)).toDF("k", "v"), dir)
@@ -76,58 +66,23 @@ class MergeByKeySpec extends SparkSpec {
       Set(Seq("A", 1.0), Seq("B", 2.0)))
   }
 
-  test("retention: versions older than the previous are GC'd; legacy " +
-    "flat stores migrate with one-cycle deferred cleanup") {
+  test("retention: versions older than the previous are GC'd") {
     val dir = Files.createTempDirectory("graft_gc").toString + "/t"
-    // legacy flat store written without versioning
-    Seq(("A", 1.0)).toDF("k", "v").write.parquet(dir)
-    // first versioned commit migrates: reads flat data as existing
+    MergeByKey.upsert(spark, Seq(("A", 1.0)).toDF("k", "v"), dir, "k")
     MergeByKey.upsert(spark, Seq(("B", 2.0)).toDF("k", "v"), dir, "k")
-    assert(MergeByKey.readCommitted(spark, dir).rowsSet ==
-      Set(Seq("A", 1.0), Seq("B", 2.0)))
-    // legacy root files SURVIVE the migration commit (a reader that
-    // resolved the store via the flat-parquet fallback gets the same
-    // one-merge-cycle slack as versioned readers) ...
-    assert(new java.io.File(dir).listFiles()
-      .exists(f => f.isFile && f.getName.endsWith(".parquet")),
-      "legacy files must outlive the migration commit by one cycle")
     MergeByKey.upsert(spark, Seq(("C", 3.0)).toDF("k", "v"), dir, "k")
-    // ... and are gone after the NEXT commit's gc
-    assert(!new java.io.File(dir).listFiles()
-      .exists(f => f.isFile && f.getName.endsWith(".parquet")),
-      "legacy files must be tombstone-GC'd one commit after migration")
-    MergeByKey.upsert(spark, Seq(("D", 4.0)).toDF("k", "v"), dir, "k")
     val versions = new java.io.File(dir).listFiles()
       .filter(_.getName.startsWith("v=")).map(_.getName).sorted
     assert(versions.toSeq == Seq("v=1", "v=2"),
       "retain=2: committed + previous only")
-    assert(MergeByKey.readCommitted(spark, dir).rowsSet == Set(
-      Seq("A", 1.0), Seq("B", 2.0), Seq("C", 3.0), Seq("D", 4.0)))
-  }
-
-  test("legacy detection is directory-aware: a PARTITIONED pre-versioned " +
-    "store (no root .parquet files) merges instead of being dropped") {
-    val dir = Files.createTempDirectory("graft_gc_part").toString + "/t"
-    Seq(("A", 1.0, "x"), ("B", 2.0, "y")).toDF("k", "v", "p")
-      .write.partitionBy("p").parquet(dir)
-    MergeByKey.upsert(spark, Seq(("C", 3.0, "x")).toDF("k", "v", "p"),
-      dir, "k")
-    // the nested legacy data is IN the merge, not treated as fresh
     assert(MergeByKey.readCommitted(spark, dir).rowsSet ==
-      Set(Seq("A", 1.0, "x"), Seq("B", 2.0, "y"), Seq("C", 3.0, "x")))
-    // partition dirs survive the migration commit, gone one cycle later
-    def partDirs() = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("p=")).toSeq
-    assert(partDirs().nonEmpty, "deferred cleanup keeps partition dirs")
-    MergeByKey.upsert(spark, Seq(("D", 4.0, "z")).toDF("k", "v", "p"),
-      dir, "k")
-    assert(partDirs().isEmpty, "tombstoned partition dirs GC'd next cycle")
+      Set(Seq("A", 1.0), Seq("B", 2.0), Seq("C", 3.0)))
   }
 
   test("gc never deletes foreign content it cannot positively identify") {
     val dir = Files.createTempDirectory("graft_gc_foreign").toString + "/t"
-    Seq(("A", 1.0)).toDF("k", "v").write.parquet(dir)
-    // a foreign file and dir that are NOT parquet writer output
+    MergeByKey.upsert(spark, Seq(("A", 1.0)).toDF("k", "v"), dir, "k")
+    // a foreign file and dir that this sink did not write
     val notes = new java.io.File(dir, "notes")
     notes.mkdirs()
     Files.writeString(notes.toPath.resolve("readme.txt"), "keep me")
@@ -181,9 +136,8 @@ class MergeByKeySpec extends SparkSpec {
       MergeByKey.upsert(spark, df, dir, "k")
     }
     val (sa, sb) = (writer("A", 1.0), writer("B", 2.0))
-    val statsA = Await.result(sa, 120.seconds)
-    val statsB = Await.result(sb, 120.seconds)
-    assert(statsA.incomingRows == 1 && statsB.incomingRows == 1)
+    Await.result(sa, 120.seconds)
+    Await.result(sb, 120.seconds)
     // both rows landed: the loser re-merged against the winner's commit
     assert(MergeByKey.readCommitted(spark, dir).rowsSet ==
       Set(Seq("A", 1.0), Seq("B", 2.0)))
@@ -260,18 +214,14 @@ class MergeByKeySpec extends SparkSpec {
     "eviction fails with the NAMED retain-window error, and a version " +
     "dir without a commit record is never served as history") {
     val dir = Files.createTempDirectory("graft_retain").toString + "/t"
-    // retain=4: a reader pinned to v=0 keeps resolving it while THREE
-    // further commits land (head walks 0->3, gc keeps head-3..head)
-    (1 to 4).foreach { i =>
-      MergeByKey.upsert(spark, Seq(("A", i.toDouble)).toDF("k", "v"),
-        dir, "k", retain = 4)
-    }
-    assert(MergeByKey.committedVersion(spark, dir) === Some(3L))
+    MergeByKey.upsert(spark, Seq(("A", 1.0)).toDF("k", "v"), dir, "k")
+    // a reader pinned to v=0 resolves it while one further commit lands
+    MergeByKey.upsert(spark, Seq(("A", 2.0)).toDF("k", "v"), dir, "k")
     assert(MergeByKey.readVersion(spark, dir, 0L).rowsSet ==
-      Set(Seq("A", 1.0)), "retain=4 must keep v=0 across 3 commits")
-    // two more commits at the DEFAULT retain=2 evict everything behind
-    // head-1; the pinned reader's next resolve is the named error
-    (5 to 6).foreach { i =>
+      Set(Seq("A", 1.0)), "retain=2 must keep v=0 across one commit")
+    // further commits evict everything behind head-1; the pinned
+    // reader's next resolve is the named error
+    (3 to 6).foreach { i =>
       MergeByKey.upsert(spark, Seq(("A", i.toDouble)).toDF("k", "v"),
         dir, "k")
     }
@@ -323,20 +273,35 @@ class MergeByKeySpec extends SparkSpec {
       Set(Seq("A", "changed"), Seq("B", "changed")))
   }
 
-  test("probeLegacy: unreadable parquet-named legacy content fails the " +
-    "commit loudly instead of silently dropping the legacy side " +
-    "(r17 ADVICE, medium)") {
-    val dir = Files.createTempDirectory("graft_corrupt").toString + "/t"
+  test("unversioned path with parquet content: upsert and overwrite refuse") {
+    val dir = Files.createTempDirectory("graft_unversioned").toString + "/t"
     new java.io.File(dir).mkdirs()
-    // positively-identified parquet output name, garbage bytes: this
-    // is (possibly corrupt) legacy DATA — treating it as "no legacy
-    // store" would erase it from the first versioned commit
-    Files.write(new java.io.File(dir, "part-00000.parquet").toPath,
-      "not parquet at all".getBytes("UTF-8"))
-    intercept[Exception] {
-      MergeByKey.upsert(spark, Seq(("A", 1.0)).toDF("k", "v"), dir, "k")
+    // parquet output this sink did not write: committing over it would
+    // hide it behind the first manifest
+    val part = new java.io.File(dir, "part-00000.parquet")
+    Files.write(part.toPath, "not parquet at all".getBytes("UTF-8"))
+    val df = Seq(("A", 1.0)).toDF("k", "v")
+    val eUpsert = intercept[IllegalStateException] {
+      MergeByKey.upsert(spark, df, dir, "k")
     }
-    // no manifest was committed — the store is untouched for a human
+    val eOverwrite = intercept[IllegalStateException] {
+      MergeByKey.overwrite(df, dir)
+    }
+    Seq(eUpsert, eOverwrite).foreach { e =>
+      assert(e.getMessage.contains("is not a versioned store") &&
+        e.getMessage.contains("part-00000.parquet"), e.getMessage)
+    }
+    // nothing was committed or staged: the path is exactly as found
     assert(MergeByKey.committedVersion(spark, dir) === None)
+    assert(new java.io.File(dir).list().toSeq == Seq("part-00000.parquet"))
+  }
+
+  test("readCommitted on a path with no manifest fails by name") {
+    val dir = Files.createTempDirectory("graft_nomanifest").toString + "/t"
+    Seq(("A", 1.0)).toDF("k", "v").write.parquet(dir)
+    val e = intercept[IllegalStateException] {
+      MergeByKey.readCommitted(spark, dir)
+    }
+    assert(e.getMessage.contains("is not a versioned store"), e.getMessage)
   }
 }
