@@ -12,8 +12,11 @@ import graft.operators.{PeerPercentile, RankOps, WeightedScore}
   * category.
   *
   * The reference's per-row `iterrows` percentile loop (one pandas scan of
-  * the peer frame per stock×metric, O(n²·m)) becomes three shared window
-  * partitionings; each metric adds only a sort within the same exchange.
+  * the peer frame per stock×metric, O(n²·m)) becomes `PeerPercentile`'s
+  * DataFrame form: one select, and so one exchange, per peer level —
+  * industry, then sector, then the single-partition 'all' level only
+  * when the one-query `needsGlobalLevel` finds a row that reaches it.
+  * Each metric adds only a sort within its level's exchange.
   */
 object FundamentalScorePipeline {
 
@@ -49,8 +52,6 @@ object FundamentalScorePipeline {
   private def pctCol(m: Metric): String = s"${m.name}_percentile"
 
   def apply(df: DataFrame, minPeers: Int = 5): DataFrame = {
-    val inner = Seq(col("industry"))
-    val outer = Seq(col("sector"))
     val present = all.filter(m => df.columns.contains(m.name))
 
     // 1. caps (ref apply_caps :183-193)
@@ -59,19 +60,14 @@ object FundamentalScorePipeline {
     }
 
     // 2. per-metric percentile, rounded to 2dp like the reference
-    // (ref calculate_percentile :159). Inverted metrics: for valuation
-    // the loss-maker rule also applies; plain lower-is-better metrics
-    // (debt_to_equity) invert without peer filtering. The global 'all'
-    // level enters the plan only if some row can actually reach it.
-    val g = PeerPercentile.needsGlobalLevel(capped, outer, minPeers)
-    val withPct = present.foldLeft(capped) { (d, m) =>
-      d.withColumn(pctCol(m),
-        round(PeerPercentile.percentile(col(m.name), inner, outer,
-          minPeers = minPeers, higherIsBetter = m.higherIsBetter,
-          valuation = m.valuation, includeGlobal = g), 2))
-    }
-    val withLevel = withPct.withColumn("peer_level",
-      PeerPercentile.peerLevel(inner, outer, minPeers))
+    // (ref calculate_percentile :159), plus peer_level. Inverted metrics:
+    // for valuation the loss-maker rule also applies; plain
+    // lower-is-better metrics (debt_to_equity) invert without peer
+    // filtering.
+    val withLevel = PeerPercentile(capped,
+      present.map(m => PeerPercentile.Metric(m.name, pctCol(m),
+        higherIsBetter = m.higherIsBetter, valuation = m.valuation)),
+      inner = Seq("industry"), outer = Seq("sector"), minPeers = minPeers)
 
     // 3. category scores: weight-renormalized average of the available
     // percentiles, 2dp (ref calculate_category_score :206-228)

@@ -999,4 +999,35 @@ class PlanAuditSpec extends SparkSpec {
     assert(pStatic.contains("PartitionFilters: ["),
       s"static pruning must still reach the scan:\n$pStatic")
   }
+
+  test("fundamental scoring plans one exchange per peer level, whatever the metric count") {
+    import graft.pipeline.FundamentalScorePipeline
+    // a null industry reaches the sector level; with `tiny`, a 3-row
+    // sector also reaches the single-partition 'all' level
+    def exchanges(metrics: Seq[FundamentalScorePipeline.Metric],
+        tiny: Boolean): Int = {
+      val df = spark.range(64).select($"id" +:
+        when(lit(tiny) && $"id" < 3, lit("tiny"))
+          .otherwise(concat(lit("s"), ($"id" % 3).cast("string"))).as("sector") +:
+        when($"id" === 10, lit(null).cast("string"))
+          .otherwise(concat(lit("i"), ($"id" % 6).cast("string"))).as("industry") +:
+        metrics.zipWithIndex.map { case (m, k) =>
+          ($"id" * (k + 7) % 23 - 4).cast("double").as(m.name) }: _*)
+      val p = plan(FundamentalScorePipeline(df))
+      // the partitioned levels stay partitioned: the single-partition
+      // 'all' level must not absorb them
+      assert(p.contains("hashpartitioning(industry") &&
+        p.contains("hashpartitioning(sector"),
+        s"industry and sector levels must shuffle by their keys:\n$p")
+      "(?m)^\\W*Exchange ".r.findAllIn(p).length
+    }
+    assert(FundamentalScorePipeline.all.size == 18)
+    Seq(false, true).foreach { tiny =>
+      val all = exchanges(FundamentalScorePipeline.all, tiny)
+      assert(all <= 3,
+        s"expected at most one shuffle per peer level, found $all (tiny=$tiny)")
+      assert(exchanges(FundamentalScorePipeline.all.take(4), tiny) == all,
+        s"adding metrics must not add shuffles (tiny=$tiny)")
+    }
+  }
 }

@@ -160,6 +160,91 @@ class WindowOpsSpec extends SparkSpec {
     assert(out(1L) == Some(50.0))
   }
 
+  test("needsGlobalLevel: a null outer key or a small outer group reaches 'all'") {
+    def frame(rows: Seq[Option[String]]) = rows.zipWithIndex
+      .map { case (seg, i) => (i.toLong, seg) }.toDF("id", "seg")
+    val fiveA = Seq.fill(5)(Option("A"))
+    // the null-keyed group has 5 rows: only its null key can trigger
+    assert(PeerPercentile.needsGlobalLevel(
+      frame(fiveA ++ Seq.fill(5)(Option.empty[String])), Seq($"seg")))
+    assert(PeerPercentile.needsGlobalLevel(
+      frame(fiveA ++ Seq.fill(4)(Option("B"))), Seq($"seg")))
+    assert(!PeerPercentile.needsGlobalLevel(
+      frame(fiveA ++ Seq.fill(6)(Option("B"))), Seq($"seg")))
+  }
+
+  // pctFixture widened to every branch of the fallback and the scoring
+  // rules: a null industry (nat) and a null sector (seg), a valuation
+  // metric with <= 0 and NULL values, ties, a metric with < 2 valid
+  // peers in a group, an all-NULL metric and a lower-is-better metric.
+  private def pctWideFixture = Seq[(Long, Option[String], Option[Int],
+      Option[Double], Option[Double], Option[Double], Option[Double], Option[Double])](
+    // (A,1): 5 members -> inner; `few` has one valid value here
+    (1L, Some("A"), Some(1), Some(10.0), Some(15.0), Some(3.0), None, Some(0.5)),
+    (2L, Some("A"), Some(1), Some(20.0), Some(-1.0), None, None, Some(0.5)),
+    (3L, Some("A"), Some(1), Some(20.0), Some(0.0), None, None, Some(1.5)),
+    (4L, Some("A"), Some(1), Some(30.0), None, None, None, Some(2.0)),
+    (5L, Some("A"), Some(1), None, Some(15.0), None, None, None),
+    // (A,2): 2 members -> outer (segment A has 8 rows)
+    (6L, Some("A"), Some(2), Some(-5.0), Some(8.0), Some(1.0), None, Some(0.1)),
+    (7L, Some("A"), Some(2), Some(50.0), Some(40.0), None, None, Some(0.5)),
+    // null industry -> outer
+    (8L, Some("A"), None, Some(25.0), Some(12.0), Some(2.0), None, Some(3.0)),
+    // segment B: 3 rows -> all
+    (9L, Some("B"), Some(3), Some(1.0), Some(2.0), None, None, Some(0.2)),
+    (10L, Some("B"), Some(3), Some(2.0), Some(-4.0), None, None, Some(0.2)),
+    (11L, Some("B"), Some(4), Some(3.0), Some(6.0), Some(5.0), None, None),
+    // null sector -> all
+    (12L, None, Some(1), Some(20.0), Some(9.0), None, None, Some(1.0))
+  ).toDF("id", "seg", "nat", "v", "pe", "few", "none", "debt")
+
+  private val wideMetrics = Seq(
+    PeerPercentile.Metric("v", "p_v"),
+    PeerPercentile.Metric("pe", "p_pe", higherIsBetter = false, valuation = true),
+    PeerPercentile.Metric("few", "p_few"),
+    PeerPercentile.Metric("none", "p_none"),
+    PeerPercentile.Metric("debt", "p_debt", higherIsBetter = false))
+
+  /** (DataFrame form, Column form) over `df`, both sorted by id. */
+  private def bothForms(df: org.apache.spark.sql.DataFrame) = {
+    val inner = Seq("seg", "nat")
+    val outer = Seq("seg")
+    val out = $"id" +: wideMetrics.map(m => col(m.outCol)) :+ $"peer_level"
+    def sorted(d: org.apache.spark.sql.DataFrame) =
+      d.select(out: _*).orderBy($"id").collect().map(_.toSeq).toSeq
+    val frame = sorted(PeerPercentile(df, wideMetrics, inner, outer))
+    val column = sorted(df.select($"*" +: wideMetrics.map(m =>
+      round(PeerPercentile.percentile(col(m.column), inner.map(col),
+        outer.map(col), higherIsBetter = m.higherIsBetter,
+        valuation = m.valuation), 2).as(m.outCol)) :+
+      PeerPercentile.peerLevel(inner.map(col), outer.map(col)).as("peer_level"): _*))
+    (frame, column)
+  }
+
+  test("peer percentile: DataFrame form equals the Column form, global level reached") {
+    val df = pctWideFixture
+    assert(PeerPercentile.needsGlobalLevel(df, Seq($"seg")))
+    val (frame, column) = bothForms(df)
+    assert(frame.size == 12)
+    assert(frame.map(_.last).toSet == Set("inner", "outer", "all"))
+    assert(frame == column)
+    // spot values: ties, < 2 valid peers, the valuation rule
+    val byId = frame.map(r => r.head -> r).toMap
+    assert(byId(2L)(1) == 25.0 && byId(3L)(1) == 25.0)
+    assert(byId(1L)(3) == 50.0)
+    assert(byId(2L)(2) == 0.0 && byId(3L)(2) == 0.0 && byId(4L)(2) == null)
+    assert(frame.forall(_(4) == null))
+  }
+
+  test("peer percentile: DataFrame form equals the Column form, global level not reached") {
+    val df = pctWideFixture.filter($"seg" === "A")
+    assert(!PeerPercentile.needsGlobalLevel(df, Seq($"seg")))
+    val (frame, column) = bothForms(df)
+    assert(frame.size == 8)
+    assert(frame.map(_.last).toSet == Set("inner", "outer"))
+    assert(frame == column)
+  }
+
   test("bandByRank: thresholds, null value -> null band, deterministic ties") {
     val df = (1L to 600L).map(i => (i, Some(1000.0 - (i - 1)))).toDF("id", "v")
       .union(Seq((601L, Option.empty[Double])).toDF("id", "v"))
