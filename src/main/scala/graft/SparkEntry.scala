@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{Cleanse, TextFns, TimeFns, VectorFns}
 import graft.operators._
@@ -22,6 +22,22 @@ object SparkEntry {
   private def T(s: SparkSession, dir: String, name: String): DataFrame =
     Tables(s, dir, name)
 
+  /** Root of every staged store below (band keys, MinHash index, BPE
+    * model, stream feeds, …): `SPARK_GRAFT_STAGE_DIR`, else
+    * target/graft-stage. */
+  private lazy val stageRoot: String =
+    sys.env.getOrElse("SPARK_GRAFT_STAGE_DIR", "target/graft-stage")
+
+  /** The staged full-corpus band-key store behind [[lshNearDupPairs]]
+    * and every other LSH consumer (range counts, batch probes). */
+  private def stagedEmbKeys(s: SparkSession, dir: String): DataFrame = {
+    val stamp = Dedup.sourceStamp(s, s"$dir/embeddings.parquet")
+    SimilaritySearch.stagedBandKeys(
+      T(s, dir, "embeddings"), "vec_id", "embedding",
+      s"$stageRoot/embkeys-full-$stamp-b$lshBaseBits-n$lshBands-r$lshBitsPerBand",
+      lshBaseBits, lshBands, lshBitsPerBand)
+  }
+
   /** The GRAPH-FEEDING near-dup pair generator: banded-hyperplane LSH
     * (candidates from bucket co-membership, exact cosine verify on
     * candidates only — never all pairs), in the one fixed
@@ -40,17 +56,6 @@ object SparkEntry {
     * staged path is pair-for-pair identical and the oracle is
     * untouched. q30 keeps the unstaged embeddingNearDup build as the
     * from-scratch gate of the signing stage itself. */
-  /** The staged full-corpus band-key store behind [[lshNearDupPairs]]
-    * and every other LSH consumer (range counts, batch probes). */
-  private def stagedEmbKeys(s: SparkSession, dir: String): DataFrame = {
-    val stamp = Dedup.sourceStamp(s, s"$dir/embeddings.parquet")
-    val root = sys.env.getOrElse("SPARK_GRAFT_STAGE_DIR", "target/graft-stage")
-    SimilaritySearch.stagedBandKeys(
-      T(s, dir, "embeddings"), "vec_id", "embedding",
-      s"$root/embkeys-full-$stamp-b$lshBaseBits-n$lshBands-r$lshBitsPerBand",
-      lshBaseBits, lshBands, lshBitsPerBand)
-  }
-
   private def lshNearDupPairs(s: SparkSession, dir: String,
       threshold: Double): DataFrame =
     SimilaritySearch.embeddingNearDupFromKeys(stagedEmbKeys(s, dir),
@@ -70,8 +75,7 @@ object SparkEntry {
     * from-scratch gate of the build itself on first touch. */
   private def stagedNearDupComponents(s: SparkSession, dir: String): DataFrame = {
     val stamp = Dedup.sourceStamp(s, s"$dir/embeddings.parquet")
-    val root = sys.env.getOrElse("SPARK_GRAFT_STAGE_DIR", "target/graft-stage")
-    Tables.stagedParquet(s, s"$root/neardup-comps-$stamp" +
+    Tables.stagedParquet(s, s"$stageRoot/neardup-comps-$stamp" +
         s"-b$lshBaseBits-n$lshBands-r$lshBitsPerBand-t045") {
       Dedup.connectedComponents(
         lshNearDupPairs(s, dir, threshold = 0.45)
@@ -79,17 +83,6 @@ object SparkEntry {
     }
   }
 
-  /** The corpus-wide MinHash index over `documents`, staged to a local
-    * parquet store keyed by the source file's stamp (name+size+mtime —
-    * testdata regenerates between rounds, so path alone would go stale)
-    * and the index parameters. q23 and q73 both consume THIS index: q23
-    * runs the band self-join over it, q73 anti-joins the probe batch
-    * out to obtain the standing side — per-doc index rows make the
-    * filtered store exactly equal to an index built over the remainder.
-    * First touch per corpus builds + writes; every later run (bench
-    * repeats, the sibling query, the next session over unchanged data)
-    * pays three parquet scans — the append-only production shape where
-    * the archive is never re-shingled. */
   /** The q174/q200 batched-BPE tokenizer artifact, staged once per
     * corpus (source-stamped like the MinHash / band-key stores): the
     * 16-pass trainer runs on first touch and ships (merge table,
@@ -98,9 +91,8 @@ object SparkEntry {
   private def stagedBpeModel(s: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
     val stamp = Dedup.sourceStamp(s, s"$dir/documents.parquet")
-    val root = sys.env.getOrElse("SPARK_GRAFT_STAGE_DIR", "target/graft-stage")
     BpeTrain.stagedBatchedModel(T(s, dir, "documents"), "text",
-      s"$root/bpe-$stamp-p16-c16-n256", passes = 16, batchCap = 16,
+      s"$stageRoot/bpe-$stamp-p16-c16-n256", passes = 16, batchCap = 16,
       candN = 256)
   }
 
@@ -115,8 +107,7 @@ object SparkEntry {
   private def stagedPurchaseEdges(s: SparkSession, dir: String): DataFrame = {
     val stamp = Dedup.sourceStamp(s, s"$dir/orders.parquet") + "-" +
       Dedup.sourceStamp(s, s"$dir/lineitem.parquet")
-    val root = sys.env.getOrElse("SPARK_GRAFT_STAGE_DIR", "target/graft-stage")
-    Tables.stagedParquet(s, s"$root/purchase-edges-$stamp") {
+    Tables.stagedParquet(s, s"$stageRoot/purchase-edges-$stamp") {
       val o = T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
       val li = T(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
       li.join(o, li("l_orderkey") === o("o_orderkey"))
@@ -126,12 +117,21 @@ object SparkEntry {
     }
   }
 
+  /** The corpus-wide MinHash index over `documents`, staged to a local
+    * parquet store keyed by the source file's stamp (name+size+mtime —
+    * testdata regenerates between rounds, so path alone would go stale)
+    * and the index parameters. q23 and q73 both consume THIS index: q23
+    * runs the band self-join over it, q73 anti-joins the probe batch
+    * out to obtain the standing side — per-doc index rows make the
+    * filtered store exactly equal to an index built over the remainder.
+    * First touch per corpus builds + writes; every later run (bench
+    * repeats, the sibling query, the next session over unchanged data)
+    * pays three parquet scans — the append-only production shape where
+    * the archive is never re-shingled. */
   private def stagedDocsIndex(s: SparkSession, dir: String): Dedup.MinHashIndex = {
-    val src = s"$dir/documents.parquet"
-    val stamp = Dedup.sourceStamp(s, src)
-    val root = sys.env.getOrElse("SPARK_GRAFT_STAGE_DIR", "target/graft-stage")
+    val stamp = Dedup.sourceStamp(s, s"$dir/documents.parquet")
     Dedup.stagedMinHashIndex(T(s, dir, "documents"), "doc_id", "text",
-      s"$root/minhash-$stamp-n3-h64-b32", n = 3, numHashes = 64, bands = 32)
+      s"$stageRoot/minhash-$stamp-n3-h64-b32", n = 3, numHashes = 64, bands = 32)
   }
 
   /** Source-stamped STAGED STREAM FEED (r20 optimization, r19 verdict
@@ -149,24 +149,37 @@ object SparkEntry {
     * generator version (the ScaleProbe ADVICE lesson: a content stamp
     * alone cannot see stager-code drift); the Spark version rides in
     * the path so stageBatchFiles' 4.1.x batch-pinning check re-fires
-    * after an engine bump. The `_staged` marker commits AFTER the
-    * write (killed-writer discipline); FileStreamSource ignores
-    * `_`-prefixed names, so the marker never enters a micro-batch. */
+    * after an engine bump. Built once through [[Tables.buildOnce]];
+    * the build clears a killed writer's leftovers first, and
+    * FileStreamSource ignores `_`-prefixed names, so the marker never
+    * enters a micro-batch. */
   private def stagedStreamFeed(s: SparkSession, dir: String, name: String,
       ver: Int = 1)(build: => DataFrame): String = {
     val stamp = Dedup.sourceStamp(s, s"$dir/events.parquet")
-    val root = sys.env.getOrElse("SPARK_GRAFT_STAGE_DIR", "target/graft-stage")
-    val feedDir = s"$root/feed-$name-v$ver-s${s.version}-$stamp"
-    val p = new org.apache.hadoop.fs.Path(feedDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$feedDir/_staged")
-    if (!fs.exists(marker)) {
-      fs.delete(p, true)
+    val feedDir = s"$stageRoot/feed-$name-v$ver-s${s.version}-$stamp"
+    Tables.buildOnce(s, feedDir) {
+      val p = new org.apache.hadoop.fs.Path(feedDir)
+      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       graft.streaming.Streams.stageBatchFiles(build, "b", feedDir)
-      fs.create(marker, true).close()
     }
     feedDir
   }
+
+  /** A staged feed as a file stream: one `batch-NNNNN.parquet` file per
+    * micro-batch, in staged order. */
+  private def readFeed(s: SparkSession, feedDir: String,
+      schema: String): DataFrame =
+    s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+      .parquet(feedDir)
+
+  /** Value-slice batch number of column `t` over the `mn`/`mx` range
+    * columns a feed builder cross-joins in: `(t − mn)·n div
+    * (mx − mn + 1)`, in [0, n). Monotone in `t`, so batches stay
+    * time-ordered and equal values never split. Each builder applies
+    * its own late-row rule around it and casts the result to int. */
+  private def valueSlice(t: String, n: Long): Column =
+    call_function("div", (col(t) - col("mn")) * n,
+      col("mx") - col("mn") + 1L)
 
   /** Leak-proof per-invocation scratch dir (r19 verdict #1a + ADVICE
     * q360 item): run `body` against a fresh temp dir (streaming sink +
@@ -193,6 +206,21 @@ object SparkEntry {
     }
   }
 
+  /** The streaming-gate runner: run `stream` to completion as one
+    * [[graft.streaming.Streams.runAvailableNow]] append query into a
+    * parquet sink under a [[withScratchDir]] dir (sink + checkpoint),
+    * then return `readBack` over the sink's rows. */
+  private def runStreamGate(s: SparkSession, name: String,
+      stream: Dataset[_])
+      (readBack: DataFrame => DataFrame): DataFrame =
+    withScratchDir(s, s"graft-$name-out") { outDir =>
+      graft.streaming.Streams.runAvailableNow(
+        stream.toDF().writeStream.format("parquet")
+          .option("path", s"$outDir/rows").outputMode("append"),
+        s"$outDir/ckpt").awaitTermination()
+      readBack(s.read.parquet(s"$outDir/rows"))
+    }
+
   /** The q360 two-version MergeByKey store, staged once per corpus
     * stamp (r19 verdict #4): the gate's subject is [[graft.sinks.MergeByKey.diffVersions]]
     * — the CDC read between committed snapshots — but the pre-r20
@@ -202,16 +230,15 @@ object SparkEntry {
     * leaked store on any failure (ADVICE r19 low). The upsert path
     * itself stays gated end-to-end by q41/q42/q244; snapshot
     * derivation is deterministic, so the staged store is byte-for-byte
-    * what the inline build produced and the oracle is untouched. */
+    * what the inline build produced and the oracle is untouched.
+    * Built once through [[Tables.buildOnce]]; the build clears a
+    * killed writer's half-committed store first. */
   private def stagedVersionStoreQ360(s: SparkSession, dir: String): String = {
     val stamp = Dedup.sourceStamp(s, s"$dir/orders.parquet")
-    val root = sys.env.getOrElse("SPARK_GRAFT_STAGE_DIR", "target/graft-stage")
-    val base = s"$root/q360-store-v1-$stamp"
-    val p = new org.apache.hadoop.fs.Path(base)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$base/_staged")
-    if (!fs.exists(marker)) {
-      fs.delete(p, true)
+    val base = s"$stageRoot/q360-store-v1-$stamp"
+    Tables.buildOnce(s, base) {
+      val p = new org.apache.hadoop.fs.Path(base)
+      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       def snap(status: String) = T(s, dir, "orders")
         .filter(col("o_orderstatus") === status)
         .groupBy(col("o_custkey").cast("long").as("k"))
@@ -219,7 +246,6 @@ object SparkEntry {
           .as("val_e2"))
       graft.sinks.MergeByKey.upsert(s, snap("F"), s"$base/store", "k")
       graft.sinks.MergeByKey.upsert(s, snap("O"), s"$base/store", "k")
-      fs.create(marker, true).close()
     }
     s"$base/store"
   }
@@ -251,9 +277,7 @@ object SparkEntry {
         .crossJoin(broadcast(maxTs))
         .select(col("userId"), (col("mx") + 1801L).as("tsSec"))
       ev.crossJoin(broadcast(maxTs))
-        .withColumn("b", call_function("div",
-            (col("tsSec") - col("mn")) * 4L,
-            col("mx") - col("mn") + 1L).cast("int"))
+        .withColumn("b", valueSlice("tsSec", 4).cast("int"))
         .select(col("userId"), col("tsSec"), col("b"))
         .unionByName(sentinel.withColumn("b", lit(4).cast("int")))
         .withColumn("value", lit(0.0))
@@ -272,9 +296,7 @@ object SparkEntry {
       ev.crossJoin(broadcast(rng))
         .withColumn("b",
           when(pmod(col("eid"), lit(10)) === 0, lit(2))
-            .otherwise(call_function("div",
-              (col("tsSec") - col("mn")) * 2L,
-              col("mx") - col("mn") + 1L)).cast("int"))
+            .otherwise(valueSlice("tsSec", 2)).cast("int"))
         .select(col("event_type"), col("tsSec"), col("v"), col("b"))
         .unionByName(
           rng.select(lit("zz_sentinel").as("event_type"),
@@ -297,9 +319,7 @@ object SparkEntry {
       ev.crossJoin(broadcast(rng))
         .withColumn("b",
           when(pmod(col("eid"), lit(10)) === 0, lit(4))
-            .otherwise(call_function("div",
-              (col("tsSec") - col("mn")) * 4L,
-              col("mx") - col("mn") + 1L)).cast("int"))
+            .otherwise(valueSlice("tsSec", 4)).cast("int"))
         .groupBy(col("uid"), col("b"))
         .agg(min(col("tsSec")).as("tsSec"))
         .select(col("uid"), col("tsSec"), col("b"))
@@ -313,9 +333,7 @@ object SparkEntry {
       val rng = ev.agg(min(col("tsSec")).as("mn"),
         max(col("tsSec")).as("mx"))
       ev.crossJoin(broadcast(rng))
-        .withColumn("b", call_function("div",
-            (col("tsSec") - col("mn")) * 4L,
-            col("mx") - col("mn") + 1L).cast("int"))
+        .withColumn("b", valueSlice("tsSec", 4).cast("int"))
         .select(col("userId"), col("tsSec"), col("b"))
     }
 
@@ -345,9 +363,7 @@ object SparkEntry {
         .crossJoin(broadcast(mm))
         .select(col("group"), (col("mx") + 1L).as("day"))
       ev.crossJoin(broadcast(mm))
-        .withColumn("b", call_function("div",
-            (col("day") - col("mn")) * 4L,
-            col("mx") - col("mn") + 1L).cast("int"))
+        .withColumn("b", valueSlice("day", 4).cast("int"))
         .select(col("group"), col("day"), col("b"))
         .unionByName(sentinel.withColumn("b", lit(4).cast("int")))
     }
@@ -362,9 +378,7 @@ object SparkEntry {
       val mm = ev.agg(min(col("tsNanos")).as("mn"),
         max(col("tsNanos")).as("mx"))
       ev.crossJoin(broadcast(mm))
-        .withColumn("b", call_function("div",
-            (col("tsNanos") - col("mn")) * 4L,
-            col("mx") - col("mn") + 1L).cast("int"))
+        .withColumn("b", valueSlice("tsNanos", 4).cast("int"))
         .select(col("key"), col("tsNanos"), col("eventId"), col("b"))
     }
 
@@ -379,9 +393,7 @@ object SparkEntry {
       val mm = ev.agg(min(col("tsNanos")).as("mn"),
         max(col("tsNanos")).as("mx"))
       ev.crossJoin(broadcast(mm))
-        .withColumn("b", call_function("div",
-            (col("tsNanos") - col("mn")) * 4L,
-            col("mx") - col("mn") + 1L).cast("int"))
+        .withColumn("b", valueSlice("tsNanos", 4).cast("int"))
         .select(col("key"), col("tsNanos"), col("eventId"),
           col("etype"), col("b"))
     }
@@ -394,9 +406,7 @@ object SparkEntry {
       val rng = ev.agg(min(col("tsSec")).as("mn"),
         max(col("tsSec")).as("mx"))
       ev.crossJoin(broadcast(rng))
-        .withColumn("b", call_function("div",
-            (col("tsSec") - col("mn")) * 2L,
-            col("mx") - col("mn") + 1L).cast("int"))
+        .withColumn("b", valueSlice("tsSec", 2).cast("int"))
         .select(col("event_type"), col("tsSec"), col("uid"), col("b"))
         .unionByName(rng.select(lit("zz_sentinel").as("event_type"),
           (col("mx") + 172800L).as("tsSec"), lit("u0").as("uid"),
@@ -419,9 +429,7 @@ object SparkEntry {
         .crossJoin(broadcast(rng))
         .withColumn("b",
           when(pmod(col("eid"), lit(10)) === lateMod, lit(3))
-            .otherwise(call_function("div",
-              (col("tsSec") - col("mn")) * 3L,
-              col("mx") - col("mn") + 1L)).cast("int"))
+            .otherwise(valueSlice("tsSec", 3)).cast("int"))
         .select(col("uid"), col("tsSec"), col("b"))
     }
 
@@ -441,7 +449,7 @@ object SparkEntry {
   def prebuildStages(s: SparkSession, dir: String): Seq[(String, Double)] = {
     def t(name: String)(body: => Any): (String, Double) = {
       val t0 = System.nanoTime()
-      try body catch { case e: Throwable =>
+      try body catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[stage-prebuild] $name failed: ${e.getMessage}")
       }
       s.catalog.clearCache()
@@ -499,13 +507,19 @@ object SparkEntry {
   private lazy val csvGateRoot: String =
     s"${sys.props("java.io.tmpdir").stripSuffix("/")}/graft-csv-gate"
 
-  /** Stage `df` as exactly ONE headered CSV file at csvGateRoot/name
-    * (optionally pinning its mtime — the S2 latest-file gate needs a
-    * controlled modification order). */
-  private def stageCsv(s: SparkSession, df: DataFrame, name: String,
-      mtime: Long = -1L): String = {
+  /** Stage `df` as exactly ONE file at csvGateRoot/name, written by
+    * `save` from a one-partition overwrite writer (a headered CSV for
+    * the q194/q195 gates; line-delimited JSON for q356, whose oracle
+    * re-reads the engine-written bytes with DuckDB's read_json, so the
+    * JSON WRITE path is gated cross-engine). `mtime` optionally pins
+    * the file's modification time — the S2 latest-file gate needs a
+    * controlled modification order. */
+  private def stageFile(s: SparkSession, df: DataFrame, name: String,
+      mtime: Long = -1L)
+      (save: (DataFrameWriter[Row], String) => Unit)
+      : String = {
     val tmp = s"$csvGateRoot/_tmp-${name.replace('/', '_')}"
-    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(tmp)
+    save(df.coalesce(1).write.mode("overwrite"), tmp)
     val root = new org.apache.hadoop.fs.Path(csvGateRoot)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
     val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
@@ -515,27 +529,6 @@ object SparkEntry {
     if (fs.exists(dest)) fs.delete(dest, false)
     fs.rename(part, dest)
     if (mtime >= 0L) fs.setTimes(dest, mtime, -1L)
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    dest.toUri.getPath
-  }
-
-  /** [[stageCsv]]'s JSONL sibling: stage `df` as exactly ONE
-    * line-delimited JSON file at csvGateRoot/name — the engine-written
-    * bytes the q356 oracle re-reads with DuckDB's read_json, so the
-    * JSON WRITE path is gated cross-engine, not just round-tripped
-    * through Spark's own reader. */
-  private def stageJsonl(s: SparkSession, df: DataFrame,
-      name: String): String = {
-    val tmp = s"$csvGateRoot/_tmp-${name.replace('/', '_')}"
-    df.coalesce(1).write.mode("overwrite").json(tmp)
-    val root = new org.apache.hadoop.fs.Path(csvGateRoot)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-      .filter(_.getPath.getName.startsWith("part-")).head.getPath
-    val dest = new org.apache.hadoop.fs.Path(s"$csvGateRoot/$name")
-    fs.mkdirs(dest.getParent)
-    if (fs.exists(dest)) fs.delete(dest, false)
-    fs.rename(part, dest)
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
     dest.toUri.getPath
   }
@@ -559,27 +552,16 @@ object SparkEntry {
       // staged once per corpus stamp, shared by q177/q181/q209 (r20)
       val dirL = feedSsj(s, dir, "l")
       val dirR = feedSsj(s, dir, "r")
-      def src(d: String, tCol: String) = s.readStream
-        .schema("uid LONG, tsSec LONG")
-        .option("maxFilesPerTrigger", "1").parquet(d)
-        .withColumn(tCol, timestamp_seconds(col("tsSec")))
-        .withColumnRenamed("tsSec", tCol + "_sec")
+      def src(d: String, tCol: String) =
+        readFeed(s, d, "uid LONG, tsSec LONG")
+          .withColumn(tCol, timestamp_seconds(col("tsSec")))
+          .withColumnRenamed("tsSec", tCol + "_sec")
       val joined = graft.streaming.Streams.joinWithinGap(
         src(dirL, "l_t"), src(dirR, "r_t"), "uid",
         "l_t", "r_t", gapSeconds = 3600L, watermark = "30 minutes",
         joinType = joinType)
-      withScratchDir(s, "graft-ssj-out") { outDir =>
-        val q = joined.writeStream.format("parquet")
-          .option("path", s"$outDir/rows")
-          .option("checkpointLocation", s"$outDir/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$outDir/rows")
-          .select(col("uid"), col("l_t_sec").as("l_ts"),
-            col("r_t_sec").as("r_ts"))
-      }
+      runStreamGate(s, "ssj", joined)(_.select(col("uid"),
+        col("l_t_sec").as("l_ts"), col("r_t_sec").as("r_ts")))
     }
   }
 
@@ -587,7 +569,7 @@ object SparkEntry {
     * `n`, restoring the caller's value after. The STREAMING gates use
     * this with a small n: a stateful micro-batch pays per-partition
     * state-store open/commit/checkpoint overhead on every trigger, so
-    // 32 state partitions × 4-5 micro-batches × (1-2 stateful ops) is
+    * 32 state partitions × 4-5 micro-batches × (1-2 stateful ops) is
     * pure fixed cost at gate volumes — while at cluster scale the
     * state partition count is sized to the cluster, not to this
     * harness. Gated OUTPUTS are partitioning-independent by the
@@ -1998,26 +1980,15 @@ object SparkEntry {
         Seq.empty[(Long, String, Long, Long)]
           .toDF("win_start", "event_type", "n_events", "value_sum")
       } else {
-      val feedDir = feedQ169(s, dir)
-      val src = s.readStream
-        .schema("event_type STRING, tsSec LONG, v LONG")
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
+      val src = readFeed(s, feedQ169(s, dir),
+          "event_type STRING, tsSec LONG, v LONG")
         .withColumn("ts", timestamp_seconds(col("tsSec")))
       val agg = graft.streaming.Streams.windowedAgg(src, "ts",
         windowLen = "1 hour", watermark = "30 minutes",
         keyCols = Seq("event_type"), valueCol = "v")
-      withScratchDir(s, "graft-q169-out") { outDir =>
-        val q = agg.writeStream.format("parquet")
-          .option("path", s"$outDir/wins")
-          .option("checkpointLocation", s"$outDir/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$outDir/wins")
-          .select(col("window.start").cast("long").as("win_start"),
-            col("event_type"), col("n_events"), col("value_sum"))
-      }
+      runStreamGate(s, "q169", agg)(
+        _.select(col("window.start").cast("long").as("win_start"),
+          col("event_type"), col("n_events"), col("value_sum")))
       }
     }),
 
@@ -2033,11 +2004,9 @@ object SparkEntry {
       val standing = emb.filter(pmod(col("vec_id"), lit(17)) =!= 0)
       val batch = emb.filter(pmod(col("vec_id"), lit(17)) === 0)
       val stamp = Dedup.sourceStamp(s, s"$dir/embeddings.parquet")
-      val root = sys.env.getOrElse("SPARK_GRAFT_STAGE_DIR",
-        "target/graft-stage")
       val keys = SimilaritySearch.stagedBandKeys(standing, "vec_id",
         "embedding",
-        s"$root/embkeys-$stamp-b$lshBaseBits-n$lshBands-r$lshBitsPerBand",
+        s"$stageRoot/embkeys-$stamp-b$lshBaseBits-n$lshBands-r$lshBitsPerBand",
         lshBaseBits, lshBands, lshBitsPerBand)
       SimilaritySearch.incrementalEmbeddingNearDup(keys, emb, batch,
         "vec_id", "embedding", threshold = 0.3,
@@ -2072,24 +2041,12 @@ object SparkEntry {
         .agg(call_function("div",
           sum(col("n")) + count(lit(1)) - 1L, count(lit(1))).as("k"))
         .as[(String, Long)].collect().toMap
-      val feedDir = feedQ224(s, dir)
-      val src = s.readStream.schema("group STRING, day LONG")
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
+      val src = readFeed(s, feedQ224(s, dir), "group STRING, day LONG")
         .as[graft.streaming.Streams.DayEvent]
-      withScratchDir(s, "graft-q224-out") { outDir =>
-        val q = graft.streaming.Streams
-          .streamingCusum(src, allowance, hMult = 5L)
-          .writeStream.format("parquet")
-          .option("path", s"$outDir/cusum")
-          .option("checkpointLocation", s"$outDir/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$outDir/cusum")
-          .select(col("group").as("event_type"), col("day"),
-            col("n_events"), col("k"), col("cusum"), col("alarm"))
-      }
+      runStreamGate(s, "q224", graft.streaming.Streams
+          .streamingCusum(src, allowance, hMult = 5L))(
+        _.select(col("group").as("event_type"), col("day"),
+          col("n_events"), col("k"), col("cusum"), col("alarm")))
     }),
 
     // ---- splits: purged/embargoed temporal split over events (last
@@ -2261,28 +2218,17 @@ object SparkEntry {
           .toDF("win_start", "event_type", "n_events", "value_sum")
       } else {
       // replays q169's staged feed — identical stager (r20)
-      val feedDir = feedQ169(s, dir)
-      val src = s.readStream
-        .schema("event_type STRING, tsSec LONG, v LONG")
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
+      val src = readFeed(s, feedQ169(s, dir),
+          "event_type STRING, tsSec LONG, v LONG")
         .withColumn("ts", timestamp_seconds(col("tsSec")))
       val agg = graft.streaming.Streams.slidingWindowedAgg(src, "ts",
         windowLen = "1 hour", slideLen = "30 minutes",
         watermark = "30 minutes",
         keyCols = Seq("event_type"), valueCol = "v")
       // (sliding variant of the q169 harness — same sink and sentinels)
-      withScratchDir(s, "graft-q229-out") { outDir =>
-        val q = agg.writeStream.format("parquet")
-          .option("path", s"$outDir/wins")
-          .option("checkpointLocation", s"$outDir/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$outDir/wins")
-          .select(col("window.start").cast("long").as("win_start"),
-            col("event_type"), col("n_events"), col("value_sum"))
-      }
+      runStreamGate(s, "q229", agg)(
+        _.select(col("window.start").cast("long").as("win_start"),
+          col("event_type"), col("n_events"), col("value_sum")))
       }
     }),
 
@@ -2387,28 +2333,15 @@ object SparkEntry {
     // oracle. Gaps straddling micro-batches ride in state.
     "q243_stream_throttle" -> ((s, dir) => withShufflePartitions(s, 8) {
       import s.implicits._
-      val feedDir = feedQ243(s, dir)
-      val src = s.readStream
-        .schema("key STRING, tsNanos LONG, eventId LONG")
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
+      val src = readFeed(s, feedQ243(s, dir),
+          "key STRING, tsNanos LONG, eventId LONG")
         .as[graft.streaming.Streams.SpacedEvent]
-      withScratchDir(s, "graft-q243-out") { outDir =>
-        val q = graft.streaming.Streams
-          .streamingThrottle(src, minGapSeconds = 60L)
-          .writeStream.format("parquet")
-          .option("path", s"$outDir/kept")
-          .option("checkpointLocation", s"$outDir/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$outDir/kept")
-          .select(col("eventId").as("event_id"),
-            substring_index(col("key"), "|", 1).cast("long")
-              .as("user_id"),
-            substring_index(col("key"), "|", -1).as("event_type"),
-            col("tsNanos").as("ts"))
-      }
+      runStreamGate(s, "q243", graft.streaming.Streams
+          .streamingThrottle(src, minGapSeconds = 60L))(
+        _.select(col("eventId").as("event_id"),
+          substring_index(col("key"), "|", 1).cast("long").as("user_id"),
+          substring_index(col("key"), "|", -1).as("event_type"),
+          col("tsNanos").as("ts")))
     }),
 
     // ---- multimodal: per-frame ZERO-CROSSING RATE of the q163
@@ -2536,25 +2469,12 @@ object SparkEntry {
     "q264_stream_ewma" -> ((s, dir) => withShufflePartitions(s, 8) {
       import s.implicits._
       // replays q224's staged day-slice feed — identical stager (r20)
-      val feedDir = feedQ224(s, dir)
-      val src = s.readStream.schema("group STRING, day LONG")
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
+      val src = readFeed(s, feedQ224(s, dir), "group STRING, day LONG")
         .as[graft.streaming.Streams.DayEvent]
-      withScratchDir(s, "graft-q264-out") { outDir =>
-        val q = graft.streaming.Streams
-          .streamingEwma(src,
-            EventAnalytics.decayPowersE6(4, 5, 30))
-          .writeStream.format("parquet")
-          .option("path", s"$outDir/ewma")
-          .option("checkpointLocation", s"$outDir/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$outDir/ewma")
-          .select(col("group").as("event_type"), col("day"),
-            col("n_events"), col("ewma_e6"))
-      }
+      runStreamGate(s, "q264", graft.streaming.Streams
+          .streamingEwma(src, EventAnalytics.decayPowersE6(4, 5, 30)))(
+        _.select(col("group").as("event_type"), col("day"),
+          col("n_events"), col("ewma_e6")))
     }),
 
     // ---- vectors: per-dimension INT8 quantization card — affine
@@ -2892,9 +2812,7 @@ object SparkEntry {
     // dropped row, or column swap breaks the hash.
     "q336_orc_roundtrip" -> ((s, dir) => {
       val stamp = Dedup.sourceStamp(s, s"$dir/orders.parquet")
-      val root = sys.env.getOrElse("SPARK_GRAFT_STAGE_DIR",
-        "target/graft-stage")
-      val back = Tables.stagedOrc(s, s"$root/orc-orders-$stamp") {
+      val back = Tables.stagedOrc(s, s"$stageRoot/orc-orders-$stamp") {
         T(s, dir, "orders").select(
           col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           expr("cast(round(o_totalprice * 100, 0) as long)")
@@ -2927,7 +2845,7 @@ object SparkEntry {
           .as("price_e2"),
         TimeFns.floorDiv(unix_micros(col("o_orderdate")
           .cast("timestamp")), 86400L * 1000000L).as("order_day"))
-      val path = stageJsonl(s, out, "q356/orders.jsonl")
+      val path = stageFile(s, out, "q356/orders.jsonl")(_.json(_))
       val schema = "o_orderkey long, o_custkey long, " +
         "o_orderstatus string, price_e2 long, order_day long"
       s.read.schema(schema).json(path)
@@ -2975,10 +2893,8 @@ object SparkEntry {
     // change the I/O, never the result.
     "q358_partition_pruned" -> ((s, dir) => {
       val stamp = Dedup.sourceStamp(s, s"$dir/orders.parquet")
-      val root = sys.env.getOrElse("SPARK_GRAFT_STAGE_DIR",
-        "target/graft-stage")
       val store = Tables.stagedPartitionedParquet(s,
-          s"$root/orders-by-status-$stamp", "o_orderstatus") {
+          s"$stageRoot/orders-by-status-$stamp", "o_orderstatus") {
         T(s, dir, "orders").select(
           col("o_orderkey").cast("long").as("o_orderkey"),
           col("o_orderpriority"),
@@ -3004,11 +2920,9 @@ object SparkEntry {
     // pruning must change the I/O, never the result.
     "q359_dpp_join" -> ((s, dir) => {
       val stamp = Dedup.sourceStamp(s, s"$dir/orders.parquet")
-      val root = sys.env.getOrElse("SPARK_GRAFT_STAGE_DIR",
-        "target/graft-stage")
       // same staged store as q358 — built once, shared
       val fact = Tables.stagedPartitionedParquet(s,
-          s"$root/orders-by-status-$stamp", "o_orderstatus") {
+          s"$stageRoot/orders-by-status-$stamp", "o_orderstatus") {
         T(s, dir, "orders").select(
           col("o_orderkey").cast("long").as("o_orderkey"),
           col("o_orderpriority"),
@@ -3019,7 +2933,7 @@ object SparkEntry {
       // the dim must be a FILE-backed table: a LocalRelation dim gets
       // its filter constant-folded away and DPP never sees a selective
       // predicate to prune with
-      val dim = Tables.stagedParquet(s, s"$root/status-dim-$stamp") {
+      val dim = Tables.stagedParquet(s, s"$stageRoot/status-dim-$stamp") {
         T(s, dir, "orders").select(col("o_orderstatus").as("status"))
           .distinct()
           .withColumn("category",
@@ -3161,10 +3075,8 @@ object SparkEntry {
       // yesterday's labels, never rebuilds them) — per-query work is
       // the MERGE alone
       val stamp = Dedup.sourceStamp(s, s"$dir/embeddings.parquet")
-      val root = sys.env.getOrElse("SPARK_GRAFT_STAGE_DIR",
-        "target/graft-stage")
       val staged = Tables.stagedParquet(s,
-          s"$root/standing-comps-$stamp" +
+          s"$stageRoot/standing-comps-$stamp" +
             s"-b$lshBaseBits-n$lshBands-r$lshBitsPerBand-t045-m7") {
         Dedup.connectedComponents(pairs.filter(standingEnds),
           "id_a", "id_b")
@@ -3560,10 +3472,8 @@ object SparkEntry {
       // Per-query work drops from two full ladders to one.
       val stamp = Dedup.sourceStamp(s, s"$dir/orders.parquet") + "-" +
         Dedup.sourceStamp(s, s"$dir/lineitem.parquet")
-      val root = sys.env.getOrElse("SPARK_GRAFT_STAGE_DIR",
-        "target/graft-stage")
       val before = Tables.stagedParquet(s,
-          s"$root/pr-before-$stamp-i3") {
+          s"$stageRoot/pr-before-$stamp-i3") {
         val o = T(s, dir, "orders").select(col("o_orderkey"),
           col("o_custkey"))
         val li = T(s, dir, "lineitem").select(col("l_orderkey"),
@@ -3825,30 +3735,19 @@ object SparkEntry {
     // uniques scale), summarized after the sink; the md5 sketch is
     // deterministic so the batch oracle reproduces it exactly.
     "q302_stream_hll_window" -> ((s, dir) => withShufflePartitions(s, 8) {
-      val feedDir = feedQ302(s, dir)
-      val src = s.readStream
-        .schema("event_type STRING, tsSec LONG, uid STRING")
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
+      val src = readFeed(s, feedQ302(s, dir),
+          "event_type STRING, tsSec LONG, uid STRING")
         .withColumn("ts", timestamp_seconds(col("tsSec")))
       val agg = graft.streaming.Streams.windowedHllDistinct(src, "ts",
         windowLen = "1 day", watermark = "1 hour",
         keyCols = Seq("event_type"), idCol = "uid")
-      withScratchDir(s, "graft-q302-out") { outDir =>
-        val q = agg.writeStream.format("parquet")
-          .option("path", s"$outDir/wins")
-          .option("checkpointLocation", s"$outDir/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$outDir/wins")
-          .filter(col("event_type") =!= "zz_sentinel")
+      runStreamGate(s, "q302", agg)(
+        _.filter(col("event_type") =!= "zz_sentinel")
           .select(col("win_start"), col("event_type"),
             graft.expressions.HllSketch.hll_summary(col("regs")).as("h"))
           .select(col("win_start"), col("event_type"),
             col("h.v_zero").as("v_zero"), col("h.s40").as("s40"),
-            col("h.est_hll").as("est_hll"))
-      }
+            col("h.est_hll").as("est_hll")))
     }),
 
     // ---- streaming: A→B PATTERN DETECTION — every purchase matched
@@ -3857,27 +3756,14 @@ object SparkEntry {
     // q243's time-quartile file feed, batch-SQL oracle.
     "q289_stream_pattern" -> ((s, dir) => withShufflePartitions(s, 8) {
       import s.implicits._
-      val feedDir = feedQ289(s, dir)
-      val src = s.readStream
-        .schema("key STRING, tsNanos LONG, eventId LONG, etype STRING")
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
+      val src = readFeed(s, feedQ289(s, dir),
+          "key STRING, tsNanos LONG, eventId LONG, etype STRING")
         .as[graft.streaming.Streams.TypedEvent]
-      withScratchDir(s, "graft-q289-out") { outDir =>
-        val q = graft.streaming.Streams
+      runStreamGate(s, "q289", graft.streaming.Streams
           .streamingPatternDetect(src, aType = "view",
-            bType = "purchase", windowNanos = 3600L * 1000000000L)
-          .toDF()
-          .writeStream.format("parquet")
-          .option("path", s"$outDir/hits")
-          .option("checkpointLocation", s"$outDir/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$outDir/hits")
-          .select(col("key").cast("long").as("user_id"),
-            col("a_event_id"), col("b_event_id"), col("gap_nanos"))
-      }
+            bType = "purchase", windowNanos = 3600L * 1000000000L))(
+        _.select(col("key").cast("long").as("user_id"),
+          col("a_event_id"), col("b_event_id"), col("gap_nanos")))
     }),
 
     // ---- dedup: THRESHOLD-SENSITIVITY curve — verified exact-
@@ -4286,8 +4172,7 @@ object SparkEntry {
             fs.setTimes(dst, base + i * 2000L, -1L)
           }
           def runOnce(): Unit = {
-            val src = s.readStream.schema("event_type STRING, uid LONG")
-              .option("maxFilesPerTrigger", "1").parquet(feedDir)
+            val src = readFeed(s, feedDir, "event_type STRING, uid LONG")
             graft.streaming.Streams.runAvailableNow(
               graft.streaming.Streams.idempotentAppendSink(src, sink), ckpt)
               .awaitTermination()
@@ -4330,7 +4215,8 @@ object SparkEntry {
           .as("Performance % Year to date"),
         col("p_brand").as("Analyst Rating"),
         col("p_type").as("Unmapped Extra"))
-      stageCsv(s, src, "q194/screener.csv")
+      stageFile(s, src, "q194/screener.csv")(
+        _.option("header", "true").csv(_))
       graft.sources.CsvIngest.canonicalize(
           graft.sources.CsvIngest.readCsv(s,
             s"$csvGateRoot/q194/screener.csv"),
@@ -4349,9 +4235,10 @@ object SparkEntry {
       val n = T(s, dir, "nation")
       val base = System.currentTimeMillis() - 60000L
       (0 to 2).foreach { i =>
-        stageCsv(s, n.filter(pmod(col("n_nationkey"), lit(3)) === i)
+        stageFile(s, n.filter(pmod(col("n_nationkey"), lit(3)) === i)
             .select(col("n_nationkey"), col("n_name"), col("n_regionkey")),
-          s"q195/nation-$i.csv", base + i * 2000L)
+          s"q195/nation-$i.csv", base + i * 2000L)(
+          _.option("header", "true").csv(_))
       }
       val latest = Tables.latestByMtime(s, s"$csvGateRoot/q195/nation-*.csv")
         .getOrElse(sys.error("no staged q195 files"))
@@ -4459,24 +4346,13 @@ object SparkEntry {
       } else {
       val dim = ev.groupBy(col("event_type"))
         .agg((count(lit(1)) % 7L + 1L).as("type_weight"))
-      val feedDir = feedQ192(s, dir)
-      val src = s.readStream.schema("event_type STRING, uid LONG")
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
+      val src = readFeed(s, feedQ192(s, dir), "event_type STRING, uid LONG")
       val enriched = graft.streaming.Streams.enrich(src, dim,
         "event_type", joinType = "left")
-      withScratchDir(s, "graft-q192-out") { outDir =>
-        val q = enriched.writeStream.format("parquet")
-          .option("path", s"$outDir/rows")
-          .option("checkpointLocation", s"$outDir/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$outDir/rows")
-          .groupBy(col("event_type"), col("type_weight"))
+      runStreamGate(s, "q192", enriched)(
+        _.groupBy(col("event_type"), col("type_weight"))
           .agg(count(lit(1)).as("n_events"),
-            sum(col("uid") * col("type_weight")).as("weighted_sum"))
-      }
+            sum(col("uid") * col("type_weight")).as("weighted_sum")))
       }
     }),
 
@@ -4594,23 +4470,11 @@ object SparkEntry {
       if (ev.isEmpty) {
         Seq.empty[(Long, Long)].toDF("uid", "ts_emitted")
       } else {
-      val feedDir = feedQ175(s, dir)
-      val src = s.readStream.schema("uid LONG, tsSec LONG")
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
+      val src = readFeed(s, feedQ175(s, dir), "uid LONG, tsSec LONG")
         .withColumn("ts", timestamp_seconds(col("tsSec")))
-      withScratchDir(s, "graft-q175-out") { outDir =>
-        val q = graft.streaming.Streams
-          .dedupByKey(src, "uid", "ts", "30 minutes")
-          .writeStream.format("parquet")
-          .option("path", s"$outDir/rows")
-          .option("checkpointLocation", s"$outDir/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$outDir/rows")
-          .select(col("uid"), col("tsSec").as("ts_emitted"))
-      }
+      runStreamGate(s, "q175",
+          graft.streaming.Streams.dedupByKey(src, "uid", "ts", "30 minutes"))(
+        _.select(col("uid"), col("tsSec").as("ts_emitted")))
       }
     }),
 
@@ -4656,30 +4520,17 @@ object SparkEntry {
         Seq.empty[(Long, Long, Long, Long)]
           .toDF("user_id", "session_start", "session_end", "n_events")
       } else {
-      val feedDir = feedQ182(s, dir)
-      val src = s.readStream.schema("userId LONG, tsSec LONG")
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
+      val src = readFeed(s, feedQ182(s, dir), "userId LONG, tsSec LONG")
         .withColumn("ts", timestamp_seconds(col("tsSec")))
         .withWatermark("ts", "30 minutes")
         .withColumn("value", lit(0.0))
         .select(col("userId"), col("tsSec"), col("value"), col("ts"))
         .as[graft.streaming.Streams.TimedSessionEvent]
-      withScratchDir(s, "graft-q182-out") { outDir =>
-        val q = graft.streaming.Streams
-          .statefulSessionsTimeout(src, gapSec = 1800L)
-          .writeStream.format("parquet")
-          .option("path", s"$outDir/sessions")
-          .option("checkpointLocation", s"$outDir/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$outDir/sessions")
-          .select(col("userId").as("user_id"),
-            col("start").as("session_start"),
-            col("end").as("session_end"),
-            col("n").as("n_events"))
-      }
+      runStreamGate(s, "q182", graft.streaming.Streams
+          .statefulSessionsTimeout(src, gapSec = 1800L))(
+        _.select(col("userId").as("user_id"),
+          col("start").as("session_start"), col("end").as("session_end"),
+          col("n").as("n_events")))
       }
     }),
 
@@ -5269,9 +5120,7 @@ object SparkEntry {
         .select(col("event_type").as("group"),
           col("user_id").cast("string").as("item"),
           col("event_id").cast("long").as("eid"))
-      val feedDir = feedQ77(s, dir)
-      val src = s.readStream.schema("group STRING, item STRING")
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
+      val src = readFeed(s, feedQ77(s, dir), "group STRING, item STRING")
         .as[graft.streaming.Streams.ItemEvent]
       val q = graft.streaming.Streams.streamingHeavyHitters(src, k)
         .writeStream.format("memory").queryName("graft_gate_stream_hh")
@@ -5340,32 +5189,19 @@ object SparkEntry {
       // state order is preserved and equal timestamps never split —
       // with no global sort anywhere in the stager); staged once per
       // corpus stamp in feedQ78 (r20)
-      val feedDir = feedQ78(s, dir)
-      val src = s.readStream
-        .schema("userId LONG, tsSec LONG, value DOUBLE")
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
+      val src = readFeed(s, feedQ78(s, dir),
+          "userId LONG, tsSec LONG, value DOUBLE")
         .as[graft.streaming.Streams.SessionEvent]
-      withScratchDir(s, "graft-q78-out") { outDir =>
-        val q = graft.streaming.Streams
-          .statefulSessions(src, gapSec = 1800L)
-          .writeStream.format("parquet")
-          .option("path", s"$outDir/sessions")
-          .option("checkpointLocation", s"$outDir/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$outDir/sessions")
-          // defensive: sentinel-only sessions never close (they ride in
-          // state when the stream ends) but a start at/after the sentinel
-          // must not leak into the gate if that ever changes
-          .crossJoin(broadcast(maxTs))
+      runStreamGate(s, "q78", graft.streaming.Streams
+          .statefulSessions(src, gapSec = 1800L))(
+        // defensive: sentinel-only sessions never close (they ride in
+        // state when the stream ends) but a start at/after the sentinel
+        // must not leak into the gate if that ever changes
+        _.crossJoin(broadcast(maxTs))
           .filter(col("start") < col("mx") + 1801L)
           .select(col("userId").as("user_id"),
-            col("start").as("session_start"),
-            col("end").as("session_end"),
-            col("n").as("n_events"))
-      }
+            col("start").as("session_start"), col("end").as("session_end"),
+            col("n").as("n_events")))
       }
     }),
 

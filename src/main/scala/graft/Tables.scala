@@ -95,22 +95,37 @@ object Tables {
     spark.table(name)
   }
 
+  /** The build-once protocol behind every staged store: if
+    * `$storeDir/_staged` is missing, run `build` (which writes the
+    * store's contents under `storeDir`), then create the marker. The
+    * marker commits AFTER the build, so a killed writer leaves a
+    * partial store without a marker, and the next call rebuilds it;
+    * `build` must therefore overwrite whatever a killed run left.
+    * Callers key `storeDir` by the source stamp(s) so a regenerated
+    * corpus gets a new store. Readers skip `_`-prefixed names, so the
+    * marker never enters a scan. */
+  private[graft] def buildOnce(spark: SparkSession, storeDir: String)
+      (build: => Unit): Unit = {
+    val marker = new org.apache.hadoop.fs.Path(s"$storeDir/_staged")
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(marker)) {
+      build
+      fs.create(marker, true).close()
+    }
+  }
+
   /** [[stagedParquet]] with a HIVE-PARTITIONED layout: the build is
     * written `partitionBy(partitionCol)` so the store's directory tree
     * carries the column (`col=value/…`), and any reader filtering on
     * it scans ONLY the matching directories — partition pruning, the
     * layout lever that turns "read 100 TB, keep 1%" into "read 1%"
     * (`PartitionFilters` in the scan node; PlanAuditSpec pins it).
-    * Same `_staged` marker commit discipline as the flat form. */
+    * Built once through [[buildOnce]], like the flat form. */
   def stagedPartitionedParquet(spark: SparkSession, storeDir: String,
       partitionCol: String)(build: => DataFrame): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$storeDir/_staged")
-    if (!fs.exists(marker)) {
+    buildOnce(spark, storeDir) {
       build.write.partitionBy(partitionCol).mode("overwrite")
         .parquet(s"$storeDir/data")
-      fs.create(marker, true).close()
     }
     spark.read.parquet(s"$storeDir/data")
   }
@@ -120,36 +135,25 @@ object Tables {
     * staged MinHash / band-key / BPE stores: a production pipeline
     * derives its standing tables (edge lists, indexes, models) ONCE
     * per corpus and every consumer reads the store instead of
-    * re-deriving per query. Callers key `storeDir` by the source
-    * stamp(s) so a regenerated corpus forces a rebuild. The `_staged`
-    * marker commits AFTER the write, so a killed writer leaves a
-    * partial store the next call rebuilds. */
+    * re-deriving per query. Built once through [[buildOnce]]. */
   def stagedParquet(spark: SparkSession, storeDir: String)
       (build: => DataFrame): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$storeDir/_staged")
-    if (!fs.exists(marker)) {
+    buildOnce(spark, storeDir) {
       build.write.mode("overwrite").parquet(s"$storeDir/data")
-      fs.create(marker, true).close()
     }
     spark.read.parquet(s"$storeDir/data")
   }
 
-  /** [[stagedParquet]]'s ORC sibling — build-once semantics with the
-    * same `_staged` marker, but the store is an ORC dataset (Spark's
+  /** [[stagedParquet]]'s ORC sibling — built once through
+    * [[buildOnce]], but the store is an ORC dataset (Spark's
     * built-in `orc` source, zstd-compressed columnar like parquet,
     * the other lakehouse interchange format a 100 TB pipeline is
     * routinely handed). Exists so the ORC read AND write paths are
     * first-class gated surfaces, not a doc claim. */
   def stagedOrc(spark: SparkSession, storeDir: String)
       (build: => DataFrame): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$storeDir/_staged")
-    if (!fs.exists(marker)) {
+    buildOnce(spark, storeDir) {
       build.write.mode("overwrite").orc(s"$storeDir/data")
-      fs.create(marker, true).close()
     }
     spark.read.orc(s"$storeDir/data")
   }

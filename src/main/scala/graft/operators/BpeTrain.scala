@@ -228,15 +228,13 @@ object BpeTrain {
     * of a tokenizer artifact (a corpus trains once; every consumer —
     * the encode pass, vocabulary stats, the next session — reads the
     * shipped tables). Deterministic trainer ⇒ the staged store equals
-    * a fresh train. Returns (merge table, word table). */
+    * a fresh train. Built once through [[graft.Tables.buildOnce]].
+    * Returns (merge table, word table). */
   def stagedBatchedModel(df: DataFrame, textCol: String,
       storeDir: String, passes: Int, batchCap: Int,
       candN: Int): (DataFrame, DataFrame) = {
     val spark = df.sparkSession
-    val root = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$storeDir/_staged")
-    if (!fs.exists(marker)) {
+    graft.Tables.buildOnce(spark, storeDir) {
       val (merges, words) =
         trainBatchedRounds(df, textCol, passes, batchCap, candN)
       import spark.implicits._
@@ -244,7 +242,6 @@ object BpeTrain {
           "merged", "pair_count")
         .coalesce(1).write.mode("overwrite").parquet(s"$storeDir/merges")
       words.write.mode("overwrite").parquet(s"$storeDir/words")
-      fs.create(marker, true).close()
     }
     (spark.read.parquet(s"$storeDir/merges"),
       spark.read.parquet(s"$storeDir/words"))

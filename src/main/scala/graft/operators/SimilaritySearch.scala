@@ -551,18 +551,14 @@ object SimilaritySearch {
     * never re-signs its standing vectors; only each new batch pays
     * the signature cost. Plane/band derivations are deterministic
     * (HyperplaneBandKeys), so a staged store is exactly what a fresh
-    * build would produce. */
+    * build would produce. Built once through [[graft.Tables.buildOnce]]. */
   def stagedBandKeys(df: DataFrame, idCol: String, vecCol: String,
       storeDir: String, baseBits: Int, bands: Int,
       bitsPerBand: Int): DataFrame = {
     val spark = df.sparkSession
-    val root = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$storeDir/_staged")
-    if (!fs.exists(marker)) {
+    graft.Tables.buildOnce(spark, storeDir) {
       bandKeyRows(df, idCol, vecCol, baseBits, bands, bitsPerBand)
         .write.mode("overwrite").parquet(s"$storeDir/keys")
-      fs.create(marker, true).close()
     }
     spark.read.parquet(s"$storeDir/keys")
   }

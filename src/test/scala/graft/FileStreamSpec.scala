@@ -81,6 +81,51 @@ class FileStreamSpec extends SparkSpec {
       Seq("C", 30.0), Seq("D", 4.0)))
   }
 
+  test("kill and resume: an idempotent-append batch written but not " +
+    "checkpointed overwrites its partition on replay") {
+    val root = Files.createTempDirectory("graft_idem_resume")
+    val src = s"$root/incoming"
+    new java.io.File(src).mkdirs()
+    val schema = StructType(Seq(
+      StructField("k", StringType), StructField("v", DoubleType)))
+    def runOnce(target: String, checkpoint: String): Unit =
+      Streams.runAvailableNow(Streams.idempotentAppendSink(
+        spark.readStream.schema(schema).parquet(src), target),
+        checkpoint).awaitTermination()
+    // three file batches; the killed run and the uninterrupted run see
+    // the same batch sequence
+    val batches = Seq(
+      Seq(("A", 1.0), ("B", 2.0)),
+      Seq(("B", 20.0), ("C", 3.0)),
+      Seq(("C", 30.0), ("A", 10.0), ("D", 4.0)))
+    batches.foreach { rows =>
+      rows.toDF("k", "v").write.mode("append").parquet(src)
+      runOnce(s"$root/killed", s"$root/killed-ckpt")
+      runOnce(s"$root/clean", s"$root/clean-ckpt")
+    }
+    val killed = s"$root/killed"
+    // the kill: batch 2's files landed but its offset commit did not
+    val commits = new java.io.File(s"$root/killed-ckpt/commits")
+    Seq("2", ".2.crc").foreach(n => new java.io.File(commits, n).delete())
+    assert(!new java.io.File(commits, "2").exists())
+    runOnce(killed, s"$root/killed-ckpt")
+    assert(new java.io.File(commits, "2").exists())
+    // batch 2 re-ran under the same id and overwrote its own partition:
+    // the sink matches, row for row and batch id for batch id, the sink
+    // of the run that was never interrupted
+    def rows(path: String) = {
+      spark.catalog.refreshByPath(path)
+      spark.read.parquet(path)
+        .select(col("graft_batch_id").cast("long"), col("k"), col("v"))
+        .orderBy("graft_batch_id", "k").collect().map(_.toSeq).toSeq
+    }
+    assert(rows(killed) == rows(s"$root/clean"))
+    assert(rows(killed) == Seq(
+      Seq(0L, "A", 1.0), Seq(0L, "B", 2.0),
+      Seq(1L, "B", 20.0), Seq(1L, "C", 3.0),
+      Seq(2L, "A", 10.0), Seq(2L, "C", 30.0), Seq(2L, "D", 4.0)))
+  }
+
   test("streaming decontamination drops benchmark-contaminated docs per batch") {
     val root = Files.createTempDirectory("graft_decontam_stream")
     val src = s"$root/incoming"

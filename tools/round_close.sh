@@ -8,8 +8,12 @@
 # 2. tools/compare.py over run A -> CORRECTNESS_LOCAL_r<N>.json
 #    (per-query pass/fail + gate-env stamp; COMMIT this).
 # 3. tools/stability.py over A vs B -> STABILITY_r<N>.json.
-# 4. Bench at sf0.1 -> BENCH_LOCAL_r<N>.json, then tools/bench_diff.py
-#    vs the previous round's committed BENCH_LOCAL.
+# 4. Bench at sf0.1 on 8 cores -> BENCH_LOCAL_r<N>.json (the primary
+#    total), then on 32 cores -> BENCH_LOCAL_r<N>_c32.json (committed
+#    alongside); tools/bench_diff.py diffs the 8-core run against the
+#    previous round's BENCH_LOCAL_r<M>.json. Rounds up to 21 recorded
+#    their 32-core run under that name, so the first diff after them
+#    crosses core counts.
 # 5. Scale probes -> SCALE_r<N>.json, then tools/scale_diff.py vs the
 #    previous round's artifact.
 # 6. tools/tripwire.py over the DRIVER's CORRECTNESS_r<N>.json when it
@@ -58,13 +62,22 @@ python3 tools/compare.py "$SF" /tmp/rc_verify_a "CORRECTNESS_LOCAL_r${N}.json"
 echo "== two-run stability =="
 python3 tools/stability.py /tmp/rc_verify_a /tmp/rc_verify_b "STABILITY_r${N}.json"
 
-echo "== bench =="
-SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} \
+BENCH_SF=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}
+echo "== bench, 8 cores (primary total) =="
+SPARK_GRAFT_SF_DIR=$BENCH_SF SPARK_GRAFT_CPUS=8 \
   SPARK_GRAFT_BENCH_OUT="BENCH_LOCAL_r${N}.json" \
+  sbt -batch "runMain graft.Bench" | grep '"metric"' || true
+echo "== bench, 32 cores =="
+SPARK_GRAFT_SF_DIR=$BENCH_SF SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_BENCH_OUT="BENCH_LOCAL_r${N}_c32.json" \
   sbt -batch "runMain graft.Bench" | grep '"metric"' || true
 # `|| true`: with no previous-round artifact, grep exits 1 and pipefail
 # would abort the whole round close (r17 ADVICE) — no diff base is fine.
-PREV_BENCH=$(ls BENCH_LOCAL_r*.json 2>/dev/null | grep -v "r${N}.json" | sort -V | tail -1 || true)
+# The diff base is the newest BENCH_LOCAL_r<digits>.json other than this
+# round's; suffixed artifacts (_c32, _closerun) are never a base.
+PREV_BENCH=$(ls BENCH_LOCAL_r*.json 2>/dev/null \
+  | grep -E '^BENCH_LOCAL_r[0-9]+\.json$' | grep -vx "BENCH_LOCAL_r${N}.json" \
+  | sort -V | tail -1 || true)
 RED=0
 if [ -n "${PREV_BENCH}" ]; then
   echo "== bench diff vs ${PREV_BENCH} =="
