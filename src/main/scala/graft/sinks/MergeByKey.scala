@@ -44,6 +44,29 @@ import org.apache.spark.sql.functions._
   * snapshot isolation. This is the single-table core of a lakehouse
   * manifest commit (Delta/Iceberg pattern, public design).
   *
+  * == Pinned snapshots ==
+  *
+  * A reader resolves a version in two steps: read the manifest for N,
+  * then take the relation of `v=N`. Building that relation
+  * (`spark.read.parquet`) lists the directory and runs one Spark job to
+  * read a parquet footer, so the first read of N in a session PINS it:
+  * the relation is kept with one data file it listed, and later reads
+  * of N in the same session reuse it after the manifest read and one
+  * existence check, running no Spark job. The commit loop reads its
+  * merge head through the same pin. A pin is valid only while the
+  * manifest still names N and its data file still exists; part-file
+  * names carry a per-write UUID, so a GC'd version, or a store deleted
+  * and recreated at the same path with the same version numbers, misses
+  * and is rebuilt instead of serving stale files. Bound: one pin per
+  * (session, path) — a newer version replaces it — a commit drops every
+  * pin of its path, since none can match the manifest again, and at most
+  * 32 pins per JVM, least recently used evicted. A pin holds no rows,
+  * but its key and its relation keep the reading SparkSession, with all
+  * of that session's state, reachable until the pin goes: a finished
+  * streaming query's per-query clone session lives on while one of its
+  * pins is among the 32 most recently used and its path has had no
+  * commit since.
+  *
   * Crash window: a writer that dies AFTER claiming `v=N+1` but BEFORE
   * flipping the manifest leaves the claim dir orphaned; concurrent
   * losers time out waiting for the flip and fail loudly naming the
@@ -118,23 +141,66 @@ object MergeByKey {
     if (!f.exists(manifest)) None
     else {
       val s = readFully(spark, manifest).trim
-      if (s.isEmpty || !s.forall(c => c.isDigit || c == '-') || s == "-")
-        throw new IllegalStateException(
-          s"corrupt manifest at $manifest: '$s' is not a version number — " +
-            "restore it to the highest fully-written v=N before reading")
-      Some(s.toLong)
+      Some(parseVersion(s).getOrElse(throw new IllegalStateException(
+        s"corrupt manifest at $manifest: '$s' is not a version number — " +
+          "restore it to the highest fully-written v=N before reading")))
     }
   }
 
-  /** Read the committed snapshot of a versioned store. A path with no
-    * manifest fails by name instead of being read as plain parquet. */
+  /** A version number as writers write it: ASCII digits only, in range
+    * of a Long. Signs, separators and overflow are None. */
+  private def parseVersion(s: String): Option[Long] =
+    if (s.forall(c => c >= '0' && c <= '9')) s.toLongOption else None
+
+  /** Read the committed snapshot of a versioned store through its pin
+    * (see "Pinned snapshots" above). A path with no manifest fails by
+    * name instead of being read as plain parquet. */
   def readCommitted(spark: SparkSession, path: String): DataFrame =
     committedVersion(spark, path) match {
-      case Some(v) => spark.read.parquet(s"$path/v=$v")
+      case Some(v) => snapshot(spark, path, v)
       case None => throw new IllegalStateException(
         s"$path is not a versioned store: it has no _manifest, so there " +
           "is no committed version to read")
     }
+
+  /** A committed version's relation and one data file it listed. */
+  private final case class Pin(version: Long, df: DataFrame, file: Path)
+
+  /** Pins kept per JVM. Each pin keeps its session reachable; past
+    * this the least recently used goes, so a session that stopped
+    * reading (a finished streaming query's clone, a deleted scratch
+    * store's reader) is not held for good. */
+  private[graft] val maxPins = 32
+
+  /** Access-ordered, so eviction drops the least recently used pin;
+    * guarded by its own monitor. */
+  private val pins =
+    new java.util.LinkedHashMap[(SparkSession, String), Pin](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(SparkSession, String), Pin]): Boolean =
+        size > maxPins
+    }
+
+  /** The version `spark` has pinned for `path`, if any. */
+  private[graft] def pinnedVersion(spark: SparkSession, path: String): Option[Long] =
+    pins.synchronized(Option(pins.get((spark, path)))).map(_.version)
+
+  /** The relation of committed version `v` of `path`: the pinned one
+    * when it is for `v` and its data file still exists, else a fresh
+    * read, which becomes the pin. */
+  private def snapshot(spark: SparkSession, path: String, v: Long): DataFrame = {
+    val key = (spark, path)
+    val pin = pins.synchronized(pins.get(key))
+    if (pin != null && pin.version == v && fs(spark, path).exists(pin.file))
+      pin.df
+    else {
+      val df = spark.read.parquet(s"$path/v=$v")
+      df.inputFiles.headOption.foreach { f =>
+        pins.synchronized(pins.put(key, Pin(v, df, new Path(new java.net.URI(f)))))
+      }
+      df
+    }
+  }
 
   /** Name of the per-version commit record the claim winner drops into
     * `v=N` just before flipping the manifest (while it still holds the
@@ -289,12 +355,8 @@ object MergeByKey {
   /** The N of a `v=N` entry; None for any other name, including a
     * foreign `v=x`, which is never-touch content rather than a
     * NumberFormatException for every later commit. */
-  private def versionOf(name: String): Option[Long] = {
-    val suffix = name.stripPrefix("v=")
-    if (name.startsWith("v=") && suffix.nonEmpty && suffix.forall(_.isDigit))
-      Some(suffix.toLong)
-    else None
-  }
+  private def versionOf(name: String): Option[Long] =
+    if (name.startsWith("v=")) parseVersion(name.stripPrefix("v=")) else None
 
   /** A path with no manifest may hold only `.`-prefixed writer files and
     * `v=N` dirs claimed by a first commit still in flight. Anything else
@@ -331,11 +393,12 @@ object MergeByKey {
 
   /** The one commit loop behind [[upsert]] and [[overwrite]]. `stageNext`
     * derives version N+1 from the committed head (None for a new store);
-    * the head is read only if `stageNext` uses it. The loop stages N+1 in
-    * a private dir, claims `v=N+1` with an atomic no-overwrite rename,
-    * rechecks the claim, writes the commit record, flips the manifest and
-    * GCs. A lost claim waits for the winner's flip and retries against
-    * the NEW head — the staged data was derived from a now-stale one. */
+    * the head is read, through its pin, only if `stageNext` uses it. The
+    * loop stages N+1 in a private dir, claims `v=N+1` with an atomic
+    * no-overwrite rename, rechecks the claim, writes the commit record,
+    * flips the manifest and GCs. A lost claim waits for the winner's flip
+    * and retries against the NEW head — the staged data was derived from a
+    * now-stale one. */
   @annotation.tailrec
   private def commit(spark: SparkSession, path: String, op: String,
       attempt: Int = 1)(stageNext: (=> Option[DataFrame]) => DataFrame): Unit = {
@@ -343,7 +406,7 @@ object MergeByKey {
     if (cur.isEmpty) requireNoForeignContent(spark, path)
     val next = cur.getOrElse(-1L) + 1L
     val stage = new Path(s"$path/.stage-${java.util.UUID.randomUUID()}")
-    stageNext(cur.map(v => spark.read.parquet(s"$path/v=$v")))
+    stageNext(cur.map(snapshot(spark, path, _)))
       .write.mode(SaveMode.Overwrite).parquet(stage.toString)
     val claimed = new Path(s"$path/v=$next")
     val won = claimVersion(spark, stage, claimed)
@@ -361,8 +424,11 @@ object MergeByKey {
       writeCommitRecord(spark, claimed)
       commitManifest(spark, path, next)
       gc(spark, path, next)
-      // the store gained a version: drop any cached listing of the root
+      // the store gained a version: drop any cached listing of the root,
+      // and every pin of it, so no session stays reachable through a pin
+      // that can never match the manifest again
       spark.catalog.refreshByPath(path)
+      pins.synchronized(pins.keySet.removeIf(_._2 == path))
     } else {
       fs(spark, path).delete(if (won) claimed else stage, true)
       if (attempt >= maxAttempts) throw new IllegalStateException(

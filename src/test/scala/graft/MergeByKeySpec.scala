@@ -66,6 +66,82 @@ class MergeByKeySpec extends SparkSpec {
       Set(Seq("A", 1.0), Seq("B", 2.0)))
   }
 
+  test("pinned snapshot: a commit between two reads is visible to the " +
+    "second read, and a GC'd version stays unreadable by name") {
+    val dir = Files.createTempDirectory("graft_pin").toString + "/t"
+    MergeByKey.upsert(spark, Seq(("A", 1.0)).toDF("k", "v"), dir, "k")
+    val first = MergeByKey.readCommitted(spark, dir)
+    assert(first.rowsSet == Set(Seq("A", 1.0)))
+    assert(MergeByKey.readCommitted(spark, dir).rowsSet == Set(Seq("A", 1.0)))
+    MergeByKey.upsert(spark, Seq(("B", 2.0)).toDF("k", "v"), dir, "k")
+    assert(MergeByKey.readCommitted(spark, dir).rowsSet ==
+      Set(Seq("A", 1.0), Seq("B", 2.0)))
+    assert(first.rowsSet == Set(Seq("A", 1.0)), "the earlier snapshot holds")
+    // v=0 was pinned by the reads above; the next commit GCs it
+    MergeByKey.upsert(spark, Seq(("C", 3.0)).toDF("k", "v"), dir, "k")
+    val evicted = intercept[IllegalStateException] {
+      MergeByKey.readVersion(spark, dir, 0L)
+    }
+    assert(evicted.getMessage.contains("retain window"), evicted.getMessage)
+    assert(MergeByKey.readCommitted(spark, dir).count() == 3)
+  }
+
+  test("pinned snapshot: a store deleted and recreated at the same path " +
+    "reads the new rows at the same version number") {
+    val dir = Files.createTempDirectory("graft_pin_recreate").toString + "/t"
+    MergeByKey.upsert(spark, Seq(("A", 1.0)).toDF("k", "v"), dir, "k")
+    assert(MergeByKey.readCommitted(spark, dir).rowsSet == Set(Seq("A", 1.0)))
+    val root = new org.apache.hadoop.fs.Path(dir)
+    root.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(root, true)
+    MergeByKey.upsert(spark, Seq(("Z", 9.0)).toDF("k", "v"), dir, "k")
+    assert(MergeByKey.committedVersion(spark, dir) === Some(0L))
+    assert(MergeByKey.readCommitted(spark, dir).rowsSet == Set(Seq("Z", 9.0)))
+  }
+
+  test("pinned snapshot: a commit drops every pin of its path, whichever " +
+    "session read it") {
+    val dir = Files.createTempDirectory("graft_pin_drop").toString + "/t"
+    val other = spark.newSession()
+    MergeByKey.upsert(spark, Seq(("A", 1.0)).toDF("k", "v"), dir, "k")
+    MergeByKey.readCommitted(spark, dir)
+    MergeByKey.readCommitted(other, dir)
+    assert(MergeByKey.pinnedVersion(spark, dir) === Some(0L))
+    assert(MergeByKey.pinnedVersion(other, dir) === Some(0L))
+    MergeByKey.upsert(other, other.createDataFrame(Seq(("B", 2.0))).toDF("k", "v"),
+      dir, "k")
+    assert(MergeByKey.pinnedVersion(spark, dir) === None)
+    assert(MergeByKey.pinnedVersion(other, dir) === None)
+    assert(MergeByKey.readCommitted(spark, dir).rowsSet ==
+      Set(Seq("A", 1.0), Seq("B", 2.0)))
+    assert(MergeByKey.pinnedVersion(spark, dir) === Some(1L))
+  }
+
+  test("pinned snapshot: two threads reading and responding over one pin " +
+    "both get correct envelopes") {
+    import graft.serve.Screeners
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val dir = Files.createTempDirectory("graft_pin_serve").toString + "/t"
+    val rows = (1 to 30).map(i => (f"S$i%02d",
+      if (i % 2 == 0) "Large Cap" else "Small Cap", i.toDouble, (31 - i).toDouble))
+    MergeByKey.upsert(spark, rows.toDF("symbol", "market_cap_category",
+      "composite_score", "fundamental_score"), dir, "symbol")
+    def body(name: String) =
+      Screeners.respond(spark, name, MergeByKey.readCommitted(spark, dir))
+        .replaceAll("\"timestamp\":\"[^\"]*\"", "")
+    val expected = Seq("btst", "position").map(n => n -> body(n)).toMap
+    assert(expected("btst").contains("\"count\":20,") &&
+      expected("btst").contains("\"symbol\":\"S30\""), expected("btst"))
+    assert(expected("position").contains("\"symbol\":\"S01\""))
+    val clients = Seq("btst", "position").map { n =>
+      Future((1 to 4).map(_ => body(n)))
+    }
+    clients.zip(Seq("btst", "position")).foreach { case (f, n) =>
+      assert(Await.result(f, 120.seconds).forall(_ == expected(n)), n)
+    }
+  }
+
   test("retention: versions older than the previous are GC'd") {
     val dir = Files.createTempDirectory("graft_gc").toString + "/t"
     MergeByKey.upsert(spark, Seq(("A", 1.0)).toDF("k", "v"), dir, "k")
@@ -116,11 +192,15 @@ class MergeByKeySpec extends SparkSpec {
       MergeByKey.committedVersion(spark, dir)
     }
     assert(eEmpty.getMessage.contains("corrupt manifest"))
-    handWrite("vNaN")
-    val eBad = intercept[IllegalStateException] {
-      MergeByKey.committedVersion(spark, dir)
+    // writers only write versions >= 0 as plain digits: a sign or an
+    // inner separator is corruption, not a NumberFormatException or v=-3
+    Seq("vNaN", "1-2", "-3").foreach { bad =>
+      handWrite(bad)
+      val eBad = intercept[IllegalStateException] {
+        MergeByKey.committedVersion(spark, dir)
+      }
+      assert(eBad.getMessage.contains("corrupt manifest"), s"'$bad': $eBad")
     }
-    assert(eBad.getMessage.contains("corrupt manifest"))
   }
 
   test("CAS: two racing writers — exactly one wins each version claim, " +

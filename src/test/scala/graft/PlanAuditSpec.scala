@@ -1030,4 +1030,76 @@ class PlanAuditSpec extends SparkSpec {
         s"adding metrics must not add shuffles (tiny=$tiny)")
     }
   }
+
+  /** Spark jobs `body` starts on this thread, counted by a listener on
+    * a fresh job group. A marker job under another group runs after
+    * `body`; the listener bus delivers events in order, so once the
+    * marker's start arrives every job of `body` has been counted. */
+  private def jobsRunBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`marker`) => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the marker job never reached the listener")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a repeat read of an unchanged committed version runs no Spark job; " +
+    "a screener response over it runs one") {
+    import graft.serve.Screeners
+    import graft.sinks.MergeByKey
+    val dir = java.nio.file.Files.createTempDirectory("graft_pin_jobs")
+      .toString + "/t"
+    MergeByKey.upsert(spark, (1 to 30).map(i => (s"S$i", "Large Cap",
+      i.toDouble, i.toDouble)).toDF("symbol", "market_cap_category",
+      "composite_score", "fundamental_score"), dir, "symbol")
+    val first = MergeByKey.readCommitted(spark, dir)
+    var again: org.apache.spark.sql.DataFrame = null
+    val readJobs = jobsRunBy { again = MergeByKey.readCommitted(spark, dir) }
+    assert(readJobs == 0,
+      s"a repeat read of v=0 ran $readJobs jobs: it re-listed the version")
+    assert(again eq first, "the repeat read must reuse the pinned relation")
+    var reply = ""
+    val respondJobs = jobsRunBy { reply = Screeners.respond(spark, "btst", again) }
+    assert(reply.startsWith("{\"success\":true,") && reply.contains("\"count\":20,"),
+      reply)
+    assert(respondJobs == 1, s"a screener response ran $respondJobs jobs")
+  }
+
+  test("pins are bounded per JVM: past maxPins the least recently read " +
+    "store is evicted and its next read lists the version again") {
+    import graft.sinks.MergeByKey
+    import org.apache.commons.io.FileUtils
+    val root = java.nio.file.Files.createTempDirectory("graft_pin_lru").toFile
+    val first = new java.io.File(root, "s0")
+    MergeByKey.upsert(spark, Seq(("A", 1.0)).toDF("k", "v"), first.toString, "k")
+    val stores = first +: (1 to MergeByKey.maxPins).map { i =>
+      val copy = new java.io.File(root, s"s$i")
+      FileUtils.copyDirectory(first, copy)
+      copy
+    }
+    stores.foreach(d => MergeByKey.readCommitted(spark, d.toString))
+    assert(jobsRunBy(MergeByKey.readCommitted(spark, stores.last.toString)) == 0)
+    assert(jobsRunBy(MergeByKey.readCommitted(spark, first.toString)) == 1,
+      "the least recently read of maxPins + 1 stores must have been evicted")
+    FileUtils.deleteDirectory(root)
+  }
 }
