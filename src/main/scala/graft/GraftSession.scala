@@ -2,10 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local session config behind Bench, Verify, WarmBench and
-  * ProbeParts, so the correctness dump and the timing probes run the
-  * same engine settings. `SPARK_GRAFT_CPUS` (else `defaultCpus`) sets
-  * both the local thread count and the shuffle partition count.
+/** The one local session config behind Bench, Verify, WarmBench,
+  * ProbeParts and Explain, so the correctness dump, the timing probes
+  * and the printed plans run the same engine settings.
+  * `SPARK_GRAFT_CPUS` (else `defaultCpus`) sets both the local thread
+  * count and the shuffle partition count. ScaleProbe keeps its own
+  * builder (AQE partition coalescing on): its `SCALE_r*.json` history
+  * was measured under that builder, and switching would break the
+  * series.
   */
 object GraftSession {
   def apply(defaultCpus: Int, logLevel: String): SparkSession = {

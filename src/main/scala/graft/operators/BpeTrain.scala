@@ -166,10 +166,10 @@ object BpeTrain {
         val applied = adopt.foldLeft(col("syms")) {
           case (acc, (l, r, _)) => applyMerge(acc, l, r)
         }
-        // localCheckpoint (the GraphRank loop discipline) — a persist
-        // chain keeps the full 16-pass lineage, and Catalyst re-walks
-        // the ever-deeper plan on every pass; truncating lineage each
-        // pass keeps pass cost flat
+        // localCheckpoint per pass, the [[Iterate]] discipline (why
+        // checkpoint, not persist, is stated there); the pass loop
+        // checkpoints itself because its stop rule is a driver-side
+        // collect, not a state-to-state round
         cur = cur.withColumn("syms", applied).localCheckpoint(true)
       }
     }

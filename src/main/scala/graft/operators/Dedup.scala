@@ -798,17 +798,16 @@ object Dedup {
     * rounds rather than O(diameter) — near-dup clusters are shallow, but
     * a chain of borderline pairs must not serialize the job. Each round
     * is two shuffle joins + one aggregate over (long, long) rows; the
-    * edge list is persisted once, labels roll over round to round.
-    * Labels are eagerly `localCheckpoint`ed every round: the halving
-    * self-join embeds the previous round's LOGICAL PLAN twice, so
-    * without truncation the plan tree grows 2^rounds and Catalyst
-    * itself OOMs stringifying it long before any data pressure (hit at
-    * a 2,000-node chain). Checkpointing replaces the lineage with the
-    * materialized rows — the standard iterative-graph pattern; swap to
-    * reliable `checkpoint` (HDFS dir) when executor loss must be
-    * survivable mid-computation. Deterministic: min is order-free.
-    * Converged when no label improves; `maxIter` bounds the worst case
-    * (a 2^maxIter-diameter chain). */
+    * edge list is persisted once, labels roll over round to round
+    * through [[Iterate.untilStable]] (the halving self-join embeds the
+    * previous round's plan twice, so the per-round checkpoint is what
+    * keeps the plan from growing 2^rounds). Deterministic: min is
+    * order-free. Converged when a round leaves (count, Σ label)
+    * unchanged: labels only decrease, so an unchanged sum is unchanged
+    * labels, i.e. the propagation fixpoint (halving is the identity
+    * there). `maxIter` bounds the label-changing rounds (a
+    * 2^maxIter-diameter chain); the confirming no-op round after them
+    * is always allowed. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 20): DataFrame = {
     import org.apache.spark.storage.StorageLevel
@@ -823,53 +822,36 @@ object Dedup {
       .distinct()
       .repartition(col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("src").as("node")).distinct()
+    val labels0 = edges.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("comp"))
-      .localCheckpoint(true)
-    var iter = 0
-    var converged = false
-    // <= maxIter: convergence is only ever OBSERVED one round after the
-    // last improvement (the delta test runs at the top), so a graph
-    // whose labels settle exactly on round maxIter needs the confirming
-    // no-op round maxIter+1 — without it, a correct result would throw.
-    while (!converged && iter <= maxIter) {
+    // A silent non-converged return would hand back labels where one
+    // component carries several ids — keepRepresentatives would then
+    // under-dedup with no signal. Fail loudly instead; the default
+    // maxIter=20 covers any diameter up to ~2^20. maxIter + 1 rounds:
+    // a graph whose labels settle on round maxIter needs the
+    // confirming no-op round after it.
+    val (labels, _) = try Iterate.untilStable(labels0, maxIter + 1,
+        s"connectedComponents (maxIter = $maxIter)") { (labels, _) =>
       val nbrMin = edges
         .join(labels.select(col("node").as("dst"), col("comp").as("ncomp")), "dst")
         .groupBy(col("src")).agg(min(col("ncomp")).as("nmin"))
         .withColumnRenamed("src", "node")
-      val joined = labels.join(nbrMin, Seq("node"), "left")
-        .select(col("node"), col("comp"),
-          coalesce(col("nmin"), col("comp")).as("nm"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // Convergence = min-propagation fixpoint: no neighbor improves any
-      // label. (Path halving below only accelerates; at the propagation
-      // fixpoint labels are component-constant, so halving is identity —
-      // testing the delta here saves a halved-vs-old join per round.)
-      converged = joined.filter(col("nm") < col("comp")).isEmpty
-      if (!converged) {
-        val propagated = joined
-          .select(col("node"), least(col("comp"), col("nm")).as("comp"))
-        // path halving: comp := comp's comp (labels always point at
-        // nodes); eager localCheckpoint materializes AND truncates the
-        // doubled plan (see scaladoc) — superseded checkpoint blocks are
-        // reclaimed by the ContextCleaner once dereferenced
-        labels = propagated
-          .join(propagated.select(col("node").as("comp"), col("comp").as("comp2")),
-            Seq("comp"), "left")
-          .select(col("node"), coalesce(col("comp2"), col("comp")).as("comp"))
-          .localCheckpoint(true)
-      }
-      joined.unpersist(blocking = false)
-      iter += 1
-    }
-    edges.unpersist(blocking = false)
-    // A silent non-converged return would hand back labels where one
-    // component carries several ids — keepRepresentatives would then
-    // under-dedup with no signal. Fail loudly instead; the default
-    // maxIter=20 covers any diameter up to ~2^20.
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge within $maxIter rounds — " +
-        "raise maxIter (component diameter exceeds the halving horizon)")
+      // a round-scoped persist: the halving self-join reads it twice,
+      // and without the cache each side re-ran the propagation
+      // (perfbench neardup_nightly on a 4-vCPU box: a delta night's
+      // merge took ~1.6 s without it, ~1.1 s with it)
+      val propagated = graft.Caches.register(labels
+        .join(nbrMin, Seq("node"), "left")
+        .select(col("node"),
+          least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"))
+        .persist(StorageLevel.MEMORY_AND_DISK))
+      // path halving: comp := comp's comp (labels always point at nodes)
+      propagated
+        .join(propagated.select(col("node").as("comp"), col("comp").as("comp2")),
+          Seq("comp"), "left")
+        .select(col("node"), coalesce(col("comp2"), col("comp")).as("comp"))
+    }(count(lit(1)), sum(col("comp").cast("decimal(38,0)")))
+    finally edges.unpersist(blocking = false)
     labels.select(col("node"), col("comp").as("component"))
   }
 

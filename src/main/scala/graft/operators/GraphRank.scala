@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   * fixed `iterations` rounds shuffles only the (node, rank) table into
   * the join and one groupBy(dst) aggregate; rank state is two longs per
   * node. Fixed iteration count (PageRank converges geometrically at
-  * rate d; 5–10 rounds order the head of any real graph), each round
-  * localCheckpoint-ed so lineage stays flat.
+  * rate d; 5–10 rounds order the head of any real graph). Every loop
+  * here runs its rounds through [[Iterate]].
   */
 object GraphRank {
 
@@ -236,8 +236,7 @@ object GraphRank {
     * series, which truncation sidesteps.
     *
     * Shape at scale: the [[pageRank]] discipline — edges distinct +
-    * repartitioned once, per-round one equi-join + one aggregate,
-    * labels localCheckpoint'ed so the plan does not double. */
+    * repartitioned once, per-round one equi-join + one aggregate. */
   def katzCentrality(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 3, attNum: Long = 1L, attDen: Long = 2L)
       : DataFrame = {
@@ -254,21 +253,18 @@ object GraphRank {
       e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node"))).distinct()
         .persist(StorageLevel.MEMORY_AND_DISK))
-    var x = nodes.select(col("node"), lit(1000000L).as("x__"))
-      .localCheckpoint(true)
-    val rounds = (1 to iterations).map { _ =>
+    val x0 = nodes.select(col("node"), lit(1000000L).as("x__"))
+    val xs = Iterate.rounds(x0, iterations) { (x, _) =>
       val inSum = e.join(x.select(col("node").as("src"), col("x__")),
           "src")
         .groupBy(col("dst").as("node"))
         .agg(sum(col("x__")).cast("long").as("s__"))
-      x = nodes.join(inSum, Seq("node"), "left")
+      nodes.join(inSum, Seq("node"), "left")
         .select(col("node"), call_function("div",
           lit(attNum) * coalesce(col("s__"), lit(0L)), lit(attDen))
           .as("x__"))
-        .localCheckpoint(true)
-      x
     }
-    rounds.reduce(_ unionByName _)
+    xs.tail.reduce(_ unionByName _)
       .groupBy(col("node"))
       .agg(sum(col("x__")).cast("long").as("katz_e6"))
   }
@@ -427,22 +423,28 @@ object GraphRank {
         .union(e.select(col("dst").as("node"))).distinct()
         .persist(StorageLevel.MEMORY_AND_DISK))
     val base = (dampDen - dampNum) * 1000000L
-    var ranks = nodes.select(col("node"), lit(1000000L).as("rank_e6"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iterations) {
-      val contrib = e
-        .join(ranks.select(col("node").as("src"), col("rank_e6")), "src")
-        .select(col("dst"), expr("rank_e6 div deg").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("in_mass"))
-      ranks = nodes
-        .join(contrib.withColumnRenamed("dst", "node"), Seq("node"), "left")
-        .select(col("node"),
-          expr(s"($base + $dampNum * coalesce(in_mass, 0)) div $dampDen")
-            .as("rank_e6"))
-        .localCheckpoint(true)
-    }
-    ranks
+    rankRounds(e, nodes, lit(1000000L), iterations,
+      expr("rank_e6 div deg"),
+      expr(s"($base + $dampNum * coalesce(in_mass, 0)) div $dampDen"))
   }
+
+  /** The integer ladder [[pageRank]] and its variants share: `init`
+    * over `nodes`, then per round each edge of `e` (src, dst, ...)
+    * carries `contrib` (over `rank_e6` of its src) into `in_mass` of its
+    * dst, and every node takes `update` (over `nodes`' columns and
+    * `in_mass`) as its next `rank_e6`. Returns (node, rank_e6). */
+  private def rankRounds(e: DataFrame, nodes: DataFrame, init: Column,
+      iterations: Int, contrib: Column, update: Column): DataFrame =
+    Iterate.rounds(nodes.select(col("node"), init.as("rank_e6")),
+        iterations) { (ranks, _) =>
+      val mass = e
+        .join(ranks.select(col("node").as("src"), col("rank_e6")), "src")
+        .select(col("dst"), contrib.as("c"))
+        .groupBy(col("dst")).agg(sum(col("c")).as("in_mass"))
+      nodes
+        .join(mass.withColumnRenamed("dst", "node"), Seq("node"), "left")
+        .select(col("node"), update.as("rank_e6"))
+    }.last
 
   /** WEIGHTED PageRank — [[pageRank]] with per-edge weights: each
     * node's rank mass splits across out-edges proportionally to
@@ -455,9 +457,8 @@ object GraphRank {
     *
     * Shape at scale: identical to [[pageRank]] — cached weighted edge
     * list repartitioned by src, one join + map-side-combinable
-    * aggregate per round, localCheckpoint truncation between rounds;
-    * the per-edge product runs in DECIMAL(38,0) (rank·weight can
-    * exceed long at web scale). */
+    * aggregate per round; the per-edge product runs in DECIMAL(38,0)
+    * (rank·weight can exceed long at web scale). */
   def weightedPageRank(edges: DataFrame, srcCol: String,
       dstCol: String, weightCol: String, iterations: Int = 5,
       dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
@@ -482,23 +483,10 @@ object GraphRank {
         .union(e.select(col("dst").as("node"))).distinct()
         .persist(StorageLevel.MEMORY_AND_DISK))
     val base = (dampDen - dampNum) * 1000000L
-    var ranks = nodes.select(col("node"), lit(1000000L).as("rank_e6"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iterations) {
-      val contrib = e
-        .join(ranks.select(col("node").as("src"), col("rank_e6")), "src")
-        .select(col("dst"),
-          expr("(cast(rank_e6 as decimal(38,0)) * wgt__) div outw__")
-            .cast("long").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("in_mass"))
-      ranks = nodes
-        .join(contrib.withColumnRenamed("dst", "node"), Seq("node"), "left")
-        .select(col("node"),
-          expr(s"($base + $dampNum * coalesce(in_mass, 0)) div $dampDen")
-            .as("rank_e6"))
-        .localCheckpoint(true)
-    }
-    ranks
+    rankRounds(e, nodes, lit(1000000L), iterations,
+      expr("(cast(rank_e6 as decimal(38,0)) * wgt__) div outw__")
+        .cast("long"),
+      expr(s"($base + $dampNum * coalesce(in_mass, 0)) div $dampDen"))
   }
 
   /** PERSONALIZED PageRank — [[pageRank]] with the teleport mass
@@ -514,8 +502,8 @@ object GraphRank {
     * and are still emitted (the full-node surface [[pageRank]] emits).
     *
     * Shape at scale: identical to [[pageRank]] (cached edge list, one
-    * join + one map-side-combinable aggregate per round,
-    * localCheckpoint truncation) plus one broadcast seed membership
+    * join + one map-side-combinable aggregate per round) plus one
+    * broadcast seed membership
     * join at init and in the update's seed indicator. */
   def personalizedPageRank(edges: DataFrame, srcCol: String,
       dstCol: String, seeds: DataFrame, seedCol: String,
@@ -544,23 +532,10 @@ object GraphRank {
           coalesce(col("is_seed__"), lit(0L)).as("is_seed__"))
         .persist(StorageLevel.MEMORY_AND_DISK))
     val base = (dampDen - dampNum) * 1000000L
-    var ranks = nodes
-      .select(col("node"), (col("is_seed__") * 1000000L).as("rank_e6"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iterations) {
-      val contrib = e
-        .join(ranks.select(col("node").as("src"), col("rank_e6")), "src")
-        .select(col("dst"), expr("rank_e6 div deg").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("in_mass"))
-      ranks = nodes
-        .join(contrib.withColumnRenamed("dst", "node"), Seq("node"),
-          "left")
-        .select(col("node"),
-          expr(s"(is_seed__ * $base + $dampNum * coalesce(in_mass, 0))" +
-            s" div $dampDen").as("rank_e6"))
-        .localCheckpoint(true)
-    }
-    ranks
+    rankRounds(e, nodes, col("is_seed__") * 1000000L, iterations,
+      expr("rank_e6 div deg"),
+      expr(s"(is_seed__ * $base + $dampNum * coalesce(in_mass, 0))" +
+        s" div $dampDen"))
   }
 
   /** HITS hubs & authorities (Kleinberg) — [[pageRank]]'s bipartite
@@ -574,8 +549,7 @@ object GraphRank {
     *
     * Shape at scale: identical to [[pageRank]] — cached distinct edge
     * list, per-iteration one join + map-side-combinable aggregate per
-    * side, a 1-row broadcast for each normalizer, `localCheckpoint`
-    * truncating the loop. */
+    * side, a 1-row broadcast for each normalizer. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 3): DataFrame = {
     require(iterations >= 1, "need iterations >= 1")
@@ -606,31 +580,25 @@ object GraphRank {
           expr("(cast(coalesce(raw__, 0) as decimal(38,0)) * 1000000)" +
             " div t__").as("s_e6"))
     }
-    var hubs = srcs.select(col("node"), lit(1000000L).as("s_e6"))
-      .localCheckpoint(true)
-    var auths: DataFrame = null
-    for (_ <- 1 to iterations) {
-      // each half-step's raw in-mass is PERSISTED before normalize:
-      // normalize reads its input twice (the 1-row total aggregate
-      // broadcast AND the zero-fill probe join), so without the cache
-      // the edge join + aggregate ran twice per half-step — measured
-      // r21: 5.9 s -> ~4.4 s with the persist. (The r20 attempt to
-      // drop the eager checkpoints instead made it WORSE — leaving
-      // auths lazy re-evaluated its subtree ~4x per iteration,
-      // 5.5 s -> 9.4 s — so both half-steps still checkpoint.)
-      val aRaw = graft.Caches.register(e
-        .join(hubs.select(col("node").as("src"), col("s_e6")), "src")
-        .groupBy(col("dst")).agg(sum(col("s_e6")).as("raw__"))
-        .withColumnRenamed("dst", "node")
+    // 2·iterations half-step rounds: odd rounds turn hubs into
+    // authorities, even rounds authorities into hubs
+    val ladder = Iterate.rounds(
+        srcs.select(col("node"), lit(1000000L).as("s_e6")),
+        2 * iterations) { (s, round) =>
+      val (from, to, all) =
+        if (round % 2 == 1) ("src", "dst", dsts) else ("dst", "src", srcs)
+      // the raw in-mass is a round-scoped persist: normalize reads it
+      // twice (the 1-row total broadcast AND the zero-fill probe join),
+      // so without the cache the edge join + aggregate ran twice per
+      // half-step (measured r21: 5.9 s -> ~4.4 s with the persist)
+      val raw = graft.Caches.register(e
+        .join(s.select(col("node").as(from), col("s_e6")), from)
+        .groupBy(col(to)).agg(sum(col("s_e6")).as("raw__"))
+        .withColumnRenamed(to, "node")
         .persist(StorageLevel.MEMORY_AND_DISK))
-      auths = normalize(aRaw, dsts).localCheckpoint(true)
-      val hRaw = graft.Caches.register(e
-        .join(auths.select(col("node").as("dst"), col("s_e6")), "dst")
-        .groupBy(col("src")).agg(sum(col("s_e6")).as("raw__"))
-        .withColumnRenamed("src", "node")
-        .persist(StorageLevel.MEMORY_AND_DISK))
-      hubs = normalize(hRaw, srcs).localCheckpoint(true)
+      normalize(raw, all)
     }
+    val (auths, hubs) = (ladder(ladder.size - 2), ladder.last)
     hubs.select(col("node"), lit("hub").as("kind"),
         col("s_e6").as("score_e6"))
       .unionByName(auths.select(col("node"), lit("auth").as("kind"),
@@ -651,8 +619,7 @@ object GraphRank {
     * and one map-side-combinable min — after round t every node at
     * true distance ≤ t is final (monotone convergence; extra rounds
     * are no-ops), so the fixed unrolling is exact, mirrored by the
-    * oracle's unrolled CTE. Each round `localCheckpoint`s to keep
-    * lineage flat (the [[pageRank]] discipline). The distance table
+    * oracle's unrolled CTE. The distance table
     * only ever holds REACHED nodes — on a corpus-scale graph with a
     * small seed set, state is the k-hop ball, not the node set. */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
@@ -667,10 +634,9 @@ object GraphRank {
       .distinct()
       .repartition(col("u"))
       .persist(StorageLevel.MEMORY_AND_DISK))
-    var dist = seeds.select(col(seedCol).cast("long").as("node"))
+    val dist0 = seeds.select(col(seedCol).cast("long").as("node"))
       .distinct()
       .select(col("node"), lit(0L).as("hops"))
-      .localCheckpoint(true)
     // FRONTIER relaxation (r20, guide §1.2): with unit edge weights a
     // node's shortest path enters through a node discovered exactly
     // one round earlier, so only the rows whose FINAL hops equal the
@@ -678,17 +644,14 @@ object GraphRank {
     // distance table re-expanded every settled node's neighborhood
     // once per remaining round (the round-h expansion was |ball(h)|·deg
     // instead of |sphere(h)|·deg) for identical min-agg output.
-    var frontier = dist
-    for (h <- 1 to maxHops) {
+    Iterate.rounds(dist0, maxHops) { (dist, h) =>
       val relaxed = adj
-        .join(frontier.select(col("node").as("u")), "u")
+        .join(dist.filter(col("hops") === (h - 1).toLong)
+          .select(col("node").as("u")), "u")
         .select(col("v").as("node"), lit(h.toLong).as("hops"))
-      dist = dist.union(relaxed)
+      dist.union(relaxed)
         .groupBy(col("node")).agg(min(col("hops")).as("hops"))
-        .localCheckpoint(true)
-      frontier = dist.filter(col("hops") === h.toLong)
-    }
-    dist
+    }.last
   }
 
   /** HARMONIC CENTRALITY within a hop horizon, per LANDMARK — for each
@@ -720,25 +683,22 @@ object GraphRank {
       .distinct()
       .repartition(col("u"))
       .persist(StorageLevel.MEMORY_AND_DISK))
-    var dist = seeds.select(col(seedCol).cast("long").as("seed"))
+    val dist0 = seeds.select(col(seedCol).cast("long").as("seed"))
       .distinct()
       .select(col("seed"), col("seed").as("node"), lit(0L).as("hops"))
-      .localCheckpoint(true)
     // frontier relaxation with the seed dimension riding along — see
     // [[bfsHops]] (r20): only (seed, node) rows first discovered in
     // the previous round expand; settled rows re-expanding changed
     // nothing through the min-agg but paid |ball|·deg per round.
-    var frontier = dist
-    for (h <- 1 to maxHops) {
+    val dist = Iterate.rounds(dist0, maxHops) { (dist, h) =>
       val relaxed = adj
-        .join(frontier.select(col("seed"), col("node").as("u")), "u")
+        .join(dist.filter(col("hops") === (h - 1).toLong)
+          .select(col("seed"), col("node").as("u")), "u")
         .select(col("seed"), col("v").as("node"),
           lit(h.toLong).as("hops"))
-      dist = dist.union(relaxed)
+      dist.union(relaxed)
         .groupBy(col("seed"), col("node")).agg(min(col("hops")).as("hops"))
-        .localCheckpoint(true)
-      frontier = dist.filter(col("hops") === h.toLong)
-    }
+    }.last
     dist.filter(col("node") =!= col("seed"))
       .groupBy(col("seed").as("node"))
       .agg(count(lit(1)).as("n_reached"),
@@ -761,8 +721,7 @@ object GraphRank {
     *
     * Shape at scale: the cached undirected edge list re-joins the
     * shrinking alive set each round (two hash joins + one
-    * map-side-combinable degree count per round, the [[pageRank]]
-    * loop discipline, alive set `localCheckpoint`ed); no windows, no
+    * map-side-combinable degree count per round); no windows, no
     * driver state. */
   def kCore(pairs: DataFrame, aCol: String, bCol: String, k: Int,
       rounds: Int): DataFrame = {
@@ -774,21 +733,18 @@ object GraphRank {
       .filter(col("u") =!= col("v"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK))
-    var alive = e.select(col("u").as("node"))
+    val alive0 = e.select(col("u").as("node"))
       .union(e.select(col("v").as("node"))).distinct()
-      .localCheckpoint(true)
-    var deg: DataFrame = null
-    for (_ <- 1 to rounds) {
+    // the state is the alive set; after round 1 it carries the
+    // surviving degrees too, which the last round returns
+    Iterate.rounds(alive0, rounds) { (alive, _) =>
       val ea = e
         .join(alive.select(col("node").as("u")), "u")
         .join(alive.select(col("node").as("v")), "v")
-      deg = ea.select(explode(array(col("u"), col("v"))).as("node"))
+      ea.select(explode(array(col("u"), col("v"))).as("node"))
         .groupBy(col("node")).agg(count(lit(1)).as("degree"))
         .filter(col("degree") >= k.toLong)
-        .localCheckpoint(true)
-      alive = deg.select(col("node"))
-    }
-    deg
+    }.last
   }
 
   /** k-TRUSS decomposition by iterative edge peeling — the EDGE-level
@@ -801,21 +757,23 @@ object GraphRank {
     * monotone (edge sets only shrink), a round that leaves the edge
     * count unchanged left the edge SET unchanged, and every later
     * round is a no-op — so the first stable round IS convergence,
-    * detected from the count the per-round localCheckpoint already
-    * materializes (r17 verdict #4: a fixed `rounds` contract relied on
+    * detected from the edge count observed in the round's own
+    * checkpoint ([[Iterate.untilStable]]; r17 verdict #4: a fixed
+    * `rounds` contract relied on
     * rounds ≥ peel depth being asserted but never detected; peel
     * cascades — e.g. a triangle strip under k=4 unravels one edge pair
     * per round — make any fixed horizon a silent wrong answer).
     * `maxRounds` is a safety cap only: exceeding it throws rather than
     * returning an unconverged edge set. Termination is guaranteed —
-    * every non-final round removes at least one edge — so the DEFAULT
-    * cap (`maxRounds = 0` = auto) is initial edge count + 1, the true
-    * termination bound: a legitimate long-diameter peel cascade (the
-    * k=4 triangle strip unravels one edge pair per round) can never
-    * trip it, while a broken shrink-monotonicity still fails loudly
-    * (r18 ADVICE: a fixed 64-round default threw on large legitimate
-    * inputs whose cascade depth scales with graph diameter). Pass an
-    * explicit positive `maxRounds` to bound wall time instead.
+    * each round's edges are an inner join against the previous
+    * round's, so every non-final round removes at least one edge and
+    * initial edge count + 1 rounds always suffice — so the DEFAULT
+    * (`maxRounds = 0` = auto) sets no cap: a legitimate long-diameter
+    * peel cascade (the k=4 triangle strip unravels one edge pair per
+    * round) can never trip it (r18 ADVICE: a fixed 64-round default
+    * threw on large legitimate inputs whose cascade depth scales with
+    * graph diameter). Pass an explicit positive `maxRounds` to bound
+    * wall time instead; it counts the confirming round.
     *
     * Support counting: each wedge (c; x<y) over the directed double
     * cover closes against the canonical edge list exactly when (x,y)
@@ -830,47 +788,35 @@ object GraphRank {
     * Shape at scale: per round one self-join on the wedge center (the
     * degree² expansion every triangle algorithm pays — cap hub degrees
     * upstream the q317/q330 way when the graph has them), one
-    * canonical-edge equi-join, one count; edge sets localCheckpoint'ed
-    * between rounds like every iterative ladder here. */
+    * canonical-edge equi-join, one count. */
   def kTruss(pairs: DataFrame, aCol: String, bCol: String, k: Int,
       maxRounds: Int = 0): DataFrame = {
     require(k >= 3 && maxRounds >= 0, "need k >= 3 and maxRounds >= 0")
-    var e = pairs
+    val e0 = pairs
       .select(least(col(aCol), col(bCol)).as("u"),
         greatest(col(aCol), col(bCol)).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-      .localCheckpoint(true)
-    var out = e.select(col("u"), col("v"), lit(0L).as("support"))
-    var prev = e.count()
-    // auto cap = the termination bound (every non-final round removes
-    // >= 1 edge), so only broken monotonicity can trip it
-    val cap = if (maxRounds > 0) maxRounds.toLong else prev + 1L
-    var round = 0
-    // a no-op round (count unchanged under shrink-only peeling) is the
-    // fixpoint; the confirming round also computes the final supports
-    while (prev > 0L) {
-      round += 1
-      if (round > cap) throw new IllegalStateException(
-        s"kTruss did not converge within $cap peel rounds " +
-          s"($prev edges still shrinking) — raise maxRounds")
-      val und = e.select(col("u"), col("v"))
-        .union(e.select(col("v").as("u"), col("u").as("v")))
+      .select(col("u"), col("v"), lit(0L).as("support"))
+    // the edge count witnesses the fixpoint: every round's edges are an
+    // inner join against the previous round's, so the set only shrinks
+    // and an unchanged count is an unchanged set; the confirming round
+    // also computes the final supports. Shrinking by >= 1 edge per
+    // non-final round also bounds the rounds by |edges| + 1, so the auto
+    // cap (maxRounds = 0) never trips.
+    Iterate.untilStable(e0,
+        if (maxRounds > 0) maxRounds else Int.MaxValue, "kTruss") { (s, _) =>
+      val e = s.select(col("u"), col("v"))
+      val und = e.union(e.select(col("v").as("u"), col("u").as("v")))
       val wedges = und.as("a").join(und.as("b"),
           col("a.u") === col("b.u") && col("a.v") < col("b.v"))
         .select(col("a.v").as("x"), col("b.v").as("y"))
-      out = wedges
+      wedges
         .join(e.select(col("u").as("x"), col("v").as("y")), Seq("x", "y"))
         .groupBy(col("x").as("u"), col("y").as("v"))
         .agg(count(lit(1)).as("support"))
         .filter(col("support") >= (k - 2).toLong)
-        .localCheckpoint(true)
-      e = out.select(col("u"), col("v"))
-      val n = out.count()
-      if (n == prev) return out
-      prev = n
-    }
-    out
+    }(count(lit(1)))._1
   }
 
   /** Degree ASSORTATIVITY of an undirected edge list — Pearson r
@@ -929,9 +875,8 @@ object GraphRank {
     *
     * Shape at scale: registers live as (node, bucket, rho) rows —
     * ≤ 16 per node; each round is one adjacency equi-join + one
-    * map-side-combinable max aggregate on (node, bucket), the
-    * [[pageRank]] loop discipline with localCheckpoint between
-    * rounds. No windows, no per-node arrays to skew a partition. */
+    * map-side-combinable max aggregate on (node, bucket). No windows,
+    * no per-node arrays to skew a partition. */
   def hyperBall(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int = 3): DataFrame =
     hyperBallRegisterLadder(edges, srcCol, dstCol, rounds).last._2
@@ -946,7 +891,8 @@ object GraphRank {
   /** [[hyperBallRegisterLadder]] plus the number of merge rounds
     * actually COMPUTED — the register merge is monotone (rows are
     * never removed, each (node, bucket) rho only grows), so a round
-    * that leaves (row count, Σrho) unchanged left the register SET
+    * that leaves (row count, Σrho) — observed in the round's own
+    * checkpoint ([[Iterate.rounds]]) — unchanged left the register SET
     * unchanged and every later round is a no-op: the ladder stops
     * joining at that fixed point and reuses the stable state for the
     * remaining radii (the kTruss r18 self-detection discipline — a
@@ -980,49 +926,28 @@ object GraphRank {
       .otherwise(zlen.cast("long") * 4L +
         when(d1 >= 8L, 0L).when(d1 >= 4L, 1L)
           .when(d1 >= 2L, 2L).otherwise(3L) + 1L)
-    var regs = nodes
+    val regs0 = nodes
       .select(col("node"),
         conv(substring(h, 1, 1), 16, 10).cast("long").as("bucket"),
         rho.as("rho"))
-      .localCheckpoint(true)
     // (row count, Σrho) is a sound fixed-point witness under the
     // monotone merge: count unchanged ⇒ no new (node, bucket) row
     // (rows never vanish), Σrho unchanged on the same rows ⇒ no rho
-    // grew. The regs frame is checkpointed, so this is one cheap
-    // aggregate over materialized rows per round.
-    def signature(r: DataFrame): (Long, Long) = {
-      val row = r.agg(count(lit(1)), coalesce(sum(col("rho")), lit(0L)))
-        .head()
-      (row.getLong(0), row.getLong(1))
-    }
-    var sig = signature(regs)
-    val out = Seq.newBuilder[(Int, DataFrame)]
-    out += 0 -> summarizeRegisters(regs)
-    var computed = 0
-    var fixed = false
-    for (t <- 1 to rounds) {
-      if (!fixed) {
+    // grew.
+    val ladder = Iterate.rounds(regs0, rounds,
+        Seq(count(lit(1)), coalesce(sum(col("rho")), lit(0L)))) {
+      (regs, _) =>
         val prop = adj
           .join(regs.select(col("node").as("u"), col("bucket"),
             col("rho")), "u")
           .select(col("v").as("node"), col("bucket"), col("rho"))
-        regs = regs.union(prop)
+        regs.union(prop)
           .groupBy(col("node"), col("bucket"))
           .agg(max(col("rho")).as("rho"))
-          .localCheckpoint(true)
-        computed += 1
-        // the signature only gates LATER rounds — on the final round
-        // there are none, so the fixed-point probe would be a wasted
-        // aggregate job (r21; `computed` counts merges, not probes)
-        if (t < rounds) {
-          val next = signature(regs)
-          if (next == sig) fixed = true
-          sig = next
-        }
-      }
-      out += t -> summarizeRegisters(regs)
     }
-    (out.result(), computed)
+    val computed = ladder.size - 1
+    ((0 to rounds).map(t =>
+      t -> summarizeRegisters(ladder(math.min(t, computed)))), computed)
   }
 
   /** (node, n_set, sum_rho, nf_raw_e6) from (node, bucket, rho) rows —

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * into the edges, one (node, label) count aggregate — map-side
   * combinable — and one per-node argmax window over the distinct
   * candidate labels (bounded by label cardinality, not corpus size).
-  * Rounds localCheckpoint so lineage stays flat.
+  * Rounds run through [[Iterate]].
   */
 object LabelProp {
 
@@ -45,9 +45,9 @@ object LabelProp {
       .select(col(nodeCol).cast("long").as("node"),
         col(labelCol).cast("long").as("seed"))
       .persist(StorageLevel.MEMORY_AND_DISK))
-    var cur = seeds.select(col("node"), col("seed").as("label"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iterations) {
+    val cur = Iterate.rounds(
+        seeds.select(col("node"), col("seed").as("label")),
+        iterations) { (cur, _) =>
       val votes = und
         .join(cur.filter(col("label").isNotNull)
           .select(col("node").as("dst"), col("label").as("nl")), "dst")
@@ -58,11 +58,10 @@ object LabelProp {
           .orderBy(col("v").desc, col("nl").asc)))
         .filter(col("rn") === 1)
         .select(col("src").as("node"), col("nl").as("best"))
-      cur = seeds
+      seeds
         .join(best, Seq("node"), "left")
         .select(col("node"), coalesce(col("seed"), col("best")).as("label"))
-        .localCheckpoint(true)
-    }
+    }.last
     cur.select(col("node").as(nodeCol), col("label").as(labelCol))
   }
 }

@@ -216,8 +216,8 @@ object Prototypes {
     * Shape at scale: centroids are k·dims rows — always broadcast; the
     * per-iteration cost is one broadcast join + two map-side-
     * combinable aggregates over the exploded unit stream; the argmin
-    * window partitions by vector (k rows each). `localCheckpoint`
-    * truncates the loop lineage exactly as [[GraphRank.pageRank]]. */
+    * window partitions by vector (k rows each). Rounds run through
+    * [[Iterate]]. */
   /** The shared e6 quantization of an embedding column to exact
     * integer (id, dim, unit) rows — ONE IEEE multiply + round per
     * element, bit-identical across engines; every exact-lineage
@@ -248,10 +248,9 @@ object Prototypes {
       .limit(k)
       .select(col("id__"), (row_number().over(wSeed) - 1).cast("long")
         .as("c"))
-    var centroids = units
+    val centroids0 = units
       .join(seeds, "id__")
       .select(col("c"), col("dim"), col("u__").as("ce6"))
-      .localCheckpoint(true)
     def assignTo(cents: DataFrame): DataFrame = {
       val dists = units.join(broadcast(cents), "dim")
         .groupBy(col("id__"), col("c"))
@@ -263,8 +262,8 @@ object Prototypes {
         .filter(col("rn__") === 1)
         .select(col("id__"), col("c"), col("d2__"))
     }
-    for (_ <- 1 to iterations) {
-      val assign = assignTo(centroids)
+    val centroids = Iterate.rounds(centroids0, iterations) { (cur, _) =>
+      val assign = assignTo(cur)
       val upd = units.join(assign.select(col("id__"), col("c")), "id__")
         .groupBy(col("c"), col("dim"))
         .agg(count(lit(1)).as("n__"),
@@ -272,12 +271,11 @@ object Prototypes {
         .select(col("c"), col("dim"),
           ExactRound.ratioScaledSigned(col("s__"), col("n__"), 0)
             .as("new__"))
-      centroids = centroids
+      cur
         .join(upd, Seq("c", "dim"), "left")
         .select(col("c"), col("dim"),
           coalesce(col("new__"), col("ce6")).as("ce6"))
-        .localCheckpoint(true)
-    }
+    }.last
     val finalAssign = assignTo(centroids)
     val sizes = finalAssign.groupBy(col("c"))
       .agg(count(lit(1)).as("n_members"),
@@ -349,8 +347,7 @@ object Prototypes {
     * BROADCAST to the corpus unit stream each step; per step one
     * map-side-combinable (candidate, selected) distance aggregate, a
     * min per candidate, and a 1-row TakeOrdered argmax. k steps of
-    * linear passes, `localCheckpoint` truncating the loop lineage as
-    * [[kmeansLloyd]]. */
+    * linear passes, the steps run through [[Iterate]]. */
   def kCenterGreedy(emb: DataFrame, idCol: String, vecCol: String,
       k: Int = 5): DataFrame = {
     require(k >= 1, "need k >= 1")
@@ -359,20 +356,18 @@ object Prototypes {
     val units = graft.Caches.register(
       unitsE6(emb, idCol, vecCol)
         .persist(StorageLevel.MEMORY_AND_DISK))
-    var selected = emb.select(col(idCol).cast("long").as("id__"))
+    val first = emb.select(col(idCol).cast("long").as("id__"))
       .orderBy(md5(col("id__").cast("string")).asc, col("id__").asc)
       .limit(1)
       .select(lit(0L).as("step"), col("id__"),
         lit(0L).as("min_d2_e12"))
-      .localCheckpoint(true)
-    for (t <- 1 until k) {
-      val minD = kcMinDist(units, selected)
-      val next = minD
+    val selected = Iterate.rounds(first, k - 1) { (selected, t) =>
+      val next = kcMinDist(units, selected)
         .orderBy(col("md__").desc, col("id__").asc).limit(1)
         .select(lit(t.toLong).as("step"), col("id__"),
           col("md__").cast("long").as("min_d2_e12"))
-      selected = selected.unionByName(next).localCheckpoint(true)
-    }
+      selected.unionByName(next)
+    }.last
     selected.select(col("step"), col("id__").as(idCol),
       col("min_d2_e12"))
   }

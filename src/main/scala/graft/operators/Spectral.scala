@@ -50,9 +50,8 @@ object Spectral {
   }
 
   private def iterate(x: DataFrame, v0: DataFrame,
-      iterations: Int): DataFrame = {
-    var v = v0.localCheckpoint(true)
-    for (_ <- 1 to iterations) {
+      iterations: Int): DataFrame =
+    Iterate.rounds(v0, iterations) { (v, _) =>
       val dots = x.join(broadcast(v), "dim")
         .groupBy(col("id__"))
         .agg(sum((col("x__").cast(dec) * col("v_e6")).cast(dec))
@@ -62,14 +61,11 @@ object Spectral {
         .agg(sum((col("x__").cast(dec) * col("dot__")).cast(dec))
           .as("w__"))
       val nrm = w.agg(max(abs(col("w__"))).as("nrm__"))
-      v = w.crossJoin(broadcast(nrm))
+      w.crossJoin(broadcast(nrm))
         .select(col("dim"),
           ExactRound.ratioScaledSigned(col("w__"), col("nrm__"), 6)
             .as("v_e6"))
-        .localCheckpoint(true)
-    }
-    v
-  }
+    }.last
 
   /** The top principal direction after `iterations` power steps, one
     * row per dimension, e6-scaled with max-component magnitude 1e6. */

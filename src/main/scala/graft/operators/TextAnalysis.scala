@@ -696,7 +696,7 @@ object TextAnalysis {
     * list is vocabulary²-bounded (far smaller than the corpus),
     * distinct-ed, hash-partitioned by src and persisted once; each
     * round is one join + one aggregate over vocabulary-sized state,
-    * localCheckpoint-ed to keep lineage flat. */
+    * the rounds run through [[Iterate]]. */
   def textRank(df: DataFrame, idCol: String, textCol: String,
       iterations: Int = 5, topK: Int = 20): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -721,23 +721,22 @@ object TextAnalysis {
     val deg = graft.Caches.register(
       edges.groupBy(col("src")).agg(count(lit(1)).as("deg__"))
         .persist(StorageLevel.MEMORY_AND_DISK))
-    var ranks = nodes.select(col("node"), lit(1000000L).as("rank_e6"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iterations) {
+    val ranks = Iterate.rounds(
+        nodes.select(col("node"), lit(1000000L).as("rank_e6")),
+        iterations) { (ranks, _) =>
       val contrib = edges
         .join(ranks.select(col("node").as("src"), col("rank_e6")),
           "src")
         .join(deg, "src")
         .select(col("dst"), expr("rank_e6 div deg__").as("c__"))
         .groupBy(col("dst")).agg(sum(col("c__")).as("in__"))
-      ranks = nodes
+      nodes
         .join(contrib.withColumnRenamed("dst", "node"),
           Seq("node"), "left")
         .select(col("node"),
           expr("(15000000 + 85 * coalesce(in__, 0)) div 100")
             .as("rank_e6"))
-        .localCheckpoint(true)
-    }
+    }.last
     ranks.select(col("node").as("word"), col("rank_e6"))
       .orderBy(col("rank_e6").desc, col("word").asc)
       .limit(topK)

@@ -155,6 +155,21 @@ class DedupSpec extends SparkSpec {
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
   }
 
+  test("connected components: a chain whose labels settle on round " +
+    "maxIter converges (the confirming round maxIter + 1 is allowed); " +
+    "one round less throws") {
+    // chain 1-2-...-8: min-label propagation with path halving changes
+    // labels in exactly 3 rounds (1 reaches 3, then 7, then 8); the 4th
+    // round confirms the fixpoint
+    val chain = (1L to 7L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val cc = Dedup.connectedComponents(chain, "id_a", "id_b", maxIter = 3)
+    assert(cc.rowsSet == (1L to 8L).map(n => Seq[Any](n, 1L)).toSet)
+    val e = intercept[IllegalStateException] {
+      Dedup.connectedComponents(chain, "id_a", "id_b", maxIter = 2)
+    }
+    assert(e.getMessage.contains("did not converge"))
+  }
+
   test("keepRepresentatives keeps min id per cluster plus singletons") {
     val corpus = (1L to 6L).toDF("id")
     val pairs = Seq((2L, 4L), (4L, 5L)).toDF("id_a", "id_b")

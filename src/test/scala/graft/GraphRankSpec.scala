@@ -99,4 +99,20 @@ class GraphRankSpec extends SparkSpec {
     assert(capped == Map((0L, 4L) -> ((1L, 3L, 1L, 333333L))))
     graft.Caches.unpersistAll()
   }
+
+  test("hits leaves as many caches registered at iterations = 4 as at " +
+    "1: each half-step's raw in-mass is released with its round") {
+    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L))
+      .toDF("src", "dst")
+    def cachesAfter(iterations: Int): Int = {
+      graft.Caches.unpersistAll()
+      GraphRank.hits(edges, "src", "dst", iterations).collect()
+      graft.Caches.registered
+    }
+    val one = cachesAfter(1)
+    val four = cachesAfter(4)
+    graft.Caches.unpersistAll()
+    assert(one == four,
+      s"hits left $one caches at iterations = 1 and $four at 4")
+  }
 }

@@ -1062,6 +1062,69 @@ class PlanAuditSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Names of the Dataset actions (`count`, `isEmpty`, `head`,
+    * `localCheckpoint`, ...) that `body` runs in this session, in order.
+    * Listener events arrive asynchronously, so two marker actions
+    * bracket the body: events before the first marker belong to earlier
+    * work, and the second marker proves every event of the body has
+    * been delivered. */
+  private def actionsRunBy(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val tag = java.util.UUID.randomUUID().toString.replace("-", "")
+    val (begin, end) = (s"begin_$tag", s"end_$tag")
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val endSeen = new java.util.concurrent.CountDownLatch(1)
+    @volatile var begun = false
+    def record(funcName: String, qe: QueryExecution): Unit =
+      qe.analyzed.output.map(_.name) match {
+        case Seq(`begin`) => begun = true
+        case Seq(`end`) => endSeen.countDown()
+        case _ => if (begun) names.add(funcName)
+      }
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = record(funcName, qe)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = record(funcName, qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      spark.range(1).toDF(begin).collect()
+      body
+      spark.range(1).toDF(end).collect()
+      assert(endSeen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the end marker never reached the listener")
+      assert(begun, "the begin marker never reached the listener")
+      names.toArray(Array.empty[String]).toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("the fixpoint loops run no action but their rounds' checkpoints: " +
+    "each stop witness is observed in its round's own checkpoint pass") {
+    import graft.operators.{Dedup, GraphRank}
+    val chain = (1L to 7L).map(i => (i, i + 1)).toDF("a", "b")
+    val staged = Seq((1L, 1L), (2L, 1L), (5L, 5L), (6L, 5L))
+      .toDF("node", "component")
+    val delta = Seq((2L, 5L), (6L, 9L)).toDF("a", "b")
+    val k4 = (for (i <- 1L to 4L; j <- (i + 1) to 4L) yield (i, j))
+      .toDF("a", "b")
+    val runs = Seq(
+      "connectedComponents" -> actionsRunBy(
+        Dedup.connectedComponents(chain, "a", "b")),
+      "mergeComponentMap" -> actionsRunBy(
+        Dedup.mergeComponentMap(staged, delta, "a", "b")),
+      "kTruss" -> actionsRunBy(GraphRank.kTruss(k4 union chain, "a", "b", 3)),
+      "hyperBallLadderWithRounds" -> actionsRunBy(
+        GraphRank.hyperBallLadderWithRounds(chain, "a", "b", rounds = 10)))
+    val offenders = runs.filterNot { case (_, actions) =>
+      actions.nonEmpty && actions.forall(_ == "localCheckpoint")
+    }
+    assert(offenders.isEmpty,
+      s"actions other than the rounds' checkpoints: $offenders")
+    Caches.unpersistAll()
+  }
+
   test("a repeat read of an unchanged committed version runs no Spark job; " +
     "a screener response over it runs one") {
     import graft.serve.Screeners
