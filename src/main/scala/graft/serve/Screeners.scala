@@ -1,8 +1,10 @@
 package graft.serve
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.RankOps
+import graft.sinks.MergeByKey
 
 /** §2.11 — the serving surface: named screener queries + JSON emission
   * (S11). The reference's FastAPI server maps screener names to scrape
@@ -11,6 +13,38 @@ import graft.operators.RankOps
   * transformation over `stock_data`+`stock_rankings`-shaped frames, and
   * the emit path is `toJsonRecords` (collect only the final small
   * result — never an intermediate).
+  *
+  * == Single-stage emit ==
+  *
+  * The JSON encoding is a `to_json(struct(*))` projection on the
+  * screener's top-k, so Spark plans `TakeOrderedAndProject` with the
+  * encoding in its driver-side projection: one job of one stage, no
+  * exchange, no adaptive re-plan. Its strings equal `Dataset.toJSON`'s
+  * byte for byte (ScreenersSpec), but `toJSON` maps over the top-k and
+  * so forces a single-partition shuffle and a second stage.
+  *
+  * == Prepared plans over a pinned snapshot ==
+  *
+  * When [[respond]] gets a frame that is a live `MergeByKey` pin (the
+  * very object `readCommitted` returns), it keeps the screener's planned
+  * emit `Dataset` and later requests call `collect()` on it again:
+  * analysis, optimisation, physical planning and codegen are skipped,
+  * while each request still scans the pinned files and recomputes the
+  * top-k. Any other frame is planned anew on every call, so a caller's
+  * `current_timestamp()` is never frozen into a kept plan. Prepared
+  * plans are held weakly by their frame and looked up only while it is
+  * pinned: once a commit or LRU eviction drops the pin, they never
+  * answer again and become unreachable with the frame.
+  *
+  * One prepared plan is never run by two threads at once. The driver-side
+  * projection shares `to_json`'s generator and writer, so threads sharing
+  * one plan get corrupt replies: `{{"symbol":…`, a field written twice,
+  * or a `JsonGenerationException` (MergeByKeySpec's four-thread spec
+  * fails that way). So each (pin, screener) keeps a pool:
+  * a caller takes a plan, or plans one when the pool is empty, and puts
+  * it back after a successful run. The pool never holds more plans than
+  * the peak number of concurrent callers; a run that failed drops its
+  * plan.
   *
   * Auth / rate limiting are HTTP-framework concerns that sit in front of
   * this registry, out of engine scope.
@@ -38,8 +72,35 @@ object Screeners {
 
   /** S11 CSV→JSON emit (`csv_to_json` in the recovered bytecode): one
     * JSON object per row, driver-side only for final small results. */
-  def toJsonRecords(result: DataFrame, limit: Int = 1000): Seq[String] =
-    result.limit(limit).toJSON.collect().toSeq
+  def toJsonRecords(result: DataFrame, limit: Int = maxRecords): Seq[String] =
+    emit(result, limit).collect().toSeq
+
+  /** Records a response carries at most. */
+  private val maxRecords = 1000
+
+  /** The single-stage emit plan of `result` (see "Single-stage emit"). */
+  private def emit(result: DataFrame, limit: Int): Dataset[String] =
+    result.limit(limit).select(to_json(struct(col("*")))).as(Encoders.STRING)
+
+  /** Pools of prepared emit plans: pinned frame → screener → plans not
+    * running right now. Weakly keyed, so a frame's plans go with it. */
+  private val prepared = new java.util.WeakHashMap[DataFrame,
+    ConcurrentHashMap[String, ConcurrentLinkedQueue[Dataset[String]]]]()
+
+  /** The records of screener `name` over `scored`: from a pooled
+    * prepared plan when `scored` is a live pin, else planned anew. */
+  private def records(name: String, fn: DataFrame => DataFrame,
+      scored: DataFrame): Seq[String] =
+    if (!MergeByKey.isPinned(scored)) toJsonRecords(fn(scored))
+    else {
+      val pool = prepared.synchronized(prepared.computeIfAbsent(scored,
+        _ => new ConcurrentHashMap[String, ConcurrentLinkedQueue[Dataset[String]]]()))
+        .computeIfAbsent(name, _ => new ConcurrentLinkedQueue[Dataset[String]]())
+      val plan = Option(pool.poll()).getOrElse(emit(fn(scored), maxRecords))
+      val rows = plan.collect().toSeq
+      pool.offer(plan)
+      rows
+    }
 
   /** Response envelope with the reference's exact `ScreenerResponse`
     * fields, in model order and always present (pydantic serializes
@@ -62,7 +123,7 @@ object Screeners {
   def respond(spark: SparkSession, name: String, scored: DataFrame): String =
     registry.get(name) match {
       case Some(fn) =>
-        try envelope(name, toJsonRecords(fn(scored)), None)
+        try envelope(name, records(name, fn, scored), None)
         catch { case e: Exception =>
           envelope(name, Nil, Some(e.toString))
         }

@@ -65,7 +65,10 @@ import org.apache.spark.sql.functions._
   * of that session's state, reachable until the pin goes: a finished
   * streaming query's per-query clone session lives on while one of its
   * pins is among the 32 most recently used and its path has had no
-  * commit since.
+  * commit since. A pin's frame also keeps the screener plans
+  * `Screeners.respond` prepared over it reachable; `Screeners` uses
+  * them only while the frame is pinned ([[isPinned]]), so a commit or
+  * an eviction retires them with the pin.
   *
   * Crash window: a writer that dies AFTER claiming `v=N+1` but BEFORE
   * flipping the manifest leaves the claim dir orphaned; concurrent
@@ -184,6 +187,10 @@ object MergeByKey {
   /** The version `spark` has pinned for `path`, if any. */
   private[graft] def pinnedVersion(spark: SparkSession, path: String): Option[Long] =
     pins.synchronized(Option(pins.get((spark, path)))).map(_.version)
+
+  /** Whether `df` is, by identity, a frame some pin holds right now. */
+  private[graft] def isPinned(df: DataFrame): Boolean =
+    pins.synchronized(pins.values.stream.anyMatch(_.df eq df))
 
   /** The relation of committed version `v` of `path`: the pinned one
     * when it is for `v` and its data file still exists, else a fresh

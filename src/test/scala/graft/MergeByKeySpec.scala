@@ -142,6 +142,50 @@ class MergeByKeySpec extends SparkSpec {
     }
   }
 
+  test("pinned snapshot: four threads of mixed screener requests over one " +
+    "pin each get the single-threaded envelope, byte for byte") {
+    import graft.serve.Screeners
+    val dir = Files.createTempDirectory("graft_pin_serve4").toString + "/t"
+    val bands = Seq("Large Cap", "Mid Cap", "Small Cap", "Micro Cap")
+    // stock_rankings-shaped rows, wide enough that emitting a reply is
+    // more than a few microseconds of JSON writing
+    val rows = (1 to 200).map(i => (f"SYM$i%05d", bands(i % 4),
+      s"Sector ${i % 20}", s"Industry \"${i % 119}\"", i * 1.25, (i % 41) / 8.0 - 2.5,
+      i * 1000L + 7, if (i % 17 == 0) None else Some((i * 37 % 101).toDouble / 4),
+      if (i % 13 == 0) None else Some((i * 53 % 97).toDouble / 8)))
+    MergeByKey.upsert(spark, rows.toDF("symbol", "market_cap_category",
+      "sector", "industry", "close", "change_pct", "volume",
+      "composite_score", "fundamental_score"), dir, "symbol")
+    val names = Seq("btst", "swing", "position")
+    def body(name: String) =
+      Screeners.respond(spark, name, MergeByKey.readCommitted(spark, dir))
+        .replaceAll("\"timestamp\":\"[^\"]*\"", "")
+    val expected = names.map(n => n -> body(n)).toMap
+    names.foreach(n => assert(expected(n).contains("\"count\":20,"), expected(n)))
+    // lockstep: at each step every thread sends the same screener at once,
+    // so replies of one screener are emitted concurrently as often as can be
+    val (clients, perThread) = (4, 150)
+    val step = new java.util.concurrent.CyclicBarrier(clients)
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = (0 until clients).map { _ =>
+      new Thread(() => {
+        try (0 until perThread).foreach { k =>
+          val n = names(k % names.size)
+          step.await(120, java.util.concurrent.TimeUnit.SECONDS)
+          got.add(n -> body(n))
+        } catch { case e: Throwable => failures.add(e) }
+      })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join(300000))
+    assert(failures.isEmpty, failures)
+    assert(got.size == clients * perThread)
+    val wrong = got.toArray(Array.empty[(String, String)]).toSeq
+      .filterNot { case (n, reply) => reply == expected(n) }
+    assert(wrong.isEmpty, s"${wrong.size} replies differ, e.g. ${wrong.headOption}")
+  }
+
   test("retention: versions older than the previous are GC'd") {
     val dir = Files.createTempDirectory("graft_gc").toString + "/t"
     MergeByKey.upsert(spark, Seq(("A", 1.0)).toDF("k", "v"), dir, "k")

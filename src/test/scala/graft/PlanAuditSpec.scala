@@ -1035,20 +1035,30 @@ class PlanAuditSpec extends SparkSpec {
     * a fresh job group. A marker job under another group runs after
     * `body`; the listener bus delivers events in order, so once the
     * marker's start arrives every job of `body` has been counted. */
-  private def jobsRunBy(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  private def jobsRunBy(body: => Unit): Int = jobsAndStagesRunBy(body)._1
+
+  /** [[jobsRunBy]] with the stages `body`'s jobs submitted; a stage a
+    * job skips (its shuffle output already there) is not counted. */
+  private def jobsAndStagesRunBy(body: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageSubmitted}
     val sc = spark.sparkContext
     val group = s"counted-${java.util.UUID.randomUUID()}"
     val marker = s"$group-marker"
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val stages = new java.util.concurrent.atomic.AtomicInteger()
     val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    def groupOf(props: java.util.Properties) =
+      Option(props).map(_.getProperty("spark.jobGroup.id"))
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+        groupOf(e.properties) match {
           case Some(`group`) => jobs.incrementAndGet()
           case Some(`marker`) => markerSeen.countDown()
           case _ =>
         }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (groupOf(e.properties).contains(group)) stages.incrementAndGet()
     }
     sc.addSparkListener(listener)
     try {
@@ -1058,29 +1068,35 @@ class PlanAuditSpec extends SparkSpec {
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS),
         "the marker job never reached the listener")
-      jobs.get
+      (jobs.get, stages.get)
     } finally sc.removeSparkListener(listener)
   }
 
   /** Names of the Dataset actions (`count`, `isEmpty`, `head`,
-    * `localCheckpoint`, ...) that `body` runs in this session, in order.
-    * Listener events arrive asynchronously, so two marker actions
-    * bracket the body: events before the first marker belong to earlier
-    * work, and the second marker proves every event of the body has
-    * been delivered. */
-  private def actionsRunBy(body: => Unit): Seq[String] = {
+    * `localCheckpoint`, ...) that `body` runs in this session, in order. */
+  private def actionsRunBy(body: => Unit): Seq[String] =
+    executionsRunBy(body).map(_._1)
+
+  /** The Dataset actions `body` runs in this session, in order, each
+    * with the `QueryExecution` it ran. Listener events arrive
+    * asynchronously, so two marker actions bracket the body: events
+    * before the first marker belong to earlier work, and the second
+    * marker proves every event of the body has been delivered. */
+  private def executionsRunBy(body: => Unit)
+      : Seq[(String, org.apache.spark.sql.execution.QueryExecution)] = {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
     val tag = java.util.UUID.randomUUID().toString.replace("-", "")
     val (begin, end) = (s"begin_$tag", s"end_$tag")
-    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val runs =
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
     val endSeen = new java.util.concurrent.CountDownLatch(1)
     @volatile var begun = false
     def record(funcName: String, qe: QueryExecution): Unit =
       qe.analyzed.output.map(_.name) match {
         case Seq(`begin`) => begun = true
         case Seq(`end`) => endSeen.countDown()
-        case _ => if (begun) names.add(funcName)
+        case _ => if (begun) runs.add(funcName -> qe)
       }
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
@@ -1096,7 +1112,7 @@ class PlanAuditSpec extends SparkSpec {
       assert(endSeen.await(60, java.util.concurrent.TimeUnit.SECONDS),
         "the end marker never reached the listener")
       assert(begun, "the begin marker never reached the listener")
-      names.toArray(Array.empty[String]).toSeq
+      runs.toArray(Array.empty[(String, QueryExecution)]).toSeq
     } finally spark.listenerManager.unregister(listener)
   }
 
@@ -1145,6 +1161,85 @@ class PlanAuditSpec extends SparkSpec {
     assert(reply.startsWith("{\"success\":true,") && reply.contains("\"count\":20,"),
       reply)
     assert(respondJobs == 1, s"a screener response ran $respondJobs jobs")
+  }
+
+  /** A committed 30-row screener store and its pinned frame. */
+  private def pinnedScreenerStore(prefix: String) = {
+    import graft.sinks.MergeByKey
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
+    MergeByKey.upsert(spark, (1 to 30).map(i => (s"S$i",
+      if (i % 2 == 0) "Large Cap" else "Small Cap", i.toDouble,
+      (31 - i).toDouble)).toDF("symbol", "market_cap_category",
+      "composite_score", "fundamental_score"), dir, "symbol")
+    (dir, MergeByKey.readCommitted(spark, dir))
+  }
+
+  test("a repeat screener response over the same pin runs 1 job of 1 " +
+    "stage: the first request's QueryExecution, with no exchange or " +
+    "adaptive node to replay") {
+    import graft.serve.Screeners
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val (_, pin) = pinnedScreenerStore("graft_prepared")
+    for (name <- Seq("btst", "swing", "position")) {
+      val first = executionsRunBy(Screeners.respond(spark, name, pin))
+      assert(first.map(_._1) == Seq("collect"), s"$name: $first")
+      val firstPlan = first.head._2.executedPlan
+      assert(firstPlan.find {
+        case _: Exchange | _: AdaptiveSparkPlanExec => true
+        case _ => false
+      }.isEmpty, s"$name's emit plan is not single-stage:\n$firstPlan")
+      var reply = ""
+      val (jobs, stages) =
+        jobsAndStagesRunBy { reply = Screeners.respond(spark, name, pin) }
+      assert(reply.startsWith("{\"success\":true,"), reply)
+      assert((jobs, stages) == (1, 1),
+        s"a repeat $name response ran $jobs jobs of $stages stages")
+      val again = executionsRunBy(Screeners.respond(spark, name, pin))
+      assert(again.size == 1 && (again.head._2 eq first.head._2),
+        s"a repeat $name response planned anew")
+    }
+  }
+
+  test("a screener response over a frame that is not a pin plans anew on " +
+    "each call") {
+    import graft.serve.Screeners
+    val scored = (1 to 30).map(i => (s"S$i", i.toDouble, i.toDouble))
+      .toDF("symbol", "composite_score", "fundamental_score")
+    val first = executionsRunBy(Screeners.respond(spark, "btst", scored))
+    val second = executionsRunBy(Screeners.respond(spark, "btst", scored))
+    assert(first.size == 1 && second.size == 1, s"$first / $second")
+    assert(!(first.head._2 eq second.head._2),
+      "a frame that is not a pin must not reuse a kept plan")
+  }
+
+  test("a commit between two screener requests is visible to the second; " +
+    "the old pin's prepared plan never answers again") {
+    import graft.serve.Screeners
+    import graft.sinks.MergeByKey
+    def blank(reply: String) = reply.replaceAll("\"timestamp\":\"[^\"]*\"", "")
+    val (dir, pin) = pinnedScreenerStore("graft_prepared_commit")
+    var before = ""
+    val prepared = executionsRunBy {
+      before = blank(Screeners.respond(spark, "btst", pin))
+    }.head._2
+    assert(before.contains("{\"symbol\":\"S30\","), before)
+    assert(executionsRunBy(Screeners.respond(spark, "btst", pin)).head._2 eq prepared)
+    MergeByKey.upsert(spark, Seq(("S1", 99.0)).toDF("symbol", "composite_score"),
+      dir, "symbol")
+    assert(!MergeByKey.isPinned(pin), "the commit must drop the old pin")
+    val fresh = MergeByKey.readCommitted(spark, dir)
+    var after = ""
+    var old = ""
+    val ran = executionsRunBy { after = Screeners.respond(spark, "btst", fresh) } ++
+      executionsRunBy { old = blank(Screeners.respond(spark, "btst", pin)) }
+    assert(after.contains("\"data\":[{\"symbol\":\"S1\",\"market_cap_category\":" +
+      "\"Small Cap\",\"composite_score\":99.0"), after)
+    // the frame read before the commit is planned anew and still answers
+    // with the snapshot it was resolved against
+    assert(old == before)
+    assert(ran.size == 2 && ran.forall(r => !(r._2 eq prepared)),
+      "a request after the commit ran the old pin's prepared plan")
   }
 
   test("pins are bounded per JVM: past maxPins the least recently read " +
