@@ -48,14 +48,6 @@ object Bench {
         .getOperatingSystemMXBean.getSystemLoadAverage
       catch { case _: Throwable => -1.0 }
     val loadBefore = loadAvg()
-    // Noisy-neighbor signature: back-to-back samples of the SAME query
-    // growing monotonically (run1 < run2 < run3) means the box load was
-    // ramping during the measurement — the exact pattern the r12 driver
-    // run showed (q30: 12.3 / 50.3 / 123.8 s). One query can do this by
-    // chance; MANY doing it is contention, so the count is an artifact-
-    // level health flag.
-    def isMonotonic(runs: Seq[Double]): Boolean =
-      runs.size >= 2 && runs.sliding(2).forall(p => p(1) > p(0) * 1.05)
     // Driver-window survival (r18 verdict #2: BENCH_r18.json was rc=124 /
     // parsed:null — the run was KILLED and nothing was written):
     //  - a wall-clock budget degrades repeats 3→2→1 as the deadline
@@ -87,20 +79,9 @@ object Bench {
     var anyDegraded = false
     val done = scala.collection.mutable.ArrayBuffer
       .empty[(String, (Double, Double, Vector[Double]))]
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val ordered = selected.toSeq.sortBy(_._1)
     ordered.zipWithIndex.foreach { case ((name, fn), idx) =>
-      def sample(): Double = {
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // isolate queries: drop intermediates persisted by LSH/simhash
-        // ops so every repeat (and the next query) pays its own cost
-        spark.catalog.clearCache()
-        dt
-      }
       // Budget-aware repeat count: past 60% of the wall budget drop to
       // 2 samples, past 80% to 1 — every query still gets SOME timing
       // rather than the tail getting none.
@@ -112,33 +93,30 @@ object Bench {
         else repeats
       if (effRepeats < repeats && name != "q40_accuracy_audit")
         anyDegraded = true
-      var runs = (1 to effRepeats).map(_ => sample()).toVector
-      // Self-heal (r13 verdict): a monotonic-growth sample set is the
-      // contended-window fingerprint — take up to 2 extra samples so
-      // the published median has a chance to settle once the transient
-      // load passes, instead of entering the artifact contaminated.
-      // Still-monotonic after the extras ⇒ the query keeps its
-      // monotonic_growth flag and the median is read as suspect.
-      var extra = 0
-      while (effRepeats >= 2 && isMonotonic(runs) && extra < 2) {
-        runs = runs :+ sample()
-        extra += 1
+      sampleQuery(name, effRepeats,
+        () => fn(spark, sfDir).write.format("noop").mode("overwrite").save(),
+        // isolate queries: drop intermediates persisted by LSH/simhash
+        // ops so every repeat (and the next query) pays its own cost
+        () => spark.catalog.clearCache()) match {
+        case None => failed += name
+        case Some(runs) =>
+          val sorted = runs.sorted
+          // LOWER median: for even sample counts (degraded 2-repeat
+          // tail, self-heal extras) the upper-middle pick would report
+          // the WORSE of 2 samples — a systematic upward bias exactly
+          // when the box is already contended. Contention inflates but
+          // never deflates a sample, so the lower-middle is the honest
+          // quiet estimate (ScaleProbe's min-of-2 discipline, applied to
+          // medians). Odd counts are unchanged — this is the true
+          // median for 3 and 5.
+          val median = sorted((sorted.size - 1) / 2)
+          done += (name -> (median, sorted.head, runs))
       }
-      val sorted = runs.sorted
-      // LOWER median: for even sample counts (degraded 2-repeat tail,
-      // self-heal extras) the upper-middle pick would report the WORSE
-      // of 2 samples — a systematic upward bias exactly when the box
-      // is already contended. Contention inflates but never deflates
-      // a sample, so the lower-middle is the honest quiet estimate
-      // (ScaleProbe's min-of-2 discipline, applied to medians). Odd
-      // counts are unchanged — this is the true median for 3 and 5.
-      val median = sorted((sorted.size - 1) / 2)
-      done += (name -> (median, sorted.head, runs))
       // incremental flush: a killed run keeps every completed timing
       if (idx < ordered.size - 1) {
         val partialQs = done.map { case (k, (med, _, _)) =>
           "\"" + k + f"\":$med%.3f" }.mkString("{", ",", "}")
-        writeArtifact(f"""{"metric":"total","value":${done.map(_._2._1).sum}%.3f,"unit":"sec","partial":true,"n_done":${done.size},"n_queries":${ordered.size},"degraded":$anyDegraded,"queries":$partialQs,"sf":"$sfDir"}""")
+        writeArtifact(f"""{"metric":"total","value":${done.map(_._2._1).sum}%.3f,"unit":"sec","partial":true,"n_done":${done.size + failed.size},"n_queries":${ordered.size},"degraded":$anyDegraded,"failed_queries":${jsonNames(failed.toSeq)},"queries":$partialQs,"sf":"$sfDir"}""")
       }
     }
     val results = done.toSeq
@@ -186,8 +164,8 @@ object Bench {
       "query_runs); q73's residual cost is the honest probe: batch " +
       "re-shingle + band join + exact-Jaccard verify"
     val loadAfter = loadAvg()
-    val monoJson = monotonicQs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val richLine = f"""{"metric":"total","value":$total%.3f,"unit":"sec","audit_sec":$auditSec%.3f,"total_with_audit":${total + auditSec}%.3f,"stage_build_sec":$stageBuildSec%.3f,"stage_builds":$stageJson,"repeats":$repeats,"degraded":$anyDegraded,"wall_budget_sec":$wallBudgetSec%.0f,"spread":$spread%.2f,"load_before":$loadBefore%.2f,"load_after":$loadAfter%.2f,"monotonic_growth_queries":$monoJson,"notes":"$notes","queries":$qs,"query_runs":$runsJson,"sf":"$sfDir"}"""
+    val monoJson = jsonNames(monotonicQs)
+    val richLine = f"""{"metric":"total","value":$total%.3f,"unit":"sec","audit_sec":$auditSec%.3f,"total_with_audit":${total + auditSec}%.3f,"stage_build_sec":$stageBuildSec%.3f,"stage_builds":$stageJson,"repeats":$repeats,"degraded":$anyDegraded,"wall_budget_sec":$wallBudgetSec%.0f,"spread":$spread%.2f,"load_before":$loadBefore%.2f,"load_after":$loadAfter%.2f,"monotonic_growth_queries":$monoJson,"failed_queries":${jsonNames(failed.toSeq)},"notes":"$notes","queries":$qs,"query_runs":$runsJson,"sf":"$sfDir"}"""
     // Persist the full per-query map as a file artifact: the r9 driver
     // artifact had "parsed":null with a truncated stdout tail that lost
     // 20 queries' timings — a file can be lifted whole regardless of
@@ -218,14 +196,60 @@ object Bench {
       val slowest = ops.sortBy(-_._2._1).take(k)
         .map { case (q, (med, _, _)) => "\"" + q + f"\":$med%.2f" }
         .mkString("{", ",", "}")
-      val monoTail = monotonicQs.take(5).map("\"" + _ + "\"")
-        .mkString("[", ",", "]")
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","audit_sec":$auditSec%.3f,"total_with_audit":${total + auditSec}%.3f,"stage_build_sec":$stageBuildSec%.3f,"repeats":$repeats,"degraded":$anyDegraded,"spread":$spread%.2f,"load_before":$loadBefore%.2f,"load_after":$loadAfter%.2f,"contended":$contended,"n_monotonic":${monotonicQs.size},"monotonic_growth_queries":$monoTail,"n_queries":${results.size},"n_ops":${ops.size},"slowest":$slowest,"queries":$slowest,"artifact":"BENCH_LOCAL.json","sf":"$sfDir"}"""
+      val monoTail = jsonNames(monotonicQs.take(5))
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","audit_sec":$auditSec%.3f,"total_with_audit":${total + auditSec}%.3f,"stage_build_sec":$stageBuildSec%.3f,"repeats":$repeats,"degraded":$anyDegraded,"spread":$spread%.2f,"load_before":$loadBefore%.2f,"load_after":$loadAfter%.2f,"contended":$contended,"n_monotonic":${monotonicQs.size},"monotonic_growth_queries":$monoTail,"n_queries":${ordered.size},"n_ops":${ops.size},"n_failed":${failed.size},"slowest":$slowest,"queries":$slowest,"artifact":"BENCH_LOCAL.json","sf":"$sfDir"}"""
     }
     val compact = (10 to 0 by -5).map(compactLine)
       .find(_.length < 1900)
-      .getOrElse(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${ops.size},"artifact":"BENCH_LOCAL.json"}""")
+      .getOrElse(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${ordered.size},"n_ops":${ops.size},"n_failed":${failed.size},"artifact":"BENCH_LOCAL.json"}""")
     println(compact)
     spark.stop()
+  }
+
+  // Noisy-neighbor signature: back-to-back samples of the SAME query
+  // growing monotonically (run1 < run2 < run3) means the box load was
+  // ramping during the measurement — the exact pattern the r12 driver
+  // run showed (q30: 12.3 / 50.3 / 123.8 s). One query can do this by
+  // chance; MANY doing it is contention, so the count is an artifact-
+  // level health flag.
+  private def isMonotonic(runs: Seq[Double]): Boolean =
+    runs.size >= 2 && runs.sliding(2).forall(p => p(1) > p(0) * 1.05)
+
+  private def jsonNames(names: Seq[String]): String =
+    names.map("\"" + _ + "\"").mkString("[", ",", "]")
+
+  /** The timed samples of one query: `run` is timed `repeats` times and
+    * `reset` runs untimed after each sample. Self-heal (r13 verdict): a
+    * monotonic-growth sample set is the contended-window fingerprint, so
+    * up to 2 extra samples are taken and the published median has a
+    * chance to settle once the transient load passes. Still-monotonic
+    * after the extras ⇒ the query keeps its monotonic_growth flag and
+    * the median is read as suspect.
+    *
+    * `None` when a run throws: a failed run is not a timing, so the
+    * query is reported under `failed_queries`, kept out of every total,
+    * and not sampled again. */
+  private[graft] def sampleQuery(name: String, repeats: Int,
+      run: () => Unit, reset: () => Unit): Option[Vector[Double]] = {
+    val runs = scala.collection.mutable.ArrayBuffer.empty[Double]
+    def sample(): Boolean = {
+      val t0 = System.nanoTime()
+      val ok =
+        try { run(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          false
+        }
+      if (ok) runs += (System.nanoTime() - t0) / 1e9
+      reset()
+      ok
+    }
+    var ok = (1 to repeats).forall(_ => sample())
+    var extra = 0
+    while (ok && repeats >= 2 && isMonotonic(runs.toSeq) && extra < 2) {
+      ok = sample()
+      extra += 1
+    }
+    if (ok) Some(runs.toVector) else None
   }
 }

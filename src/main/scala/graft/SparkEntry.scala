@@ -1,13 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.functions.{Cleanse, TextFns, TimeFns, VectorFns}
-import graft.operators._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.catalog.{Catalog, Stages}
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2 (+ the LLM-training-data extension ops), each with a
   * DuckDB-equivalent `oracleSql` where the semantics are SQL-expressible.
+  * Both maps are derived once from [[graft.catalog.Catalog]], where each
+  * query's builder and oracle sit together in one entry.
   *
   * Float discipline (driver hash-compares values): aggregations whose
   * result depends on summation ORDER (double sums) run through an exact
@@ -19,579 +19,13 @@ import graft.operators._
   */
 object SparkEntry {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
+  /** The Spark builder of every declared query, by name. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Catalog.all.map(q => q.name -> q.build).toMap
 
-  /** Root of every staged store below (band keys, MinHash index, BPE
-    * model, stream feeds, …): `SPARK_GRAFT_STAGE_DIR`, else
-    * target/graft-stage. */
-  private lazy val stageRoot: String =
-    sys.env.getOrElse("SPARK_GRAFT_STAGE_DIR", "target/graft-stage")
-
-  /** The staged full-corpus band-key store behind [[lshNearDupPairs]]
-    * and every other LSH consumer (range counts, batch probes). */
-  private def stagedEmbKeys(s: SparkSession, dir: String): DataFrame = {
-    val stamp = Dedup.sourceStamp(s, s"$dir/embeddings.parquet")
-    SimilaritySearch.stagedBandKeys(
-      T(s, dir, "embeddings"), "vec_id", "embedding",
-      s"$stageRoot/embkeys-full-$stamp-b$lshBaseBits-n$lshBands-r$lshBitsPerBand",
-      lshBaseBits, lshBands, lshBitsPerBand)
-  }
-
-  /** The GRAPH-FEEDING near-dup pair generator: banded-hyperplane LSH
-    * (candidates from bucket co-membership, exact cosine verify on
-    * candidates only — never all pairs), in the one fixed
-    * configuration the [[lshPairCtes]] oracle mirrors bit for bit.
-    * Every declared query that consumes a near-dup graph (components,
-    * representatives, splits, label propagation, negative sampling)
-    * routes through here (r12); the O(n²·d) exact kernel remains only
-    * in the q29/q40 audit surfaces and the guarantee gates that
-    * measure LSH recall against it.
-    *
-    * Round 13: the band-key table comes from the STAGED full-corpus
-    * store (source-stamped, built on first touch) and the per-query
-    * work is [[SimilaritySearch.embeddingNearDupFromKeys]] — the 8
-    * graph consumers previously re-signed the corpus per query (~2 s
-    * each, ~20 s of suite); key derivation is deterministic, so the
-    * staged path is pair-for-pair identical and the oracle is
-    * untouched. q30 keeps the unstaged embeddingNearDup build as the
-    * from-scratch gate of the signing stage itself. */
-  private def lshNearDupPairs(s: SparkSession, dir: String,
-      threshold: Double): DataFrame =
-    SimilaritySearch.embeddingNearDupFromKeys(stagedEmbKeys(s, dir),
-      T(s, dir, "embeddings"), "vec_id", "embedding", threshold)
-
-  /** Round 16: the near-dup COMPONENT-LABEL map at the suite's
-    * standard 0.45 threshold, staged once per (corpus stamp, LSH
-    * params) the way band keys are ([[lshNearDupPairs]]'s store) —
-    * r15 verdict #1: the seven component consumers (q47/q48/q86/
-    * q118/q161/q191/q272) each re-ran the min-label propagation from
-    * the pair surface, the worst remaining scale surface (40 s/2M
-    * per consumer). At 100 TB the label map is computed once per
-    * corpus stamp and every consumer reads (node, component) back as
-    * a parquet scan. Labels are deterministic (min reachable id), so
-    * the staged map is row-for-row what each inline build produced
-    * and every consumer oracle is untouched; q47 doubles as the
-    * from-scratch gate of the build itself on first touch. */
-  private def stagedNearDupComponents(s: SparkSession, dir: String): DataFrame = {
-    val stamp = Dedup.sourceStamp(s, s"$dir/embeddings.parquet")
-    Tables.stagedParquet(s, s"$stageRoot/neardup-comps-$stamp" +
-        s"-b$lshBaseBits-n$lshBands-r$lshBitsPerBand-t045") {
-      Dedup.connectedComponents(
-        lshNearDupPairs(s, dir, threshold = 0.45)
-          .select(col("id_a"), col("id_b")), "id_a", "id_b")
-    }
-  }
-
-  /** The q174/q200 batched-BPE tokenizer artifact, staged once per
-    * corpus (source-stamped like the MinHash / band-key stores): the
-    * 16-pass trainer runs on first touch and ships (merge table,
-    * word segmentation); both gates read the shipped tables — the
-    * train-once production shape. */
-  private def stagedBpeModel(s: SparkSession,
-      dir: String): (DataFrame, DataFrame) = {
-    val stamp = Dedup.sourceStamp(s, s"$dir/documents.parquet")
-    BpeTrain.stagedBatchedModel(T(s, dir, "documents"), "text",
-      s"$stageRoot/bpe-$stamp-p16-c16-n256", passes = 16, batchCap = 16,
-      candN = 256)
-  }
-
-  /** The customer→supplier purchase graph (distinct (2·custkey,
-    * 2·suppkey+1) edges via shared orders), staged once per corpus
-    * stamp and shared by every graph gate that ranks it (q108
-    * PageRank, q242 HITS) — r13 verdict: each consumer re-paid the
-    * same lineitem⋈orders join + distinct per query, the single most
-    * expensive build in the suite. Edge derivation is deterministic,
-    * so the staged store is exactly what the inline build produced
-    * and both oracles are untouched. */
-  private def stagedPurchaseEdges(s: SparkSession, dir: String): DataFrame = {
-    val stamp = Dedup.sourceStamp(s, s"$dir/orders.parquet") + "-" +
-      Dedup.sourceStamp(s, s"$dir/lineitem.parquet")
-    Tables.stagedParquet(s, s"$stageRoot/purchase-edges-$stamp") {
-      val o = T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-      val li = T(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-      li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .select((col("o_custkey") * 2L).as("src"),
-          (col("l_suppkey") * 2L + 1L).as("dst"))
-        .distinct()
-    }
-  }
-
-  /** The corpus-wide MinHash index over `documents`, staged to a local
-    * parquet store keyed by the source file's stamp (name+size+mtime —
-    * testdata regenerates between rounds, so path alone would go stale)
-    * and the index parameters. q23 and q73 both consume THIS index: q23
-    * runs the band self-join over it, q73 anti-joins the probe batch
-    * out to obtain the standing side — per-doc index rows make the
-    * filtered store exactly equal to an index built over the remainder.
-    * First touch per corpus builds + writes; every later run (bench
-    * repeats, the sibling query, the next session over unchanged data)
-    * pays three parquet scans — the append-only production shape where
-    * the archive is never re-shingled. */
-  private def stagedDocsIndex(s: SparkSession, dir: String): Dedup.MinHashIndex = {
-    val stamp = Dedup.sourceStamp(s, s"$dir/documents.parquet")
-    Dedup.stagedMinHashIndex(T(s, dir, "documents"), "doc_id", "text",
-      s"$stageRoot/minhash-$stamp-n3-h64-b32", n = 3, numHashes = 64, bands = 32)
-  }
-
-  /** Source-stamped STAGED STREAM FEED (r20 optimization, r19 verdict
-    * #1b): a streaming gate's batch-file feed is a pure deterministic
-    * function of the `events` table and the stager code, so it is
-    * built ONCE per (corpus stamp, stager version, Spark version)
-    * under target/graft-stage — prebuildStages pays the build untimed
-    * and reports it as stage_build_sec — and every invocation replays
-    * the SAME files. Before r20, every bench sample re-derived the
-    * feed (events scan → crossJoin(range) → repartition → parquet
-    * write → rename) into a fresh /tmp dir and never deleted it:
-    * 2,357 leaked graft-* dirs / 4.3 GB after 19 rounds, with the
-    * stager I/O (not the streaming operator) dominating and
-    * destabilizing the streaming family's bench numbers. `ver` is the
-    * generator version (the ScaleProbe ADVICE lesson: a content stamp
-    * alone cannot see stager-code drift); the Spark version rides in
-    * the path so stageBatchFiles' 4.1.x batch-pinning check re-fires
-    * after an engine bump. Built once through [[Tables.buildOnce]];
-    * the build clears a killed writer's leftovers first, and
-    * FileStreamSource ignores `_`-prefixed names, so the marker never
-    * enters a micro-batch. */
-  private def stagedStreamFeed(s: SparkSession, dir: String, name: String,
-      ver: Int = 1)(build: => DataFrame): String = {
-    val stamp = Dedup.sourceStamp(s, s"$dir/events.parquet")
-    val feedDir = s"$stageRoot/feed-$name-v$ver-s${s.version}-$stamp"
-    Tables.buildOnce(s, feedDir) {
-      val p = new org.apache.hadoop.fs.Path(feedDir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      graft.streaming.Streams.stageBatchFiles(build, "b", feedDir)
-    }
-    feedDir
-  }
-
-  /** A staged feed as a file stream: one `batch-NNNNN.parquet` file per
-    * micro-batch, in staged order. */
-  private def readFeed(s: SparkSession, feedDir: String,
-      schema: String): DataFrame =
-    s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(feedDir)
-
-  /** Value-slice batch number of column `t` over the `mn`/`mx` range
-    * columns a feed builder cross-joins in: `(t − mn)·n div
-    * (mx − mn + 1)`, in [0, n). Monotone in `t`, so batches stay
-    * time-ordered and equal values never split. Each builder applies
-    * its own late-row rule around it and casts the result to int. */
-  private def valueSlice(t: String, n: Long): Column =
-    call_function("div", (col(t) - col("mn")) * n,
-      col("mx") - col("mn") + 1L)
-
-  /** Leak-proof per-invocation scratch dir (r19 verdict #1a + ADVICE
-    * q360 item): run `body` against a fresh temp dir (streaming sink +
-    * checkpoint, merge stores), EAGERLY materialize the small gate
-    * result via localCheckpoint, and delete the dir in a finally — on
-    * the failure path too. A checkpoint is correctness state for a
-    * restartable production stream, but each gate invocation is a
-    * complete AvailableNow run, so keeping it only accumulated debris
-    * (3 repeats × N rounds of never-deleted /tmp dirs). The eager
-    * localCheckpoint is what makes the delete safe: the returned frame
-    * no longer reads the dir. Gate outputs are small (sessions,
-    * windows, diff cards), so block-manager residency is negligible. */
-  private def withScratchDir(s: SparkSession, prefix: String)
-      (body: String => DataFrame): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
-    try body(dir).localCheckpoint(true)
-    finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      // delete returns false without throwing on a transient failure
-      // (observed once in ~20 invocations under the forked test JVM);
-      // fall back to JVM-exit cleanup rather than leaking silently
-      if (!fs.delete(p, true) && fs.exists(p)) fs.deleteOnExit(p)
-    }
-  }
-
-  /** The streaming-gate runner: run `stream` to completion as one
-    * [[graft.streaming.Streams.runAvailableNow]] append query into a
-    * parquet sink under a [[withScratchDir]] dir (sink + checkpoint),
-    * then return `readBack` over the sink's rows. */
-  private def runStreamGate(s: SparkSession, name: String,
-      stream: Dataset[_])
-      (readBack: DataFrame => DataFrame): DataFrame =
-    withScratchDir(s, s"graft-$name-out") { outDir =>
-      graft.streaming.Streams.runAvailableNow(
-        stream.toDF().writeStream.format("parquet")
-          .option("path", s"$outDir/rows").outputMode("append"),
-        s"$outDir/ckpt").awaitTermination()
-      readBack(s.read.parquet(s"$outDir/rows"))
-    }
-
-  /** The q360 two-version MergeByKey store, staged once per corpus
-    * stamp (r19 verdict #4): the gate's subject is [[graft.sinks.MergeByKey.diffVersions]]
-    * — the CDC read between committed snapshots — but the pre-r20
-    * query body paid two full versioned upsert COMMITS (claim, write,
-    * manifest flip, commit record) into a fresh /tmp store on every
-    * invocation, ~4 s of write harness around a ~1 s diff, plus a
-    * leaked store on any failure (ADVICE r19 low). The upsert path
-    * itself stays gated end-to-end by q41/q42/q244; snapshot
-    * derivation is deterministic, so the staged store is byte-for-byte
-    * what the inline build produced and the oracle is untouched.
-    * Built once through [[Tables.buildOnce]]; the build clears a
-    * killed writer's half-committed store first. */
-  private def stagedVersionStoreQ360(s: SparkSession, dir: String): String = {
-    val stamp = Dedup.sourceStamp(s, s"$dir/orders.parquet")
-    val base = s"$stageRoot/q360-store-v1-$stamp"
-    Tables.buildOnce(s, base) {
-      val p = new org.apache.hadoop.fs.Path(base)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      def snap(status: String) = T(s, dir, "orders")
-        .filter(col("o_orderstatus") === status)
-        .groupBy(col("o_custkey").cast("long").as("k"))
-        .agg(expr("cast(sum(cast(round(o_totalprice * 100, 0) as bigint)) as bigint)")
-          .as("val_e2"))
-      graft.sinks.MergeByKey.upsert(s, snap("F"), s"$base/store", "k")
-      graft.sinks.MergeByKey.upsert(s, snap("O"), s"$base/store", "k")
-    }
-    s"$base/store"
-  }
-
-  // ---- staged stream-feed builders (r20): one per distinct stager,
-  // each a deterministic function of the events table, so every feed
-  // is staged once per corpus stamp and shared across invocations AND
-  // across the queries that replay the same feed (q229 replays q169's
-  // late-data slices, q264 replays q224's day slices, q177/q181/q209
-  // share the ssj left/right pair). The derivations are verbatim the
-  // pre-r20 inline stagers — only WHERE the files live changed.
-
-  private def feedQ77(s: SparkSession, dir: String): String =
-    stagedStreamFeed(s, dir, "q77") {
-      T(s, dir, "events")
-        .select(col("event_type").as("group"),
-          col("user_id").cast("string").as("item"),
-          pmod(col("event_id").cast("long"), lit(4)).cast("int").as("b"))
-    }
-
-  private def feedQ78(s: SparkSession, dir: String): String =
-    stagedStreamFeed(s, dir, "q78") {
-      val ev = T(s, dir, "events")
-        .select(col("user_id").cast("long").as("userId"),
-          tsSec.cast("long").as("tsSec"))
-      val maxTs = ev.agg(min(col("tsSec")).as("mn"),
-        max(col("tsSec")).as("mx"))
-      val sentinel = ev.select(col("userId")).distinct()
-        .crossJoin(broadcast(maxTs))
-        .select(col("userId"), (col("mx") + 1801L).as("tsSec"))
-      ev.crossJoin(broadcast(maxTs))
-        .withColumn("b", valueSlice("tsSec", 4).cast("int"))
-        .select(col("userId"), col("tsSec"), col("b"))
-        .unionByName(sentinel.withColumn("b", lit(4).cast("int")))
-        .withColumn("value", lit(0.0))
-    }
-
-  /** q169's late-data slice feed — ALSO q229's (the sliding gate
-    * replays the identical stager; pre-r20 both derived it inline). */
-  private def feedQ169(s: SparkSession, dir: String): String =
-    stagedStreamFeed(s, dir, "q169") {
-      val ev = T(s, dir, "events")
-        .select(col("event_type"), tsSec.cast("long").as("tsSec"),
-          round(col("value") * 100, 0).cast("long").as("v"),
-          col("event_id").cast("long").as("eid"))
-      val rng = ev.filter(pmod(col("eid"), lit(10)) =!= 0)
-        .agg(min(col("tsSec")).as("mn"), max(col("tsSec")).as("mx"))
-      ev.crossJoin(broadcast(rng))
-        .withColumn("b",
-          when(pmod(col("eid"), lit(10)) === 0, lit(2))
-            .otherwise(valueSlice("tsSec", 2)).cast("int"))
-        .select(col("event_type"), col("tsSec"), col("v"), col("b"))
-        .unionByName(
-          rng.select(lit("zz_sentinel").as("event_type"),
-              (col("mx") + 7200L).as("tsSec"), lit(0L).as("v"),
-              lit(3).cast("int").as("b"))
-            .unionByName(rng.select(
-              lit("zz_sentinel").as("event_type"),
-              (col("mx") + 7800L).as("tsSec"), lit(0L).as("v"),
-              lit(4).cast("int").as("b"))))
-    }
-
-  private def feedQ175(s: SparkSession, dir: String): String =
-    stagedStreamFeed(s, dir, "q175") {
-      val ev = T(s, dir, "events")
-        .select(col("user_id").cast("long").as("uid"),
-          tsSec.cast("long").as("tsSec"),
-          col("event_id").cast("long").as("eid"))
-      val rng = ev.filter(pmod(col("eid"), lit(10)) =!= 0)
-        .agg(min(col("tsSec")).as("mn"), max(col("tsSec")).as("mx"))
-      ev.crossJoin(broadcast(rng))
-        .withColumn("b",
-          when(pmod(col("eid"), lit(10)) === 0, lit(4))
-            .otherwise(valueSlice("tsSec", 4)).cast("int"))
-        .groupBy(col("uid"), col("b"))
-        .agg(min(col("tsSec")).as("tsSec"))
-        .select(col("uid"), col("tsSec"), col("b"))
-    }
-
-  private def feedQ182(s: SparkSession, dir: String): String =
-    stagedStreamFeed(s, dir, "q182") {
-      val ev = T(s, dir, "events")
-        .select(col("user_id").cast("long").as("userId"),
-          tsSec.cast("long").as("tsSec"))
-      val rng = ev.agg(min(col("tsSec")).as("mn"),
-        max(col("tsSec")).as("mx"))
-      ev.crossJoin(broadcast(rng))
-        .withColumn("b", valueSlice("tsSec", 4).cast("int"))
-        .select(col("userId"), col("tsSec"), col("b"))
-    }
-
-  private def feedQ192(s: SparkSession, dir: String): String =
-    stagedStreamFeed(s, dir, "q192") {
-      T(s, dir, "events")
-        .select(col("event_type"), col("user_id").cast("long").as("uid"),
-          pmod(col("event_id").cast("long"), lit(3)).cast("int").as("b"))
-    }
-
-  private def feedQ199(s: SparkSession, dir: String): String =
-    stagedStreamFeed(s, dir, "q199") {
-      T(s, dir, "events")
-        .select(col("event_type"), col("user_id").cast("long").as("uid"),
-          pmod(col("event_id").cast("long"), lit(4)).cast("int").as("b"))
-    }
-
-  /** q224's day-slice feed — ALSO q264's (identical stager). */
-  private def feedQ224(s: SparkSession, dir: String): String =
-    stagedStreamFeed(s, dir, "q224") {
-      val ev = T(s, dir, "events").select(
-        col("event_type").as("group"),
-        graft.functions.TimeFns.floorDiv(col("ts"),
-          86400L * 1000000000L).as("day"))
-      val mm = ev.agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
-      val sentinel = ev.select(col("group")).distinct()
-        .crossJoin(broadcast(mm))
-        .select(col("group"), (col("mx") + 1L).as("day"))
-      ev.crossJoin(broadcast(mm))
-        .withColumn("b", valueSlice("day", 4).cast("int"))
-        .select(col("group"), col("day"), col("b"))
-        .unionByName(sentinel.withColumn("b", lit(4).cast("int")))
-    }
-
-  private def feedQ243(s: SparkSession, dir: String): String =
-    stagedStreamFeed(s, dir, "q243") {
-      val ev = T(s, dir, "events").select(
-        concat(col("user_id").cast("string"), lit("|"),
-          col("event_type")).as("key"),
-        col("ts").as("tsNanos"),
-        col("event_id").cast("long").as("eventId"))
-      val mm = ev.agg(min(col("tsNanos")).as("mn"),
-        max(col("tsNanos")).as("mx"))
-      ev.crossJoin(broadcast(mm))
-        .withColumn("b", valueSlice("tsNanos", 4).cast("int"))
-        .select(col("key"), col("tsNanos"), col("eventId"), col("b"))
-    }
-
-  private def feedQ289(s: SparkSession, dir: String): String =
-    stagedStreamFeed(s, dir, "q289") {
-      val ev = T(s, dir, "events")
-        .filter(col("user_id").isNotNull)
-        .select(col("user_id").cast("string").as("key"),
-          col("ts").as("tsNanos"),
-          col("event_id").cast("long").as("eventId"),
-          col("event_type").as("etype"))
-      val mm = ev.agg(min(col("tsNanos")).as("mn"),
-        max(col("tsNanos")).as("mx"))
-      ev.crossJoin(broadcast(mm))
-        .withColumn("b", valueSlice("tsNanos", 4).cast("int"))
-        .select(col("key"), col("tsNanos"), col("eventId"),
-          col("etype"), col("b"))
-    }
-
-  private def feedQ302(s: SparkSession, dir: String): String =
-    stagedStreamFeed(s, dir, "q302") {
-      val ev = T(s, dir, "events").filter(col("user_id").isNotNull)
-        .select(col("event_type"), tsSec.cast("long").as("tsSec"),
-          col("user_id").cast("string").as("uid"))
-      val rng = ev.agg(min(col("tsSec")).as("mn"),
-        max(col("tsSec")).as("mx"))
-      ev.crossJoin(broadcast(rng))
-        .withColumn("b", valueSlice("tsSec", 2).cast("int"))
-        .select(col("event_type"), col("tsSec"), col("uid"), col("b"))
-        .unionByName(rng.select(lit("zz_sentinel").as("event_type"),
-          (col("mx") + 172800L).as("tsSec"), lit("u0").as("uid"),
-          lit(2).cast("int").as("b")))
-    }
-
-  /** The q177/q181/q209 stream-stream join feeds: even event ids left,
-    * odd right, three on-time value slices + a late fourth per side. */
-  private def feedSsj(s: SparkSession, dir: String, side: String): String =
-    stagedStreamFeed(s, dir, s"ssj-$side") {
-      val ev = T(s, dir, "events")
-        .select(col("user_id").cast("long").as("uid"),
-          tsSec.cast("long").as("tsSec"),
-          col("event_id").cast("long").as("eid"))
-      val rng = ev.filter(pmod(col("eid"), lit(10)) =!= 0 &&
-          pmod(col("eid"), lit(10)) =!= 5)
-        .agg(min(col("tsSec")).as("mn"), max(col("tsSec")).as("mx"))
-      val (parity, lateMod) = if (side == "l") (0, 0) else (1, 5)
-      ev.filter(pmod(col("eid"), lit(2)) === parity)
-        .crossJoin(broadcast(rng))
-        .withColumn("b",
-          when(pmod(col("eid"), lit(10)) === lateMod, lit(3))
-            .otherwise(valueSlice("tsSec", 3)).cast("int"))
-        .select(col("uid"), col("tsSec"), col("b"))
-    }
-
-  /** Touch every staged store the query surface builds lazily on first
-    * use (r17 verdict #3): Bench drives this in a labeled UNTIMED
-    * phase before the timed repeats and reports it as
-    * `stage_build_sec`, so a fresh checkout (the driver's reality)
-    * never reads 20–39× first-touch inflation on q23/q73/q278/q344 as
-    * a plan regression. Every builder is eager-on-miss (the staged
-    * helpers write the store during the call; for queries with inline
-    * staged builds, constructing the plan triggers them), so no result
-    * materialization is needed. Returns (store, build_seconds) — near
-    * zero per store on a warm checkout. Keep one entry per staged
-    * store: a store missing from this list shows up as an inflated
-    * first sample in the artifact's query_runs, which is the tripwire
-    * for list drift. */
-  def prebuildStages(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    def t(name: String)(body: => Any): (String, Double) = {
-      val t0 = System.nanoTime()
-      try body catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[stage-prebuild] $name failed: ${e.getMessage}")
-      }
-      s.catalog.clearCache()
-      (name, (System.nanoTime() - t0) / 1e9)
-    }
-    Seq(
-      t("embkeys_full") { stagedEmbKeys(s, dir) },
-      t("neardup_components") { stagedNearDupComponents(s, dir) },
-      t("bpe_model") { stagedBpeModel(s, dir) },
-      t("purchase_edges") { stagedPurchaseEdges(s, dir) },
-      t("docs_minhash_index") { stagedDocsIndex(s, dir) },
-      t("embkeys_standing_q179") {
-        queries("q179_incremental_embedding_neardup")(s, dir) },
-      t("orc_store_q336") { queries("q336_orc_roundtrip")(s, dir) },
-      t("standing_components_q344") {
-        queries("q344_incremental_components")(s, dir) },
-      t("pr_before_q299") { queries("q299_pagerank_delta")(s, dir) },
-      // session-catalog builds, not disk stores, but the same
-      // first-touch shape: the bucketed warehouse tables write once
-      // per session when the plan is constructed
-      t("bucketed_tables_q357") { queries("q357_bucketed_join")(s, dir) },
-      t("partitioned_orders_q358") {
-        queries("q358_partition_pruned")(s, dir) },
-      // shares q358's fact store; this builds the tiny status dim
-      t("status_dim_q359") { queries("q359_dpp_join")(s, dir) },
-      // r20: staged stream feeds (one stager each; q229 replays q169's
-      // feed, q264 replays q224's, q177/q181/q209 share the ssj pair)
-      // and the q360 two-version store — previously re-derived into
-      // leaked /tmp dirs on every bench sample (r19 verdict #1)
-      t("feed_q77") { feedQ77(s, dir) },
-      t("feed_q78") { feedQ78(s, dir) },
-      t("feed_q169_q229") { feedQ169(s, dir) },
-      t("feed_q175") { feedQ175(s, dir) },
-      t("feed_q182") { feedQ182(s, dir) },
-      t("feed_q192") { feedQ192(s, dir) },
-      t("feed_q199") { feedQ199(s, dir) },
-      t("feed_q224_q264") { feedQ224(s, dir) },
-      t("feed_q243") { feedQ243(s, dir) },
-      t("feed_q289") { feedQ289(s, dir) },
-      t("feed_q302") { feedQ302(s, dir) },
-      t("feed_ssj_l") { feedSsj(s, dir, "l") },
-      t("feed_ssj_r") { feedSsj(s, dir, "r") },
-      t("version_store_q360") { stagedVersionStoreQ360(s, dir) })
-  }
-
-  /** Exact order-independent sum of a 2dp/4dp money column. */
-  private def decSum(c: Column, scale: Int = 2): Column =
-    sum(c.cast(s"decimal(18,$scale)")).cast("double")
-
-  /** Fixed staging root shared by the CSV-surface gates (q194-q198)
-    * and their DuckDB oracles: the engine stages deterministic CSV
-    * files DERIVED FROM THE GATE TABLES here at query time; the
-    * oracle `read_csv`s the very same files (the streaming gates'
-    * file-harness trick, applied to the §2.1 CSV rows). */
-  private lazy val csvGateRoot: String =
-    s"${sys.props("java.io.tmpdir").stripSuffix("/")}/graft-csv-gate"
-
-  /** Stage `df` as exactly ONE file at csvGateRoot/name, written by
-    * `save` from a one-partition overwrite writer (a headered CSV for
-    * the q194/q195 gates; line-delimited JSON for q356, whose oracle
-    * re-reads the engine-written bytes with DuckDB's read_json, so the
-    * JSON WRITE path is gated cross-engine). `mtime` optionally pins
-    * the file's modification time — the S2 latest-file gate needs a
-    * controlled modification order. */
-  private def stageFile(s: SparkSession, df: DataFrame, name: String,
-      mtime: Long = -1L)
-      (save: (DataFrameWriter[Row], String) => Unit)
-      : String = {
-    val tmp = s"$csvGateRoot/_tmp-${name.replace('/', '_')}"
-    save(df.coalesce(1).write.mode("overwrite"), tmp)
-    val root = new org.apache.hadoop.fs.Path(csvGateRoot)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-      .filter(_.getPath.getName.startsWith("part-")).head.getPath
-    val dest = new org.apache.hadoop.fs.Path(s"$csvGateRoot/$name")
-    fs.mkdirs(dest.getParent)
-    if (fs.exists(dest)) fs.delete(dest, false)
-    fs.rename(part, dest)
-    if (mtime >= 0L) fs.setTimes(dest, mtime, -1L)
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    dest.toUri.getPath
-  }
-
-  /** The q177/q181 stream-stream join harness: even event ids feed
-    * the left stream, odd the right; each side ships three on-time
-    * value slices plus a late fourth file; the join is same-uid with
-    * the right event inside [left, left+1h), watermark 30 min on both
-    * sides. Returns (uid, l_ts, r_ts) — r_ts NULL on the left-outer
-    * null-extended rows. */
-  private def streamIntervalJoinGate(s: SparkSession, dir: String,
-      joinType: String): DataFrame = withShufflePartitions(s, 8) {
-    import s.implicits._
-    val ev = T(s, dir, "events")
-      .select(col("user_id").cast("long").as("uid"),
-        tsSec.cast("long").as("tsSec"),
-        col("event_id").cast("long").as("eid"))
-    if (ev.isEmpty) {
-      Seq.empty[(Long, Long, Long)].toDF("uid", "l_ts", "r_ts")
-    } else {
-      // staged once per corpus stamp, shared by q177/q181/q209 (r20)
-      val dirL = feedSsj(s, dir, "l")
-      val dirR = feedSsj(s, dir, "r")
-      def src(d: String, tCol: String) =
-        readFeed(s, d, "uid LONG, tsSec LONG")
-          .withColumn(tCol, timestamp_seconds(col("tsSec")))
-          .withColumnRenamed("tsSec", tCol + "_sec")
-      val joined = graft.streaming.Streams.joinWithinGap(
-        src(dirL, "l_t"), src(dirR, "r_t"), "uid",
-        "l_t", "r_t", gapSeconds = 3600L, watermark = "30 minutes",
-        joinType = joinType)
-      runStreamGate(s, "ssj", joined)(_.select(col("uid"),
-        col("l_t_sec").as("l_ts"), col("r_t_sec").as("r_ts")))
-    }
-  }
-
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily set to
-    * `n`, restoring the caller's value after. The STREAMING gates use
-    * this with a small n: a stateful micro-batch pays per-partition
-    * state-store open/commit/checkpoint overhead on every trigger, so
-    * 32 state partitions × 4-5 micro-batches × (1-2 stateful ops) is
-    * pure fixed cost at gate volumes — while at cluster scale the
-    * state partition count is sized to the cluster, not to this
-    * harness. Gated OUTPUTS are partitioning-independent by the
-    * repo's determinism discipline, so this is a cost knob only.
-    * NOTE the eager `.parquet()` read-back inside each streaming gate
-    * materializes before restore; callers returning LAZY frames must
-    * not let them escape the block. */
-  private def withShufflePartitions[T](s: SparkSession, n: Int)
-      (body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
-
-  /** events.ts is long epoch NANOS by the [[Tables]] loader contract
-    * (normalizeTs converts whichever physical parquet type the driver
-    * generated — NANOS-as-long or MICROS-as-timestamp); integer
-    * epoch-seconds keep the arithmetic engine-agnostic, and
-    * [[graft.functions.TimeFns.floorDiv]] keeps the bucketing aligned
-    * with the oracle's `//` even for pre-1970 values. */
-  private val tsSec: Column = TimeFns.floorDiv(col("ts"), 1000000000L)
+  /** The DuckDB oracle SQL of every declared query, by name. */
+  val oracleSql: Map[String, String] =
+    Catalog.all.map(q => q.name -> q.oracle).toMap
 
   // ===========================================================================
   // Flagship: composite scoring pipeline over the tables in `sfDir` (scan →
@@ -601,13053 +35,18 @@ object SparkEntry {
   def entry(spark: SparkSession, sfDir: String): DataFrame =
     queries("q07_composite_zscore")(spark, sfDir)
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- S1-S4 scans, A1/A2 aggregation (ref calfundamentalscore.py:437-444)
-    "q01_pricing_summary" -> ((s, dir) => {
-      T(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          count(lit(1)).as("n_rows"),
-          sum(col("l_quantity")).as("sum_qty"),
-          (sum(col("l_quantity")) / count(col("l_quantity"))).as("avg_qty"),
-          decSum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4).as("revenue"),
-          round(stddev_samp(col("l_extendedprice")), 2).as("sd_price"),
-          min(col("l_extendedprice")).as("min_price"),
-          max(col("l_extendedprice")).as("max_price"))
-    }),
-
-    // ---- P1-P3/F1/F2/F7 cleansing + parsing (ref uploadtodb.py:126-151,
-    // sectorscore.py:64-70, sectormerged_improved.py:115-148)
-    "q02_cleanse_parse" -> ((s, dir) => {
-      val p = T(s, dir, "part").filter(Cleanse.validKey(col("p_name")))
-      p.select(
-        col("p_partkey"),
-        Cleanse.nullifEmpty(col("p_brand")).as("brand_clean"),
-        Cleanse.cleanDouble(col("p_retailprice")).as("retail_2dp"),
-        Cleanse.cleanNumber(
-          concat(lit("−"), col("p_size").cast("string"), lit(".5%"))).as("neg_pct"),
-        Cleanse.cleanNumber(
-          concat(col("p_size").cast("string"), lit("T INR"))).as("unit_stripped"),
-        Cleanse.cleanNumber(
-          concat(col("p_size").cast("string"), lit(",250.75"))).as("comma_parsed"),
-        Cleanse.cleanText(
-          concat(lit("â€™"), col("p_brand"), lit("  –  x"))).as("moji_fixed"))
-    }),
-
-    // ---- J1/J2 broadcast-join chain + grouped revenue (TPC-H Q5 shape;
-    // ref calcompositescore.py:362-368)
-    "q03_regional_revenue" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem")
-      val o = T(s, dir, "orders")
-      val c = T(s, dir, "customer")
-      val n = T(s, dir, "nation")
-      val r = T(s, dir, "region")
-      li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .join(c, o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        .agg(count(lit(1)).as("n_items"),
-          decSum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4).as("revenue"))
-    }),
-
-    // ---- J3 full-outer + coalesce union-by-key (ref sectormerged_improved
-    // .py:449-465,547-556)
-    "q04_open_done_fullouter" -> ((s, dir) => {
-      val o = T(s, dir, "orders")
-      val a = o.filter(col("o_orderstatus") === "O").groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("n_open"), decSum(col("o_totalprice")).as("open_total"))
-      val b = o.filter(col("o_orderstatus") === "F").groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("n_done"), decSum(col("o_totalprice")).as("done_total"))
-      a.join(b, Seq("o_custkey"), "full_outer")
-        .select(col("o_custkey"),
-          coalesce(col("n_open"), lit(0L)).as("n_open"),
-          coalesce(col("open_total"), lit(0.0)).as("open_total"),
-          coalesce(col("n_done"), lit(0L)).as("n_done"),
-          coalesce(col("done_total"), lit(0.0)).as("done_total"))
-    }),
-
-    // ---- J6 left-anti (ref newsflow_scraper.py:281-311)
-    "q05_customers_no_orders" -> ((s, dir) => {
-      val c = T(s, dir, "customer")
-      val o = T(s, dir, "orders")
-      Dedup.antiJoinAppend(
-        c.select(col("c_custkey"), col("c_name"), col("c_acctbal")),
-        o.select(col("o_custkey").as("c_custkey")), "c_custkey")
-    }),
-
-    // ---- W1 global rank banding (ref calcompositescore.py:207-218).
-    // Declared via the scalable path: range-partitioned global sort +
-    // per-partition offsets — identical output to the single-partition
-    // window form, which survives only in the oracle SQL.
-    "q06_band_by_balance" -> ((s, dir) => {
-      RankOps.bandByRankScalable(
-        T(s, dir, "customer"), "c_acctbal", "c_custkey",
-        Seq(100L -> "Large", 250L -> "Mid", 500L -> "Small"), "Micro")
-        .select(col("c_custkey"), col("c_acctbal"), col("band"))
-    }),
-
-    // ---- W2 hierarchical z-score composite (ref calcompositescore.py:202-302)
-    "q07_composite_zscore" -> ((s, dir) => {
-      val c = T(s, dir, "customer")
-      val ostats = T(s, dir, "orders").groupBy(col("o_custkey"))
-        .agg(count(lit(1)).cast("double").as("n_orders"),
-          decSum(col("o_totalprice")).as("order_total"))
-      val base = c.join(ostats, c("c_custkey") === ostats("o_custkey"), "left")
-        .drop("o_custkey")
-      HierarchicalZScore(base,
-        metrics = Seq("c_acctbal" -> 0.5, "order_total" -> 0.3, "n_orders" -> 0.2),
-        inner = Seq("c_mktsegment", "c_nationkey"),
-        outer = Seq("c_mktsegment"))
-        .select(col("c_custkey"), col("composite_score"))
-    }),
-
-    // ---- W3 peer percentile with fallback (ref calfundamentalscore.py:137-296)
-    "q08_peer_percentile" -> ((s, dir) => {
-      val inner = Seq(col("c_mktsegment"), col("c_nationkey"))
-      val outer = Seq(col("c_mktsegment"))
-      val c = T(s, dir, "customer")
-      // adaptive: drop the single-partition global window when no row
-      // can reach the 'all' fallback (identical results)
-      val g = PeerPercentile.needsGlobalLevel(c, outer)
-      c.select(
-        col("c_custkey"),
-        PeerPercentile.peerLevel(inner, outer).as("peer_level"),
-        PeerPercentile.percentile(col("c_acctbal"), inner, outer,
-          includeGlobal = g).as("pct_bal"),
-        PeerPercentile.percentile(col("c_acctbal"), inner, outer,
-          valuation = true, includeGlobal = g).as("pct_val"))
-    }),
-
-    // ---- W4 rank within group (ref calfundamentalscore.py:339-346)
-    "q09_rank_in_segment" -> ((s, dir) => {
-      T(s, dir, "customer").select(
-        col("c_custkey"), col("c_mktsegment"),
-        RankOps.rankInGroup(col("c_acctbal"), col("c_custkey"),
-          col("c_mktsegment")).cast("long").as("seg_rank"))
-    }),
-
-    // ---- W5 min-max normalize per group (ref sectorscore.py:72-78)
-    "q10_minmax_brand" -> ((s, dir) => {
-      T(s, dir, "part").select(
-        col("p_partkey"), col("p_brand"), col("p_retailprice"),
-        RankOps.minMaxNorm(col("p_retailprice"), col("p_brand")).as("norm_price"))
-    }),
-
-    // ---- A6/A7 weighted sum + renormalized weighted average
-    // (ref calcompositescore.py:161-198, calfundamentalscore.py:206-228)
-    "q11_weighted_blend" -> ((s, dir) => {
-      val c = T(s, dir, "customer")
-      val ostats = T(s, dir, "orders").groupBy(col("o_custkey"))
-        .agg(count(lit(1)).cast("double").as("n_orders"),
-          decSum(col("o_totalprice")).as("order_total"))
-      c.join(ostats, c("c_custkey") === ostats("o_custkey"), "left")
-        .select(col("c_custkey"),
-          WeightedScore.weightedSum(Seq(
-            col("c_acctbal") -> 0.4, col("order_total") -> 0.35,
-            col("n_orders") -> 0.25)).as("wsum"),
-          WeightedScore.renormalizedWeightedAvg(Seq(
-            col("c_acctbal") -> 0.4, col("order_total") -> 0.35,
-            col("n_orders") -> 0.25)).as("wavg"))
-    }),
-
-    // ---- T2/T3 deterministic top-k (ref calcompositescore.py:397)
-    "q12_top_orders" -> ((s, dir) => {
-      RankOps.topK(T(s, dir, "orders"), 10, col("o_totalprice"), col("o_orderkey"))
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-    }),
-
-    // ---- F3 ordinal rating map + grouped stats (ref calcompositescore
-    // .py:100-109); priorities play the role of analyst ratings
-    "q13_priority_ordinal" -> ((s, dir) => {
-      val ord = Map("1-URGENT" -> 5, "2-HIGH" -> 4, "3-MEDIUM" -> 3,
-        "4-NOT SPECIFIED" -> 2, "5-LOW" -> 1)
-      val mapped = ord.toSeq.sortBy(_._1).foldRight(lit(3): Column) {
-        case ((k, v), acc) => when(col("o_orderpriority") === k, lit(v)).otherwise(acc)
+  /** Build every store in [[graft.catalog.Stages.prebuild]], in order,
+    * clearing the cache after each: Bench runs this untimed before the
+    * timed repeats. Returns (store, build_seconds) — near zero per store
+    * on a warm checkout. A failed build is logged and timed, not
+    * raised. */
+  def prebuildStages(s: SparkSession, dir: String): Seq[(String, Double)] =
+    Stages.prebuild.map { case (name, build) =>
+      val t0 = System.nanoTime()
+      try build(s, dir) catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[stage-prebuild] $name failed: ${e.getMessage}")
       }
-      T(s, dir, "orders").select(col("o_orderstatus"), mapped.as("prio_ord"))
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("prio_ord")).cast("long").as("sum_ord"),
-          (sum(col("prio_ord")) / count(lit(1))).as("avg_ord"))
-    }),
-
-    // ---- F1-ish JSON-ish numeric extraction + event aggregation
-    "q14_props_parse" -> ((s, dir) => {
-      T(s, dir, "events")
-        .select(col("event_type"),
-          regexp_extract(col("props"), "([0-9]+)", 1).try_cast("long").as("k"),
-          col("value"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
-          (sum(col("k")) / count(col("k"))).as("avg_k"),
-          decSum(col("value")).as("value_sum"))
-    }),
-
-    // ---- gap sessionization (streaming-shaped batch; §2.9)
-    "q15_sessionize" -> ((s, dir) => {
-      Sessionize.sessions(
-        T(s, dir, "events").select(col("user_id"), col("event_id"),
-          col("value"), tsSec.as("ts_s")),
-        "user_id", col("ts_s"), 1800L, col("event_id"))
-        .groupBy(col("user_id"), col("session_seq"))
-        .agg(count(lit(1)).as("n_events"),
-          (max(col("ts_s")) - min(col("ts_s"))).as("span"),
-          decSum(col("value")).as("value_sum"))
-    }),
-
-    // ---- tumbling-window aggregation (batch twin of streaming agg; §2.9)
-    "q16_hourly_events" -> ((s, dir) => {
-      T(s, dir, "events")
-        .groupBy((TimeFns.floorDiv(tsSec, 3600L) * 3600L).as("window_start"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n_events"), decSum(col("value")).as("value_sum"))
-    }),
-
-    // ---- profiling: per-column table stats — the "describe" surface;
-    // integer/string columns only, every value integer- or
-    // string-rendered (float columns go through the histogram's
-    // scaled-integer path instead)
-    "q91_profile_columns" -> ((s, dir) =>
-      Profile.columns(T(s, dir, "orders"),
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"))),
-
-    // ---- profiling: exact equi-width histogram over integer cents —
-    // data-dependent integer bounds, broadcast back; one row per
-    // non-empty bucket
-    "q92_histogram" -> ((s, dir) =>
-      Profile.histogram(
-        T(s, dir, "orders").select(
-          expr("cast(round(o_totalprice * 100, 0) as bigint)").as("cents")),
-        "cents", nBuckets = 10)),
-
-    // ---- analytics: retention cohorts — users grouped by first-seen
-    // day, activity counted at each day offset: the classic retention
-    // matrix. Distinct user-day grid first (map-side combinable), then
-    // one broadcast-scale cohort join; all integer day arithmetic.
-    "q89_retention_cohorts" -> ((s, dir) => {
-      val userDay = T(s, dir, "events")
-        .filter(col("user_id").isNotNull)
-        .select(col("user_id"), TimeFns.floorDiv(tsSec, 86400L).as("day"))
-        .distinct()
-      val cohort = userDay.groupBy(col("user_id"))
-        .agg(min(col("day")).as("cohort_day"))
-      userDay.join(cohort, "user_id")
-        .groupBy(col("cohort_day"),
-          (col("day") - col("cohort_day")).as("day_offset"))
-        .agg(count(lit(1)).as("n_users"))
-    }),
-
-    // ---- analytics: ordered conversion funnel — per user the FIRST
-    // view, the first click strictly AFTER it, the first purchase
-    // strictly after that; per-stage user counts. Three keyed
-    // aggregate+join stages (each min() is map-side combinable), no
-    // windows, integer epoch seconds end to end.
-    "q90_funnel_steps" -> ((s, dir) => {
-      val e = T(s, dir, "events")
-        .filter(col("user_id").isNotNull)
-        .select(col("user_id"), col("event_type"), tsSec.as("ts_s"))
-      val v = e.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("ts_s")).as("t1"))
-      val c = e.filter(col("event_type") === "click")
-        .join(v, "user_id").filter(col("ts_s") > col("t1"))
-        .groupBy(col("user_id")).agg(min(col("ts_s")).as("t2"))
-      val p = e.filter(col("event_type") === "purchase")
-        .join(c, "user_id").filter(col("ts_s") > col("t2"))
-        .groupBy(col("user_id")).agg(min(col("ts_s")).as("t3"))
-      def stage(name: String, df: DataFrame) =
-        df.agg(count(lit(1)).as("n_users"))
-          .select(lit(name).as("step"), col("n_users"))
-      stage("1_view", v).unionByName(stage("2_click", c))
-        .unionByName(stage("3_purchase", p))
-    }),
-
-    // ---- built-in session windows (the native Spark sessionization
-    // operator; q15 is the lag/cumsum formulation of the same thing)
-    "q32_session_window" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-        .withColumn("ts_t", timestamp_micros(TimeFns.floorDiv(col("ts"), 1000L)))
-      ev.groupBy(session_window(col("ts_t"), "30 minutes").as("w"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"), decSum(col("value")).as("value_sum"))
-        .select(col("user_id"),
-          unix_micros(col("w.start")).as("start_us"),
-          unix_micros(col("w.end")).as("end_us"),
-          col("n_events"), col("value_sum"))
-    }),
-
-    // ---- exact quantiles per group (sort-based percentile aggregate).
-    // Computed over integer cents: midpoint interpolation of 2dp doubles
-    // lands exactly on round-half boundaries where engines disagree;
-    // integer inputs make the lerp exact in binary, so no rounding at
-    // all is needed.
-    "q35_quantiles" -> ((s, dir) => {
-      // window-rank exact quantiles: one in-group sort + boundary-row
-      // pick + type-7 lerp (lo + (hi-lo)*frac — the formula both Spark's
-      // percentile() and DuckDB's quantile_cont use), over integer cents
-      // so the lerp is engine-exact. Beats the builtin percentile()
-      // aggregate, which serializes every group value through its
-      // partial buffers. (Exact per-group quantiles inherently
-      // concentrate each group; approx_percentile is the at-scale path.)
-      import org.apache.spark.sql.expressions.Window
-      val cents = expr("cast(round(l_extendedprice * 100, 0) as bigint)")
-      val wSort = Window.partitionBy(col("l_returnflag")).orderBy(col("cents"))
-      val wAll = Window.partitionBy(col("l_returnflag"))
-      val ranked = T(s, dir, "lineitem")
-        .select(col("l_returnflag"), cents.as("cents"))
-        .withColumn("rn", row_number().over(wSort).cast("long"))
-        .withColumn("n", count(lit(1)).over(wAll))
-      val qs = Seq("p25" -> 0.25, "p50" -> 0.5, "p75" -> 0.75, "p95" -> 0.95)
-      val aggs = qs.flatMap { case (nm, q) =>
-        val pos = lit(q) * (col("n") - 1).cast("double") // 0-based position
-        Seq(
-          max(when(col("rn") === (floor(pos) + 1), col("cents"))).as(s"${nm}_lo"),
-          max(when(col("rn") === (ceil(pos) + 1), col("cents"))).as(s"${nm}_hi"),
-          max(pos - floor(pos)).as(s"${nm}_f"))
-      }
-      val picked = ranked.groupBy(col("l_returnflag")).agg(aggs.head, aggs.tail: _*)
-      val outs = qs.map { case (nm, _) =>
-        ((col(s"${nm}_lo") +
-          (col(s"${nm}_hi") - col(s"${nm}_lo")).cast("double") * col(s"${nm}_f"))
-          / 100.0).as(nm)
-      }
-      picked.select(col("l_returnflag") +: outs: _*)
-    }),
-
-    // ---- stats: robust (median/MAD) z-score per group — the
-    // outlier-resistant twin of q07's mean/std scoring; every
-    // intermediate stays integral via the doubled-units trick, one
-    // double formula at the end
-    "q76_robust_zscore" -> ((s, dir) =>
-      RobustScore.madZScore(
-          T(s, dir, "lineitem")
-            .select(col("l_orderkey"), col("l_linenumber"),
-              col("l_returnflag"), col("l_extendedprice")),
-          groupCols = Seq("l_returnflag"),
-          valueUnits = expr("cast(round(l_extendedprice * 100, 0) as bigint)"))
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-          col("med2"), col("mad4"), col("robust_z"))),
-
-    // ---- stats: per-group Pearson correlation from exact integer-unit
-    // accumulators (builtin corr is a partial-order-dependent co-moment
-    // recursion — it can flap the hash gate); one double formula at the
-    // end, mirrored in the oracle with VARCHAR-route decimal casts
-    "q75_group_correlation" -> ((s, dir) =>
-      GroupStats.pearson(T(s, dir, "lineitem"),
-        groupCols = Seq("l_returnflag"),
-        xUnits = expr("round(l_extendedprice * 100, 0)"),
-        yUnits = expr("round(l_quantity, 0)"))),
-
-    // ---- feature scaling: per-group winsorization — clip prices to the
-    // group's exact [p05, p95] type-7 band (q35's integer-cents lerp
-    // discipline), bounds broadcast back, codegen'd clip
-    "q74_winsorize" -> ((s, dir) =>
-      Winsorize.clipToQuantiles(
-          T(s, dir, "lineitem")
-            .select(col("l_orderkey"), col("l_linenumber"),
-              col("l_returnflag"), col("l_extendedprice")),
-          groupCols = Seq("l_returnflag"),
-          valueUnits = expr("cast(round(l_extendedprice * 100, 0) as bigint)"),
-          scale = 100L, pLow = 0.05, pHigh = 0.95)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-          col("wins_lo"), col("wins_hi"), col("wins_value"))),
-
-    // ---- set operations: INTERSECT / EXCEPT (§2.7 — the reference only
-    // has the anti-join form; these are the explicit relational twins)
-    "q38_set_ops" -> ((s, dir) => {
-      val rich = T(s, dir, "customer").filter(col("c_acctbal") > 5000)
-        .select(col("c_custkey"))
-      val buyers = T(s, dir, "orders").select(col("o_custkey").as("c_custkey"))
-      val both = rich.intersect(buyers).withColumn("set_op", lit("rich_buyer"))
-      val idle = rich.except(buyers).withColumn("set_op", lit("rich_idle"))
-      both.unionByName(idle)
-    }),
-
-    // ---- pivot: event counts by type across hour-of-day buckets
-    "q39_pivot" -> ((s, dir) => {
-      val types = Seq("click", "error", "purchase", "signup", "view")
-      T(s, dir, "events")
-        .withColumn("hod", TimeFns.floorDiv(tsSec, 3600L) % 24)
-        .groupBy(col("hod"))
-        .pivot("event_type", types)
-        .agg(count(lit(1)))
-        .na.fill(0L, types)
-    }),
-
-    // ---- S7/S9 upsert merge as a query: per-customer order aggregates
-    // merged onto customer rows by key — incoming wins per column where
-    // non-null, existing-only columns survive, incoming-only columns
-    // append (MergeByKey.merge, the sink's transform core; the
-    // staging-swap write path around it is spec-covered)
-    "q41_merge_upsert" -> ((s, dir) => {
-      val existing = T(s, dir, "customer")
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-      val incoming = T(s, dir, "orders")
-        .groupBy(col("o_custkey").as("c_custkey"))
-        .agg(decSum(col("o_totalprice")).as("c_acctbal"),
-          count(lit(1)).as("n_orders"))
-      graft.sinks.MergeByKey.merge(existing, incoming, "c_custkey")
-    }),
-
-    // ---- A8 merge accounting: count reconciliation over the same merge.
-    // upserted = rows an incoming key landed on (updated OR appended —
-    // this schema's FK makes them all updates, but the metric must not
-    // claim to distinguish); untouched = existing-only rows.
-    "q42_merge_stats" -> ((s, dir) => {
-      val merged = queries("q41_merge_upsert")(s, dir)
-      merged.agg(
-        count(lit(1)).as("merged_rows"),
-        count(col("n_orders")).as("upserted_rows"),
-        (count(lit(1)) - count(col("n_orders"))).as("untouched_rows"))
-    }),
-
-    // ---- F6 metric cap + F11 truncation as column functions
-    "q43_caps_truncate" -> ((s, dir) =>
-      T(s, dir, "part").select(col("p_partkey"),
-        Cleanse.capAt(col("p_retailprice"), 1500.0).as("capped_price"),
-        Cleanse.truncateTo(col("p_name"), 12).as("short_name"))),
-
-    // ---- P4 scrape-noise predicate over a name column (p_name lengths
-    // span 7-12 on this corpus, so maxLen = 9 makes the length clause
-    // actually drop rows instead of vacuously passing everything)
-    "q44_scrape_filter" -> ((s, dir) =>
-      T(s, dir, "part")
-        .filter(graft.sources.CsvIngest.scrapeNoiseFilter(
-          col("p_name"), maxLen = 9))
-        .select(col("p_partkey"), col("p_name"))),
-
-    // ---- skew tooling: two-phase salted aggregate must equal the plain
-    // groupBy (l_quantity is integral, so double sums are exact and
-    // order-independent — the oracle can be the unsalted SQL aggregate)
-    "q45_skew_two_phase" -> ((s, dir) =>
-      SkewJoin.twoPhaseAgg(T(s, dir, "lineitem"),
-        "l_returnflag", salts = 8, valueCol = "l_quantity")
-        .withColumnRenamed("n", "n_rows")
-        .withColumnRenamed("sum", "sum_qty")),
-
-    // ---- skew tooling: salted replicate-join must equal the plain join
-    "q46_salted_join" -> ((s, dir) => {
-      val o = T(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey").as("c_custkey"))
-      val c = T(s, dir, "customer")
-        .select(col("c_custkey"), col("c_mktsegment"))
-      SkewJoin.saltedJoin(o, c, "c_custkey", salts = 8,
-        bigUnique = col("o_orderkey"))
-        .select(col("o_orderkey"), col("c_custkey"), col("c_mktsegment"))
-    }),
-
-    // ---- distinct aggregation (expand-based multi-distinct)
-    "q36_distinct_users" -> ((s, dir) => {
-      T(s, dir, "events")
-        .groupBy(col("event_type"))
-        .agg(
-          countDistinct(col("user_id")).as("n_users"),
-          countDistinct(TimeFns.floorDiv(tsSec, 86400L)).as("n_days"),
-          count(lit(1)).as("n_events"))
-    }),
-
-    // ---- KMV sketch distinct estimate (custom TypedImperativeAggregate).
-    // HASH-GATED since round 9 (the q24 SimHash precedent): string keys
-    // hash through md5-prefix64 and the estimator is pure 128-bit
-    // integer arithmetic, so a DuckDB oracle recomputes the identical
-    // k minima and the identical estimate — the sketch VALUE is exact
-    // deterministic SQL, not just a bounded approximation.
-    "q37_approx_distinct_kmv" -> ((s, dir) => {
-      T(s, dir, "events")
-        .groupBy(col("event_type"))
-        .agg(graft.expressions.KMVSketch
-          .approx_distinct_kmv(col("user_id").cast("string"), k = 256)
-          .as("approx_users"))
-    }),
-
-    // ---- as-of join: each purchase to the user's latest prior click
-    "q34_asof_join" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("event_id").as("click_event_id"))
-      AsOfJoin.leftAsOf(purchases, clicks, Seq("user_id"), "ts", "ts",
-        rightPayload = Seq("click_event_id", "ts"))
-        .select(col("event_id"), col("user_id"), col("value"),
-          col("right_click_event_id").as("prior_click_id"),
-          // floorDiv (not `div`) for consistency with the floor-division
-          // sweep — the ASOF join guarantees ts >= right_ts so the two
-          // agree here, but gap arithmetic should not carry a latent
-          // truncate-vs-floor divergence waiting for a negative input
-          TimeFns.floorDiv(col("ts") - col("right_ts"), 1000000000L)
-            .as("gap_s"))
-    }),
-
-    // ---- text analysis: token counting
-    "q17_token_counts" -> ((s, dir) =>
-      TextAnalysis.tokenCounts(T(s, dir, "documents"), "doc_id", "text")),
-
-    // ---- text analysis: quality scoring
-    "q18_quality_score" -> ((s, dir) =>
-      TextAnalysis.qualityScore(T(s, dir, "documents"), "doc_id", "text")),
-
-    // ---- text analysis: language-ID (marker heuristic)
-    "q19_langid" -> ((s, dir) =>
-      TextAnalysis.languageId(T(s, dir, "documents"), "doc_id", "text")),
-
-    // ---- text analysis: fingerprint + surrogate key (F8)
-    "q20_fingerprint" -> ((s, dir) =>
-      TextAnalysis.fingerprints(T(s, dir, "documents"), "doc_id", "text")),
-
-    // ---- winnowing fingerprints (rolling-hash k-grams, window minima)
-    "q33_winnowing" -> ((s, dir) =>
-      TextAnalysis.winnowingFingerprints(T(s, dir, "documents"),
-        "doc_id", "text", k = 8, w = 4)),
-
-    // ---- dedup: exact content hash
-    "q21_dedup_exact" -> ((s, dir) =>
-      Dedup.exact(T(s, dir, "documents"), "doc_id", "text")),
-
-    // ---- dedup: exact n-gram Jaccard near-dup pairs
-    "q22_jaccard_pairs" -> ((s, dir) =>
-      Dedup.jaccardNearDup(T(s, dir, "documents"), "doc_id", "text",
-        n = 3, threshold = 0.5)),
-
-    // ---- dedup: MinHash+LSH candidates, verified — r=2/b=32 gives
-    // recall ≈ 1-(1-s²)³² ≈ 0.99995 at s=0.5, so it must reproduce the
-    // exact-Jaccard oracle. Probes the STAGED corpus index (shared with
-    // q73): the signature build happens once per corpus, not per run.
-    "q23_minhash_pairs" -> ((s, dir) =>
-      Dedup.minhashLSHFromIndex(stagedDocsIndex(s, dir), threshold = 0.5)),
-
-    // ---- cleanse: Unicode NFC normalization — the canonicalization
-    // stage multilingual dedup/tokenization needs ("é" composed vs
-    // decomposed is one text, two byte forms). Gated against DuckDB's
-    // own nfc_normalize: Java Normalizer and utf8proc implement the
-    // same Unicode standard, and the already_nfc flag pins that BOTH
-    // agree on normalized-ness per row. The gate surface is pinned to
-    // Unicode-VERSION-stable rows BY CONSTRUCTION: normalized text is
-    // emitted only for pure-ASCII rows (octet_length == char_length —
-    // a dialect-stable test, no regex), where NFC is the identity
-    // under every Unicode version. Today's corpora are all-ASCII so
-    // every row is exercised; if testdata ever gains non-ASCII text,
-    // those rows gate NULL instead of JDK-vs-utf8proc version skew
-    // (the r8 advisor's q71-class flap concern). The richer NFKC +
-    // control/zero-width cleaning path (TextFns.canonicalizeText) is
-    // spec-tested on real multilingual fixtures.
-    "q79_unicode_normalize" -> ((s, dir) => {
-      val asciiOnly = octet_length(col("text")) === length(col("text"))
-      T(s, dir, "documents").select(col("doc_id"),
-        asciiOnly.as("ascii_only"),
-        when(asciiOnly,
-          graft.expressions.UnicodeNormalize(col("text"), "NFC"))
-          .as("text_nfc"),
-        when(asciiOnly,
-          graft.expressions.UnicodeNormalize(col("text"), "NFC") ===
-            col("text")).as("already_nfc"))
-    }),
-
-    // ---- curation: exact token-budget apportionment across sources —
-    // largest-remainder (Hamilton) allocation of a 100k-token budget
-    // proportional to per-source token volume, entirely in integer
-    // arithmetic (gate-safe by construction; the q71 discipline at
-    // design time). The windows run on the GROUPED frame (20 sources),
-    // not the corpus.
-    "q80_budget_apportion" -> ((s, dir) => {
-      val toks = sourceTokens(s, dir)
-      Apportion.largestRemainder(toks, "source", "n_tokens",
-        budget = 100000L)
-    }),
-
-    // ---- curation: epoch plan for UPSAMPLING mixtures — when a
-    // source's allocation exceeds its volume it repeats: whole passes
-    // + a fractional pass, all integer division over q80's allocation
-    "q88_epoch_plan" -> ((s, dir) => {
-      val toks = sourceTokens(s, dir)
-      Apportion.epochPlan(toks, "source", "n_tokens", budget = 100000L)
-    }),
-
-    // ---- curation: Gopher rule gates (Rae et al. §A1.1) — hard
-    // keep/drop quality rules; every ratio bound evaluated by integer
-    // cross-multiplication, so the output is longs + booleans only
-    "q81_gopher_rules" -> ((s, dir) =>
-      TextAnalysis.gopherRules(T(s, dir, "documents"), "doc_id", "text",
-        minWords = 50L, maxWords = 100000L)),
-
-    // ---- similarity: batched exact retrieval — top-10 per query for
-    // a 5-query batch in ONE corpus scan (broadcast query set), with
-    // partition-local then global top-k so no corpus-wide sort exists
-    // at any scale
-    "q82_ann_batch" -> ((s, dir) =>
-      SimilaritySearch.bruteForceTopKBatch(T(s, dir, "embeddings"),
-        "vec_id", "embedding", queryIds = Seq(0L, 1L, 2L, 3L, 4L),
-        k = 10)),
-
-    // ---- curation: per-source data card — docs, token/char volume,
-    // language spread, corpus-wide exact-duplicate exposure; the
-    // summary table a curation run publishes with the dataset
-    "q83_data_card" -> ((s, dir) =>
-      DataCard.perSource(T(s, dir, "documents"), "doc_id", "text",
-        "source", "lang")),
-
-    // ---- curation: cross-source duplication matrix — which source
-    // duplicates which: per unordered source pair, shared fingerprint
-    // count, set sizes, and the exact Jaccard of the fingerprint sets
-    // (e4-scaled integer). The governance view q83's corpus-wide
-    // n_dup_docs cannot answer.
-    "q93_source_overlap" -> ((s, dir) =>
-      DataCard.sourceOverlap(T(s, dir, "documents"), "doc_id", "text",
-        "source")),
-
-    // ---- curation: exact-dedup impact report — what a keep-first
-    // dedup pass would remove, per source (docs and token volume); the
-    // "how much does dedup cost each source" planning number
-    "q94_dedup_impact" -> ((s, dir) =>
-      DataCard.dedupImpact(T(s, dir, "documents"), "doc_id", "text",
-        "source")),
-
-    // ---- dedup: asymmetric containment pairs — |A∩B|/min(|A|,|B|)
-    // catches subset-style duplication Jaccard underweights (short doc
-    // embedded in a long one); both directed containments ship as
-    // e4-scaled longs, threshold by integer cross-multiplication
-    "q95_containment_pairs" -> ((s, dir) =>
-      Dedup.containmentPairs(T(s, dir, "documents"), "doc_id", "text",
-        n = 3, thrNum = 6, thrDen = 10)),
-
-    // ---- linkage: blocked fuzzy self-join on part names — same first
-    // token AND 1 ≤ levenshtein ≤ 3 (exact dups excluded: those are
-    // Dedup.exact's job); length prune before the DP kernel
-    "q96_fuzzy_join" -> ((s, dir) =>
-      FuzzyJoin.byEditDistance(T(s, dir, "part"), "p_partkey", "p_name",
-        maxDist = 3, minDist = 1)),
-
-    // ---- curation: per-source percentile-band trim — keep docs whose
-    // n_chars sits in the (p10, p90] band of their source; exact
-    // row_number semantics, integer cross-multiplied cut
-    "q97_percentile_band" -> ((s, dir) =>
-      Sampling.percentileBand(T(s, dir, "documents"), "source",
-        "n_chars", "doc_id", loPct = 10, hiPct = 90)),
-
-    // ---- analytics: burst detection — hours whose event count ≥ 2×
-    // the trailing-24-observed-hours average per type, with a
-    // 12-hour minimum baseline; all-long surface, division-free
-    "q98_burst_hours" -> ((s, dir) =>
-      EventAnalytics.burstHours(T(s, dir, "events"), "event_type", "ts",
-        trailingHours = 24, minTrailing = 12, multNum = 2, multDen = 1)),
-
-    // ---- analytics: rolling 7-day distinct active users per observed
-    // day — explode-to-contributing-days formulation (three linear
-    // shuffles), not a range join
-    "q99_rolling_active" -> ((s, dir) =>
-      EventAnalytics.rollingActiveUsers(T(s, dir, "events"), "user_id",
-        "ts", windowDays = 7)),
-
-    // ---- training-set QA: hard-negative mining — per anchor, top-10
-    // highest-cosine vectors of a DIFFERENT label (one corpus scan,
-    // broadcast anchors, two-phase top-k; q82's plan + label pushdown)
-    "q100_hard_negatives" -> ((s, dir) =>
-      SimilaritySearch.hardNegativesBatch(T(s, dir, "embeddings"),
-        "vec_id", "embedding", "label",
-        queryIds = Seq(0L, 1L, 2L, 3L, 4L), k = 10)),
-
-    // ---- training-set QA: label-noise candidates — near-dup pairs
-    // (cosine ≥ 0.45, the q29 kernel) whose labels DISAGREE; labels
-    // join the surviving pairs, never the quadratic stream
-    "q101_label_noise_pairs" -> ((s, dir) =>
-      SimilaritySearch.crossLabelNearDup(T(s, dir, "embeddings"),
-        "vec_id", "embedding", "label", threshold = 0.45)),
-
-    // ---- curation: per-domain cap — keep the 15 longest docs per
-    // source (C4/RefinedWeb-style domain cap, best-first survivors)
-    "q102_source_cap" -> ((s, dir) =>
-      Sampling.capPerGroup(T(s, dir, "documents"), "source", "n_chars",
-        "doc_id", cap = 15)),
-
-    // ---- dedup: line-level CROSS-document dedup (the CCNet/RefinedWeb
-    // paragraph stage) — 10-word units appearing in more than one doc
-    // are boilerplate and are cut from every carrier; complements q21
-    // (whole-doc) and q71/q87 (within-doc spans)
-    "q103_line_dedup" -> ((s, dir) =>
-      LineDedup.trimReport(T(s, dir, "documents"), "doc_id", "text",
-        lineWords = 10, maxDocFreq = 1L)),
-
-    // ---- dedup: prefix-filtered EXACT Jaccard join (AllPairs/PPJoin
-    // family) — the zero-false-negative alternative to q23's MinHash:
-    // same output as q22 (same oracle gates both), but candidates come
-    // from rarest-first shingle prefixes instead of signatures
-    "q104_jaccard_prefix_join" -> ((s, dir) =>
-      Dedup.prefixFilteredJaccard(T(s, dir, "documents"), "doc_id",
-        "text", n = 3, thrNum = 1L, thrDen = 2L)),
-
-    // ---- similarity: int8-QUANTIZED ANN — byte codes (4× smaller than
-    // float32) feed the same fused cosine kernel, scales cancel, no
-    // dequantization. Gate = q26's shape: exact top-10 surface +
-    // recall_ok vs the quantized probe (measured 10/10/9 at
-    // sf0.001/0.01/0.1; gate >= 8)
-    "q105_ann_quantized" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val quant = SimilaritySearch.quantizedTopK(emb,
-        "vec_id", "embedding", queryId = 0L, k = 10)
-      val exact = graft.Caches.register(SimilaritySearch.bruteForceTopK(
-        emb, "vec_id", "embedding", queryId = 0L, k = 10).persist())
-      val overlap = exact
-        .join(quant.select(col("vec_id")), Seq("vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_overlap"))
-      exact.crossJoin(broadcast(overlap))
-        .select(col("vec_id"), col("cosine"),
-          (col("n_overlap") >= 8).as("recall_ok"))
-    }),
-
-    // ---- similarity: product-quantization ANN with shortlist + exact
-    // re-rank (FAISS IndexRefine shape) — 16-byte codes shortlist 100
-    // candidates by ADC, only those fetch float vectors. Gate = q26's
-    // shape (measured 10/10/9; gate >= 7 — i.i.d.-noise testdata is
-    // PQ's hardest regime and data regenerates every round)
-    "q106_ann_pq" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val pq = SimilaritySearch.pqTopKRefined(emb,
-        "vec_id", "embedding", queryId = 0L, k = 10,
-        m = 16, nCodes = 64, shortlist = 100)
-      val exact = graft.Caches.register(SimilaritySearch.bruteForceTopK(
-        emb, "vec_id", "embedding", queryId = 0L, k = 10).persist())
-      val overlap = exact
-        .join(pq.select(col("vec_id")), Seq("vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_overlap"))
-      exact.crossJoin(broadcast(overlap))
-        .select(col("vec_id"), col("cosine"),
-          (col("n_overlap") >= 7).as("recall_ok"))
-    }),
-
-    // ---- similarity: MATRYOSHKA prefix-dim ANN — shortlist on the
-    // first 16 of 64 components (4× cheaper coarse scan, no trained
-    // codebook), exact full-dim re-rank of the 100-shortlist; q26's
-    // gate shape (shortlist 100 of 500 on i.i.d. noise: prefix cosine
-    // is a weak proxy in the hardest regime, so the bar matches
-    // q31's >= 4)
-    "q172_ann_matryoshka" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val mat = SimilaritySearch.matryoshkaTopKRefined(emb,
-        "vec_id", "embedding", queryId = 0L, k = 10,
-        prefixDim = 16, shortlist = 100)
-      val exact = graft.Caches.register(SimilaritySearch.bruteForceTopK(
-        emb, "vec_id", "embedding", queryId = 0L, k = 10).persist())
-      val overlap = exact
-        .join(mat.select(col("vec_id")), Seq("vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_overlap"))
-      exact.crossJoin(broadcast(overlap))
-        .select(col("vec_id"), col("cosine"),
-          (col("n_overlap") >= 4).as("recall_ok"))
-    }),
-
-    // ---- curation: n-gram NOVELTY per doc — the fraction of a doc's
-    // grams first seen in that doc (ingestion-order diversity decay;
-    // the marginal-contribution score greedy data selection uses)
-    "q107_ngram_novelty" -> ((s, dir) =>
-      TextAnalysis.ngramNovelty(T(s, dir, "documents"), "doc_id",
-        "text", n = 3)),
-
-    // ---- graph: deterministic integer-scaled PageRank (the link-graph
-    // source-quality signal crawl curation ranks domains by) over the
-    // customer→supplier purchase graph — every rank is an exact long
-    // lineage (e6 mass, IntegralDivide contributions), so 5 unrolled
-    // iterations hash-match the DuckDB CTE chain bit for bit.
-    // Edges come from the STAGED purchase-graph store (r14) — built
-    // once per corpus, shared with q242.
-    "q108_pagerank" -> ((s, dir) =>
-      GraphRank.pageRank(stagedPurchaseEdges(s, dir), "src", "dst",
-        iterations = 5)),
-
-    // ---- sketch: HyperLogLog distinct users per event type — the
-    // industry-standard mergeable counter next to q37's KMV. Gate
-    // surface = exact integer register summary (v_zero, s40) + the
-    // raw-formula estimate (one literal IEEE chain; the ln-based
-    // linear-counting correction is production-only — libm isn't
-    // bit-portable, see HllSketch scaladoc)
-    "q109_hll_distinct" -> ((s, dir) =>
-      T(s, dir, "events")
-        .groupBy(col("event_type"))
-        .agg(graft.expressions.HllSketch
-          .hll_sketch(col("user_id").cast("string")).as("h"))
-        .select(col("event_type"), col("h.v_zero").as("v_zero"),
-          col("h.s40").as("s40"), col("h.est_hll").as("est_hll"))),
-
-    // ---- eval hygiene: cross-split near-dup LEAKAGE — pairs of
-    // near-copies whose endpoints landed in different q50 splits:
-    // the train→eval contamination a per-doc hash split cannot see
-    "q110_split_leakage" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val pairs = lshNearDupPairs(s, dir, threshold = 0.45)
-      val splits = Sampling.splitByHash(emb.select(col("vec_id")),
-        "vec_id", weights = Seq(200, 32, 24),
-        labels = Seq("train", "val", "test"))
-      Decontaminate.splitLeakage(pairs, "id_a", "id_b",
-        splits, "vec_id")
-    }),
-
-    // ---- features: recency-weighted user activity — Σ (4/5)^age_days
-    // per user with EXACT e6-scaled integer decay powers (no libm pow);
-    // reference day = the table's max event day
-    "q111_decay_activity" -> ((s, dir) =>
-      EventAnalytics.decayActivity(T(s, dir, "events"),
-        "user_id", "ts", decayNum = 4, decayDen = 5, maxAgeDays = 30)),
-
-    // ---- dedup: content-defined chunking (rsync/LBFS boundaries on
-    // the md5-prefix64 of an 8-char rolling window, expected chunk
-    // 32 chars) — the chunker whose chunk identities SURVIVE edits,
-    // so chunk-level dedup across near-identical docs fires
-    "q112_cdc_chunks" -> ((s, dir) =>
-      Chunking.contentDefinedChunks(T(s, dir, "documents"),
-        "doc_id", "text", k = 8, maskBits = 5)),
-
-    // ---- curation: per-doc OOV rate against the q67 vocabulary —
-    // the tokenizer-coverage metric a vocab choice is judged by
-    "q113_oov_rate" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      VocabBuild.oovReport(docs, "doc_id", "text",
-        VocabBuild.topTokens(docs, "doc_id", "text",
-          topK = 20, minDocFreq = 2L))
-    }),
-
-    // ---- sketch ROLL-UP: per-type HLL register partials merged into
-    // the global sketch (hll_registers → hll_merge → hll_summary) —
-    // the shard-wise pre-aggregation pattern. The oracle computes the
-    // GLOBAL sketch directly from rows, so a hash match PROVES the
-    // merge is lossless (merged-partials ≡ one-shot, bit for bit)
-    "q114_hll_rollup" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-      ev.groupBy(col("event_type"))
-        .agg(graft.expressions.HllSketch
-          .hll_registers(col("user_id").cast("string")).as("regs"))
-        .agg(graft.expressions.HllSketch.hll_merge(col("regs")).as("m"))
-        .select(graft.expressions.HllSketch.hll_summary(col("m")).as("h"))
-        .select(col("h.v_zero").as("v_zero"), col("h.s40").as("s40"),
-          col("h.est_hll").as("est_hll"))
-    }),
-
-    // ---- profiling: shuffle-key skew report — the hottest l_partkey
-    // values with exact shares: the pre-join sizing query that decides
-    // "salt or not" (FuzzyJoin's salt derivation automates the same)
-    "q115_skew_report" -> ((s, dir) =>
-      Profile.keySkew(T(s, dir, "lineitem"), "l_partkey", topK = 10)),
-
-    // ---- stats: per-group OLS trend (drift detection) — slope and
-    // intercept of value~day as exact e6 rationals, signed half-away
-    // rounding mirrored in the oracle; no float in the lineage
-    "q116_group_trend" -> ((s, dir) =>
-      GroupStats.olsTrend(T(s, dir, "events"),
-        groupCols = Seq("event_type"),
-        xUnits = TimeFns.floorDiv(col("ts"), 86400L * 1000000000L),
-        yUnits = expr("round(value * 100, 0)"))),
-
-    // ---- eval hygiene: LEAKAGE-FREE cluster-aware split — the fix
-    // for what q110 detects: splits assigned on the near-dup
-    // component representative, so a whole cluster lands on one side
-    "q118_cluster_split" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      Sampling.clusterAwareSplitFromComponents(
-        emb.select(col("vec_id")), "vec_id",
-        stagedNearDupComponents(s, dir), weights = Seq(200, 32, 24),
-        labels = Seq("train", "val", "test"))
-    }),
-
-    // ---- ETL audit: snapshot DIFF — what did the day's upsert DO?
-    // old = customers sans %7 keys; new = the q41-style merged state
-    // sans %5 keys: exercises added/removed/changed/unchanged plus
-    // per-column change attribution
-    "q119_snapshot_diff" -> ((s, dir) => {
-      val cust = T(s, dir, "customer")
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-      val inc = T(s, dir, "orders")
-        .groupBy(col("o_custkey").as("c_custkey"))
-        .agg(decSum(col("o_totalprice")).as("i_acctbal"))
-      val old = cust.filter(pmod(col("c_custkey"), lit(7)) =!= 0)
-      val neu = cust.join(inc, Seq("c_custkey"), "left")
-        .select(col("c_custkey"), col("c_name"),
-          coalesce(col("i_acctbal"), col("c_acctbal")).as("c_acctbal"))
-        .filter(pmod(col("c_custkey"), lit(5)) =!= 0)
-      SnapshotDiff.diff(old, neu, "c_custkey",
-        Seq("c_name", "c_acctbal"))
-    }),
-
-    // ---- monitoring: per-type daily counts + trailing-7-observed-day
-    // moving average (exact scaled integer) — the pipeline health
-    // series a scrape operator watches
-    "q120_rolling_metrics" -> ((s, dir) =>
-      EventAnalytics.rollingDailyMetrics(T(s, dir, "events"),
-        "event_type", "ts", windowRows = 7)),
-
-    // ---- linkage: sorted-neighborhood blocking — the skew-proof
-    // complement to q96's token blocks (candidates = exactly n·w)
-    "q121_sorted_neighborhood" -> ((s, dir) =>
-      FuzzyJoin.sortedNeighborhood(T(s, dir, "customer"),
-        "c_custkey", "c_name", windowSize = 5, maxDist = 2, minDist = 1)),
-
-    // ---- join: FORWARD as-of — each click to the user's NEXT
-    // purchase (attribution window / next-event labeling)
-    "q122_asof_forward" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"),
-          col("event_id").as("purchase_event_id"))
-      AsOfJoin.leftAsOfForward(clicks, purchases, Seq("user_id"),
-        "ts", "ts", rightPayload = Seq("purchase_event_id", "ts"))
-        .select(col("event_id"), col("user_id"),
-          col("right_purchase_event_id").as("next_purchase_id"),
-          TimeFns.floorDiv(col("right_ts") - col("ts"), 1000000000L)
-            .as("gap_s"))
-    }),
-
-    // ---- history: SCD Type-2 interval build — each user's event_type
-    // timeline collapsed into versioned [valid_from, valid_to) runs
-    // (gaps-and-islands); the dimension-history table you keep when
-    // the reference's daily overwrite-upsert would have destroyed it
-    "q123_scd2_history" -> ((s, dir) =>
-      SnapshotDiff.scd2History(T(s, dir, "events"), "user_id", "ts",
-        "event_type", "event_id")),
-
-    // ---- labeling: majority-vote resolution per user over event_type
-    // "annotations" — argmax with label-asc tie-break + exact-scaled
-    // agreement rate (the multi-annotator merge step)
-    "q124_majority_label" -> ((s, dir) =>
-      GroupStats.majorityLabel(T(s, dir, "events"), "user_id",
-        "event_type")),
-
-    // ---- text: bigram collocations — top-200 adjacent word pairs by
-    // exact e6-scaled PMI lift (the phrase-detection pass of a vocab
-    // pipeline; log-free so the gate stays rational)
-    "q125_collocations" -> ((s, dir) =>
-      TextAnalysis.collocations(T(s, dir, "documents"), "doc_id",
-        "text", minCount = 5L, topK = 200)),
-
-    // ---- association: market-basket co-occurrence over lineitem —
-    // parts co-ordered in the same order, support >= 3, with exact
-    // basket-Jaccard (per-basket-bounded pair expansion)
-    "q126_cooccurrence" -> ((s, dir) =>
-      CoOccurrence.basketPairs(T(s, dir, "lineitem"), "l_orderkey",
-        "l_partkey", minSupport = 3L, maxBasketSize = 64)),
-
-    // ---- monitoring: decile-bin distribution drift (exact TVD) —
-    // even-key orders are the reference snapshot, odd-key the current
-    // one; boundaries from reference ranks, assignment by value
-    "q127_bin_drift" -> ((s, dir) => {
-      val priceE2 = (col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-      val o = T(s, dir, "orders")
-      Drift.binDrift(
-        o.filter(pmod(col("o_orderkey"), lit(2)) === 0).select(priceE2.as("v")),
-        o.filter(pmod(col("o_orderkey"), lit(2)) === 1).select(priceE2.as("v")),
-        col("v"), nBins = 10)
-    }),
-
-    // ---- sampling: systematic weight-proportional draw — exactly 200
-    // picks over documents in proportion to n_chars, zero RNG (hash
-    // order + cumulative-weight stride crossings)
-    "q128_weighted_sample" -> ((s, dir) =>
-      Sampling.systematicWeighted(T(s, dir, "documents"), "doc_id",
-        "n_chars", n = 200)),
-
-    // ---- monitoring: pipeline-health anomalies — robust (median/MAD)
-    // z over each event type's daily count series, |z| >= 3 flags
-    // (q76's kernel composed over q120's daily grid: the "today's
-    // scrape is off" alarm)
-    "q129_metric_anomalies" -> ((s, dir) => {
-      val daily = T(s, dir, "events")
-        .groupBy(col("event_type"),
-          TimeFns.floorDiv(col("ts"), 86400L * 1000000000L).as("day"))
-        .agg(count(lit(1)).as("n_events"))
-      RobustScore.madZScore(daily, Seq("event_type"), col("n_events"))
-        .select(col("event_type"), col("day"), col("n_events"),
-          col("med2"), col("mad4"), col("robust_z"),
-          when(col("robust_z").isNotNull && abs(col("robust_z")) >= 3.0,
-            true).otherwise(false).as("is_anomaly"))
-    }),
-
-    // ---- embeddings: per-label prototypes — exact e6-unit class
-    // centroids + e12-unit variance per dimension (nearest-class-mean
-    // / cluster-coherence QA), zero float accumulation
-    "q130_label_prototypes" -> ((s, dir) =>
-      Prototypes.labelPrototypes(T(s, dir, "embeddings"), "embedding",
-        "label")),
-
-    // ---- privacy: k-anonymity / l-diversity audit over customer
-    // quasi-identifiers (nation, market segment), account balance as
-    // the sensitive attribute
-    "q131_k_anonymity" -> ((s, dir) =>
-      PrivacyAudit.kAnonymity(T(s, dir, "customer"),
-        Seq("c_nationkey", "c_mktsegment"), "c_acctbal", k = 5L, l = 3L)),
-
-    // ---- maintenance: incremental aggregate merge — 4/5 of orders as
-    // the standing state, 1/5 as the delta batch; the merged state
-    // must equal the oracle's FULL recompute (the materialized-view
-    // refresh identity)
-    "q132_incremental_agg" -> ((s, dir) => {
-      val priceE2 = (col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-      val o = T(s, dir, "orders")
-      val base = AggMaintenance.aggState(
-        o.filter(pmod(col("o_orderkey"), lit(5)) =!= 0),
-        Seq("o_custkey"), priceE2)
-      val delta = AggMaintenance.aggState(
-        o.filter(pmod(col("o_orderkey"), lit(5)) === 0),
-        Seq("o_custkey"), priceE2)
-      AggMaintenance.mergeStates(base, delta, Seq("o_custkey"))
-    }),
-
-    // ---- embeddings: nearest-class-mean confusion matrix — exact
-    // integer squared-L2 to the q130 prototypes, argmin per vector,
-    // tallied true × assigned (label-separability QA before training)
-    "q133_prototype_confusion" -> ((s, dir) =>
-      Prototypes.prototypeConfusion(T(s, dir, "embeddings"), "vec_id",
-        "embedding", "label")),
-
-    // ---- retrieval: reciprocal-rank fusion of a quality ranking and
-    // a length ranking over documents (the multi-signal curation
-    // merge; each 1/(60+r) term exactly rounded at e6)
-    "q134_rrf_fusion" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val sig = TextAnalysis.qualitySignals(docs, "doc_id", "text")
-      val (num, den) = TextAnalysis.qualityRational()
-      val byQuality = sig.select(col("doc_id"),
-        graft.functions.ExactRound.ratioScaled(num, den, 4).as("v"))
-      val byLength = TextAnalysis.tokenCounts(docs, "doc_id", "text")
-        .select(col("doc_id"), col("n_tokens").as("v"))
-      def ranked(df: DataFrame): DataFrame =
-        BudgetSelect.runningTotal(df, lit(1L),
-          Seq(col("v").desc, col("doc_id").asc), "rank")._1
-          .select(col("doc_id"), col("rank"))
-      RankFusion.reciprocalRankFusion(
-        Seq(ranked(byQuality), ranked(byLength)), "doc_id",
-        k = 60, topN = 100)
-    }),
-
-    // ---- text: vocabulary coverage curve — corpus token share of the
-    // top-{100,1k,10k} frequency-ranked types (the tokenizer-budget
-    // question); rank via the distributed prefix count
-    "q135_vocab_coverage" -> ((s, dir) =>
-      TextAnalysis.vocabCoverage(T(s, dir, "documents"), "doc_id",
-        "text")),
-
-    // ---- text: concordance (keyword-in-context) — every 'scan' hit
-    // with ±2 surrounding words; bounded explode + equi-join on
-    // (doc, position), never a range join
-    "q136_concordance" -> ((s, dir) =>
-      TextAnalysis.concordance(T(s, dir, "documents"), "doc_id",
-        "text", term = "scan", context = 2)),
-
-    // ---- monitoring: categorical drift — event-type mix of even- vs
-    // odd-user events, exact e6 shares + exact TVD; totals broadcast
-    // back (category space unbounded, so no window over categories)
-    "q137_category_drift" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-      Drift.categoryDrift(
-        ev.filter(pmod(col("user_id"), lit(2)) === 0),
-        ev.filter(pmod(col("user_id"), lit(2)) === 1),
-        "event_type")
-    }),
-
-    // ---- graph: deterministic negative-edge sampling — hash-ring
-    // successors anti-joined against the exact near-dup graph, 2 kept
-    // per node (the negative half of link-prediction training data)
-    "q138_negative_edges" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val edges = lshNearDupPairs(s, dir, threshold = 0.45)
-        .select(col("id_a"), col("id_b"))
-      NegativeSampling.negativeEdges(emb.select(col("vec_id")),
-        "vec_id", edges, "id_a", "id_b", ringWidth = 3, perNode = 2)
-    }),
-
-    // ---- profiling: functional-dependency check over orders —
-    // o_orderkey→o_custkey holds (key), the reverse-direction
-    // candidates fail; one Expand aggregate, one scan
-    "q139_functional_deps" -> ((s, dir) =>
-      Profile.functionalDeps(T(s, dir, "orders"), Seq(
-        ("o_orderkey", "o_custkey"),
-        ("o_custkey", "o_orderstatus"),
-        ("o_orderstatus", "o_orderpriority")))),
-
-    // ---- stats: quantile normalization — each return flag's price
-    // distribution mapped onto the pooled one (batch-effect
-    // correction); exact integer rank mapping, value-at-rank lookup
-    "q140_quantile_normalize" -> ((s, dir) =>
-      QuantileNormalize.quantileNormalize(T(s, dir, "lineitem"),
-        "l_returnflag",
-        expr("cast(round(l_extendedprice * 100, 0) as bigint)"),
-        Seq("l_orderkey", "l_linenumber"))),
-
-    // ---- events: first-order transition matrix — consecutive
-    // event-type pairs per user with exact conditional probabilities
-    // (funnel diagnosis / sequence-corpus QA)
-    "q141_transition_matrix" -> ((s, dir) =>
-      EventAnalytics.transitionMatrix(T(s, dir, "events"), "user_id",
-        "ts", "event_type", "event_id")),
-
-    // ---- stats: per-group lower weighted median — price weighted by
-    // quantity per return flag; exact, always an observed value
-    "q142_weighted_median" -> ((s, dir) =>
-      GroupStats.weightedMedian(T(s, dir, "lineitem"),
-        Seq("l_returnflag"),
-        expr("cast(round(l_extendedprice * 100, 0) as bigint)"),
-        expr("cast(round(l_quantity, 0) as bigint)"))),
-
-    // ---- OLAP: rollup subtotals over (source, lang) with grouping
-    // indicators — one Expand, one scan, exact sums
-    "q143_rollup_stats" -> ((s, dir) =>
-      Profile.rollupStats(T(s, dir, "documents"), Seq("source", "lang"),
-        col("n_chars"))),
-
-    // ---- QA: language-ID agreement — q19's heuristic prediction vs
-    // the declared lang column, per source (metadata-trust audit)
-    "q144_langid_agreement" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      docs.select(col("doc_id"), col("source"), col("lang"))
-        .join(TextAnalysis.languageId(docs, "doc_id", "text"), "doc_id")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("pred_lang") === col("lang"), 1L).otherwise(0L))
-            .as("n_match"))
-        .select(col("source"), col("n_docs"), col("n_match"),
-          graft.functions.ExactRound.ratioScaled(col("n_match"),
-            col("n_docs"), 4).as("agreement_e4"))
-    }),
-
-    // ---- events: top session paths — q15's gap sessions, each
-    // session's type sequence as a '>' path, top-20 by frequency
-    // (deterministic: collected structs are sorted before joining)
-    "q145_session_paths" -> ((s, dir) =>
-      Sessionize.sessionPaths(T(s, dir, "events"), "user_id", tsSec,
-        gapSeconds = 1800L, "event_type", col("event_id"), topN = 20)),
-
-    // ---- maintenance: CDC apply — an upsert/delete log (derived from
-    // orders: latest order per customer updates, every 13th customer
-    // key deletes) applied onto the customer base in one full-outer
-    // join; latest-wins by sequence
-    "q146_cdc_apply" -> ((s, dir) => {
-      val base = T(s, dir, "customer")
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-      val log = T(s, dir, "orders").select(
-        col("o_custkey").as("c_custkey"),
-        col("o_orderkey").as("seq"),
-        when(pmod(col("o_custkey"), lit(13)) === 0, "D").otherwise("U")
-          .as("op"),
-        concat(lit("cust_upd_"), col("o_custkey").cast("string"))
-          .as("c_name"),
-        col("o_totalprice").as("c_acctbal"))
-      CdcApply.applyLog(base, log, "c_custkey", "seq", "op",
-        Seq("c_name", "c_acctbal"))
-    }),
-
-    // ---- composition: per-source Gini language diversity — the
-    // log-free diversity score of a training mix
-    "q147_gini_diversity" -> ((s, dir) =>
-      GroupStats.giniDiversity(T(s, dir, "documents"), "source", "lang")),
-
-    // ---- labeling: churn labels — last active day vs the corpus
-    // horizon, leakage-free cutoff (retention-model training labels)
-    "q148_churn_labels" -> ((s, dir) =>
-      EventAnalytics.churnLabels(T(s, dir, "events"), "user_id", "ts",
-        horizonDays = 7)),
-
-    // ---- events: inter-arrival cadence — robust median/MAD of
-    // per-(user, type) gaps, summarized per type (bot-detection
-    // profile; q76's doubled-units kernel)
-    "q149_interarrival" -> ((s, dir) =>
-      EventAnalytics.interarrivalStats(T(s, dir, "events"), "user_id",
-        "event_type", "ts", "event_id")),
-
-    // ---- ingest: throttle / minimum-spacing filter — drop events
-    // within 60 s of the key's previous raw event (double-fire dedup)
-    "q150_throttle" -> ((s, dir) =>
-      EventAnalytics.throttle(T(s, dir, "events"),
-        Seq("user_id", "event_type"), "ts", "event_id",
-        minGapSeconds = 60L)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("ts"))),
-
-    // ---- embeddings: corpus QA — exact e12 squared norms + the
-    // degenerate-vector flags an ANN index build needs checked first
-    "q151_embedding_qa" -> ((s, dir) =>
-      Prototypes.embeddingQa(T(s, dir, "embeddings"), "vec_id",
-        "embedding")),
-
-    // ---- history: SCD2 as-of snapshot — q123's interval table
-    // queried at the corpus midpoint timestamp (the time-travel read
-    // the history table exists to serve)
-    "q152_scd2_asof" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-      val hist = SnapshotDiff.scd2History(ev, "user_id", "ts",
-        "event_type", "event_id")
-      val t = ev.agg(TimeFns.floorDiv(min(col("ts")) + max(col("ts")),
-        2L).as("t__"))
-      hist.crossJoin(broadcast(t))
-        .filter(col("valid_from_ns") <= col("t__") &&
-          (col("valid_to_ns").isNull || col("valid_to_ns") > col("t__")))
-        .select(col("user_id"), col("version"),
-          col("value").as("value_at_t"), col("valid_from_ns"))
-    }),
-
-    // ---- curation: 2-D Pareto front — documents on the
-    // quality-vs-length frontier (skyline via the distributed
-    // sort-scan, never the quadratic dominance join)
-    "q153_pareto_front" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val sig = TextAnalysis.qualitySignals(docs, "doc_id", "text")
-      val (num, den) = TextAnalysis.qualityRational()
-      val scored = sig
-        .select(col("doc_id"),
-          graft.functions.ExactRound.ratioScaled(num, den, 4)
-            .as("quality_e4"))
-        .join(TextAnalysis.tokenCounts(docs, "doc_id", "text")
-          .select(col("doc_id"), col("n_tokens")), "doc_id")
-      Skyline.paretoFront2D(scored, col("quality_e4"), col("n_tokens"),
-        Seq("doc_id"))
-    }),
-
-    // ---- text: per-doc keyword extraction — top-3 terms by exact
-    // e6 TF-IDF lift (tf·N/df), the auto-tagging pass
-    "q154_doc_keywords" -> ((s, dir) =>
-      TextAnalysis.docKeywords(T(s, dir, "documents"), "doc_id",
-        "text", k = 3, minDf = 2L)),
-
-    // ---- QA: referential-integrity audit across the star schema —
-    // orphan counts + exact shares for three declared relations
-    "q155_ref_integrity" -> ((s, dir) =>
-      Profile.refIntegrity(T(s, dir, "orders"), "o_custkey",
-          T(s, dir, "customer"), "c_custkey", "orders->customer")
-        .union(Profile.refIntegrity(T(s, dir, "lineitem"), "l_orderkey",
-          T(s, dir, "orders"), "o_orderkey", "lineitem->orders"))
-        .union(Profile.refIntegrity(T(s, dir, "lineitem"), "l_partkey",
-          T(s, dir, "part"), "p_partkey", "lineitem->part"))),
-
-    // ---- history: temporal dimension join — each purchase event
-    // joined to the SCD2 state version valid AT its timestamp
-    // (backward as-of on valid_from per user: the fact-to-dimension
-    // time-travel join the q123 table exists to serve)
-    "q157_temporal_dim_join" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-      val hist = SnapshotDiff.scd2History(ev, "user_id", "ts",
-        "event_type", "event_id")
-        .select(col("user_id"), col("valid_from_ns"), col("version"),
-          col("value"))
-      val facts = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      AsOfJoin.leftAsOf(facts, hist, Seq("user_id"), "ts",
-          "valid_from_ns", rightPayload = Seq("version", "value"))
-        .select(col("event_id"), col("user_id"),
-          col("right_version").as("state_version"),
-          col("right_value").as("state_value"))
-    }),
-
-    // ---- OLAP: ABC / Pareto classes — docs classified by cumulative
-    // token share within source (A carries the first 80%, B to 95%)
-    "q158_abc_classes" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val toks = TextAnalysis.tokenCounts(docs, "doc_id", "text")
-        .select(col("doc_id"), col("n_tokens"))
-      AbcClasses.abcClasses(
-        docs.select(col("doc_id"), col("source")).join(toks, "doc_id"),
-        "source", "doc_id", col("n_tokens"))
-    }),
-
-    // ---- QA: order-independent column checksums over customer — the
-    // cross-engine "same data?" handshake (set-shaped digest)
-    "q159_column_checksums" -> ((s, dir) =>
-      Profile.columnChecksums(T(s, dir, "customer"),
-        Seq("c_custkey", "c_name", "c_mktsegment"))),
-
-    // ---- text: frequency-of-frequencies (Good-Turing N_c table) —
-    // the corpus long-tail profile
-    "q160_freq_of_freqs" -> ((s, dir) =>
-      TextAnalysis.freqOfFreqs(T(s, dir, "documents"), "doc_id",
-        "text")),
-
-    // ---- sampling: dedup-aware representative sampling — cluster
-    // representatives drawn in proportion to the mass (cluster size)
-    // they stand for: q47's components feeding q128's deterministic
-    // weighted draw
-    // Candidate pairs from the banded-LSH path with the mirrored
-    // oracle (r12) — see q117; the exact kernel stays in its q29/q40
-    // audit role only.
-    "q161_cluster_weighted_sample" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val cc = stagedNearDupComponents(s, dir)
-      val sizes = emb.select(col("vec_id"))
-        .join(cc, col("vec_id") === col("node"), "left")
-        .select(coalesce(col("component"), col("vec_id")).as("rep"))
-        .groupBy(col("rep")).agg(count(lit(1)).as("cluster_size"))
-      Sampling.systematicWeighted(sizes, "rep", "cluster_size", n = 100)
-    }),
-
-    // ---- events: activity heatmap — day-of-week × hour-of-day
-    // profile per event type (epoch day 0 = Thursday, hence the +4),
-    // exact e6 within-type shares
-    "q162_activity_heatmap" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val counts = T(s, dir, "events")
-        .select(col("event_type"),
-          pmod(TimeFns.floorDiv(col("ts"), 86400L * 1000000000L) + 4L,
-            lit(7)).as("dow"),
-          pmod(TimeFns.floorDiv(col("ts"), 3600L * 1000000000L),
-            lit(24)).as("hour"))
-        .groupBy(col("event_type"), col("dow"), col("hour"))
-        .agg(count(lit(1)).as("n"))
-      // the per-type window runs over <= 168 cells per type — bounded
-      counts.withColumn("n_type",
-          sum(col("n")).over(Window.partitionBy(col("event_type"))))
-        .select(col("event_type"), col("dow"), col("hour"), col("n"),
-          graft.functions.ExactRound.ratioScaled(col("n"),
-            col("n_type"), 6).as("share_e6"))
-    }),
-
-    // ---- multimodal: per-frame PCM16 energy — a synthesized WAV
-    // (real header + 64 text bytes as samples) through the REAL
-    // chunk-walk + frame decode; exact integer energies (q27's
-    // ASCII-pin so the oracle reconstructs samples from char codes)
-    "q163_audio_frames" -> ((s, dir) => {
-      def le32(v: Int) = Array[Byte]((v & 255).toByte,
-        ((v >> 8) & 255).toByte, ((v >> 16) & 255).toByte,
-        ((v >> 24) & 255).toByte)
-      def le16(v: Int) = Array[Byte]((v & 255).toByte,
-        ((v >> 8) & 255).toByte)
-      val hdr = "RIFF".getBytes("UTF-8") ++ le32(100) ++
-        "WAVE".getBytes("UTF-8") ++ "fmt ".getBytes("UTF-8") ++
-        le32(16) ++ le16(1) ++ le16(1) ++ le32(8000) ++ le32(16000) ++
-        le16(2) ++ le16(16) ++ "data".getBytes("UTF-8") ++ le32(64)
-      val wavs = T(s, dir, "documents")
-        .filter(length(col("text")) >= 64 &&
-          octet_length(col("text")) === length(col("text")))
-        .select(col("doc_id"),
-          concat(lit(hdr), substring(col("text"), 1, 64).cast("binary"))
-            .as("payload"))
-      Multimodal.frameEnergy(wavs, "doc_id", "payload",
-        frameSamples = 8)
-    }),
-
-    // ---- stats: exact quantile grid — p25/p50/p75/p95 price cents
-    // per return flag, every value an OBSERVED one (no lerp)
-    "q164_quantile_grid" -> ((s, dir) =>
-      GroupStats.quantileGrid(T(s, dir, "lineitem"),
-        Seq("l_returnflag"),
-        expr("cast(round(l_extendedprice * 100, 0) as bigint)"))),
-
-    // ---- QA: first-digit (Benford) profile of order totals — the
-    // synthetic-data screen, exact shares
-    "q165_first_digit" -> ((s, dir) =>
-      Profile.firstDigitProfile(T(s, dir, "orders"),
-        (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))),
-
-    // ---- text: run-length compressibility — the tokenizer-free junk
-    // detector (RLE length / raw length, exact e4)
-    "q166_compressibility" -> ((s, dir) =>
-      TextAnalysis.compressibility(T(s, dir, "documents"), "doc_id",
-        "text")),
-
-    // ---- dedup: corpus duplicate-gram mass — the one-number "how
-    // much would near-dedup touch?" pressure gauge
-    "q167_dup_gram_share" -> ((s, dir) =>
-      TextAnalysis.dupGramShare(T(s, dir, "documents"), "doc_id",
-        "text", n = 3)),
-
-    // ---- planning: exact join-fanout estimate — lineitem self-join
-    // on part key (the classic explosion case), top contributing keys
-    // + corpus totals
-    "q168_join_fanout" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem")
-      Profile.joinFanout(li, "l_partkey", li, "l_partkey", topK = 10)
-    }),
-
-    // ---- streaming: WATERMARK SEMANTICS under deliberately late data
-    // (§2.9 — the one behavior a batch-shaped spec fixture can pass
-    // vacuously, now oracle-gated through the q77/q78 file-stream
-    // harness). Feed order: on-time first half, on-time second half,
-    // then a 10%-of-events LATE file spanning the whole time range,
-    // then two far-future watermark-advancer sentinels. The watermark
-    // (30 min) is ~mid-hour when the late file arrives, so late rows
-    // split three ways: already-emitted window -> dropped, open window
-    // -> merged, last-30-min window -> merged; the batch oracle
-    // recomputes the per-batch watermark line and the admission rule
-    // (window end > watermark at the late batch) from the same
-    // deterministic batch assignment. Two sentinels 7200/7800 s past
-    // the real max guarantee every REAL window's end sits strictly
-    // below the watermark while a data batch is still running — no
-    // reliance on a post-final-file flush — and the sentinels' own
-    // windows sit strictly above every watermark ever computed, so
-    // they never leak into the gate.
-    "q169_watermark_window" -> ((s, dir) => withShufflePartitions(s, 8) {
-      import s.implicits._
-      val ev = T(s, dir, "events")
-        .select(col("event_type"), tsSec.cast("long").as("tsSec"),
-          round(col("value") * 100, 0).cast("long").as("v"),
-          col("event_id").cast("long").as("eid"))
-      if (ev.isEmpty) {
-        Seq.empty[(Long, String, Long, Long)]
-          .toDF("win_start", "event_type", "n_events", "value_sum")
-      } else {
-      val src = readFeed(s, feedQ169(s, dir),
-          "event_type STRING, tsSec LONG, v LONG")
-        .withColumn("ts", timestamp_seconds(col("tsSec")))
-      val agg = graft.streaming.Streams.windowedAgg(src, "ts",
-        windowLen = "1 hour", watermark = "30 minutes",
-        keyCols = Seq("event_type"), valueCol = "v")
-      runStreamGate(s, "q169", agg)(
-        _.select(col("window.start").cast("long").as("win_start"),
-          col("event_type"), col("n_events"), col("value_sum")))
-      }
-    }),
-
-    // ---- dedup: INCREMENTAL embedding near-dup against a STAGED
-    // band-key store (q73's append-only shape for the vector path):
-    // the standing corpus (vec_id % 17 != 0) signs once into
-    // target/graft-stage; each run re-signs only the probe batch,
-    // broadcasts its keys against the stored table, and
-    // cosine-verifies candidate pairs only. Oracle mirrors the
-    // bipartite bucket join via the same inlined plane masks.
-    "q179_incremental_embedding_neardup" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val standing = emb.filter(pmod(col("vec_id"), lit(17)) =!= 0)
-      val batch = emb.filter(pmod(col("vec_id"), lit(17)) === 0)
-      val stamp = Dedup.sourceStamp(s, s"$dir/embeddings.parquet")
-      val keys = SimilaritySearch.stagedBandKeys(standing, "vec_id",
-        "embedding",
-        s"$stageRoot/embkeys-$stamp-b$lshBaseBits-n$lshBands-r$lshBitsPerBand",
-        lshBaseBits, lshBands, lshBitsPerBand)
-      SimilaritySearch.incrementalEmbeddingNearDup(keys, emb, batch,
-        "vec_id", "embedding", threshold = 0.3,
-        lshBaseBits, lshBands, lshBitsPerBand)
-    }),
-
-    // ---- dedup: cluster-SIZE histogram — how big near-dup clusters
-    // run (size -> n_clusters, singletons included): the one-glance
-    // "is dedup facing pairs or families?" gauge over the mirrored-
-    // LSH component structure
-    // ---- mixing: proportional INTERLEAVE order — the materialized
-    // low-discrepancy training schedule ((2r−1)/2n positions; any
-    // prefix holds ≈ the corpus mix); rank via the range-partitioned
-    // ScalableRank path, never a per-source window partition
-    "q211_mixture_order" -> ((s, dir) =>
-      Apportion.interleaveOrder(T(s, dir, "documents"), "doc_id",
-        "source")),
-
-    // ---- streaming: the CUSUM state machine fed by a day-ordered
-    // file stream (value-slice batches, q78 stager; sentinel day
-    // closes the final real day) — must equal the batch prefix form
-    // row-for-row, so it shares q219's oracle verbatim
-    "q224_stream_cusum" -> ((s, dir) => withShufflePartitions(s, 8) {
-      import s.implicits._
-      val ev = T(s, dir, "events").select(
-        col("event_type").as("group"),
-        graft.functions.TimeFns.floorDiv(col("ts"),
-          86400L * 1000000000L).as("day"))
-      val allowance = ev.groupBy(col("group"), col("day"))
-        .agg(count(lit(1)).as("n"))
-        .groupBy(col("group"))
-        .agg(call_function("div",
-          sum(col("n")) + count(lit(1)) - 1L, count(lit(1))).as("k"))
-        .as[(String, Long)].collect().toMap
-      val src = readFeed(s, feedQ224(s, dir), "group STRING, day LONG")
-        .as[graft.streaming.Streams.DayEvent]
-      runStreamGate(s, "q224", graft.streaming.Streams
-          .streamingCusum(src, allowance, hMult = 5L))(
-        _.select(col("group").as("event_type"), col("day"),
-          col("n_events"), col("k"), col("cusum"), col("alarm")))
-    }),
-
-    // ---- splits: purged/embargoed temporal split over events (last
-    // 7 days test, 3-day embargo, rest train) with the train-entity
-    // leakage audit; edges relative to the observed max day
-    "q223_embargo_split" -> ((s, dir) =>
-      Sampling.embargoSplit(T(s, dir, "events"), "ts", "user_id",
-        testDays = 7L, embargoDays = 3L)),
-
-    // ---- dedup graph: per-node triangles / degree / clustering
-    // coefficient over the LSH near-dup edges — clique-y components
-    // (one doc radiating variants) vs chained borderline pairs.
-    // Degree-ordered compact-forward orientation: wedges only between
-    // out-neighbors, so hub nodes never square
-    "q222_dedup_graph_triangles" -> ((s, dir) =>
-      GraphRank.triangleStats(
-        lshNearDupPairs(s, dir, threshold = 0.45)
-          .select(col("id_a"), col("id_b")), "id_a", "id_b")),
-
-    // ---- monitoring: one-sided CUSUM change-point detection over
-    // each event type's daily count series — the max(0, S+x−k)
-    // recursion in its exact prefix form (cum − running min), windows
-    // over the bounded daily frame only
-    "q219_cusum_drift" -> ((s, dir) =>
-      EventAnalytics.cusumDaily(T(s, dir, "events"), "event_type",
-        "ts", hMult = 5L)),
-
-    // ---- mixing: loss-weight REWEIGHTING to the water-fill
-    // allocation — the sampling-free twin of q204: per source, the
-    // e6 weight alloc/n plus natural vs target shares (budget 3/4 of
-    // the corpus, epoch cap 3: small sources up-weight toward 3e6,
-    // big ones down-weight below 1e6)
-    "q220_mix_reweight" -> ((s, dir) =>
-      Apportion.reweightToAllocation(T(s, dir, "documents"), "source",
-        budgetNum = 3L, budgetDen = 4L, maxEpochs = 3L)),
-
-    // ---- text: Heaps-law vocabulary growth over nested md5-prefix
-    // subcorpora (1/8 ⊂ 1/4 ⊂ 1/2 ⊂ all): one explode, per-word
-    // min-level aggregate, 4-row cumulative rollup
-    "q221_vocab_growth" -> ((s, dir) =>
-      VocabBuild.vocabGrowth(T(s, dir, "documents"), "doc_id", "text")),
-
-    // ---- text: Flesch–Kincaid readability card per source — the
-    // grade-level rational cleared to one signed e6 integer per doc
-    // (sentence/syllable surrogates via mirrored marker-run counts),
-    // then a map-side-combinable per-source rollup
-    "q218_readability" -> ((s, dir) =>
-      TextAnalysis.readabilityBySource(T(s, dir, "documents"),
-        "text", "source")),
-
-    // ---- scrape ingest: URL canonicalization dedup — synthesized
-    // feed-link variants (upper-cased www+port / trailing-slash+utm+
-    // fragment / ref-tracking) collapse to one canonical article URL;
-    // group sizes + representative doc per canonical link. Pure
-    // regexp/array built-ins, no UDF; one groupBy shuffle.
-    "q217_url_canonical_dedup" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      import graft.functions.UrlCanon
-      docs.select(col("doc_id"), UrlCanon.canonicalUrl(
-          UrlCanon.synthUrl(col("doc_id"))).as("canonical_url"))
-        .groupBy(col("canonical_url"))
-        .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("first_doc"))
-    }),
-
-    // ---- multimodal × dedup: perceptual-hash near-duplicate images —
-    // REAL ImageIO decode of synthesized variant PNGs (groups of 4
-    // share a base, one perturbed source pixel), 9×8 dHash, then the
-    // q24 multi-index banded-hamming join (4 bands, hamming ≤ 3)
-    "q216_image_dhash_neardup" -> ((s, dir) => {
-      val png = Multimodal.synthVariantPngPayloads(
-        T(s, dir, "documents").select(col("doc_id")), "doc_id",
-        groupSize = 4)
-      Dedup.simhashFromFingerprints(
-        Multimodal.dhashFingerprints(png, "doc_id", "payload"),
-        bands = 4, maxHamming = 3)
-    }),
-
-    // ---- multimodal × dedup: the q216 surface through the BUCKET-
-    // CAPPED banded join (the r13 probe's straggler lesson as a
-    // first-class skew guard; cap 16 binds on the low-entropy bands)
-    "q225_dhash_capped_bands" -> ((s, dir) => {
-      val png = Multimodal.synthVariantPngPayloads(
-        T(s, dir, "documents").select(col("doc_id")), "doc_id",
-        groupSize = 4)
-      Dedup.simhashFromFingerprintsCapped(
-        Multimodal.dhashFingerprints(png, "doc_id", "payload"),
-        bands = 4, maxHamming = 3, maxBucket = 16L)
-    }),
-
-    // ---- dedup: cross-source duplication matrix — which sources
-    // copy from which: the verified MinHash pair surface (staged
-    // index, q23) rolled up to unordered source pairs with the exact
-    // pair RATE (pairs / possible pairs; C(n,2) on the diagonal)
-    "q226_cross_source_dup" -> ((s, dir) => {
-      def d(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-      val pairs = Dedup.minhashLSHFromIndex(stagedDocsIndex(s, dir),
-        threshold = 0.5).select(col("doc_a"), col("doc_b"))
-      val srcMap = T(s, dir, "documents")
-        .select(col("doc_id"), col("source"))
-      val cnt = srcMap.groupBy(col("source"))
-        .agg(count(lit(1)).as("n"))
-      val m = pairs
-        .join(srcMap.select(col("doc_id").as("doc_a"),
-          col("source").as("sa__")), "doc_a")
-        .join(srcMap.select(col("doc_id").as("doc_b"),
-          col("source").as("sb__")), "doc_b")
-        .select(least(col("sa__"), col("sb__")).as("source_a"),
-          greatest(col("sa__"), col("sb__")).as("source_b"))
-        .groupBy(col("source_a"), col("source_b"))
-        .agg(count(lit(1)).as("n_pairs"))
-      m.join(broadcast(cnt.select(col("source").as("source_a"),
-          col("n").as("na__"))), "source_a")
-        .join(broadcast(cnt.select(col("source").as("source_b"),
-          col("n").as("nb__"))), "source_b")
-        .select(col("source_a"), col("source_b"), col("n_pairs"),
-          graft.functions.ExactRound.ratioScaledBig(col("n_pairs"),
-            when(col("source_a") === col("source_b"),
-              call_function("div",
-                d(col("na__")) * d(col("na__") - 1L), lit(2L))
-                .cast("decimal(38,0)"))
-              .otherwise(d(col("na__")) * d(col("nb__"))), 6)
-            .as("rate_e6"))
-    }),
-
-    // ---- dedup: SUBSTRING-level duplication coverage — per doc, the
-    // exact fraction of tokens lying inside some 8-token span that
-    // occurs more than once in the corpus (Lee et al. span dedup; the
-    // partial-copy signal doc-level MinHash can't see). Union-of-
-    // intervals sweep, all integer, e4 exact ratio.
-    "q227_dup_span_coverage" -> ((s, dir) =>
-      Dedup.dupSpanCoverage(T(s, dir, "documents"), "doc_id", "text",
-        k = 8)),
-
-    // ---- eval: decile LIFT / cumulative-GAIN table of the quality
-    // score against the Gopher keep label (the q215 score/label pair
-    // as a selection-policy sheet: per decile the positive rate, the
-    // lift over base rate, the gain curve). Range-partitioned rank,
-    // unique (score desc, doc_id asc) tie-break mirrored in the oracle.
-    "q228_lift_table" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val (num, den) = TextAnalysis.qualityRational()
-      val scored = TextAnalysis.qualitySignals(docs, "doc_id", "text")
-        .select(col("doc_id"),
-          graft.functions.ExactRound.ratioScaled(num, den, 4)
-            .as("q_e4"))
-      val label = TextAnalysis.gopherRules(docs, "doc_id", "text",
-          minWords = 50L, maxWords = 100000L)
-        .select(col("doc_id"), col("keep"))
-      EvalMetrics.liftTable(scored.join(label, "doc_id"), "doc_id",
-        "q_e4", "keep", buckets = 10)
-    }),
-
-    // ---- streaming: SLIDING-window agg under the same late-data feed
-    // as q169 (1 h window / 30 min slide / 30 min watermark). The
-    // Expand generates both windows per event BEFORE the late-row
-    // filter, so a late event merges into its still-open window while
-    // dropping from the emitted one — the oracle applies the q169
-    // admission rule per (event, window) pair. Same sentinel guarantee:
-    // every real window end sits below the final watermark while a
-    // data batch still runs; sentinel windows never emit.
-    "q229_sliding_window" -> ((s, dir) => withShufflePartitions(s, 8) {
-      import s.implicits._
-      val ev = T(s, dir, "events")
-        .select(col("event_type"), tsSec.cast("long").as("tsSec"),
-          round(col("value") * 100, 0).cast("long").as("v"),
-          col("event_id").cast("long").as("eid"))
-      if (ev.isEmpty) {
-        Seq.empty[(Long, String, Long, Long)]
-          .toDF("win_start", "event_type", "n_events", "value_sum")
-      } else {
-      // replays q169's staged feed — identical stager (r20)
-      val src = readFeed(s, feedQ169(s, dir),
-          "event_type STRING, tsSec LONG, v LONG")
-        .withColumn("ts", timestamp_seconds(col("tsSec")))
-      val agg = graft.streaming.Streams.slidingWindowedAgg(src, "ts",
-        windowLen = "1 hour", slideLen = "30 minutes",
-        watermark = "30 minutes",
-        keyCols = Seq("event_type"), valueCol = "v")
-      // (sliding variant of the q169 harness — same sink and sentinels)
-      runStreamGate(s, "q229", agg)(
-        _.select(col("window.start").cast("long").as("win_start"),
-          col("event_type"), col("n_events"), col("value_sum")))
-      }
-    }),
-
-    // ---- clustering: UNSUPERVISED k-means (Lloyd, 3 fixed
-    // iterations, k=4) over the embedding corpus — deterministic
-    // md5-order seeding, exact integer squared-L2 assignment, signed
-    // exact-round centroid means; every iteration mirrored as an
-    // unrolled CTE (the q108 PageRank discipline applied to
-    // clustering). Gate = final centroids + member counts + inertia.
-    "q230_kmeans" -> ((s, dir) =>
-      Prototypes.kmeansLloyd(T(s, dir, "embeddings"), "vec_id",
-        "embedding", k = 4, iterations = 3)),
-
-    // ---- QA: Benford first-digit card over order totals (cents) —
-    // the fabricated-data / broken-ingest tripwire. Expected shares
-    // are the pinned e6 log10(1+1/d) constants (the q170 weight-table
-    // discipline); first digit via a 19-arm integer-division ladder,
-    // no float formatting in either engine.
-    "q231_benford_card" -> ((s, dir) =>
-      Profile.benfordCard(T(s, dir, "orders"),
-        (col("o_totalprice").cast("decimal(18,2)") * 100)
-          .cast("long"))),
-
-    // ---- dedup: SPAN REMOVAL — the q227 measurement as a transform:
-    // every duplicated 8-gram span deleted except its first
-    // (min (doc, pos)) occurrence; gate pins the RECONSTRUCTED kept
-    // text bytes via md5, not just the accounting.
-    "q232_span_removal" -> ((s, dir) =>
-      Dedup.removeDupSpans(T(s, dir, "documents"), "doc_id", "text",
-        k = 8)),
-
-    // ---- decontamination: SPAN-level scrub — the surgical form of
-    // q51's doc-level report: every 5-gram appearing anywhere in the
-    // benchmark sample is deleted from the training corpus (ALL
-    // occurrences, no keeper), the rest of each doc survives. Gate
-    // pins the rebuilt text bytes.
-    "q233_span_decontaminate" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val bench = Sampling.hashSample(docs, "doc_id", rate256 = 26)
-      val corpus = docs.join(bench.select(col("doc_id")),
-        Seq("doc_id"), "left_anti")
-      Dedup.scrubBenchSpans(corpus, bench, "doc_id", "text", k = 5)
-    }),
-
-    // ---- reshaping: RelationalGroupedDataset.pivot — the wide
-    // source × language count matrix (explicit value list, so the
-    // schema is static and the absent cells read 0 on both sides).
-    "q234_lang_pivot" -> ((s, dir) =>
-      T(s, dir, "documents").groupBy(col("source"))
-        .pivot("lang", Seq("de", "en", "es", "fr", "zh"))
-        .agg(count(lit(1)))
-        .na.fill(0L)),
-
-    // ---- joins: NEAREST as-of (pandas merge_asof direction=nearest,
-    // ties backward) — one union + one window shuffle computes both
-    // carries; the projection picks the nearer purchase per click.
-    "q235_asof_nearest" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"),
-          col("event_id").as("purchase_event_id"))
-      AsOfJoin.leftAsOfNearest(clicks, purchases, Seq("user_id"),
-        "ts", "ts", rightPayload = Seq("purchase_event_id"))
-        .select(col("event_id"), col("user_id"),
-          col("right_purchase_event_id").as("nearest_purchase_id"),
-          TimeFns.floorDiv(abs(col("right_ts") - col("ts")),
-            1000000000L).as("gap_abs_s"),
-          col("matched_back"))
-    }),
-
-    // ---- joins: RANGE-OVERLAP self-join per part — each lineitem's
-    // [ship, ship + transit] day window against every other line of
-    // the SAME part; bucket decomposition turns the theta join into
-    // an equi join, the first-common-bucket rule dedupes without a
-    // shuffle. Transit days are a deterministic hash of the line id,
-    // mirrored in the oracle.
-    "q236_range_overlap" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem").select(col("l_partkey"),
-        (col("l_orderkey") * 10L + col("l_linenumber")).as("lid__"),
-        // NTZ parquet date: micros since epoch (UTC session) → days
-        TimeFns.floorDiv(
-          unix_micros(col("l_shipdate").cast("timestamp")),
-          86400L * 1000000L).as("sd__"))
-        .withColumn("ed__", col("sd__") + pmod(col("lid__"), lit(20L)))
-      val left = li.select(col("l_partkey"), col("lid__").as("id_a"),
-        col("sd__").as("sa__"), col("ed__").as("ea__"))
-      val right = li.select(col("l_partkey"), col("lid__").as("id_b"),
-        col("sd__").as("sb__"), col("ed__").as("eb__"))
-      IntervalJoin.rangeOverlap(left, right, "sa__", "ea__",
-          "sb__", "eb__", keys = Seq("l_partkey"), bucketWidth = 16L)
-        .filter(col("id_a") < col("id_b"))
-        .groupBy(col("l_partkey"))
-        .agg(count(lit(1)).as("n_overlaps"))
-    }),
-
-    // ---- streaming: THROTTLE state machine — q150's debounce rule
-    // as flatMapGroupsWithState (state = last raw ts per key,
-    // advanced by every event); time-sliced feed makes stream output
-    // equal the batch operator row-for-row, so the gate SHARES q150's
-    // oracle. Gaps straddling micro-batches ride in state.
-    "q243_stream_throttle" -> ((s, dir) => withShufflePartitions(s, 8) {
-      import s.implicits._
-      val src = readFeed(s, feedQ243(s, dir),
-          "key STRING, tsNanos LONG, eventId LONG")
-        .as[graft.streaming.Streams.SpacedEvent]
-      runStreamGate(s, "q243", graft.streaming.Streams
-          .streamingThrottle(src, minGapSeconds = 60L))(
-        _.select(col("eventId").as("event_id"),
-          substring_index(col("key"), "|", 1).cast("long").as("user_id"),
-          substring_index(col("key"), "|", -1).as("event_type"),
-          col("tsNanos").as("ts")))
-    }),
-
-    // ---- multimodal: per-frame ZERO-CROSSING RATE of the q163
-    // synth WAVs — crossings of the 16384 midline (the ASCII-pinned
-    // samples are always positive, so textbook zero is degenerate;
-    // the DC-offset crossing is the meaningful discriminator) plus
-    // Σ|v − midline|, frame-local in both engines.
-    "q241_audio_zcr" -> ((s, dir) => {
-      def le32(v: Int) = Array[Byte]((v & 255).toByte,
-        ((v >> 8) & 255).toByte, ((v >> 16) & 255).toByte,
-        ((v >> 24) & 255).toByte)
-      def le16(v: Int) = Array[Byte]((v & 255).toByte,
-        ((v >> 8) & 255).toByte)
-      val hdr = "RIFF".getBytes("UTF-8") ++ le32(100) ++
-        "WAVE".getBytes("UTF-8") ++ "fmt ".getBytes("UTF-8") ++
-        le32(16) ++ le16(1) ++ le16(1) ++ le32(8000) ++ le32(16000) ++
-        le16(2) ++ le16(16) ++ "data".getBytes("UTF-8") ++ le32(64)
-      val wavs = T(s, dir, "documents")
-        .filter(length(col("text")) >= 64 &&
-          octet_length(col("text")) === length(col("text")))
-        .select(col("doc_id"),
-          concat(lit(hdr), substring(col("text"), 1, 64).cast("binary"))
-            .as("payload"))
-      Multimodal.frameZcr(wavs, "doc_id", "payload",
-        frameSamples = 8, midline = 16384L)
-    }),
-
-    // ---- multimodal: SILENCE-TRIM card over the q241 synth WAVs —
-    // VAD-lite: frames whose |v − midline| deviation sum sits below
-    // 80000 read as quiet (measured span 69k-105k on this corpus, so
-    // both arms fire); per clip the quiet count and the edge-run trim
-    // offsets, pure conditional aggregates, no window.
-    "q252_silence_trim" -> ((s, dir) => {
-      def le32(v: Int) = Array[Byte]((v & 255).toByte,
-        ((v >> 8) & 255).toByte, ((v >> 16) & 255).toByte,
-        ((v >> 24) & 255).toByte)
-      def le16(v: Int) = Array[Byte]((v & 255).toByte,
-        ((v >> 8) & 255).toByte)
-      val hdr = "RIFF".getBytes("UTF-8") ++ le32(100) ++
-        "WAVE".getBytes("UTF-8") ++ "fmt ".getBytes("UTF-8") ++
-        le32(16) ++ le16(1) ++ le16(1) ++ le32(8000) ++ le32(16000) ++
-        le16(2) ++ le16(16) ++ "data".getBytes("UTF-8") ++ le32(64)
-      val wavs = T(s, dir, "documents")
-        .filter(length(col("text")) >= 64 &&
-          octet_length(col("text")) === length(col("text")))
-        .select(col("doc_id"),
-          concat(lit(hdr), substring(col("text"), 1, 64).cast("binary"))
-            .as("payload"))
-      Multimodal.silenceTrim(wavs, "doc_id", "payload",
-        frameSamples = 8, midline = 16384L, devThreshold = 80000L)
-    }),
-
-    // ---- graph: HITS hubs & authorities over the q108 purchase
-    // graph — e6 sum-normalized integer half-steps, 3 iterations,
-    // unrolled-CTE oracle (PageRank's bipartite twin). Edges from the
-    // q108-shared staged purchase-graph store (r14).
-    "q242_hits" -> ((s, dir) =>
-      GraphRank.hits(stagedPurchaseEdges(s, dir), "src", "dst",
-        iterations = 3)),
-
-    // ---- stats: CHI-SQUARED independence of (source, lang) plus
-    // Cramér's V² — "is the language mix independent of the source?"
-    // Full r×c grid including empty cells; the two-stage truncating
-    // ladder keeps every intermediate 128-bit-safe (GroupStats doc).
-    "q253_chi_square" -> ((s, dir) =>
-      GroupStats.chiSquare(T(s, dir, "documents"), "source", "lang")),
-
-    // ---- graph: multi-source BFS hop distance over the UNDIRECTED
-    // q108 purchase graph — seeds are customers with c_custkey % 100
-    // = 0 (order-less seeds stay isolated at hops 0), 3 rounds of
-    // Bellman-Ford relaxation; reached ball only, unrolled-CTE oracle.
-    "q254_bfs_hops" -> ((s, dir) =>
-      GraphRank.bfsHops(stagedPurchaseEdges(s, dir), "src", "dst",
-        T(s, dir, "customer").filter(col("c_custkey") % 100 === 0)
-          .select((col("c_custkey") * 2L).as("node")),
-        "node", maxHops = 3)),
-
-    // ---- sequence mining: ANY-GAP ordered event-type pair support —
-    // users who did A strictly before B (PrefixSpan's length-2
-    // pattern, the gap-tolerant complement of q122's adjacent
-    // transitions), with lift vs independent marginals. Pair
-    // expansion over the per-user TYPE summary, never raw events.
-    "q255_ordered_pairs" -> ((s, dir) =>
-      EventAnalytics.orderedPairSupport(T(s, dir, "events"),
-        "user_id", "ts", "event_type")),
-
-    // ---- association rules A → B over user → event-type baskets —
-    // support / confidence / lift as exact e6 rationals on the q100
-    // capped-basket discipline; both directions per co-pair.
-    "q256_assoc_rules" -> ((s, dir) =>
-      CoOccurrence.associationRules(T(s, dir, "events"), "user_id",
-        "event_type", minSupport = 2L, maxBasketSize = 64)),
-
-    // ---- drift: two-sample KOLMOGOROV-SMIRNOV per source vs the
-    // rest of the corpus on document length — binning-free max-ECDF-
-    // gap via cross-multiplied integers over the distinct-value
-    // tally; at_units = smallest value attaining the max.
-    "q257_ks_stat" -> ((s, dir) =>
-      Drift.ksGroupVsRest(T(s, dir, "documents"), "source",
-        col("n_chars"))),
-
-    // ---- calibration: ISOTONIC regression over the q203 bins — PAV
-    // via its minimax characterization (max_{j≤i} min_{k≥i} pooled
-    // rate), exact e6; the monotone-repair step after q203's ECE
-    // diagnosis, on the very same quality-score/gopher-label pair.
-    "q258_isotonic_fit" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val (num, den) = TextAnalysis.qualityRational()
-      val scored = TextAnalysis.qualitySignals(docs, "doc_id", "text")
-        .select(col("doc_id"),
-          graft.functions.ExactRound.ratioScaled(num, den, 4)
-            .as("q_e4"))
-      val label = TextAnalysis.gopherRules(docs, "doc_id", "text",
-          minWords = 50L, maxWords = 100000L)
-        .select(col("doc_id"), col("keep"))
-      EvalMetrics.isotonicCalibration(scored.join(label, "doc_id"),
-        "q_e4", "keep", bins = 10)
-    }),
-
-    // ---- STREAMING EWMA daily series — the q190 batch operator's
-    // stateful twin (flatMapGroupsWithState; state = the trailing
-    // ring of observed day-counts within the 30-day horizon). Same
-    // day-ordered feed + sentinel-flush harness as q224; shares
-    // q190's oracle row-for-row.
-    "q264_stream_ewma" -> ((s, dir) => withShufflePartitions(s, 8) {
-      import s.implicits._
-      // replays q224's staged day-slice feed — identical stager (r20)
-      val src = readFeed(s, feedQ224(s, dir), "group STRING, day LONG")
-        .as[graft.streaming.Streams.DayEvent]
-      runStreamGate(s, "q264", graft.streaming.Streams
-          .streamingEwma(src, EventAnalytics.decayPowersE6(4, 5, 30)))(
-        _.select(col("group").as("event_type"), col("day"),
-          col("n_events"), col("ewma_e6")))
-    }),
-
-    // ---- vectors: per-dimension INT8 quantization card — affine
-    // 256-level grid per dim, reconstruction error carried as the
-    // division-free exact integer err255 = |255·(u−lo) − q·span|.
-    "q265_int8_card" -> ((s, dir) =>
-      Spectral.quantizeInt8Card(T(s, dir, "embeddings"), "vec_id",
-        "embedding")),
-
-    // ---- tokenizer: per-source OOV exposure vs the corpus-global
-    // top-1000 vocabulary ((count DESC, word ASC) total order; top-k
-    // via TakeOrderedAndProject, broadcast vocab join).
-    "q266_oov_rate" -> ((s, dir) =>
-      VocabBuild.oovRate(T(s, dir, "documents"), "text", "source",
-        vocabSize = 1000)),
-
-    // ---- multimodal: per-image LUMA CONTRAST card over real P6
-    // decode (q27's synthesized-PPM pin) — BT.709 e4 integer luma,
-    // dynamic range and the exact RMS-contrast variance numerator.
-    "q267_contrast_card" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val ppm = docs.filter(length(col("text")) >= 96 &&
-          octet_length(col("text")) === length(col("text")))
-        .select(col("doc_id"),
-          concat(lit("P6\n8 4\n255\n".getBytes("UTF-8")),
-            substring(col("text"), 1, 96).cast("binary")).as("payload"))
-      val dec = "decimal(38,0)"
-      Multimodal.contrastCard(ppm, "doc_id", "payload")
-        .select(col("doc_id"), col("n_px"), col("min_l"), col("max_l"),
-          (col("max_l") - col("min_l")).as("dyn_range"),
-          (col("n_px").cast(dec) * col("sumsq_l") -
-            col("sum_l").cast(dec) * col("sum_l")).cast("long")
-            .as("var_num"))
-    }),
-
-    // ---- funnels: STRICT ORDERED signup→view→purchase funnel within
-    // a 7-day horizon from the signup anchor — greedy earliest-event
-    // chain (exact for horizon-from-anchor semantics), per-stage
-    // conversion vs stage 1.
-    "q268_funnel_strict" -> ((s, dir) =>
-      EventAnalytics.strictFunnel(T(s, dir, "events"), "user_id", "ts",
-        "event_type", Seq("signup", "view", "purchase"),
-        horizonNanos = 7L * 86400L * 1000000000L)),
-
-    // ---- tokenizer: vocabulary COVERAGE CURVE — share of token
-    // occurrences captured by the top-{100, 1000, 10000} types
-    // ((count DESC, word ASC) rank via the range-partitioned global
-    // position; one conditional aggregate for every cutoff).
-    "q269_coverage_curve" -> ((s, dir) =>
-      VocabBuild.coverageCurve(T(s, dir, "documents"), "text")),
-
-    // ---- segmentation: RFM quintiles per user — recency vs the
-    // corpus horizon, frequency, e2 monetary; quintiles over the
-    // unique (metric ASC, user ASC) order via three range-partitioned
-    // global ranks. Ascending convention: 1 = most recent / lightest.
-    "q270_rfm_scores" -> ((s, dir) =>
-      EventAnalytics.rfmScores(T(s, dir, "events"), "user_id", "ts",
-        "value")),
-
-    // ---- journeys: top ENTRY PATHS — each user's first 3 event
-    // types in (ts, event_id) order as a path string, with user
-    // counts (the onboarding-flow card next to q122's transitions).
-    "q271_entry_paths" -> ((s, dir) =>
-      EventAnalytics.topPaths(T(s, dir, "events"), "user_id", "ts",
-        "event_id", "event_type", depth = 3)),
-
-    // ---- dedup: near-dup component SIZE HISTOGRAM — q47/q161's
-    // components rolled to (size, n_components), singletons included
-    // via the q161 coalesce convention; the "how clustered is the
-    // duplication" card.
-    "q272_component_sizes" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val cc = stagedNearDupComponents(s, dir)
-      emb.select(col("vec_id"))
-        .join(cc, col("vec_id") === col("node"), "left")
-        .select(coalesce(col("component"), col("vec_id")).as("rep"))
-        .groupBy(col("rep")).agg(count(lit(1)).as("sz__"))
-        .groupBy(col("sz__").as("size"))
-        .agg(count(lit(1)).as("n_components"))
-    }),
-
-    // ---- attribution: LINEAR multi-touch — q237's last-touch
-    // sibling: views within 24 h strictly before each purchase share
-    // the credit equally (truncating e6); organic purchases report 0.
-    "q273_linear_attribution" -> ((s, dir) =>
-      EventAnalytics.linearAttribution(T(s, dir, "events"), "user_id",
-        "ts", "event_id", "event_type", touchType = "view",
-        convType = "purchase", windowNanos = 24L * 3600L * 1000000000L)),
-
-    // ---- vectors: embedding-table QA pre-flight — dimension
-    // consistency, NULL pollution, zero vectors, e12 squared-norm
-    // range (no sqrt on the gate surface).
-    "q274_vector_qa" -> ((s, dir) =>
-      Spectral.vectorQa(T(s, dir, "embeddings"), "vec_id",
-        "embedding")),
-
-    // ---- features: best GINI decision stump of the gopher keep
-    // label on document length — CART's inner loop as the "does this
-    // feature separate?" audit; q253's two-stage ladder scores the
-    // exact variance reduction, smallest-threshold tie-break.
-    "q275_gini_stump" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val label = TextAnalysis.gopherRules(docs, "doc_id", "text",
-          minWords = 50L, maxWords = 100000L)
-        .select(col("doc_id"), col("keep"))
-      EvalMetrics.giniStump(
-        docs.select(col("doc_id"), col("n_chars")).join(label, "doc_id"),
-        "keep", col("n_chars"))
-    }),
-
-    // ---- monitoring: WEEK-OVER-WEEK trend per event type — last 7
-    // observed days vs the prior 7 against the corpus horizon, exact
-    // e6 ratio.
-    "q276_week_over_week" -> ((s, dir) =>
-      EventAnalytics.weekOverWeek(T(s, dir, "events"), "event_type",
-        "ts")),
-
-    // ---- graph: PERSONALIZED PageRank from the q254 seed customers
-    // — teleport mass restricted to seeds (Haveliwala), the "similar
-    // to these" recommender over the purchase graph; q108's exact
-    // integer ladder with a seed-indicator base term.
-    "q278_personalized_pagerank" -> ((s, dir) =>
-      GraphRank.personalizedPageRank(stagedPurchaseEdges(s, dir),
-        "src", "dst",
-        T(s, dir, "customer").filter(col("c_custkey") % 100 === 0)
-          .select((col("c_custkey") * 2L).as("node")),
-        "node", iterations = 5)),
-
-    // ---- events: TEMPORAL co-occurrence — unordered type pairs
-    // firing within 10 minutes for the same user; event pairs counted
-    // once via the unique id order.
-    "q279_temporal_cooccur" -> ((s, dir) =>
-      EventAnalytics.temporalCooccurrence(T(s, dir, "events"),
-        "user_id", "ts", "event_id", "event_type",
-        windowNanos = 600L * 1000000000L)),
-
-    // ---- curation: FILTER IMPACT by source — what the gopher filter
-    // does to each source's share of the mix: docs/tokens kept, keep
-    // rate, and the source's corpus token share BEFORE vs AFTER
-    // filtering (the mix-shift sheet a curation run signs off on).
-    "q280_filter_impact" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val keep = TextAnalysis.gopherRules(docs, "doc_id", "text",
-          minWords = 50L, maxWords = 100000L)
-        .select(col("doc_id"), col("keep"))
-      val toks = docs.select(col("doc_id"), col("source"),
-        size(graft.functions.TextFns.words(col("text")))
-          .cast("long").as("nw__"))
-      val per = toks.join(keep, "doc_id")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("keep"), 1L).otherwise(0L)).cast("long")
-            .as("n_keep"),
-          sum(col("nw__")).cast("long").as("tokens_total"),
-          sum(when(col("keep"), col("nw__")).otherwise(0L))
-            .cast("long").as("tokens_kept"))
-      val tot = per.agg(
-        sum(col("tokens_total")).cast("long").as("tt__"),
-        sum(col("tokens_kept")).cast("long").as("tk__"))
-      per.crossJoin(broadcast(tot))
-        .select(col("source"), col("n_docs"), col("n_keep"),
-          col("tokens_total"), col("tokens_kept"),
-          graft.functions.ExactRound.ratioScaled(col("n_keep"),
-            col("n_docs"), 6).as("keep_rate_e6"),
-          graft.functions.ExactRound.ratioScaled(col("tokens_total"),
-            col("tt__"), 6).as("share_before_e6"),
-          graft.functions.ExactRound.ratioScaled(col("tokens_kept"),
-            col("tk__"), 6).as("share_after_e6"))
-    }),
-
-    // ---- multimodal: audio CLIPPING card over the q241 synth WAVs —
-    // samples pinned at/above the rail, the longest consecutive
-    // clipped run (flat-topped waves, not single peaks), exact e6
-    // rate. Rail 30000: the ASCII-synthesized samples span 8k..32.4k,
-    // so both arms fire (the true int16 rail is the parameter's
-    // default for real audio).
-    "q281_audio_clipping" -> ((s, dir) => {
-      def le32(v: Int) = Array[Byte]((v & 255).toByte,
-        ((v >> 8) & 255).toByte, ((v >> 16) & 255).toByte,
-        ((v >> 24) & 255).toByte)
-      def le16(v: Int) = Array[Byte]((v & 255).toByte,
-        ((v >> 8) & 255).toByte)
-      val hdr = "RIFF".getBytes("UTF-8") ++ le32(100) ++
-        "WAVE".getBytes("UTF-8") ++ "fmt ".getBytes("UTF-8") ++
-        le32(16) ++ le16(1) ++ le16(1) ++ le32(8000) ++ le32(16000) ++
-        le16(2) ++ le16(16) ++ "data".getBytes("UTF-8") ++ le32(64)
-      val wavs = T(s, dir, "documents")
-        .filter(length(col("text")) >= 64 &&
-          octet_length(col("text")) === length(col("text")))
-        .select(col("doc_id"),
-          concat(lit(hdr), substring(col("text"), 1, 64).cast("binary"))
-            .as("payload"))
-      Multimodal.clippingCard(wavs, "doc_id", "payload",
-        railAbs = 30000L)
-    }),
-
-    // ---- vectors: 1-NN LABEL PURITY over the cosine near-dup pair
-    // surface at 0.3 — each node's best neighbor votes; per label the
-    // agreement rate (the "does the metric respect the labels?" eval).
-    "q282_knn_label_purity" -> ((s, dir) =>
-      EvalMetrics.neighborLabelPurity(
-        lshNearDupPairs(s, dir, threshold = 0.3),
-        "id_a", "id_b", round(col("cosine") * 10000),
-        T(s, dir, "embeddings"), "vec_id", "label")),
-
-    // ---- privacy: t-CLOSENESS EMD per (nation, segment) class —
-    // q131's k/l flags don't see a class whose acctbal DISTRIBUTION
-    // skews; ordered-distance EMD vs the global distribution over
-    // 1000-dollar buckets (shifted positive so both engines' integer
-    // division agrees), exact e6 through one decimal accumulator.
-    "q283_tcloseness" -> ((s, dir) =>
-      PrivacyAudit.tCloseness(T(s, dir, "customer"),
-        Seq("c_nationkey", "c_mktsegment"),
-        expr("(cast(round(c_acctbal * 100, 0) as long) + 100000)" +
-          " div 100000"))),
-
-    // ---- graph: common-neighbor LINK PREDICTION over the 1-NN
-    // best-neighbor graph of the 0.3 near-dup surface (q282's argmax
-    // edges — the thresholded graph itself is a union of cliques on
-    // generated near-dups, with zero open wedges at every threshold,
-    // so the sparser 1-NN stars are the real candidate surface):
-    // non-adjacent sibling pairs with the neighborhood-Jaccard e6
-    // score, the "which pairs did the 1-NN edge set miss?" queue.
-    "q284_link_prediction" -> ((s, dir) =>
-      GraphRank.linkPrediction(
-        GraphRank.bestNeighborEdges(
-          lshNearDupPairs(s, dir, threshold = 0.3), "id_a", "id_b",
-          round(col("cosine") * 10000)),
-        "u", "v")),
-
-    // ---- graph: HUB-CAPPED link prediction (r15 verdict #2) — q284
-    // with wedge centers above degree 2 excluded before the self-join
-    // (the q225 bucket-cap recall trade): a viral hub of degree d no
-    // longer yields d²/2 wedge pairs. deg_a/deg_b stay true degrees,
-    // so jaccard_e6 is a lower bound of q284's.
-    "q317_link_prediction_capped" -> ((s, dir) =>
-      GraphRank.linkPrediction(
-        GraphRank.bestNeighborEdges(
-          lshNearDupPairs(s, dir, threshold = 0.3), "id_a", "id_b",
-          round(col("cosine") * 10000)),
-        "u", "v", maxCenterDegree = 2)),
-
-    // ---- model-eval: MARKOV NEXT-EVENT BACKTEST — q122's transition
-    // matrix actually scored: train on the first half of the horizon
-    // (by target-event day), argmax successor per from_type (ties to
-    // smallest to_type), top-1 accuracy on the second half; unseen
-    // from_types predict NULL and score 0 — the cold-start rate is
-    // part of the card.
-    "q318_markov_backtest" -> ((s, dir) =>
-      EventAnalytics.markovBacktest(
-        T(s, dir, "events").filter(col("user_id").isNotNull),
-        "user_id", "ts", "event_id", "event_type")),
-
-    // ---- retention: discrete-time CHURN HAZARD table — at_risk /
-    // churned / hazard_e6 per day-offset since first activity,
-    // right-censored at the corpus horizon; the per-step-ratio form
-    // is the exact (product-free) Kaplan–Meier surface.
-    "q319_churn_hazard" -> ((s, dir) =>
-      EventAnalytics.churnHazard(T(s, dir, "events"), "user_id",
-        "ts")),
-
-    // ---- stats: THEIL–SEN robust trend per event type — the median
-    // pairwise day-slope of the daily count series (floored e6 keys,
-    // lower-median row_number pick), q285's outlier-proof sibling.
-    "q320_theilsen" -> ((s, dir) =>
-      EventAnalytics.theilSen(T(s, dir, "events"), "event_type",
-        "ts")),
-
-    // ---- stats: WALD–WOLFOWITZ RUNS TEST per event type — runs of
-    // above/below-median days vs the exact expected run count
-    // 1 + 2·n₁·n₂/(n₁+n₂) at e6; fewer runs = trending, more =
-    // oscillating (the sqrt-free z surface).
-    "q321_runs_test" -> ((s, dir) =>
-      EventAnalytics.runsTest(T(s, dir, "events"), "event_type",
-        "ts")),
-
-    // ---- corpus audit: CONCENTRATION card per source — Gini + HHI
-    // of token mass across documents ("half the tokens sit in 2% of
-    // docs"), exact e6 rationals on range-partitioned ranks and
-    // DECIMAL(38,0) sums.
-    "q322_concentration" -> ((s, dir) =>
-      GroupStats.concentration(T(s, dir, "documents"), "source",
-        "doc_id",
-        size(graft.functions.TextFns.words(col("text"))).cast("long"))),
-
-    // ---- curation: COLEMAN–LIAU READABILITY per doc — the
-    // syllable-free grade-level formula as an exact e2 integer
-    // ((588·L − 2960·S) div W − 1580, both engines truncating);
-    // letters/words/sentences counted in one scan.
-    "q323_readability" -> ((s, dir) =>
-      TextAnalysis.readability(T(s, dir, "documents"), "doc_id",
-        "text")),
-
-    // ---- data-eng: LINEAR INTERPOLATION over calendar gaps —
-    // q286's densify with the numeric blend: gaps get the exact
-    // truncated-e6 linear value between anchors, edges stay NULL.
-    // Days ≡1 (mod 3) are held out of the tally BY CONSTRUCTION so
-    // the interpolation arm provably fires (the q193 discipline).
-    "q332_interpolate" -> ((s, dir) => {
-      val day = TimeFns.floorDiv(col("ts"), 86400L * 1000000000L)
-      EventAnalytics.interpolateDaily(
-        T(s, dir, "events").filter(pmod(day, lit(3)) =!= 1),
-        "event_type", "ts")
-    }),
-
-    // ---- graph: truncated KATZ CENTRALITY over the staged purchase
-    // graph — Σ αᵗ·(walks of length t), α=1/2, 3 rounds of the exact
-    // integer ladder (q108's discipline with attenuation instead of
-    // stochastic normalization).
-    "q333_katz" -> ((s, dir) =>
-      GraphRank.katzCentrality(stagedPurchaseEdges(s, dir), "src",
-        "dst", iterations = 3, attNum = 1L, attDen = 2L)),
-
-    // ---- graph×dedup: PARTITION MODULARITY of the embedding LABEL
-    // partition over the staged near-dup graph — "do the labels and
-    // the similarity clusters agree?" as Newman's Q, per-label e12
-    // contributions from exact integer tallies.
-    "q334_label_modularity" -> ((s, dir) =>
-      GraphRank.partitionModularity(
-        lshNearDupPairs(s, dir, threshold = 0.45)
-          .select(col("id_a"), col("id_b")), "id_a", "id_b",
-        T(s, dir, "embeddings"), "vec_id", "label")),
-
-    // ---- experimentation: DIFF-IN-DIFF card — hash-parity arms,
-    // midpoint pre/post split, purchases-per-user cell means (half-up
-    // e6) and the DiD estimate on the rounded cells.
-    "q335_diff_in_diff" -> ((s, dir) =>
-      EventAnalytics.diffInDiff(T(s, dir, "events"), "user_id", "ts",
-        "event_type", convType = "purchase")),
-
-    // ---- source format: ORC ROUNDTRIP — orders normalized to exact
-    // columns (e2 cents, epoch-day), staged to an ORC store (real
-    // write), read back through the ORC scan, and checksummed per
-    // status against the parquet-side oracle: a wrong type mapping,
-    // dropped row, or column swap breaks the hash.
-    "q336_orc_roundtrip" -> ((s, dir) => {
-      val stamp = Dedup.sourceStamp(s, s"$dir/orders.parquet")
-      val back = Tables.stagedOrc(s, s"$stageRoot/orc-orders-$stamp") {
-        T(s, dir, "orders").select(
-          col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-          expr("cast(round(o_totalprice * 100, 0) as long)")
-            .as("price_e2"),
-          TimeFns.floorDiv(unix_micros(col("o_orderdate")
-            .cast("timestamp")), 86400L * 1000000L).as("order_day"))
-      }
-      back.groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("price_e2")).as("sum_price_e2"),
-          sum(col("o_custkey") * lit(1000003L) + col("order_day"))
-            .as("xsum"),
-          min(col("o_orderkey")).as("min_key"),
-          max(col("order_day")).as("max_day"))
-    }),
-
-    // ---- source format: JSONL ROUNDTRIP — q336's sibling for the
-    // third lakehouse interchange format: orders normalized to exact
-    // columns, WRITTEN as line-delimited JSON (real Spark json write),
-    // read back through the schema-ful JSON scan, checksummed per
-    // status. The oracle re-reads the engine-written FILE with
-    // DuckDB's read_json — the bytes themselves are gated
-    // cross-engine, the q194 CSV-surface discipline.
-    "q356_jsonl_roundtrip" -> ((s, dir) => {
-      val out = T(s, dir, "orders").select(
-        col("o_orderkey").cast("long").as("o_orderkey"),
-        col("o_custkey").cast("long").as("o_custkey"),
-        col("o_orderstatus"),
-        expr("cast(round(o_totalprice * 100, 0) as long)")
-          .as("price_e2"),
-        TimeFns.floorDiv(unix_micros(col("o_orderdate")
-          .cast("timestamp")), 86400L * 1000000L).as("order_day"))
-      val path = stageFile(s, out, "q356/orders.jsonl")(_.json(_))
-      val schema = "o_orderkey long, o_custkey long, " +
-        "o_orderstatus string, price_e2 long, order_day long"
-      s.read.schema(schema).json(path)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("price_e2")).as("sum_price_e2"),
-          sum(col("o_custkey") * lit(1000003L) + col("order_day"))
-            .as("xsum"),
-          min(col("o_orderkey")).as("min_key"),
-          max(col("order_day")).as("max_day"))
-    }),
-
-    // ---- layout: BUCKETED CO-LOCATED JOIN — orders and lineitem
-    // written bucketBy(16, orderkey) into the session warehouse, then
-    // joined WITHOUT a shuffle on either side (each bucketed scan
-    // already reports the hash partitioning; PlanAuditSpec pins the
-    // no-Exchange property). The VALUES are gated here: bucketing
-    // must change the plan, never the result.
-    "q357_bucketed_join" -> ((s, dir) => {
-      val stamp = Dedup.sourceStamp(s, s"$dir/orders.parquet") + "_" +
-        Dedup.sourceStamp(s, s"$dir/lineitem.parquet")
-      val o = Tables.bucketedTable(s, s"graft_bkt_orders_$stamp",
-        T(s, dir, "orders").select(col("o_orderkey").cast("long")
-          .as("o_orderkey"), col("o_orderpriority")),
-        "o_orderkey", buckets = 16)
-      val li = Tables.bucketedTable(s, s"graft_bkt_lineitem_$stamp",
-        T(s, dir, "lineitem").select(col("l_orderkey").cast("long")
-          .as("l_orderkey"),
-          expr("cast(round(l_extendedprice * 100, 0) as long)")
-            .as("price_e2")),
-        "l_orderkey", buckets = 16)
-      o.join(li, o("o_orderkey") === li("l_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_lines"),
-          sum(col("price_e2")).as("sum_price_e2"),
-          min(col("o_orderkey")).as("min_key"),
-          max(col("l_orderkey")).as("max_key"))
-    }),
-
-    // ---- layout: PARTITION-PRUNED SCAN — orders staged once in a
-    // hive-partitioned layout (o_orderstatus=X/ directories); the
-    // status filter reaches the scan as a PartitionFilter, so only the
-    // matching directory is read (PlanAuditSpec pins the pruning).
-    // Values gated against the unpartitioned source: layout must
-    // change the I/O, never the result.
-    "q358_partition_pruned" -> ((s, dir) => {
-      val stamp = Dedup.sourceStamp(s, s"$dir/orders.parquet")
-      val store = Tables.stagedPartitionedParquet(s,
-          s"$stageRoot/orders-by-status-$stamp", "o_orderstatus") {
-        T(s, dir, "orders").select(
-          col("o_orderkey").cast("long").as("o_orderkey"),
-          col("o_orderpriority"),
-          expr("cast(round(o_totalprice * 100, 0) as long)")
-            .as("price_e2"),
-          col("o_orderstatus"))
-      }
-      store.filter(col("o_orderstatus") === "F")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("price_e2")).as("sum_price_e2"),
-          min(col("o_orderkey")).as("min_key"))
-    }),
-
-    // ---- layout: DYNAMIC PARTITION PRUNING — q358's 100 TB sibling:
-    // the status predicate lives on a tiny DIM table, not on the fact
-    // scan, and must reach the hive-partitioned fact store THROUGH the
-    // join — Spark reuses the dim's broadcast as a dynamicpruning
-    // subquery in the fact scan's PartitionFilters, so only the
-    // matching status directories are read (the J1/J2 broadcast-dim
-    // pattern at fact scale; PlanAuditSpec pins the dynamicpruning
-    // expression). Values gated against the unpartitioned source:
-    // pruning must change the I/O, never the result.
-    "q359_dpp_join" -> ((s, dir) => {
-      val stamp = Dedup.sourceStamp(s, s"$dir/orders.parquet")
-      // same staged store as q358 — built once, shared
-      val fact = Tables.stagedPartitionedParquet(s,
-          s"$stageRoot/orders-by-status-$stamp", "o_orderstatus") {
-        T(s, dir, "orders").select(
-          col("o_orderkey").cast("long").as("o_orderkey"),
-          col("o_orderpriority"),
-          expr("cast(round(o_totalprice * 100, 0) as long)")
-            .as("price_e2"),
-          col("o_orderstatus"))
-      }
-      // the dim must be a FILE-backed table: a LocalRelation dim gets
-      // its filter constant-folded away and DPP never sees a selective
-      // predicate to prune with
-      val dim = Tables.stagedParquet(s, s"$stageRoot/status-dim-$stamp") {
-        T(s, dir, "orders").select(col("o_orderstatus").as("status"))
-          .distinct()
-          .withColumn("category",
-            when(col("status") === "F", lit("done"))
-              .when(col("status") === "O", lit("open"))
-              .otherwise(lit("pending")))
-      }
-      fact.join(dim.filter(col("category") === "done"),
-          col("o_orderstatus") === col("status"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("price_e2")).as("sum_price_e2"),
-          min(col("o_orderkey")).as("min_key"))
-    }),
-
-    // ---- S7 versioned-sink CDC as a query: snapshot A (per-customer
-    // F-order totals) committed as v=0 through the REAL staged-claim-
-    // flip write path, snapshot B (O-order totals) upserted as v=1,
-    // then diffVersions time-travels both and labels every key
-    // added / changed / unchanged ("what did last night's merge
-    // change?" — upsert never removes). The store is a throwaway per
-    // invocation (each run pays the honest write+diff cost); the
-    // final 3-4 label rows are collected — bounded by the 4 possible
-    // labels — so the tmp store can be deleted before returning. The
-    // oracle re-derives the merge and the diff relationally.
-    "q360_version_diff" -> ((s, dir) => {
-      import s.implicits._
-      // store staged once per corpus stamp (r19 verdict #4) — the
-      // timed path is the CDC diff itself, not the store build
-      val base = stagedVersionStoreQ360(s, dir)
-      val diff = graft.sinks.MergeByKey.diffVersions(s, base, "k", 0L, 1L)
-        .groupBy(col("change"))
-        .agg(count(lit(1)).as("n_keys"),
-          min(col("k")).as("min_key"), max(col("k")).as("max_key"))
-      val rows = diff.as[(String, Long, Long, Long)].collect().toSeq
-      require(rows.length <= 4, "diff labels are a closed 4-value set")
-      rows.toDF("change", "n_keys", "min_key", "max_key")
-    }),
-
-    // ---- stats: ONE-SPLIT CHANGEPOINT per event type — the binary-
-    // segmentation first step over the daily-count series, argmax of
-    // the exact between-segment sum-of-squares gain.
-    "q337_changepoint" -> ((s, dir) =>
-      EventAnalytics.changepointDaily(T(s, dir, "events"),
-        "event_type", "ts")),
-
-    // ---- text: TEXTRANK keywords — PageRank's exact integer ladder
-    // run directly on the string word-co-occurrence graph (adjacent
-    // tokens, undirected), corpus top-20 by (rank desc, word asc).
-    "q338_textrank" -> ((s, dir) =>
-      TextAnalysis.textRank(T(s, dir, "documents"), "doc_id", "text",
-        iterations = 5, topK = 20)),
-
-    // ---- eval: BRIER DECOMPOSITION — the q215/q203 score+label
-    // surface (quality rational e6 vs gopher keep) summarized as
-    // reliability / resolution / uncertainty over 10 equal-width bins.
-    "q339_brier" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val (num, den) = TextAnalysis.qualityRational()
-      val scored = TextAnalysis.qualitySignals(docs, "doc_id", "text")
-        .select(col("doc_id"),
-          graft.functions.ExactRound.ratioScaled(num, den, 6)
-            .as("p_e6"))
-      val label = TextAnalysis.gopherRules(docs, "doc_id", "text",
-          minWords = 50L, maxWords = 100000L)
-        .select(col("doc_id"), col("keep"))
-      EvalMetrics.brierDecomposition(scored.join(label, "doc_id"),
-        "p_e6", "keep")
-    }),
-
-    // ---- graph: LOCAL CLUSTERING COEFFICIENT over the co-purchase
-    // item graph (q126's capped-basket pairs at support >= 2 — the
-    // q193 discipline: support 3 closes zero wedges at gate scale) —
-    // wedge self-join closed by a left-semi probe against the edges.
-    "q340_local_clustering" -> ((s, dir) =>
-      GraphRank.localClustering(
-        CoOccurrence.basketPairs(T(s, dir, "lineitem"), "l_orderkey",
-          "l_partkey", minSupport = 2L, maxBasketSize = 64)
-          .select(col("item_a"), col("item_b")),
-        "item_a", "item_b")),
-
-    // ---- sampling: CLASS-BALANCED OVERSAMPLING, materialized — the
-    // gate aggregates the actual per-copy row stream and must match
-    // the oracle's closed form exactly (rep + deterministic remainder
-    // on the smallest ids).
-    "q341_class_balance" -> ((s, dir) => {
-      val m = Sampling.oversampleBalanced(T(s, dir, "embeddings"),
-        "vec_id", "label")
-      m.groupBy(col("label"))
-        .agg(sum(when(col("copy_idx") === 1L, 1L).otherwise(0L))
-            .cast("long").as("n_source"),
-          count(lit(1)).as("n_materialized"),
-          max(col("copy_idx")).as("max_copies"))
-    }),
-
-    // ---- privacy: GENERALIZATION LADDER — k-anonymity coarsening
-    // sweep over acctbal bucket widths (true floor on the signed
-    // balances), per-width class stats and the k-ok verdict.
-    "q342_generalization_ladder" -> ((s, dir) =>
-      PrivacyAudit.generalizationLadder(T(s, dir, "customer"),
-        "c_mktsegment",
-        (col("c_acctbal").cast("decimal(18,2)") * 100).cast("long"),
-        widths = Seq(1000L, 10000L, 100000L, 1000000L), k = 10L)),
-
-    // ---- maintenance: INCREMENTAL JOIN-AGGREGATE — q132's merge
-    // with the join folded in (the IVM delta rule: the delta batch
-    // joins the STATIC broadcast dim before its partial state is
-    // merged); the merged state must equal the full recompute.
-    "q343_ivm_join_agg" -> ((s, dir) => {
-      val priceE2 = (col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-      val o = T(s, dir, "orders")
-      val c = T(s, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey"))
-      def joined(f: DataFrame) = f.join(broadcast(c),
-        col("o_custkey") === col("c_custkey"))
-      val base = AggMaintenance.aggState(
-        joined(o.filter(pmod(col("o_orderkey"), lit(5)) =!= 0)),
-        Seq("c_nationkey"), priceE2)
-      val delta = AggMaintenance.aggState(
-        joined(o.filter(pmod(col("o_orderkey"), lit(5)) === 0)),
-        Seq("c_nationkey"), priceE2)
-      AggMaintenance.mergeStates(base, delta, Seq("c_nationkey"))
-    }),
-
-    // ---- maintenance: INCREMENTAL COMPONENT MAP — q343's IVM
-    // discipline on the near-dup graph (r16 verdict #2): the staged
-    // (node, component) map of the STANDING pairs (both endpoints
-    // ≢ 0 mod 7 — yesterday's corpus) merged with the DELTA batch
-    // (pairs touching a "new" doc) must equal the full recompute
-    // over every pair; the oracle is exactly q47's recursive-CTE
-    // closure, so merge == rebuild is hash-gated cross-engine.
-    "q344_incremental_components" -> ((s, dir) => {
-      val pairs = lshNearDupPairs(s, dir, threshold = 0.45)
-        .select(col("id_a"), col("id_b"))
-      val standingEnds =
-        pmod(col("id_a"), lit(7)) =!= 0 && pmod(col("id_b"), lit(7)) =!= 0
-      // the standing map is itself a staged artifact (production reads
-      // yesterday's labels, never rebuilds them) — per-query work is
-      // the MERGE alone
-      val stamp = Dedup.sourceStamp(s, s"$dir/embeddings.parquet")
-      val staged = Tables.stagedParquet(s,
-          s"$stageRoot/standing-comps-$stamp" +
-            s"-b$lshBaseBits-n$lshBands-r$lshBitsPerBand-t045-m7") {
-        Dedup.connectedComponents(pairs.filter(standingEnds),
-          "id_a", "id_b")
-      }
-      Dedup.mergeComponentMap(staged, pairs.filter(!standingEnds),
-        "id_a", "id_b")
-    }),
-
-    // ---- dedup: IDF-WEIGHTED Jaccard pairs — q22's posting join with
-    // integer N div df shingle weights (rare phrases outweigh
-    // boilerplate), cross-multiplied rational threshold 1/2, exact e6
-    // score.
-    "q350_weighted_jaccard" -> ((s, dir) =>
-      Dedup.weightedJaccardPairs(T(s, dir, "documents"), "doc_id",
-        "text", n = 3, thrNum = 1L, thrDen = 2L)),
-
-    // ---- graph: k-TRUSS decomposition of the near-dup graph — edges
-    // supported by ≥ k−2 triangles in the surviving subgraph, peeled
-    // to the detected fixpoint (r18: self-enforcing convergence); the
-    // edge-level sharpening of q163's k-core. The oracle unrolls 5
-    // peels — rounds past the fixpoint are no-ops, so any unroll ≥ the
-    // data's peel depth matches, and the gate fails loudly if the
-    // depth ever exceeds the unroll.
-    "q351_ktruss" -> ((s, dir) =>
-      GraphRank.kTruss(lshNearDupPairs(s, dir, threshold = 0.3)
-        .select(col("id_a"), col("id_b")), "id_a", "id_b", k = 3)),
-
-    // ---- ETL: ROLLUP grouping sets — the hierarchy-subtotal operator
-    // (Expand under the hood: detail, per-flag, grand total in ONE
-    // scan, no self-union), grouping_id disambiguates real nulls from
-    // subtotal nulls.
-    "q352_rollup" -> ((s, dir) =>
-      T(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum((col("l_quantity").cast("decimal(18,2)") * 100)
-            .cast("long")).cast("long").as("qty_e2"),
-          grouping_id().as("gid"))),
-
-    // ---- ETL: CUBE grouping sets — all 2² aggregation lattices of
-    // (returnflag, linestatus) in one Expand scan.
-    "q353_cube" -> ((s, dir) =>
-      T(s, dir, "lineitem")
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum((col("l_quantity").cast("decimal(18,2)") * 100)
-            .cast("long")).cast("long").as("qty_e2"),
-          grouping_id().as("gid"))),
-
-    // ---- privacy: RECURSIVE (c,l)-DIVERSITY — the dominance test
-    // k/l flags miss (q66's class can hold l values yet be 99% one
-    // value): r1 < c·Σ_{i≥l} r_i per class, exact integer cross-
-    // multiplication with c = 1/1, l = 3.
-    "q345_recursive_ldiversity" -> ((s, dir) =>
-      PrivacyAudit.recursiveLDiversity(T(s, dir, "customer"),
-        Seq("c_mktsegment"), "c_nationkey", l = 3, cNum = 1L, cDen = 1L)),
-
-    // ---- graph: LANDMARK HARMONIC CENTRALITY within 3 hops on the
-    // staged purchase graph (q254's seed sample) — Σ 1e6 div dist
-    // over reached nodes, the disconnected-safe closeness.
-    "q346_harmonic_centrality" -> ((s, dir) =>
-      GraphRank.harmonicCentrality(stagedPurchaseEdges(s, dir),
-        "src", "dst",
-        T(s, dir, "customer").filter(col("c_custkey") % 100 === 0)
-          .select((col("c_custkey") * 2L).as("node")),
-        "node", maxHops = 3)),
-
-    // ---- graph: HYPERBALL neighborhood-function sketch — q346's
-    // all-nodes companion (r17 verdict #7): every node carries a
-    // 16-register md5-derived HLL of its ≤3-hop ball, merged
-    // register-wise per round; the gate hashes the deterministic
-    // register content (n_set, sum_rho) and the raw integer HLL
-    // estimate. Rides the shared staged purchase-edge store.
-    "q354_hyperball" -> ((s, dir) =>
-      GraphRank.hyperBall(stagedPurchaseEdges(s, dir), "src", "dst",
-        rounds = 3)),
-
-    // ---- graph: NEIGHBORHOOD-FUNCTION CURVE — HyperBall's
-    // effective-diameter statistic: per radius t, the graph-level sum
-    // of every node's raw sketch estimate (≈ pairs within distance
-    // t); one register ladder serves every radius.
-    "q355_neighborhood_curve" -> ((s, dir) =>
-      GraphRank.hyperBallCurve(stagedPurchaseEdges(s, dir), "src",
-        "dst", rounds = 2)),
-
-    // ---- analytics: KENDALL tau-a between event types' daily count
-    // series — rank concordance over aligned day pairs, all-integer
-    // with the q320 truncating-div convention.
-    "q347_kendall_daily" -> ((s, dir) =>
-      EventAnalytics.kendallDailyPairs(T(s, dir, "events"),
-        "event_type", "ts")),
-
-    // ---- analytics: DAY-OF-WEEK SEASONAL PROFILE — per (type, epoch
-    // day mod 7) the lower-median daily count + the worst single-day
-    // deviation from it; the seasonal-naive anomaly baseline.
-    "q348_dow_seasonality" -> ((s, dir) =>
-      EventAnalytics.dowSeasonality(T(s, dir, "events"),
-        "event_type", "ts")),
-
-    // ---- similarity: RANGE COUNT per anchor — neighborhood size +
-    // max cosine (e4) within radius 0.3 from the staged band-key
-    // index; the radius twin of q82's batched top-k.
-    "q349_ann_range_count" -> ((s, dir) =>
-      SimilaritySearch.rangeCountFromKeys(stagedEmbKeys(s, dir),
-        T(s, dir, "embeddings"), "vec_id", "embedding",
-        T(s, dir, "embeddings").filter(col("vec_id") % 17 === 0)
-          .select(col("vec_id")),
-        "vec_id", threshold = 0.3)),
-
-    // ---- drift: WASSERSTEIN-1 per source vs rest on doc length —
-    // q257's KS integrated over the whole value axis: cross-
-    // multiplied ECDF gaps × interval widths, exact e2 units.
-    "q329_wasserstein" -> ((s, dir) =>
-      Drift.wasserstein1GroupVsRest(T(s, dir, "documents"), "source",
-        col("n_chars"))),
-
-    // ---- graph: 2-HOP REACH over the 1-NN best-neighbor graph —
-    // degree + two-step coverage per node, hub middles capped at
-    // degree 8 (the q317 semi-join discipline; true degrees
-    // reported).
-    "q330_two_hop_reach" -> ((s, dir) =>
-      GraphRank.twoHopReach(
-        GraphRank.bestNeighborEdges(
-          lshNearDupPairs(s, dir, threshold = 0.3), "id_a", "id_b",
-          round(col("cosine") * 10000)),
-        "u", "v", maxCenterDegree = 8)),
-
-    // ---- ETL: UNPIVOT (wide → long melt) — lineitem's numeric
-    // metrics to (key, metric, value_e2) rows via the native unpivot
-    // operator (Expand, one scan, no join).
-    "q331_unpivot" -> ((s, dir) =>
-      T(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          (col("l_quantity").cast("decimal(18,2)") * 100)
-            .cast("long").as("quantity_e2"),
-          (col("l_extendedprice").cast("decimal(18,2)") * 100)
-            .cast("long").as("extendedprice_e2"),
-          (col("l_discount").cast("decimal(18,2)") * 100)
-            .cast("long").as("discount_e2"))
-        .unpivot(
-          Array(col("l_orderkey"), col("l_linenumber")),
-          Array(col("quantity_e2"), col("extendedprice_e2"),
-            col("discount_e2")),
-          "metric", "value_e2")),
-
-    // ---- CDC analytics: STATE DWELL TIMES — q123's SCD2 intervals
-    // rolled to per-state duration stats (closed versions only;
-    // open versions counted, never averaged): how long does a user
-    // SIT in each event-type state?
-    "q325_state_dwell" -> ((s, dir) => {
-      val hist = SnapshotDiff.scd2History(T(s, dir, "events"),
-        "user_id", "ts", "event_type", "event_id")
-      val dwellSec = call_function("div",
-        col("valid_to_ns") - col("valid_from_ns"), lit(1000000000L))
-      hist.groupBy(col("value"))
-        .agg(count(lit(1)).as("n_versions"),
-          sum(when(col("valid_to_ns").isNull, 1L).otherwise(0L))
-            .as("n_open"),
-          sum(when(col("valid_to_ns").isNotNull, 1L).otherwise(0L))
-            .as("n_closed"),
-          sum(when(col("valid_to_ns").isNotNull, dwellSec)
-            .otherwise(0L)).as("total_dwell_sec"))
-        .select(col("value"), col("n_versions"), col("n_open"),
-          col("n_closed"), col("total_dwell_sec"),
-          graft.functions.ExactRound.ratioScaled(
-            col("total_dwell_sec"), col("n_closed"), 2)
-            .as("avg_dwell_sec_e2"))
-    }),
-
-    // ---- stats: daily AUTOCORRELATION per type at lags 1..7 —
-    // q310's signed-squared-Pearson ladder on the series against
-    // itself; lag-7 structure = weekly seasonality, lag-1 = momentum.
-    "q326_acf" -> ((s, dir) =>
-      EventAnalytics.acfDaily(T(s, dir, "events"), "event_type",
-        "ts", maxLag = 7)),
-
-    // ---- baskets: FREQUENT TRIPLES — the A-priori level above
-    // q126's pairs, same capped-basket contract (structural C(64,3)
-    // bound), e6 support share.
-    "q327_basket_triples" -> ((s, dir) =>
-      CoOccurrence.basketTriples(T(s, dir, "lineitem"), "l_orderkey",
-        "l_partkey", minSupport = 2L, maxBasketSize = 64)),
-
-    // ---- embeddings: CENTROID SHIFT per label between the two
-    // vec_id-parity halves — exact squared-L2 of mean vectors via
-    // cross-multiplied rationals (e12 units); a label missing from
-    // either half reports NULL.
-    "q328_centroid_shift" -> ((s, dir) =>
-      Prototypes.centroidShift(T(s, dir, "embeddings"), "vec_id",
-        "embedding", "label", pmod(col("vec_id"), lit(2)) === 1)),
-
-    // ---- dedup ROI: SAVINGS BY SOURCE — the staged component map
-    // (q47's store) joined to per-doc token counts: docs/tokens that
-    // min-id representative dedup would drop, per source, with the
-    // e6 savings share — the "is dedup worth it here?" sheet.
-    "q324_dedup_savings" -> ((s, dir) => {
-      val docs = T(s, dir, "documents").select(col("doc_id"),
-        col("source"),
-        size(graft.functions.TextFns.words(col("text"))).cast("long")
-          .as("toks__"))
-      val cc = stagedNearDupComponents(s, dir)
-      docs
-        .join(cc.select(col("node").as("doc_id"), col("component")),
-          Seq("doc_id"), "left")
-        .withColumn("drop__", col("component").isNotNull &&
-          col("component") =!= col("doc_id"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("drop__"), 1L).otherwise(0L)).as("n_dropped"),
-          sum(col("toks__")).as("tokens_total"),
-          sum(when(col("drop__"), col("toks__")).otherwise(0L))
-            .as("tokens_dropped"))
-        .select(col("source"), col("n_docs"), col("n_dropped"),
-          col("tokens_total"), col("tokens_dropped"),
-          graft.functions.ExactRound.ratioScaled(col("tokens_dropped"),
-            col("tokens_total"), 6).as("savings_e6"))
-    }),
-
-    // ---- monitoring: ROLLING 7-day OLS slope per event type —
-    // q120's moving average says where the level is; this says how
-    // fast it's moving (events/day of drift, signed e6 via Cramer on
-    // integer window sums), the decay detector a whole-series fit
-    // (q116) smears out.
-    "q285_rolling_slope" -> ((s, dir) =>
-      EventAnalytics.rollingSlope(T(s, dir, "events"), "event_type",
-        "ts", windowRows = 7)),
-
-    // ---- data-eng: calendar DENSIFY + forward fill — every type ×
-    // every horizon day, zero-filled counts, days-since-observed, and
-    // the carried last observed daily max(value): the gap-filling
-    // pass that makes "7 rows = 7 days" true for q120/q264/q276.
-    "q286_densify_ffill" -> ((s, dir) =>
-      EventAnalytics.densifyDaily(T(s, dir, "events"), "event_type",
-        "ts", "value")),
-
-    // ---- eval: RANK-BIASED OVERLAP per source — do the by-chars and
-    // by-words top-10 doc rankings agree where it matters? RBO_min at
-    // p=0.9 as exact floored-e6 rational terms (Webber et al. 2010),
-    // the top-weighted cousin of q240's Spearman.
-    "q287_rbo" -> ((s, dir) =>
-      EvalMetrics.rankBiasedOverlap(
-        T(s, dir, "documents").select(col("source"), col("doc_id"),
-          col("n_chars"),
-          size(TextFns.words(col("text"))).cast("long").as("nw__")),
-        "source", "doc_id", col("n_chars"), col("nw__"),
-        depth = 10, pNum = 9L, pDen = 10L)),
-
-    // ---- multimodal: OTSU threshold per q267 synth PPM — the luma
-    // value maximizing between-class variance on the q275 two-stage
-    // integer ladder, (score DESC, value ASC) argmax: the bimodality
-    // / binarization card next to the contrast card.
-    "q288_otsu_card" -> ((s, dir) => {
-      val ppm = T(s, dir, "documents")
-        .filter(length(col("text")) >= 96 &&
-          octet_length(col("text")) === length(col("text")))
-        .select(col("doc_id"),
-          concat(lit("P6\n8 4\n255\n".getBytes("UTF-8")),
-            substring(col("text"), 1, 96).cast("binary")).as("payload"))
-      Multimodal.otsuCard(
-        Multimodal.lumaPixels(ppm, "doc_id", "payload"), "doc_id", "l")
-    }),
-
-    // ---- attribution: POSITION-BASED (U-shaped 40/20/40) — q273's
-    // equal split replaced by the first/last-heavy convention, one
-    // row per touch with its exact truncating e6 credit.
-    "q290_position_attribution" -> ((s, dir) =>
-      EventAnalytics.positionAttribution(T(s, dir, "events"),
-        "user_id", "ts", "event_id", "event_type", touchType = "view",
-        convType = "purchase",
-        windowNanos = 24L * 3600L * 1000000000L)),
-
-    // ---- graph: WEIGHTED PageRank over the purchase multigraph —
-    // rank mass splits by lineitem-count edge weight instead of
-    // out-degree (q108's ladder with floor(rank·w/outw) per edge):
-    // heavy trade lanes pull more centrality.
-    "q291_weighted_pagerank" -> ((s, dir) => {
-      val o = T(s, dir, "orders").select(col("o_orderkey"),
-        col("o_custkey"))
-      val li = T(s, dir, "lineitem").select(col("l_orderkey"),
-        col("l_suppkey"))
-      val we = li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .groupBy((col("o_custkey") * 2L).as("src"),
-          (col("l_suppkey") * 2L + 1L).as("dst"))
-        .agg(count(lit(1)).as("w"))
-      GraphRank.weightedPageRank(we, "src", "dst", "w",
-        iterations = 5)
-    }),
-
-    // ---- monitoring: MANN-KENDALL trend per event type — the
-    // non-parametric S statistic + exact e6 tau-a over the daily
-    // series (pairs bounded by the calendar), the spike-robust
-    // monotone-drift alarm next to q285's local slope.
-    "q292_mann_kendall" -> ((s, dir) =>
-      EventAnalytics.mannKendall(T(s, dir, "events"), "event_type",
-        "ts")),
-
-    // ---- sharding: RENDEZVOUS (HRW) re-shard movement matrix — doc
-    // assignments at k=4 vs k=5 cross-tabbed; HRW's minimal-movement
-    // property makes every off-diagonal cell land in the shard_after=4
-    // column (keys move ONLY to the new shard), visible in the gate.
-    "q293_rendezvous_shards" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select(col("doc_id"))
-      val a = ShardExport.rendezvousAssign(d, "doc_id", 4,
-        "shard_before")
-      ShardExport.rendezvousAssign(a, "doc_id", 5, "shard_after")
-        .groupBy(col("shard_before"), col("shard_after"))
-        .agg(count(lit(1)).as("n_docs"))
-    }),
-
-    // ---- splits: EXACT-COUNT stratified 8/1/1 by language — q50's
-    // hash bands give expected shares; this ranks each stratum by
-    // (md5, id) and cuts at exact floor quotas. Per-doc membership
-    // gated (not just counts).
-    "q294_exact_split" -> ((s, dir) =>
-      Sampling.exactSplit(
-        T(s, dir, "documents").select(col("doc_id"), col("lang")),
-        "lang", "doc_id", weights = Seq(8, 1, 1),
-        labels = Seq("train", "val", "test"))),
-
-    // ---- LM scoring: STUPID BACKOFF trigrams (Brants 2007) — the
-    // md5-half split makes train/score corpora disjoint so the
-    // backoff ladder actually fires; per doc the Σ score and the
-    // backoff-depth histogram (trigram/bigram/unigram hits, OOV).
-    "q295_stupid_backoff" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val isRef =
-        substring(md5(col("doc_id").cast("string")), 1, 2) < "80"
-      NgramLm.stupidBackoff(docs.filter(isRef), docs.filter(!isRef),
-        "doc_id", "text")
-    }),
-
-    // ---- curation QA: MULTIMODAL dup-channel agreement — TEXT-
-    // derived PNGs (pixels = first 96 chars, real encode→decode) put
-    // textual and visual near-dup on the same docs, so the dHash pair
-    // surface full-outer-joined with the q23 MinHash pair surface
-    // tallies a real (both / image_only / text_only) split: how noisy
-    // is the cheap visual channel vs content-verified text dedup? At
-    // corpus scale the low-entropy ASCII bands want q225's
-    // bucket-capped variant — this gate keeps the exact uncapped join
-    // on the bounded doc surface.
-    "q296_multimodal_dup_agreement" -> ((s, dir) => {
-      val src = T(s, dir, "documents")
-        .filter(length(col("text")) >= 96 &&
-          octet_length(col("text")) === length(col("text")))
-        .select(col("doc_id"), col("text"))
-      val img = Dedup.simhashFromFingerprints(
-          Multimodal.dhashFingerprints(
-            Multimodal.textPngPayloads(src, "doc_id", "text"),
-            "doc_id", "payload"),
-          bands = 4, maxHamming = 3)
-        .select(col("doc_a"), col("doc_b"), lit(true).as("img__"))
-      val txt = Dedup.minhashLSHFromIndex(stagedDocsIndex(s, dir),
-          threshold = 0.5)
-        .select(col("doc_a"), col("doc_b"), lit(true).as("txt__"))
-      img.join(txt, Seq("doc_a", "doc_b"), "full_outer")
-        .select(when(coalesce(col("img__"), lit(false)) &&
-            coalesce(col("txt__"), lit(false)), "both")
-          .when(coalesce(col("img__"), lit(false)), "image_only")
-          .otherwise("text_only").as("channel"))
-        .groupBy(col("channel"))
-        .agg(count(lit(1)).as("n_pairs"))
-    }),
-
-    // ---- drift: TOP TOKEN MOVERS, en vs non-en — add-1 smoothed
-    // relative-rate ratio per token (the log-odds keyword shape
-    // without the log), top 20 each direction: the drill-down behind
-    // q208's scalar TV distances.
-    "q297_token_movers" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      Drift.tokenMovers(docs.filter(col("lang") === "en"),
-        docs.filter(col("lang") =!= "en"), "text", k = 20)
-    }),
-
-    // ---- monitoring: FANO FACTOR per event type — variance-to-mean
-    // of daily counts as one exact e6 rational: the burstiness scalar
-    // next to q98's hourly drill-down (1e6 ~ Poisson).
-    "q298_fano_factor" -> ((s, dir) =>
-      EventAnalytics.fanoFactor(T(s, dir, "events"), "event_type",
-        "ts")),
-
-    // ---- graph: INCREMENTAL PageRank delta — ranks before vs after
-    // landing the held-out order batch (o_orderkey % 5 = 0), top 50
-    // movers by |Δ|: the "what did this ingest do to centrality?"
-    // maintenance card (3-round ladders on both sides; nodes born in
-    // the batch read rank_before 0).
-    "q299_pagerank_delta" -> ((s, dir) => {
-      // r17 (r16 verdict perf note): the "before" ladder is the
-      // STANDING corpus's ranks — an incremental pipeline never
-      // recomputes yesterday's PageRank, it stages it once per corpus
-      // stamp (deterministic exact-integer ladder, so the staged rows
-      // are bit-identical to an inline build); the "after" ladder
-      // rides the staged purchase-edge store every graph gate shares.
-      // Per-query work drops from two full ladders to one.
-      val stamp = Dedup.sourceStamp(s, s"$dir/orders.parquet") + "-" +
-        Dedup.sourceStamp(s, s"$dir/lineitem.parquet")
-      val before = Tables.stagedParquet(s,
-          s"$stageRoot/pr-before-$stamp-i3") {
-        val o = T(s, dir, "orders").select(col("o_orderkey"),
-          col("o_custkey"))
-        val li = T(s, dir, "lineitem").select(col("l_orderkey"),
-          col("l_suppkey"))
-        val oo = o.filter(col("o_orderkey") % 5 =!= 0)
-        val baseEdges = li.join(oo, li("l_orderkey") === oo("o_orderkey"))
-          .select((col("o_custkey") * 2L).as("src"),
-            (col("l_suppkey") * 2L + 1L).as("dst"))
-          .distinct()
-        GraphRank.pageRank(baseEdges, "src", "dst", iterations = 3)
-          .select(col("node"), col("rank_e6").as("rank_before"))
-      }
-      val after = GraphRank.pageRank(stagedPurchaseEdges(s, dir),
-          "src", "dst", iterations = 3)
-        .select(col("node"), col("rank_e6").as("rank_after"))
-      val j = after.join(before, Seq("node"), "left")
-        .select(col("node"),
-          coalesce(col("rank_before"), lit(0L)).as("rank_before"),
-          col("rank_after"),
-          (col("rank_after") - coalesce(col("rank_before"), lit(0L)))
-            .as("delta_e6"))
-      RankOps.topKMulti(j, 50, abs(col("delta_e6")), Seq(col("node")))
-    }),
-
-    // ---- attribution: CONVERSION-LAG histogram — per purchase the
-    // gap to its latest in-window view (the q289 anchor), bucketed by
-    // hour with e6 shares: the "how long does conversion take?" sheet.
-    "q300_conversion_lag" -> ((s, dir) => {
-      val ev = T(s, dir, "events").filter(col("user_id").isNotNull)
-      val conv = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("u__"), col("event_id").as("cid__"),
-          col("ts").as("ct__"))
-      val touch = ev.filter(col("event_type") === "view")
-        .select(col("user_id").as("u__"), col("ts").as("tt__"))
-      val gaps = conv.join(touch, Seq("u__"))
-        .filter(col("tt__") < col("ct__") &&
-          col("ct__") - col("tt__") <= 24L * 3600L * 1000000000L)
-        .groupBy(col("cid__"))
-        .agg((max(col("ct__")) - max(col("tt__"))).as("gap__"))
-        .groupBy(call_function("div", col("gap__"),
-          lit(3600L * 1000000000L)).as("lag_hours"))
-        .agg(count(lit(1)).as("n_conversions"))
-      val tot = gaps.agg(sum(col("n_conversions")).cast("long")
-        .as("nt__"))
-      gaps.crossJoin(broadcast(tot))
-        .select(col("lag_hours"), col("n_conversions"),
-          graft.functions.ExactRound.ratioScaled(col("n_conversions"),
-            col("nt__"), 6).as("share_e6"))
-    }),
-
-    // ---- journeys: PATH TRIGRAMS — consecutive type triples per
-    // user in (ts, id) order, support as occurrences + distinct
-    // users, top 20: q141's transition matrix one step deeper, q271's
-    // entry paths without the "first 3 only" anchor.
-    "q301_path_trigrams" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val tri = T(s, dir, "events").filter(col("user_id").isNotNull)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type").as("t1"))
-        .withColumn("t2", lead(col("t1"), 1).over(w))
-        .withColumn("t3", lead(col("t1"), 2).over(w))
-        .filter(col("t3").isNotNull)
-        .groupBy(col("t1"), col("t2"), col("t3"))
-        .agg(count(lit(1)).as("n_occurrences"),
-          count_distinct(col("user_id")).as("n_users"))
-      RankOps.topKMulti(tri, 20, col("n_occurrences"),
-        Seq(col("t1"), col("t2"), col("t3")))
-    }),
-
-    // ---- growth: NEW vs RETURNING daily actives — per day, actives
-    // split on "first observed day?", e6 returning share: cohort
-    // day-0 volume and stickiness in one table.
-    "q303_new_vs_returning" -> ((s, dir) =>
-      EventAnalytics.newVsReturning(T(s, dir, "events"), "user_id",
-        "ts")),
-
-    // ---- vectors: near-dup PAIR EXPLANATIONS — per 0.3-surface pair
-    // the top-3 dimensions by e12 dot-product contribution (q189's
-    // "why did these match?" card for embeddings instead of shingles).
-    "q304_vector_pair_explain" -> ((s, dir) => {
-      val pairs = lshNearDupPairs(s, dir, threshold = 0.3)
-        .select(col("id_a"), col("id_b"))
-      val units = T(s, dir, "embeddings")
-        .select(col("vec_id"), posexplode(col("embedding"))
-          .as(Seq("p__", "x__")))
-        .select(col("vec_id"), (col("p__") + 1L).as("dim"),
-          round(col("x__") * 1000000).cast("long").as("u__"))
-      pairs
-        .join(units.select(col("vec_id").as("id_a"), col("dim"),
-          col("u__").as("ua_e6")), Seq("id_a"))
-        .join(units.select(col("vec_id").as("id_b"), col("dim"),
-          col("u__").as("ub_e6")), Seq("id_b", "dim"))
-        .withColumn("contrib_e12",
-          (col("ua_e6").cast("decimal(38,0)") * col("ub_e6"))
-            .cast("long"))
-        .transform(df => RankOps.groupTopK(df, Seq("id_a", "id_b"), 3,
-          col("contrib_e12"), Seq(col("dim")), rankCol = "rnk"))
-        .select(col("id_a"), col("id_b"), col("dim"), col("ua_e6"),
-          col("ub_e6"), col("contrib_e12"), col("rnk"))
-    }),
-
-    // ---- layout: HILBERT-curve pruning stats on q176's exact box —
-    // the locality experiment: same table, same 64 files, same
-    // predicate, Morton vs Hilbert file-skipping read side by side.
-    "q305_hilbert_pruning" -> ((s, dir) =>
-      HilbertLayout.pruningStats(T(s, dir, "orders"),
-        "o_totalprice", "o_custkey", bits = 8, nFiles = 64,
-        aLo = 50000.0, aHi = 100000.0, bLo = 100.0, bHi = 500.0)),
-
-    // ---- dedup: SYMSPELL distance-1 vocabulary pairs — symmetric-
-    // delete candidates + exact levenshtein verify, the typo/variant
-    // family n-gram blocking misses at short lengths. The synthetic
-    // corpus vocabulary is typo-free (zero distance-1 pairs exist),
-    // so the gate INJECTS them by construction: every 10th doc
-    // appends its first word with the 2nd char deleted — the
-    // q193/q281 synthesized-payload pattern, mirrored in the oracle.
-    "q312_symspell_pairs" -> ((s, dir) => {
-      val fw = element_at(TextFns.words(col("text")), 1)
-      val noisy = T(s, dir, "documents").select(
-        when(col("doc_id") % 10 === 0 && length(fw) >= 5 &&
-            octet_length(fw) === length(fw),
-          concat(col("text"), lit(" "), substring(fw, 1, 1),
-            fw.substr(lit(3), length(fw))))
-          .otherwise(col("text")).as("text"))
-      Dedup.symmetricDeletePairs(noisy, "text", minLen = 4)
-    }),
-
-    // ---- planner QA: JOIN-CARDINALITY estimator audit — the
-    // textbook |L|x|R| / max(ndv) estimate vs the actual
-    // lineitem x part fanout, error as exact e6: the "can I trust
-    // the stats?" card before a 100 TB join reorders on them.
-    "q313_join_estimate" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem").select(col("l_partkey"))
-      val pt = T(s, dir, "part").select(col("p_partkey"))
-      val stats = li
-        .agg(count(lit(1)).as("n_left"),
-          count_distinct(col("l_partkey")).as("ndv_left"))
-        .crossJoin(pt.agg(count(lit(1)).as("n_right"),
-          count_distinct(col("p_partkey")).as("ndv_right")))
-      val actual = li.join(pt, col("l_partkey") === col("p_partkey"))
-        .agg(count(lit(1)).as("n_actual"))
-      stats.crossJoin(actual)
-        .withColumn("n_estimate", call_function("div",
-          col("n_left").cast("decimal(38,0)") * col("n_right"),
-          greatest(col("ndv_left"), col("ndv_right"))
-            .cast("decimal(38,0)")).cast("long"))
-        .select(col("n_left"), col("ndv_left"), col("n_right"),
-          col("ndv_right"), col("n_actual"), col("n_estimate"),
-          graft.functions.ExactRound.ratioScaled(col("n_estimate"),
-            col("n_actual"), 6).as("est_over_actual_e6"))
-    }),
-
-    // ---- compliance: FORGET-CASCADE plan — for an md5-sampled
-    // tombstone set of customers (rate 16/256), the rows a
-    // right-to-be-forgotten delete would cascade to per table
-    // (customer → orders → lineitem), with e6 shares: the blast-
-    // radius estimate a deletion job prints before running.
-    "q316_forget_cascade" -> ((s, dir) => {
-      val doomed = Sampling.hashSample(
-        T(s, dir, "customer").select(col("c_custkey")), "c_custkey",
-        rate256 = 16)
-      val ord = T(s, dir, "orders")
-        .join(doomed, col("o_custkey") === col("c_custkey"))
-        .select(col("o_orderkey"))
-      val li = T(s, dir, "lineitem")
-        .join(ord, col("l_orderkey") === col("o_orderkey"))
-      def card(name: String, del: DataFrame, total: DataFrame) =
-        del.agg(count(lit(1)).as("n_delete"))
-          .crossJoin(total.agg(count(lit(1)).as("n_total")))
-          .select(lit(name).as("table_name"), col("n_delete"),
-            col("n_total"),
-            graft.functions.ExactRound.ratioScaled(col("n_delete"),
-              col("n_total"), 6).as("share_e6"))
-      card("customer", doomed, T(s, dir, "customer"))
-        .unionByName(card("orders", ord, T(s, dir, "orders")))
-        .unionByName(card("lineitem", li, T(s, dir, "lineitem")))
-    }),
-
-    // ---- stats: ETA SQUARED of event value across types — the
-    // variance-explained effect size (exact floored-e6 integer form,
-    // numerator clamped against flooring dust): chi-square's numeric
-    // sibling.
-    "q314_eta_squared" -> ((s, dir) =>
-      GroupStats.etaSquared(T(s, dir, "events"), "event_type",
-        expr("cast(round(value * 100, 0) as long)"))),
-
-    // ---- monitoring: WEEKLY exact quantile bands per type — q164's
-    // quantile grid over (type, week) buckets: p50/p90 of e2 event
-    // value per week, the drift-aware percentile trend.
-    "q315_weekly_quantiles" -> ((s, dir) =>
-      GroupStats.quantileGrid(
-        T(s, dir, "events").select(col("event_type"),
-          TimeFns.floorDiv(col("ts"), 7L * 86400L * 1000000000L)
-            .as("week"),
-          expr("cast(round(value * 100, 0) as long)").as("vu__")),
-        Seq("event_type", "week"), col("vu__"),
-        permilles = Seq(500, 900))),
-
-    // ---- time series: LEAD-LAG scan, views vs purchases — signed
-    // squared Pearson at each lag in [-7, 7] over the zero-filled
-    // calendar (two-stage integer ladder, no sqrt): does engagement
-    // LEAD conversion, and by how many days?
-    "q310_lead_lag" -> ((s, dir) =>
-      EventAnalytics.leadLagScan(T(s, dir, "events"), "event_type",
-        "ts", typeX = "view", typeY = "purchase", maxLag = 7)),
-
-    // ---- time series: SEASONAL-NAIVE backtest — predict each day
-    // with day-7-earlier over the zero-filled horizon; e4 MAE and e6
-    // WAPE per type, the baseline every forecast must beat.
-    "q311_seasonal_naive" -> ((s, dir) =>
-      EventAnalytics.seasonalNaiveBacktest(T(s, dir, "events"),
-        "event_type", "ts", period = 7)),
-
-    // ---- indicators: MAX DRAWDOWN of daily order value per priority
-    // — running peak, (drawdown DESC, day ASC) argmax, cents units:
-    // the F5 MACD's risk-side sibling from the reference domain.
-    "q306_max_drawdown" -> ((s, dir) =>
-      TechnicalIndicators.maxDrawdown(T(s, dir, "orders"),
-        Seq("o_orderpriority"),
-        TimeFns.floorDiv(unix_micros(col("o_orderdate")
-          .cast("timestamp")), 86400L * 1000000L),
-        expr("cast(round(o_totalprice * 100, 0) as long)"))),
-
-    // ---- indicators: simple-average RSI(14) per priority — windowed
-    // gains/(gains+losses) as exact e6 over day-over-day deltas.
-    "q307_rsi" -> ((s, dir) =>
-      TechnicalIndicators.rsiSimple(T(s, dir, "orders"),
-        Seq("o_orderpriority"),
-        TimeFns.floorDiv(unix_micros(col("o_orderdate")
-          .cast("timestamp")), 86400L * 1000000L),
-        expr("cast(round(o_totalprice * 100, 0) as long)"),
-        window = 14)),
-
-    // ---- indicators: BOLLINGER ±2σ breakout counts per priority —
-    // the band test on squares ((n·x−Σx)² vs 4·(n·Σx²−(Σx)²)), no
-    // square root anywhere in the lineage.
-    "q308_bollinger" -> ((s, dir) =>
-      TechnicalIndicators.bollingerBreakouts(T(s, dir, "orders"),
-        Seq("o_orderpriority"),
-        TimeFns.floorDiv(unix_micros(col("o_orderdate")
-          .cast("timestamp")), 86400L * 1000000L),
-        expr("cast(round(o_totalprice * 100, 0) as long)"),
-        window = 20)),
-
-    // ---- indicators: daily VWAP over lineitem — Σ(extended cents) /
-    // Σ(qty) per ship day, exact e4.
-    "q309_vwap" -> ((s, dir) =>
-      TechnicalIndicators.vwapDaily(T(s, dir, "lineitem"),
-        TimeFns.floorDiv(unix_micros(col("l_shipdate")
-          .cast("timestamp")), 86400L * 1000000L),
-        expr("cast(round(l_extendedprice * 100, 0) as long)"),
-        expr("cast(round(l_quantity, 0) as long)"))),
-
-    // ---- streaming × sketch: per-DAY approximate distinct users per
-    // type — HLL registers accumulate in the state store (256 bytes
-    // per open window×key, the constant-state reason streaming
-    // uniques scale), summarized after the sink; the md5 sketch is
-    // deterministic so the batch oracle reproduces it exactly.
-    "q302_stream_hll_window" -> ((s, dir) => withShufflePartitions(s, 8) {
-      val src = readFeed(s, feedQ302(s, dir),
-          "event_type STRING, tsSec LONG, uid STRING")
-        .withColumn("ts", timestamp_seconds(col("tsSec")))
-      val agg = graft.streaming.Streams.windowedHllDistinct(src, "ts",
-        windowLen = "1 day", watermark = "1 hour",
-        keyCols = Seq("event_type"), idCol = "uid")
-      runStreamGate(s, "q302", agg)(
-        _.filter(col("event_type") =!= "zz_sentinel")
-          .select(col("win_start"), col("event_type"),
-            graft.expressions.HllSketch.hll_summary(col("regs")).as("h"))
-          .select(col("win_start"), col("event_type"),
-            col("h.v_zero").as("v_zero"), col("h.s40").as("s40"),
-            col("h.est_hll").as("est_hll")))
-    }),
-
-    // ---- streaming: A→B PATTERN DETECTION — every purchase matched
-    // live to the latest view strictly before it within 1 h (q273's
-    // attribution anchor as an O(1)-state flatMapGroupsWithState);
-    // q243's time-quartile file feed, batch-SQL oracle.
-    "q289_stream_pattern" -> ((s, dir) => withShufflePartitions(s, 8) {
-      import s.implicits._
-      val src = readFeed(s, feedQ289(s, dir),
-          "key STRING, tsNanos LONG, eventId LONG, etype STRING")
-        .as[graft.streaming.Streams.TypedEvent]
-      runStreamGate(s, "q289", graft.streaming.Streams
-          .streamingPatternDetect(src, aType = "view",
-            bType = "purchase", windowNanos = 3600L * 1000000000L))(
-        _.select(col("key").cast("long").as("user_id"),
-          col("a_event_id"), col("b_event_id"), col("gap_nanos")))
-    }),
-
-    // ---- dedup: THRESHOLD-SENSITIVITY curve — verified exact-
-    // Jaccard pairs from the prefix-filtered join at 0.25, counted at
-    // each candidate cutoff (pairs + distinct docs touched): the
-    // "where is the knee" sheet before committing to a dedup
-    // threshold.
-    "q277_threshold_curve" -> ((s, dir) => {
-      val pairs = Dedup.prefixFilteredJaccard(T(s, dir, "documents"),
-        "doc_id", "text", n = 3, thrNum = 1L, thrDen = 4L)
-      Dedup.thresholdCurve(pairs, "doc_a", "doc_b",
-        round(col("jaccard") * 10000).cast("long"),
-        Seq(2500L, 3500L, 4500L, 5500L, 6500L, 7500L))
-    }),
-
-    // ---- engagement: consecutive-day activity STREAKS per user —
-    // gaps-and-islands (day − row_number anchor), per-user distinct-
-    // day partitions bounded by the calendar.
-    "q260_streaks" -> ((s, dir) =>
-      EventAnalytics.activityStreaks(T(s, dir, "events"), "user_id",
-        "ts")),
-
-    // ---- stats: per-group TWO-REGRESSOR OLS (price ~ quantity +
-    // discount) — Cramer's rule on exact integer sums, signed e6 βs;
-    // y in whole dollars to respect the quartic headroom contract.
-    "q261_ols2" -> ((s, dir) =>
-      GroupStats.ols2(T(s, dir, "lineitem"), Seq("l_returnflag"),
-        x1Units = expr("cast(round(l_quantity, 0) as long)"),
-        x2Units = expr("cast(round(l_discount * 100, 0) as long)"),
-        yUnits = expr("cast(round(l_extendedprice, 0) as long)"))),
-
-    // ---- graph: k-CORE of the purchase graph (k = 8, 4 peels) —
-    // customers with < 8 distinct suppliers fall away, supplier
-    // degrees recompute, repeat; the dense trading heart survives.
-    "q262_kcore" -> ((s, dir) =>
-      GraphRank.kCore(stagedPurchaseEdges(s, dir), "src", "dst",
-        k = 8, rounds = 4)),
-
-    // ---- funnels: signup→purchase conversion-latency quantile grid
-    // per signup-day cohort — first purchase strictly after the
-    // user's first signup; exact observed-value quantiles (q35's
-    // type-preserving convention) at p250/p500/p750/p900.
-    "q263_convert_cohort" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-      val signup = ev.filter(col("event_type") === "signup")
-        .groupBy(col("user_id")).agg(min(col("ts")).as("t0__"))
-      val delays = ev.filter(col("event_type") === "purchase")
-        .join(signup, "user_id")
-        .filter(col("ts") > col("t0__"))
-        .groupBy(col("user_id"), col("t0__"))
-        .agg(min(col("ts")).as("tc__"))
-        .select(graft.functions.TimeFns
-            .floorDiv(col("t0__"), 86400L * 1000000000L)
-            .as("cohort_day"),
-          (col("tc__") - col("t0__")).as("delay_ns"))
-      GroupStats.quantileGrid(delays, Seq("cohort_day"),
-        col("delay_ns"), permilles = Seq(250, 500, 750, 900))
-    }),
-
-    // ---- graph: degree ASSORTATIVITY of the LSH near-dup graph —
-    // Newman's r over the directed double cover of (deg_u, deg_v),
-    // through the q75 exact five-sum Pearson discipline. Positive:
-    // mirrored corpora; negative: templates radiating variants.
-    "q259_assortativity" -> ((s, dir) =>
-      GraphRank.degreeAssortativity(
-        lshNearDupPairs(s, dir, threshold = 0.45)
-          .select(col("id_a"), col("id_b")), "id_a", "id_b")),
-
-    // ---- S8 truncate-and-load through the REAL write path (the last
-    // spec-only §2 row): load a full snapshot into a store, then
-    // overwrite it with the current (filtered) snapshot and read the
-    // store back. An "overwrite" that appended instead of truncating
-    // would leak first-load rows into the read-back and fail the
-    // row-count + hash gate — exactly the failure S8 guards against.
-    "q244_truncate_load" -> ((s, dir) =>
-      // the gate's subject IS the overwrite write path, so the store
-      // builds per invocation — but leak-proof and eagerly read (r20)
-      withScratchDir(s, "graft-q244") { work =>
-        val store = s"$work/store"
-        val snapshot = T(s, dir, "supplier")
-          .select(col("s_suppkey"), col("s_nationkey"), col("s_acctbal"))
-        graft.sinks.MergeByKey.overwrite(snapshot, store)
-        graft.sinks.MergeByKey.overwrite(
-          snapshot.filter(col("s_acctbal") > 0), store)
-        graft.sinks.MergeByKey.readCommitted(s, store)
-      }),
-
-    // ---- corpus audit: CROSS-SOURCE CONTAINMENT matrix — for every
-    // ordered source pair, shared distinct 3-grams and C(A→B) =
-    // |A∩B|/|A| e4-scaled: the "source B mirrors source A" card.
-    // Inverted-index self-join over the per-source TYPE table.
-    "q251_source_containment" -> ((s, dir) =>
-      Dedup.sourceContainment(T(s, dir, "documents"), "text",
-        "source", n = 3)),
-
-    // ---- spectral: TOP PRINCIPAL COMPONENT of the embedding corpus
-    // by power iteration (Mu & Viswanath's ABTT common direction) —
-    // e6 mean-centering, 3 exact integer v ← Xᵀ(Xv) steps with
-    // max-|·| renormalization; one row per dimension.
-    "q249_top_pc" -> ((s, dir) =>
-      Spectral.topPcPower(T(s, dir, "embeddings"), "vec_id",
-        "embedding", iterations = 3)),
-
-    // ---- spectral: per-vector PROJECTION onto the q249 direction —
-    // the common-component magnitude ABTT removal would subtract and
-    // the "dominated by the common direction" outlier score.
-    "q250_pc_projection" -> ((s, dir) =>
-      Spectral.pcProjection(T(s, dir, "embeddings"), "vec_id",
-        "embedding", iterations = 3)),
-
-    // ---- corpus audit: OCTAVE-BINNED ZIPF FIT per source — the
-    // rank-frequency health card (template/spam sources bend the
-    // log-log line away from slope ≈ −1). Types ranked by the
-    // range-partitioned group row-number (no per-source vocabulary
-    // window), each contributing the exact integer point
-    // (⌊log2 rank⌋, ⌊log2 freq⌋) to the q116 e6 OLS ladder.
-    "q248_zipf_slope" -> ((s, dir) =>
-      TextAnalysis.zipfSlope(T(s, dir, "documents"), "text", "source")),
-
-    // ---- clustering QA: SIMPLIFIED SILHOUETTE per q230 k-means
-    // cluster (Hruschka's centroid variant — linear, not the O(n²)
-    // classic) on exact integer squared distances: a = d² to own
-    // centroid, b = d² to nearest other, s = (b−a)/b e6-scaled;
-    // per-cluster member count + mean s. Same seeds/iterations as
-    // q230, so the oracle re-runs the identical unrolled CTE chain.
-    "q247_silhouette" -> ((s, dir) =>
-      Prototypes.simplifiedSilhouette(T(s, dir, "embeddings"),
-        "vec_id", "embedding", k = 4, iterations = 3)),
-
-    // ---- multimodal: SCENE-CUT detection over 4-frame Y4M videos —
-    // q245's curation consumer: per-frame luma deltas, cut when
-    // |Δ| ≥ 1/20 of the frame's full-scale luma budget (4·2·255).
-    // Lowercase ASCII words sit in a ~26-value byte band, so an
-    // 8-byte Y plane's sum moves by ~tens between frames — the 102
-    // threshold (measured: |Δ| median 37, p75 77 on this corpus)
-    // keeps cuts the minority class while firing ~140 times.
-    "q246_scene_cuts" -> ((s, dir) => {
-      val hdr = "YUV4MPEG2 W4 H2 F25:1 C420\n".getBytes("US-ASCII")
-      val fm = "FRAME\n".getBytes("US-ASCII")
-      val vids = T(s, dir, "documents")
-        .filter(length(col("text")) >= 48 &&
-          octet_length(col("text")) === length(col("text")))
-        .select(col("doc_id"),
-          concat((lit(hdr) +: (0 until 4).flatMap(f => Seq(lit(fm),
-            substring(col("text"), 1 + 12 * f, 12).cast("binary")))): _*)
-            .as("payload"))
-      Multimodal.sceneChanges(vids, "doc_id", "payload",
-        thrNum = 1L, thrDen = 20L)
-    }),
-
-    // ---- multimodal: REAL Y4M video frame demux (q193's video
-    // sibling — the container synthesized by construction from ASCII
-    // document bytes, the demux + per-frame luma/chroma accounting
-    // real). 4x2 C420 → 8 Y bytes + 4 chroma bytes per frame, two
-    // frames per doc from text[1..12] and text[13..24].
-    "q245_video_frames" -> ((s, dir) => {
-      val hdr = "YUV4MPEG2 W4 H2 F25:1 C420\n".getBytes("US-ASCII")
-      val fm = "FRAME\n".getBytes("US-ASCII")
-      val vids = T(s, dir, "documents")
-        .filter(length(col("text")) >= 24 &&
-          octet_length(col("text")) === length(col("text")))
-        .select(col("doc_id"),
-          concat(lit(hdr), lit(fm),
-            substring(col("text"), 1, 12).cast("binary"), lit(fm),
-            substring(col("text"), 13, 12).cast("binary")).as("payload"))
-      Multimodal.y4mFrameStats(vids, "doc_id", "payload")
-    }),
-
-    // ---- eval: SPEARMAN rank correlation per return flag — q75's
-    // monotonic twin: Pearson over DOUBLED tie-averaged ranks
-    // (2·below + ties + 1, always integer), tie correction for free,
-    // same exact-sum discipline.
-    "q240_spearman" -> ((s, dir) =>
-      GroupStats.spearman(T(s, dir, "lineitem"), Seq("l_returnflag"),
-        expr("cast(round(l_extendedprice * 100, 0) as bigint)"),
-        expr("cast(round(l_quantity, 0) as bigint)"))),
-
-    // ---- OLAP: CUBE over (source, lang) — rollup's prefix levels
-    // PLUS the cross marginals (per-lang-across-sources), one Expand,
-    // grouping indicators, exact sums (q143's cube twin).
-    "q238_cube_stats" -> ((s, dir) =>
-      Profile.cubeStats(T(s, dir, "documents"), Seq("source", "lang"),
-        col("n_chars"))),
-
-    // ---- selection: k-CENTER GREEDY coreset (Gonzalez) — 5 diverse
-    // exemplars of the embedding corpus, each step adding the point
-    // farthest (exact integer L2) from the selected set; the emitted
-    // min_d2 curve is the coverage radius² per size. Unrolled-CTE
-    // oracle like q230.
-    "q239_kcenter_coreset" -> ((s, dir) =>
-      Prototypes.kCenterGreedy(T(s, dir, "embeddings"), "vec_id",
-        "embedding", k = 5)),
-
-    // ---- analytics: LAST-TOUCH ATTRIBUTION — each purchase credits
-    // the most recent click by the same user within a 24 h horizon
-    // (backward as-of + window cap); outside-horizon and clickless
-    // purchases read organic (null attribution).
-    "q237_attribution" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          round(col("value") * 100, 0).cast("long").as("value_c"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"),
-          col("event_id").as("click_event_id"))
-      val horizon = 86400L * 1000000000L
-      val inWin = col("right_ts").isNotNull &&
-        col("ts") - col("right_ts") <= horizon
-      AsOfJoin.leftAsOf(purchases, clicks, Seq("user_id"), "ts", "ts",
-          rightPayload = Seq("click_event_id", "ts"))
-        .select(col("event_id"), col("user_id"), col("value_c"),
-          when(inWin, col("right_click_event_id"))
-            .as("attributed_click_id"),
-          when(inWin, TimeFns.floorDiv(col("ts") - col("right_ts"),
-            1000000000L)).as("gap_s"))
-    }),
-
-    // ---- eval: exact ROC-AUC of the quality score against the
-    // Gopher keep label — tie-corrected Mann–Whitney over the q203
-    // score/label surface; per-distinct-score tally + range-
-    // partitioned below-count, never pairwise
-    "q215_roc_auc" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val (num, den) = TextAnalysis.qualityRational()
-      val scored = TextAnalysis.qualitySignals(docs, "doc_id", "text")
-        .select(col("doc_id"),
-          graft.functions.ExactRound.ratioScaled(num, den, 4)
-            .as("q_e4"))
-      val label = TextAnalysis.gopherRules(docs, "doc_id", "text",
-          minWords = 50L, maxWords = 100000L)
-        .select(col("doc_id"), col("keep"))
-      EvalMetrics.rocAuc(scored.join(label, "doc_id"), "q_e4", "keep")
-    }),
-
-    // ---- embeddings: pairwise CENTROID similarity matrix — the
-    // semantic twin of q208's lexical TV matrix over the q130
-    // prototypes; signed cos² as the exact rational carrying cosine's
-    // ordering (sqrt stays out of the gate)
-    "q214_centroid_similarity" -> ((s, dir) =>
-      Prototypes.centroidSimilarity(T(s, dir, "embeddings"),
-        "embedding", "label")),
-
-    // ---- mixing: EPOCH SCHEDULE of the q204 water-fill — per-source
-    // repeat factors (full passes + exact e6 partial fraction), the
-    // q88 decomposition applied to the capped allocator; saturated
-    // sources read exactly maxEpochs full passes
-    "q213_waterfill_epochs" -> ((s, dir) =>
-      Apportion.waterFillEpochPlan(
-        T(s, dir, "documents").select(col("source"),
-          length(col("text")).as("n_chars")),
-        "source", "n_chars", budgetNum = 17L, budgetDen = 10L,
-        maxEpochs = 2L)),
-
-    // ---- mixing: SHARD-MIX audit of the q211 schedule — per
-    // contiguous position slice, each source's share vs the global
-    // mix with the exact e6 deviation (the interleave property AS A
-    // GATE, not a claim)
-    "q212_shard_mix" -> ((s, dir) =>
-      Apportion.interleaveShardMix(T(s, dir, "documents"), "doc_id",
-        "source", shards = 10)),
-
-    // ---- pipeline: the CURATION FUNNEL's per-stage survivor counts,
-    // oracle-gated end to end — exact dedup → benchmark decontam
-    // (q51's bench rule) → quality+repetition gates → (PII scrub →
-    // langid) → per-language quota sample. Every stage reuses an
-    // already-gated operator; this gate pins the COMPOSITION.
-    "q210_curation_funnel" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val bench = Sampling.hashSample(docs, "doc_id", rate256 = 26)
-      graft.pipeline.CurationPipeline.funnelStats(docs, bench,
-        "doc_id", "text",
-        graft.pipeline.CurationPipeline.Config(quotaPerLang = 30))
-    }),
-
-    // ---- profile: pairwise LEXICAL DIVERGENCE matrix — exact TV
-    // distance between every source pair's unigram distributions via
-    // the inner-join + totals identity (unique words never shuffle
-    // twice); the mixture-design "which slices are redundant?" input
-    "q208_lexical_tv_matrix" -> ((s, dir) =>
-      Drift.lexicalTvMatrix(T(s, dir, "documents"), "text", "source")),
-
-    // ---- profile: per-source LEXICAL DIVERSITY card — Gini–Simpson
-    // (the rational stand-in for entropy), type–token ratio, hapax
-    // share, top-10 token mass; one token shuffle, map-side top-k
-    "q206_lexical_diversity" -> ((s, dir) =>
-      LexicalDiversity.perSource(T(s, dir, "documents"), "doc_id",
-        "text", "source", topK = 10)),
-
-    // ---- tokenizer: FERTILITY by language under the q174/q200
-    // staged BATCHED model — tokens-per-word / chars-per-token per
-    // lang, the "which slice does the trained vocabulary fragment?"
-    // audit read straight off the shipped word table
-    "q207_bpe_fertility" -> ((s, dir) =>
-      BpeTrain.fertilityByGroup(T(s, dir, "documents"), "doc_id",
-        "text", "lang", stagedBpeModel(s, dir)._2)),
-
-    // ---- eval: deterministic BOOTSTRAP error bars — 32 key-hash
-    // half-rate replicates of mean document length, each an exact e6
-    // mean; the replicate spread is the corpus metric's sampling
-    // uncertainty, reproducible bit for bit (no RNG)
-    "q202_bootstrap_ci" -> ((s, dir) =>
-      Sampling.bootstrapMeans(
-        T(s, dir, "documents").select(col("doc_id"),
-          length(col("text")).as("n_chars")),
-        "doc_id", "n_chars", reps = 32)),
-
-    // ---- eval: CALIBRATION of the scored quality filter against the
-    // Gopher rule outcome — reliability-diagram bins + ECE (Guo et
-    // al. 2017): "when the score says 0.7, do the rules keep 70%?";
-    // the q201 agreement pair read as (confidence, outcome)
-    "q203_calibration" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val (num, den) = TextAnalysis.qualityRational()
-      val scored = TextAnalysis.qualitySignals(docs, "doc_id", "text")
-        .select(col("doc_id"),
-          graft.functions.ExactRound.ratioScaled(num, den, 4)
-            .as("q_e4"))
-      val label = TextAnalysis.gopherRules(docs, "doc_id", "text",
-          minWords = 50L, maxWords = 100000L)
-        .select(col("doc_id"), col("keep"))
-      EvalMetrics.calibrationBins(scored.join(label, "doc_id"),
-        "q_e4", "keep", bins = 10)
-    }),
-
-    // ---- selection: DSIR-flavored importance score — per-doc mean
-    // smoothed unigram likelihood ratio of the lang='en' target slice
-    // vs the whole corpus, exact e6 rationals (the "does this doc
-    // look like the target distribution?" selector signal)
-    "q205_importance_score" -> ((s, dir) =>
-      ImportanceScore.targetLikeness(T(s, dir, "documents"),
-        "doc_id", "text", col("lang") === "en")),
-
-    // ---- mixing: UniMax EPOCH-CAPPED water-filling — equal budget
-    // split across sources, no source repeated past 2 epochs, freed
-    // budget re-split (closed-form prefix saturation; budget = 17/10
-    // of corpus chars so small sources genuinely saturate at the gate
-    // SF while the rest share the water line)
-    "q204_unimax_waterfill" -> ((s, dir) =>
-      Apportion.epochCappedWaterFill(
-        T(s, dir, "documents").select(col("source"),
-          length(col("text")).as("n_chars")),
-        "source", "n_chars", budgetNum = 17L, budgetDen = 10L,
-        maxEpochs = 2L)),
-
-    // ---- eval: filter AGREEMENT (Cohen's kappa) — the q18 scored
-    // quality filter (rounded composite >= 0.5) against the q81
-    // Gopher rule gate, chance-corrected: the "can filter B replace
-    // filter A" number a curation pipeline reads before swapping
-    // filters; exact e6 rationals end to end
-    "q201_filter_agreement" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val a = TextAnalysis.qualityScore(docs, "doc_id", "text")
-        .select(col("doc_id"), (col("quality") >= 0.5).as("a_keep"))
-      val b = TextAnalysis.gopherRules(docs, "doc_id", "text",
-          minWords = 50L, maxWords = 100000L)
-        .select(col("doc_id"), col("keep").as("b_keep"))
-      EvalMetrics.cohenKappa(a.join(b, "doc_id"), "a_keep", "b_keep")
-    }),
-
-    // ---- tokenizer: ENCODE under the q174 BATCHED model — the
-    // train-then-apply round trip at tokenizer scale (tokens per
-    // distinct word off the 16-pass word table, one corpus join),
-    // reading the SAME staged artifact q174 ships
-    "q200_bpe_encode_batched" -> ((s, dir) =>
-      BpeTrain.encodeFromWordTable(T(s, dir, "documents"), "doc_id",
-        "text", stagedBpeModel(s, dir)._2)),
-
-    // ---- streaming: CRASH-RECOVERY exactly-once (round 13, r12 task
-    // #6): the same file-stream query runs TWICE against one
-    // checkpoint — first over half the feed, then, after the batch-1
-    // COMMIT record is deleted (the torn-batch window: sink files
-    // committed, checkpoint never recorded the batch — precisely the
-    // failure that makes a plain parquet append at-least-once) and
-    // the rest of the feed arrives, a restart. Recovery replays batch
-    // 1 through writeBatchIdempotent's dynamic partition overwrite
-    // and resumes numbering from the checkpoint; the gate's
-    // (batch_id, type) aggregate equals the one-shot batch result
-    // ONLY if the replay overwrote instead of appended and the
-    // restart did not reprocess already-committed files.
-    "q199_stream_recovery" -> ((s, dir) => withShufflePartitions(s, 8) {
-      import s.implicits._
-      val ev = T(s, dir, "events").select(col("event_type"),
-        col("user_id").cast("long").as("uid"),
-        col("event_id").cast("long").as("eid"))
-      if (ev.isEmpty) {
-        Seq.empty[(Long, String, Long, Long)]
-          .toDF("graft_batch_id", "event_type", "n_events", "sum_uid")
-      } else {
-        val stageDir = feedQ199(s, dir)
-        withScratchDir(s, "graft-q199") { workDir =>
-          val (feedDir, sink, ckpt) =
-            (s"$workDir/feed", s"$workDir/rows", s"$workDir/ckpt")
-          val conf = s.sparkContext.hadoopConfiguration
-          val fs = new org.apache.hadoop.fs.Path(workDir).getFileSystem(conf)
-          fs.mkdirs(new org.apache.hadoop.fs.Path(feedDir))
-          require(fs.exists(new org.apache.hadoop.fs.Path(
-              s"$stageDir/batch-00003.parquet")),
-            "q199 expects 4 staged batches")
-          val base = System.currentTimeMillis() - 60000L
-          def feed(i: Int): Unit = {
-            val name = f"batch-$i%05d.parquet"
-            val dst = new org.apache.hadoop.fs.Path(s"$feedDir/$name")
-            org.apache.hadoop.fs.FileUtil.copy(fs,
-              new org.apache.hadoop.fs.Path(s"$stageDir/$name"),
-              fs, dst, false, conf)
-            fs.setTimes(dst, base + i * 2000L, -1L)
-          }
-          def runOnce(): Unit = {
-            val src = readFeed(s, feedDir, "event_type STRING, uid LONG")
-            graft.streaming.Streams.runAvailableNow(
-              graft.streaming.Streams.idempotentAppendSink(src, sink), ckpt)
-              .awaitTermination()
-          }
-          feed(0); feed(1)
-          runOnce()
-          // tear batch 1: its offset entry stays, its commit record goes
-          // — the public checkpoint contract (offsets/ and commits/)
-          // defines exactly this as "batch ran, completion never
-          // recorded", and recovery must re-run it
-          val commit = new org.apache.hadoop.fs.Path(s"$ckpt/commits/1")
-          require(fs.exists(commit), "q199: no commit record for batch 1")
-          fs.delete(commit, false)
-          feed(2); feed(3)
-          runOnce()
-          s.read.parquet(sink)
-            .groupBy(col("graft_batch_id").cast("long").as("graft_batch_id"),
-              col("event_type"))
-            .agg(count(lit(1)).as("n_events"), sum(col("uid")).as("sum_uid"))
-        }
-      }
-    }),
-
-    // ---- sources: header-CSV ingest (S1/P1/P2/P3/F9 — the §2.1
-    // spec-only rows graduate, round 13): a screener-shaped CSV is
-    // staged from `part` (blank keys for P3, empty numerics,
-    // comma-grouped prices and %-suffixed values for P2, an unmapped
-    // column for P1's intersection rule), re-ingested via readCsv +
-    // canonicalize under a FIXED stamp clock (F9), and the oracle
-    // re-reads the SAME staged file with read_csv + the mirrored
-    // cleanse chain.
-    "q194_csv_ingest" -> ((s, dir) => withShufflePartitions(s, 8) {
-      val src = T(s, dir, "part").select(
-        when(pmod(col("p_partkey"), lit(13)) === 0, lit(""))
-          .otherwise(concat(lit("SYM"), col("p_partkey"))).as("Symbol"),
-        col("p_name").as("Description"),
-        when(pmod(col("p_partkey"), lit(7)) === 0, lit(""))
-          .otherwise(format_number(col("p_retailprice"), 2)).as("Price"),
-        concat(col("p_size").cast("string"), lit("%"))
-          .as("Performance % Year to date"),
-        col("p_brand").as("Analyst Rating"),
-        col("p_type").as("Unmapped Extra"))
-      stageFile(s, src, "q194/screener.csv")(
-        _.option("header", "true").csv(_))
-      graft.sources.CsvIngest.canonicalize(
-          graft.sources.CsvIngest.readCsv(s,
-            s"$csvGateRoot/q194/screener.csv"),
-          graft.sources.CsvIngest.technicalMap,
-          stampTime = Some(to_timestamp(lit("2026-01-01 00:00:00"))))
-        .select(col("symbol"), col("description"), col("analyst_rating"),
-          col("performance_ytd"), col("price"),
-          unix_timestamp(col("last_modified_date")).as("stamp_epoch"))
-    }),
-
-    // ---- sources: LATEST-file-by-mtime (S2/T4): three nation slices
-    // staged with strictly increasing mtimes; the engine must resolve
-    // the newest by mtime and ingest THAT file — the oracle reads
-    // slice 2 by name, so resolving any other file hash-fails.
-    "q195_latest_file" -> ((s, dir) => withShufflePartitions(s, 8) {
-      val n = T(s, dir, "nation")
-      val base = System.currentTimeMillis() - 60000L
-      (0 to 2).foreach { i =>
-        stageFile(s, n.filter(pmod(col("n_nationkey"), lit(3)) === i)
-            .select(col("n_nationkey"), col("n_name"), col("n_regionkey")),
-          s"q195/nation-$i.csv", base + i * 2000L)(
-          _.option("header", "true").csv(_))
-      }
-      val latest = Tables.latestByMtime(s, s"$csvGateRoot/q195/nation-*.csv")
-        .getOrElse(sys.error("no staged q195 files"))
-      graft.sources.CsvIngest.readCsv(s, latest)
-        .select(col("n_nationkey").cast("long").as("n_nationkey"),
-          col("n_name"),
-          col("n_regionkey").cast("long").as("n_regionkey"))
-    }),
-
-    // ---- filters: scrape-noise predicate (P4) over real part names
-    // plus injected header echoes / dates / analysis rows / blanks /
-    // over-length rows — the oracle mirrors every arm of the predicate
-    "q196_scrape_noise" -> ((s, dir) => withShufflePartitions(s, 8) {
-      import s.implicits._
-      val noise = Seq("Sector: Financials", "2024-01-01 report",
-        "filed 0001-01-01", "Strengths: momentum", "Neutral outlook",
-        "   ", "x" * 60, "Acme Industrial Holdings").toDF("name")
-      T(s, dir, "part").select(col("p_name").as("name"))
-        .unionAll(noise)
-        .filter(graft.sources.CsvIngest.scrapeNoiseFilter(col("name")))
-        .groupBy(col("name")).agg(count(lit(1)).as("n"))
-    }),
-
-    // ---- serving: screener registry + CSV→JSON emit (S11/§2.11):
-    // the btst screener (top-20 by composite, symbol tie-break) over
-    // a part-derived scored frame, emitted through toJsonRecords —
-    // the oracle rebuilds the identical JSON strings (long score, so
-    // no float formatting divergence)
-    "q197_screener_serve" -> ((s, dir) => withShufflePartitions(s, 8) {
-      import s.implicits._
-      val scored = T(s, dir, "part").select(
-        concat(lit("SYM"), col("p_partkey")).as("symbol"),
-        (col("p_retailprice").cast("decimal(18,2)") * 100)
-          .cast("long").as("composite_score"))
-      graft.serve.Screeners
-        .toJsonRecords(graft.serve.Screeners.run("btst", scored))
-        .toDF("json")
-    }),
-
-    // ---- pipeline: news-prep (P6 premium filter + F8 surrogate key
-    // + F11 truncation + P3 key validity) under a fixed clock — the
-    // news-shaped frame derives from `documents` (premium flags, null
-    // flags, blank URLs all planted by doc_id residue)
-    "q198_news_prepare" -> ((s, dir) => withShufflePartitions(s, 8) {
-      val raw = T(s, dir, "documents").select(
-        col("text").as("headline"),
-        when(pmod(col("doc_id"), lit(11)) === 0, lit(""))
-          .otherwise(concat(lit("https://news.example/a/"), col("doc_id")))
-          .as("article_url"),
-        when(pmod(col("doc_id"), lit(7)) === 0, lit(null).cast("boolean"))
-          .otherwise(pmod(col("doc_id"), lit(5)) === 0).as("is_premium"),
-        when(pmod(col("doc_id"), lit(3)) === 0, lit(null).cast("boolean"))
-          .otherwise(lit(true)).as("is_critical"))
-      graft.pipeline.NewsIngestPipeline.prepare(raw,
-          postedAt = to_timestamp(lit("2026-01-01 00:00:00")))
-        .select(col("article_url"), col("headline"), col("tweet_id"),
-          col("is_critical"),
-          unix_timestamp(col("posted_at")).as("posted_epoch"))
-    }),
-
-    // ---- multimodal: REAL compressed-image decode, gated by
-    // construction (round-13) — one deterministic PNG per doc_id
-    // (generator formula + dims mirrored in the oracle), encoded AND
-    // decoded through the JDK's javax.imageio codec (PNG is lossless →
-    // decoded pixels equal the generator exactly), then resampled to
-    // 5x3 via the integer nearest-neighbor path and re-decoded from
-    // the PPM re-encode. All statistics are integers; the oracle
-    // enumerates the same pixels straight from the formula (the q27
-    // PPM pattern, now exercising a real compressed codec end to end).
-    "q193_image_decode" -> ((s, dir) => {
-      val png = Multimodal.synthPngPayloads(
-        T(s, dir, "documents").select(col("doc_id")), "doc_id")
-      val dec = Multimodal.pixelFeatures(png, "doc_id", "payload")
-      val rs = Multimodal.resize(png, "doc_id", "payload", 5, 3)
-      val rsStats = Multimodal.pixelFeatures(rs, "doc_id", "payload")
-        .select(col("doc_id"), col("px_sum").as("rs_sum"),
-          col("px_min").as("rs_min"), col("px_max").as("rs_max"))
-      dec.join(rsStats, Seq("doc_id"))
-    }),
-
-    "q191_cluster_size_histogram" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val cc = stagedNearDupComponents(s, dir)
-      emb.select(col("vec_id"))
-        .join(cc, col("vec_id") === col("node"), "left")
-        .select(coalesce(col("component"), col("vec_id")).as("rep"))
-        .groupBy(col("rep")).agg(count(lit(1)).as("sz"))
-        .groupBy(col("sz").as("cluster_size"))
-        .agg(count(lit(1)).as("n_clusters"))
-    }),
-
-    // ---- streaming: STREAM-STATIC ENRICH — the broadcast dim join
-    // per micro-batch (the J1/J2 shape on a stream), gated end to
-    // end: file-stream events enriched with a derived event-type dim,
-    // summed per type — equal to the batch join by construction (no
-    // state, no watermark; the gate closes §2.9's last spec-only row)
-    "q192_stream_enrich" -> ((s, dir) => withShufflePartitions(s, 8) {
-      import s.implicits._
-      val ev = T(s, dir, "events")
-        .select(col("event_type"), col("user_id").cast("long").as("uid"),
-          col("event_id").cast("long").as("eid"))
-      if (ev.isEmpty) {
-        Seq.empty[(String, Long, Long, Long)]
-          .toDF("event_type", "type_weight", "n_events", "weighted_sum")
-      } else {
-      val dim = ev.groupBy(col("event_type"))
-        .agg((count(lit(1)) % 7L + 1L).as("type_weight"))
-      val src = readFeed(s, feedQ192(s, dir), "event_type STRING, uid LONG")
-      val enriched = graft.streaming.Streams.enrich(src, dim,
-        "event_type", joinType = "left")
-      runStreamGate(s, "q192", enriched)(
-        _.groupBy(col("event_type"), col("type_weight"))
-          .agg(count(lit(1)).as("n_events"),
-            sum(col("uid") * col("type_weight")).as("weighted_sum")))
-      }
-    }),
-
-    // ---- monitoring: EWMA daily series — per event type and
-    // observed day, the decayed trailing count over the shared exact
-    // e6 (4/5)^age table (q111's decay powers as a SERIES, the
-    // smoothed line a regression detector thresholds against)
-    "q190_ewma_series" -> ((s, dir) =>
-      EventAnalytics.ewmaDailySeries(T(s, dir, "events"),
-        "event_type", "ts", decayNum = 4, decayDen = 5,
-        maxAgeDays = 30)),
-
-    // ---- dedup: pair EXPLANATIONS — per verified near-dup pair, the
-    // 3 rarest shared trigrams with their document frequencies (the
-    // reviewer evidence next to the score; rarest-first because
-    // boilerplate explains nothing)
-    "q189_pair_explanations" -> ((s, dir) =>
-      Dedup.explainPairs(T(s, dir, "documents"), "doc_id", "text",
-        n = 3, thrNum = 1L, thrDen = 2L, k = 3)),
-
-    // ---- dedup: CORPUS-level gram overlap — even-doc half vs
-    // odd-doc half: Jaccard + both containments of the distinct
-    // 3-gram sets, the dataset-similarity gauge an aggregation or
-    // contamination decision reads before any per-doc work
-    "q188_corpus_overlap" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      Dedup.corpusGramOverlap(
-        docs.filter(pmod(col("doc_id"), lit(2)) === 0),
-        docs.filter(pmod(col("doc_id"), lit(2)) === 1),
-        "doc_id", "text", n = 3)
-    }),
-
-    // ---- eval: stratified 5-fold assignment — per language stratum,
-    // folds taken round-robin along the (md5, key) permutation:
-    // balanced to within one row per stratum, reproducible everywhere
-    "q187_stratified_kfold" -> ((s, dir) =>
-      Sampling.stratifiedKFold(
-        T(s, dir, "documents").select(col("doc_id"), col("lang")),
-        "lang", "doc_id", k = 5)),
-
-    // ---- eval: per-class precision/recall/F1 — q133's NCM confusion
-    // tallied into the classifier eval sheet, every metric an exact
-    // e6 rational (F1 as the single rational 2tp/(n_true+n_pred))
-    "q186_class_metrics" -> ((s, dir) =>
-      EvalMetrics.classMetrics(
-        Prototypes.prototypeConfusion(T(s, dir, "embeddings"),
-          "vec_id", "embedding", "label"),
-        "true_label", "assigned_label", "n_vecs")),
-
-    // ---- QA: Merkle-style bucketed column checksums — q159's
-    // order-independent lanes per key-hash bucket (16 buckets): the
-    // "WHERE do two table versions differ?" localizer
-    "q185_bucket_checksums" -> ((s, dir) =>
-      Profile.bucketChecksums(T(s, dir, "customer"), "c_custkey",
-        Seq("c_custkey", "c_name", "c_mktsegment"), nBuckets = 16)),
-
-    // ---- source: JSON-lines ingest with corrupt-record handling —
-    // records are constructed by IDENTICAL string concatenation in
-    // both engines (so no to_json formatting divergence), every 50th
-    // record truncated to a malformed line; from_json PERMISSIVE
-    // yields NULL fields + the is_corrupt flag instead of failing
-    "q184_json_ingest" -> ((s, dir) => {
-      val cust = T(s, dir, "customer")
-      val js = concat(lit("{\"k\":"), col("c_custkey").cast("string"),
-        lit(",\"n\":\""), col("c_name"),
-        lit("\",\"seg\":\""), col("c_mktsegment"), lit("\"}"))
-      val raw = when(pmod(col("c_custkey"), lit(50)) === 0,
-        expr("substring(js__, 1, length(js__) - 1)")).otherwise(col("js__"))
-      graft.sources.JsonIngest.parseRecords(
-        cust.select(col("c_custkey"), js.as("js__"))
-          .select(col("c_custkey"), raw.as("raw__")),
-        col("raw__"), "k LONG, n STRING, seg STRING",
-        requiredField = "k")
-        .drop("raw__")
-    }),
-
-    // ---- ranking: per-group top-k — the 3 priciest orders per
-    // order-priority class; the declared rank-filter idiom lets
-    // Catalyst plant WindowGroupLimit (map-side size-k heaps before
-    // the shuffle — PlanAuditSpec pins it)
-    "q183_group_topk" -> ((s, dir) =>
-      RankOps.groupTopK(
-        T(s, dir, "orders").select(col("o_orderpriority"),
-          col("o_orderkey"),
-          (col("o_totalprice").cast("decimal(18,2)") * 100)
-            .cast("long").as("price_c")),
-        Seq("o_orderpriority"), k = 3,
-        value = col("price_c"), tieBreaks = Seq(col("o_orderkey")))),
-
-    // ---- mixture QA: source concentration — HHI + CR1/CR4 of char
-    // mass across sources, all exact scaled integers: the "is the
-    // corpus dominated by a few sources?" one-row diagnostic
-    "q178_source_concentration" -> ((s, dir) =>
-      Profile.concentration(T(s, dir, "documents"), "source",
-        col("n_chars"))),
-
-    // ---- streaming: WATERMARKED STREAM DEDUP under late data (§2.9's
-    // dropDuplicatesWithinWatermark, oracle-gated like q169). Feed:
-    // four on-time time-slices + a late fifth file (eid % 10),
-    // pre-reduced to ONE row per (user, file) — Spark admits the first
-    // row per key in PROCESSING order, so the staged feed removes the
-    // only nondeterministic choice while keeping every cross-batch
-    // state behavior: duplicate-within-watermark dropped, state
-    // evicted as the watermark passes its expiry, key re-emitted
-    // after eviction, late rows admitted or dropped by the lagged
-    // watermark. No sentinels: dedup emits on arrival (not on
-    // watermark crossing), so every behavior is visible without a
-    // flush.
-    "q175_watermark_dedup" -> ((s, dir) => withShufflePartitions(s, 8) {
-      import s.implicits._
-      val ev = T(s, dir, "events")
-        .select(col("user_id").cast("long").as("uid"),
-          tsSec.cast("long").as("tsSec"),
-          col("event_id").cast("long").as("eid"))
-      if (ev.isEmpty) {
-        Seq.empty[(Long, Long)].toDF("uid", "ts_emitted")
-      } else {
-      val src = readFeed(s, feedQ175(s, dir), "uid LONG, tsSec LONG")
-        .withColumn("ts", timestamp_seconds(col("tsSec")))
-      runStreamGate(s, "q175",
-          graft.streaming.Streams.dedupByKey(src, "uid", "ts", "30 minutes"))(
-        _.select(col("uid"), col("tsSec").as("ts_emitted")))
-      }
-    }),
-
-    // ---- streaming: STREAM-STREAM interval join under late data
-    // (§2.9's last uncovered surface) — even event ids feed the left
-    // stream, odd the right; each side ships three on-time time
-    // slices plus a late fourth file, and the join emits (user,
-    // left ts, right ts) for right events inside [left, left+1h).
-    // The batch oracle unrolls the two-store state machine with the
-    // same lagged-watermark rules q169/q175 pinned.
-    "q177_stream_interval_join" -> ((s, dir) =>
-      streamIntervalJoinGate(s, dir, "inner")),
-
-    // ---- streaming: LEFT-OUTER stream-stream join — q177's harness
-    // with the null-extending side: a left event whose state evicts
-    // without ever matching emits (uid, l_ts, NULL) — the "click with
-    // no purchase in the window" stream, produced incrementally
-    "q181_stream_left_join" -> ((s, dir) =>
-      streamIntervalJoinGate(s, dir, "leftOuter")),
-
-    // ---- streaming: FULL-OUTER stream-stream interval join — q181's
-    // harness with BOTH sides null-extending at state eviction (the
-    // last stream-stream join type; left rows null-extend once
-    // l_ts + gap falls below the final watermark, right rows once
-    // r_ts does)
-    "q209_stream_full_join" -> ((s, dir) =>
-      streamIntervalJoinGate(s, dir, "fullOuter")),
-
-    // ---- streaming: WATERMARK-TIMEOUT sessionization — q78's gap
-    // sessions closed by GroupStateTimeout.EventTimeTimeout instead
-    // of a sentinel flush: each state update arms a timeout at
-    // last + gap; when the watermark passes it, the group re-invokes
-    // with hasTimedOut and the session emits. Sessions still open at
-    // stream end (the tail of event time) stay in state and are NOT
-    // emitted — exactly the production contract, and the gated
-    // difference vs q78.
-    "q182_session_timeout" -> ((s, dir) => withShufflePartitions(s, 8) {
-      import s.implicits._
-      val ev = T(s, dir, "events")
-        .select(col("user_id").cast("long").as("userId"),
-          tsSec.cast("long").as("tsSec"))
-      if (ev.isEmpty) {
-        Seq.empty[(Long, Long, Long, Long)]
-          .toDF("user_id", "session_start", "session_end", "n_events")
-      } else {
-      val src = readFeed(s, feedQ182(s, dir), "userId LONG, tsSec LONG")
-        .withColumn("ts", timestamp_seconds(col("tsSec")))
-        .withWatermark("ts", "30 minutes")
-        .withColumn("value", lit(0.0))
-        .select(col("userId"), col("tsSec"), col("value"), col("ts"))
-        .as[graft.streaming.Streams.TimedSessionEvent]
-      runStreamGate(s, "q182", graft.streaming.Streams
-          .statefulSessionsTimeout(src, gapSec = 1800L))(
-        _.select(col("userId").as("user_id"),
-          col("start").as("session_start"), col("end").as("session_end"),
-          col("n").as("n_events")))
-      }
-    }),
-
-    // ---- tokenizer: BATCHED BPE merge-rule training (round 13 —
-    // tokenizer scale): 16 vocabulary passes adopting up to 16
-    // symbol-disjoint top pairs each (passes ≪ merges — ~5/pass keep
-    // rate on prose yields ~75-80 merges here;
-    // (count desc, pair asc) candidate order, boundary-anchored
-    // greedy application); the merge table is the tokenizer artifact
-    // a data pipeline trains and ships. The sequential per-merge
-    // trainer stays gated through q180's 3-round encode.
-    "q174_bpe_merges" -> ((s, dir) => stagedBpeModel(s, dir)._1),
-
-    // ---- tokenizer: ENCODE under the q174 model — per doc, word
-    // count and BPE token count (tokens-per-distinct-word join, no
-    // per-doc merge scans): the train-then-apply round trip
-    "q180_bpe_encode" -> ((s, dir) =>
-      BpeTrain.encodeTokenCounts(T(s, dir, "documents"), "doc_id",
-        "text", rounds = 3)),
-
-    // ---- stats: exact trimmed mean — price cents per return flag
-    // with the top/bottom 10% dropped by rank (the robust location
-    // between mean and median); scalable-rank path, e4-exact
-    "q173_trimmed_mean" -> ((s, dir) =>
-      GroupStats.trimmedMean(T(s, dir, "lineitem"),
-        Seq("l_returnflag"),
-        expr("cast(round(l_extendedprice * 100, 0) as bigint)"),
-        trimNum = 1, trimDen = 10)),
-
-    // ---- eval hygiene: SEMANTIC decontamination — per corpus vector,
-    // max cosine against the (q51-rule md5-prefix) benchmark vector
-    // set + hit count + flag: the paraphrased-leak check n-gram
-    // containment (q51/q61) cannot see; bench side broadcasts, one
-    // corpus scan
-    "q171_semantic_decontam" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val isBench =
-        substring(md5(col("vec_id").cast("string")), 1, 2) < "1a"
-      Decontaminate.semanticReport(emb.filter(!isBench),
-        emb.filter(isBench), "vec_id", "embedding", threshold = 0.3)
-    }),
-
-    // ---- eval: retrieval metrics — hits@10 / first-relevant rank /
-    // MRR / recall@10 / nDCG@10 per query over the embedding corpus,
-    // relevance = label agreement; DCG weights ship as a shared
-    // e9-scaled table so the whole metric surface is integer-exact
-    "q170_retrieval_metrics" -> ((s, dir) =>
-      RetrievalEval.relevanceMetrics(T(s, dir, "embeddings"),
-        "vec_id", "embedding", "label",
-        queryIds = (0L until 8L).toSeq, k = 10)),
-
-    // ---- monitoring: data-card DIFF — q83's per-source card on the
-    // even-doc half vs the odd-doc half, keyed diff with per-column
-    // attribution (the corpus-version regression detector)
-    "q156_datacard_diff" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      def card(parity: Int) = DataCard.perSource(
-        docs.filter(pmod(col("doc_id"), lit(2)) === parity),
-        "doc_id", "text", "source", "lang")
-      SnapshotDiff.diff(card(0), card(1), "source",
-        Seq("n_docs", "n_tokens", "n_chars", "n_langs", "n_dup_docs"))
-    }),
-
-    // ---- semi-supervised: clamped-seed label propagation over the
-    // embedding near-dup graph — every 4th vector keeps its label as
-    // the seed; two deterministic argmax rounds (votes desc, label
-    // asc) spread labels across near-copy neighborhoods. Candidate
-    // edges come from the banded-LSH path (r12: the exact O(n²)
-    // kernel leaves the declared surface; it remains only in the
-    // q29/q40 audit role) — the oracle MIRRORS the LSH buckets via
-    // the inlined plane masks, so the graph is hash-gated end to end
-    // with no quadratic lineage on either engine.
-    "q117_label_propagation" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val pairs = lshNearDupPairs(s, dir, threshold = 0.3)
-        .select(col("id_a"), col("id_b"))
-      val nodes = emb.select(col("vec_id"),
-        when(pmod(col("vec_id"), lit(4)) === 0,
-          col("label").cast("long")).as("label"))
-      LabelProp.propagate(nodes, "vec_id", "label",
-        pairs, "id_a", "id_b", iterations = 2)
-    }),
-
-    // ---- curation: self-trained bigram-LM likelihood (CCNet-family
-    // LM quality filter) — Laplace-smoothed bigram probabilities
-    // trained on the corpus itself, per-doc count/sum/min/max of the
-    // e6-scaled probabilities: a fully RATIONAL gate surface (logs
-    // would be libm-dependent; they stay out of the gate)
-    "q85_bigram_likelihood" -> ((s, dir) =>
-      NgramLm.bigramLikelihood(T(s, dir, "documents"), "doc_id", "text")),
-
-    // ---- curation: mixture MATERIALIZATION — q80's apportionment
-    // composed with a per-source quality-ordered budget cut: each
-    // source contributes its best docs (quality_e4 desc, doc_id asc —
-    // an all-integer ordering key, so the whole lineage is float-free)
-    // until its allocated token share is spent. THE mixture query a
-    // training run actually executes.
-    "q84_mixture_select" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val toks = TextAnalysis.tokenCounts(docs, "doc_id", "text")
-        .select(col("doc_id"), col("n_tokens"))
-      val sig = TextAnalysis.qualitySignals(docs, "doc_id", "text")
-      val (num, den) = TextAnalysis.qualityRational()
-      val scored = sig
-        .select(col("doc_id"),
-          graft.functions.ExactRound.ratioScaled(num, den, 4)
-            .as("quality_e4"))
-        .join(toks, "doc_id")
-        .join(docs.select(col("doc_id"), col("source")), "doc_id")
-      Apportion.selectToAllocation(scored, "source", "n_tokens",
-          Seq(col("quality_e4").desc, col("doc_id").asc),
-          budget = 10000L, runningOut = "cum_tokens")
-        .select(col("doc_id"), col("source"), col("n_tokens"),
-          col("quality_e4"), col("cum_tokens"))
-    }),
-
-    // ---- dedup: SimHash banded near-dup. Banding over 4×16-bit bands
-    // is pigeonhole-exact at hamming <= 3, and the token hash is an
-    // md5 prefix — so the output is deterministic SQL and the oracle
-    // computes the same fingerprints + exact all-pairs hamming filter
-    // (hash-gated since round 8; previously rows-only).
-    "q24_simhash_pairs" -> ((s, dir) =>
-      Dedup.simhash(T(s, dir, "documents"), "doc_id", "text",
-        bands = 4, maxHamming = 3)),
-
-    // ---- similarity: exact brute-force cosine top-k
-    "q25_ann_bruteforce" -> ((s, dir) =>
-      SimilaritySearch.bruteForceTopK(T(s, dir, "embeddings"),
-        "vec_id", "embedding", queryId = 0L, k = 10)),
-
-    // ---- similarity: LSH-bucketed ANN (approximate: rows-only),
-    // declared through the amortized index/probe split: lshIndex keys
-    // the corpus ONCE (the expensive side — a serving path persists or
-    // writes it), lshProbe answers each query with a broadcast semi-join.
-    // bands=8192: the synthetic corpus's true top-10 sit at cos
-    // 0.28-0.41 — the random-noise tail, LSH's hardest regime — so band
-    // count is sized up to hold per-neighbor recall ~0.9 there.
-    // Graduated from rows-only to hash-gated (the q64/q70 discipline):
-    // the output is the EXACT top-10 surface (SQL-reproducible) plus a
-    // recall_ok boolean measured against the LSH probe's answer — at
-    // the pinned hyperplanes both sides are deterministic, so a recall
-    // collapse (band-shift bug, broken signature) flips the boolean
-    // and fails the hash gate. Threshold mirrors the q40 audit (>= 5
-    // of 10; measured 9/10 at both gate SFs).
-    "q26_ann_lsh" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val index = SimilaritySearch.lshIndex(emb,
-        "vec_id", "embedding", bands = 8192)
-      val lsh = SimilaritySearch.lshProbe(index, emb,
-        "vec_id", "embedding", queryId = 0L, k = 10)
-      // persisted: referenced by the overlap agg AND the final select —
-      // without the cache the brute-force kernel runs twice
-      val exact = graft.Caches.register(SimilaritySearch.bruteForceTopK(
-        emb, "vec_id", "embedding", queryId = 0L, k = 10).persist())
-      val overlap = exact
-        .join(lsh.select(col("vec_id")), Seq("vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_overlap"))
-      exact.crossJoin(broadcast(overlap))
-        .select(col("vec_id"), col("cosine"),
-          (col("n_overlap") >= 5).as("recall_ok"))
-    }),
-
-    // ---- multimodal: binary payload + per-partition decode. The
-    // header-metadata surface is the original gate; the px_* columns
-    // exercise the REAL pixel decode end-to-end — the first 96 text
-    // bytes wrapped in a valid PPM-P6 container, so decodeImagePixels
-    // genuinely parses a header and decodes pixel bytes whose integer
-    // statistics the oracle reproduces from the raw characters.
-    "q27_multimodal_meta" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val withPayload = docs
-        .select(col("doc_id"), col("text").cast("binary").as("payload"))
-      val meta = Multimodal.extractFeatures(withPayload, "doc_id", "payload")
-      // pure-ASCII rows only (octet_length == char_length): the oracle
-      // reconstructs the pixel stats from CHARACTER codes, so a
-      // non-ASCII doc would diverge bytes-vs-codepoints — the q79
-      // by-construction pin applied here too
-      val ppm = docs.filter(length(col("text")) >= 96 &&
-          octet_length(col("text")) === length(col("text")))
-        .select(col("doc_id"),
-          concat(lit("P6\n8 4\n255\n".getBytes("UTF-8")),
-            substring(col("text"), 1, 96).cast("binary")).as("payload"))
-      val px = Multimodal.pixelFeatures(ppm, "doc_id", "payload")
-      meta.join(px, Seq("doc_id"), "left")
-    }),
-
-    // ---- dedup: exact embedding-cosine near-dup pairs (O(n²·d)
-    // baseline; q30 is the LSH scale path)
-    "q29_embedding_neardup" -> ((s, dir) =>
-      SimilaritySearch.embeddingNearDupExact(T(s, dir, "embeddings"),
-        "vec_id", "embedding", threshold = 0.45)),
-
-    // ---- dedup: LSH-bucketed embedding near-dup — 16-bit band keys
-    // over a 512-bit base signature, band count derived from the
-    // threshold: adaptiveBands(0.45) = 3,055 targeting recall 0.95 at
-    // exactly-threshold pairs (measured 0.91 at sf0.1 — bands share
-    // base bits, so realized recall sits slightly below the
-    // independent-band formula), false candidates at the birthday
-    // floor; see SimilaritySearch.adaptiveBands for the r/b math.
-    // Graduated to hash-gated: rows are the EXACT pair surface (q29's
-    // SQL), recall_ok gates |exact∩lsh| >= 0.8·|exact| by integer
-    // cross-multiplication, precision_ok gates lsh ⊆ exact (LSH
-    // cosine-verifies candidates, so an invented pair means the
-    // verification broke).
-    "q30_embedding_neardup_lsh" -> ((s, dir) =>
-      neardupGuaranteeGate(s, dir,
-        approx = emb => SimilaritySearch.embeddingNearDup(emb,
-          "vec_id", "embedding", threshold = 0.45),
-        recallNum = 4L, recallDen = 5L)),
-
-    // ---- similarity: IVF coarse-quantizer ANN. Graduated to
-    // hash-gated like q26: exact top-10 surface + recall_ok vs the IVF
-    // probe (>= 4 of 10, the q40 threshold — 2 of 8 cells probed).
-    "q31_ann_ivf" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val ivf = SimilaritySearch.ivfTopK(emb,
-        "vec_id", "embedding", queryId = 0L, k = 10)
-      // persisted for the same two-reference reason as q26
-      val exact = graft.Caches.register(SimilaritySearch.bruteForceTopK(
-        emb, "vec_id", "embedding", queryId = 0L, k = 10).persist())
-      val overlap = exact
-        .join(ivf.select(col("vec_id")), Seq("vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_overlap"))
-      exact.crossJoin(broadcast(overlap))
-        .select(col("vec_id"), col("cosine"),
-          (col("n_overlap") >= 4).as("recall_ok"))
-    }),
-
-    // ---- dedup: transitive near-dup clustering — connected components
-    // (min-id label) over the LSH near-dup pair list (r12: mirrored
-    // oracle, no quadratic kernel); pair lists say who matches whom,
-    // dropping duplicates needs the transitive grouping. r16: this IS
-    // the staged component store — first touch builds + persists it,
-    // and the six sibling consumers read the same map.
-    "q47_neardup_components" -> ((s, dir) =>
-      stagedNearDupComponents(s, dir)),
-
-    // ---- dedup: keep ONE representative (min id) per near-dup cluster;
-    // singletons pass through untouched via the left-anti join
-    "q48_dedup_representatives" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      Dedup.keepRepresentativesFromComponents(emb.select(col("vec_id")),
-        "vec_id", stagedNearDupComponents(s, dir))
-    }),
-
-    // ---- dedup: QUALITY-AWARE representative selection — per near-dup
-    // cluster keep the argmax-quality member (ties id asc), not the
-    // arbitrary min id: "drop the copies, keep the best copy". Score
-    // is the q18 rational as a scaled integer, so the whole lineage —
-    // clustering, scoring, argmax — is float-free.
-    "q86_dedup_keep_best" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val sig = TextAnalysis.qualitySignals(T(s, dir, "documents"),
-        "doc_id", "text")
-      val (num, den) = TextAnalysis.qualityRational()
-      val scored = sig.select(col("doc_id").as("vec_id"),
-        graft.functions.ExactRound.ratioScaled(num, den, 4)
-          .as("quality_e4"))
-      Dedup.keepBestRepresentativesFromComponents(
-        emb.select(col("vec_id")).join(scored, "vec_id"),
-        "vec_id", "quality_e4", stagedNearDupComponents(s, dir))
-    }),
-
-    // ---- curation: reproducible hash-sample (keyed md5-prefix filter —
-    // same rows every rerun/repartition, unlike RNG df.sample)
-    "q49_hash_sample" -> ((s, dir) =>
-      Sampling.hashSample(T(s, dir, "customer"), "c_custkey", rate256 = 64)
-        .select(col("c_custkey"), col("c_name"))),
-
-    // ---- curation: deterministic train/val/test split (200/32/24 of
-    // 256) — the same doc lands in the same split everywhere, the
-    // no-leakage property an RNG split cannot give
-    "q50_split_by_hash" -> ((s, dir) =>
-      Sampling.splitByHash(T(s, dir, "documents").select(col("doc_id")),
-        "doc_id", weights = Seq(200, 32, 24),
-        labels = Seq("train", "val", "test"))),
-
-    // ---- curation: stratified sample, exact per-language quotas —
-    // min(20, |stratum|) docs per lang, hash-order members (same docs
-    // every rerun/repartition/engine), two-phase to avoid the
-    // one-reducer-per-stratum window shuffle
-    "q52_stratified_sample" -> ((s, dir) =>
-      Sampling.stratifiedSample(T(s, dir, "documents"), "lang", "doc_id",
-        k = 20).select(col("doc_id"), col("lang"))),
-
-    // ---- text analysis: Gopher/C4-family repetition signals —
-    // duplicate 2/3-gram fractions + top-word dominance, one stacked
-    // explode feeding every statistic
-    "q55_repetition" -> ((s, dir) =>
-      TextAnalysis.repetitionSignals(T(s, dir, "documents"),
-        "doc_id", "text")),
-
-    // ---- §2.4 extension: ROLLUP subtotals — per (flag, status), per
-    // flag, and grand total in one pass; grouping_id disambiguates
-    // subtotal NULLs from data NULLs
-    "q58_rollup" -> ((s, dir) =>
-      T(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(grouping_id().as("gid"),
-          count(lit(1)).as("n_rows"),
-          sum(col("l_quantity")).as("sum_qty"))
-        .select(col("l_returnflag"), col("l_linestatus"), col("gid"),
-          col("n_rows"), col("sum_qty"))),
-
-    // ---- retrieval: sliding-window chunking — 16-token windows,
-    // 4-token overlap (stride 12); short tail, whole-doc chunk for
-    // short docs, closed-form chunk count (no shuffle anywhere)
-    "q57_chunking" -> ((s, dir) =>
-      Chunking.slidingWindows(T(s, dir, "documents"), "doc_id", "text",
-        size = 16, overlap = 4)),
-
-    // ---- curation: PII scrub — deterministic injection (the synthetic
-    // corpus carries no PII) followed by ordered mask + count; the
-    // injection is keyed on doc_id and mirrored in the oracle
-    "q56_pii_scrub" -> ((s, dir) => {
-      val injected = T(s, dir, "documents").select(col("doc_id"),
-        concat(col("text"),
-          when(pmod(col("doc_id"), lit(7)) === 0,
-            concat(lit(" reach user"), col("doc_id").cast("string"),
-              lit("@mail.example.com"))).otherwise(lit("")),
-          when(pmod(col("doc_id"), lit(11)) === 0,
-            concat(lit(" call +91 555-"),
-              lpad(pmod(col("doc_id"), lit(10000)).cast("string"), 4, "0")))
-            .otherwise(lit("")),
-          when(pmod(col("doc_id"), lit(13)) === 0,
-            concat(lit(" from 10.0."),
-              pmod(col("doc_id"), lit(256)).cast("string"), lit("."),
-              pmod(col("doc_id") * 7, lit(256)).cast("string")))
-            .otherwise(lit(""))).as("text"))
-      PiiScrub.scrub(injected, "doc_id", "text")
-    }),
-
-    // ---- retrieval: BM25-family term relevance (rational idf — the
-    // engine-exact variant; see TermRelevance scaladoc)
-    "q54_term_relevance" -> ((s, dir) =>
-      TermRelevance.bm25(T(s, dir, "documents"), "doc_id", "text",
-        terms = Seq("spark", "join", "window"))),
-
-    // ---- curation: sequence packing — greedy next-fit of token-counted
-    // docs into 256-token context windows, 16 hash buckets as the
-    // parallelism unit (packing is sequential per bucket by nature)
-    "q53_sequence_pack" -> ((s, dir) => {
-      val toks = TextAnalysis.tokenCounts(T(s, dir, "documents"),
-          "doc_id", "text")
-        .select(col("doc_id"), col("n_tokens"))
-      SequencePack.packGreedy(toks, "doc_id", "n_tokens",
-        capacity = 256L, nBuckets = 16)
-    }),
-
-    // ---- curation: benchmark decontamination — per-doc 5-gram
-    // containment against a held-out benchmark slice (the hash-sampled
-    // ~26/256 of docs), flagged at 0.3. The benchmark gram set is
-    // broadcast: benchmark suites are small by construction.
-    "q51_decontaminate" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val bench = Sampling.hashSample(docs, "doc_id", rate256 = 26)
-      val corpus = docs.join(bench.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      Decontaminate.overlapReport(corpus, bench, "doc_id", "text",
-        n = 5, threshold = 0.3)
-    }),
-
-    // ---- curation: token-budget selection — keep the highest-quality
-    // docs (q18's score, already gate-proven bit-exact) until a 10k
-    // running token budget is spent; two-phase range-partitioned prefix
-    // sum, no single-partition window
-    "q59_token_budget" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val quality = TextAnalysis.qualityScore(docs, "doc_id", "text")
-        .select(col("doc_id"), col("quality"))
-      val costed = docs
-        .select(col("doc_id"),
-          size(graft.functions.TextFns.words(col("text"))).cast("long")
-            .as("n_tokens"))
-        .join(quality, "doc_id")
-      BudgetSelect.selectUnderBudget(costed, col("n_tokens"),
-          Seq(col("quality").desc, col("doc_id").asc), budget = 10000L,
-          runningOut = "cum_tokens")
-        .select(col("doc_id"), col("n_tokens"), col("cum_tokens"))
-    }),
-
-    // ---- curation: source-mix resampling — per-source keep rates in
-    // 256ths (a target domain mixture), every decision keyed on
-    // md5(doc_id) so the kept set is reproducible and monotonic in the
-    // rate; pure filter, no shuffle
-    "q60_source_mix" -> ((s, dir) =>
-      Sampling.mixBySource(T(s, dir, "documents"),
-          "source", "doc_id",
-          rates = Map("src0" -> 256, "src1" -> 256, "src2" -> 192,
-            "src3" -> 128, "src4" -> 128),
-          defaultRate256 = 64)
-        .select(col("doc_id"), col("source"))),
-
-    // ---- curation: Bloom-filter decontamination — the memory-constant
-    // scale twin of q51. Graduated to hash-gated: rows are the exact
-    // overlap report (q51's SQL-reproducible surface); per-row
-    // no_false_negative gates the HARD one-sided Bloom guarantee
-    // (exact-contaminated ⇒ bloom-contaminated — Bloom hits can only
-    // be added, never lost), and excess_ok bounds the false-positive
-    // side at the q40 threshold (≤ max(2, 2% of corpus)).
-    "q61_bloom_decontaminate" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val bench = Sampling.hashSample(docs, "doc_id", rate256 = 26)
-      val corpus = docs.join(bench.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      val exact = Decontaminate.overlapReport(corpus, bench, "doc_id", "text",
-        n = 5, threshold = 0.3)
-      val bloom = Decontaminate.bloomOverlapReport(corpus, bench, "doc_id", "text",
-          n = 5, threshold = 0.3, fpp = 0.01)
-        .select(col("doc_id"), col("contaminated").as("bloom_contaminated"))
-      // persisted: the excess aggregate AND the final projection both
-      // read it — uncached, the exact and Bloom gram joins run twice
-      val joined = graft.Caches.register(exact.join(bloom, "doc_id").persist())
-      val excess = joined.agg(
-        sum(when(col("bloom_contaminated") && !col("contaminated"), 1L)
-          .otherwise(0L)).as("n_excess"),
-        count(lit(1)).as("n_corpus"))
-      joined.crossJoin(broadcast(excess)).select(
-        col("doc_id"), col("n_grams"), col("n_hit"), col("overlap"),
-        col("contaminated"),
-        (!col("contaminated") || col("bloom_contaminated"))
-          .as("no_false_negative"),
-        (col("n_excess") <= greatest(lit(2L), col("n_corpus") / 50L))
-          .as("excess_ok"))
-    }),
-
-    // ---- dedup: SemDeDup-style semantic near-dup — k-means cells from
-    // the IVF quantizer, cosine verified within cells only. Graduated
-    // to hash-gated like q30: exact pair surface + recall_ok at the
-    // q40 threshold (>= 0.6 — a collapsed clustering lands near
-    // 1/nClusters) + precision_ok (within-cell pairs are
-    // cosine-verified, so sem ⊆ exact must hold exactly).
-    "q62_semantic_dedup" -> ((s, dir) =>
-      neardupGuaranteeGate(s, dir,
-        approx = emb => SimilaritySearch.semanticNearDup(emb,
-          "vec_id", "embedding", threshold = 0.45),
-        recallNum = 3L, recallDen = 5L)),
-
-    // ---- text analysis: winnowing fingerprint-overlap pairs — docs
-    // sharing >= 2 rare fingerprints (substring-level containment, the
-    // MOSS aggregation over q33); boilerplate fingerprints capped at
-    // doc-frequency 5 so the posting-list join stays linear
-    "q63_fingerprint_overlap" -> ((s, dir) =>
-      TextAnalysis.fingerprintOverlapPairs(T(s, dir, "documents"),
-        "doc_id", "text", k = 8, w = 4, maxDocFreq = 5L, minShared = 2L)),
-
-    // ---- sketch: per-group approx quantiles with the GK rank
-    // guarantee verified in-query — sketch VALUES are not oracle-able
-    // (in-tolerance wiggle), the guarantee is; same constant-true
-    // discipline as q40
-    "q64_approx_quantiles" -> ((s, dir) =>
-      ApproxQuantiles.rankErrorAudit(T(s, dir, "lineitem"),
-        "l_returnflag",
-        expr("cast(round(l_extendedprice * 100, 0) as bigint)"),
-        qs = Seq(0.25, 0.5, 0.75), accuracy = 10000, maxRankErr = 0.02)),
-
-    // ---- corpus stats: exact φ-heavy-hitter tokens (φ = 1/65) — an
-    // MG-sketch candidate pass (one bounded row out of the full scan)
-    // plus an exact count restricted to the ≤ k candidates; the full
-    // token domain is never shuffled. Result = exactly the tokens with
-    // frequency > N/65, with exact counts (MG can only over-generate
-    // candidates; the exact filter kills them)
-    "q65_frequent_tokens" -> ((s, dir) =>
-      FrequentItems.frequentTokens(T(s, dir, "documents"), "text", k = 64)),
-
-    // ---- corpus stats: ranked vocabulary (top-20 tokens by collection
-    // frequency with doc frequency) — two-level map-side-combinable
-    // aggregate, TakeOrdered selection, rank window over ≤ k rows only
-    "q67_vocab_top" -> ((s, dir) =>
-      VocabBuild.topTokens(T(s, dir, "documents"), "doc_id", "text",
-        topK = 20, minDocFreq = 2L)),
-
-    // ---- dedup: incremental near-dup — a hash-sampled "new batch"
-    // probed against the MinHash index of the standing corpus: only the
-    // batch is re-shingled, the standing side contributes stored band
-    // keys/postings/sizes (the append-only crawl shape). Exact-oracle:
-    // LSH candidates + exact-Jaccard verify equals the true pair set
-    // restricted to pairs touching the batch
-    // The standing side comes from the STAGED corpus index (shared with
-    // q23) with the batch anti-joined out — per-doc index rows make
-    // that exactly the index built over the standing docs, so the gate
-    // finally measures what the operator sells: only the batch is
-    // re-shingled; the archive is read, never rebuilt.
-    "q73_incremental_neardup" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val batch = Sampling.hashSample(docs, "doc_id", rate256 = 26)
-      val standing = Dedup.excludeFromIndex(stagedDocsIndex(s, dir),
-        batch.select(col("doc_id")))
-      Dedup.incrementalNearDup(standing, batch, "doc_id", "text",
-        threshold = 0.5)
-    }),
-
-    // ---- curation: pack materialization — q53's assignments joined
-    // back to text: the actual training-example rows a dataloader
-    // consumes (SequencePack.materialize builds the offset-ordered
-    // pack_text; its exact bytes are spec-asserted). The GATE compares
-    // SequencePack.packDigests: an order-independent XOR of per-member
-    // 64-bit md5 digests in two 32-bit halves — r7 hashed the raw
-    // concatenation and r8 hashed md5(concatenation), and BOTH flapped
-    // on the driver while q53 (same packing) and q20 (same md5) stayed
-    // green, so the ordered multi-KB aggregation itself leaves the
-    // gate; membership + offsets + text pin identical content.
-    "q72_pack_materialize" -> ((s, dir) => {
-      val toks = TextAnalysis.tokenCounts(T(s, dir, "documents"),
-          "doc_id", "text")
-        .select(col("doc_id"), col("n_tokens"))
-      val packed = SequencePack.packGreedy(toks, "doc_id", "n_tokens",
-        capacity = 256L, nBuckets = 16)
-      SequencePack.packDigests(packed, T(s, dir, "documents"),
-        "doc_id", "text")
-    }),
-
-    // ---- dedup: exact repeated-substring coverage (Lee et al. ACL'22
-    // substring dedup, shuffle-parallel windows instead of the paper's
-    // suffix array) — per doc, the fraction of normalized text inside
-    // maximal spans whose 20-char windows occur >= 2x in the corpus.
-    // The gate carries the coverage fraction as the SCALED INTEGER
-    // round(frac·1e4) instead of the double: every other building
-    // block of this query is driver-proven by a green sibling (q33 the
-    // gram/md5/window machinery, q15 the lag/cumsum merge, q18/q22 the
-    // ExactRound rounding), yet the hashed double still flapped on the
-    // driver in r7 AND r8 — so the gate now contains no floating point
-    // at all (frac = repeated_frac_e4 / 1e4 exactly; coverageReport
-    // still exposes the double for API users).
-    "q71_repeated_substrings" -> ((s, dir) =>
-      SubstringDedup.coverageReport(T(s, dir, "documents"),
-          "doc_id", "text", minLen = 20)
-        .select(col("doc_id"), col("n_chars"), col("n_spans"),
-          col("repeated_chars"),
-          graft.functions.ExactRound.ratioScaled(col("repeated_chars"),
-            col("n_chars"), 4).as("repeated_frac_e4"))),
-
-    // ---- dedup: substring-dedup TRIM — the Lee et al. APPLICATION of
-    // q71's spans: cut every repeated span out of the normalized text.
-    // The gate compares the q72-style order-independent segment digest
-    // (trimDigest); the stitched trimmed_text itself is spec-asserted.
-    "q87_trim_repeated" -> ((s, dir) =>
-      SubstringDedup.trimDigest(T(s, dir, "documents"),
-        "doc_id", "text", minLen = 20)),
-
-    // ---- sketch: count–min point-frequency estimates — per event_type,
-    // one depth×width counter row over user ids; every per-user estimate
-    // is re-checked in-query against the exact count (CMS never
-    // undercounts; overcount bounded by 3·e·N/width — the q64/q40
-    // verified-guarantee discipline, the sketch VALUES are the
-    // approximation, the guarantee is the oracle)
-    "q70_cms_frequency" -> ((s, dir) => {
-      import graft.expressions.CountMinSketchAgg.{cms_sketch, cms_estimate}
-      val ev = T(s, dir, "events").select(col("event_type"),
-        col("user_id").cast("string").as("uid"))
-      val sk = ev.groupBy(col("event_type"))
-        .agg(cms_sketch(col("uid"), depth = 4, width = 2048).as("sk"),
-          count(lit(1)).as("n"))
-      val exact = ev.groupBy(col("event_type"), col("uid"))
-        .agg(count(lit(1)).as("tru"))
-      exact.join(broadcast(sk), "event_type")
-        .withColumn("est", cms_estimate(col("sk"), col("uid"), 4, 2048))
-        .groupBy(col("event_type"))
-        .agg(
-          // deterministic: CMS can NEVER undercount, any false here is
-          // a broken hash or indexing
-          bool_and(col("est") >= col("tru")).as("no_underestimate"),
-          // per-item bounds are only probabilistic (P[excess > 3eN/w]
-          // ≈ (1/3e)^depth per item — expected violators are
-          // non-negligible at 1e4+ distinct items, so a bool_and over
-          // items can fail on a fully correct sketch). The MEAN excess
-          // concentrates instead: E[excess] ≤ N/width per item, so
-          // mean ≤ 3e·N/width fails with probability vanishing in the
-          // item count — a false still means the sketch is broken.
-          (avg((col("est") - col("tru")).cast("double")) <=
-            max(col("n")).cast("double") * lit(3.0 * math.E / 2048.0))
-            .as("avg_excess_bounded"))
-    }),
-
-    // ---- streaming: Misra–Gries heavy hitters as mapGroupsWithState
-    // stream state, gate-checked like its batch sibling q65. The events
-    // table feeds a FILE stream — one parquet file per micro-batch,
-    // maxFilesPerTrigger=1 + Trigger.AvailableNow (the reference's
-    // file-per-cron-tick news feed shape) — so no row ever moves through
-    // the driver; batch membership is the deterministic eid mod 4 (the
-    // MG theorems gated below hold for ANY batch split / merge order,
-    // so the split needs no global sort). Driver-side state is ONLY the
-    // per-group final summary (≤ k counters each); the exact counts it
-    // is audited against are computed distributed and joined.
-    "q77_streaming_heavy_hitters" -> ((s, dir) => withShufflePartitions(s, 8) {
-      import s.implicits._
-      val k = 64
-      val ev = T(s, dir, "events")
-        .select(col("event_type").as("group"),
-          col("user_id").cast("string").as("item"),
-          col("event_id").cast("long").as("eid"))
-      val src = readFeed(s, feedQ77(s, dir), "group STRING, item STRING")
-        .as[graft.streaming.Streams.ItemEvent]
-      val q = graft.streaming.Streams.streamingHeavyHitters(src, k)
-        .writeStream.format("memory").queryName("graft_gate_stream_hh")
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // one summary per group, ≤ k counters each — bounded sketch state
-      val finals = s.table("graft_gate_stream_hh")
-        .as[graft.streaming.Streams.HHSummary].collect()
-        .groupBy(_.group).map { case (_, ss) => ss.maxBy(_.n) }.toSeq
-      val sumN = finals.map(su => (su.group, su.n)).toDF("group", "summ_n")
-      val sumItems = finals
-        .flatMap(su => su.items.toSeq.map { case (it, w) => (su.group, it, w) })
-        .toDF("group", "item", "w")
-      val exact = ev.groupBy(col("group"), col("item"))
-        .agg(count(lit(1)).as("tru"))
-      // full outer: an exact item missing from the summary feeds the
-      // no-missed theorem; a summary item with zero true count (a
-      // broken state machine inventing items) fails the bounds check
-      exact.join(sumItems, Seq("group", "item"), "full_outer")
-        .join(broadcast(sumN), "group")
-        .withColumn("tru", coalesce(col("tru"), lit(0L)))
-        .withColumn("bound", expr(s"summ_n div ${k + 1}"))
-        .groupBy(col("group").as("event_type"))
-        .agg(max(col("summ_n")).as("n"),
-          bool_and(col("tru") <= col("bound") || col("w").isNotNull)
-            .as("no_missed_heavy"),
-          bool_and(col("w").isNull ||
-              (col("w") <= col("tru") && col("w") >= col("tru") - col("bound")))
-            .as("bounds_ok"))
-    }),
-
-    // ---- streaming: stateful gap sessionization (flatMapGroupsWithState,
-    // §2.9) gated against the BATCH sessionization oracle — the q15
-    // lag/cumsum CTE grouped to sessions. The events table feeds a FILE
-    // stream (one parquet file per micro-batch, maxFilesPerTrigger=1 +
-    // AvailableNow — the reference's file-per-cron-tick feed shape):
-    // batches are TIME-RANGE slices (ntile over the global event-time
-    // order — harness determinism; cross-batch order is what the state
-    // machine's correctness rides on), the per-user flush sentinel
-    // 1801 s after the global max ts ships as the LAST file so Append-
-    // mode emission is complete, and the closed sessions land in a
-    // parquet SINK read back as the result — no row of input or output
-    // moves through the driver. Gated columns are the order-independent
-    // session identity (user, start, end, n_events); float sums
-    // accumulate in a different order on the stream path and stay out.
-    "q78_streaming_sessions" -> ((s, dir) => withShufflePartitions(s, 8) {
-      import s.implicits._
-      val ev = T(s, dir, "events")
-        .select(col("user_id").cast("long").as("userId"),
-          tsSec.cast("long").as("tsSec"))
-      // empty events → empty session table (the oracle's GROUP BY over
-      // zero rows), not a zero-file stream
-      if (ev.isEmpty) {
-        Seq.empty[(Long, Long, Long, Long)]
-          .toDF("user_id", "session_start", "session_end", "n_events")
-      } else {
-      val maxTs = ev.agg(min(col("tsSec")).as("mn"),
-        max(col("tsSec")).as("mx"))
-      // Batch membership by VALUE slice of the event-time range —
-      // floor((ts-mn)·4 / span) ∈ [0,3] from two broadcast scalars
-      // (r12: the previous ntile over a global unpartitioned window
-      // sorted the whole table in ONE task; slicing by value keeps
-      // batches time-ordered — b is monotone in ts, so cross-batch
-      // state order is preserved and equal timestamps never split —
-      // with no global sort anywhere in the stager); staged once per
-      // corpus stamp in feedQ78 (r20)
-      val src = readFeed(s, feedQ78(s, dir),
-          "userId LONG, tsSec LONG, value DOUBLE")
-        .as[graft.streaming.Streams.SessionEvent]
-      runStreamGate(s, "q78", graft.streaming.Streams
-          .statefulSessions(src, gapSec = 1800L))(
-        // defensive: sentinel-only sessions never close (they ride in
-        // state when the stream ends) but a start at/after the sentinel
-        // must not leak into the gate if that ever changes
-        _.crossJoin(broadcast(maxTs))
-          .filter(col("start") < col("mx") + 1801L)
-          .select(col("userId").as("user_id"),
-            col("start").as("session_start"), col("end").as("session_end"),
-            col("n").as("n_events")))
-      }
-    }),
-
-    // ---- interval join: attribute purchase events to the click-session
-    // window containing them (same user; day-gap sessions so windows
-    // genuinely span time) — the range predicate becomes an equi-join
-    // on a day bucket (intervals explode to the buckets they overlap; a
-    // point has exactly one bucket, so no dedup), then the exact
-    // containment filter runs codegen'd. No nested-loop join, no
-    // broadcast requirement.
-    "q69_interval_join" -> ((s, dir) => {
-      val ev = T(s, dir, "events").select(col("user_id"), col("event_id"),
-        col("event_type"), tsSec.as("ts_s"))
-      val sessions = Sessionize.sessions(
-          ev.filter(col("event_type") === "click")
-            .select(col("user_id"), col("event_id"), col("ts_s")),
-          "user_id", col("ts_s"), 86400L, col("event_id"))
-        .groupBy(col("user_id"), col("session_seq"))
-        .agg(min(col("ts_s")).as("s_start"), max(col("ts_s")).as("s_end"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), col("ts_s"))
-      IntervalJoin.pointInInterval(purchases, sessions,
-          "ts_s", "s_start", "s_end",
-          keys = Seq("user_id"), bucketWidth = 86400L)
-        .select(col("event_id"), col("user_id"), col("session_seq"),
-          col("ts_s"))
-    }),
-
-    // ---- layout: z-order (Morton) clustering key over
-    // (o_totalprice, o_custkey) — 8-bit quantize per dim against exact
-    // bounds, bit-interleave in codegen; repartitionByRange(z) at write
-    // time gives files tight in BOTH dimensions (layout() is the write
-    // path; the gate checks the z arithmetic itself)
-    "q68_zorder" -> ((s, dir) =>
-      ZOrderLayout.assign(T(s, dir, "orders"), "o_totalprice", "o_custkey",
-          bits = 8)
-        .select(col("o_orderkey"), col("z"))),
-
-    // ---- layout: FILE-SKIPPING effectiveness of the q68 z-order —
-    // per equal-width z-slice "file", the footer surrogate (count +
-    // min/max of both dims) and whether the query box
-    // price ∈ [50k, 100k] × custkey ∈ [100, 500] would scan it: the
-    // planner evidence that the layout prunes on BOTH dimensions
-    "q176_zorder_pruning" -> ((s, dir) =>
-      ZOrderLayout.pruningStats(T(s, dir, "orders"),
-        "o_totalprice", "o_custkey", bits = 8, nFiles = 64,
-        aLo = 50000.0, aHi = 100000.0, bLo = 100.0, bHi = 500.0)),
-
-    // ---- export: deterministic global shuffle into 8 balanced shards —
-    // round-robin over the (md5, key) permutation via the skew-proof
-    // range-sort global position; shard sizes differ by at most 1
-    "q66_shard_export" -> ((s, dir) =>
-      ShardExport.assign(T(s, dir, "documents"), "doc_id", numShards = 8)
-        .select(col("doc_id"), col("shard"), col("position"))),
-
-    // ---- accuracy audit: every approximate operator (q24/q26/q30/q31/
-    // q37/q61/q62 + the MG sketch's bound pair) re-checked against its
-    // exact twin; the oracle is the constant all-true table, so a recall
-    // collapse fails the gate as a hash mismatch instead of hiding
-    // behind a row count
-    // audit-only: exact quadratic twins re-verify every sketch. The
-    // 1000-row bound keeps the audit's cost constant as SF grows (a
-    // no-op at the sf0.01 gate corpora, which are 500 rows) — the gate
-    // should measure operators, not the twins' O(n²) growth. Each check
-    // compares exact vs approximate over the SAME slice, so recall
-    // stays a paired comparison and the guarantee assertions hold on
-    // any slice size.
-    "q40_accuracy_audit" -> ((s, dir) =>
-      AccuracyAudit(s, dir, maxAuditRows = 1000)),
-
-    // ---- F4/F5/F10 feature math + scaled-integer codec
-    "q28_features_codec" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem")
-      li.select(
-        col("l_orderkey"), col("l_linenumber"),
-        Cleanse.volEncode(col("l_discount")).as("disc_enc"),
-        Cleanse.volDecode(Cleanse.volEncode(col("l_discount"))).as("disc_dec"),
-        Cleanse.relDiff(col("l_extendedprice") * (lit(1.0) + col("l_tax")),
-          col("l_extendedprice")).as("rel_tax"),
-        Cleanse.macdHistogram(col("l_discount"), col("l_tax")).as("macd_h"))
-    }))
-
-  // ===========================================================================
-  // DuckDB oracle (ANSI-ish SQL over the same parquet tables). Omitted for
-  // q24/q26 (approximate candidate generation — driver rows-only check) and
-  // none else.
-  // ===========================================================================
-
-  /** Shared SQL fragments. */
-  private val wsNorm = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-  private val wordsSql = s"string_split($wsNorm, ' ')"
-
-  /** The q150 lag-vs-previous-raw-event throttle rule — shared by the
-    * batch gate (q150) and its streaming state-machine twin (q243),
-    * whose time-ordered feed reproduces the batch output exactly. */
-  private val throttleOracleSql: String =
-    """WITH e AS (SELECT event_id, user_id, event_type,
-      |    epoch_ns(ts) AS tsn FROM events),
-      |l AS (SELECT *, lag(tsn) OVER (PARTITION BY user_id, event_type
-      |    ORDER BY tsn, event_id) AS prev FROM e)
-      |SELECT event_id, user_id, event_type, tsn AS ts FROM l
-      |WHERE prev IS NULL
-      |   OR tsn - prev > CAST(60 AS BIGINT) * 1000000000""".stripMargin
-
-  /** Shared q30/q62 gate shape: the exact near-dup pair surface plus
-    * in-engine recall/precision guarantee booleans, closed over any
-    * approximate pair operator. Recall gates
-    * `n_found·recallDen >= n_exact·recallNum` (integer
-    * cross-multiplication, i.e. recall >= recallNum/recallDen);
-    * precision gates `approx ⊆ exact` exactly. A SENTINEL row
-    * (id_a = id_b = −1, null cosine) always carries the booleans, so
-    * the precision gate cannot pass vacuously on a corpus whose exact
-    * surface is empty — without it, invented approximate pairs over an
-    * empty exact set would emit zero rows and hash-match the empty
-    * oracle. Both kernels persist: each is referenced by several
-    * aggregate branches, and the exact side is the O(n²·d) cost
-    * center. */
-  private def neardupGuaranteeGate(s: SparkSession, dir: String,
-      approx: DataFrame => DataFrame,
-      recallNum: Long, recallDen: Long): DataFrame = {
-    val emb = T(s, dir, "embeddings")
-    val exact = graft.Caches.register(
-      SimilaritySearch.embeddingNearDupExact(emb,
-        "vec_id", "embedding", threshold = 0.45).persist())
-    val ap = graft.Caches.register(
-      approx(emb).select(col("id_a"), col("id_b")).persist())
-    val stats = exact.join(ap, Seq("id_a", "id_b"), "left_semi")
-      .agg(count(lit(1)).as("n_found"))
-      .crossJoin(exact.agg(count(lit(1)).as("n_exact")))
-      .crossJoin(ap.join(exact.select(col("id_a"), col("id_b")),
-          Seq("id_a", "id_b"), "left_anti")
-        .agg(count(lit(1)).as("n_invented")))
-    val recallOk =
-      (col("n_found") * recallDen >= col("n_exact") * recallNum)
-        .as("recall_ok")
-    val precisionOk = (col("n_invented") === 0L).as("precision_ok")
-    exact.crossJoin(broadcast(stats))
-      .select(col("id_a"), col("id_b"), col("cosine"), recallOk, precisionOk)
-      .unionByName(stats.select(lit(-1L).as("id_a"), lit(-1L).as("id_b"),
-        lit(null).cast("double").as("cosine"), recallOk, precisionOk))
-  }
-
-  /** Per-doc token counts joined to source — the shared input of the
-    * q80/q88 allocation queries (ONE definition; a tokenizer tweak
-    * must not diverge the two). */
-  private def sourceTokens(s: SparkSession, dir: String): DataFrame =
-    TextAnalysis.tokenCounts(T(s, dir, "documents"), "doc_id", "text")
-      .join(T(s, dir, "documents").select(col("doc_id"), col("source")),
-        "doc_id")
-
-  /** The oracle-side mirror of [[sourceTokens]] as a parenthesized
-    * subquery fragment. */
-  private val sourceTokensSql: String =
-    "(SELECT source, CAST(len(regexp_extract_all(lower(text), " +
-      "'[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT) AS n_tokens " +
-      "FROM documents) src__"
-
-  /** The q18 quality rational's SQL pieces — ONE copy shared by the
-    * q18/q59/q84 oracles (the Scala side shares
-    * `TextAnalysis.qualityRational()` the same way; a formula tweak
-    * that edits one side but not the other desynchronizes three
-    * gates at once). */
-  private val qNWords = s"CAST(len($wordsSql) AS BIGINT)"
-  private val qStopHits =
-    s"CAST(len(list_filter($wordsSql, w -> w = 'the' OR w = 'a' " +
-      "OR w = 'of' OR w = 'to' OR w = 'and')) AS BIGINT)"
-  private val qPunct =
-    "CAST(length(text) - length(regexp_replace(text, '[^a-z0-9\\s]', '', 'g')) AS BIGINT)"
-  private val qLen = "CAST(length(text) AS BIGINT)"
-  private val qScoreNum = s"least($qNWords, 100) * ($qLen - $qPunct) " +
-    s"* ($qNWords + least($qStopHits * 5, $qNWords))"
-  private val qScoreDen = s"200 * $qLen * $qNWords"
-
-  /** The q71 repeated-span pipeline's CTEs (normalize → 20-char gram
-    * hashes → corpus-duplicated grams → per-doc span merge), shared by
-    * the q71 coverage and q87 trim oracles. Exposes `t(doc_id, tn)`
-    * and `spans(doc_id, sp, a, b)`. */
-  private val repeatedSpanCtes: String =
-    """t AS (SELECT doc_id,
-      |    trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS tn
-      |  FROM documents),
-      |g AS (SELECT doc_id, CAST(i AS BIGINT) AS pos,
-      |    substring(md5(substr(tn, CAST(i AS INTEGER), 20)), 1, 16) AS h
-      |  FROM t, UNNEST(range(1, length(tn) - 18)) AS u(i)
-      |  WHERE length(tn) >= 20),
-      |dup AS (SELECT h FROM g GROUP BY h HAVING count(*) >= 2),
-      |f AS (SELECT doc_id, pos FROM g JOIN dup USING (h)),
-      |s AS (SELECT doc_id, pos,
-      |    CASE WHEN pos - lag(pos) OVER w <= 20 THEN 0 ELSE 1 END AS nw
-      |  FROM f WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-      |s2 AS (SELECT doc_id, pos, sum(nw) OVER (PARTITION BY doc_id
-      |    ORDER BY pos ROWS UNBOUNDED PRECEDING) AS sp FROM s),
-      |spans AS (SELECT doc_id, sp, min(pos) AS a, max(pos) + 19 AS b
-      |  FROM s2 GROUP BY 1, 2)""".stripMargin
-
-  /** Oracle-side md5-prefix64 reconstruction by pure hex-nibble
-    * arithmetic (version-proof — no hex-cast features): value of the
-    * hex digit at 1-based position `i` of `col`, and the 32-bit value
-    * of 8 hex digits starting at `from` (fits BIGINT; a full 64-bit
-    * sum would overflow, so consumers combine two halves in HUGEINT
-    * or XOR the halves separately — q37/q72). */
-  private def nibSql(col: String, i: Int): String =
-    s"(strpos('0123456789abcdef', substring($col, $i, 1)) - 1)"
-  private def hex32Sql(col: String, from: Int): String =
-    (from until from + 8)
-      .map(i => nibSql(col, i) + s" * ${1L << (4 * (from + 7 - i))}")
-      .mkString(" + ")
-
-  /** The q249/q250 power-iteration CTE chain: e6 units, signed-exact
-    * mean centering, all-ones e6 start, and `iterations` unrolled
-    * v ← Xᵀ(Xv) steps with max-|w| e6 renormalization — HUGEINT end
-    * to end, finished by the caller's SELECT over x / v{iterations}. */
-  private def topPcSql(iterations: Int, select: String): String = {
-    import graft.functions.ExactRound.ratioScaledSignedSql
-    def iter(t: Int) =
-      s"""d$t AS (SELECT x.vec_id,
-         |    sum(CAST(x.x AS HUGEINT) * v.v) AS dot
-         |  FROM x JOIN v${t - 1} v USING (dim) GROUP BY 1),
-         |w$t AS (SELECT x.dim,
-         |    sum(CAST(x.x AS HUGEINT) * d.dot) AS w
-         |  FROM x JOIN d$t d USING (vec_id) GROUP BY 1),
-         |n$t AS (SELECT max(abs(w)) AS nrm FROM w$t),
-         |v$t AS (SELECT dim,
-         |    ${ratioScaledSignedSql("w", "nrm", 6)} AS v
-         |  FROM w$t, n$t)""".stripMargin
-    s"""WITH u AS (SELECT vec_id,
-       |    CAST(generate_subscripts(embedding, 1) AS BIGINT) AS dim,
-       |    CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000, 0)
-       |      AS BIGINT) AS u
-       |  FROM embeddings),
-       |m AS (SELECT dim,
-       |    ${ratioScaledSignedSql("sum(CAST(u AS HUGEINT))",
-            "count(*)", 0)} AS m
-       |  FROM u GROUP BY 1),
-       |x AS (SELECT u.vec_id, u.dim, u.u - m.m AS x
-       |  FROM u JOIN m USING (dim)),
-       |v0 AS (SELECT dim, CAST(1000000 AS HUGEINT) AS v FROM m),
-       |${(1 to iterations).map(iter).mkString(",\n")}
-       |$select""".stripMargin
-  }
-
-  /** Exact ANN top-10 oracle (q25's query), parameterized with extra
-    * constant columns so the graduated approximate-ANN gates (q26/q31)
-    * reuse the same exact surface plus their guarantee booleans. */
-  private def annTop10Sql(extra: String = ""): String =
-    s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-       |qx AS (SELECT generate_subscripts(qv, 1) AS i,
-       |    CAST(unnest(qv) AS DOUBLE) AS y FROM q),
-       |ex AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-       |    CAST(unnest(embedding) AS DOUBLE) AS x
-       |  FROM embeddings WHERE vec_id <> 0),
-       |dots AS (SELECT vec_id, sum(x * y) AS dot, sum(x * x) AS na
-       |  FROM ex JOIN qx USING (i) GROUP BY 1),
-       |nq AS (SELECT sum(y * y) AS nb FROM qx)
-       |SELECT vec_id, round(dot / (sqrt(na) * sqrt(nb)), 4) AS cosine$extra
-       |FROM dots, nq
-       |ORDER BY round(dot / (sqrt(na) * sqrt(nb)), 6) DESC, vec_id
-       |LIMIT 10""".stripMargin
-
-  /** Exact embedding near-dup pair oracle (q29's query), parameterized
-    * like [[annTop10Sql]] for the graduated q30/q62 gates. */
-  private def embPairsSql(extra: String = ""): String =
-    s"""WITH ex AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-       |    CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-       |n AS (SELECT vec_id, sum(x * x) AS nn FROM ex GROUP BY 1),
-       |d AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, sum(a.x * b.x) AS dot
-       |  FROM ex a JOIN ex b ON a.i = b.i AND a.vec_id < b.vec_id
-       |  GROUP BY 1, 2)
-       |SELECT id_a, id_b,
-       |  round(dot / (sqrt(na.nn) * sqrt(nb.nn)), 4) AS cosine$extra
-       |FROM d JOIN n na ON na.vec_id = id_a JOIN n nb ON nb.vec_id = id_b
-       |WHERE dot / (sqrt(na.nn) * sqrt(nb.nn)) >= 0.45""".stripMargin
-
-  /** Exact decontamination report oracle (q51's query), parameterized
-    * like [[annTop10Sql]] for the graduated q61 gate. */
-  private def decontamReportSql(extra: String = ""): String = {
-    // ratio shared by `overlap` (rounded) and `contaminated`
-    // (unrounded threshold) — small-int division, bit-identical
-    // across engines
-    val ratio = """CASE WHEN coalesce(n_grams, 0) = 0 THEN 0.0
-                  | ELSE CAST(coalesce(n_hit, 0) AS DOUBLE) / coalesce(n_grams, 0) END"""
-      .stripMargin.replace("\n", "")
-    s"""WITH t AS (SELECT doc_id, $wordsSql AS ws FROM documents),
-       |bench AS (SELECT doc_id FROM documents
-       |  WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '1a'),
-       |bg AS (SELECT DISTINCT unnest($gram5Sql) AS shingle
-       |  FROM t JOIN bench USING (doc_id) WHERE len(ws) >= 5),
-       |cg AS (SELECT doc_id, unnest($gram5Sql) AS shingle
-       |  FROM t ANTI JOIN bench USING (doc_id) WHERE len(ws) >= 5),
-       |sz AS (SELECT doc_id, count(*) AS n_grams FROM cg GROUP BY 1),
-       |hit AS (SELECT cg.doc_id, count(*) AS n_hit
-       |  FROM cg JOIN bg USING (shingle) GROUP BY 1),
-       |corpus AS (SELECT doc_id FROM documents ANTI JOIN bench USING (doc_id))
-       |SELECT corpus.doc_id,
-       |  coalesce(n_grams, 0) AS n_grams,
-       |  coalesce(n_hit, 0) AS n_hit,
-       |  ${graft.functions.ExactRound.ratioSql("coalesce(n_hit, 0)", "coalesce(n_grams, 0)")} AS overlap,
-       |  ($ratio) >= 0.3 AS contaminated$extra
-       |FROM corpus LEFT JOIN sz USING (doc_id) LEFT JOIN hit USING (doc_id)""".stripMargin
-  }
-
-  /** The q123 SCD2 build as a reusable CTE chain ending in `hist`
-    * (user_id, version, value, valid_from_ns, valid_to_ns, n_events) —
-    * shared by the q123 history gate and the q152 as-of snapshot. */
-  private val scd2Ctes: String =
-    """e AS (SELECT user_id, epoch_ns(ts) AS ts_ns, event_type,
-      |    event_id FROM events),
-      |r AS (SELECT *,
-      |    CASE WHEN row_number() OVER w = 1
-      |           OR event_type IS DISTINCT FROM lag(event_type) OVER w
-      |         THEN 1 ELSE 0 END AS chg
-      |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_ns, event_id)),
-      |v AS (SELECT *, CAST(sum(chg) OVER (PARTITION BY user_id
-      |    ORDER BY ts_ns, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT)
-      |      AS version FROM r),
-      |g AS (SELECT user_id, version, max(event_type) AS value,
-      |    min(ts_ns) AS valid_from_ns, count(*) AS n_events
-      |  FROM v GROUP BY 1, 2),
-      |hist AS (SELECT user_id, version, value, valid_from_ns,
-      |    lead(valid_from_ns) OVER (PARTITION BY user_id
-      |      ORDER BY version) AS valid_to_ns, n_events
-      |  FROM g)""".stripMargin
-
-  /** Exact embedding near-dup pairs (q29's pair math minus the cosine
-    * output) plus the undirected edge list `e` — shared by the q47/q48
-    * clustering oracles. */
-  private val embPairCtes: String =
-    """ex AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-      |    CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-      |nm AS (SELECT vec_id, sum(x * x) AS nn FROM ex GROUP BY 1),
-      |d AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, sum(a.x * b.x) AS dot
-      |  FROM ex a JOIN ex b ON a.i = b.i AND a.vec_id < b.vec_id
-      |  GROUP BY 1, 2),
-      |p AS (SELECT id_a, id_b FROM d
-      |  JOIN nm na ON na.vec_id = id_a JOIN nm nb ON nb.vec_id = id_b
-      |  WHERE dot / (sqrt(na.nn) * sqrt(nb.nn)) >= 0.45),
-      |e AS (SELECT id_a AS a, id_b AS b FROM p
-      |  UNION SELECT id_b, id_a FROM p)""".stripMargin
-
-  // ==== mirrored banded-hyperplane LSH (the graph-feeding config) ======
-  // One fixed (baseBits, bands, bitsPerBand) configuration for every
-  // query that CONSUMES a near-dup graph (q117 label propagation, q161
-  // cluster-weighted sampling, ...). Unlike q30's guarantee gate —
-  // which measures LSH recall AGAINST the exact kernel and so must run
-  // the O(n²) kernel as its audit — these gates mirror the LSH
-  // candidate generation ITSELF in the oracle: the ±1 plane signs and
-  // per-band bit selections are deterministic engine data
-  // (HyperplaneBandKeys.planeMasks / bandSelections), inlined below as
-  // literals, so DuckDB rebuilds the SAME buckets, the SAME candidate
-  // pairs, and the SAME cosine-verified edge set — the LSH path is
-  // hash-gated cross-engine with NO quadratic kernel anywhere in the
-  // lineage. r = 12 / b = 96 is the dense-graph trade for the
-  // testdata's sharp 0.3-0.45 thresholds (2^12 buckets per band keeps
-  // random collisions at the birthday floor b/2^(r+1) ≈ 1.2% per
-  // pair); at corpus scale r grows with log(n) — the operator's knob,
-  // not a code change.
-  private val lshDim = 64
-  private val lshBaseBits = 512
-  private val lshBands = 96
-  private val lshBitsPerBand = 12
-
-  private lazy val lshPlaneValues: String =
-    graft.expressions.HyperplaneBandKeys.planeMasks(lshBaseBits, lshDim)
-      .zipWithIndex.map { case (m, j) => s"($j,$m)" }.mkString(",")
-
-  private lazy val lshSelValues: String =
-    graft.expressions.HyperplaneBandKeys
-      .bandSelections(lshBands, lshBitsPerBand, lshBaseBits)
-      .zipWithIndex.flatMap { case (bits, band) =>
-        bits.zipWithIndex.map { case (bitJ, slot) => s"($band,$slot,$bitJ)" }
-      }.mkString(",")
-
-  /** Unrolled k-truss peel CTEs over the `p(id_a, id_b)` pair list a
-    * preceding CTE chain provides: te0 = canonical edges, then per
-    * round the directed double cover, wedge closure (support =
-    * common-neighbor count — each triangle closes exactly one wedge
-    * per edge), and the ≥ k−2 filter. Ends at `te<rounds>`(u, v,
-    * support). Peeling is monotone, so rounds past the peel depth are
-    * no-ops — mirroring GraphRank.kTruss's fixed-rounds contract.
-    *
-    * Wedges are enumerated by sorting each node's neighbor list and
-    * expanding ordered index pairs (x from positions, y from the list
-    * suffix) — NOT via a `b.u = a.u AND a.v < b.v` self-join: DuckDB
-    * 1.0.0 plans that mixed equality+inequality ON clause as a
-    * cross-graph IEJoin (the r17 gate blocker — 367 s for this query,
-    * ~40 min for q327's triple form) instead of
-    * hash-join-on-u-then-filter. The list expansion keeps equality as
-    * the only join predicate anywhere in the chain.
-    *
-    * Every per-round CTE is `AS MATERIALIZED`: DuckDB 1.0.0 inlines a
-    * CTE at each reference, and te<r> is referenced three times per
-    * round (both UNION ALL branches of the double cover + the closure
-    * join) — un-materialized, the chain re-evaluates upstream rounds
-    * exponentially (a 5-round unroll ran >10 min; materialized it runs
-    * ~2 s). */
-  /** Rewrite every CTE definition in `sql` to `AS MATERIALIZED` —
-    * DuckDB 1.0.0 inlines a CTE body at each reference, so the
-    * unrolled fixed-point ladders (HITS, k-core, BFS, link
-    * prediction, two-hop) re-evaluate all upstream rounds once per
-    * reference and the gate cost grows exponentially with ladder
-    * depth: q242's oracle measured 23 s un-materialized vs 0.1 s
-    * materialized at sf0.01 (r18; the same inlining made a 5-round
-    * k-truss unroll run >10 min). Only safe for oracles with no
-    * RECURSIVE CTEs and no WINDOW clauses — neither form accepts
-    * MATERIALIZED. Outside string literals, `name AS (` is unambiguous
-    * in SQL: column aliases are `expr AS name`, derived tables are
-    * `(...) AS name(cols)`, so the pattern only ever hits CTE
-    * definitions — but a string LITERAL containing the pattern would
-    * be silently corrupted by a blind replaceAll (r18 ADVICE), so the
-    * rewrite is applied per quote-delimited segment and literals pass
-    * through untouched ('' escaping splits into empty inside-segments,
-    * which the alternation handles). */
-  private def materializedCtes(sql: String): String = {
-    require(!sql.contains("RECURSIVE") && !sql.contains("WINDOW "),
-      "materializedCtes cannot wrap RECURSIVE CTEs or WINDOW clauses")
-    // split on ': even-index segments are outside string literals
-    sql.split("'", -1).zipWithIndex.map { case (seg, i) =>
-      if (i % 2 == 0)
-        seg.replaceAll("""([A-Za-z_][A-Za-z0-9_]*) AS \(""",
-          "$1 AS MATERIALIZED (")
-      else seg
-    }.mkString("'")
-  }
-
-  private def kTrussCtes(k: Int, rounds: Int): String = {
-    val sb = new StringBuilder(
-      "te0 AS MATERIALIZED (SELECT id_a AS u, id_b AS v FROM p GROUP BY 1, 2)")
-    for (r <- 0 until rounds) {
-      sb.append(s""",
-         |tund$r AS MATERIALIZED (SELECT u, v FROM te$r
-         |  UNION ALL SELECT v, u FROM te$r),
-         |adj$r AS MATERIALIZED (SELECT u, list(v ORDER BY v) AS vs
-         |  FROM tund$r GROUP BY u),
-         |wp$r AS MATERIALIZED (SELECT vs,
-         |    UNNEST(generate_series(1, len(vs) - 1)) AS x FROM adj$r),
-         |w$r AS MATERIALIZED (SELECT vs[x] AS x, UNNEST(vs[x + 1:]) AS y
-         |  FROM wp$r),
-         |te${r + 1} AS MATERIALIZED (
-         |  SELECT w.x AS u, w.y AS v, count(*) AS support
-         |  FROM w$r w
-         |  JOIN te$r t ON t.u = w.x AND t.v = w.y
-         |  GROUP BY 1, 2
-         |  HAVING count(*) >= ${k - 2})""".stripMargin)
+      s.catalog.clearCache()
+      (name, (System.nanoTime() - t0) / 1e9)
     }
-    sb.toString
-  }
-
-  /** CTE chain ending in near-dup pairs `p(id_a, id_b)` and the
-    * undirected edge list `e(a, b)` — the mirrored-LSH twin of
-    * [[embPairCtes]]: bucket keys from the inlined plane masks + band
-    * selections, candidate pairs from bucket co-membership, then the
-    * exact cosine verify ON CANDIDATES ONLY (never all pairs). The
-    * `(mask >> (i-1)) & 1` unpack reads plane sign j,i exactly as the
-    * engine's boolean matrix; `>= 0` on the signed projection matches
-    * HyperplaneBandKeys bit for bit. */
-  /** The signature/bucket prefix shared by [[lshPairCtes]] (self-join
-    * form) and [[lshProbeCtes]] (batch-probe form). */
-  private def lshKeyCtes: String =
-    s"""lsh_planes AS (SELECT j, CAST(mask AS BIGINT) AS mask
-       |  FROM (VALUES $lshPlaneValues) t(j, mask)),
-       |lsh_sel AS (SELECT band, slot, bitj
-       |  FROM (VALUES $lshSelValues) t(band, slot, bitj)),
-       |ex AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-       |    CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-       |nm AS (SELECT vec_id, sum(x * x) AS nn FROM ex GROUP BY 1),
-       |lsh_bits AS (SELECT e.vec_id, p.j,
-       |    sum(CASE WHEN ((p.mask >> (e.i - 1)) & 1) = 1
-       |      THEN e.x ELSE -e.x END) >= 0 AS sbit
-       |  FROM ex e JOIN lsh_planes p ON e.i <= $lshDim GROUP BY 1, 2),
-       |lsh_keys AS (SELECT b.vec_id, s.band,
-       |    sum(CASE WHEN b.sbit THEN CAST(1 AS BIGINT) << s.slot
-       |      ELSE 0 END) AS bkey
-       |  FROM lsh_bits b JOIN lsh_sel s ON s.bitj = b.j GROUP BY 1, 2)"""
-      .stripMargin
-
-  /** Cosine verify of `lsh_cand` -> pairs `p` + undirected edges `e`. */
-  private def lshVerifyCtes(threshold: String): String =
-    s"""lsh_dot AS (SELECT c.id_a, c.id_b, sum(ea.x * eb.x) AS dot
-       |  FROM lsh_cand c JOIN ex ea ON ea.vec_id = c.id_a
-       |    JOIN ex eb ON eb.vec_id = c.id_b AND eb.i = ea.i
-       |  GROUP BY 1, 2),
-       |p AS (SELECT id_a, id_b,
-       |    round(dot / (sqrt(na.nn) * sqrt(nb.nn)), 4) AS cosine
-       |  FROM lsh_dot
-       |  JOIN nm na ON na.vec_id = id_a JOIN nm nb ON nb.vec_id = id_b
-       |  WHERE dot / (sqrt(na.nn) * sqrt(nb.nn)) >= $threshold),
-       |e AS (SELECT id_a AS a, id_b AS b FROM p
-       |  UNION SELECT id_b, id_a FROM p)""".stripMargin
-
-  /** The q216/q225 shared oracle: variant-PNG dHash near-dup — gray
-    * levels from the mirrored generator at the resampled indices, the
-    * dHash bit table, band candidates (optionally bucket-capped, the
-    * q225 skew guard), exact-hamming verify. */
-  private def dhashNearDupOracleSql(bucketCap: Option[Long]): String = {
-    val candSrc = bucketCap match {
-      case None => "bands"
-      case Some(cap) =>
-        s"""(SELECT b.* FROM bands b JOIN (SELECT band, bkey
-           |    FROM bands GROUP BY band, bkey
-           |    HAVING count(*) <= $cap) ok
-           |  USING (band, bkey))""".stripMargin
-    }
-    s"""WITH dim AS (SELECT doc_id, doc_id // 4 AS base, doc_id % 4 AS v,
-       |    4 + (doc_id // 4) % 13 AS w, 4 + (doc_id // 4) % 11 AS h
-       |  FROM documents),
-       |gray AS (SELECT d.doc_id, x.i AS x, y.i AS y,
-       |    sum(CASE WHEN ((x.i * d.w) // 9) = 0
-       |        AND ((y.i * d.h) // 8) = 0
-       |      THEN (((d.base % 100003) * 31 + c.i * 97) % 256
-       |        + d.v * 40) % 256
-       |      ELSE ((d.base % 100003) * 31 + ((x.i * d.w) // 9) * 7
-       |        + ((y.i * d.h) // 8) * 13 + c.i * 97) % 256 END) AS g
-       |  FROM dim d,
-       |    (SELECT unnest(range(0, 9)) AS i) x,
-       |    (SELECT unnest(range(0, 8)) AS i) y,
-       |    (SELECT unnest(range(0, 3)) AS i) c
-       |  GROUP BY 1, 2, 3),
-       |bits AS (SELECT a.doc_id, a.y * 8 + a.x AS idx,
-       |    CASE WHEN a.g > b.g THEN 1 ELSE 0 END AS bit
-       |  FROM gray a JOIN gray b ON b.doc_id = a.doc_id AND b.y = a.y
-       |    AND b.x = a.x + 1
-       |  WHERE a.x < 8),
-       |bands AS (SELECT doc_id, idx // 16 AS band,
-       |    sum(bit << (idx % 16)) AS bkey
-       |  FROM bits GROUP BY 1, 2),
-       |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM $candSrc a JOIN $candSrc b ON a.band = b.band
-       |    AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
-       |ham AS (SELECT c.doc_a, c.doc_b,
-       |    sum(CASE WHEN ba.bit <> bb.bit THEN 1 ELSE 0 END) AS hamming
-       |  FROM cand c
-       |  JOIN bits ba ON ba.doc_id = c.doc_a
-       |  JOIN bits bb ON bb.doc_id = c.doc_b AND bb.idx = ba.idx
-       |  GROUP BY 1, 2)
-       |SELECT doc_a, doc_b, CAST(hamming AS BIGINT) AS hamming
-       |FROM ham WHERE hamming <= 3""".stripMargin
-  }
-
-  /** The q219/q224 shared oracle: the prefix-form CUSUM over daily
-    * event counts (ceil-mean allowance, hMult = 5) — the batch
-    * operator and the streaming state machine must both equal it. */
-  /** q190's EWMA daily-series oracle — shared verbatim by its
-    * streaming twin q264 (the stream-equals-batch contract). */
-  private val ewmaSeriesOracleSql: String = {
-    val arr = graft.operators.EventAnalytics.decayPowersE6(4, 5, 30)
-      .mkString("[", ", ", "]")
-    s"""WITH d AS (SELECT event_type,
-       |    epoch_ns(ts) // 86400000000000 AS day,
-       |    count(*) AS n_events
-       |  FROM events GROUP BY 1, 2),
-       |w AS (SELECT generate_subscripts(a, 1) - 1 AS off, unnest(a) AS p
-       |  FROM (SELECT $arr AS a)),
-       |c AS (SELECT d.event_type, d.day + w.off AS t_day,
-       |    CAST(sum(d.n_events * w.p) AS BIGINT) AS ewma_e6
-       |  FROM d CROSS JOIN w
-       |  GROUP BY 1, 2)
-       |SELECT d.event_type, d.day, d.n_events, c.ewma_e6
-       |FROM d JOIN c ON c.event_type = d.event_type
-       |  AND c.t_day = d.day""".stripMargin
-  }
-
-  private val cusumDailyOracleSql: String =
-    """WITH daily AS (SELECT event_type,
-      |    epoch_ns(ts) // 86400000000000 AS day,
-      |    count(*) AS n_events
-      |  FROM events GROUP BY 1, 2),
-      |per AS (SELECT event_type,
-      |    (sum(n_events) + count(*) - 1) // count(*) AS k
-      |  FROM daily GROUP BY 1),
-      |c AS (SELECT d.event_type, d.day, d.n_events, p.k,
-      |    sum(d.n_events - p.k) OVER (PARTITION BY d.event_type
-      |      ORDER BY d.day ROWS UNBOUNDED PRECEDING) AS cum
-      |  FROM daily d JOIN per p USING (event_type)),
-      |m AS (SELECT *, min(cum) OVER (PARTITION BY event_type
-      |    ORDER BY day ROWS UNBOUNDED PRECEDING) AS mn
-      |  FROM c)
-      |SELECT event_type, day, n_events, CAST(k AS BIGINT) AS k,
-      |  CAST(cum - least(0, mn) AS BIGINT) AS cusum,
-      |  (cum - least(0, mn)) > k * 5 AS alarm
-      |FROM m""".stripMargin
-
-  private def lshPairCtes(threshold: String): String =
-    s"""$lshKeyCtes,
-       |lsh_cand AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
-       |  FROM lsh_keys a JOIN lsh_keys b ON b.band = a.band
-       |    AND b.bkey = a.bkey AND b.vec_id > a.vec_id
-       |  GROUP BY 1, 2),
-       |${lshVerifyCtes(threshold)}""".stripMargin
-
-  /** Batch-probe variant: candidate pairs need >= 1 endpoint
-    * satisfying `batchPred` (over `a.vec_id`) — mirrors
-    * [[graft.operators.SimilaritySearch.incrementalEmbeddingNearDup]]'s
-    * batch-keys × all-keys bucket join. */
-  private def lshProbeCtes(threshold: String, batchPred: String): String =
-    s"""$lshKeyCtes,
-       |lsh_cand AS (SELECT least(a.vec_id, b.vec_id) AS id_a,
-       |    greatest(a.vec_id, b.vec_id) AS id_b
-       |  FROM lsh_keys a JOIN lsh_keys b ON b.band = a.band
-       |    AND b.bkey = a.bkey AND b.vec_id <> a.vec_id
-       |  WHERE $batchPred
-       |  GROUP BY 1, 2),
-       |${lshVerifyCtes(threshold)}""".stripMargin
-
-  /** The q133/q186 nearest-class-mean chain: e6 integer units, exact
-    * per-label prototypes, squared-L2 argmin (dist asc, label asc),
-    * ending in the confusion tally `conf(true_label, assigned_label,
-    * n_vecs)`. */
-  private lazy val protoConfusionCtes: String =
-    s"""u AS (SELECT vec_id, CAST(label AS BIGINT) AS true_label,
-       |    CAST(generate_subscripts(embedding, 1) AS BIGINT) AS dim,
-       |    CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000, 0)
-       |      AS BIGINT) AS u
-       |  FROM embeddings),
-       |s AS (SELECT true_label AS label, dim, count(*) AS n,
-       |    sum(CAST(u AS HUGEINT)) AS s FROM u GROUP BY 1, 2),
-       |pp AS (SELECT label AS cand_label, dim,
-       |    ${graft.functions.ExactRound.ratioScaledSignedSql(
-            "s", "n", 0)} AS mean_e6 FROM s),
-       |d AS (SELECT u.vec_id, u.true_label, pp.cand_label,
-       |    sum(CAST(u.u - pp.mean_e6 AS HUGEINT) *
-       |        CAST(u.u - pp.mean_e6 AS HUGEINT)) AS dist2
-       |  FROM u JOIN pp USING (dim)
-       |  GROUP BY 1, 2, 3),
-       |a AS (SELECT *, row_number() OVER (PARTITION BY vec_id
-       |    ORDER BY dist2 ASC, cand_label ASC) AS rn FROM d),
-       |conf AS (SELECT true_label, cand_label AS assigned_label,
-       |    count(*) AS n_vecs
-       |  FROM a WHERE rn = 1 GROUP BY 1, 2)""".stripMargin
-
-  /** Shared q177/q181 chain: sides, per-batch maxima, the lagged
-    * watermark table `w` (W2), candidate matches `m`, and the
-    * emitted-match set `mm` (input-admitted at each side's own batch,
-    * state-alive at the match batch k*). */
-  private lazy val streamJoinCtes: String =
-    """ev AS (SELECT user_id AS uid,
-      |    epoch_ns(ts) // 1000000000 AS ts, event_id AS eid
-      |  FROM events),
-      |rng AS (SELECT min(ts) AS mn, max(ts) AS mx FROM ev
-      |  WHERE eid % 10 <> 0 AND eid % 10 <> 5),
-      |l AS (SELECT uid, ts,
-      |    CASE WHEN eid % 10 = 0 THEN 3
-      |         ELSE (ts - mn) * 3 // (mx - mn + 1) END AS b
-      |  FROM ev, rng WHERE eid % 2 = 0),
-      |r AS (SELECT uid, ts,
-      |    CASE WHEN eid % 10 = 5 THEN 3
-      |         ELSE (ts - mn) * 3 // (mx - mn + 1) END AS b
-      |  FROM ev, rng WHERE eid % 2 = 1),
-      |pl AS (SELECT b, max(ts) AS pmax FROM l GROUP BY 1),
-      |pr AS (SELECT b, max(ts) AS pmax FROM r GROUP BY 1),
-      |w AS (SELECT k, CASE WHEN k >= 2 THEN
-      |      least((SELECT max(pmax) FROM pl WHERE b <= k - 2),
-      |            (SELECT max(pmax) FROM pr WHERE b <= k - 2)) - 1800
-      |    END AS wv
-      |  FROM (SELECT unnest([0, 1, 2, 3]) AS k)),
-      |m AS (SELECT l.uid, l.ts AS l_ts, r.ts AS r_ts,
-      |    l.b AS ka, r.b AS kb, greatest(l.b, r.b) AS ks
-      |  FROM l JOIN r ON r.uid = l.uid
-      |    AND r.ts >= l.ts AND r.ts < l.ts + 3600),
-      |mm AS (SELECT m.uid, m.l_ts, m.r_ts FROM m
-      |  LEFT JOIN w ws ON ws.k = m.ks
-      |  LEFT JOIN w wa ON wa.k = m.ka
-      |  LEFT JOIN w wb ON wb.k = m.kb
-      |  WHERE (ws.wv IS NULL
-      |      OR (m.l_ts >= ws.wv - 3600 AND m.r_ts >= ws.wv))
-      |    AND (wa.wv IS NULL OR m.l_ts >= wa.wv)
-      |    AND (wb.wv IS NULL OR m.r_ts >= wb.wv))""".stripMargin
-
-  /** Boundary-ANCHORED merge application (round-13; mirrors
-    * BpeTrain.applyMerge verbatim): plain `replace(syms, 'l r', lr)`
-    * matches across symbol boundaries when l is a suffix of another
-    * symbol ("ca b" contains the substring "a b"). RE2 (DuckDB's
-    * regex engine) has no lookarounds, so both engines anchor with
-    * string ops: double the inter-symbol spaces, pad, replace the
-    * doubled-gap form, collapse, trim. `e` is the syms expression,
-    * `pat`/`rep` SQL expressions for " l  r " / " lr ". */
-  private def bpeApplySql(e: String, pat: String, rep: String): String =
-    s"trim(replace(replace(' ' || replace($e, ' ', '  ') || ' ', " +
-      s"$pat, $rep), '  ', ' '))"
-
-  /** The q180 BPE training chain: word-frequency table, three
-    * unrolled SEQUENTIAL merge rounds (1-based-subscript
-    * adjacent-pair counts, (count desc, pair asc) argmax,
-    * left-to-right anchored-`replace` application), ending in
-    * per-round picks m1..m3 and the fully merged word table s4. */
-  private lazy val bpeTrainCtes: String = {
-    def round_(k: Int) =
-      s"""t$k AS (SELECT w, freq, string_split(s$k.syms, ' ') AS a
-         |  FROM s$k),
-         |u$k AS (SELECT w, freq, generate_subscripts(a, 1) AS i,
-         |    unnest(a) AS s FROM t$k),
-         |p$k AS (SELECT x.s AS l, y.s AS r,
-         |    CAST(sum(x.freq) AS BIGINT) AS cnt
-         |  FROM u$k x JOIN u$k y ON y.w = x.w AND y.i = x.i + 1
-         |  GROUP BY 1, 2),
-         |m$k AS (SELECT l, r, cnt FROM p$k
-         |  ORDER BY cnt DESC, l ASC, r ASC LIMIT 1),
-         |s${k + 1} AS (SELECT s$k.w, s$k.freq,
-         |    ${bpeApplySql(s"s$k.syms",
-              s"' ' || m$k.l || '  ' || m$k.r || ' '",
-              s"' ' || m$k.l || m$k.r || ' '")} AS syms
-         |  FROM s$k, m$k)""".stripMargin
-    s"""wf AS (SELECT w, count(*) AS freq
-       |  FROM (SELECT unnest($wordsSql) AS w FROM documents)
-       |  WHERE len(w) > 0 GROUP BY 1),
-       |s1 AS (SELECT w, freq,
-       |    trim(regexp_replace(w, '(.)', '\\1 ', 'g')) AS syms
-       |  FROM wf),
-       |${round_(1)},
-       |${round_(2)},
-       |${round_(3)}""".stripMargin
-  }
-
-  /** The q174 BATCHED BPE chain (mirrors BpeTrain.topMergesBatched):
-    * per pass — pair counts, top-256 candidates ranked (cnt desc, l,
-    * r), keep candidates whose {l, r, l||r} triple shares no symbol
-    * with ANY higher-ranked candidate (NOT EXISTS over the exploded
-    * triples — the order-free statement of the engine's scan), adopt
-    * the first 16 kept, and apply them in kr order as a list_reduce
-    * fold of the anchored replace (pat/rep packed tab-separated; tab
-    * cannot occur inside symbols — words are split on whitespace). */
-  private def bpeBatchedCtes(passes: Int): String = {
-    // MATERIALIZED on every multiply-referenced CTE: DuckDB inlines
-    // CTEs by default, and an 8-pass chain where each pass references
-    // its word table ~3x would otherwise expand the base scan
-    // exponentially (observed as fd exhaustion at pass 8)
-    def pass_(k: Int) =
-      s"""bu$k AS MATERIALIZED (SELECT w, freq,
-         |    generate_subscripts(a, 1) AS i, unnest(a) AS s
-         |  FROM (SELECT w, freq, string_split(bs$k.syms, ' ') AS a
-         |    FROM bs$k)),
-         |bp$k AS (SELECT x.s AS l, y.s AS r,
-         |    CAST(sum(x.freq) AS BIGINT) AS cnt
-         |  FROM bu$k x JOIN bu$k y ON y.w = x.w AND y.i = x.i + 1
-         |  GROUP BY 1, 2),
-         |br$k AS MATERIALIZED (SELECT * FROM (SELECT l, r, cnt,
-         |    row_number()
-         |    OVER (ORDER BY cnt DESC, l ASC, r ASC) AS rk FROM bp$k)
-         |  WHERE rk <= 256),
-         |by$k AS MATERIALIZED (SELECT rk, unnest([l, r, l || r]) AS sym
-         |  FROM br$k),
-         |bk$k AS (SELECT l, r, cnt, row_number() OVER (ORDER BY rk) AS kr
-         |  FROM br$k t WHERE NOT EXISTS (SELECT 1 FROM by$k a
-         |    JOIN by$k b ON a.sym = b.sym AND a.rk < b.rk
-         |    WHERE b.rk = t.rk)),
-         |ba$k AS MATERIALIZED (SELECT l, r, cnt, kr FROM bk$k
-         |  WHERE kr <= 16),
-         |bs${k + 1} AS MATERIALIZED (SELECT bs$k.w, bs$k.freq,
-         |    list_reduce(list_prepend(bs$k.syms, m.mp), (acc, x) ->
-         |      ${bpeApplySql("acc", "split_part(x, chr(9), 1)",
-                "split_part(x, chr(9), 2)")}) AS syms
-         |  FROM bs$k CROSS JOIN (SELECT coalesce(list(
-         |      ' ' || l || '  ' || r || ' ' || chr(9) ||
-         |      ' ' || l || r || ' ' ORDER BY kr), []) AS mp
-         |    FROM ba$k) m)""".stripMargin
-    s"""bwf AS (SELECT w, count(*) AS freq
-       |  FROM (SELECT unnest($wordsSql) AS w FROM documents)
-       |  WHERE len(w) > 0 GROUP BY 1),
-       |bs1 AS MATERIALIZED (SELECT w, freq,
-       |    trim(regexp_replace(w, '(.)', '\\1 ', 'g')) AS syms
-       |  FROM bwf),
-       |${(1 to passes).map(pass_).mkString(",\n")}""".stripMargin
-  }
-
-  /** Distinct 5-gram list comprehension over a words array `ws` —
-    * mirrors Dedup.explodedShingles(n = 5) for the q51 oracle. */
-  /** The q19 marker-count language-ID mirror over any (doc_id, text)
-    * table/CTE — generated from `TextAnalysis.langMarkers` (one
-    * source of truth); shared by the q19 gate and the q210 funnel. */
-  private def langIdSql(table: String): String = {
-    def cnt(ms: Seq[String]) =
-      s"len(list_filter($wordsSql, w -> ${ms.map(m => s"w = '$m'").mkString(" OR ")}))"
-    val langs = TextAnalysis.langMarkers
-    val cols = langs.map { case (l, ms) => s"${cnt(ms)} AS cnt_$l" }.mkString(",\n  ")
-    val mx = s"greatest(${langs.map(l => s"cnt_${l._1}").mkString(", ")})"
-    val cases = langs.map { case (l, _) =>
-      s"WHEN $mx > 0 AND cnt_$l = $mx THEN '$l'"
-    }.mkString(" ")
-    s"""SELECT doc_id, CASE $cases ELSE 'und' END AS pred_lang
-       |FROM (SELECT doc_id,
-       |  $cols
-       |FROM $table)""".stripMargin
-  }
-
-  private val gram5Sql: String =
-    "list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' || " +
-      "ws[i+3] || ' ' || ws[i+4] for i in range(1, len(ws)-3)])"
-
-  private val jaccardSql: String =
-    s"""WITH t AS (SELECT doc_id, $wordsSql AS ws FROM documents),
-       |sh AS (SELECT doc_id, unnest(list_distinct(
-       |    [ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] for i in range(1, len(ws)-1)])) AS shingle
-       |  FROM t WHERE len(ws) >= 3),
-       |sz AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-       |pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-       |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2)
-       |SELECT doc_a, doc_b,
-       |  ${graft.functions.ExactRound.ratioSql("inter", "sa.n_sh + sb.n_sh - inter", 4)} AS jaccard
-       |FROM pairs
-       |JOIN sz sa ON sa.doc_id = doc_a
-       |JOIN sz sb ON sb.doc_id = doc_b
-       |WHERE CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE) >= 0.5""".stripMargin
-
-  /** q73: the exact-Jaccard pair set restricted to pairs with at least
-    * one endpoint in the hash-sampled batch (md5 prefix < 0x1a =
-    * rate256 26, mirroring Sampling.hashSample). */
-  private val incrementalJaccardSql: String =
-    s"""WITH nw AS (SELECT doc_id FROM documents
-       |  WHERE substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '1a'),
-       |t AS (SELECT doc_id, $wordsSql AS ws FROM documents),
-       |sh AS (SELECT doc_id, unnest(list_distinct(
-       |    [ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] for i in range(1, len(ws)-1)])) AS shingle
-       |  FROM t WHERE len(ws) >= 3),
-       |sz AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-       |pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-       |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2)
-       |SELECT doc_a, doc_b,
-       |  ${graft.functions.ExactRound.ratioSql("inter", "sa.n_sh + sb.n_sh - inter", 4)} AS jaccard
-       |FROM pairs
-       |JOIN sz sa ON sa.doc_id = doc_a
-       |JOIN sz sb ON sb.doc_id = doc_b
-       |WHERE CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE) >= 0.5
-       |  AND (doc_a IN (SELECT doc_id FROM nw)
-       |    OR doc_b IN (SELECT doc_id FROM nw))""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "q73_incremental_neardup" -> incrementalJaccardSql,
-    "q01_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-        |  sum(l_quantity) AS sum_qty,
-        |  sum(l_quantity) / count(l_quantity) AS avg_qty,
-        |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-        |  round(stddev_samp(l_extendedprice), 2) AS sd_price,
-        |  min(l_extendedprice) AS min_price,
-        |  max(l_extendedprice) AS max_price
-        |FROM lineitem GROUP BY 1, 2""".stripMargin,
-
-    "q02_cleanse_parse" ->
-      """SELECT p_partkey,
-        |  CASE WHEN len(trim(p_brand)) = 0 THEN NULL ELSE trim(p_brand) END AS brand_clean,
-        |  round(p_retailprice, 2) AS retail_2dp,
-        |  -(CAST(p_size AS DOUBLE) + 0.5) AS neg_pct,
-        |  CAST(p_size AS DOUBLE) AS unit_stripped,
-        |  CAST(p_size AS DOUBLE) * 1000 + 250.75 AS comma_parsed,
-        |  '''' || p_brand || ' - x' AS moji_fixed
-        |FROM part
-        |WHERE p_name IS NOT NULL AND len(trim(p_name)) > 0""".stripMargin,
-
-    "q03_regional_revenue" ->
-      """SELECT r_name, n_name, count(*) AS n_items,
-        |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q04_open_done_fullouter" ->
-      """SELECT o_custkey,
-        |  coalesce(n_open, 0) AS n_open, coalesce(open_total, 0.0) AS open_total,
-        |  coalesce(n_done, 0) AS n_done, coalesce(done_total, 0.0) AS done_total
-        |FROM (SELECT o_custkey, count(*) AS n_open,
-        |        CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS open_total
-        |      FROM orders WHERE o_orderstatus = 'O' GROUP BY 1) a
-        |FULL JOIN (SELECT o_custkey, count(*) AS n_done,
-        |        CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS done_total
-        |      FROM orders WHERE o_orderstatus = 'F' GROUP BY 1) b
-        |USING (o_custkey)""".stripMargin,
-
-    "q05_customers_no_orders" ->
-      """SELECT c_custkey, c_name, c_acctbal FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""".stripMargin,
-
-    "q06_band_by_balance" ->
-      """SELECT c_custkey, c_acctbal,
-        |  CASE WHEN c_acctbal IS NULL THEN NULL
-        |       WHEN rn <= 100 THEN 'Large' WHEN rn <= 250 THEN 'Mid'
-        |       WHEN rn <= 500 THEN 'Small' ELSE 'Micro' END AS band
-        |FROM (SELECT c_custkey, c_acctbal,
-        |        row_number() OVER (ORDER BY c_acctbal DESC NULLS LAST, c_custkey) AS rn
-        |      FROM customer)""".stripMargin,
-
-    "q07_composite_zscore" -> {
-      // Mirrors HierarchicalZScore exactly: Σx / Σx² as exact decimals
-      // (order-independent), varnum = n·Σx² − (Σx)² exact (0 iff the
-      // group is constant), then ONE double formula for mu/sd shared
-      // verbatim with the Spark side so both engines emit identical bits.
-      // Widths sized so every DuckDB product stays ≤ 38 digits AND every
-      // operand is ≥ DECIMAL(19) where squared (DuckDB multiplies int64
-      // decimals in int64 physical storage and overflows otherwise):
-      // (9,0)·(29,4) → (38,4); (19,2)² → (38,4); difference → (38,4).
-      // All exact, matching the Spark side's natural-width decimals.
-      // Scale ceiling of these widths: <1e9 rows per (outer) window
-      // partition and Σx² < 1e25 — far beyond any per-segment cardinality
-      // in this schema; re-derive if a partition could exceed either.
-      // The final decimal→double conversions go via VARCHAR: DuckDB's
-      // direct CAST(DECIMAL AS DOUBLE) is double-rounded above 2^53
-      // (int128→double then ÷10^scale), while Spark's Decimal.toDouble is
-      // correctly rounded; varnum reaches ~1e16 at sf0.1 and the 1-ulp
-      // drift flips round(score, 2) on .005-boundary rows.
-      // The final `+ 0.0` normalizes signed zero: DuckDB's round() keeps
-      // the sign of a tiny negative sum (round(-0.001, 2) = -0.0) while
-      // Spark's round() goes through BigDecimal, which has no signed zero
-      // and always yields +0.0. The two compare equal as floats but hash
-      // differently in the gate; `x + 0.0` is the IEEE identity except
-      // -0.0 + 0.0 = +0.0, so it canonicalizes without changing values.
-      def d(expr: String) = s"CAST(CAST($expr AS VARCHAR) AS DOUBLE)"
-      def vn(m: String, lvl: String) =
-        s"(CAST(cnt_${m}_$lvl AS DECIMAL(9,0)) * sxx_${m}_$lvl" +
-          s" - sx_${m}_$lvl * sx_${m}_$lvl)"
-      def zc(m: String, lvl: String) = {
-        val cd = s"CAST(cnt_${m}_$lvl AS DOUBLE)"
-        s"""CASE WHEN $m IS NOT NULL AND cnt_${m}_$lvl >= 3
-           | AND ${vn(m, lvl)} > 0
-           | THEN ($m - ${d(s"sx_${m}_$lvl")} / $cd)
-           |  / sqrt(${d(vn(m, lvl))} / ($cd * ($cd - 1.0)))
-           | ELSE 0.0 END""".stripMargin.replace("\n", "")
-      }
-      def contrib(m: String, w: Double) =
-        s"CASE WHEN size_i >= 2 THEN ${zc(m, "i")} * $w ELSE ${zc(m, "o")} * $w * 0.8 END"
-      val stats = Seq("c_acctbal", "order_total", "n_orders").flatMap(m =>
-        Seq("i", "o").map(l =>
-          s"""count($m) OVER w$l AS cnt_${m}_$l,
-             | CAST(sum(CAST($m AS DECIMAL(18,2))) OVER w$l AS DECIMAL(19,2)) AS sx_${m}_$l,
-             | CAST(sum(CAST($m AS DECIMAL(19,2)) * CAST($m AS DECIMAL(19,2))) OVER w$l AS DECIMAL(29,4)) AS sxx_${m}_$l""".stripMargin
-            .replace("\n", ""))).mkString(",\n  ")
-      s"""WITH os AS (SELECT o_custkey, CAST(count(*) AS DOUBLE) AS n_orders,
-         |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS order_total
-         |  FROM orders GROUP BY 1),
-         |base AS (SELECT c_custkey, c_mktsegment, c_nationkey, c_acctbal,
-         |    os.n_orders, os.order_total
-         |  FROM customer LEFT JOIN os ON c_custkey = o_custkey),
-         |w AS (SELECT c_custkey, c_acctbal, order_total, n_orders,
-         |  count(*) OVER wi AS size_i,
-         |  $stats
-         |  FROM base
-         |  WINDOW wi AS (PARTITION BY c_mktsegment, c_nationkey),
-         |         wo AS (PARTITION BY c_mktsegment))
-         |SELECT c_custkey,
-         |  round(${contrib("c_acctbal", 0.5)} + ${contrib("order_total", 0.3)}
-         |    + ${contrib("n_orders", 0.2)}, 2) + 0.0 AS composite_score
-         |FROM w""".stripMargin
-    },
-
-    "q08_peer_percentile" -> {
-      def pctSql(v: String, rk: String, size: String, nn: String) =
-        s"""CASE WHEN $v IS NULL THEN NULL
-           | WHEN $nn < 2 THEN 50.0
-           | ELSE 100.0 * ($rk - 1 - ($size - $nn)) / $nn END""".stripMargin
-          .replace("\n", "")
-      def pick(v: String, p: String) =
-        s"""CASE WHEN size_i >= 5 THEN ${pctSql(v, s"rk_${p}_i", "size_i", s"nn_${p}_i")}
-           | WHEN size_o >= 5 THEN ${pctSql(v, s"rk_${p}_o", "size_o", s"nn_${p}_o")}
-           | ELSE ${pctSql(v, s"rk_${p}_g", "size_g", s"nn_${p}_g")} END""".stripMargin
-          .replace("\n", "")
-      s"""WITH c AS (SELECT c_custkey, c_mktsegment AS seg, c_nationkey AS nat,
-         |    c_acctbal AS v, CASE WHEN c_acctbal > 0 THEN c_acctbal END AS vp
-         |  FROM customer),
-         |w AS (SELECT c_custkey, v, vp,
-         |    count(*) OVER wi AS size_i, count(*) OVER wo AS size_o,
-         |    count(*) OVER wg AS size_g,
-         |    count(v) OVER wi AS nn_b_i, count(v) OVER wo AS nn_b_o,
-         |    count(v) OVER wg AS nn_b_g,
-         |    count(vp) OVER wi AS nn_v_i, count(vp) OVER wo AS nn_v_o,
-         |    count(vp) OVER wg AS nn_v_g,
-         |    rank() OVER (PARTITION BY seg, nat ORDER BY v ASC NULLS FIRST) AS rk_b_i,
-         |    rank() OVER (PARTITION BY seg ORDER BY v ASC NULLS FIRST) AS rk_b_o,
-         |    rank() OVER (ORDER BY v ASC NULLS FIRST) AS rk_b_g,
-         |    rank() OVER (PARTITION BY seg, nat ORDER BY vp DESC NULLS FIRST) AS rk_v_i,
-         |    rank() OVER (PARTITION BY seg ORDER BY vp DESC NULLS FIRST) AS rk_v_o,
-         |    rank() OVER (ORDER BY vp DESC NULLS FIRST) AS rk_v_g
-         |  FROM c
-         |  WINDOW wi AS (PARTITION BY seg, nat), wo AS (PARTITION BY seg), wg AS ())
-         |SELECT c_custkey,
-         |  CASE WHEN size_i >= 5 THEN 'inner' WHEN size_o >= 5 THEN 'outer'
-         |       ELSE 'all' END AS peer_level,
-         |  ${pick("v", "b")} AS pct_bal,
-         |  CASE WHEN v IS NULL THEN NULL WHEN v <= 0 THEN 0.0
-         |       ELSE ${pick("vp", "v")} END AS pct_val
-         |FROM w""".stripMargin
-    },
-
-    "q09_rank_in_segment" ->
-      """SELECT c_custkey, c_mktsegment,
-        |  row_number() OVER (PARTITION BY c_mktsegment
-        |    ORDER BY c_acctbal DESC NULLS LAST, c_custkey) AS seg_rank
-        |FROM customer""".stripMargin,
-
-    "q10_minmax_brand" ->
-      """SELECT p_partkey, p_brand, p_retailprice,
-        |  CASE WHEN p_retailprice IS NULL THEN NULL
-        |       WHEN mx = mn THEN 1.0
-        |       ELSE (p_retailprice - mn) / (mx - mn) END AS norm_price
-        |FROM (SELECT p_partkey, p_brand, p_retailprice,
-        |        min(p_retailprice) OVER w AS mn, max(p_retailprice) OVER w AS mx
-        |      FROM part WINDOW w AS (PARTITION BY p_brand))""".stripMargin,
-
-    "q11_weighted_blend" ->
-      """WITH os AS (SELECT o_custkey, CAST(count(*) AS DOUBLE) AS n_orders,
-        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS order_total
-        |  FROM orders GROUP BY 1)
-        |SELECT c_custkey,
-        |  coalesce(c_acctbal, 0.0) * 0.4 + coalesce(order_total, 0.0) * 0.35
-        |    + coalesce(n_orders, 0.0) * 0.25 AS wsum,
-        |  CASE WHEN (CASE WHEN c_acctbal IS NOT NULL THEN 0.4 ELSE 0.0 END
-        |      + CASE WHEN order_total IS NOT NULL THEN 0.35 ELSE 0.0 END
-        |      + CASE WHEN n_orders IS NOT NULL THEN 0.25 ELSE 0.0 END) = 0.0 THEN NULL
-        |    ELSE (CASE WHEN c_acctbal IS NOT NULL THEN c_acctbal * 0.4 ELSE 0.0 END
-        |      + CASE WHEN order_total IS NOT NULL THEN order_total * 0.35 ELSE 0.0 END
-        |      + CASE WHEN n_orders IS NOT NULL THEN n_orders * 0.25 ELSE 0.0 END)
-        |      / (CASE WHEN c_acctbal IS NOT NULL THEN 0.4 ELSE 0.0 END
-        |      + CASE WHEN order_total IS NOT NULL THEN 0.35 ELSE 0.0 END
-        |      + CASE WHEN n_orders IS NOT NULL THEN 0.25 ELSE 0.0 END) END AS wavg
-        |FROM customer LEFT JOIN os ON c_custkey = o_custkey""".stripMargin,
-
-    "q12_top_orders" ->
-      """SELECT o_orderkey, o_totalprice, o_orderpriority FROM orders
-        |ORDER BY o_totalprice DESC NULLS LAST, o_orderkey LIMIT 10""".stripMargin,
-
-    "q13_priority_ordinal" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        |  CAST(sum(prio_ord) AS BIGINT) AS sum_ord,
-        |  CAST(sum(prio_ord) AS DOUBLE) / count(*) AS avg_ord
-        |FROM (SELECT o_orderstatus,
-        |        CASE o_orderpriority WHEN '1-URGENT' THEN 5 WHEN '2-HIGH' THEN 4
-        |          WHEN '3-MEDIUM' THEN 3 WHEN '4-NOT SPECIFIED' THEN 2
-        |          WHEN '5-LOW' THEN 1 ELSE 3 END AS prio_ord
-        |      FROM orders)
-        |GROUP BY 1""".stripMargin,
-
-    "q14_props_parse" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(k) AS BIGINT) AS sum_k,
-        |  CAST(sum(k) AS DOUBLE) / count(k) AS avg_k,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
-        |FROM (SELECT event_type,
-        |        CAST(regexp_extract(props, '([0-9]+)', 1) AS BIGINT) AS k, value
-        |      FROM events)
-        |GROUP BY 1""".stripMargin,
-
-    "q15_sessionize" ->
-      """WITH e AS (SELECT user_id, event_id, value,
-        |    epoch_ns(ts) // 1000000000 AS ts_s FROM events),
-        |s AS (SELECT *, CASE WHEN lag(ts_s) OVER w IS NULL
-        |        OR ts_s - lag(ts_s) OVER w > 1800 THEN 1 ELSE 0 END AS is_new
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_s, event_id)),
-        |s2 AS (SELECT *, CAST(sum(is_new) OVER (PARTITION BY user_id
-        |    ORDER BY ts_s, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq FROM s)
-        |SELECT user_id, session_seq, count(*) AS n_events,
-        |  max(ts_s) - min(ts_s) AS span,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
-        |FROM s2 GROUP BY 1, 2""".stripMargin,
-
-    "q16_hourly_events" ->
-      """SELECT (epoch_ns(ts) // 1000000000) // 3600 * 3600 AS window_start,
-        |  event_type, count(*) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "q32_session_window" ->
-      """WITH e AS (SELECT user_id, event_id, value,
-        |    epoch_ns(ts) // 1000 AS ts_us FROM events),
-        |s AS (SELECT *, CASE WHEN lag(ts_us) OVER w IS NULL
-        |        OR ts_us - lag(ts_us) OVER w >= 1800000000 THEN 1 ELSE 0 END AS is_new
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-        |s2 AS (SELECT *, sum(is_new) OVER (PARTITION BY user_id
-        |    ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) AS sid FROM s)
-        |SELECT user_id, min(ts_us) AS start_us,
-        |  max(ts_us) + 1800000000 AS end_us, count(*) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
-        |FROM s2 GROUP BY user_id, sid""".stripMargin,
-
-    // Explicit type-7 lerp rather than DuckDB's quantile_cont builtin:
-    // the builtin's internal interpolation differs from lo + (hi-lo)*f
-    // in float op ORDER at some group sizes (observed 1.46e-11 on p95
-    // at sf0.1 — same class as the q07 signed-zero/cast flaps). The
-    // formula below mirrors the Spark side token-for-token.
-    "q35_quantiles" -> {
-      val qs = Seq("p25" -> "0.25", "p50" -> "0.5", "p75" -> "0.75",
-        "p95" -> "0.95")
-      def pos(q: String) = s"$q * CAST(n - 1 AS DOUBLE)"
-      val picks = qs.map { case (nm, q) =>
-        s"""max(CASE WHEN rn = CAST(floor(${pos(q)}) AS BIGINT) + 1 THEN cents END) AS ${nm}_lo,
-           |  max(CASE WHEN rn = CAST(ceil(${pos(q)}) AS BIGINT) + 1 THEN cents END) AS ${nm}_hi,
-           |  max(${pos(q)} - floor(${pos(q)})) AS ${nm}_f""".stripMargin
-      }.mkString(",\n  ")
-      val outs = qs.map { case (nm, _) =>
-        s"(CAST(${nm}_lo AS DOUBLE) + CAST(${nm}_hi - ${nm}_lo AS DOUBLE) * ${nm}_f) / 100.0 AS $nm"
-      }.mkString(",\n  ")
-      s"""WITH c AS (SELECT l_returnflag,
-         |    CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS cents
-         |  FROM lineitem),
-         |r AS (SELECT l_returnflag, cents,
-         |    row_number() OVER (PARTITION BY l_returnflag ORDER BY cents) AS rn,
-         |    count(*) OVER (PARTITION BY l_returnflag) AS n
-         |  FROM c),
-         |p AS (SELECT l_returnflag,
-         |  $picks
-         |  FROM r GROUP BY 1)
-         |SELECT l_returnflag,
-         |  $outs
-         |FROM p""".stripMargin
-    },
-
-    "q38_set_ops" ->
-      """SELECT c_custkey, 'rich_buyer' AS set_op
-        |FROM (SELECT c_custkey FROM customer WHERE c_acctbal > 5000
-        |      INTERSECT SELECT o_custkey FROM orders)
-        |UNION ALL
-        |SELECT c_custkey, 'rich_idle' AS set_op
-        |FROM (SELECT c_custkey FROM customer WHERE c_acctbal > 5000
-        |      EXCEPT SELECT o_custkey FROM orders)""".stripMargin,
-
-    "q39_pivot" ->
-      """SELECT (epoch_ns(ts) // 1000000000) // 3600 % 24 AS hod,
-        |  CAST(count(*) FILTER (WHERE event_type = 'click') AS BIGINT) AS click,
-        |  CAST(count(*) FILTER (WHERE event_type = 'error') AS BIGINT) AS error,
-        |  CAST(count(*) FILTER (WHERE event_type = 'purchase') AS BIGINT) AS purchase,
-        |  CAST(count(*) FILTER (WHERE event_type = 'signup') AS BIGINT) AS signup,
-        |  CAST(count(*) FILTER (WHERE event_type = 'view') AS BIGINT) AS view
-        |FROM events GROUP BY 1""".stripMargin,
-
-    // q91: one stat row per column, UNION ALL; min/max as strings
-    "q91_profile_columns" -> {
-      def one(c: String) =
-        s"""SELECT '$c' AS col_name, count(*) AS n_rows,
-           |  CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
-           |  CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct,
-           |  CAST(min($c) AS VARCHAR) AS min_s,
-           |  CAST(max($c) AS VARCHAR) AS max_s
-           |FROM orders""".stripMargin
-      Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
-        .map(one).mkString("\nUNION ALL\n")
-    },
-
-    // q92: integer-cents histogram — the q35 cents derivation, then
-    // width/bucket arithmetic entirely in integer division
-    "q92_histogram" ->
-      """WITH v AS (SELECT CAST(round(o_totalprice * 100, 0) AS BIGINT) AS v
-        |  FROM orders WHERE o_totalprice IS NOT NULL),
-        |b AS (SELECT min(v) AS mn, max(v) AS mx FROM v),
-        |w AS (SELECT mn, ((mx - mn) // 10) + 1 AS w FROM b)
-        |SELECT (v.v - w.mn) // w.w AS bucket,
-        |  w.mn + ((v.v - w.mn) // w.w) * w.w AS lo,
-        |  w.mn + (((v.v - w.mn) // w.w) + 1) * w.w - 1 AS hi,
-        |  count(*) AS n_rows
-        |FROM v, w GROUP BY 1, 2, 3""".stripMargin,
-
-    // q89: distinct user-day grid -> per-user min day -> offset counts
-    "q89_retention_cohorts" ->
-      """WITH ud AS (SELECT DISTINCT user_id,
-        |    (epoch_ns(ts) // 1000000000) // 86400 AS day
-        |  FROM events WHERE user_id IS NOT NULL),
-        |c AS (SELECT user_id, min(day) AS cohort_day FROM ud GROUP BY 1)
-        |SELECT c.cohort_day, ud.day - c.cohort_day AS day_offset,
-        |  count(*) AS n_users
-        |FROM ud JOIN c USING (user_id)
-        |GROUP BY 1, 2""".stripMargin,
-
-    // q90: first view -> first click strictly after -> first purchase
-    // strictly after; per-stage distinct-user counts
-    "q90_funnel_steps" ->
-      """WITH e AS (SELECT user_id, event_type,
-        |    epoch_ns(ts) // 1000000000 AS ts_s
-        |  FROM events WHERE user_id IS NOT NULL),
-        |v AS (SELECT user_id, min(ts_s) AS t1 FROM e
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |c AS (SELECT e.user_id, min(ts_s) AS t2 FROM e JOIN v USING (user_id)
-        |  WHERE event_type = 'click' AND ts_s > v.t1 GROUP BY 1),
-        |p AS (SELECT e.user_id, min(ts_s) AS t3 FROM e JOIN c USING (user_id)
-        |  WHERE event_type = 'purchase' AND ts_s > c.t2 GROUP BY 1)
-        |SELECT '1_view' AS step, count(*) AS n_users FROM v
-        |UNION ALL SELECT '2_click', count(*) FROM c
-        |UNION ALL SELECT '3_purchase', count(*) FROM p""".stripMargin,
-
-    "q36_distinct_users" ->
-      """SELECT event_type,
-        |  count(DISTINCT user_id) AS n_users,
-        |  count(DISTINCT (epoch_ns(ts) // 1000000000) // 86400) AS n_days,
-        |  count(*) AS n_events
-        |FROM events GROUP BY 1""".stripMargin,
-
-    // q37: the KMV sketch is deterministic SQL once string keys hash
-    // through md5-prefix64 — the oracle recomputes the per-group k-th
-    // smallest distinct hash (hex sort order == unsigned numeric
-    // order) and the same 128-bit integer Beyer estimator
-    // floor((k−1)·2^64/(u+1)); groups with < k distinct hashes emit
-    // the exact distinct-hash count, as the sketch does.
-    "q37_approx_distinct_kmv" -> {
-      val hi = hex32Sql("h16", 1)
-      val lo = hex32Sql("h16", 9)
-      s"""WITH h AS (SELECT DISTINCT event_type,
-         |    substring(md5(CAST(user_id AS VARCHAR)), 1, 16) AS h16
-         |  FROM events WHERE user_id IS NOT NULL),
-         |r AS (SELECT event_type, h16,
-         |    row_number() OVER (PARTITION BY event_type ORDER BY h16 ASC) AS rk
-         |  FROM h),
-         |u AS (SELECT event_type,
-         |    CAST($hi AS HUGEINT) * 4294967296 + CAST($lo AS HUGEINT) AS uh
-         |  FROM r WHERE rk = 256),
-         |est AS (SELECT event_type,
-         |    CAST(least((CAST(255 AS HUGEINT) *
-         |      (CAST(4294967296 AS HUGEINT) * 4294967296)) // (uh + 1),
-         |      CAST(9223372036854775807 AS HUGEINT))
-         |      AS BIGINT) AS approx
-         |  FROM u),
-         |cnt AS (SELECT event_type, CAST(count(*) AS BIGINT) AS nd
-         |  FROM h GROUP BY 1),
-         |g AS (SELECT DISTINCT event_type FROM events)
-         |SELECT g.event_type,
-         |  coalesce(e.approx, c.nd, CAST(0 AS BIGINT)) AS approx_users
-         |FROM g LEFT JOIN cnt c USING (event_type)
-         |  LEFT JOIN est e USING (event_type)""".stripMargin
-    },
-
-    // Mirrors MergeByKey.merge: full-outer on the key, incoming wins per
-    // column where non-null, existing-only columns survive, incoming-only
-    // columns append. Per-customer sums stay < 1e8 ≪ 2^53, so the direct
-    // decimal→double cast is exact (see README: above 2^53 go via VARCHAR).
-    "q41_merge_upsert" ->
-      """WITH inc AS (SELECT o_custkey AS c_custkey,
-        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS i_acctbal,
-        |    count(*) AS n_orders
-        |  FROM orders GROUP BY 1)
-        |SELECT coalesce(i.c_custkey, e.c_custkey) AS c_custkey,
-        |  e.c_name AS c_name,
-        |  coalesce(i.i_acctbal, e.c_acctbal) AS c_acctbal,
-        |  i.n_orders AS n_orders
-        |FROM customer e FULL JOIN inc i ON e.c_custkey = i.c_custkey""".stripMargin,
-
-    "q49_hash_sample" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE substr(md5(CAST(c_custkey AS VARCHAR)), 1, 2) < '40'""".stripMargin,
-
-    "q50_split_by_hash" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id IS NULL THEN NULL
-        |       WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'c8' THEN 'train'
-        |       WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'e8' THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM documents""".stripMargin,
-
-    "q52_stratified_sample" ->
-      """SELECT doc_id, lang FROM (
-        |  SELECT doc_id, lang,
-        |    row_number() OVER (PARTITION BY lang
-        |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-        |  FROM documents WHERE doc_id IS NOT NULL)
-        |WHERE rn <= 20""".stripMargin,
-
-    // Greedy next-fit is a running state with reset — not prefix-sum
-    // decomposable, so the oracle is a recursive CTE stepping doc-by-doc
-    // within each bucket, the same fits-test the Spark scan applies.
-    "q53_sequence_pack" ->
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id,
-        |    CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT) AS n_tokens,
-        |    doc_id % 16 AS bucket
-        |  FROM documents WHERE doc_id IS NOT NULL),
-        |ordered AS (
-        |  SELECT doc_id, n_tokens, bucket,
-        |    row_number() OVER (PARTITION BY bucket ORDER BY doc_id) AS rn
-        |  FROM toks),
-        |packed AS (
-        |  SELECT doc_id, n_tokens, bucket, rn,
-        |    CAST(0 AS BIGINT) AS pack_seq,
-        |    CAST(0 AS BIGINT) AS pack_offset,
-        |    n_tokens AS used
-        |  FROM ordered WHERE rn = 1
-        |  UNION ALL
-        |  SELECT o.doc_id, o.n_tokens, o.bucket, o.rn,
-        |    CASE WHEN p.used + o.n_tokens <= 256 THEN p.pack_seq ELSE p.pack_seq + 1 END,
-        |    CASE WHEN p.used + o.n_tokens <= 256 THEN p.used ELSE CAST(0 AS BIGINT) END,
-        |    CASE WHEN p.used + o.n_tokens <= 256 THEN p.used + o.n_tokens ELSE o.n_tokens END
-        |  FROM packed p JOIN ordered o ON o.bucket = p.bucket AND o.rn = p.rn + 1)
-        |SELECT doc_id, n_tokens, bucket, pack_seq, pack_offset FROM packed""".stripMargin,
-
-    // q72: q53's recursive-CTE packing joined back to text; the gate
-    // compares ORDER-INDEPENDENT pack digests — bit_xor over each
-    // member's 64-bit md5 prefix (reconstructed from hex nibbles by
-    // pure arithmetic, q24-style) in two 32-bit halves. The r7/r8
-    // ordered string_agg + md5-of-concat both flapped on the driver;
-    // an unordered XOR of per-member digests pins the same membership,
-    // offsets, and text with no ordered aggregation at all.
-    "q72_pack_materialize" -> {
-      val hi = hex32Sql("h16", 1)
-      val lo = hex32Sql("h16", 9)
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id,
-        |    CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT) AS n_tokens,
-        |    doc_id % 16 AS bucket
-        |  FROM documents WHERE doc_id IS NOT NULL),
-        |ordered AS (
-        |  SELECT doc_id, n_tokens, bucket,
-        |    row_number() OVER (PARTITION BY bucket ORDER BY doc_id) AS rn
-        |  FROM toks),
-        |packed AS (
-        |  SELECT doc_id, n_tokens, bucket, rn,
-        |    CAST(0 AS BIGINT) AS pack_seq,
-        |    CAST(0 AS BIGINT) AS pack_offset,
-        |    n_tokens AS used
-        |  FROM ordered WHERE rn = 1
-        |  UNION ALL
-        |  SELECT o.doc_id, o.n_tokens, o.bucket, o.rn,
-        |    CASE WHEN p.used + o.n_tokens <= 256 THEN p.pack_seq ELSE p.pack_seq + 1 END,
-        |    CASE WHEN p.used + o.n_tokens <= 256 THEN p.used ELSE CAST(0 AS BIGINT) END,
-        |    CASE WHEN p.used + o.n_tokens <= 256 THEN p.used + o.n_tokens ELSE o.n_tokens END
-        |  FROM packed p JOIN ordered o ON o.bucket = p.bucket AND o.rn = p.rn + 1),
-        |m AS (SELECT p.bucket, p.pack_seq, p.n_tokens,
-        |    substring(md5(concat(CAST(p.doc_id AS VARCHAR), '@',
-        |      CAST(p.pack_offset AS VARCHAR), '@', coalesce(d.text, ''))), 1, 16) AS h16
-        |  FROM packed p JOIN documents d ON d.doc_id = p.doc_id),
-        |h AS (SELECT bucket, pack_seq, n_tokens,
-        |""".stripMargin +
-        s"    CAST($hi AS BIGINT) AS hi32,\n" +
-        s"    CAST($lo AS BIGINT) AS lo32\n" +
-        """|  FROM m)
-        |SELECT bucket, pack_seq, count(*) AS n_docs,
-        |  CAST(sum(n_tokens) AS BIGINT) AS fill,
-        |  bit_xor(hi32) AS digest_hi, bit_xor(lo32) AS digest_lo
-        |FROM h GROUP BY 1, 2""".stripMargin
-    },
-
-    "q58_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus) AS BIGINT) AS gid,
-        |  count(*) AS n_rows,
-        |  sum(l_quantity) AS sum_qty
-        |FROM lineitem
-        |GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-
-    "q57_chunking" -> {
-      // stride 12 = size 16 − overlap 4; integer floor-division on a
-      // non-negative numerator both sides (// in DuckDB, div in Spark)
-      s"""WITH t AS (SELECT doc_id, $wordsSql AS ws FROM documents
-         |  WHERE text IS NOT NULL),
-         |s AS (SELECT doc_id, ws, CAST(len(ws) AS BIGINT) AS nt,
-         |    greatest((greatest(CAST(len(ws) AS BIGINT) - 4, 0) + 11) // 12, 1) AS k
-         |  FROM t WHERE len(ws) > 0),
-         |c AS (SELECT doc_id, ws, nt, unnest(range(0, k)) AS chunk_idx FROM s)
-         |SELECT doc_id,
-         |  CAST(chunk_idx AS BIGINT) AS chunk_idx,
-         |  CAST(chunk_idx * 12 AS BIGINT) AS start_tok,
-         |  CAST(least(16, nt - chunk_idx * 12) AS BIGINT) AS n_tok,
-         |  array_to_string(ws[chunk_idx * 12 + 1 : chunk_idx * 12 + least(16, nt - chunk_idx * 12)], ' ') AS chunk_text
-         |FROM c""".stripMargin
-    },
-
-    "q56_pii_scrub" -> {
-      // Rules and injection mirrored from PiiScrub.defaultRules / the
-      // q56 query. DuckDB regexp_replace is first-match-only without
-      // the 'g' flag; patterns are Java ∩ RE2 common dialect.
-      val email = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
-      val phone = "\\+?[0-9]{2,3}[- ][0-9]{3}[- ][0-9]{4}"
-      val ip = "[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}"
-      s"""WITH inj AS (SELECT doc_id, text ||
-         |  CASE WHEN doc_id % 7 = 0
-         |    THEN ' reach user' || CAST(doc_id AS VARCHAR) || '@mail.example.com'
-         |    ELSE '' END ||
-         |  CASE WHEN doc_id % 11 = 0
-         |    THEN ' call +91 555-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-         |    ELSE '' END ||
-         |  CASE WHEN doc_id % 13 = 0
-         |    THEN ' from 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.' || CAST((doc_id * 7) % 256 AS VARCHAR)
-         |    ELSE '' END AS t0
-         |  FROM documents),
-         |s1 AS (SELECT doc_id,
-         |    CAST(len(regexp_extract_all(t0, '$email')) AS BIGINT) AS n_email,
-         |    regexp_replace(t0, '$email', '<EMAIL>', 'g') AS t1
-         |  FROM inj),
-         |s2 AS (SELECT doc_id, n_email,
-         |    CAST(len(regexp_extract_all(t1, '$phone')) AS BIGINT) AS n_phone,
-         |    regexp_replace(t1, '$phone', '<PHONE>', 'g') AS t2
-         |  FROM s1),
-         |s3 AS (SELECT doc_id, n_email, n_phone,
-         |    CAST(len(regexp_extract_all(t2, '$ip')) AS BIGINT) AS n_ip,
-         |    regexp_replace(t2, '$ip', '<IP>', 'g') AS t3
-         |  FROM s2)
-         |SELECT doc_id, t3 AS text_clean, n_email, n_phone, n_ip FROM s3""".stripMargin
-    },
-
-    // q55: emitted ratios via ExactRound integer rounding (tie-proof);
-    // the repetitive flag keeps the raw double ratios, as the engine does
-    "q55_repetition" -> {
-      import graft.functions.ExactRound.ratioSql
-      val d2raw = "CAST(t2 - d2 AS DOUBLE) / CAST(t2 AS DOUBLE)"
-      val d3raw = "CAST(t3 - d3 AS DOUBLE) / CAST(t3 AS DOUBLE)"
-      val twraw = "CAST(mx AS DOUBLE) / CAST(nw AS DOUBLE)"
-      s"""WITH t AS (SELECT doc_id, $wordsSql AS ws FROM documents),
-         |wc AS (SELECT doc_id, count(*) AS c
-         |  FROM (SELECT doc_id, unnest(ws) AS w FROM t) GROUP BY doc_id, w),
-         |wstat AS (SELECT doc_id, sum(c) AS nw, max(c) AS mx FROM wc GROUP BY 1),
-         |s2 AS (SELECT doc_id, CAST(len(l) AS BIGINT) AS t2,
-         |    CAST(len(list_distinct(l)) AS BIGINT) AS d2
-         |  FROM (SELECT doc_id, [ws[i] || ' ' || ws[i+1] for i in range(1, len(ws))] AS l
-         |        FROM t WHERE len(ws) >= 2)),
-         |s3 AS (SELECT doc_id, CAST(len(l) AS BIGINT) AS t3,
-         |    CAST(len(list_distinct(l)) AS BIGINT) AS d3
-         |  FROM (SELECT doc_id, [ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] for i in range(1, len(ws)-1)] AS l
-         |        FROM t WHERE len(ws) >= 3))
-         |SELECT d.doc_id,
-         |  CAST(coalesce(nw, 0) AS BIGINT) AS n_words,
-         |  ${ratioSql("t2 - d2", "t2")} AS dup_2gram,
-         |  ${ratioSql("t3 - d3", "t3")} AS dup_3gram,
-         |  ${ratioSql("mx", "nw")} AS top_word,
-         |  (coalesce(nw, 0) >= 10 AND (coalesce($d2raw, 0.0) > 0.2
-         |    OR coalesce($d3raw, 0.0) > 0.18
-         |    OR coalesce($twraw, 0.0) > 0.2)) AS repetitive
-         |FROM documents d
-         |LEFT JOIN wstat USING (doc_id)
-         |LEFT JOIN s2 USING (doc_id)
-         |LEFT JOIN s3 USING (doc_id)""".stripMargin
-    },
-
-    "q54_term_relevance" -> {
-      // Formula mirrored verbatim from TermRelevance.bm25 (k1=1.2,
-      // b=0.75, rational idf — no transcendentals, so every double op
-      // is IEEE-exact in both engines). Constants are interpolated from
-      // the SAME Scala doubles the engine uses: "k1 + 1.0" computed in
-      // Scala need not be the double the literal "2.2" parses to, but
-      // Double.toString round-trips, so the rendered literal is
-      // bit-identical. HUGEINT sums (DuckDB) cast exactly to double
-      // below 2^53 — doc-length sums are far under that at any SF here.
-      val k1 = 1.2; val b = 0.75
-      val terms = Seq("spark", "join", "window")
-      def tfCol(i: Int) = s"CAST(len(list_filter(ws, w -> w = '${terms(i)}')) AS BIGINT) AS tf$i"
-      val norm = s"(${1.0 - b} + (($b * CAST(dl AS DOUBLE)) / " +
-        "(CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE))))"
-      def contrib(i: Int) =
-        s"(((CAST(n_docs AS DOUBLE) - CAST(df$i AS DOUBLE) + 0.5) / (CAST(df$i AS DOUBLE) + 0.5))" +
-          s" * ((CAST(tf$i AS DOUBLE) * ${k1 + 1.0}) / (CAST(tf$i AS DOUBLE) + ($k1 * $norm))))"
-      s"""WITH t AS (SELECT doc_id, $wordsSql AS ws FROM documents
-         |  WHERE text IS NOT NULL),
-         |l AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS dl,
-         |  ${terms.indices.map(tfCol).mkString(",\n  ")}
-         |  FROM t),
-         |g AS (SELECT count(*) AS n_docs, sum(dl) AS sum_dl,
-         |  ${terms.indices.map(i =>
-              s"sum(CASE WHEN tf$i > 0 THEN 1 ELSE 0 END) AS df$i").mkString(",\n  ")}
-         |  FROM l)
-         |SELECT doc_id, dl AS doc_len,
-         |  CAST(${terms.indices.map(i =>
-              s"(CASE WHEN tf$i > 0 THEN 1 ELSE 0 END)").mkString(" + ")} AS BIGINT) AS n_hit_terms,
-         |  round(${terms.indices.map(contrib).mkString(" + ")}, 4) AS score
-         |FROM l, g
-         |WHERE ${terms.indices.map(i => s"tf$i").mkString(" + ")} > 0""".stripMargin
-    },
-
-    "q51_decontaminate" -> decontamReportSql(),
-
-    "q45_skew_two_phase" ->
-      """SELECT l_returnflag, count(*) AS n_rows,
-        |  sum(l_quantity) AS sum_qty
-        |FROM lineitem GROUP BY 1""".stripMargin,
-
-    "q46_salted_join" ->
-      """SELECT o_orderkey, o_custkey AS c_custkey, c_mktsegment
-        |FROM orders JOIN customer ON o_custkey = c_custkey""".stripMargin,
-
-    "q42_merge_stats" ->
-      """WITH inc AS (SELECT o_custkey AS c_custkey FROM orders GROUP BY 1),
-        |m AS (SELECT e.c_custkey, i.c_custkey AS ic
-        |  FROM customer e FULL JOIN inc i ON e.c_custkey = i.c_custkey)
-        |SELECT count(*) AS merged_rows,
-        |  count(ic) AS upserted_rows,
-        |  count(*) - count(ic) AS untouched_rows
-        |FROM m""".stripMargin,
-
-    "q43_caps_truncate" ->
-      """SELECT p_partkey,
-        |  least(p_retailprice, 1500.0) AS capped_price,
-        |  substr(p_name, 1, 12) AS short_name
-        |FROM part""".stripMargin,
-
-    "q44_scrape_filter" ->
-      """SELECT p_partkey, p_name FROM part
-        |WHERE p_name IS NOT NULL AND length(p_name) <= 9
-        |  AND NOT contains(p_name, 'Sector')
-        |  AND NOT contains(p_name, '0001-01-01')
-        |  AND NOT contains(p_name, 'Strengths:')
-        |  AND NOT contains(p_name, 'Neutral')
-        |  AND length(trim(p_name)) > 0
-        |  AND NOT regexp_matches(p_name, '^\d{4}-\d{2}-\d{2}')""".stripMargin,
-
-    "q34_asof_join" ->
-      """SELECT p.event_id, p.user_id, p.value,
-        |  c.event_id AS prior_click_id,
-        |  (epoch_ns(p.ts) - epoch_ns(c.ts)) // 1000000000 AS gap_s
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |  ON p.user_id = c.user_id AND p.ts >= c.ts""".stripMargin,
-
-    "q17_token_counts" ->
-      s"""SELECT doc_id, len($wordsSql) AS n_words,
-         |  len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS n_tokens,
-         |  length(text) AS n_chars_obs
-         |FROM documents""".stripMargin,
-
-    // q18: every ratio (and the composite score, rewritten as one
-    // rational with the caps moved inside) rounds via ExactRound
-    // integer arithmetic — int/int fractions are tie-prone under
-    // round(DOUBLE) (the r7 q71 lesson, applied fleet-wide)
-    "q18_quality_score" -> {
-      import graft.functions.ExactRound.ratioSql
-      val (nWords, stopHits, punct, len) = (qNWords, qStopHits, qPunct, qLen)
-      val (scoreNum, scoreDen) = (qScoreNum, qScoreDen)
-      s"""SELECT doc_id, len($wordsSql) AS n_words,
-         |  ${ratioSql(s"length(regexp_replace(text, '\\s+', '', 'g'))", nWords)} AS avg_word_len,
-         |  ${ratioSql(stopHits, nWords)} AS stop_ratio,
-         |  ${ratioSql(punct, len)} AS punct_ratio,
-         |  ${ratioSql(scoreNum, scoreDen)} AS quality
-         |FROM documents""".stripMargin
-    },
-
-    "q19_langid" -> langIdSql("documents"),
-
-    "q20_fingerprint" ->
-      s"""SELECT doc_id, md5($wsNorm) AS fp,
-         |  'tv_' || substring(md5(text), 1, 20) AS skey
-         |FROM documents""".stripMargin,
-
-    "q21_dedup_exact" ->
-      s"""SELECT md5($wsNorm) AS fp, min(doc_id) AS rep_id, count(*) AS n_dups
-         |FROM documents GROUP BY 1""".stripMargin,
-
-    "q33_winnowing" ->
-      s"""WITH t AS (SELECT doc_id, $wsNorm AS tn FROM documents
-         |    WHERE length($wsNorm) >= 8),
-         |g AS (SELECT doc_id, i,
-         |    substr(md5(substr(tn, CAST(i AS INTEGER), 8)), 1, 16) AS h
-         |  FROM t, unnest(range(1, length(tn) - 6)) AS r(i))
-         |SELECT DISTINCT doc_id,
-         |  min(h) OVER (PARTITION BY doc_id ORDER BY i
-         |    ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fingerprint
-         |FROM g""".stripMargin,
-
-    "q22_jaccard_pairs" -> jaccardSql,
-    "q23_minhash_pairs" -> jaccardSql,
-
-    // q79: DuckDB's nfc_normalize (utf8proc) vs the engine's
-    // java.text.Normalizer — both implement Unicode NFC, so outputs
-    // and the per-row already-normalized flag must agree exactly.
-    // The gate pins itself to version-stable rows: normalized columns
-    // are emitted only where strlen(text) = length(text) (pure ASCII,
-    // where NFC is the identity under every Unicode version), so a
-    // JDK-vs-utf8proc Unicode-version skew can never flip the hash —
-    // non-ASCII rows (none in today's corpora) would gate NULL.
-    "q79_unicode_normalize" ->
-      """SELECT doc_id,
-        |  strlen(text) = length(text) AS ascii_only,
-        |  CASE WHEN strlen(text) = length(text)
-        |    THEN nfc_normalize(text) END AS text_nfc,
-        |  CASE WHEN strlen(text) = length(text)
-        |    THEN nfc_normalize(text) = text END AS already_nfc
-        |FROM documents""".stripMargin,
-
-    // q80: same Hamilton apportionment in HUGEINT arithmetic, same
-    // (rem desc, source asc) tie-break — integer-exact on both engines
-    "q80_budget_apportion" ->
-      Apportion.largestRemainderSql(
-        sourceTokensSql,
-        "source", "n_tokens", budget = 100000L),
-
-    // q88: q80's apportionment wrapped in integer epoch accounting
-    "q88_epoch_plan" ->
-      Apportion.epochPlanSql(
-        sourceTokensSql,
-        "source", "n_tokens", budget = 100000L),
-
-    // q81: every ratio bound as integer cross-multiplication; the
-    // symbol count collapses '...'-runs to one hit via the same
-    // regexp both engines share (RE2 semantics)
-    "q81_gopher_rules" ->
-      s"""WITH t AS (SELECT doc_id, text,
-         |    CAST(len($wordsSql) AS BIGINT) AS nw,
-         |    CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS BIGINT) AS nsp,
-         |    CAST(length(text) - length(regexp_replace(text, '#', '', 'g'))
-         |      + length(regexp_replace(text, '\\.{3,}|…', '@', 'g'))
-         |      - length(regexp_replace(text, '\\.{3,}|…', '', 'g')) AS BIGINT) AS nsym,
-         |    CAST(len(list_filter($wordsSql,
-         |      w -> w IN ('the', 'a', 'of', 'to', 'and'))) AS BIGINT) AS nstop
-         |  FROM documents)
-         |SELECT doc_id, nw AS n_words, nsp AS n_nonspace,
-         |  nsym AS n_symbols, nstop AS n_stopword_hits,
-         |  (nw >= 50 AND nw <= 100000) AS ok_word_count,
-         |  (nsp >= 3 * nw AND nsp <= 10 * nw) AS ok_word_len,
-         |  (10 * nsym < nw) AS ok_symbol_ratio,
-         |  (nstop >= 2) AS ok_stopwords,
-         |  ((nw >= 50 AND nw <= 100000) AND (nsp >= 3 * nw AND nsp <= 10 * nw)
-         |    AND (10 * nsym < nw) AND (nstop >= 2)) AS keep
-         |FROM t""".stripMargin,
-
-    // q82: q25's per-element dot-product machinery for a 5-query
-    // batch; identical (round(cos,6) desc, id asc) ordering pin
-    "q82_ann_batch" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-        |  FROM embeddings WHERE vec_id IN (0, 1, 2, 3, 4)),
-        |qx AS (SELECT query_id, generate_subscripts(qv, 1) AS i,
-        |    CAST(unnest(qv) AS DOUBLE) AS y FROM q),
-        |ex AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-        |    CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-        |dots AS (SELECT query_id, vec_id,
-        |    sum(x * y) AS dot, sum(x * x) AS na
-        |  FROM ex JOIN qx USING (i)
-        |  WHERE vec_id <> query_id GROUP BY 1, 2),
-        |nq AS (SELECT query_id, sum(y * y) AS nb FROM qx GROUP BY 1),
-        |r AS (SELECT d.query_id, d.vec_id,
-        |    round(dot / (sqrt(na) * sqrt(nb)), 4) AS cosine,
-        |    row_number() OVER (PARTITION BY d.query_id
-        |      ORDER BY round(dot / (sqrt(na) * sqrt(nb)), 6) DESC,
-        |        d.vec_id ASC) AS rk
-        |  FROM dots d JOIN nq USING (query_id))
-        |SELECT query_id, vec_id, cosine FROM r WHERE rk <= 10""".stripMargin,
-
-    // q85: the same corpus-trained Laplace bigram model in SQL — the
-    // bigram stream from 1-based list indexing, both count tables, the
-    // scalar vocabulary, and the identical integer rounding
-    "q85_bigram_likelihood" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH t AS (SELECT doc_id, $wordsSql AS ws FROM documents),
-         |b AS (SELECT doc_id, ws[CAST(i AS INTEGER)] AS w1,
-         |    ws[CAST(i AS INTEGER) + 1] AS w2
-         |  FROM t, UNNEST(range(1, len(ws))) AS u(i)
-         |  WHERE len(ws) >= 2),
-         |c12 AS (SELECT w1, w2, count(*) AS c12 FROM b GROUP BY 1, 2),
-         |c1 AS (SELECT w1, count(*) AS c1 FROM b GROUP BY 1),
-         |v AS (SELECT count(DISTINCT w) AS vocab
-         |  FROM (SELECT unnest(ws) AS w FROM t) q),
-         |s AS (SELECT b.doc_id,
-         |    ${ratioScaledSql("c12.c12 + 1", "c1.c1 + v.vocab", 6)} AS p6
-         |  FROM b JOIN c12 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v),
-         |d AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-         |    CAST(sum(p6) AS BIGINT) AS sum_p_e6,
-         |    min(p6) AS min_p_e6, max(p6) AS max_p_e6
-         |  FROM s GROUP BY 1)
-         |SELECT t.doc_id, coalesce(n_bigrams, 0) AS n_bigrams,
-         |  coalesce(sum_p_e6, 0) AS sum_p_e6,
-         |  coalesce(min_p_e6, 0) AS min_p_e6,
-         |  coalesce(max_p_e6, 0) AS max_p_e6
-         |FROM t LEFT JOIN d USING (doc_id)""".stripMargin
-    },
-
-    // q84: the q80 apportionment CTE + the q18 quality rational as its
-    // scaled-integer form + a per-source cumulative cut — float-free
-    // end to end (quality_e4 via ratioScaledSql, integer window sums)
-    "q84_mixture_select" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      val (nWords, stopHits, punct, len) = (qNWords, qStopHits, qPunct, qLen)
-      val (scoreNum, scoreDen) = (qScoreNum, qScoreDen)
-      s"""WITH scored AS (SELECT doc_id, source,
-         |    CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT) AS n_tokens,
-         |    ${ratioScaledSql(scoreNum, scoreDen, 4)} AS quality_e4
-         |  FROM documents),
-         |a AS (${Apportion.largestRemainderSql("scored", "source", "n_tokens", 10000L)}),
-         |s AS (SELECT scored.*, a.alloc,
-         |    CAST(sum(n_tokens) OVER (PARTITION BY scored.source
-         |      ORDER BY quality_e4 DESC, doc_id ASC
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-         |  FROM scored JOIN a ON a.source = scored.source)
-         |SELECT doc_id, source, n_tokens, quality_e4, cum_tokens
-         |FROM s WHERE cum_tokens <= alloc""".stripMargin
-    },
-
-    // q83: md5-fingerprint duplicate exposure counted corpus-wide,
-    // attributed per source; all longs
-    "q83_data_card" ->
-      s"""WITH base AS (SELECT doc_id, source, lang,
-         |    CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT) AS nt,
-         |    CAST(length(text) AS BIGINT) AS nc,
-         |    md5($wsNorm) AS fp
-         |  FROM documents),
-         |dup AS (SELECT fp FROM base GROUP BY fp HAVING count(*) >= 2)
-         |SELECT source, count(*) AS n_docs,
-         |  CAST(sum(nt) AS BIGINT) AS n_tokens,
-         |  CAST(sum(nc) AS BIGINT) AS n_chars,
-         |  CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-         |  CAST(sum(CASE WHEN dup.fp IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_docs
-         |FROM base LEFT JOIN dup ON base.fp = dup.fp
-         |GROUP BY 1""".stripMargin,
-
-    // q93: the same distinct (source, fingerprint) reduction, pairwise
-    // on the md5 over the complete source-pair grid; Jaccard in the
-    // e4-scaled integer form (HUGEINT-exact)
-    "q93_source_overlap" ->
-      s"""WITH f AS (SELECT DISTINCT source AS src, md5($wsNorm) AS fp
-         |  FROM documents),
-         |s AS (SELECT src, count(*) AS n FROM f GROUP BY 1),
-         |p AS (SELECT a.src AS src_a, b.src AS src_b,
-         |    count(*) AS n_shared
-         |  FROM f a JOIN f b ON a.fp = b.fp AND a.src < b.src
-         |  GROUP BY 1, 2),
-         |g AS (SELECT sa.src AS src_a, sb.src AS src_b,
-         |    sa.n AS n_a, sb.n AS n_b
-         |  FROM s sa, s sb WHERE sa.src < sb.src)
-         |SELECT g.src_a, g.src_b,
-         |  coalesce(p.n_shared, 0) AS n_shared, g.n_a, g.n_b,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "coalesce(p.n_shared, 0)",
-              "g.n_a + g.n_b - coalesce(p.n_shared, 0)", 4)} AS jaccard_e4
-         |FROM g LEFT JOIN p ON p.src_a = g.src_a AND p.src_b = g.src_b""".stripMargin,
-
-    // q94: keep-first survivor per fingerprint via min(doc_id), impact
-    // attributed per source; integer sums cast to BIGINT (the r10
-    // HUGEINT lesson)
-    "q94_dedup_impact" ->
-      s"""WITH base AS (SELECT doc_id, source,
-         |    CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT) AS nt,
-         |    md5($wsNorm) AS fp
-         |  FROM documents),
-         |m AS (SELECT fp, min(doc_id) AS keep_id FROM base GROUP BY 1)
-         |SELECT source, count(*) AS n_docs,
-         |  CAST(sum(CASE WHEN doc_id <> keep_id THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
-         |  CAST(sum(CASE WHEN doc_id <> keep_id THEN nt ELSE 0 END) AS BIGINT) AS tokens_removed
-         |FROM base JOIN m USING (fp) GROUP BY 1""".stripMargin,
-
-    // q95: same inverted-index pair reduction as the Jaccard oracle;
-    // the threshold is the integer cross-multiplication and the two
-    // directed containments are e4-scaled integers (HUGEINT-exact)
-    "q95_containment_pairs" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH t AS (SELECT doc_id, $wordsSql AS ws FROM documents),
-         |sh AS (SELECT doc_id, unnest(list_distinct(
-         |    [ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] for i in range(1, len(ws)-1)])) AS shingle
-         |  FROM t WHERE len(ws) >= 3),
-         |sz AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-         |pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-         |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT doc_a, doc_b, inter, sa.n_sh AS n_a, sb.n_sh AS n_b,
-         |  ${ratioScaledSql("inter", "sa.n_sh", 4)} AS cont_a_e4,
-         |  ${ratioScaledSql("inter", "sb.n_sh", 4)} AS cont_b_e4
-         |FROM pairs
-         |JOIN sz sa ON sa.doc_id = doc_a
-         |JOIN sz sb ON sb.doc_id = doc_b
-         |WHERE inter * 10 >= 6 * least(sa.n_sh, sb.n_sh)""".stripMargin
-    },
-
-    // q96: block on the lowercased first token, pair within block,
-    // classical Levenshtein in [1, 3] — both engines implement the
-    // unweighted character-edit DP, and part names are ASCII, so the
-    // distances agree exactly; the Spark-side length prune is a
-    // performance bound subsumed by lev <= 3, not a semantic term
-    "q96_fuzzy_join" ->
-      """WITH p AS (SELECT p_partkey AS k, p_name AS nm,
-        |    lower(split_part(p_name, ' ', 1)) AS blk FROM part)
-        |SELECT a.k AS key_a, b.k AS key_b, a.nm AS name_a, b.nm AS name_b,
-        |  CAST(levenshtein(a.nm, b.nm) AS BIGINT) AS lev
-        |FROM p a JOIN p b ON a.blk = b.blk AND a.k < b.k
-        |WHERE levenshtein(a.nm, b.nm) BETWEEN 1 AND 3""".stripMargin,
-
-    // q97: exact row_number band per source, integer cross-multiplied
-    // cut — bit-identical rank semantics on both engines
-    "q97_percentile_band" ->
-      """WITH r AS (SELECT doc_id, source, n_chars,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY n_chars, doc_id) AS rn,
-        |    count(*) OVER (PARTITION BY source) AS n
-        |  FROM documents)
-        |SELECT doc_id, source, n_chars FROM r
-        |WHERE rn * 100 > 10 * n AND rn * 100 <= 90 * n""".stripMargin,
-
-    // q98: hourly pre-aggregate, trailing-24-observed-rows frame, the
-    // division-free spike test; the window sum casts back to BIGINT
-    // (DuckDB sums BIGINT into HUGEINT — the r10 hash lesson)
-    "q98_burst_hours" ->
-      """WITH h AS (SELECT event_type,
-        |    ((epoch_ns(ts) // 1000000000) // 3600) * 3600 AS hour_start,
-        |    count(*) AS n_events
-        |  FROM events GROUP BY 1, 2),
-        |w AS (SELECT event_type, hour_start, n_events,
-        |    count(*) OVER fr AS trail_n,
-        |    CAST(coalesce(sum(n_events) OVER fr, 0) AS BIGINT) AS trail_sum
-        |  FROM h WINDOW fr AS (PARTITION BY event_type ORDER BY hour_start
-        |    ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING))
-        |SELECT event_type, hour_start, n_events, trail_n, trail_sum
-        |FROM w WHERE trail_n >= 12
-        |  AND n_events * trail_n >= 2 * trail_sum""".stripMargin,
-
-    // q99: the range-join formulation — semantically identical to the
-    // engine's explode-to-contributing-days plan (user counted on day
-    // t iff active in [t-6, t], days restricted to observed days)
-    "q99_rolling_active" ->
-      """WITH ud AS (SELECT DISTINCT user_id,
-        |    (epoch_ns(ts) // 1000000000) // 86400 AS day
-        |  FROM events WHERE user_id IS NOT NULL),
-        |o AS (SELECT DISTINCT day FROM ud)
-        |SELECT o.day, count(DISTINCT ud.user_id) AS n_active
-        |FROM o JOIN ud ON ud.day BETWEEN o.day - 6 AND o.day
-        |GROUP BY 1""".stripMargin,
-
-    // q100: the q82 retrieval oracle with the label disqualifier — the
-    // rank runs over the different-label corpus only, same pinned
-    // (round 6dp desc, id asc) tie-break on both engines
-    "q100_hard_negatives" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv, label AS ql
-        |  FROM embeddings WHERE vec_id IN (0, 1, 2, 3, 4)),
-        |qx AS (SELECT query_id, generate_subscripts(qv, 1) AS i,
-        |    CAST(unnest(qv) AS DOUBLE) AS y FROM q),
-        |ex AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-        |    CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-        |cand AS (SELECT q.query_id, e.vec_id,
-        |    CAST(e.label AS BIGINT) AS neg_label
-        |  FROM embeddings e CROSS JOIN q WHERE e.label <> q.ql),
-        |dots AS (SELECT c.query_id, c.vec_id, c.neg_label,
-        |    sum(ex.x * qx.y) AS dot, sum(ex.x * ex.x) AS na
-        |  FROM cand c JOIN ex ON ex.vec_id = c.vec_id
-        |  JOIN qx ON qx.query_id = c.query_id AND qx.i = ex.i
-        |  GROUP BY 1, 2, 3),
-        |nq AS (SELECT query_id, sum(y * y) AS nb FROM qx GROUP BY 1),
-        |r AS (SELECT d.query_id, d.vec_id, d.neg_label,
-        |    round(dot / (sqrt(na) * sqrt(nb)), 4) AS cosine,
-        |    row_number() OVER (PARTITION BY d.query_id
-        |      ORDER BY round(dot / (sqrt(na) * sqrt(nb)), 6) DESC,
-        |        d.vec_id ASC) AS rk
-        |  FROM dots d JOIN nq USING (query_id))
-        |SELECT query_id, vec_id, cosine, neg_label FROM r
-        |WHERE rk <= 10""".stripMargin,
-
-    // q101: the q29 pair oracle with labels attached to the surviving
-    // pairs and the disagreement filter — same unrounded threshold,
-    // 4dp output rounding
-    "q101_label_noise_pairs" ->
-      """WITH ex AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-        |    CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-        |n AS (SELECT vec_id, sum(x * x) AS nn FROM ex GROUP BY 1),
-        |d AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, sum(a.x * b.x) AS dot
-        |  FROM ex a JOIN ex b ON a.i = b.i AND a.vec_id < b.vec_id
-        |  GROUP BY 1, 2),
-        |p AS (SELECT id_a, id_b,
-        |    round(dot / (sqrt(na.nn) * sqrt(nb.nn)), 4) AS cosine
-        |  FROM d JOIN n na ON na.vec_id = id_a JOIN n nb ON nb.vec_id = id_b
-        |  WHERE dot / (sqrt(na.nn) * sqrt(nb.nn)) >= 0.45)
-        |SELECT id_a, id_b, cosine,
-        |  CAST(la.label AS BIGINT) AS label_a,
-        |  CAST(lb.label AS BIGINT) AS label_b
-        |FROM p JOIN embeddings la ON la.vec_id = id_a
-        |JOIN embeddings lb ON lb.vec_id = id_b
-        |WHERE la.label <> lb.label""".stripMargin,
-
-    // q102: identical row_number semantics (order by n_chars desc,
-    // doc_id asc) on both engines — integer ranks, nothing to round
-    "q102_source_cap" ->
-      """WITH r AS (SELECT doc_id, source, n_chars,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY n_chars DESC, doc_id) AS rn
-        |  FROM documents)
-        |SELECT doc_id, source, n_chars FROM r WHERE rn <= 15""".stripMargin,
-
-    // q103: 10-word line segmentation, doc-frequency over DISTINCT
-    // carrying docs, trim lines seen in more than one doc, stitch
-    // survivors in segment order (string_agg ORDER BY mirrors the
-    // sort_array reassembly). Spark counts frequencies on the
-    // md5-prefix64 line digest (8-byte shuffle keys); the oracle
-    // groups by line TEXT — equal absent 64-bit digest collisions.
-    "q103_line_dedup" ->
-      s"""WITH t AS (SELECT doc_id, $wordsSql AS ws FROM documents),
-         |wx AS (SELECT doc_id, generate_subscripts(ws, 1) AS i,
-         |    unnest(ws) AS w FROM t),
-         |lines AS (SELECT doc_id, (i - 1) // 10 AS seg,
-         |    string_agg(w, ' ' ORDER BY i) AS line
-         |  FROM wx GROUP BY 1, 2),
-         |freq AS (SELECT line, count(DISTINCT doc_id) AS n_docs
-         |  FROM lines GROUP BY 1),
-         |kept AS (SELECT l.doc_id, count(*) AS n_kept,
-         |    string_agg(l.line, ' ' ORDER BY l.seg) AS text_trimmed
-         |  FROM lines l JOIN freq f USING (line)
-         |  WHERE f.n_docs <= 1 GROUP BY 1),
-         |tot AS (SELECT doc_id, count(*) AS n_lines FROM lines GROUP BY 1)
-         |SELECT d.doc_id, coalesce(tot.n_lines, 0) AS n_lines,
-         |  coalesce(kept.n_kept, 0) AS n_kept,
-         |  coalesce(kept.text_trimmed, '') AS text_trimmed
-         |FROM documents d
-         |LEFT JOIN tot ON tot.doc_id = d.doc_id
-         |LEFT JOIN kept ON kept.doc_id = d.doc_id""".stripMargin,
-
-    // q104: EXACT output contract with q22 — one oracle gates both the
-    // posting-join and the prefix-filtered plan (a prefix-filter bug =
-    // a missing pair = hash mismatch)
-    "q104_jaccard_prefix_join" -> jaccardSql,
-
-    // q105/q106: graduated recall gates (the q26/q31 shape) — exact
-    // top-10 surface, recall_ok measured in-engine
-    "q105_ann_quantized" -> annTop10Sql(",\n  true AS recall_ok"),
-    "q106_ann_pq" -> annTop10Sql(",\n  true AS recall_ok"),
-    "q172_ann_matryoshka" -> annTop10Sql(",\n  true AS recall_ok"),
-
-    // q108: the 5 PageRank iterations unrolled as a CTE chain — pure
-    // BIGINT arithmetic (e6 mass, // floor division) mirrors
-    // GraphRank.pageRank's IntegralDivide lineage exactly
-    "q108_pagerank" -> {
-      def iter(k: Int) =
-        s"""r$k AS (SELECT n.node,
-           |    (15000000 + 85 * coalesce(s.c, 0)) // 100 AS rank_e6
-           |  FROM nodes n LEFT JOIN (
-           |    SELECT e.dst AS node,
-           |      CAST(sum(p.rank_e6 // d.deg) AS BIGINT) AS c
-           |    FROM edges e JOIN r${k - 1} p ON p.node = e.src
-           |    JOIN deg d ON d.node = e.src GROUP BY 1) s
-           |    ON s.node = n.node)""".stripMargin
-      s"""WITH edges AS (SELECT DISTINCT o_custkey * 2 AS src,
-         |    l_suppkey * 2 + 1 AS dst
-         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         |nodes AS (SELECT src AS node FROM edges
-         |  UNION SELECT dst FROM edges),
-         |deg AS (SELECT src AS node, count(*) AS deg FROM edges GROUP BY 1),
-         |r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS rank_e6 FROM nodes),
-         |${(1 to 5).map(iter).mkString(",\n")}
-         |SELECT node, rank_e6 FROM r5""".stripMargin
-    },
-
-    // q109: HLL registers rebuilt nibble-wise from the md5 prefix —
-    // bucket = hex chars 1-2, rank = leading-zero ladder over the
-    // 56-bit remainder (pure integer comparisons, capped at 40), the
-    // harmonic sum as BIGINT, and the raw estimate as the IDENTICAL
-    // literal double chain HllSketch.rawEstimate evaluates
-    "q109_hll_distinct" -> {
-      val bucket = s"(${nibSql("h16", 1)} * 16 + ${nibSql("h16", 2)})"
-      val whi = (3 to 8)
-        .map(i => nibSql("h16", i) + s" * ${1L << (4 * (8 - i))}")
-        .mkString(" + ")
-      val ladder = (1 to 39).map(k =>
-        s"WHEN w >= ${BigInt(2).pow(56 - k)} THEN $k").mkString(" ")
-      s"""WITH h AS (SELECT DISTINCT event_type,
-         |    substring(md5(CAST(user_id AS VARCHAR)), 1, 16) AS h16
-         |  FROM events WHERE user_id IS NOT NULL),
-         |hb AS (SELECT event_type, $bucket AS bucket,
-         |    CAST($whi AS HUGEINT) * 4294967296 +
-         |      ${hex32Sql("h16", 9)} AS w
-         |  FROM h),
-         |ranked AS (SELECT event_type, bucket,
-         |    CASE $ladder ELSE 40 END AS rank FROM hb),
-         |regs AS (SELECT event_type, bucket, max(rank) AS mx
-         |  FROM ranked GROUP BY 1, 2),
-         |grid AS (SELECT g.event_type, b.bucket
-         |  FROM (SELECT DISTINCT event_type FROM events) g,
-         |    (SELECT unnest(range(0, 256)) AS bucket) b),
-         |m AS (SELECT grid.event_type, grid.bucket,
-         |    coalesce(regs.mx, 0) AS mj
-         |  FROM grid LEFT JOIN regs
-         |    ON regs.event_type = grid.event_type
-         |    AND regs.bucket = grid.bucket),
-         |s AS (SELECT event_type,
-         |    CAST(sum(CASE WHEN mj = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS v_zero,
-         |    CAST(sum(CAST(1 AS BIGINT) << (40 - mj)) AS BIGINT) AS s40
-         |  FROM m GROUP BY 1)
-         |SELECT event_type, v_zero, s40,
-         |  CAST(0.7213 AS DOUBLE) / (CAST(1.0 AS DOUBLE) +
-         |    CAST(1.079 AS DOUBLE) / CAST(256.0 AS DOUBLE)) *
-         |    CAST(65536.0 AS DOUBLE) * CAST(1099511627776.0 AS DOUBLE) /
-         |    CAST(s40 AS DOUBLE) AS est_hll
-         |FROM s""".stripMargin
-    },
-
-    // q114: the GLOBAL HLL computed directly from rows — equality with
-    // the engine's merged per-type partials proves lossless merge
-    "q114_hll_rollup" -> {
-      val bucket = s"(${nibSql("h16", 1)} * 16 + ${nibSql("h16", 2)})"
-      val whi = (3 to 8)
-        .map(i => nibSql("h16", i) + s" * ${1L << (4 * (8 - i))}")
-        .mkString(" + ")
-      val ladder = (1 to 39).map(k =>
-        s"WHEN w >= ${BigInt(2).pow(56 - k)} THEN $k").mkString(" ")
-      s"""WITH h AS (SELECT DISTINCT
-         |    substring(md5(CAST(user_id AS VARCHAR)), 1, 16) AS h16
-         |  FROM events WHERE user_id IS NOT NULL),
-         |hb AS (SELECT $bucket AS bucket,
-         |    CAST($whi AS HUGEINT) * 4294967296 +
-         |      ${hex32Sql("h16", 9)} AS w
-         |  FROM h),
-         |ranked AS (SELECT bucket, CASE $ladder ELSE 40 END AS rank
-         |  FROM hb),
-         |regs AS (SELECT bucket, max(rank) AS mx FROM ranked GROUP BY 1),
-         |m AS (SELECT b.bucket, coalesce(regs.mx, 0) AS mj
-         |  FROM (SELECT unnest(range(0, 256)) AS bucket) b
-         |  LEFT JOIN regs ON regs.bucket = b.bucket),
-         |s AS (SELECT
-         |    CAST(sum(CASE WHEN mj = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS v_zero,
-         |    CAST(sum(CAST(1 AS BIGINT) << (40 - mj)) AS BIGINT) AS s40
-         |  FROM m)
-         |SELECT v_zero, s40,
-         |  CAST(0.7213 AS DOUBLE) / (CAST(1.0 AS DOUBLE) +
-         |    CAST(1.079 AS DOUBLE) / CAST(256.0 AS DOUBLE)) *
-         |    CAST(65536.0 AS DOUBLE) * CAST(1099511627776.0 AS DOUBLE) /
-         |    CAST(s40 AS DOUBLE) AS est_hll
-         |FROM s""".stripMargin
-    },
-
-    // q115: identical top-k tie order (count desc, key asc); shares
-    // through the shared exact-rounding identity
-    "q115_skew_report" ->
-      s"""WITH c AS (SELECT l_partkey, count(*) AS n_rows_key
-         |  FROM lineitem GROUP BY 1),
-         |t AS (SELECT CAST(sum(n_rows_key) AS BIGINT) AS n_total,
-         |    count(*) AS n_keys FROM c),
-         |top AS (SELECT * FROM c
-         |  ORDER BY n_rows_key DESC, l_partkey ASC LIMIT 10)
-         |SELECT top.l_partkey, top.n_rows_key, t.n_keys, t.n_total,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "top.n_rows_key", "t.n_total", 4)} AS share_e4
-         |FROM top, t""".stripMargin,
-
-    // q116: the q75 exact-sum discipline with SIGNED half-away e6
-    // rounding — sign·((|a|·2e6+|b|) // (2|b|)), HUGEINT end to end
-    "q116_group_trend" -> {
-      def sgn(a: String, b: String) = s"CAST(sign($a) * sign($b) AS BIGINT)"
-      s"""WITH c AS (SELECT event_type,
-         |    epoch_ns(ts) // 86400000000000 AS x,
-         |    CAST(round(value * 100, 0) AS BIGINT) AS y
-         |  FROM events),
-         |s AS (SELECT event_type, count(*) AS n,
-         |    sum(CAST(x AS HUGEINT)) AS sx, sum(CAST(y AS HUGEINT)) AS sy,
-         |    sum(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS sxx,
-         |    sum(CAST(x AS HUGEINT) * CAST(y AS HUGEINT)) AS sxy
-         |  FROM c GROUP BY 1),
-         |v AS (SELECT event_type, n, sx, sy,
-         |    CAST(n AS HUGEINT) * sxy - sx * sy AS num,
-         |    CAST(n AS HUGEINT) * sxx - sx * sx AS vx
-         |  FROM s),
-         |w AS (SELECT event_type, n, num, vx,
-         |    sy * vx - num * sx AS inum,
-         |    CAST(n AS HUGEINT) * vx AS iden
-         |  FROM v)
-         |SELECT event_type, n,
-         |  CASE WHEN vx > 0 THEN ${sgn("num", "vx")} *
-         |    CAST((abs(num) * 2000000 + abs(vx)) // (abs(vx) * 2)
-         |      AS BIGINT) END AS slope_e6,
-         |  CASE WHEN vx > 0 THEN ${sgn("inum", "iden")} *
-         |    CAST((abs(inum) * 2000000 + abs(iden)) // (abs(iden) * 2)
-         |      AS BIGINT) END AS intercept_e6
-         |FROM w""".stripMargin
-    },
-
-    // q117: the MIRRORED-LSH pair chain at threshold 0.3 (r12 — the
-    // exact all-pairs CTE is gone from this oracle, matching the
-    // engine's move off the O(n²) kernel) + two unrolled LPA rounds
-    // with the engine's exact argmax tie order (votes desc, label
-    // asc); seeds clamped via coalesce
-    "q117_label_propagation" -> {
-      def round_(k: Int) =
-        s"""v$k AS (SELECT eb.src, l.label AS nl, count(*) AS v
-           |  FROM eb JOIN l${k - 1} l ON l.node = eb.dst
-           |  WHERE l.label IS NOT NULL GROUP BY 1, 2),
-           |b$k AS (SELECT src AS node, nl AS best FROM (
-           |    SELECT src, nl, row_number() OVER (PARTITION BY src
-           |      ORDER BY v DESC, nl ASC) AS rn FROM v$k) WHERE rn = 1),
-           |l$k AS (SELECT s.node, coalesce(s.seed, b$k.best) AS label
-           |  FROM seeds s LEFT JOIN b$k USING (node))""".stripMargin
-      s"""WITH ${lshPairCtes("0.3")},
-         |eb AS (SELECT a AS src, b AS dst FROM e),
-         |seeds AS (SELECT vec_id AS node,
-         |    CASE WHEN vec_id % 4 = 0 THEN CAST(label AS BIGINT) END AS seed
-         |  FROM embeddings),
-         |l0 AS (SELECT node, seed AS label FROM seeds),
-         |${round_(1)},
-         |${round_(2)}
-         |SELECT node AS vec_id, label FROM l2""".stripMargin
-    },
-
-    // q119: full-outer diff with null-safe per-column flags
-    // (IS DISTINCT FROM = Spark's <=> negated); changed_cols via
-    // concat_ws skipping nulls, names in sorted order on both engines
-    "q119_snapshot_diff" ->
-      """WITH inc AS (SELECT o_custkey AS c_custkey,
-        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |      AS i_acctbal
-        |  FROM orders GROUP BY 1),
-        |old AS (SELECT c_custkey, c_name, c_acctbal FROM customer
-        |  WHERE c_custkey % 7 <> 0),
-        |neu AS (SELECT c.c_custkey, c.c_name,
-        |    coalesce(i.i_acctbal, c.c_acctbal) AS c_acctbal
-        |  FROM customer c LEFT JOIN inc i ON i.c_custkey = c.c_custkey
-        |  WHERE c.c_custkey % 5 <> 0),
-        |j AS (SELECT coalesce(o.c_custkey, n.c_custkey) AS c_custkey,
-        |    o.c_custkey IS NOT NULL AS in_old,
-        |    n.c_custkey IS NOT NULL AS in_new,
-        |    CASE WHEN o.c_name IS DISTINCT FROM n.c_name
-        |      THEN 1 ELSE 0 END AS f_name,
-        |    CASE WHEN o.c_acctbal IS DISTINCT FROM n.c_acctbal
-        |      THEN 1 ELSE 0 END AS f_bal
-        |  FROM old o FULL JOIN neu n ON o.c_custkey = n.c_custkey)
-        |SELECT c_custkey,
-        |  CASE WHEN in_old AND NOT in_new THEN 'removed'
-        |       WHEN in_new AND NOT in_old THEN 'added'
-        |       WHEN f_name + f_bal > 0 THEN 'changed'
-        |       ELSE 'unchanged' END AS change,
-        |  CASE WHEN in_old AND in_new THEN CAST(f_name + f_bal AS BIGINT)
-        |       ELSE 0 END AS n_cols_changed,
-        |  CASE WHEN in_old AND in_new THEN concat_ws(',',
-        |      CASE WHEN f_bal = 1 THEN 'c_acctbal' END,
-        |      CASE WHEN f_name = 1 THEN 'c_name' END)
-        |    ELSE '' END AS changed_cols
-        |FROM j""".stripMargin,
-
-    // q120: identical rows-frame window (6 preceding observed days);
-    // trailing average through the exact-rounding identity
-    "q120_rolling_metrics" ->
-      s"""WITH d AS (SELECT event_type,
-         |    epoch_ns(ts) // 86400000000000 AS day, count(*) AS n_events
-         |  FROM events GROUP BY 1, 2),
-         |w AS (SELECT event_type, day, n_events,
-         |    CAST(sum(n_events) OVER win AS BIGINT) AS trail_sum,
-         |    count(*) OVER win AS trail_rows
-         |  FROM d WINDOW win AS (PARTITION BY event_type ORDER BY day
-         |    ROWS BETWEEN 6 PRECEDING AND CURRENT ROW))
-         |SELECT event_type, day, n_events, trail_sum,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "trail_sum", "trail_rows", 4)} AS trail_avg_e4
-         |FROM w""".stripMargin,
-
-    // q121: identical sort order (nm, k), rank-offset candidate join,
-    // full levenshtein on the <= maxDist survivors
-    "q121_sorted_neighborhood" ->
-      """WITH b AS (SELECT c_custkey AS k, lower(c_name) AS nm FROM customer),
-        |r AS (SELECT k, nm, row_number() OVER (ORDER BY nm, k) AS rn
-        |  FROM b),
-        |cand AS (SELECT a.k AS k0, a.nm AS nm0, bb.k AS k1, bb.nm AS nm1
-        |  FROM r a JOIN r bb ON bb.rn BETWEEN a.rn + 1 AND a.rn + 5),
-        |v AS (SELECT *, levenshtein(nm0, nm1) AS lev FROM cand
-        |  WHERE abs(length(nm0) - length(nm1)) <= 2)
-        |SELECT DISTINCT least(k0, k1) AS key_a, greatest(k0, k1) AS key_b,
-        |  CASE WHEN k0 < k1 THEN nm0 ELSE nm1 END AS name_a,
-        |  CASE WHEN k0 < k1 THEN nm1 ELSE nm0 END AS name_b,
-        |  CAST(lev AS BIGINT) AS lev
-        |FROM v WHERE lev BETWEEN 1 AND 2""".stripMargin,
-
-    // q122: DuckDB's native forward ASOF (c.ts <= p.ts picks the least
-    // p.ts >= c.ts); gap via floor division
-    "q122_asof_forward" ->
-      """SELECT c.event_id, c.user_id, p.event_id AS next_purchase_id,
-        |  (epoch_ns(p.ts) - epoch_ns(c.ts)) // 1000000000 AS gap_s
-        |FROM (SELECT * FROM events WHERE event_type = 'click') c
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-        |  ON c.user_id = p.user_id AND c.ts <= p.ts""".stripMargin,
-
-    // q123: identical (ts, event_id) total order; run starts =
-    // row 1 OR null-safe value change; version = running sum of starts;
-    // valid_to = next version's valid_from (half-open intervals)
-    "q123_scd2_history" ->
-      s"""WITH $scd2Ctes
-         |SELECT user_id, version, value, valid_from_ns, valid_to_ns,
-         |  n_events, valid_to_ns IS NULL AS is_current
-         |FROM hist""".stripMargin,
-
-    // q124: same argmax (votes desc, label asc) row_number pick; the
-    // agreement rate through the exact-rounding identity
-    "q124_majority_label" ->
-      s"""WITH c AS (SELECT user_id, event_type AS majority_label,
-         |    count(*) AS n_votes FROM events GROUP BY 1, 2),
-         |w AS (SELECT *,
-         |    CAST(sum(n_votes) OVER (PARTITION BY user_id) AS BIGINT)
-         |      AS n_total,
-         |    count(*) OVER (PARTITION BY user_id) AS n_labels,
-         |    row_number() OVER (PARTITION BY user_id
-         |      ORDER BY n_votes DESC, majority_label ASC) AS rn
-         |  FROM c)
-         |SELECT user_id, majority_label, n_votes, n_total, n_labels,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "n_votes", "n_total", 4)} AS agreement_e4
-         |FROM w WHERE rn = 1""".stripMargin,
-
-    // q125: identical positional token stream (generate_subscripts =
-    // posexplode), adjacency via i+1 self-join, lift through the
-    // exact-rounding identity over HUGEINT products; the LIMIT order
-    // is total (w1/w2 contain no spaces)
-    "q125_collocations" ->
-      s"""WITH d AS (SELECT doc_id, $wordsSql AS ws FROM documents),
-         |t AS (SELECT doc_id, generate_subscripts(ws, 1) AS i,
-         |    unnest(ws) AS w FROM d),
-         |uni AS (SELECT w, count(*) AS c_w FROM t GROUP BY 1),
-         |tot AS (SELECT CAST(sum(c_w) AS BIGINT) AS n_total FROM uni),
-         |bi AS (SELECT a.w AS w1, b.w AS w2, count(*) AS n_pair
-         |  FROM t a JOIN t b ON b.doc_id = a.doc_id AND b.i = a.i + 1
-         |  GROUP BY 1, 2 HAVING count(*) >= 5)
-         |SELECT w1, w2, n_pair, u1.c_w AS c_w1, u2.c_w AS c_w2,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "CAST(n_pair AS HUGEINT) * n_total",
-              "CAST(u1.c_w AS HUGEINT) * u2.c_w", 6)} AS lift_e6
-         |FROM bi JOIN uni u1 ON u1.w = bi.w1
-         |  JOIN uni u2 ON u2.w = bi.w2, tot
-         |ORDER BY lift_e6 DESC, w1 ASC, w2 ASC LIMIT 200""".stripMargin,
-
-    // q126: same capped-basket universe on both sides of the counts;
-    // jaccard through the exact-rounding identity
-    "q126_cooccurrence" ->
-      s"""WITH it AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i
-         |    FROM lineitem),
-         |f AS (SELECT b, i FROM (SELECT b, i,
-         |      count(*) OVER (PARTITION BY b) AS bs FROM it)
-         |  WHERE bs <= 64),
-         |p AS (SELECT a.i AS item_a, c.i AS item_b, count(*) AS n_co
-         |  FROM f a JOIN f c ON c.b = a.b AND a.i < c.i
-         |  GROUP BY 1, 2 HAVING count(*) >= 3),
-         |ic AS (SELECT i, count(*) AS c_i FROM f GROUP BY 1)
-         |SELECT item_a, item_b, n_co, ia.c_i AS n_a, ib.c_i AS n_b,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "n_co", "ia.c_i + ib.c_i - n_co", 6)} AS jaccard_e6
-         |FROM p JOIN ic ia ON ia.i = p.item_a
-         |  JOIN ic ib ON ib.i = p.item_b""".stripMargin,
-
-    // q127: boundaries from reference rank-bins (row_number formula —
-    // the value at rank r is deterministic under ties), value-based
-    // assignment via the boundary list, TVD through the rounding
-    // identity over HUGEINT cross products
-    "q127_bin_drift" ->
-      s"""WITH refv AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2))
-         |      * 100 AS BIGINT) AS v
-         |    FROM orders WHERE o_orderkey % 2 = 0),
-         |curv AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2))
-         |      * 100 AS BIGINT) AS v
-         |    FROM orders WHERE o_orderkey % 2 = 1),
-         |nr AS (SELECT count(*) AS n FROM refv),
-         |rb AS (SELECT v, ((row_number() OVER (ORDER BY v) - 1) * 10)
-         |      // (SELECT n FROM nr) AS bin FROM refv),
-         |bd AS (SELECT bin, max(v) AS b FROM rb WHERE bin < 9
-         |  GROUP BY bin),
-         |bl AS (SELECT list(b ORDER BY b) AS bs FROM bd),
-         |ra AS (SELECT CAST(len(list_filter((SELECT bs FROM bl),
-         |      x -> v > x)) AS BIGINT) AS bin, count(*) AS n_ref
-         |  FROM refv GROUP BY 1),
-         |ca AS (SELECT CAST(len(list_filter((SELECT bs FROM bl),
-         |      x -> v > x)) AS BIGINT) AS bin, count(*) AS n_cur
-         |  FROM curv GROUP BY 1),
-         |j AS (SELECT coalesce(ra.bin, ca.bin) AS bin,
-         |    coalesce(n_ref, 0) AS n_ref, coalesce(n_cur, 0) AS n_cur
-         |  FROM ra FULL JOIN ca ON ra.bin = ca.bin),
-         |t0 AS (SELECT j.*, bd.b AS hi_units,
-         |    CAST((SELECT n FROM nr) AS HUGEINT) AS nrt,
-         |    CAST(sum(n_cur) OVER () AS HUGEINT) AS nct
-         |  FROM j LEFT JOIN bd ON bd.bin = j.bin),
-         |t AS (SELECT *, sum(abs(CAST(n_ref AS HUGEINT) * nct -
-         |      CAST(n_cur AS HUGEINT) * nrt)) OVER () AS tvd_num
-         |  FROM t0)
-         |SELECT bin, hi_units, n_ref, n_cur,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "n_ref", "nrt", 6)} AS share_ref_e6,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "n_cur", "nct", 6)} AS share_cur_e6,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "tvd_num", "2 * nrt * nct", 6)} AS tvd_e6
-         |FROM t""".stripMargin,
-
-    // q128: same md5-hash cumulative-weight line; picks at stride
-    // crossings via HUGEINT floor division
-    "q128_weighted_sample" ->
-      """WITH b AS (SELECT doc_id,
-        |    greatest(coalesce(n_chars, 0), 0) AS weight,
-        |    md5(CAST(doc_id AS VARCHAR)) AS h FROM documents
-        |  WHERE doc_id IS NOT NULL),
-        |c AS (SELECT doc_id, weight,
-        |    CAST(sum(weight) OVER (ORDER BY h, doc_id
-        |      ROWS UNBOUNDED PRECEDING) AS HUGEINT) AS cum,
-        |    CAST(sum(weight) OVER () AS HUGEINT) AS tot FROM b)
-        |SELECT doc_id, weight, CAST(cum AS BIGINT) AS cum_w,
-        |  CAST((cum * 200) // tot
-        |    - ((cum - weight) * 200) // tot AS BIGINT) AS n_picks
-        |FROM c
-        |WHERE (cum * 200) // tot > ((cum - weight) * 200) // tot"""
-        .stripMargin,
-
-    // q129: q76's doubled-units median/MAD kernel over q120's daily
-    // grid; the anomaly flag compares the ROUNDED z (identical in
-    // both engines) against 3.0
-    "q129_metric_anomalies" -> {
-      def p50(rnc: String, v: String) =
-        s"""max(CASE WHEN $rnc = CAST(floor(0.5 * CAST(n - 1 AS DOUBLE)) AS BIGINT) + 1 THEN $v END)
-           | + max(CASE WHEN $rnc = CAST(ceil(0.5 * CAST(n - 1 AS DOUBLE)) AS BIGINT) + 1 THEN $v END)""".stripMargin
-      s"""WITH dly AS (SELECT event_type,
-         |    epoch_ns(ts) // 86400000000000 AS day, count(*) AS n_events
-         |  FROM events GROUP BY 1, 2),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY event_type
-         |      ORDER BY n_events) AS rn,
-         |    count(*) OVER (PARTITION BY event_type) AS n FROM dly),
-         |m AS (SELECT event_type, ${p50("rn", "n_events")} AS med2
-         |  FROM r GROUP BY 1),
-         |d AS (SELECT r.event_type, r.n_events, r.n,
-         |    abs(r.n_events * 2 - m.med2) AS dev2
-         |  FROM r JOIN m USING (event_type)),
-         |d2 AS (SELECT *, row_number() OVER (PARTITION BY event_type
-         |    ORDER BY dev2) AS drn FROM d),
-         |md AS (SELECT event_type, ${p50("drn", "dev2")} AS mad4
-         |  FROM d2 GROUP BY 1),
-         |z AS (SELECT dly.event_type, dly.day, dly.n_events, m.med2,
-         |    md.mad4,
-         |    CASE WHEN md.mad4 > 0 THEN
-         |      round(CAST(dly.n_events * 2 - m.med2 AS DOUBLE) * 2.0
-         |        / (1.4826 * CAST(md.mad4 AS DOUBLE)), 4) + 0.0
-         |    END AS robust_z
-         |  FROM dly JOIN m USING (event_type) JOIN md USING (event_type))
-         |SELECT *, CASE WHEN robust_z IS NOT NULL
-         |    AND abs(robust_z) >= 3.0 THEN true ELSE false END
-         |  AS is_anomaly FROM z""".stripMargin
-    },
-
-    // q130: identical e6 quantization per element (one IEEE multiply +
-    // round), exact HUGEINT sums, signed/wide rounding identities
-    "q130_label_prototypes" ->
-      s"""WITH u AS (SELECT CAST(label AS BIGINT) AS label,
-         |    CAST(generate_subscripts(embedding, 1) AS BIGINT) AS dim,
-         |    CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000, 0)
-         |      AS BIGINT) AS u
-         |  FROM embeddings),
-         |s AS (SELECT label, dim, count(*) AS n,
-         |    sum(CAST(u AS HUGEINT)) AS s,
-         |    sum(CAST(u AS HUGEINT) * CAST(u AS HUGEINT)) AS ss
-         |  FROM u GROUP BY 1, 2)
-         |SELECT label, dim, n,
-         |  ${graft.functions.ExactRound.ratioScaledSignedSql(
-              "s", "n", 0)} AS mean_e6,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "CAST(n AS HUGEINT) * ss - s * s",
-              "CAST(n AS HUGEINT) * n", 0)} AS var_e12
-         |FROM s""".stripMargin,
-
-    // q131: one grouped pass; flags inline
-    "q131_k_anonymity" ->
-      """SELECT c_nationkey, c_mktsegment, count(*) AS class_size,
-        |  count(DISTINCT c_acctbal) AS n_sensitive,
-        |  count(*) >= 5 AS k_anonymous,
-        |  count(DISTINCT c_acctbal) >= 3 AS l_diverse
-        |FROM customer GROUP BY 1, 2""".stripMargin,
-
-    // q132: the oracle is the FULL recompute — merging the 4/5 + 1/5
-    // partial states must reproduce it exactly (mergeable-state
-    // identity)
-    "q132_incremental_agg" ->
-      s"""WITH u AS (SELECT o_custkey,
-         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-         |      AS u FROM orders),
-         |s AS (SELECT o_custkey, count(*) AS n,
-         |    sum(CAST(u AS HUGEINT)) AS s, min(u) AS mn, max(u) AS mx
-         |  FROM u GROUP BY 1)
-         |SELECT o_custkey, n, CAST(s AS BIGINT) AS sum_units,
-         |  mn AS min_units, mx AS max_units,
-         |  ${graft.functions.ExactRound.ratioScaledSignedSql(
-              "s", "n", 0)} AS mean_units
-         |FROM s""".stripMargin,
-
-    // q133: q130's prototype CTE inlined; exact HUGEINT squared-L2,
-    // argmin with cand-label tie-break, confusion tally
-    "q133_prototype_confusion" ->
-      s"""WITH $protoConfusionCtes
-         |SELECT true_label, assigned_label, n_vecs FROM conf""".stripMargin,
-
-    // q203: q201's t/j derivation with the score kept as its e4
-    // integer; equal-width bins (top edge clamped), exact e6 per-bin
-    // rationals, ECE re-aggregating the SAME rounded gaps
-    "q203_calibration" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH t AS (SELECT doc_id,
-         |    ${ratioScaledSql(qScoreNum, qScoreDen, 4)} AS q_e4,
-         |    $qNWords AS nw,
-         |    CAST(length(regexp_replace(text, '\\s+', '', 'g'))
-         |      AS BIGINT) AS nsp,
-         |    CAST(length(text) - length(regexp_replace(text, '#', '', 'g'))
-         |      + length(regexp_replace(text, '\\.{3,}|…', '@', 'g'))
-         |      - length(regexp_replace(text, '\\.{3,}|…', '', 'g'))
-         |      AS BIGINT) AS nsym,
-         |    CAST(len(list_filter($wordsSql,
-         |      w -> w IN ('the', 'a', 'of', 'to', 'and'))) AS BIGINT)
-         |      AS nstop
-         |  FROM documents),
-         |j AS (SELECT q_e4,
-         |    ((nw >= 50 AND nw <= 100000)
-         |      AND (nsp >= 3 * nw AND nsp <= 10 * nw)
-         |      AND (10 * nsym < nw) AND (nstop >= 2)) AS keep
-         |  FROM t),
-         |b AS (SELECT least(q_e4 // 1000, 9) AS bin,
-         |    count(*) AS n_rows, sum(q_e4) AS sum_q,
-         |    sum(CASE WHEN keep THEN 1 ELSE 0 END) AS n_pos
-         |  FROM j GROUP BY 1),
-         |c AS (SELECT bin, n_rows, n_pos,
-         |    ${ratioScaledSql("sum_q", "n_rows", 2)} AS conf_e6,
-         |    ${ratioScaledSql("n_pos", "n_rows", 6)} AS acc_e6
-         |  FROM b),
-         |g AS (SELECT *, abs(conf_e6 - acc_e6) AS gap_e6 FROM c)
-         |SELECT CAST(bin AS BIGINT) AS bin, n_rows,
-         |  CAST(n_pos AS BIGINT) AS n_pos, conf_e6, acc_e6, gap_e6,
-         |  ${ratioScaledSql(
-             "sum(CAST(n_rows AS HUGEINT) * gap_e6) OVER ()",
-             "sum(n_rows) OVER ()", 0)} AS ece_e6
-         |FROM g""".stripMargin
-    },
-
-    // q223: same relative day edges, same distinct-entity overlap
-    "q223_embargo_split" ->
-      """WITH b AS (SELECT user_id AS ent,
-        |    epoch_ns(ts) // 86400000000000 AS day
-        |  FROM events),
-        |t AS (SELECT ent, day, CASE
-        |    WHEN day > (SELECT max(day) FROM b) - 7 THEN 'test'
-        |    WHEN day > (SELECT max(day) FROM b) - 10 THEN 'embargo'
-        |    ELSE 'train' END AS split
-        |  FROM b),
-        |per AS (SELECT split, count(*) AS n_events,
-        |    min(day) AS first_day, max(day) AS last_day
-        |  FROM t GROUP BY 1),
-        |ents AS (SELECT DISTINCT split, ent FROM t),
-        |us AS (SELECT split, count(*) AS n_entities
-        |  FROM ents GROUP BY 1),
-        |ov AS (SELECT e.split, count(*) AS n_train_overlap
-        |  FROM ents e JOIN ents tr
-        |    ON tr.split = 'train' AND tr.ent = e.ent
-        |  GROUP BY 1)
-        |SELECT per.split, per.n_events,
-        |  coalesce(us.n_entities, 0) AS n_entities,
-        |  coalesce(ov.n_train_overlap, 0) AS n_train_overlap,
-        |  per.first_day, per.last_day
-        |FROM per
-        |LEFT JOIN us ON us.split = per.split
-        |LEFT JOIN ov ON ov.split = per.split""".stripMargin,
-
-    // q222: the mirrored-LSH pair surface (p = verified a<b pairs),
-    // then the naive x<y<z triangle join — sound for the oracle's
-    // bounded pair volume; the engine's orientation counts the same
-    // triangles exactly once each
-    "q222_dedup_graph_triangles" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH ${lshPairCtes("0.45")},
-         |ed AS (SELECT id_a AS u, id_b AS v FROM p),
-         |deg AS (SELECT node, count(*) AS degree
-         |  FROM (SELECT u AS node FROM ed
-         |    UNION ALL SELECT v AS node FROM ed) GROUP BY 1),
-         |tri AS (SELECT e1.u AS x, e1.v AS y, e2.v AS z
-         |  FROM ed e1 JOIN ed e2 ON e2.u = e1.v
-         |  JOIN ed e3 ON e3.u = e1.u AND e3.v = e2.v),
-         |pt AS (SELECT node, count(*) AS triangles
-         |  FROM (SELECT x AS node FROM tri
-         |    UNION ALL SELECT y AS node FROM tri
-         |    UNION ALL SELECT z AS node FROM tri) GROUP BY 1)
-         |SELECT d.node, d.degree,
-         |  coalesce(pt.triangles, 0) AS triangles,
-         |  ${ratioScaledSql("2 * coalesce(pt.triangles, 0)",
-             "d.degree * (d.degree - 1)", 6)} AS clustering_e6
-         |FROM deg d LEFT JOIN pt ON pt.node = d.node""".stripMargin
-    },
-
-    // q219: same daily aggregate as q190, ceil-mean allowance, then
-    // the two cumulative windows of the prefix-form CUSUM
-    "q219_cusum_drift" -> cusumDailyOracleSql,
-
-    // q224: the STREAM path must equal the batch prefix form
-    // row-for-row — same oracle verbatim (the q192 stream-equals-
-    // batch contract, state-machine edition)
-    "q224_stream_cusum" -> cusumDailyOracleSql,
-
-    // q220: the q204 mirror with weight 1 per doc, wrapped in the
-    // same share/weight rationals
-    "q220_mix_reweight" ->
-      Apportion.reweightToAllocationSql("documents", "source",
-        3L, 4L, 3L),
-
-    // q221: the same md5-prefix nesting rule (q49 thresholds), one
-    // unnest, per-word min level, cumulative rollup over 4 rows
-    "q221_vocab_growth" ->
-      s"""WITH d0 AS (SELECT
-         |    substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS hp,
-         |    $wordsSql AS ws
-         |  FROM documents),
-         |d AS (SELECT CASE WHEN hp < '20' THEN 0
-         |    WHEN hp < '40' THEN 1 WHEN hp < '80' THEN 2
-         |    ELSE 3 END AS lvl, ws
-         |  FROM d0),
-         |pd AS (SELECT lvl, count(*) AS nd,
-         |    sum(CAST(len(ws) AS BIGINT)) AS nt
-         |  FROM d GROUP BY 1),
-         |mw AS (SELECT w, min(lvl) AS lvl
-         |  FROM (SELECT lvl, unnest(ws) AS w FROM d) GROUP BY 1),
-         |mv AS (SELECT lvl, count(*) AS v FROM mw GROUP BY 1),
-         |lv AS (SELECT CAST(unnest(range(0, 4)) AS BIGINT) AS level)
-         |SELECT level,
-         |  CAST(sum(coalesce(pd.nd, 0)) OVER (ORDER BY level
-         |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_docs,
-         |  CAST(sum(coalesce(pd.nt, 0)) OVER (ORDER BY level
-         |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_tokens,
-         |  CAST(sum(coalesce(mv.v, 0)) OVER (ORDER BY level
-         |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS vocab
-         |FROM lv
-         |LEFT JOIN pd ON pd.lvl = lv.level
-         |LEFT JOIN mv ON mv.lvl = lv.level""".stripMargin,
-
-    // q218: the same marker-run counts (literal-@ corrected), the
-    // same cleared FK rational, the same rounded-value mean
-    "q218_readability" -> {
-      import graft.functions.ExactRound.ratioScaledSignedSql
-      val sRuns = "length(regexp_replace(text, '[.!?]+', '@', 'g')) " +
-        "- length(regexp_replace(regexp_replace(text, '[.!?]+', '@', " +
-        "'g'), '@', '', 'g'))"
-      val yRuns = "length(regexp_replace(text, '[aeiouyAEIOUY]+', " +
-        "'@', 'g')) - length(regexp_replace(regexp_replace(text, " +
-        "'[aeiouyAEIOUY]+', '@', 'g'), '@', '', 'g'))"
-      val at = "(length(text) - length(regexp_replace(text, '@', " +
-        "'', 'g')))"
-      s"""WITH t AS (SELECT source, $qNWords AS w,
-         |    greatest($sRuns - $at, 1) AS s,
-         |    ($yRuns - $at) AS y
-         |  FROM documents),
-         |f AS (SELECT source, ${ratioScaledSignedSql(
-             "39 * CAST(w AS HUGEINT) * w + 1180 * CAST(y AS HUGEINT) * s " +
-               "- 1559 * CAST(s AS HUGEINT) * w",
-             "100 * CAST(s AS HUGEINT) * w", 6)} AS fk_e6
-         |  FROM t)
-         |SELECT source, count(*) AS n_docs,
-         |  ${ratioScaledSignedSql("sum(fk_e6)", "count(*)", 0)}
-         |    AS fk_avg_e6,
-         |  min(fk_e6) AS fk_min_e6, max(fk_e6) AS fk_max_e6
-         |FROM f GROUP BY 1""".stripMargin
-    },
-
-    // q217: the mirrored synth-URL variants through the same
-    // canonicalization stages (fragment strip, scheme/host lowering,
-    // default-port + www strip, trailing-slash strip, tracking-param
-    // filter + param sort), then the dedup rollup
-    "q217_url_canonical_dedup" -> {
-      import graft.functions.UrlCanon
-      s"""WITH u AS (SELECT doc_id,
-         |    ${UrlCanon.synthUrlSql("doc_id")} AS url
-         |  FROM documents),
-         |f AS (SELECT doc_id,
-         |    regexp_replace(url, '#.*', '') AS nf FROM u),
-         |p AS (SELECT doc_id,
-         |    lower(regexp_extract(nf,
-         |      '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-         |    lower(regexp_extract(nf,
-         |      '^[A-Za-z][A-Za-z0-9+.-]*://([^/?]*)', 1)) AS hostport,
-         |    regexp_replace(regexp_extract(nf,
-         |      '^[A-Za-z][A-Za-z0-9+.-]*://[^/?]*([^?]*)', 1),
-         |      '/+$$', '') AS path,
-         |    list_sort(list_filter(
-         |      string_split(regexp_extract(nf, '\\?(.*)$$', 1), '&'),
-         |      q -> q <> '' AND NOT regexp_matches(q,
-         |        '${UrlCanon.trackParamRe}'))) AS params
-         |  FROM f),
-         |c AS (SELECT doc_id, scheme || '://' ||
-         |    regexp_replace(CASE
-         |      WHEN scheme = 'https'
-         |        THEN regexp_replace(hostport, ':443$$', '')
-         |      WHEN scheme = 'http'
-         |        THEN regexp_replace(hostport, ':80$$', '')
-         |      ELSE hostport END, '^www\\.', '') || path ||
-         |    CASE WHEN len(params) > 0
-         |      THEN '?' || array_to_string(params, '&')
-         |      ELSE '' END AS canonical_url
-         |  FROM p)
-         |SELECT canonical_url, count(*) AS n_docs,
-         |  min(doc_id) AS first_doc
-         |FROM c GROUP BY 1""".stripMargin
-    },
-
-    // q216: the oracle never touches bytes (the q193 contract) — it
-    // re-derives gray levels from the mirrored variant generator at
-    // the resampled source indices, rebuilds the dHash bit table, and
-    // runs the SAME band-candidate + exact-hamming verify in SQL
-    "q216_image_dhash_neardup" -> dhashNearDupOracleSql(None),
-
-    // q225: the identical dHash mirror with the bucket-size guard in
-    // the candidate stage (band buckets > 16 drop before the join)
-    "q225_dhash_capped_bands" -> dhashNearDupOracleSql(Some(16L)),
-
-    // q226: the q23 exact-Jaccard pair mirror wrapped as a CTE, then
-    // the source rollup with C(n,2)-diagonal pair-rate denominators
-    "q226_cross_source_dup" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH p2 AS ($jaccardSql),
-         |s AS (SELECT doc_id, source FROM documents),
-         |c AS (SELECT source, count(*) AS n FROM documents GROUP BY 1),
-         |m AS (SELECT least(sa.source, sb.source) AS source_a,
-         |    greatest(sa.source, sb.source) AS source_b,
-         |    count(*) AS n_pairs
-         |  FROM p2 JOIN s sa ON sa.doc_id = p2.doc_a
-         |  JOIN s sb ON sb.doc_id = p2.doc_b
-         |  GROUP BY 1, 2)
-         |SELECT m.source_a, m.source_b, m.n_pairs,
-         |  ${ratioScaledSql("m.n_pairs",
-             "CASE WHEN m.source_a = m.source_b " +
-               "THEN (CAST(ca.n AS HUGEINT) * (ca.n - 1)) // 2 " +
-               "ELSE CAST(ca.n AS HUGEINT) * cb.n END", 6)} AS rate_e6
-         |FROM m
-         |JOIN c ca ON ca.source = m.source_a
-         |JOIN c cb ON cb.source = m.source_b""".stripMargin
-    },
-
-    // q227: positional 8-grams via a range lateral (1-based; the
-    // engine's 0-based posexplode cancels — only aggregates export),
-    // occurrence counts >= 2, then the identical running-max
-    // union-of-intervals sweep
-    "q227_dup_span_coverage" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      val k = 8
-      val gramExpr = (0 until k).map(j => s"ws[i+$j]").mkString(" || ' ' || ")
-      s"""WITH t AS (SELECT doc_id, $wordsSql AS ws FROM documents),
-         |p AS (SELECT doc_id, ws, unnest(range(1, len(ws)-${k - 2})) AS i
-         |  FROM t WHERE len(ws) >= $k),
-         |g AS (SELECT doc_id, i AS pos, $gramExpr AS gram FROM p),
-         |c AS (SELECT gram, count(*) AS n_occ FROM g GROUP BY 1),
-         |d AS (SELECT g.doc_id, g.pos FROM g JOIN c USING (gram)
-         |  WHERE c.n_occ >= 2),
-         |sw AS (SELECT doc_id, pos,
-         |    max(pos + $k) OVER (PARTITION BY doc_id ORDER BY pos
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-         |      AS prev_end
-         |  FROM d),
-         |per AS (SELECT doc_id, count(*) AS n_dup_spans,
-         |    sum(greatest(pos + $k -
-         |      greatest(coalesce(prev_end, pos), pos), 0)) AS covered
-         |  FROM sw GROUP BY 1)
-         |SELECT t.doc_id, CAST(len(t.ws) AS BIGINT) AS n_tokens,
-         |  CAST(coalesce(per.n_dup_spans, 0) AS BIGINT) AS n_dup_spans,
-         |  CAST(coalesce(per.covered, 0) AS BIGINT) AS covered_tokens,
-         |  ${ratioScaledSql("coalesce(per.covered, 0)", "len(t.ws)", 4)}
-         |    AS dup_cov_e4
-         |FROM t LEFT JOIN per ON per.doc_id = t.doc_id""".stripMargin
-    },
-
-    // q228: q215's t/j score+label derivation; row_number with the
-    // identical (s DESC, doc_id ASC) unique tie-break, integer decile
-    // cut ((rn-1)*10 // n), bounded cumulative window over 10 rows
-    "q228_lift_table" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH t AS (SELECT doc_id,
-         |    ${ratioScaledSql(qScoreNum, qScoreDen, 4)} AS q_e4,
-         |    $qNWords AS nw,
-         |    CAST(length(regexp_replace(text, '\\s+', '', 'g'))
-         |      AS BIGINT) AS nsp,
-         |    CAST(length(text) - length(regexp_replace(text, '#', '', 'g'))
-         |      + length(regexp_replace(text, '\\.{3,}|…', '@', 'g'))
-         |      - length(regexp_replace(text, '\\.{3,}|…', '', 'g'))
-         |      AS BIGINT) AS nsym,
-         |    CAST(len(list_filter($wordsSql,
-         |      w -> w IN ('the', 'a', 'of', 'to', 'and'))) AS BIGINT)
-         |      AS nstop
-         |  FROM documents),
-         |j AS (SELECT doc_id, q_e4 AS s,
-         |    ((nw >= 50 AND nw <= 100000)
-         |      AND (nsp >= 3 * nw AND nsp <= 10 * nw)
-         |      AND (10 * nsym < nw) AND (nstop >= 2)) AS y
-         |  FROM t),
-         |r AS (SELECT doc_id, s, y,
-         |    row_number() OVER (ORDER BY s DESC, doc_id ASC) AS rn
-         |  FROM j),
-         |a AS (SELECT count(*) AS n_total,
-         |    CAST(sum(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS pos_total
-         |  FROM j),
-         |b AS (SELECT ((rn - 1) * 10) // a.n_total AS bucket,
-         |    count(*) AS n_rows,
-         |    CAST(sum(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS n_pos
-         |  FROM r, a GROUP BY 1),
-         |c AS (SELECT bucket, n_rows, n_pos,
-         |    sum(n_pos) OVER (ORDER BY bucket
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      AS cum_pos
-         |  FROM b)
-         |SELECT c.bucket, CAST(c.n_rows AS BIGINT) AS n_rows, c.n_pos,
-         |  ${ratioScaledSql("c.n_pos", "c.n_rows", 6)} AS rate_e6,
-         |  ${ratioScaledSql("CAST(c.n_pos AS HUGEINT) * a.n_total",
-             "CAST(c.n_rows AS HUGEINT) * a.pos_total", 6)} AS lift_e6,
-         |  ${ratioScaledSql("c.cum_pos", "a.pos_total", 6)}
-         |    AS cum_gain_e6
-         |FROM c, a""".stripMargin
-    },
-
-    // q229: q169's batch recomputation with the sliding twist — each
-    // event unnests into BOTH its candidate windows (starts at
-    // (t//1800)·1800 and that minus 1800) before the admission rule,
-    // so the window-end-vs-previous-watermark test runs per
-    // (event, window) pair exactly as the Expand-then-filter engine
-    // order does; late rows can survive in one window and drop from
-    // the other. Sentinels are harness rows and never appear.
-    "q229_sliding_window" ->
-      """WITH ev AS (SELECT event_type,
-        |    epoch_ns(ts) // 1000000000 AS tsec,
-        |    CAST(round(value * 100, 0) AS BIGINT) AS v,
-        |    event_id AS eid
-        |  FROM events),
-        |rng AS (SELECT min(tsec) AS mn, max(tsec) AS mx FROM ev
-        |  WHERE eid % 10 <> 0),
-        |b AS (SELECT event_type, tsec, v,
-        |    CASE WHEN eid % 10 = 0 THEN 2
-        |         ELSE (tsec - mn) * 2 // (mx - mn + 1) END AS bb
-        |  FROM ev, rng),
-        |x AS (SELECT event_type, tsec, v, bb,
-        |    unnest([(tsec // 1800) * 1800 - 1800,
-        |            (tsec // 1800) * 1800]) AS ws
-        |  FROM b),
-        |w AS (SELECT max(tsec) - 1800 AS wl FROM b WHERE bb = 0),
-        |kept AS (SELECT event_type, ws, v FROM x, w
-        |  WHERE bb IN (0, 1) OR ws + 3600 > wl)
-        |SELECT ws AS win_start, event_type,
-        |  count(*) AS n_events, CAST(sum(v) AS BIGINT) AS value_sum
-        |FROM kept GROUP BY 1, 2""".stripMargin,
-
-    // q230: the Lloyd loop unrolled as CTEs (the q108 discipline) —
-    // q130's e6 quantization, HUGEINT squared-L2, (d2, c) argmin,
-    // signed exact-round means with empty clusters inheriting their
-    // previous centroid; one extra assign pass (a4) for the final
-    // membership/inertia under the final centroids
-    "q230_kmeans" -> {
-      import graft.functions.ExactRound.ratioScaledSignedSql
-      def iter(t: Int) =
-        s"""d$t AS (SELECT u.vec_id, c.c,
-           |    sum(CAST(u.u - c.ce6 AS HUGEINT) * (u.u - c.ce6)) AS d2
-           |  FROM u JOIN c${t - 1} c USING (dim) GROUP BY 1, 2),
-           |a$t AS (SELECT vec_id, c, d2 FROM (SELECT vec_id, c, d2,
-           |    row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY d2, c) AS rn FROM d$t) WHERE rn = 1),
-           |c$t AS (SELECT p.c, p.dim, coalesce(nc.m, p.ce6) AS ce6
-           |  FROM c${t - 1} p LEFT JOIN (
-           |    SELECT a.c, u.dim,
-           |      ${ratioScaledSignedSql("sum(CAST(u.u AS HUGEINT))",
-                  "count(*)", 0)} AS m
-           |    FROM a$t a JOIN u USING (vec_id) GROUP BY 1, 2) nc
-           |    ON nc.c = p.c AND nc.dim = p.dim)""".stripMargin
-      s"""WITH u AS (SELECT vec_id,
-         |    CAST(generate_subscripts(embedding, 1) AS BIGINT) AS dim,
-         |    CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000, 0)
-         |      AS BIGINT) AS u
-         |  FROM embeddings),
-         |sd AS (SELECT vec_id, CAST(c AS BIGINT) AS c FROM (
-         |    SELECT vec_id, row_number() OVER (
-         |      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS c
-         |    FROM embeddings) WHERE c < 4),
-         |c0 AS (SELECT sd.c, u.dim, u.u AS ce6
-         |  FROM sd JOIN u USING (vec_id)),
-         |${(1 to 3).map(iter).mkString(",\n")},
-         |d4 AS (SELECT u.vec_id, c.c,
-         |    sum(CAST(u.u - c.ce6 AS HUGEINT) * (u.u - c.ce6)) AS d2
-         |  FROM u JOIN c3 c USING (dim) GROUP BY 1, 2),
-         |a4 AS (SELECT vec_id, c, d2 FROM (SELECT vec_id, c, d2,
-         |    row_number() OVER (PARTITION BY vec_id
-         |      ORDER BY d2, c) AS rn FROM d4) WHERE rn = 1),
-         |sz AS (SELECT c, count(*) AS n_members,
-         |    CAST(sum(d2) // 1000000 AS BIGINT) AS inertia_e6
-         |  FROM a4 GROUP BY 1)
-         |SELECT ct.c, ct.dim, ct.ce6,
-         |  CAST(coalesce(sz.n_members, 0) AS BIGINT) AS n_members,
-         |  coalesce(sz.inertia_e6, 0) AS inertia_e6
-         |FROM c3 ct LEFT JOIN sz USING (c)""".stripMargin
-    },
-
-    // q251: the jaccardSql shingle split per SOURCE, cross-source
-    // distinct, inverted-index self-join, exact e4 containment
-    "q251_source_containment" ->
-      s"""WITH t AS (SELECT source, $wordsSql AS ws FROM documents),
-         |g AS (SELECT DISTINCT source, unnest(
-         |    [ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-         |     for i in range(1, len(ws)-1)]) AS shingle
-         |  FROM t WHERE len(ws) >= 3),
-         |sz AS (SELECT source, count(*) AS n_grams_a FROM g GROUP BY 1),
-         |p AS (SELECT a.source AS src_a, b.source AS src_b,
-         |    count(*) AS n_shared
-         |  FROM g a JOIN g b ON a.shingle = b.shingle
-         |    AND a.source <> b.source
-         |  GROUP BY 1, 2)
-         |SELECT p.src_a, p.src_b, p.n_shared,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "p.n_shared", "sz.n_grams_a", 4)} AS containment_e4
-         |FROM p JOIN sz ON sz.source = p.src_a""".stripMargin,
-
-    // q249/q250: the power steps unrolled — per step a per-vector
-    // HUGEINT dot, a per-dim accumulate, and the signed half-away
-    // e6 renormalization by max |w|; q250 adds one more dot ladder
-    "q249_top_pc" -> topPcSql(3,
-      "SELECT dim, CAST(v AS BIGINT) AS pc_e6 FROM v3"),
-
-    "q250_pc_projection" -> topPcSql(3,
-      s"""SELECT x.vec_id,
-         |  ${graft.functions.ExactRound.ratioScaledSignedSql(
-              "sum(CAST(x.x AS HUGEINT) * v.v)", "1000000", 0)}
-         |    AS proj_e6
-         |FROM x JOIN v3 v USING (dim) GROUP BY 1""".stripMargin),
-
-    // q248: type frequencies off the shared word split, rank by
-    // (freq desc, word asc), exact ⌊log2⌋ via binary-digit length
-    // (no libm), then the q116 signed half-away OLS ladder
-    "q248_zipf_slope" -> {
-      def sgn(a: String, b: String) = s"CAST(sign($a) * sign($b) AS BIGINT)"
-      s"""WITH t AS (SELECT source, unnest($wordsSql) AS w
-         |  FROM documents),
-         |f AS (SELECT source, w, count(*) AS f
-         |  FROM t WHERE w <> '' GROUP BY 1, 2),
-         |r AS (SELECT source, f, row_number() OVER (
-         |    PARTITION BY source ORDER BY f DESC, w ASC) AS r
-         |  FROM f),
-         |p AS (SELECT source,
-         |    CAST(length(bin(r)) - 1 AS BIGINT) AS x,
-         |    CAST(length(bin(f)) - 1 AS BIGINT) AS y
-         |  FROM r),
-         |s AS (SELECT source, count(*) AS n_types,
-         |    sum(CAST(x AS HUGEINT)) AS sx, sum(CAST(y AS HUGEINT)) AS sy,
-         |    sum(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS sxx,
-         |    sum(CAST(x AS HUGEINT) * CAST(y AS HUGEINT)) AS sxy
-         |  FROM p GROUP BY 1),
-         |v AS (SELECT source, n_types, sx, sy,
-         |    CAST(n_types AS HUGEINT) * sxy - sx * sy AS num,
-         |    CAST(n_types AS HUGEINT) * sxx - sx * sx AS vx
-         |  FROM s),
-         |w AS (SELECT source, n_types, num, vx,
-         |    sy * vx - num * sx AS inum,
-         |    CAST(n_types AS HUGEINT) * vx AS iden
-         |  FROM v)
-         |SELECT source, n_types,
-         |  CASE WHEN vx > 0 THEN ${sgn("num", "vx")} *
-         |    CAST((abs(num) * 2000000 + abs(vx)) // (abs(vx) * 2)
-         |      AS BIGINT) END AS slope_e6,
-         |  CASE WHEN vx > 0 THEN ${sgn("inum", "iden")} *
-         |    CAST((abs(inum) * 2000000 + abs(iden)) // (abs(iden) * 2)
-         |      AS BIGINT) END AS intercept_e6
-         |FROM w""".stripMargin
-    },
-
-    // q247: q230's unrolled Lloyd chain (identical seeds/iterations),
-    // then the rank-2 extraction and the same exact-ratio ladders
-    "q247_silhouette" -> {
-      import graft.functions.ExactRound.{ratioScaledSignedSql,
-        ratioScaledSql}
-      def iter(t: Int) =
-        s"""d$t AS (SELECT u.vec_id, c.c,
-           |    sum(CAST(u.u - c.ce6 AS HUGEINT) * (u.u - c.ce6)) AS d2
-           |  FROM u JOIN c${t - 1} c USING (dim) GROUP BY 1, 2),
-           |a$t AS (SELECT vec_id, c, d2 FROM (SELECT vec_id, c, d2,
-           |    row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY d2, c) AS rn FROM d$t) WHERE rn = 1),
-           |c$t AS (SELECT p.c, p.dim, coalesce(nc.m, p.ce6) AS ce6
-           |  FROM c${t - 1} p LEFT JOIN (
-           |    SELECT a.c, u.dim,
-           |      ${ratioScaledSignedSql("sum(CAST(u.u AS HUGEINT))",
-                  "count(*)", 0)} AS m
-           |    FROM a$t a JOIN u USING (vec_id) GROUP BY 1, 2) nc
-           |    ON nc.c = p.c AND nc.dim = p.dim)""".stripMargin
-      s"""WITH u AS (SELECT vec_id,
-         |    CAST(generate_subscripts(embedding, 1) AS BIGINT) AS dim,
-         |    CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000, 0)
-         |      AS BIGINT) AS u
-         |  FROM embeddings),
-         |sd AS (SELECT vec_id, CAST(c AS BIGINT) AS c FROM (
-         |    SELECT vec_id, row_number() OVER (
-         |      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS c
-         |    FROM embeddings) WHERE c < 4),
-         |c0 AS (SELECT sd.c, u.dim, u.u AS ce6
-         |  FROM sd JOIN u USING (vec_id)),
-         |${(1 to 3).map(iter).mkString(",\n")},
-         |d4 AS (SELECT u.vec_id, c.c,
-         |    sum(CAST(u.u - c.ce6 AS HUGEINT) * (u.u - c.ce6)) AS d2
-         |  FROM u JOIN c3 c USING (dim) GROUP BY 1, 2),
-         |r AS (SELECT vec_id, c, d2, row_number() OVER (
-         |    PARTITION BY vec_id ORDER BY d2, c) AS rn FROM d4),
-         |ab AS (SELECT vec_id,
-         |    max(CASE WHEN rn = 1 THEN c END) AS c,
-         |    max(CASE WHEN rn = 1 THEN d2 END) AS a2,
-         |    max(CASE WHEN rn = 2 THEN d2 END) AS b2
-         |  FROM r WHERE rn <= 2 GROUP BY 1),
-         |s AS (SELECT c,
-         |    ${ratioScaledSql("b2 - a2", "b2", 6)} AS s_e6
-         |  FROM ab)
-         |SELECT c, count(*) AS n_members,
-         |  ${ratioScaledSignedSql("sum(s_e6)", "count(*)", 0)}
-         |    AS mean_sil_e6
-         |FROM s GROUP BY 1""".stripMargin
-    },
-
-    // q231: identical cents scaling, the same 19-arm // ladder, the
-    // same pinned e6 expectation VALUES table, exact share + gap
-    "q231_benford_card" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH v AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2))
-         |      * 100 AS BIGINT) AS v
-         |  FROM orders
-         |  WHERE o_totalprice IS NOT NULL
-         |    AND CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-         |      AS BIGINT) > 0),
-         |d AS (SELECT ${graft.operators.Profile
-                 .firstDigitLadderSql("v")} AS digit,
-         |    count(*) AS n
-         |  FROM v GROUP BY 1),
-         |t AS (SELECT CAST(coalesce(sum(n), 0) AS BIGINT) AS total
-         |  FROM d),
-         |e(digit, benford_e6) AS ${graft.operators.Profile
-                .benfordTableSql},
-         |s AS (SELECT CAST(e.digit AS BIGINT) AS digit,
-         |    CAST(coalesce(d.n, 0) AS BIGINT) AS n,
-         |    ${ratioScaledSql("coalesce(d.n, 0)", "t.total", 6)}
-         |      AS share_e6,
-         |    CAST(e.benford_e6 AS BIGINT) AS benford_e6
-         |  FROM e LEFT JOIN d ON d.digit = e.digit, t)
-         |SELECT digit, n, share_e6, benford_e6,
-         |  abs(share_e6 - benford_e6) AS gap_e6
-         |FROM s""".stripMargin
-    },
-
-    // q232: q227's positional grams + the keeper rule (row_number per
-    // gram by (doc, pos)), then the same running-max sweep over
-    // tokens ∪ removal-starts (removals sort first at equal pos) and
-    // the per-doc reconstruction; 1-based positions cancel as in q227
-    "q232_span_removal" -> {
-      val k = 8
-      val gramExpr = (0 until k).map(j => s"ws[i+$j]").mkString(" || ' ' || ")
-      s"""WITH t AS (SELECT doc_id, $wordsSql AS ws FROM documents),
-         |tok AS (SELECT doc_id, i AS pos, ws[i] AS w
-         |  FROM (SELECT doc_id, ws, unnest(range(1, len(ws) + 1)) AS i
-         |    FROM t)),
-         |p AS (SELECT doc_id, ws, unnest(range(1, len(ws)-${k - 2})) AS i
-         |  FROM t WHERE len(ws) >= $k),
-         |g AS (SELECT doc_id, i AS pos, $gramExpr AS gram FROM p),
-         |c AS (SELECT gram, count(*) AS n FROM g GROUP BY 1),
-         |dup AS (SELECT g.gram, g.doc_id, g.pos FROM g JOIN c
-         |  USING (gram) WHERE c.n >= 2),
-         |kp AS (SELECT gram, doc_id AS kd, pos AS kpos FROM (
-         |    SELECT gram, doc_id, pos, row_number() OVER (
-         |      PARTITION BY gram ORDER BY doc_id, pos) AS rn FROM dup)
-         |  WHERE rn = 1),
-         |rem AS (SELECT d.doc_id, d.pos, d.pos + $k AS e
-         |  FROM dup d JOIN kp USING (gram)
-         |  WHERE NOT (d.doc_id = kp.kd AND d.pos = kp.kpos)),
-         |comb AS (SELECT doc_id, pos, w, 1 AS is_tok,
-         |    CAST(NULL AS BIGINT) AS e
-         |  FROM tok
-         |  UNION ALL SELECT doc_id, pos, NULL, 0, e FROM rem),
-         |sw AS (SELECT doc_id, pos, w, is_tok,
-         |    max(e) OVER (PARTITION BY doc_id ORDER BY pos, is_tok
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS me
-         |  FROM comb),
-         |tk AS (SELECT doc_id, pos, w,
-         |    (me IS NOT NULL AND me > pos) AS cov
-         |  FROM sw WHERE is_tok = 1),
-         |per AS (SELECT doc_id, count(*) AS n_tokens,
-         |    CAST(sum(CASE WHEN cov THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_removed
-         |  FROM tk GROUP BY 1),
-         |kept AS (SELECT doc_id, string_agg(w, ' ' ORDER BY pos) AS s
-         |  FROM tk WHERE NOT cov GROUP BY 1)
-         |SELECT per.doc_id, per.n_tokens, per.n_removed,
-         |  md5(coalesce(kept.s, '')) AS kept_fp
-         |FROM per LEFT JOIN kept USING (doc_id)""".stripMargin
-    },
-
-    // q233: q51's bench split (md5 prefix < '1a'), corpus 5-gram
-    // occurrences SEMI-joined against the distinct bench gram set,
-    // then the q232 sweep/rebuild tail (no keeper — every hit
-    // removes)
-    "q233_span_decontaminate" -> {
-      val k = 5
-      val gramExpr = (0 until k).map(j => s"ws[i+$j]").mkString(" || ' ' || ")
-      s"""WITH t AS (SELECT doc_id, $wordsSql AS ws FROM documents),
-         |bench AS (SELECT doc_id FROM documents
-         |  WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '1a'),
-         |ct AS (SELECT t.doc_id, t.ws FROM t
-         |  ANTI JOIN bench USING (doc_id)),
-         |tok AS (SELECT doc_id, i AS pos, ws[i] AS w
-         |  FROM (SELECT doc_id, ws, unnest(range(1, len(ws) + 1)) AS i
-         |    FROM ct)),
-         |bg AS (SELECT DISTINCT $gramExpr AS gram
-         |  FROM (SELECT ws, unnest(range(1, len(ws)-${k - 2})) AS i
-         |    FROM t JOIN bench USING (doc_id) WHERE len(ws) >= $k)),
-         |g AS (SELECT doc_id, i AS pos, $gramExpr AS gram
-         |  FROM (SELECT doc_id, ws, unnest(range(1, len(ws)-${k - 2}))
-         |      AS i
-         |    FROM ct WHERE len(ws) >= $k)),
-         |rem AS (SELECT g.doc_id, g.pos, g.pos + $k AS e
-         |  FROM g SEMI JOIN bg USING (gram)),
-         |comb AS (SELECT doc_id, pos, w, 1 AS is_tok,
-         |    CAST(NULL AS BIGINT) AS e
-         |  FROM tok
-         |  UNION ALL SELECT doc_id, pos, NULL, 0, e FROM rem),
-         |sw AS (SELECT doc_id, pos, w, is_tok,
-         |    max(e) OVER (PARTITION BY doc_id ORDER BY pos, is_tok
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS me
-         |  FROM comb),
-         |tk AS (SELECT doc_id, pos, w,
-         |    (me IS NOT NULL AND me > pos) AS cov
-         |  FROM sw WHERE is_tok = 1),
-         |per AS (SELECT doc_id, count(*) AS n_tokens,
-         |    CAST(sum(CASE WHEN cov THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_removed
-         |  FROM tk GROUP BY 1),
-         |kept AS (SELECT doc_id, string_agg(w, ' ' ORDER BY pos) AS s
-         |  FROM tk WHERE NOT cov GROUP BY 1)
-         |SELECT per.doc_id, per.n_tokens, per.n_removed,
-         |  md5(coalesce(kept.s, '')) AS kept_fp
-         |FROM per LEFT JOIN kept USING (doc_id)""".stripMargin
-    },
-
-    // q234: the pivot matrix as explicit conditional counts
-    "q234_lang_pivot" -> {
-      val langs = Seq("de", "en", "es", "fr", "zh")
-      val cols = langs.map(l =>
-        s"CAST(sum(CASE WHEN lang = '$l' THEN 1 ELSE 0 END) " +
-          s"AS BIGINT) AS $l").mkString(",\n  ")
-      s"""SELECT source,
-         |  $cols
-         |FROM documents GROUP BY 1""".stripMargin
-    },
-
-    // q235: per click, argmin over purchases of (|Δt|, direction)
-    // with backward (dir 0) winning ties and the LOWEST purchase id
-    // winning same-(user, ts) duplicates — the engine's distB <= distF
-    // projection plus AsOfJoin's min-payload-struct canonicalization;
-    // clickless users null-extend
-    "q235_asof_nearest" ->
-      """WITH c AS (SELECT event_id, user_id, epoch_ns(ts) AS t
-        |  FROM events WHERE event_type = 'click'),
-        |p AS (SELECT user_id, event_id AS pid, epoch_ns(ts) AS pt
-        |  FROM events WHERE event_type = 'purchase'),
-        |j AS (SELECT c.event_id, c.user_id, p.pid, p.pt,
-        |    abs(p.pt - c.t) AS d,
-        |    CASE WHEN p.pt <= c.t THEN 0 ELSE 1 END AS dir
-        |  FROM c JOIN p USING (user_id)),
-        |b AS (SELECT event_id, pid, d, dir, row_number() OVER (
-        |    PARTITION BY event_id ORDER BY d, dir, pt, pid) AS rn
-        |  FROM j)
-        |SELECT c.event_id, c.user_id,
-        |  b.pid AS nearest_purchase_id,
-        |  b.d // 1000000000 AS gap_abs_s,
-        |  CASE WHEN b.pid IS NULL THEN NULL
-        |       ELSE (b.dir = 0) END AS matched_back
-        |FROM c LEFT JOIN (SELECT * FROM b WHERE rn = 1) b
-        |  USING (event_id)""".stripMargin,
-
-    // q236: the direct theta self-join the bucketed engine plan must
-    // equal — same day conversion, same lid-derived transit days,
-    // closed-interval overlap, id_a < id_b
-    "q236_range_overlap" ->
-      """WITH li AS (SELECT l_partkey,
-        |    l_orderkey * 10 + l_linenumber AS lid,
-        |    (epoch_ns(l_shipdate) // 1000000000) // 86400 AS sd
-        |  FROM lineitem),
-        |r AS (SELECT l_partkey, lid, sd, sd + (lid % 20) AS ed FROM li)
-        |SELECT a.l_partkey, count(*) AS n_overlaps
-        |FROM r a JOIN r b ON a.l_partkey = b.l_partkey
-        |  AND a.lid < b.lid AND a.sd <= b.ed AND b.sd <= a.ed
-        |GROUP BY 1""".stripMargin,
-
-    // q241: the q163 sample reconstruction + lag over sidx; boundary
-    // transitions (sidx % 8 = 0) excluded so frames stay frame-local
-    "q241_audio_zcr" ->
-      """WITH d AS (SELECT doc_id, substring(text, 1, 64) AS t
-        |  FROM documents
-        |  WHERE length(text) >= 64 AND strlen(text) = length(text)),
-        |s AS (SELECT doc_id, CAST(i AS BIGINT) AS sidx,
-        |    ascii(substring(t, CAST(2 * i + 1 AS INTEGER), 1))
-        |      + 256 * ascii(substring(t, CAST(2 * i + 2 AS INTEGER), 1))
-        |      AS v
-        |  FROM d, (SELECT unnest(range(0, 32)) AS i) idx),
-        |p AS (SELECT doc_id, sidx, v,
-        |    lag(v) OVER (PARTITION BY doc_id ORDER BY sidx) AS pv
-        |  FROM s),
-        |f AS (SELECT doc_id, sidx // 8 AS frame, count(*) AS n_samples,
-        |    CAST(sum(CASE WHEN sidx % 8 <> 0
-        |        AND ((pv >= 16384) <> (v >= 16384))
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS zcr,
-        |    CAST(sum(abs(v - 16384)) AS BIGINT) AS sum_dev
-        |  FROM p GROUP BY 1, 2)
-        |SELECT doc_id, frame, n_samples, zcr, sum_dev FROM f"""
-        .stripMargin,
-
-    // q252: q241's sample/frame chain reduced to sum_dev, then the
-    // quiet flag + edge-run extraction as conditional aggregates
-    "q252_silence_trim" ->
-      """WITH d AS (SELECT doc_id, substring(text, 1, 64) AS t
-        |  FROM documents
-        |  WHERE length(text) >= 64 AND strlen(text) = length(text)),
-        |s AS (SELECT doc_id, CAST(i AS BIGINT) AS sidx,
-        |    ascii(substring(t, CAST(2 * i + 1 AS INTEGER), 1))
-        |      + 256 * ascii(substring(t, CAST(2 * i + 2 AS INTEGER), 1))
-        |      AS v
-        |  FROM d, (SELECT unnest(range(0, 32)) AS i) idx),
-        |f AS (SELECT doc_id, sidx // 8 AS frame,
-        |    CAST(sum(abs(v - 16384)) AS BIGINT) AS sum_dev
-        |  FROM s GROUP BY 1, 2)
-        |SELECT doc_id, count(*) AS n_frames,
-        |  CAST(sum(CASE WHEN sum_dev < 80000 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_quiet,
-        |  coalesce(min(CASE WHEN sum_dev >= 80000 THEN frame END),
-        |    count(*)) AS lead_quiet,
-        |  coalesce(count(*) - 1 -
-        |      max(CASE WHEN sum_dev >= 80000 THEN frame END),
-        |    count(*)) AS trail_quiet
-        |FROM f GROUP BY 1""".stripMargin,
-
-    // q244: the store's final content IS the second (filtered) load —
-    // any surviving first-load row breaks rows + hash
-    "q244_truncate_load" ->
-      """SELECT s_suppkey, s_nationkey, s_acctbal
-        |FROM supplier WHERE s_acctbal > 0""".stripMargin,
-
-    // q246: q245's per-frame Y sums over 4 frames + a lag window;
-    // cut = |Δ|·20 ≥ 2040 (1/20 of 4·2·255), frame 0 never a cut
-    "q246_scene_cuts" ->
-      """WITH d AS (SELECT doc_id, text FROM documents
-        |  WHERE length(text) >= 48 AND strlen(text) = length(text)),
-        |f AS (SELECT doc_id, text, CAST(fi AS INTEGER) AS frame_idx,
-        |    CAST(1 + 12 * fi AS INTEGER) AS o
-        |  FROM d, (SELECT unnest(range(0, 4)) AS fi) idx),
-        |s AS (SELECT doc_id, frame_idx,
-        |    CAST((SELECT sum(ascii(substring(text, CAST(o + i AS INTEGER), 1)))
-        |      FROM range(0, 8) t(i)) AS BIGINT) AS y_sum
-        |  FROM f),
-        |l AS (SELECT doc_id, frame_idx, y_sum,
-        |    y_sum - lag(y_sum) OVER (PARTITION BY doc_id
-        |      ORDER BY frame_idx) AS delta
-        |  FROM s)
-        |SELECT doc_id, frame_idx, y_sum, delta,
-        |  coalesce(abs(delta) * 20 >= 2040, false) AS is_cut
-        |FROM l""".stripMargin,
-
-    // q245: the Y4M payload is document bytes by construction — frame
-    // f's Y plane is text[1+12f .. 8+12f], chroma text[9+12f .. 12+12f]
-    "q245_video_frames" ->
-      """WITH d AS (SELECT doc_id, text FROM documents
-        |  WHERE length(text) >= 24 AND strlen(text) = length(text)),
-        |f AS (SELECT doc_id, text, CAST(fi AS INTEGER) AS frame_idx,
-        |    CAST(1 + 12 * fi AS INTEGER) AS o
-        |  FROM d, (SELECT unnest(range(0, 2)) AS fi) idx)
-        |SELECT doc_id, frame_idx,
-        |  CAST(4 AS INTEGER) AS width, CAST(2 AS INTEGER) AS height,
-        |  CAST((SELECT sum(ascii(substring(text, CAST(o + i AS INTEGER), 1)))
-        |    FROM range(0, 8) t(i)) AS BIGINT) AS y_sum,
-        |  CAST((SELECT sum(ascii(substring(text, CAST(o + 8 + i AS INTEGER), 1)))
-        |    FROM range(0, 4) t(i)) AS BIGINT) AS c_sum
-        |FROM f""".stripMargin,
-
-    // q242: the HITS half-steps unrolled — per iteration, an
-    // authority aggregate + e6 sum-normalization, then the hub
-    // mirror; truncating // equals the engine's IntegralDivide
-    "q242_hits" -> {
-      def iter(t: Int) =
-        s"""ar$t AS (SELECT e.dst AS node, sum(h.s) AS raw
-           |  FROM edges e JOIN h${t - 1} h ON h.node = e.src
-           |  GROUP BY 1),
-           |a$t AS (SELECT d.node,
-           |    (coalesce(r.raw, 0) * 1000000) //
-           |      (SELECT sum(raw) FROM ar$t) AS s
-           |  FROM dsts d LEFT JOIN ar$t r USING (node)),
-           |hr$t AS (SELECT e.src AS node, sum(a.s) AS raw
-           |  FROM edges e JOIN a$t a ON a.node = e.dst
-           |  GROUP BY 1),
-           |h$t AS (SELECT sr.node,
-           |    (coalesce(r.raw, 0) * 1000000) //
-           |      (SELECT sum(raw) FROM hr$t) AS s
-           |  FROM srcs sr LEFT JOIN hr$t r USING (node))""".stripMargin
-      materializedCtes(
-        s"""WITH edges AS (SELECT DISTINCT o_custkey * 2 AS src,
-           |    l_suppkey * 2 + 1 AS dst
-           |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-           |srcs AS (SELECT DISTINCT src AS node FROM edges),
-           |dsts AS (SELECT DISTINCT dst AS node FROM edges),
-           |h0 AS (SELECT node, CAST(1000000 AS HUGEINT) AS s FROM srcs),
-           |${(1 to 3).map(iter).mkString(",\n")}
-           |SELECT node, 'hub' AS kind, CAST(s AS BIGINT) AS score_e6
-           |FROM h3
-           |UNION ALL
-           |SELECT node, 'auth', CAST(s AS BIGINT) FROM a3""".stripMargin)
-    },
-
-    // q253: full r×c grid (empty cells carry expected mass too); the
-    // engine's two-stage truncating ladder mirrored verbatim —
-    // ((|diff|·1e3) // (Ra·Cb) · |diff| · 1e3) // N
-    "q253_chi_square" ->
-      """WITH cells AS (SELECT source AS a, lang AS b, count(*) AS o
-        |  FROM documents WHERE source IS NOT NULL AND lang IS NOT NULL
-        |  GROUP BY 1, 2),
-        |ra AS (SELECT a, sum(o) AS rr FROM cells GROUP BY 1),
-        |cb AS (SELECT b, sum(o) AS cc FROM cells GROUP BY 1),
-        |tot AS (SELECT sum(o) AS n, count(DISTINCT a) AS r,
-        |    count(DISTINCT b) AS c FROM cells),
-        |g AS (SELECT ra.rr, cb.cc, coalesce(cells.o, 0) AS o,
-        |    t.n, t.r, t.c
-        |  FROM ra CROSS JOIN cb
-        |  LEFT JOIN cells ON cells.a = ra.a AND cells.b = cb.b
-        |  CROSS JOIN tot t),
-        |t2 AS (SELECT n, r, c,
-        |    abs(CAST(o AS HUGEINT) * n - CAST(rr AS HUGEINT) * cc)
-        |      AS diff,
-        |    CAST(rr AS HUGEINT) * cc AS ec FROM g),
-        |t3 AS (SELECT n, r, c,
-        |    (((diff * 1000) // ec) * diff * 1000) // n AS term
-        |  FROM t2),
-        |agg AS (SELECT n, r, c, sum(term) AS chi FROM t3
-        |  GROUP BY 1, 2, 3)
-        |SELECT CAST(n AS BIGINT) AS n, r AS r_levels, c AS c_levels,
-        |  (r - 1) * (c - 1) AS dof,
-        |  CAST(chi AS BIGINT) AS chi2_e6,
-        |  CASE WHEN least(r - 1, c - 1) > 0 THEN
-        |    CAST(chi // (CAST(n AS HUGEINT) * least(r - 1, c - 1))
-        |      AS BIGINT) ELSE CAST(0 AS BIGINT) END AS v2_e6
-        |FROM agg""".stripMargin,
-
-    // q254: the engine's Bellman-Ford rounds unrolled — per round,
-    // min(carry, neighbor + 1) over the symmetrized edge set
-    "q254_bfs_hops" -> {
-      def iter(t: Int) =
-        s"""d$t AS (SELECT node, min(hops) AS hops FROM (
-           |  SELECT node, hops FROM d${t - 1}
-           |  UNION ALL
-           |  SELECT e.v AS node, d.hops + 1 AS hops
-           |  FROM e JOIN d${t - 1} d ON e.u = d.node) GROUP BY 1)"""
-          .stripMargin
-      s"""WITH e0 AS (SELECT DISTINCT o_custkey * 2 AS u,
-         |    l_suppkey * 2 + 1 AS v
-         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         |e AS (SELECT u, v FROM e0 UNION SELECT v, u FROM e0),
-         |d0 AS (SELECT DISTINCT c_custkey * 2 AS node, 0 AS hops
-         |  FROM customer WHERE c_custkey % 100 = 0),
-         |${(1 to 3).map(iter).mkString(",\n")}
-         |SELECT node, CAST(hops AS BIGINT) AS hops FROM d3"""
-        .stripMargin
-    },
-
-    // q255: the per-user (type, min_ts, max_ts) summary makes "some A
-    // strictly before some B" a bounded self-join, never raw events
-    "q255_ordered_pairs" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH pt AS (SELECT user_id AS u, event_type AS t,
-         |    min(epoch_ns(ts)) AS mn, max(epoch_ns(ts)) AS mx
-         |  FROM events GROUP BY 1, 2),
-         |tot AS (SELECT count(DISTINCT u) AS nu FROM pt),
-         |marg AS (SELECT t, count(*) AS n_users FROM pt GROUP BY 1),
-         |pp AS (SELECT a.t AS type_a, b.t AS type_b, count(*) AS n_ab
-         |  FROM pt a JOIN pt b ON a.u = b.u AND a.t <> b.t
-         |    AND a.mn < b.mx
-         |  GROUP BY 1, 2)
-         |SELECT type_a, type_b, n_ab, ma.n_users AS n_a,
-         |  mb.n_users AS n_b,
-         |  ${ratioScaledSql("CAST(n_ab AS HUGEINT) * nu",
-             "CAST(ma.n_users AS HUGEINT) * mb.n_users", 6)} AS lift_e6
-         |FROM pp JOIN marg ma ON ma.t = type_a
-         |JOIN marg mb ON mb.t = type_b
-         |CROSS JOIN tot""".stripMargin
-    },
-
-    // q256: q100's capped-basket discipline, then both rule
-    // directions with shared support/lift and per-direction
-    // confidence
-    "q256_assoc_rules" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH bi AS (SELECT DISTINCT user_id AS bk, event_type AS it
-         |  FROM events),
-         |sz AS (SELECT bk, count(*) AS bs FROM bi GROUP BY 1),
-         |capped AS (SELECT bi.bk, bi.it FROM bi
-         |  JOIN sz USING (bk) WHERE bs <= 64),
-         |tot AS (SELECT count(DISTINCT bk) AS nb FROM capped),
-         |pairs AS (SELECT a.it AS item_a, b.it AS item_b,
-         |    count(*) AS n_co
-         |  FROM capped a JOIN capped b ON a.bk = b.bk AND a.it < b.it
-         |  GROUP BY 1, 2 HAVING count(*) >= 2),
-         |freq AS (SELECT it, count(*) AS c FROM capped GROUP BY 1),
-         |und AS (SELECT item_a, item_b, n_co, fa.c AS n_a, fb.c AS n_b
-         |  FROM pairs JOIN freq fa ON fa.it = item_a
-         |  JOIN freq fb ON fb.it = item_b),
-         |dr AS (SELECT item_a AS antecedent, item_b AS consequent,
-         |    n_co, n_a AS n_ante, n_b AS n_cons FROM und
-         |  UNION ALL SELECT item_b, item_a, n_co, n_b, n_a FROM und)
-         |SELECT antecedent, consequent, n_co, n_ante, n_cons,
-         |  ${ratioScaledSql("n_co", "nb", 6)} AS support_e6,
-         |  ${ratioScaledSql("n_co", "n_ante", 6)} AS confidence_e6,
-         |  ${ratioScaledSql("CAST(n_co AS HUGEINT) * nb",
-             "CAST(n_ante AS HUGEINT) * n_cons", 6)} AS lift_e6
-         |FROM dr CROSS JOIN tot""".stripMargin
-    },
-
-    // q257: cross-multiplied integer ECDF gaps over the
-    // distinct-value tally; max per group, smallest value attaining
-    // it as the tie-break
-    "q257_ks_stat" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH gv AS (SELECT source AS g, n_chars AS v, count(*) AS c
-         |  FROM documents
-         |  WHERE source IS NOT NULL AND n_chars IS NOT NULL
-         |  GROUP BY 1, 2),
-         |pv AS (SELECT v, sum(c) AS cv FROM gv GROUP BY 1),
-         |pg AS (SELECT g, sum(c) AS na FROM gv GROUP BY 1),
-         |tot AS (SELECT sum(c) AS n FROM gv),
-         |grid AS (SELECT pg.g, pv.v, pg.na, t.n - pg.na AS nb, pv.cv,
-         |    coalesce(gv.c, 0) AS cgv
-         |  FROM pg CROSS JOIN pv
-         |  LEFT JOIN gv ON gv.g = pg.g AND gv.v = pv.v
-         |  CROSS JOIN tot t),
-         |cum AS (SELECT g, v, na, nb,
-         |    sum(cgv) OVER w AS cuma, sum(cv) OVER w AS cumall
-         |  FROM grid WINDOW w AS (PARTITION BY g ORDER BY v
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-         |gaps AS (SELECT g, v, na, nb,
-         |    abs(CAST(cuma AS HUGEINT) * nb -
-         |      CAST(cumall - cuma AS HUGEINT) * na) AS gap
-         |  FROM cum),
-         |mx AS (SELECT g, na, nb, max(gap) AS mg FROM gaps
-         |  GROUP BY 1, 2, 3),
-         |att AS (SELECT gaps.g, min(v) AS at_units FROM gaps
-         |  JOIN mx ON mx.g = gaps.g AND gaps.gap = mx.mg GROUP BY 1)
-         |SELECT mx.g AS source, CAST(na AS BIGINT) AS n_group,
-         |  CAST(nb AS BIGINT) AS n_rest,
-         |  ${ratioScaledSql("mg", "CAST(na AS HUGEINT) * nb", 6)}
-         |    AS d_e6,
-         |  at_units
-         |FROM mx JOIN att ON att.g = mx.g""".stripMargin
-    },
-
-    // q258: q203's bin aggregate, then PAV by its minimax form —
-    // fitted(i) = max_{j≤i} min_{k≥i} pooled-rate(j..k) over the
-    // bounded bin table
-    "q258_isotonic_fit" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH t AS (SELECT doc_id,
-         |    ${ratioScaledSql(qScoreNum, qScoreDen, 4)} AS q_e4,
-         |    $qNWords AS nw,
-         |    CAST(length(regexp_replace(text, '\\s+', '', 'g'))
-         |      AS BIGINT) AS nsp,
-         |    CAST(length(text) - length(regexp_replace(text, '#', '', 'g'))
-         |      + length(regexp_replace(text, '\\.{3,}|…', '@', 'g'))
-         |      - length(regexp_replace(text, '\\.{3,}|…', '', 'g'))
-         |      AS BIGINT) AS nsym,
-         |    CAST(len(list_filter($wordsSql,
-         |      w -> w IN ('the', 'a', 'of', 'to', 'and'))) AS BIGINT)
-         |      AS nstop
-         |  FROM documents),
-         |j AS (SELECT q_e4,
-         |    ((nw >= 50 AND nw <= 100000)
-         |      AND (nsp >= 3 * nw AND nsp <= 10 * nw)
-         |      AND (10 * nsym < nw) AND (nstop >= 2)) AS keep
-         |  FROM t),
-         |b AS (SELECT least(q_e4 // 1000, 9) AS bin,
-         |    count(*) AS n_rows,
-         |    sum(CASE WHEN keep THEN 1 ELSE 0 END) AS n_pos
-         |  FROM j GROUP BY 1),
-         |pref AS (SELECT bin, n_rows, n_pos,
-         |    sum(n_rows) OVER o AS pc, sum(n_pos) OVER o AS pp
-         |  FROM b WINDOW o AS (ORDER BY bin ROWS UNBOUNDED PRECEDING)),
-         |lo AS (SELECT bin AS jb, pc - n_rows AS pcj, pp - n_pos AS ppj
-         |  FROM pref),
-         |hi AS (SELECT bin AS kb, pc AS pck, pp AS ppk FROM pref),
-         |iv AS (SELECT jb, kb,
-         |    ${ratioScaledSql("ppk - ppj", "pck - pcj", 6)} AS rate
-         |  FROM lo JOIN hi ON jb <= kb),
-         |mm AS (SELECT b.bin, b.n_rows, b.n_pos, iv.jb,
-         |    min(iv.rate) AS m
-         |  FROM b JOIN iv ON iv.jb <= b.bin AND iv.kb >= b.bin
-         |  GROUP BY 1, 2, 3, 4),
-         |f AS (SELECT bin, n_rows, n_pos, max(m) AS fitted_e6 FROM mm
-         |  GROUP BY 1, 2, 3)
-         |SELECT CAST(bin AS BIGINT) AS bin, n_rows,
-         |  CAST(n_pos AS BIGINT) AS n_pos,
-         |  ${ratioScaledSql("n_pos", "n_rows", 6)} AS rate_e6,
-         |  fitted_e6
-         |FROM f""".stripMargin
-    },
-
-    // q259: q222's pair surface → degree table → the directed double
-    // cover fed through q75's exact five-sum Pearson mirror
-    "q259_assortativity" ->
-      s"""WITH ${lshPairCtes("0.45")},
-         |ed AS (SELECT id_a AS u, id_b AS v FROM p),
-         |deg AS (SELECT node, count(*) AS degree
-         |  FROM (SELECT u AS node FROM ed
-         |    UNION ALL SELECT v AS node FROM ed) GROUP BY 1),
-         |bo AS (SELECT du.degree AS dx, dv.degree AS dy
-         |  FROM ed JOIN deg du ON du.node = ed.u
-         |  JOIN deg dv ON dv.node = ed.v),
-         |cov AS (SELECT dx AS x, dy AS y FROM bo
-         |  UNION ALL SELECT dy, dx FROM bo),
-         |s AS (SELECT count(*) AS n,
-         |    sum(CAST(x AS HUGEINT)) AS sx, sum(CAST(y AS HUGEINT)) AS sy,
-         |    sum(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS sxx,
-         |    sum(CAST(y AS HUGEINT) * CAST(y AS HUGEINT)) AS syy,
-         |    sum(CAST(x AS HUGEINT) * CAST(y AS HUGEINT)) AS sxy
-         |  FROM cov),
-         |v AS (SELECT n,
-         |    CAST(n AS HUGEINT) * sxy - sx * sy AS num,
-         |    CAST(n AS HUGEINT) * sxx - sx * sx AS vx,
-         |    CAST(n AS HUGEINT) * syy - sy * sy AS vy
-         |  FROM s)
-         |SELECT n,
-         |  CAST(CAST(num AS VARCHAR) AS DOUBLE) AS cov_num,
-         |  CASE WHEN vx > 0 AND vy > 0 THEN
-         |    round(CAST(CAST(num AS VARCHAR) AS DOUBLE) /
-         |      (sqrt(CAST(CAST(vx AS VARCHAR) AS DOUBLE)) *
-         |       sqrt(CAST(CAST(vy AS VARCHAR) AS DOUBLE))), 6)
-         |  END AS r
-         |FROM v""".stripMargin,
-
-    // q265: same e6 unit quantization and half-up grid ladder —
-    // q = ((u−lo)·510 + span) // (2·span), err255 = |255·(u−lo) − q·span|
-    "q265_int8_card" ->
-      """WITH u AS (SELECT vec_id,
-        |    CAST(generate_subscripts(embedding, 1) AS BIGINT) AS dim,
-        |    CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000, 0)
-        |      AS BIGINT) AS u
-        |  FROM embeddings),
-        |b AS (SELECT dim, min(u) AS lo, max(u) AS hi FROM u GROUP BY 1),
-        |e AS (SELECT u.dim, u.u, b.lo, b.hi, b.hi - b.lo AS span
-        |  FROM u JOIN b USING (dim)),
-        |qv AS (SELECT dim, lo, hi, span, u,
-        |    CASE WHEN span > 0
-        |      THEN ((u - lo) * 510 + span) // (2 * span)
-        |      ELSE 0 END AS q
-        |  FROM e),
-        |er AS (SELECT dim, lo, hi,
-        |    abs(255 * (u - lo) - q * span) AS err
-        |  FROM qv)
-        |SELECT dim, count(*) AS n, lo, hi,
-        |  max(err) AS max_err255, CAST(sum(err) AS BIGINT) AS sum_err255
-        |FROM er GROUP BY 1, 3, 4""".stripMargin,
-
-    // q266: the same (count DESC, word ASC) vocabulary total order;
-    // token/type OOV shares per source
-    "q266_oov_rate" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH t AS (SELECT source, unnest($wordsSql) AS w
-         |  FROM documents),
-         |bs AS (SELECT source, w, count(*) AS n FROM t GROUP BY 1, 2),
-         |g AS (SELECT w, sum(n) AS cnt FROM bs GROUP BY 1),
-         |vr AS (SELECT w,
-         |    row_number() OVER (ORDER BY cnt DESC, w ASC) AS rn
-         |  FROM g),
-         |v AS (SELECT w FROM vr WHERE rn <= 1000),
-         |j AS (SELECT bs.source, bs.n, (v.w IS NOT NULL) AS inv
-         |  FROM bs LEFT JOIN v ON v.w = bs.w),
-         |a AS (SELECT source,
-         |    CAST(sum(n) AS BIGINT) AS total_tokens,
-         |    CAST(sum(CASE WHEN inv THEN 0 ELSE n END) AS BIGINT)
-         |      AS oov_tokens,
-         |    count(*) AS n_types,
-         |    CAST(sum(CASE WHEN inv THEN 0 ELSE 1 END) AS BIGINT)
-         |      AS oov_types
-         |  FROM j GROUP BY 1)
-         |SELECT source, total_tokens, oov_tokens, n_types, oov_types,
-         |  ${ratioScaledSql("oov_tokens", "total_tokens", 6)}
-         |    AS oov_token_rate_e6,
-         |  ${ratioScaledSql("oov_types", "n_types", 6)}
-         |    AS oov_type_rate_e6
-         |FROM a""".stripMargin
-    },
-
-    // q267: q27's char-code pixel reconstruction, BT.709 e4 integer
-    // luma per pixel, exact variance numerator in HUGEINT
-    "q267_contrast_card" ->
-      """WITH pxv AS (SELECT doc_id,
-        |    (idx.i - 1) // 3 AS px, (idx.i - 1) % 3 AS ch,
-        |    ascii(substring(text, CAST(idx.i AS INTEGER), 1)) AS b
-        |  FROM documents, (SELECT unnest(range(1, 97)) AS i) idx
-        |  WHERE length(text) >= 96 AND strlen(text) = length(text)),
-        |lum AS (SELECT doc_id, px,
-        |    CAST(sum(CASE ch WHEN 0 THEN 2126 * b
-        |      WHEN 1 THEN 7152 * b ELSE 722 * b END) AS BIGINT) AS l
-        |  FROM pxv GROUP BY 1, 2),
-        |ag AS (SELECT doc_id, count(*) AS n_px,
-        |    CAST(sum(l) AS BIGINT) AS sum_l,
-        |    sum(CAST(l AS HUGEINT) * l) AS sumsq,
-        |    min(l) AS min_l, max(l) AS max_l
-        |  FROM lum GROUP BY 1)
-        |SELECT doc_id, n_px, min_l, max_l,
-        |  max_l - min_l AS dyn_range,
-        |  CAST(CAST(n_px AS HUGEINT) * sumsq -
-        |    CAST(sum_l AS HUGEINT) * sum_l AS BIGINT) AS var_num
-        |FROM ag""".stripMargin,
-
-    // q268: the greedy earliest chain — per stage, min qualifying ts
-    // strictly after the previous stage's pick, within the horizon of
-    // the stage-1 anchor
-    "q268_funnel_strict" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      val h = 7L * 86400L * 1000000000L
-      s"""WITH e AS (SELECT user_id AS u, event_type AS t,
-         |    epoch_ns(ts) AS ts FROM events
-         |  WHERE event_type IN ('signup', 'view', 'purchase')),
-         |s1 AS (SELECT u, min(ts) AS t1 FROM e WHERE t = 'signup'
-         |  GROUP BY 1),
-         |s2 AS (SELECT e.u, s1.t1, min(e.ts) AS t2
-         |  FROM e JOIN s1 ON s1.u = e.u
-         |  WHERE e.t = 'view' AND e.ts > s1.t1 AND e.ts - s1.t1 <= $h
-         |  GROUP BY 1, 2),
-         |s3 AS (SELECT e.u, s2.t1, min(e.ts) AS t3
-         |  FROM e JOIN s2 ON s2.u = e.u
-         |  WHERE e.t = 'purchase' AND e.ts > s2.t2
-         |    AND e.ts - s2.t1 <= $h
-         |  GROUP BY 1, 2),
-         |c AS (SELECT 1 AS stage, 'signup' AS step, count(*) AS n
-         |    FROM s1
-         |  UNION ALL SELECT 2, 'view', count(*) FROM s2
-         |  UNION ALL SELECT 3, 'purchase', count(*) FROM s3)
-         |SELECT CAST(stage AS BIGINT) AS stage, step,
-         |  n AS n_users,
-         |  ${ratioScaledSql("n",
-             "first_value(n) OVER (ORDER BY stage)", 6)} AS conv_e6
-         |FROM c""".stripMargin
-    },
-
-    // q269: the same (count DESC, word ASC) rank; conditional sums
-    // per cutoff over the ranked tally
-    "q269_coverage_curve" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH t AS (SELECT unnest($wordsSql) AS w FROM documents),
-         |g AS (SELECT w, count(*) AS cnt FROM t GROUP BY 1),
-         |r AS (SELECT cnt,
-         |    row_number() OVER (ORDER BY cnt DESC, w ASC) AS rn
-         |  FROM g),
-         |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM g),
-         |c AS (SELECT k,
-         |    CAST(sum(CASE WHEN rn <= k THEN cnt ELSE 0 END)
-         |      AS BIGINT) AS vt
-         |  FROM r CROSS JOIN
-         |    (SELECT unnest([100, 1000, 10000]) AS k) GROUP BY 1)
-         |SELECT CAST(k AS BIGINT) AS cutoff, vt AS vocab_tokens,
-         |  total AS total_tokens,
-         |  ${ratioScaledSql("vt", "total", 6)} AS coverage_e6
-         |FROM c CROSS JOIN tot""".stripMargin
-    },
-
-    // q270: the same unique (metric ASC, user ASC) total order;
-    // quintile = ((rn−1)·5) // n + 1
-    "q270_rfm_scores" ->
-      """WITH per AS (SELECT user_id AS u,
-        |    max(epoch_ns(ts) // 86400000000000) AS ld,
-        |    count(*) AS f,
-        |    CAST(coalesce(sum(CAST(round(value * 100, 0) AS BIGINT)),
-        |      0) AS BIGINT) AS m
-        |  FROM events GROUP BY 1),
-        |b AS (SELECT u, (SELECT max(ld) FROM per) - ld AS recency_days,
-        |    f, m FROM per),
-        |r AS (SELECT u, recency_days, f, m,
-        |    ((row_number() OVER (ORDER BY recency_days, u) - 1) * 5)
-        |      // (count(*) OVER ()) + 1 AS r_q,
-        |    ((row_number() OVER (ORDER BY f, u) - 1) * 5)
-        |      // (count(*) OVER ()) + 1 AS f_q,
-        |    ((row_number() OVER (ORDER BY m, u) - 1) * 5)
-        |      // (count(*) OVER ()) + 1 AS m_q
-        |  FROM b)
-        |SELECT u AS user_id, recency_days, f AS frequency,
-        |  m AS monetary_e2, r_q, f_q, m_q,
-        |  r_q * 100 + f_q * 10 + m_q AS rfm_code
-        |FROM r""".stripMargin,
-
-    // q271: per-user first-3 types via row_number, ordered string_agg
-    "q271_entry_paths" ->
-      """WITH r AS (SELECT user_id AS u, event_type AS t,
-        |    row_number() OVER (PARTITION BY user_id
-        |      ORDER BY epoch_ns(ts), event_id) AS rn
-        |  FROM events),
-        |p AS (SELECT u, string_agg(t, '>' ORDER BY rn) AS path
-        |  FROM r WHERE rn <= 3 GROUP BY 1)
-        |SELECT path, count(*) AS n_users FROM p GROUP BY 1"""
-        .stripMargin,
-
-    // q272: q161's recursive-CTE components + singleton coalesce,
-    // rolled to the size histogram
-    "q272_component_sizes" ->
-      s"""WITH RECURSIVE ${lshPairCtes("0.45")},
-         |cl(node, r) AS (SELECT a, b FROM e
-         |  UNION SELECT cl.node, e2.b FROM cl JOIN e e2 ON cl.r = e2.a),
-         |cc AS (SELECT node, least(node, min(r)) AS component
-         |  FROM cl GROUP BY node),
-         |sz AS (SELECT coalesce(cc.component, emb.vec_id) AS rep,
-         |    count(*) AS csize
-         |  FROM embeddings emb LEFT JOIN cc ON cc.node = emb.vec_id
-         |  GROUP BY 1)
-         |SELECT csize AS size, count(*) AS n_components
-         |FROM sz GROUP BY 1""".stripMargin,
-
-    // q273: per-purchase in-window strictly-before view count,
-    // truncating equal split; organic restored via left join
-    "q273_linear_attribution" ->
-      """WITH c AS (SELECT user_id AS u, event_id AS conv_id,
-        |    epoch_ns(ts) AS ct FROM events
-        |  WHERE event_type = 'purchase'),
-        |t AS (SELECT user_id AS u, epoch_ns(ts) AS tt FROM events
-        |  WHERE event_type = 'view'),
-        |n AS (SELECT c.conv_id, count(*) AS n_touches
-        |  FROM c JOIN t ON t.u = c.u
-        |  WHERE t.tt < c.ct AND c.ct - t.tt <= 86400000000000
-        |  GROUP BY 1)
-        |SELECT c.conv_id,
-        |  coalesce(n.n_touches, 0) AS n_touches,
-        |  CASE WHEN coalesce(n.n_touches, 0) > 0
-        |    THEN 1000000 // n.n_touches ELSE 0 END AS credit_e6
-        |FROM c LEFT JOIN n ON n.conv_id = c.conv_id"""
-        .stripMargin,
-
-    // q274: same e6 element quantization; count(*) keeps null
-    // elements in dims, squared sums in HUGEINT
-    "q274_vector_qa" ->
-      """WITH u AS (SELECT vec_id, unnest(embedding) AS x
-        |  FROM embeddings),
-        |p AS (SELECT vec_id, count(*) AS dims,
-        |    sum(CASE WHEN x IS NULL THEN 1 ELSE 0 END) AS nulls,
-        |    sum(CAST(CAST(round(CAST(x AS DOUBLE) * 1000000, 0)
-        |        AS BIGINT) AS HUGEINT) *
-        |      CAST(round(CAST(x AS DOUBLE) * 1000000, 0) AS BIGINT))
-        |      AS sq
-        |  FROM u GROUP BY 1)
-        |SELECT count(*) AS n_vecs,
-        |  min(dims) AS min_dims, max(dims) AS max_dims,
-        |  CAST(sum(CASE WHEN nulls > 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_with_null,
-        |  CAST(sum(CASE WHEN nulls = 0 AND sq = 0 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_zero,
-        |  CAST(min(sq) AS BIGINT) AS min_sqnorm_e12,
-        |  CAST(max(sq) AS BIGINT) AS max_sqnorm_e12,
-        |  CAST(sum(sq) AS BIGINT) AS sum_sqnorm_e12
-        |FROM p""".stripMargin,
-
-    // q275: cumulative tally over distinct lengths, the q253 ladder
-    // on the exact variance-reduction numerator, (score DESC, v ASC)
-    // argmax
-    "q275_gini_stump" ->
-      s"""WITH t AS (SELECT doc_id, n_chars,
-         |    $qNWords AS nw,
-         |    CAST(length(regexp_replace(text, '\\s+', '', 'g'))
-         |      AS BIGINT) AS nsp,
-         |    CAST(length(text) - length(regexp_replace(text, '#', '', 'g'))
-         |      + length(regexp_replace(text, '\\.{3,}|…', '@', 'g'))
-         |      - length(regexp_replace(text, '\\.{3,}|…', '', 'g'))
-         |      AS BIGINT) AS nsym,
-         |    CAST(len(list_filter($wordsSql,
-         |      w -> w IN ('the', 'a', 'of', 'to', 'and'))) AS BIGINT)
-         |      AS nstop
-         |  FROM documents),
-         |j AS (SELECT n_chars AS v,
-         |    ((nw >= 50 AND nw <= 100000)
-         |      AND (nsp >= 3 * nw AND nsp <= 10 * nw)
-         |      AND (10 * nsym < nw) AND (nstop >= 2)) AS keep
-         |  FROM t),
-         |g AS (SELECT v, count(*) AS cnt,
-         |    sum(CASE WHEN keep THEN 1 ELSE 0 END) AS pos
-         |  FROM j GROUP BY 1),
-         |c AS (SELECT v, sum(cnt) OVER w AS cumn,
-         |    sum(pos) OVER w AS cump,
-         |    (SELECT sum(cnt) FROM g) AS n,
-         |    (SELECT sum(pos) FROM g) AS p
-         |  FROM g WINDOW w AS (ORDER BY v ROWS UNBOUNDED PRECEDING)),
-         |s AS (SELECT v, cumn, cump, n, p,
-         |    abs(CAST(cump AS HUGEINT) * (n - cumn) -
-         |      CAST(p - cump AS HUGEINT) * cumn) AS d,
-         |    CAST(cumn AS HUGEINT) * (n - cumn) AS den
-         |  FROM c WHERE n - cumn > 0),
-         |sc AS (SELECT v, cumn, cump, n, p,
-         |    ((((d * 1000) // den) * d) * 1000) //
-         |      (CAST(n AS HUGEINT) * n) AS score
-         |  FROM s),
-         |b AS (SELECT * FROM sc ORDER BY score DESC, v ASC LIMIT 1)
-         |SELECT CAST(n AS BIGINT) AS n, CAST(p AS BIGINT) AS n_pos,
-         |  v AS best_threshold, CAST(score AS BIGINT) AS score_e6,
-         |  CAST(cumn AS BIGINT) AS n_left,
-         |  CAST(cump AS BIGINT) AS pos_left
-         |FROM b""".stripMargin,
-
-    // q276: 1-row horizon + conditional window-bucket counts, exact
-    // e6 ratio (absent-last-week types read 0 by the zero-den rule)
-    "q276_week_over_week" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH d AS (SELECT event_type AS t,
-         |    epoch_ns(ts) // 86400000000000 AS d FROM events),
-         |h AS (SELECT max(d) AS h FROM d),
-         |a AS (SELECT t,
-         |    CAST(sum(CASE WHEN d.d > h.h - 7 THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n_recent,
-         |    CAST(sum(CASE WHEN d.d <= h.h - 7 AND d.d > h.h - 14
-         |      THEN 1 ELSE 0 END) AS BIGINT) AS n_prior
-         |  FROM d CROSS JOIN h GROUP BY 1)
-         |SELECT t AS event_type, n_recent, n_prior,
-         |  ${ratioScaledSql("n_recent", "n_prior", 6)} AS wow_e6
-         |FROM a""".stripMargin
-    },
-
-    // q278: q108's unrolled ladder with the teleport base gated on
-    // seed membership; unreached nodes stay 0 and still emit
-    "q278_personalized_pagerank" -> {
-      def iter(k: Int) =
-        s"""r$k AS (SELECT n.node,
-           |    (n.is_seed * 15000000 + 85 * coalesce(s.c, 0)) // 100
-           |      AS rank_e6
-           |  FROM nodes n LEFT JOIN (
-           |    SELECT e.dst AS node,
-           |      CAST(sum(p.rank_e6 // d.deg) AS BIGINT) AS c
-           |    FROM edges e JOIN r${k - 1} p ON p.node = e.src
-           |    JOIN deg d ON d.node = e.src GROUP BY 1) s
-           |    ON s.node = n.node)""".stripMargin
-      s"""WITH edges AS (SELECT DISTINCT o_custkey * 2 AS src,
-         |    l_suppkey * 2 + 1 AS dst
-         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         |sd AS (SELECT DISTINCT c_custkey * 2 AS node FROM customer
-         |  WHERE c_custkey % 100 = 0),
-         |nodes AS (SELECT a.node,
-         |    CASE WHEN sd.node IS NULL THEN 0 ELSE 1 END AS is_seed
-         |  FROM (SELECT src AS node FROM edges
-         |    UNION SELECT dst FROM edges) a
-         |  LEFT JOIN sd ON sd.node = a.node),
-         |deg AS (SELECT src AS node, count(*) AS deg FROM edges
-         |  GROUP BY 1),
-         |r0 AS (SELECT node, CAST(is_seed * 1000000 AS BIGINT)
-         |    AS rank_e6 FROM nodes),
-         |${(1 to 5).map(iter).mkString(",\n")}
-         |SELECT node, rank_e6 FROM r5""".stripMargin
-    },
-
-    // q282: the mirrored pair surface doubled, (score DESC, nbr ASC)
-    // argmax per node, label joins, per-label purity
-    "q282_knn_label_purity" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH ${lshPairCtes("0.3")},
-         |dr AS (SELECT id_a AS id, id_b AS nbr,
-         |    CAST(round(cosine * 10000, 0) AS BIGINT) AS c FROM p
-         |  UNION ALL SELECT id_b, id_a,
-         |    CAST(round(cosine * 10000, 0) AS BIGINT) FROM p),
-         |best AS (SELECT id, nbr FROM (SELECT id, nbr,
-         |    row_number() OVER (PARTITION BY id
-         |      ORDER BY c DESC, nbr ASC) AS rn FROM dr)
-         |  WHERE rn = 1),
-         |j AS (SELECT CAST(ea.label AS BIGINT) AS l,
-         |    CAST(eb.label AS BIGINT) AS nl
-         |  FROM best b
-         |  JOIN embeddings ea ON ea.vec_id = b.id
-         |  JOIN embeddings eb ON eb.vec_id = b.nbr)
-         |SELECT l AS label, count(*) AS n_nodes,
-         |  CAST(sum(CASE WHEN l = nl THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_agree,
-         |  ${ratioScaledSql(
-             "sum(CASE WHEN l = nl THEN 1 ELSE 0 END)", "count(*)", 6)}
-         |    AS purity_e6
-         |FROM j GROUP BY 1""".stripMargin
-    },
-
-    // q281: q241's sample chain; clipped runs via gaps-and-islands
-    // over the clipped sample indexes, e6 rate through the shared
-    // half-up ladder
-    "q281_audio_clipping" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH d AS (SELECT doc_id, substring(text, 1, 64) AS t
-         |  FROM documents
-         |  WHERE length(text) >= 64 AND strlen(text) = length(text)),
-         |s AS (SELECT doc_id, CAST(i AS BIGINT) AS sidx,
-         |    ascii(substring(t, CAST(2 * i + 1 AS INTEGER), 1))
-         |      + 256 * ascii(substring(t, CAST(2 * i + 2 AS INTEGER), 1))
-         |      AS v
-         |  FROM d, (SELECT unnest(range(0, 32)) AS i) idx),
-         |c AS (SELECT doc_id, sidx FROM s WHERE v >= 30000),
-         |isl AS (SELECT doc_id, sidx - row_number()
-         |    OVER (PARTITION BY doc_id ORDER BY sidx) AS g
-         |  FROM c),
-         |r AS (SELECT doc_id, count(*) AS run FROM isl
-         |  GROUP BY doc_id, g),
-         |m AS (SELECT doc_id, max(run) AS max_run FROM r GROUP BY 1),
-         |a AS (SELECT doc_id, count(*) AS n,
-         |    CAST(sum(CASE WHEN v >= 30000 THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS clipped
-         |  FROM s GROUP BY 1)
-         |SELECT a.doc_id, a.n AS n_samples, a.clipped AS n_clipped,
-         |  coalesce(m.max_run, 0) AS max_clip_run,
-         |  ${ratioScaledSql("a.clipped", "a.n", 6)} AS clip_rate_e6
-         |FROM a LEFT JOIN m ON m.doc_id = a.doc_id"""
-        .stripMargin
-    },
-
-    // q279: unique-id pair order, unordered type emit via
-    // least/greatest, distinct-user rollup
-    "q279_temporal_cooccur" ->
-      """WITH e AS (SELECT user_id AS u, epoch_ns(ts) AS ts,
-        |    event_id AS id, event_type AS t FROM events),
-        |p AS (SELECT a.u,
-        |    least(a.t, b.t) AS type_x, greatest(a.t, b.t) AS type_y
-        |  FROM e a JOIN e b ON a.u = b.u AND a.id < b.id
-        |    AND a.t <> b.t AND abs(a.ts - b.ts) <= 600000000000)
-        |SELECT type_x, type_y, count(*) AS n_pairs,
-        |  count(DISTINCT u) AS n_users
-        |FROM p GROUP BY 1, 2""".stripMargin,
-
-    // q280: the q203 gopher arms + whitespace token counts; corpus
-    // totals as scalar subqueries, e6 shares before/after
-    "q280_filter_impact" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH t AS (SELECT doc_id, source,
-         |    CAST(len($wordsSql) AS BIGINT) AS nw0,
-         |    $qNWords AS nw,
-         |    CAST(length(regexp_replace(text, '\\s+', '', 'g'))
-         |      AS BIGINT) AS nsp,
-         |    CAST(length(text) - length(regexp_replace(text, '#', '', 'g'))
-         |      + length(regexp_replace(text, '\\.{3,}|…', '@', 'g'))
-         |      - length(regexp_replace(text, '\\.{3,}|…', '', 'g'))
-         |      AS BIGINT) AS nsym,
-         |    CAST(len(list_filter($wordsSql,
-         |      w -> w IN ('the', 'a', 'of', 'to', 'and'))) AS BIGINT)
-         |      AS nstop
-         |  FROM documents),
-         |j AS (SELECT source, nw0,
-         |    ((nw >= 50 AND nw <= 100000)
-         |      AND (nsp >= 3 * nw AND nsp <= 10 * nw)
-         |      AND (10 * nsym < nw) AND (nstop >= 2)) AS keep
-         |  FROM t),
-         |per AS (SELECT source, count(*) AS n_docs,
-         |    CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_keep,
-         |    CAST(sum(nw0) AS BIGINT) AS tokens_total,
-         |    CAST(sum(CASE WHEN keep THEN nw0 ELSE 0 END) AS BIGINT)
-         |      AS tokens_kept
-         |  FROM j GROUP BY 1)
-         |SELECT source, n_docs, n_keep, tokens_total, tokens_kept,
-         |  ${ratioScaledSql("n_keep", "n_docs", 6)} AS keep_rate_e6,
-         |  ${ratioScaledSql("tokens_total",
-             "(SELECT sum(tokens_total) FROM per)", 6)}
-         |    AS share_before_e6,
-         |  ${ratioScaledSql("tokens_kept",
-             "(SELECT sum(tokens_kept) FROM per)", 6)}
-         |    AS share_after_e6
-         |FROM per""".stripMargin
-    },
-
-    // q283: class×value grid with zero-fill, per-class cumulative vs
-    // global cumulative, HUGEINT |cumC·N − cumG·n_c| sum, one e6
-    // division by n_c·N·(m−1)
-    "q283_tcloseness" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH b AS (SELECT c_nationkey AS qn, c_mktsegment AS qs,
-         |    (CAST(round(c_acctbal * 100, 0) AS BIGINT) + 100000)
-         |      // 100000 AS v
-         |  FROM customer),
-         |cv AS (SELECT qn, qs, v, count(*) AS c FROM b GROUP BY 1, 2, 3),
-         |cls AS (SELECT qn, qs, CAST(sum(c) AS BIGINT) AS cs
-         |  FROM cv GROUP BY 1, 2),
-         |gv AS (SELECT v, CAST(sum(c) AS BIGINT) AS g FROM cv
-         |  GROUP BY 1),
-         |gc AS (SELECT v, CAST(sum(g) OVER (ORDER BY v
-         |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cumg FROM gv),
-         |tot AS (SELECT CAST(sum(g) AS BIGINT) AS nn,
-         |    CAST(count(*) AS BIGINT) AS m FROM gv),
-         |grid AS (SELECT cls.qn, cls.qs, cls.cs, gc.v, gc.cumg,
-         |    coalesce(cv.c, 0) AS c
-         |  FROM cls CROSS JOIN gc
-         |  LEFT JOIN cv ON cv.qn = cls.qn AND cv.qs = cls.qs
-         |    AND cv.v = gc.v),
-         |cum AS (SELECT qn, qs, cs, cumg,
-         |    sum(c) OVER (PARTITION BY qn, qs ORDER BY v
-         |      ROWS UNBOUNDED PRECEDING) AS cumc FROM grid),
-         |d AS (SELECT qn, qs, cs,
-         |    sum(abs(CAST(cumc AS HUGEINT) * tot.nn
-         |      - CAST(cumg AS HUGEINT) * cs)) AS dev,
-         |    max(tot.nn) AS nn, max(tot.m) AS m
-         |  FROM cum CROSS JOIN tot GROUP BY 1, 2, 3)
-         |SELECT qn AS c_nationkey, qs AS c_mktsegment,
-         |  cs AS class_size,
-         |  ${ratioScaledSql("dev",
-             "CAST(cs AS HUGEINT) * nn * (m - 1)", 6)} AS emd_e6
-         |FROM d""".stripMargin
-    },
-
-    // q284: q282's (c DESC, nbr ASC) argmax as canonical 1-NN edges,
-    // wedges over the symmetric edge set, NOT EXISTS against the
-    // canonical pairs, neighborhood Jaccard e6
-    "q284_link_prediction" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      materializedCtes(s"""WITH ${lshPairCtes("0.3")},
-         |dr AS (SELECT id_a AS id, id_b AS nbr,
-         |    CAST(round(cosine * 10000, 0) AS BIGINT) AS c FROM p
-         |  UNION ALL SELECT id_b, id_a,
-         |    CAST(round(cosine * 10000, 0) AS BIGINT) FROM p),
-         |best AS (SELECT id, nbr FROM (SELECT id, nbr,
-         |    row_number() OVER (PARTITION BY id
-         |      ORDER BY c DESC, nbr ASC) AS rn FROM dr)
-         |  WHERE rn = 1),
-         |cp AS (SELECT DISTINCT least(id, nbr) AS a,
-         |    greatest(id, nbr) AS b FROM best),
-         |es AS (SELECT a, b FROM cp UNION SELECT b, a FROM cp),
-         |deg AS (SELECT a AS node, count(*) AS d FROM es GROUP BY 1),
-         |cand AS (SELECT w1.b AS u, w2.b AS v, count(*) AS cn
-         |  FROM es w1 JOIN es w2 ON w2.a = w1.a AND w1.b < w2.b
-         |  GROUP BY 1, 2),
-         |ne AS (SELECT cand.u, cand.v, cand.cn FROM cand
-         |  WHERE NOT EXISTS (SELECT 1 FROM cp
-         |    WHERE cp.a = cand.u AND cp.b = cand.v))
-         |SELECT ne.u AS id_a, ne.v AS id_b,
-         |  ne.cn AS common_neighbors, du.d AS deg_a, dv.d AS deg_b,
-         |  ${ratioScaledSql("ne.cn", "du.d + dv.d - ne.cn", 6)}
-         |    AS jaccard_e6
-         |FROM ne JOIN deg du ON du.node = ne.u
-         |JOIN deg dv ON dv.node = ne.v""".stripMargin)
-    },
-
-    // q317: q284 with the wedge join restricted to centers of degree
-    // <= 2 (the engine's LeftSemi cap, mirrored as a join against the
-    // degree table); reported degrees stay uncapped
-    "q317_link_prediction_capped" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      materializedCtes(s"""WITH ${lshPairCtes("0.3")},
-         |dr AS (SELECT id_a AS id, id_b AS nbr,
-         |    CAST(round(cosine * 10000, 0) AS BIGINT) AS c FROM p
-         |  UNION ALL SELECT id_b, id_a,
-         |    CAST(round(cosine * 10000, 0) AS BIGINT) FROM p),
-         |best AS (SELECT id, nbr FROM (SELECT id, nbr,
-         |    row_number() OVER (PARTITION BY id
-         |      ORDER BY c DESC, nbr ASC) AS rn FROM dr)
-         |  WHERE rn = 1),
-         |cp AS (SELECT DISTINCT least(id, nbr) AS a,
-         |    greatest(id, nbr) AS b FROM best),
-         |es AS (SELECT a, b FROM cp UNION SELECT b, a FROM cp),
-         |deg AS (SELECT a AS node, count(*) AS d FROM es GROUP BY 1),
-         |cand AS (SELECT w1.b AS u, w2.b AS v, count(*) AS cn
-         |  FROM es w1 JOIN es w2 ON w2.a = w1.a AND w1.b < w2.b
-         |  JOIN deg dc ON dc.node = w1.a AND dc.d <= 2
-         |  GROUP BY 1, 2),
-         |ne AS (SELECT cand.u, cand.v, cand.cn FROM cand
-         |  WHERE NOT EXISTS (SELECT 1 FROM cp
-         |    WHERE cp.a = cand.u AND cp.b = cand.v))
-         |SELECT ne.u AS id_a, ne.v AS id_b,
-         |  ne.cn AS common_neighbors, du.d AS deg_a, dv.d AS deg_b,
-         |  ${ratioScaledSql("ne.cn", "du.d + dv.d - ne.cn", 6)}
-         |    AS jaccard_e6
-         |FROM ne JOIN deg du ON du.node = ne.u
-         |JOIN deg dv ON dv.node = ne.v""".stripMargin)
-    },
-
-    // q318: per-user lead pairs tagged train/test at the horizon
-    // midpoint by TARGET-event day; train argmax (n DESC, to ASC);
-    // NULL-predicted (cold-start) groups kept
-    "q318_markov_backtest" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH e AS (SELECT user_id AS u, epoch_ns(ts) AS ts,
-         |    event_id AS eid, event_type AS ft,
-         |    epoch_ns(ts) // 86400000000000 AS day FROM events
-         |  WHERE user_id IS NOT NULL),
-         |tr AS (SELECT ft AS from_type, lead(ft) OVER w AS to_type,
-         |    lead(day) OVER w AS to_day
-         |  FROM e WINDOW w AS (PARTITION BY u ORDER BY ts, eid)),
-         |t2 AS (SELECT * FROM tr WHERE to_type IS NOT NULL),
-         |h AS (SELECT min(to_day) AS d0, max(to_day) AS d1 FROM t2),
-         |tag AS (SELECT from_type, to_type,
-         |    to_day >= ((d0 + d1) // 2) + 1 AS is_test
-         |  FROM t2 CROSS JOIN h),
-         |tc AS (SELECT from_type, to_type, count(*) AS n FROM tag
-         |  WHERE NOT is_test GROUP BY 1, 2),
-         |pred AS (SELECT from_type, to_type AS predicted FROM (
-         |    SELECT from_type, to_type, row_number() OVER (
-         |      PARTITION BY from_type ORDER BY n DESC, to_type ASC)
-         |      AS rn FROM tc) WHERE rn = 1),
-         |sc AS (SELECT tag.from_type, pred.predicted,
-         |    count(*) AS n_test,
-         |    CAST(sum(CASE WHEN tag.to_type = pred.predicted THEN 1
-         |      ELSE 0 END) AS BIGINT) AS n_correct
-         |  FROM tag LEFT JOIN pred ON pred.from_type = tag.from_type
-         |  WHERE tag.is_test GROUP BY 1, 2)
-         |SELECT from_type, predicted, n_test, n_correct,
-         |  ${ratioScaledSql("n_correct", "n_test", 6)} AS acc_e6
-         |FROM sc""".stripMargin
-    },
-
-    // q319: per-user (first, last) days, 1-row horizon, per-user
-    // offset unnest bounded by min(lifetime, observability); ended =
-    // last < horizon (corpus-edge users are censored, never churned)
-    "q319_churn_hazard" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH e AS (SELECT user_id AS u,
-         |    epoch_ns(ts) // 86400000000000 AS day FROM events
-         |  WHERE user_id IS NOT NULL),
-         |pu AS (SELECT u, min(day) AS f, max(day) AS l FROM e
-         |  GROUP BY 1),
-         |h AS (SELECT max(l) AS hh FROM pu),
-         |sp AS (SELECT l - f AS life, hh - f AS obs, l < hh AS ended
-         |  FROM pu CROSS JOIN h),
-         |ar AS (SELECT CAST(unnest(range(0, least(life, obs) + 1))
-         |    AS BIGINT) AS o FROM sp),
-         |arc AS (SELECT o, count(*) AS at_risk FROM ar GROUP BY 1),
-         |ch AS (SELECT life AS o, count(*) AS churned FROM sp
-         |  WHERE ended GROUP BY 1)
-         |SELECT arc.o AS offset, arc.at_risk,
-         |  coalesce(ch.churned, 0) AS churned,
-         |  ${ratioScaledSql("coalesce(ch.churned, 0)", "arc.at_risk",
-             6)} AS hazard_e6
-         |FROM arc LEFT JOIN ch ON ch.o = arc.o""".stripMargin
-    },
-
-    // q320: per-type daily tally, day-pair self-join (calendar², not
-    // events²), e6 slope keys truncated toward zero (integer div and
-    // integer // share that convention on negatives — measured),
-    // lower-median row_number pick over the total (s, dy, dx) order
-    "q320_theilsen" ->
-      """WITH d AS (SELECT event_type AS t,
-        |    epoch_ns(ts) // 86400000000000 AS day, count(*) AS y
-        |  FROM events GROUP BY 1, 2),
-        |p AS (SELECT a.t, b.y - a.y AS dy, b.day - a.day AS dx,
-        |    (b.y - a.y) * 1000000 // (b.day - a.day) AS s
-        |  FROM d a JOIN d b ON b.t = a.t AND a.day < b.day),
-        |r AS (SELECT t, s, row_number() OVER (PARTITION BY t
-        |      ORDER BY s, dy, dx) AS rn,
-        |    count(*) OVER (PARTITION BY t) AS np FROM p)
-        |SELECT t AS event_type, CAST(np AS BIGINT) AS n_pairs,
-        |  CAST(s AS BIGINT) AS slope_e6
-        |FROM r WHERE rn = (np + 1) // 2""".stripMargin,
-
-    // q321: per-type lower-median of daily counts, median-tie days
-    // discarded, IS DISTINCT FROM breaks count the runs; expected
-    // runs as the exact 1 + 2ab/(a+b) rational at e6
-    "q321_runs_test" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH d AS (SELECT event_type AS t,
-         |    epoch_ns(ts) // 86400000000000 AS day, count(*) AS y
-         |  FROM events GROUP BY 1, 2),
-         |m AS (SELECT t, y AS med FROM (SELECT t, y,
-         |    row_number() OVER (PARTITION BY t ORDER BY y, day) AS rn,
-         |    count(*) OVER (PARTITION BY t) AS n FROM d)
-         |  WHERE rn = (n + 1) // 2),
-         |s AS (SELECT d.t, d.day,
-         |    CASE WHEN d.y > m.med THEN 1 ELSE -1 END AS sg
-         |  FROM d JOIN m ON m.t = d.t WHERE d.y <> m.med),
-         |b AS (SELECT t, sg, CASE WHEN lag(sg) OVER (PARTITION BY t
-         |      ORDER BY day) IS DISTINCT FROM sg THEN 1 ELSE 0 END
-         |    AS brk FROM s),
-         |g AS (SELECT t,
-         |    CAST(sum(CASE WHEN sg = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_above,
-         |    CAST(sum(CASE WHEN sg = -1 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_below,
-         |    CAST(sum(brk) AS BIGINT) AS runs FROM b GROUP BY 1)
-         |SELECT t AS event_type, n_above, n_below, runs,
-         |  1000000 + ${ratioScaledSql("2 * n_above * n_below",
-             "n_above + n_below", 6)} AS expected_runs_e6
-         |FROM g""".stripMargin
-    },
-
-    // q322: per-source (x, doc_id) ranks, HUGEINT sums, the sorted
-    // Lorenz identity for Gini and share-squares for HHI
-    "q322_concentration" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH t AS (SELECT source, doc_id, len($wordsSql) AS x
-         |  FROM documents),
-         |r AS (SELECT source, x,
-         |    row_number() OVER (PARTITION BY source
-         |      ORDER BY x, doc_id) AS rn,
-         |    count(*) OVER (PARTITION BY source) AS n FROM t),
-         |g AS (SELECT source, CAST(count(*) AS BIGINT) AS n_members,
-         |    CAST(sum(x) AS HUGEINT) AS tot,
-         |    CAST(sum((2 * rn - n - 1) * x) AS HUGEINT) AS gnum,
-         |    CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sq
-         |  FROM r GROUP BY 1)
-         |SELECT source, n_members, CAST(tot AS BIGINT) AS total,
-         |  ${ratioScaledSql("gnum", "n_members * tot", 6)} AS gini_e6,
-         |  ${ratioScaledSql("sq", "tot * tot", 6)} AS hhi_e6
-         |FROM g""".stripMargin
-    },
-
-    // q323: letters/terminators via global regexp_replace lengths,
-    // words via the corpus convention, integer-div truncation (q320)
-    "q323_readability" ->
-      s"""WITH c AS (SELECT doc_id,
-         |    CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-         |      AS BIGINT) AS n_letters,
-         |    CAST(len($wordsSql) AS BIGINT) AS n_words,
-         |    CAST(greatest(length(
-         |      regexp_replace(text, '[^.!?]', '', 'g')), 1) AS BIGINT)
-         |      AS n_sentences
-         |  FROM documents)
-         |SELECT doc_id, n_letters, n_words, n_sentences,
-         |  (n_letters * 588 - n_sentences * 2960) // n_words - 1580
-         |    AS cli_e2
-         |FROM c WHERE n_words > 0""".stripMargin,
-
-    // q332: q286's calendar + IGNORE-NULLS anchors both directions;
-    // the blend numerator may be negative → // truncation (q320);
-    // the mod-3 holdout mirrors the engine's constructed gaps
-    "q332_interpolate" ->
-      """WITH d AS (SELECT event_type AS t,
-        |    epoch_ns(ts) // 86400000000000 AS day, count(*) AS n
-        |  FROM events
-        |  WHERE (epoch_ns(ts) // 86400000000000) % 3 <> 1
-        |  GROUP BY 1, 2),
-        |h AS (SELECT min(day) AS d0, max(day) AS d1 FROM d),
-        |cal AS (SELECT ty.t, CAST(unnest(range(h.d0, h.d1 + 1))
-        |    AS BIGINT) AS day
-        |  FROM (SELECT DISTINCT t FROM d) ty CROSS JOIN h),
-        |j AS (SELECT cal.t, cal.day, d.n FROM cal
-        |  LEFT JOIN d ON d.t = cal.t AND d.day = cal.day),
-        |a AS (SELECT t, day, n,
-        |    last_value(CASE WHEN n IS NOT NULL THEN day END
-        |      IGNORE NULLS) OVER wb AS pd,
-        |    last_value(n IGNORE NULLS) OVER wb AS pv,
-        |    first_value(CASE WHEN n IS NOT NULL THEN day END
-        |      IGNORE NULLS) OVER wf AS nd,
-        |    first_value(n IGNORE NULLS) OVER wf AS nv
-        |  FROM j WINDOW wb AS (PARTITION BY t ORDER BY day
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |  wf AS (PARTITION BY t ORDER BY day
-        |    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-        |SELECT t AS event_type, day, n IS NOT NULL AS observed,
-        |  CASE WHEN n IS NOT NULL THEN n * 1000000
-        |       WHEN pd IS NOT NULL AND nd IS NOT NULL THEN
-        |         pv * 1000000 +
-        |         ((nv - pv) * 1000000 * (day - pd)) // (nd - pd)
-        |       ELSE NULL END AS value_e6
-        |FROM a""".stripMargin,
-
-    // q333: q108's edge/node CTEs, 3 unrolled attenuation rounds,
-    // one truncating div per node-round
-    "q333_katz" -> {
-      def iter(k: Int) =
-        s"""x$k AS (SELECT n.node,
-           |    (1 * coalesce(s.c, 0)) // 2 AS x
-           |  FROM nodes n LEFT JOIN (
-           |    SELECT e.dst AS node, CAST(sum(p.x) AS BIGINT) AS c
-           |    FROM edges e JOIN x${k - 1} p ON p.node = e.src
-           |    GROUP BY 1) s ON s.node = n.node)""".stripMargin
-      s"""WITH edges AS (SELECT DISTINCT o_custkey * 2 AS src,
-         |    l_suppkey * 2 + 1 AS dst
-         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         |nodes AS (SELECT src AS node FROM edges
-         |  UNION SELECT dst FROM edges),
-         |x0 AS (SELECT node, CAST(1000000 AS BIGINT) AS x FROM nodes),
-         |${(1 to 3).map(iter).mkString(",\n")}
-         |SELECT n.node, x1.x + x2.x + x3.x AS katz_e6
-         |FROM nodes n JOIN x1 ON x1.node = n.node
-         |JOIN x2 ON x2.node = n.node
-         |JOIN x3 ON x3.node = n.node""".stripMargin
-    },
-
-    // q334: the LSH pair CTEs (p = unique verified pairs), per-label
-    // internal-edge and endpoint tallies, the two-term HUGEINT ladder
-    "q334_label_modularity" ->
-      s"""WITH ${lshPairCtes("0.45")},
-         |lab AS (SELECT vec_id AS node, CAST(label AS BIGINT) AS label
-         |  FROM embeddings),
-         |m AS (SELECT count(*) AS m FROM p),
-         |wl AS (SELECT la.label AS la, lb.label AS lb
-         |  FROM p JOIN lab la ON la.node = p.id_a
-         |  JOIN lab lb ON lb.node = p.id_b),
-         |ein AS (SELECT la AS label, count(*) AS ein FROM wl
-         |  WHERE la = lb GROUP BY 1),
-         |deg AS (SELECT label, count(*) AS d FROM (
-         |  SELECT la AS label FROM wl
-         |  UNION ALL SELECT lb FROM wl) u GROUP BY 1),
-         |mem AS (SELECT CAST(label AS BIGINT) AS label,
-         |    count(*) AS n_members FROM embeddings GROUP BY 1)
-         |SELECT mem.label, mem.n_members,
-         |  coalesce(ein.ein, 0) AS n_in_edges,
-         |  coalesce(deg.d, 0) AS degree_sum,
-         |  CASE WHEN m.m > 0 THEN
-         |    CAST((CAST(coalesce(ein.ein, 0) AS HUGEINT) *
-         |      1000000000000) // m.m AS BIGINT) -
-         |    CAST((CAST(coalesce(deg.d, 0) AS HUGEINT) *
-         |      coalesce(deg.d, 0) * 1000000000000) //
-         |      (4 * CAST(m.m AS HUGEINT) * m.m) AS BIGINT)
-         |  ELSE 0 END AS q_e12
-         |FROM mem LEFT JOIN ein USING (label)
-         |LEFT JOIN deg USING (label) CROSS JOIN m""".stripMargin,
-
-    // q335: hash-parity arms (sign-safe mod), midpoint split, per-arm
-    // user-mean cells via the shared half-up e6 ratio, DiD on the
-    // rounded cells
-    "q335_diff_in_diff" ->
-      s"""WITH d AS (SELECT user_id AS u,
-         |    epoch_ns(ts) // 86400000000000 AS day, event_type AS t
-         |  FROM events),
-         |h AS (SELECT (min(day) + max(day) + 1) // 2 AS split FROM d),
-         |users AS (SELECT DISTINCT u, ((u % 2) + 2) % 2 AS arm FROM d),
-         |conv AS (SELECT d.u,
-         |    CASE WHEN d.day >= h.split THEN 1 ELSE 0 END AS post,
-         |    count(*) AS n
-         |  FROM d CROSS JOIN h WHERE d.t = 'purchase' GROUP BY 1, 2),
-         |pu AS (SELECT users.u, users.arm,
-         |    coalesce(sum(CASE WHEN conv.post = 0 THEN conv.n END), 0)
-         |      AS pre,
-         |    coalesce(sum(CASE WHEN conv.post = 1 THEN conv.n END), 0)
-         |      AS post
-         |  FROM users LEFT JOIN conv ON conv.u = users.u GROUP BY 1, 2),
-         |arm AS (SELECT arm, count(*) AS nu, sum(pre) AS spre,
-         |    sum(post) AS spost
-         |  FROM pu GROUP BY 1),
-         |cells AS (SELECT
-         |  CAST(coalesce(sum(CASE WHEN arm = 1 THEN nu END), 0)
-         |    AS BIGINT) AS n_treat,
-         |  CAST(coalesce(sum(CASE WHEN arm = 0 THEN nu END), 0)
-         |    AS BIGINT) AS n_ctrl,
-         |  CAST(coalesce(sum(CASE WHEN arm = 1 THEN spre END), 0)
-         |    AS BIGINT) AS tpre,
-         |  CAST(coalesce(sum(CASE WHEN arm = 1 THEN spost END), 0)
-         |    AS BIGINT) AS tpost,
-         |  CAST(coalesce(sum(CASE WHEN arm = 0 THEN spre END), 0)
-         |    AS BIGINT) AS cpre,
-         |  CAST(coalesce(sum(CASE WHEN arm = 0 THEN spost END), 0)
-         |    AS BIGINT) AS cpost
-         |  FROM arm),
-         |r AS (SELECT n_treat, n_ctrl,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "tpre", "n_treat", 6)} AS treat_pre_e6,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "tpost", "n_treat", 6)} AS treat_post_e6,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "cpre", "n_ctrl", 6)} AS ctrl_pre_e6,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "cpost", "n_ctrl", 6)} AS ctrl_post_e6
-         |  FROM cells)
-         |SELECT *, (treat_post_e6 - treat_pre_e6) -
-         |  (ctrl_post_e6 - ctrl_pre_e6) AS did_e6 FROM r""".stripMargin,
-
-    // q336: the parquet-side mirror of the ORC roundtrip checksums —
-    // any ORC type/row/column infidelity breaks the hash
-    "q336_orc_roundtrip" ->
-      """SELECT o_orderstatus, count(*) AS n_orders,
-        |  CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-        |    AS BIGINT) AS sum_price_e2,
-        |  CAST(sum(o_custkey * 1000003 + (epoch_ns(o_orderdate)
-        |    // 1000000000) // 86400) AS BIGINT) AS xsum,
-        |  min(o_orderkey) AS min_key,
-        |  max((epoch_ns(o_orderdate) // 1000000000) // 86400)
-        |    AS max_day
-        |FROM orders GROUP BY 1""".stripMargin,
-
-    // q358: the filtered aggregate over the source parquet —
-    // partitioning is a layout property; values must be invariant
-    "q358_partition_pruned" ->
-      """SELECT o_orderpriority, count(*) AS n_orders,
-        |  CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-        |    AS BIGINT) AS sum_price_e2,
-        |  min(o_orderkey) AS min_key
-        |FROM orders WHERE o_orderstatus = 'F'
-        |GROUP BY 1""".stripMargin,
-
-    // q359: the dim-filtered join over the source parquet — dynamic
-    // pruning is a plan property; values must be invariant to it
-    "q359_dpp_join" ->
-      """WITH dim AS (
-        |  SELECT DISTINCT o_orderstatus AS status,
-        |    CASE o_orderstatus WHEN 'F' THEN 'done'
-        |      WHEN 'O' THEN 'open' ELSE 'pending' END AS category
-        |  FROM orders)
-        |SELECT o_orderpriority, count(*) AS n_orders,
-        |  CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-        |    AS BIGINT) AS sum_price_e2,
-        |  min(o_orderkey) AS min_key
-        |FROM orders JOIN dim ON o_orderstatus = dim.status
-        |WHERE dim.category = 'done'
-        |GROUP BY 1""".stripMargin,
-
-    // q360: the two snapshots, the merge (incoming wins where
-    // non-null), and the keyed diff, all re-derived relationally —
-    // any divergence in the sink's write path, time travel, or the
-    // null-safe change labeling breaks a label count
-    "q360_version_diff" ->
-      """WITH a AS (SELECT o_custkey AS k,
-        |    CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-        |      AS BIGINT) AS val_e2
-        |  FROM orders WHERE o_orderstatus = 'F' GROUP BY 1),
-        |b AS (SELECT o_custkey AS k,
-        |    CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-        |      AS BIGINT) AS val_e2
-        |  FROM orders WHERE o_orderstatus = 'O' GROUP BY 1),
-        |m AS (SELECT coalesce(b.k, a.k) AS k,
-        |    coalesce(b.val_e2, a.val_e2) AS val_e2
-        |  FROM a FULL OUTER JOIN b ON a.k = b.k),
-        |d AS (SELECT coalesce(m.k, a.k) AS k,
-        |    CASE WHEN a.k IS NULL THEN 'added'
-        |         WHEN m.k IS NULL THEN 'removed'
-        |         WHEN m.val_e2 IS DISTINCT FROM a.val_e2 THEN 'changed'
-        |         ELSE 'unchanged' END AS change
-        |  FROM a FULL OUTER JOIN m ON a.k = m.k)
-        |SELECT change, count(*) AS n_keys,
-        |  CAST(min(k) AS BIGINT) AS min_key,
-        |  CAST(max(k) AS BIGINT) AS max_key
-        |FROM d GROUP BY 1""".stripMargin,
-
-    // q357: the join itself, over the source parquet — bucketing is a
-    // layout property; values must be invariant to it
-    "q357_bucketed_join" ->
-      """SELECT o_orderpriority, count(*) AS n_lines,
-        |  CAST(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT))
-        |    AS BIGINT) AS sum_price_e2,
-        |  min(o_orderkey) AS min_key,
-        |  max(l_orderkey) AS max_key
-        |FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-        |GROUP BY 1""".stripMargin,
-
-    // q356: the oracle reads the ENGINE-WRITTEN jsonl file — gating
-    // the write path's bytes, not just a same-engine roundtrip
-    "q356_jsonl_roundtrip" ->
-      s"""SELECT o_orderstatus, count(*) AS n_orders,
-         |  CAST(sum(price_e2) AS BIGINT) AS sum_price_e2,
-         |  CAST(sum(o_custkey * 1000003 + order_day) AS BIGINT)
-         |    AS xsum,
-         |  min(o_orderkey) AS min_key,
-         |  max(order_day) AS max_day
-         |FROM read_json('$csvGateRoot/q356/orders.jsonl',
-         |  format = 'newline_delimited',
-         |  columns = {o_orderkey: 'BIGINT', o_custkey: 'BIGINT',
-         |    o_orderstatus: 'VARCHAR', price_e2: 'BIGINT',
-         |    order_day: 'BIGINT'})
-         |GROUP BY 1""".stripMargin,
-
-    // q338: the q125 token stream -> adjacent distinct bigrams ->
-    // symmetric string-keyed edges, the q108 rank ladder unrolled 5
-    // rounds, top-20 by (rank desc, word asc)
-    "q338_textrank" -> {
-      def iter(k: Int) =
-        s"""r$k AS (SELECT n.node,
-           |    (15000000 + 85 * coalesce(s.c, 0)) // 100 AS rank_e6
-           |  FROM nodes n LEFT JOIN (
-           |    SELECT e.dst AS node,
-           |      CAST(sum(p.rank_e6 // d.deg) AS BIGINT) AS c
-           |    FROM edges e JOIN r${k - 1} p ON p.node = e.src
-           |    JOIN deg d ON d.node = e.src GROUP BY 1) s
-           |    ON s.node = n.node)""".stripMargin
-      s"""WITH dd AS (SELECT doc_id, $wordsSql AS ws FROM documents),
-         |t AS (SELECT doc_id, generate_subscripts(ws, 1) AS i,
-         |    unnest(ws) AS w FROM dd),
-         |bi AS (SELECT DISTINCT a.w AS w1, b.w AS w2
-         |  FROM t a JOIN t b ON b.doc_id = a.doc_id AND b.i = a.i + 1
-         |  WHERE a.w <> b.w),
-         |edges AS (SELECT w1 AS src, w2 AS dst FROM bi
-         |  UNION SELECT w2, w1 FROM bi),
-         |nodes AS (SELECT DISTINCT src AS node FROM edges),
-         |deg AS (SELECT src AS node, count(*) AS deg FROM edges
-         |  GROUP BY 1),
-         |r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS rank_e6
-         |  FROM nodes),
-         |${(1 to 5).map(iter).mkString(",\n")}
-         |SELECT node AS word, rank_e6 FROM r5
-         |ORDER BY rank_e6 DESC, word ASC LIMIT 20""".stripMargin
-    },
-
-    // q339: q215's t/j score+label chain at e6, equal-width bins with
-    // the top fold, truncated bin means, DECIMAL-safe squared sums,
-    // one truncating e6 quotient per component
-    "q339_brier" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH t AS (SELECT doc_id,
-         |    ${ratioScaledSql(qScoreNum, qScoreDen, 6)} AS p,
-         |    $qNWords AS nw,
-         |    CAST(length(regexp_replace(text, '\\s+', '', 'g'))
-         |      AS BIGINT) AS nsp,
-         |    CAST(length(text) - length(regexp_replace(text, '#', '', 'g'))
-         |      + length(regexp_replace(text, '\\.{3,}|…', '@', 'g'))
-         |      - length(regexp_replace(text, '\\.{3,}|…', '', 'g'))
-         |      AS BIGINT) AS nsym,
-         |    CAST(len(list_filter($wordsSql,
-         |      w -> w IN ('the', 'a', 'of', 'to', 'and'))) AS BIGINT)
-         |      AS nstop
-         |  FROM documents),
-         |j AS (SELECT p, CASE WHEN ((nw >= 50 AND nw <= 100000)
-         |      AND (nsp >= 3 * nw AND nsp <= 10 * nw)
-         |      AND (10 * nsym < nw) AND (nstop >= 2))
-         |    THEN 1 ELSE 0 END AS yi
-         |  FROM t),
-         |b AS (SELECT least(p // 100000, 9) AS bin, p, yi FROM j),
-         |g AS (SELECT bin, count(*) AS n, sum(p) AS sp, sum(yi) AS sy,
-         |    sum(CAST(p - 1000000 * yi AS HUGEINT) *
-         |      (p - 1000000 * yi)) AS sq
-         |  FROM b GROUP BY 1),
-         |s AS (SELECT n, sy, sq,
-         |    CAST(sp AS HUGEINT) // n AS pbar,
-         |    (CAST(sy AS HUGEINT) * 1000000) // n AS ybar FROM g),
-         |tot AS (SELECT CAST(sum(n) AS BIGINT) AS nn,
-         |    CAST(sum(sy) AS BIGINT) AS gsy, sum(sq) AS gsq FROM g),
-         |tot2 AS (SELECT *, (CAST(gsy AS HUGEINT) * 1000000) // nn
-         |    AS gybar FROM tot),
-         |agg AS (SELECT max(nn) AS n_rows, max(gsy) AS gsy,
-         |    max(gsq) AS gsq,
-         |    sum((pbar - ybar) * (pbar - ybar) * n) AS rel,
-         |    sum((ybar - gybar) * (ybar - gybar) * n) AS res
-         |  FROM s CROSS JOIN tot2)
-         |SELECT n_rows,
-         |  CAST(gsq // (CAST(n_rows AS HUGEINT) * 1000000) AS BIGINT)
-         |    AS brier_e6,
-         |  CAST(rel // (CAST(n_rows AS HUGEINT) * 1000000) AS BIGINT)
-         |    AS reliability_e6,
-         |  CAST(res // (CAST(n_rows AS HUGEINT) * 1000000) AS BIGINT)
-         |    AS resolution_e6,
-         |  CAST((CAST(gsy AS HUGEINT) * (n_rows - gsy) * 1000000) //
-         |    (CAST(n_rows AS HUGEINT) * n_rows) AS BIGINT)
-         |    AS uncertainty_e6
-         |FROM agg""".stripMargin
-    },
-
-    // q340: q126's capped-basket pair CTEs (support 2 — support 3
-    // leaves zero closed wedges at gate scale, a dead arm) as the
-    // edge set, wedge
-    // self-join closed against the canonical pairs, half-up e6 ratio
-    "q340_local_clustering" ->
-      s"""WITH it AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i
-         |    FROM lineitem),
-         |f AS (SELECT b, i FROM (SELECT b, i,
-         |      count(*) OVER (PARTITION BY b) AS bs FROM it)
-         |  WHERE bs <= 64),
-         |e AS (SELECT a.i AS u, c.i AS v
-         |  FROM f a JOIN f c ON c.b = a.b AND a.i < c.i
-         |  GROUP BY 1, 2 HAVING count(*) >= 2),
-         |es AS (SELECT u AS c, v AS n FROM e
-         |  UNION ALL SELECT v, u FROM e),
-         |deg AS (SELECT c AS node, count(*) AS degree FROM es
-         |  GROUP BY 1),
-         |tri AS (SELECT w1.c AS node, count(*) AS t
-         |  FROM es w1 JOIN es w2 ON w2.c = w1.c AND w1.n < w2.n
-         |  JOIN e ON e.u = w1.n AND e.v = w2.n
-         |  GROUP BY 1)
-         |SELECT deg.node, deg.degree,
-         |  coalesce(tri.t, 0) AS triangles,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "2 * coalesce(tri.t, 0)",
-              "deg.degree * (deg.degree - 1)", 6)} AS lcc_e6
-         |FROM deg LEFT JOIN tri ON tri.node = deg.node""".stripMargin,
-
-    // q341: the closed form the materialized stream must reproduce —
-    // target = majority count, rep = target // n, remainder bumps
-    // max_copies when it is nonzero
-    "q341_class_balance" ->
-      """WITH c AS (SELECT CAST(label AS BIGINT) AS label,
-        |    count(*) AS n FROM embeddings GROUP BY 1),
-        |t AS (SELECT max(n) AS target FROM c)
-        |SELECT label, n AS n_source,
-        |  CAST(t.target AS BIGINT) AS n_materialized,
-        |  (t.target // n) + CASE WHEN t.target % n > 0 THEN 1 ELSE 0
-        |    END AS max_copies
-        |FROM c CROSS JOIN t""".stripMargin,
-
-    // q342: widths via unnest, TRUE floor bucketing spelled as the
-    // pmod-subtract form (balances are signed), two tallies
-    "q342_generalization_ladder" ->
-      """WITH w AS (SELECT CAST(unnest([1000, 10000, 100000, 1000000])
-        |    AS BIGINT) AS width_e2),
-        |r AS (SELECT c_mktsegment AS cat,
-        |    CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
-        |      AS v FROM customer),
-        |cl AS (SELECT w.width_e2, r.cat,
-        |    (r.v - (((r.v % w.width_e2) + w.width_e2) % w.width_e2))
-        |      // w.width_e2 AS bucket,
-        |    count(*) AS sz
-        |  FROM r CROSS JOIN w GROUP BY 1, 2, 3)
-        |SELECT width_e2, count(*) AS n_classes,
-        |  min(sz) AS min_class_size,
-        |  CAST(sum(CASE WHEN sz < 10 THEN sz ELSE 0 END) AS BIGINT)
-        |    AS n_violating_rows,
-        |  min(sz) >= 10 AS k_ok
-        |FROM cl GROUP BY 1""".stripMargin,
-
-    // q343: the merged base+delta state must equal this full
-    // recompute through the join (q132's oracle with the dim folded)
-    "q343_ivm_join_agg" ->
-      s"""WITH u AS (SELECT c_nationkey,
-         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-         |      AS u
-         |  FROM orders JOIN customer ON c_custkey = o_custkey),
-         |s AS (SELECT c_nationkey, count(*) AS n,
-         |    sum(CAST(u AS HUGEINT)) AS s, min(u) AS mn, max(u) AS mx
-         |  FROM u GROUP BY 1)
-         |SELECT c_nationkey, n, CAST(s AS BIGINT) AS sum_units,
-         |  mn AS min_units, mx AS max_units,
-         |  ${graft.functions.ExactRound.ratioScaledSignedSql(
-              "s", "n", 0)} AS mean_units
-         |FROM s""".stripMargin,
-
-    // q344: the incremental merge must equal the full transitive
-    // closure over ALL pairs — identical to q47's oracle (the
-    // standing/delta split exists only on the engine side; IVM's
-    // contract is that the oracle cannot tell).
-    "q344_incremental_components" ->
-      s"""WITH RECURSIVE ${lshPairCtes("0.45")},
-         |cl(node, r) AS (SELECT a, b FROM e
-         |  UNION SELECT cl.node, e2.b FROM cl JOIN e e2 ON cl.r = e2.a)
-         |SELECT node, least(node, min(r)) AS component
-         |FROM cl GROUP BY node""".stripMargin,
-
-    // q350: the q22 shingle/posting chain with N//df weights — one
-    // extra df CTE and sum(w) in place of count
-    "q350_weighted_jaccard" ->
-      s"""WITH t AS (SELECT doc_id, $wordsSql AS ws FROM documents),
-         |sh AS (SELECT doc_id, unnest(list_distinct(
-         |    [ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] for i in range(1, len(ws)-1)])) AS shingle
-         |  FROM t WHERE len(ws) >= 3),
-         |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM sh),
-         |w AS (SELECT shingle, n_docs // count(*) AS w
-         |  FROM sh, nd GROUP BY shingle, n_docs),
-         |ws2 AS (SELECT doc_id, sh.shingle, w.w
-         |  FROM sh JOIN w ON w.shingle = sh.shingle),
-         |sw AS (SELECT doc_id, CAST(sum(w) AS BIGINT) AS sw
-         |  FROM ws2 GROUP BY 1),
-         |pi AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |    CAST(sum(a.w) AS BIGINT) AS inter_w
-         |  FROM ws2 a JOIN ws2 b ON a.shingle = b.shingle
-         |    AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT doc_a, doc_b, inter_w,
-         |  sa.sw + sb.sw - inter_w AS union_w,
-         |  ${graft.functions.ExactRound.ratioScaledSql("inter_w",
-              "sa.sw + sb.sw - inter_w", 6)} AS wjaccard_e6
-         |FROM pi JOIN sw sa ON sa.doc_id = doc_a
-         |JOIN sw sb ON sb.doc_id = doc_b
-         |WHERE inter_w * 2 >= (sa.sw + sb.sw - inter_w) * 1""".stripMargin,
-
-    // q351: three unrolled wedge-closure peels over the mirrored-LSH
-    // 0.3 graph; each triangle closes exactly one wedge per edge
-    "q351_ktruss" ->
-      s"""WITH ${lshPairCtes("0.3")},
-         |${kTrussCtes(k = 3, rounds = 5)}
-         |SELECT u, v, support FROM te5""".stripMargin,
-
-    // q352/q353: native GROUP BY ROLLUP/CUBE; GROUPING bitmask uses
-    // the same first-arg-most-significant convention as Spark's
-    // grouping_id
-    "q352_rollup" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-        |  CAST(sum(CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100
-        |    AS BIGINT)) AS BIGINT) AS qty_e2,
-        |  GROUPING(l_returnflag, l_linestatus) AS gid
-        |FROM lineitem
-        |GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-
-    "q353_cube" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-        |  CAST(sum(CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100
-        |    AS BIGINT)) AS BIGINT) AS qty_e2,
-        |  GROUPING(l_returnflag, l_linestatus) AS gid
-        |FROM lineitem
-        |GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin,
-
-    // q345: frequency rank per class (count desc, value asc), exact
-    // cross-multiplied dominance verdict
-    "q345_recursive_ldiversity" ->
-      """WITH cnt AS (SELECT c_mktsegment, c_nationkey AS sv,
-        |    count(*) AS c FROM customer GROUP BY 1, 2),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY c_mktsegment
-        |    ORDER BY c DESC, sv ASC) AS rk FROM cnt)
-        |SELECT c_mktsegment,
-        |  CAST(sum(c) AS BIGINT) AS class_size,
-        |  count(*) AS n_sensitive,
-        |  max(CASE WHEN rk = 1 THEN c END) AS r1,
-        |  CAST(sum(CASE WHEN rk >= 3 THEN c ELSE 0 END) AS BIGINT)
-        |    AS tail_from_l,
-        |  count(*) >= 3 AND max(CASE WHEN rk = 1 THEN c END) * 1 <
-        |    sum(CASE WHEN rk >= 3 THEN c ELSE 0 END) * 1 AS recursive_ok
-        |FROM r GROUP BY 1""".stripMargin,
-
-    // q346: the purchase double cover, three dedup'd hop expansions
-    // from the seed sample, min-hop per (seed, node), truncated
-    // reciprocal sum
-    "q346_harmonic_centrality" ->
-      """WITH e0 AS (SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  GROUP BY 1, 2),
-        |e AS (SELECT src AS u, dst AS v FROM e0
-        |  UNION SELECT dst, src FROM e0),
-        |s AS (SELECT c_custkey * 2 AS seed FROM customer
-        |  WHERE c_custkey % 100 = 0),
-        |d1 AS (SELECT s.seed, e.v AS node FROM s JOIN e ON e.u = s.seed
-        |  GROUP BY 1, 2),
-        |d2 AS (SELECT d1.seed, e.v AS node FROM d1 JOIN e ON e.u = d1.node
-        |  GROUP BY 1, 2),
-        |d3 AS (SELECT d2.seed, e.v AS node FROM d2 JOIN e ON e.u = d2.node
-        |  GROUP BY 1, 2),
-        |dd AS (SELECT seed, node, min(hops) AS hops FROM (
-        |    SELECT seed, node, 1 AS hops FROM d1
-        |    UNION ALL SELECT seed, node, 2 FROM d2
-        |    UNION ALL SELECT seed, node, 3 FROM d3)
-        |  WHERE node <> seed GROUP BY 1, 2)
-        |SELECT seed AS node, count(*) AS n_reached,
-        |  CAST(sum(1000000 // hops) AS BIGINT) AS harmonic_e6
-        |FROM dd GROUP BY 1""".stripMargin,
-
-    // q354: exact ≤3-hop balls for every node (materialized hop
-    // expansions), then the md5-register mirror — bucket = hex digit
-    // 1, rho = leading zero bits of hex digits 2..16 + 1 (all-zero ⇒
-    // 61) — register-wise max per (node, bucket), and the same
-    // integer raw-HLL quotient in HUGEINT
-    "q354_hyperball" -> materializedCtes(
-      """WITH e0 AS (SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  GROUP BY 1, 2),
-        |e AS (SELECT src AS u, dst AS v FROM e0
-        |  UNION SELECT dst, src FROM e0),
-        |n0 AS (SELECT DISTINCT u AS node FROM e),
-        |d1 AS (SELECT u AS node, v AS r FROM e),
-        |d2 AS (SELECT d1.node, e.v AS r FROM d1 JOIN e ON e.u = d1.r
-        |  GROUP BY 1, 2),
-        |d3 AS (SELECT d2.node, e.v AS r FROM d2 JOIN e ON e.u = d2.r
-        |  GROUP BY 1, 2),
-        |ball AS (SELECT node, r FROM (
-        |    SELECT node, node AS r FROM n0
-        |    UNION SELECT node, r FROM d1
-        |    UNION SELECT node, r FROM d2
-        |    UNION SELECT node, r FROM d3)),
-        |hh AS (SELECT node, md5(CAST(r AS VARCHAR)) AS h FROM ball),
-        |rr AS (SELECT node,
-        |    strpos('0123456789abcdef', substring(h, 1, 1)) - 1
-        |      AS bucket,
-        |    CASE WHEN ltrim(substring(h, 2, 15), '0') = '' THEN 61
-        |      ELSE (len(substring(h, 2, 15)) -
-        |          len(ltrim(substring(h, 2, 15), '0'))) * 4 +
-        |        CASE WHEN strpos('0123456789abcdef',
-        |            substring(ltrim(substring(h, 2, 15), '0'), 1, 1))
-        |            - 1 >= 8 THEN 0
-        |          WHEN strpos('0123456789abcdef',
-        |            substring(ltrim(substring(h, 2, 15), '0'), 1, 1))
-        |            - 1 >= 4 THEN 1
-        |          WHEN strpos('0123456789abcdef',
-        |            substring(ltrim(substring(h, 2, 15), '0'), 1, 1))
-        |            - 1 >= 2 THEN 2
-        |          ELSE 3 END + 1 END AS rho
-        |  FROM hh),
-        |regs AS (SELECT node, bucket, max(rho) AS rho FROM rr
-        |  GROUP BY 1, 2),
-        |agg AS (SELECT node, count(*) AS n_set,
-        |    CAST(sum(rho) AS BIGINT) AS sum_rho,
-        |    sum(CAST(CAST(1 AS BIGINT) << (61 - rho) AS HUGEINT))
-        |      AS sum_set
-        |  FROM regs GROUP BY 1)
-        |SELECT node, n_set, sum_rho,
-        |  CAST((CAST(673000 AS HUGEINT) * 256 *
-        |      CAST(2305843009213693952 AS HUGEINT)) //
-        |    (sum_set + (16 - n_set) *
-        |      CAST(2305843009213693952 AS HUGEINT)) AS BIGINT)
-        |    AS nf_raw_e6
-        |FROM agg""".stripMargin),
-
-    // q355: one (node, r, min-radius) membership table, register
-    // values computed ONCE per distinct reached id, then per-radius
-    // register-max + the q354 raw-HLL quotient, summed graph-wide
-    "q355_neighborhood_curve" -> materializedCtes(
-      """WITH e0 AS (SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  GROUP BY 1, 2),
-        |e AS (SELECT src AS u, dst AS v FROM e0
-        |  UNION SELECT dst, src FROM e0),
-        |n0 AS (SELECT DISTINCT u AS node FROM e),
-        |d1 AS (SELECT u AS node, v AS r FROM e),
-        |d2 AS (SELECT d1.node, e.v AS r FROM d1 JOIN e ON e.u = d1.r
-        |  GROUP BY 1, 2),
-        |mem AS (SELECT node, r, min(t) AS tmin FROM (
-        |    SELECT node, node AS r, 0 AS t FROM n0
-        |    UNION ALL SELECT node, r, 1 FROM d1
-        |    UNION ALL SELECT node, r, 2 FROM d2) GROUP BY 1, 2),
-        |rh AS (SELECT r, md5(CAST(r AS VARCHAR)) AS h FROM
-        |  (SELECT DISTINCT r FROM mem)),
-        |rv AS (SELECT r,
-        |    strpos('0123456789abcdef', substring(h, 1, 1)) - 1
-        |      AS bucket,
-        |    CASE WHEN ltrim(substring(h, 2, 15), '0') = '' THEN 61
-        |      ELSE (len(substring(h, 2, 15)) -
-        |          len(ltrim(substring(h, 2, 15), '0'))) * 4 +
-        |        CASE WHEN strpos('0123456789abcdef',
-        |            substring(ltrim(substring(h, 2, 15), '0'), 1, 1))
-        |            - 1 >= 8 THEN 0
-        |          WHEN strpos('0123456789abcdef',
-        |            substring(ltrim(substring(h, 2, 15), '0'), 1, 1))
-        |            - 1 >= 4 THEN 1
-        |          WHEN strpos('0123456789abcdef',
-        |            substring(ltrim(substring(h, 2, 15), '0'), 1, 1))
-        |            - 1 >= 2 THEN 2
-        |          ELSE 3 END + 1 END AS rho
-        |  FROM rh),
-        |r0 AS (SELECT m.node, rv.bucket, max(rv.rho) AS rho FROM mem m
-        |  JOIN rv ON rv.r = m.r WHERE m.tmin <= 0 GROUP BY 1, 2),
-        |r1 AS (SELECT m.node, rv.bucket, max(rv.rho) AS rho FROM mem m
-        |  JOIN rv ON rv.r = m.r WHERE m.tmin <= 1 GROUP BY 1, 2),
-        |r2 AS (SELECT m.node, rv.bucket, max(rv.rho) AS rho FROM mem m
-        |  JOIN rv ON rv.r = m.r WHERE m.tmin <= 2 GROUP BY 1, 2),
-        |a0 AS (SELECT node, count(*) AS n_set,
-        |    sum(CAST(CAST(1 AS BIGINT) << (61 - rho) AS HUGEINT))
-        |      AS sum_set FROM r0 GROUP BY 1),
-        |a1 AS (SELECT node, count(*) AS n_set,
-        |    sum(CAST(CAST(1 AS BIGINT) << (61 - rho) AS HUGEINT))
-        |      AS sum_set FROM r1 GROUP BY 1),
-        |a2 AS (SELECT node, count(*) AS n_set,
-        |    sum(CAST(CAST(1 AS BIGINT) << (61 - rho) AS HUGEINT))
-        |      AS sum_set FROM r2 GROUP BY 1),
-        |c0 AS (SELECT 0 AS t, count(*) AS n_nodes,
-        |    CAST(sum(CAST((CAST(673000 AS HUGEINT) * 256 *
-        |        CAST(2305843009213693952 AS HUGEINT)) //
-        |      (sum_set + (16 - n_set) *
-        |        CAST(2305843009213693952 AS HUGEINT)) AS BIGINT))
-        |      AS BIGINT) AS sum_nf_raw_e6 FROM a0),
-        |c1 AS (SELECT 1 AS t, count(*) AS n_nodes,
-        |    CAST(sum(CAST((CAST(673000 AS HUGEINT) * 256 *
-        |        CAST(2305843009213693952 AS HUGEINT)) //
-        |      (sum_set + (16 - n_set) *
-        |        CAST(2305843009213693952 AS HUGEINT)) AS BIGINT))
-        |      AS BIGINT) AS sum_nf_raw_e6 FROM a1),
-        |c2 AS (SELECT 2 AS t, count(*) AS n_nodes,
-        |    CAST(sum(CAST((CAST(673000 AS HUGEINT) * 256 *
-        |        CAST(2305843009213693952 AS HUGEINT)) //
-        |      (sum_set + (16 - n_set) *
-        |        CAST(2305843009213693952 AS HUGEINT)) AS BIGINT))
-        |      AS BIGINT) AS sum_nf_raw_e6 FROM a2)
-        |SELECT * FROM c0 UNION ALL SELECT * FROM c1
-        |UNION ALL SELECT * FROM c2""".stripMargin),
-
-    // q347: aligned daily grid per type pair, day-pair sign census,
-    // truncating tau quotient
-    "q347_kendall_daily" ->
-      """WITH d AS (SELECT event_type AS t,
-        |    epoch_ns(ts) // 86400000000000 AS day, count(*) AS y
-        |  FROM events GROUP BY 1, 2),
-        |al AS (SELECT a.t AS type_a, b.t AS type_b, a.day AS day,
-        |    a.y AS xa, b.y AS xb
-        |  FROM d a JOIN d b ON b.day = a.day AND a.t < b.t),
-        |pp AS (SELECT i.type_a, i.type_b,
-        |    (j.xa - i.xa) * (j.xb - i.xb) AS prod
-        |  FROM al i JOIN al j ON j.type_a = i.type_a
-        |    AND j.type_b = i.type_b AND i.day < j.day)
-        |SELECT type_a, type_b, count(*) AS n_pairs,
-        |  CAST(sum(CASE WHEN prod > 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_concordant,
-        |  CAST(sum(CASE WHEN prod < 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_discordant,
-        |  CAST(sum(CASE WHEN prod = 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_ties,
-        |  CAST((sum(CASE WHEN prod > 0 THEN 1 ELSE 0 END)
-        |      - sum(CASE WHEN prod < 0 THEN 1 ELSE 0 END)) * 1000000
-        |    // count(*) AS BIGINT) AS tau_a_e6
-        |FROM pp GROUP BY 1, 2""".stripMargin,
-
-    // q348: lower-median pick per (type, dow) via row_number, max
-    // absolute residual on the join-back
-    "q348_dow_seasonality" ->
-      """WITH d AS (SELECT event_type,
-        |    epoch_ns(ts) // 86400000000000 AS day, count(*) AS y
-        |  FROM events GROUP BY 1, 2),
-        |dw AS (SELECT event_type, day % 7 AS dow, day, y FROM d),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY event_type, dow
-        |      ORDER BY y ASC, day ASC) AS rn,
-        |    count(*) OVER (PARTITION BY event_type, dow) AS n
-        |  FROM dw),
-        |m AS (SELECT event_type, dow, n AS n_days, y AS median_y
-        |  FROM r WHERE rn = (n + 1) // 2)
-        |SELECT dw.event_type, dw.dow, m.n_days, m.median_y,
-        |  max(abs(dw.y - m.median_y)) AS max_abs_resid
-        |FROM dw JOIN m ON m.event_type = dw.event_type AND m.dow = dw.dow
-        |GROUP BY 1, 2, 3, 4""".stripMargin,
-
-    // q349: anchor-filtered band-key join (the q179 bipartite shape,
-    // anchor side kept), candidate-only cosine verify, per-anchor
-    // count + e4 max
-    "q349_ann_range_count" ->
-      s"""WITH $lshKeyCtes,
-         |cand AS (SELECT a.vec_id AS anchor_id, b.vec_id AS other_id
-         |  FROM lsh_keys a JOIN lsh_keys b ON b.band = a.band
-         |    AND b.bkey = a.bkey AND b.vec_id <> a.vec_id
-         |  WHERE a.vec_id % 17 = 0 GROUP BY 1, 2),
-         |dotp AS (SELECT c.anchor_id, c.other_id, sum(ea.x * eb.x) AS dot
-         |  FROM cand c JOIN ex ea ON ea.vec_id = c.anchor_id
-         |    JOIN ex eb ON eb.vec_id = c.other_id AND eb.i = ea.i
-         |  GROUP BY 1, 2),
-         |r AS (SELECT anchor_id,
-         |    dot / (sqrt(na.nn) * sqrt(nb.nn)) AS cos
-         |  FROM dotp JOIN nm na ON na.vec_id = anchor_id
-         |    JOIN nm nb ON nb.vec_id = other_id
-         |  WHERE dot / (sqrt(na.nn) * sqrt(nb.nn)) >= 0.3)
-         |SELECT anchor_id, count(*) AS n_in_range,
-         |  max(CAST(round(cos * 10000, 0) AS BIGINT)) AS max_cosine_e4
-         |FROM r GROUP BY 1""".stripMargin,
-
-    // q337: cumulative/total window sums per type, the three-term
-    // truncating SS ladder, row_number argmax (gain desc, day asc)
-    "q337_changepoint" ->
-      """WITH d AS (SELECT event_type AS t,
-        |    epoch_ns(ts) // 86400000000000 AS day, count(*) AS x
-        |  FROM events GROUP BY 1, 2),
-        |sc AS (SELECT t, day,
-        |    sum(x) OVER (PARTITION BY t ORDER BY day
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cs,
-        |    row_number() OVER (PARTITION BY t ORDER BY day) AS rn,
-        |    sum(x) OVER (PARTITION BY t) AS s,
-        |    count(*) OVER (PARTITION BY t) AS n
-        |  FROM d),
-        |g AS (SELECT t, day, rn AS n_left, n - rn AS n_right,
-        |    CAST((CAST(cs AS HUGEINT) * cs * 1000000) // rn AS BIGINT)
-        |    + CAST((CAST(s - cs AS HUGEINT) * (s - cs) * 1000000) //
-        |      (n - rn) AS BIGINT)
-        |    - CAST((CAST(s AS HUGEINT) * s * 1000000) // n AS BIGINT)
-        |      AS gain_e6
-        |  FROM sc WHERE rn < n),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY t
-        |    ORDER BY gain_e6 DESC, day ASC) AS rr FROM g)
-        |SELECT t AS event_type, day AS split_day, n_left, n_right,
-        |  gain_e6 FROM r WHERE rr = 1""".stripMargin,
-
-    // q329: q257's grid/window CTEs with the gap integrated — each
-    // gap × its interval to the next distinct value, e2 units ratio
-    "q329_wasserstein" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH gv AS (SELECT source AS g, n_chars AS v, count(*) AS c
-         |  FROM documents
-         |  WHERE source IS NOT NULL AND n_chars IS NOT NULL
-         |  GROUP BY 1, 2),
-         |pv AS (SELECT v, sum(c) AS cv FROM gv GROUP BY 1),
-         |pg AS (SELECT g, sum(c) AS na FROM gv GROUP BY 1),
-         |tot AS (SELECT sum(c) AS n FROM gv),
-         |grid AS (SELECT pg.g, pv.v, pg.na, t.n - pg.na AS nb, pv.cv,
-         |    coalesce(gv.c, 0) AS cgv
-         |  FROM pg CROSS JOIN pv
-         |  LEFT JOIN gv ON gv.g = pg.g AND gv.v = pv.v
-         |  CROSS JOIN tot t),
-         |cum AS (SELECT g, v, na, nb,
-         |    sum(cgv) OVER w AS cuma, sum(cv) OVER w AS cumall,
-         |    coalesce(lead(v) OVER (PARTITION BY g ORDER BY v) - v, 0)
-         |      AS dv
-         |  FROM grid WINDOW w AS (PARTITION BY g ORDER BY v
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-         |tm AS (SELECT g, na, nb,
-         |    abs(CAST(cuma AS HUGEINT) * nb -
-         |      CAST(cumall - cuma AS HUGEINT) * na) * dv AS t
-         |  FROM cum),
-         |sm AS (SELECT g, na, nb, sum(t) AS s FROM tm
-         |  GROUP BY 1, 2, 3)
-         |SELECT g AS source, CAST(na AS BIGINT) AS n_group,
-         |  CAST(nb AS BIGINT) AS n_rest,
-         |  ${ratioScaledSql("s", "CAST(na AS HUGEINT) * nb", 2)}
-         |    AS w1_units_e2
-         |FROM sm""".stripMargin
-    },
-
-    // q330: q284's 1-NN edge CTEs; middles filtered by deg <= 8, the
-    // direct ∪ two-step target set counted distinct per node
-    "q330_two_hop_reach" ->
-      materializedCtes(s"""WITH ${lshPairCtes("0.3")},
-         |dr AS (SELECT id_a AS id, id_b AS nbr,
-         |    CAST(round(cosine * 10000, 0) AS BIGINT) AS c FROM p
-         |  UNION ALL SELECT id_b, id_a,
-         |    CAST(round(cosine * 10000, 0) AS BIGINT) FROM p),
-         |best AS (SELECT id, nbr FROM (SELECT id, nbr,
-         |    row_number() OVER (PARTITION BY id
-         |      ORDER BY c DESC, nbr ASC) AS rn FROM dr)
-         |  WHERE rn = 1),
-         |cp AS (SELECT DISTINCT least(id, nbr) AS a,
-         |    greatest(id, nbr) AS b FROM best),
-         |es AS (SELECT a, b FROM cp UNION SELECT b, a FROM cp),
-         |deg AS (SELECT a AS node, count(*) AS d FROM es GROUP BY 1),
-         |two AS (SELECT w1.b AS s, w2.b AS t
-         |  FROM es w1 JOIN es w2 ON w2.a = w1.a AND w1.b <> w2.b
-         |  JOIN deg dc ON dc.node = w1.a AND dc.d <= 8),
-         |rch AS (SELECT s, count(DISTINCT t) AS reach_2hop FROM (
-         |    SELECT a AS s, b AS t FROM es
-         |    UNION ALL SELECT s, t FROM two) GROUP BY 1)
-         |SELECT deg.node, CAST(deg.d AS BIGINT) AS degree,
-         |  rch.reach_2hop
-         |FROM deg JOIN rch ON rch.s = deg.node""".stripMargin),
-
-    // q331: UNION ALL mirror of the Expand — metric names are the
-    // engine's value column names
-    "q331_unpivot" ->
-      """WITH b AS (SELECT l_orderkey, l_linenumber,
-        |    CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT)
-        |      AS q,
-        |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
-        |      AS BIGINT) AS ep,
-        |    CAST(CAST(l_discount AS DECIMAL(18,2)) * 100 AS BIGINT)
-        |      AS dc FROM lineitem)
-        |SELECT l_orderkey, l_linenumber, 'quantity_e2' AS metric,
-        |  q AS value_e2 FROM b
-        |UNION ALL SELECT l_orderkey, l_linenumber, 'extendedprice_e2',
-        |  ep FROM b
-        |UNION ALL SELECT l_orderkey, l_linenumber, 'discount_e2',
-        |  dc FROM b""".stripMargin,
-
-    // q325: q123's SCD2 CTE rolled to per-state dwell stats; closed
-    // durations truncate to whole seconds (integer div, q320)
-    "q325_state_dwell" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH $scd2Ctes,
-         |dw AS (SELECT value, count(*) AS n_versions,
-         |    CAST(sum(CASE WHEN valid_to_ns IS NULL THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n_open,
-         |    CAST(sum(CASE WHEN valid_to_ns IS NOT NULL THEN 1 ELSE 0
-         |      END) AS BIGINT) AS n_closed,
-         |    CAST(sum(CASE WHEN valid_to_ns IS NOT NULL THEN
-         |      (valid_to_ns - valid_from_ns) // 1000000000 ELSE 0 END)
-         |      AS BIGINT) AS total_dwell_sec
-         |  FROM hist GROUP BY 1)
-         |SELECT value, n_versions, n_open, n_closed, total_dwell_sec,
-         |  ${ratioScaledSql("total_dwell_sec", "n_closed", 2)}
-         |    AS avg_dwell_sec_e2
-         |FROM dw""".stripMargin
-    },
-
-    // q326: zero-filled per-type daily series self-joined at lags
-    // 1..7; q310's two-stage |num|·1000 ladder for sign(r)·r² e6
-    "q326_acf" ->
-      """WITH d AS (SELECT event_type AS t,
-        |    epoch_ns(ts) // 86400000000000 AS day, count(*) AS c
-        |  FROM events GROUP BY 1, 2),
-        |h AS (SELECT min(day) AS d0, max(day) AS d1 FROM d),
-        |cal AS (SELECT ty.t, CAST(unnest(range(h.d0, h.d1 + 1))
-        |    AS BIGINT) AS day
-        |  FROM (SELECT DISTINCT t FROM d) ty CROSS JOIN h),
-        |dn AS (SELECT cal.t, cal.day, coalesce(d.c, 0) AS x
-        |  FROM cal LEFT JOIN d ON d.t = cal.t AND d.day = cal.day),
-        |lg AS (SELECT CAST(unnest(range(1, 8)) AS BIGINT) AS lag),
-        |j AS (SELECT a.t, lg.lag, a.x AS x, b.x AS y
-        |  FROM dn a CROSS JOIN lg
-        |  JOIN dn b ON b.t = a.t AND b.day = a.day + lg.lag),
-        |ag AS (SELECT t, lag, count(*) AS n_days,
-        |    CAST(sum(x) AS HUGEINT) AS sx, CAST(sum(y) AS HUGEINT)
-        |      AS sy,
-        |    CAST(sum(CAST(x AS HUGEINT) * y) AS HUGEINT) AS sxy,
-        |    CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx,
-        |    CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy
-        |  FROM j GROUP BY 1, 2),
-        |f AS (SELECT t, lag, n_days,
-        |    n_days * sxy - sx * sy AS num,
-        |    n_days * sxx - sx * sx AS dx,
-        |    n_days * syy - sy * sy AS dy FROM ag)
-        |SELECT t AS event_type, lag, n_days,
-        |  CASE WHEN dx > 0 AND dy > 0 THEN
-        |    CAST((CASE WHEN num < 0 THEN -1 ELSE 1 END) *
-        |      ((abs(num) * 1000 // dx) * abs(num) * 1000 // dy)
-        |      AS BIGINT)
-        |  ELSE 0 END AS r2_signed_e6
-        |FROM f""".stripMargin,
-
-    // q327: q126's capped-basket surface taken to ordered triples.
-    // Triples are expanded from each basket's sorted item list
-    // (ordered index x, then y from positions, then the suffix past y)
-    // rather than a triple self-join: DuckDB 1.0.0 planned the
-    // `a.i < c.i` ON conditions as cross-basket IEJoins (~40 min /
-    // ~90 GB at sf0.01 — the r17 gate blocker); the list form runs in
-    // under a second and equality never appears in a join at all.
-    "q327_basket_triples" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH it AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i
-         |    FROM lineitem),
-         |f AS (SELECT b, i FROM (SELECT b, i,
-         |      count(*) OVER (PARTITION BY b) AS bs FROM it)
-         |  WHERE bs <= 64),
-         |nb AS (SELECT count(DISTINCT b) AS n FROM f),
-         |bl AS (SELECT b, list(i ORDER BY i) AS items FROM f GROUP BY b),
-         |p1 AS (SELECT items,
-         |    UNNEST(generate_series(1, len(items) - 2)) AS x FROM bl),
-         |p2 AS (SELECT items, x,
-         |    UNNEST(generate_series(x + 1, len(items) - 1)) AS y FROM p1),
-         |p3 AS (SELECT items[x] AS item_a, items[y] AS item_b,
-         |    UNNEST(items[y + 1:]) AS item_c FROM p2),
-         |tr AS (SELECT item_a, item_b, item_c, count(*) AS n_co
-         |  FROM p3 GROUP BY 1, 2, 3 HAVING count(*) >= 2)
-         |SELECT item_a, item_b, item_c, n_co,
-         |  ${ratioScaledSql("n_co", "(SELECT n FROM nb)", 6)}
-         |    AS support_e6
-         |FROM tr""".stripMargin
-    },
-
-    // q328: e6 units, per-(label, parity-half, dim) integer sums,
-    // cross-multiplied mean difference squared in HUGEINT, e12 ratio;
-    // single-half labels keep a NULL distance via the left join
-    "q328_centroid_shift" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH u AS (SELECT vec_id,
-         |    CAST(generate_subscripts(embedding, 1) AS BIGINT) AS dim,
-         |    CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000, 0)
-         |      AS BIGINT) AS u
-         |  FROM embeddings),
-         |t AS (SELECT vec_id, label, vec_id % 2 = 1 AS hb
-         |  FROM embeddings),
-         |s AS (SELECT t.label, t.hb, u.dim, count(*) AS n,
-         |    CAST(sum(u.u) AS HUGEINT) AS s
-         |  FROM u JOIN t ON t.vec_id = u.vec_id GROUP BY 1, 2, 3),
-         |a AS (SELECT label, dim, n AS na, s AS sa FROM s
-         |  WHERE NOT hb),
-         |b AS (SELECT label, dim, n AS nb, s AS sb FROM s WHERE hb),
-         |p AS (SELECT a.label, max(a.na) AS n_a, max(b.nb) AS n_b,
-         |    sum((a.sa * b.nb - b.sb * a.na) *
-         |        (a.sa * b.nb - b.sb * a.na)) AS num
-         |  FROM a JOIN b ON b.label = a.label AND b.dim = a.dim
-         |  GROUP BY 1)
-         |SELECT l.label, p.n_a, p.n_b,
-         |  CASE WHEN p.num IS NOT NULL THEN
-         |    ${ratioScaledSql("p.num",
-             "CAST(p.n_a AS HUGEINT) * p.n_b * p.n_a * p.n_b", 0)}
-         |  ELSE NULL END AS shift_sq_e12
-         |FROM (SELECT DISTINCT label FROM embeddings) l
-         |LEFT JOIN p ON p.label = l.label""".stripMargin
-    },
-
-    // q324: q47's recursive component labels joined to per-doc token
-    // counts; dropped = labeled member that is not its component rep
-    "q324_dedup_savings" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH RECURSIVE ${lshPairCtes("0.45")},
-         |cl(node, r) AS (SELECT a, b FROM e
-         |  UNION SELECT cl.node, e2.b FROM cl JOIN e e2 ON cl.r = e2.a),
-         |cc AS (SELECT node, least(node, min(r)) AS component
-         |  FROM cl GROUP BY node),
-         |d AS (SELECT doc_id, source, len($wordsSql) AS toks
-         |  FROM documents),
-         |j AS (SELECT d.source, d.toks,
-         |    cc.component IS NOT NULL AND cc.component <> d.doc_id
-         |      AS dropped
-         |  FROM d LEFT JOIN cc ON cc.node = d.doc_id),
-         |g AS (SELECT source, count(*) AS n_docs,
-         |    CAST(sum(CASE WHEN dropped THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_dropped,
-         |    CAST(sum(toks) AS BIGINT) AS tokens_total,
-         |    CAST(sum(CASE WHEN dropped THEN toks ELSE 0 END)
-         |      AS BIGINT) AS tokens_dropped
-         |  FROM j GROUP BY 1)
-         |SELECT source, n_docs, n_dropped, tokens_total,
-         |  tokens_dropped,
-         |  ${ratioScaledSql("tokens_dropped", "tokens_total", 6)}
-         |    AS savings_e6
-         |FROM g""".stripMargin
-    },
-
-    // q285: daily tally, 7-row window sums, signed Cramer ladder in
-    // HUGEINT (den >= 0 by Cauchy-Schwarz; 1-row windows read 0)
-    "q285_rolling_slope" -> {
-      import graft.functions.ExactRound.ratioScaledSignedSql
-      s"""WITH d AS (SELECT event_type AS t,
-         |    epoch_ns(ts) // 86400000000000 AS day, count(*) AS y
-         |  FROM events GROUP BY 1, 2),
-         |w AS (SELECT t, day, y,
-         |    count(*) OVER w AS n, sum(day) OVER w AS sx,
-         |    sum(y) OVER w AS sy, sum(day * y) OVER w AS sxy,
-         |    sum(day * day) OVER w AS sxx
-         |  FROM d WINDOW w AS (PARTITION BY t ORDER BY day
-         |    ROWS 6 PRECEDING))
-         |SELECT t AS event_type, day, y AS n_events,
-         |  CAST(n AS BIGINT) AS win_rows,
-         |  ${ratioScaledSignedSql(
-             "CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy",
-             "CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx", 6)}
-         |    AS slope_e6
-         |FROM w""".stripMargin
-    },
-
-    // q286: type x generate_series calendar off the 1-row horizon,
-    // zero-fill, IGNORE NULLS carries for the anchor day and the
-    // observed daily max (a selection - bit-exact across engines)
-    "q286_densify_ffill" ->
-      """WITH d AS (SELECT event_type AS t,
-        |    epoch_ns(ts) // 86400000000000 AS day,
-        |    count(*) AS n, max(value) AS vmax
-        |  FROM events GROUP BY 1, 2),
-        |h AS (SELECT min(day) AS d0, max(day) AS d1 FROM d),
-        |cal AS (SELECT ty.t, CAST(unnest(range(h.d0, h.d1 + 1))
-        |    AS BIGINT) AS day
-        |  FROM (SELECT DISTINCT t FROM d) ty CROSS JOIN h),
-        |j AS (SELECT cal.t, cal.day, d.n, d.vmax FROM cal
-        |  LEFT JOIN d ON d.t = cal.t AND d.day = cal.day),
-        |f AS (SELECT t, day, CAST(coalesce(n, 0) AS BIGINT)
-        |      AS n_events,
-        |    n IS NOT NULL AS observed,
-        |    last_value(CASE WHEN n IS NOT NULL THEN day END
-        |      IGNORE NULLS) OVER w AS anchor,
-        |    last_value(vmax IGNORE NULLS) OVER w AS carry_max
-        |  FROM j WINDOW w AS (PARTITION BY t ORDER BY day
-        |    ROWS UNBOUNDED PRECEDING))
-        |SELECT t AS event_type, day, n_events, observed,
-        |  coalesce(day - anchor, -1) AS days_since_obs, carry_max
-        |FROM f""".stripMargin,
-
-    // q287: (score DESC, doc_id ASC) top-10 prefixes per source,
-    // overlap-at-depth via the max-rank trick, per-depth floored e6
-    // terms (9^(d-1)/10^d exact rationals), zero-overlap sources
-    // restored by the left join
-    "q287_rbo" -> {
-      def powL(b: Long, e: Int): Long =
-        (1 to e).foldLeft(1L)((a, _) => a * b)
-      val ovs = (1 to 10).map(d =>
-        s"CAST(sum(CASE WHEN md <= $d THEN 1 ELSE 0 END) AS BIGINT)" +
-          s" AS ov$d").mkString(",\n    ")
-      val terms = (1 to 10).map(d =>
-        s"(${1000000L * powL(9L, d - 1)} * coalesce(ov$d, 0)) " +
-          s"// ${powL(10L, d) * d}").mkString("\n    + ")
-      s"""WITH b AS (SELECT source, doc_id, n_chars,
-         |    $qNWords AS nw FROM documents),
-         |ra AS (SELECT source, doc_id, row_number() OVER
-         |    (PARTITION BY source ORDER BY n_chars DESC, doc_id ASC)
-         |    AS r FROM b QUALIFY r <= 10),
-         |rb AS (SELECT source, doc_id, row_number() OVER
-         |    (PARTITION BY source ORDER BY nw DESC, doc_id ASC)
-         |    AS r FROM b QUALIFY r <= 10),
-         |j AS (SELECT ra.source, greatest(ra.r, rb.r) AS md
-         |  FROM ra JOIN rb ON rb.source = ra.source
-         |    AND rb.doc_id = ra.doc_id),
-         |ag AS (SELECT source,
-         |    $ovs
-         |  FROM j GROUP BY 1)
-         |SELECT g.source, coalesce(ag.ov10, 0) AS overlap_at_depth,
-         |  ($terms) AS rbo_min_e6
-         |FROM (SELECT DISTINCT source FROM b) g
-         |LEFT JOIN ag ON ag.source = g.source""".stripMargin
-    },
-
-    // q288: the q267 luma chain, per-image (value, count) tally,
-    // cumulative vs total window sums, the q275 two-stage HUGEINT
-    // ladder, (score DESC, v ASC) argmax
-    "q288_otsu_card" ->
-      """WITH pxv AS (SELECT doc_id,
-        |    (idx.i - 1) // 3 AS px, (idx.i - 1) % 3 AS ch,
-        |    ascii(substring(text, CAST(idx.i AS INTEGER), 1)) AS b
-        |  FROM documents, (SELECT unnest(range(1, 97)) AS i) idx
-        |  WHERE length(text) >= 96 AND strlen(text) = length(text)),
-        |lum AS (SELECT doc_id, px,
-        |    CAST(sum(CASE ch WHEN 0 THEN 2126 * b
-        |      WHEN 1 THEN 7152 * b ELSE 722 * b END) AS BIGINT) AS l
-        |  FROM pxv GROUP BY 1, 2),
-        |g AS (SELECT doc_id, l AS v, count(*) AS cnt FROM lum
-        |  GROUP BY 1, 2),
-        |c AS (SELECT doc_id, v,
-        |    CAST(sum(cnt) OVER w AS BIGINT) AS cumn,
-        |    CAST(sum(v * cnt) OVER w AS BIGINT) AS cums,
-        |    CAST(sum(cnt) OVER p AS BIGINT) AS n,
-        |    CAST(sum(v * cnt) OVER p AS BIGINT) AS s
-        |  FROM g WINDOW w AS (PARTITION BY doc_id ORDER BY v
-        |      ROWS UNBOUNDED PRECEDING),
-        |    p AS (PARTITION BY doc_id)),
-        |d AS (SELECT doc_id, v, cumn, n,
-        |    abs(CAST(cums AS HUGEINT) * (n - cumn)
-        |      - CAST(s - cums AS HUGEINT) * cumn) AS dd
-        |  FROM c WHERE n - cumn > 0),
-        |sc AS (SELECT doc_id, v, cumn, n,
-        |    (((dd * 1000000) // (CAST(cumn AS HUGEINT) * (n - cumn)))
-        |      * dd) // (CAST(n AS HUGEINT) * n * 1000000) AS score
-        |  FROM d),
-        |bb AS (SELECT doc_id, v, cumn, n, score, row_number() OVER
-        |    (PARTITION BY doc_id ORDER BY score DESC, v ASC) AS rn
-        |  FROM sc)
-        |SELECT doc_id, n AS n_px, v AS otsu_l, cumn AS n_below,
-        |  CAST(score AS BIGINT) AS score_between
-        |FROM bb WHERE rn = 1""".stripMargin,
-
-    // q290: the q273 in-window join kept per-touch, (tt, id)
-    // row_number positions, the 40/20/40 CASE ladder with floor
-    // middle shares
-    "q290_position_attribution" ->
-      """WITH c AS (SELECT user_id AS u, event_id AS conv_id,
-        |    epoch_ns(ts) AS ct FROM events
-        |  WHERE event_type = 'purchase'),
-        |t AS (SELECT user_id AS u, event_id AS tid, epoch_ns(ts) AS tt
-        |  FROM events WHERE event_type = 'view'),
-        |j AS (SELECT c.conv_id, t.tid, t.tt
-        |  FROM c JOIN t ON t.u = c.u
-        |  WHERE t.tt < c.ct AND c.ct - t.tt <= 86400000000000),
-        |r AS (SELECT conv_id, tid,
-        |    CAST(row_number() OVER (PARTITION BY conv_id
-        |      ORDER BY tt, tid) AS BIGINT) AS position,
-        |    CAST(count(*) OVER (PARTITION BY conv_id) AS BIGINT)
-        |      AS n_touches
-        |  FROM j)
-        |SELECT conv_id, tid AS touch_event_id, position, n_touches,
-        |  CASE WHEN n_touches = 1 THEN 1000000
-        |    WHEN n_touches = 2 THEN 500000
-        |    WHEN position = 1 OR position = n_touches THEN 400000
-        |    ELSE 200000 // (n_touches - 2) END AS credit_e6
-        |FROM r""".stripMargin,
-
-    // q291: weighted edge tally, q278's unrolled ladder with the
-    // per-edge (rank*w) // outw contribution
-    "q291_weighted_pagerank" -> {
-      def iter(k: Int) =
-        s"""r$k AS (SELECT n.node,
-           |    (15000000 + 85 * coalesce(s.c, 0)) // 100 AS rank_e6
-           |  FROM nodes n LEFT JOIN (
-           |    SELECT e.dst AS node,
-           |      CAST(sum((CAST(p.rank_e6 AS HUGEINT) * e.w)
-           |        // o.outw) AS BIGINT) AS c
-           |    FROM edges e JOIN r${k - 1} p ON p.node = e.src
-           |    JOIN ow o ON o.node = e.src GROUP BY 1) s
-           |    ON s.node = n.node)""".stripMargin
-      s"""WITH edges AS (SELECT o_custkey * 2 AS src,
-         |    l_suppkey * 2 + 1 AS dst, count(*) AS w
-         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |  GROUP BY 1, 2),
-         |nodes AS (SELECT src AS node FROM edges
-         |  UNION SELECT dst FROM edges),
-         |ow AS (SELECT src AS node, CAST(sum(w) AS BIGINT) AS outw
-         |  FROM edges GROUP BY 1),
-         |r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS rank_e6
-         |  FROM nodes),
-         |${(1 to 5).map(iter).mkString(",\n")}
-         |SELECT node, rank_e6 FROM r5""".stripMargin
-    },
-
-    // q292: daily tally, calendar-bounded i<j pair join, signed pair
-    // sum, tau-a through the signed e6 ladder
-    "q292_mann_kendall" -> {
-      import graft.functions.ExactRound.ratioScaledSignedSql
-      s"""WITH d AS (SELECT event_type AS t,
-         |    epoch_ns(ts) // 86400000000000 AS day, count(*) AS y
-         |  FROM events GROUP BY 1, 2),
-         |p AS (SELECT a.t,
-         |    CASE WHEN b.y > a.y THEN 1
-         |      WHEN b.y < a.y THEN -1 ELSE 0 END AS sg
-         |  FROM d a JOIN d b ON b.t = a.t AND a.day < b.day),
-         |ag AS (SELECT t, count(*) AS n_pairs,
-         |    CAST(sum(sg) AS BIGINT) AS s_stat FROM p GROUP BY 1)
-         |SELECT t AS event_type, n_pairs, s_stat,
-         |  ${ratioScaledSignedSql("s_stat", "n_pairs", 6)} AS tau_a_e6
-         |FROM ag""".stripMargin
-    },
-
-    // q293: per-(doc, shard) digest rows, (h DESC, shard ASC) argmax
-    // at k=4 and k=5, cross-tab
-    "q293_rendezvous_shards" ->
-      """WITH s AS (SELECT doc_id, CAST(doc_id AS VARCHAR) AS ks
-        |  FROM documents),
-        |h4 AS (SELECT doc_id, i AS shard,
-        |    md5(ks || ':' || i) AS h
-        |  FROM s, (SELECT unnest(range(0, 4)) AS i) g),
-        |a4 AS (SELECT doc_id, shard FROM (SELECT doc_id, shard,
-        |    row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY h DESC, shard ASC) AS rn FROM h4)
-        |  WHERE rn = 1),
-        |h5 AS (SELECT doc_id, i AS shard,
-        |    md5(ks || ':' || i) AS h
-        |  FROM s, (SELECT unnest(range(0, 5)) AS i) g),
-        |a5 AS (SELECT doc_id, shard FROM (SELECT doc_id, shard,
-        |    row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY h DESC, shard ASC) AS rn FROM h5)
-        |  WHERE rn = 1)
-        |SELECT a4.shard AS shard_before, a5.shard AS shard_after,
-        |  count(*) AS n_docs
-        |FROM a4 JOIN a5 USING (doc_id) GROUP BY 1, 2""".stripMargin,
-
-    // q294: (md5, id) rank per stratum, exact floor-quota cuts; the
-    // engine's range-partitioned rank and this window agree because
-    // the sort key is unique
-    "q294_exact_split" ->
-      """WITH b AS (SELECT doc_id, lang,
-        |    md5(CAST(doc_id AS VARCHAR)) AS h FROM documents),
-        |r AS (SELECT doc_id, lang,
-        |    row_number() OVER (PARTITION BY lang
-        |      ORDER BY h, doc_id) AS rn,
-        |    count(*) OVER (PARTITION BY lang) AS m FROM b)
-        |SELECT doc_id, lang,
-        |  CASE WHEN rn <= (m * 8) // 10 THEN 'train'
-        |    WHEN rn <= (m * 9) // 10 THEN 'val'
-        |    ELSE 'test' END AS split
-        |FROM r""".stripMargin,
-
-    // q295: md5-half reference counts (c12/c2 derived from the gram
-    // tables), scored-half trigram stream through the three-level
-    // CASE ladder, per-doc rollup with zero-fill
-    "q295_stupid_backoff" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH t AS (SELECT doc_id, $wordsSql AS ws,
-         |    substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '80'
-         |      AS is_ref
-         |  FROM documents),
-         |tgr AS (SELECT split_part(g, ' ', 1) AS w1,
-         |    split_part(g, ' ', 2) AS w2, split_part(g, ' ', 3) AS w3
-         |  FROM (SELECT unnest([ws[i] || ' ' || ws[i+1] || ' ' ||
-         |      ws[i+2] for i in range(1, len(ws)-1)]) AS g
-         |    FROM t WHERE is_ref AND len(ws) >= 3)),
-         |tri AS (SELECT w1, w2, w3, count(*) AS c123 FROM tgr
-         |  GROUP BY 1, 2, 3),
-         |pre2 AS (SELECT w1, w2, CAST(sum(c123) AS BIGINT) AS c12
-         |  FROM tri GROUP BY 1, 2),
-         |bgr AS (SELECT split_part(g, ' ', 1) AS w2,
-         |    split_part(g, ' ', 2) AS w3
-         |  FROM (SELECT unnest([ws[i] || ' ' || ws[i+1]
-         |      for i in range(1, len(ws))]) AS g
-         |    FROM t WHERE is_ref AND len(ws) >= 2)),
-         |bi AS (SELECT w2, w3, count(*) AS c23 FROM bgr GROUP BY 1, 2),
-         |pre1 AS (SELECT w2, CAST(sum(c23) AS BIGINT) AS c2 FROM bi
-         |  GROUP BY 1),
-         |uni AS (SELECT w3, count(*) AS c3 FROM
-         |  (SELECT unnest(ws) AS w3 FROM t WHERE is_ref) GROUP BY 1),
-         |nt AS (SELECT CAST(sum(len(ws)) AS BIGINT) AS ntok FROM t
-         |  WHERE is_ref),
-         |sg AS (SELECT doc_id, split_part(g, ' ', 1) AS w1,
-         |    split_part(g, ' ', 2) AS w2, split_part(g, ' ', 3) AS w3
-         |  FROM (SELECT doc_id, unnest([ws[i] || ' ' || ws[i+1] ||
-         |      ' ' || ws[i+2] for i in range(1, len(ws)-1)]) AS g
-         |    FROM t WHERE NOT is_ref AND len(ws) >= 3)),
-         |lv AS (SELECT sg.doc_id,
-         |    CASE WHEN tri.c123 IS NOT NULL THEN 3
-         |      WHEN bi.c23 IS NOT NULL THEN 2
-         |      WHEN uni.c3 IS NOT NULL THEN 1 ELSE 0 END AS lvl,
-         |    CASE WHEN tri.c123 IS NOT NULL THEN
-         |        ${ratioScaledSql("tri.c123", "pre2.c12", 6)}
-         |      WHEN bi.c23 IS NOT NULL THEN
-         |        ${ratioScaledSql("bi.c23 * 4", "pre1.c2 * 10", 6)}
-         |      WHEN uni.c3 IS NOT NULL THEN
-         |        ${ratioScaledSql("uni.c3 * 16", "nt.ntok * 100", 6)}
-         |      ELSE 0 END AS s6
-         |  FROM sg
-         |  LEFT JOIN tri USING (w1, w2, w3)
-         |  LEFT JOIN pre2 USING (w1, w2)
-         |  LEFT JOIN bi USING (w2, w3)
-         |  LEFT JOIN pre1 USING (w2)
-         |  LEFT JOIN uni USING (w3)
-         |  CROSS JOIN nt),
-         |pd AS (SELECT doc_id, count(*) AS n_trigrams,
-         |    CAST(sum(s6) AS BIGINT) AS sum_score_e6,
-         |    CAST(sum(CASE WHEN lvl = 3 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_l3,
-         |    CAST(sum(CASE WHEN lvl = 2 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_l2,
-         |    CAST(sum(CASE WHEN lvl = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_l1,
-         |    CAST(sum(CASE WHEN lvl = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_oov
-         |  FROM lv GROUP BY 1)
-         |SELECT t.doc_id, coalesce(pd.n_trigrams, 0) AS n_trigrams,
-         |  coalesce(pd.sum_score_e6, 0) AS sum_score_e6,
-         |  coalesce(pd.n_l3, 0) AS n_l3, coalesce(pd.n_l2, 0) AS n_l2,
-         |  coalesce(pd.n_l1, 0) AS n_l1, coalesce(pd.n_oov, 0) AS n_oov
-         |FROM t LEFT JOIN pd ON pd.doc_id = t.doc_id
-         |WHERE NOT t.is_ref""".stripMargin
-    },
-
-    // q296: text-pixel gray levels at the dHash resample indices
-    // (w=8, h=4: pixel = (y*4//8)*8 + x*8//9, RGB = chars 3p+1..3p+3),
-    // the q216 bits/bands/hamming chain, full outer join against the
-    // q23 MinHash-exact chain, channel tally
-    "q296_multimodal_dup_agreement" ->
-      s"""WITH d AS (SELECT doc_id, text FROM documents
-         |  WHERE length(text) >= 96 AND strlen(text) = length(text)),
-         |gray AS (SELECT doc_id, x.i AS x, y.i AS y,
-         |    ascii(substring(text, CAST((((y.i * 4) // 8) * 8
-         |      + (x.i * 8) // 9) * 3 + 1 AS INTEGER), 1))
-         |    + ascii(substring(text, CAST((((y.i * 4) // 8) * 8
-         |      + (x.i * 8) // 9) * 3 + 2 AS INTEGER), 1))
-         |    + ascii(substring(text, CAST((((y.i * 4) // 8) * 8
-         |      + (x.i * 8) // 9) * 3 + 3 AS INTEGER), 1)) AS g
-         |  FROM d, (SELECT unnest(range(0, 9)) AS i) x,
-         |    (SELECT unnest(range(0, 8)) AS i) y),
-         |bits AS (SELECT a.doc_id, a.y * 8 + a.x AS idx,
-         |    CASE WHEN a.g > b.g THEN 1 ELSE 0 END AS bit
-         |  FROM gray a JOIN gray b ON b.doc_id = a.doc_id
-         |    AND b.y = a.y AND b.x = a.x + 1
-         |  WHERE a.x < 8),
-         |bands AS (SELECT doc_id, idx // 16 AS band,
-         |    sum(bit << (idx % 16)) AS bkey
-         |  FROM bits GROUP BY 1, 2),
-         |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM bands a JOIN bands b ON a.band = b.band
-         |    AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
-         |img AS (SELECT c.doc_a, c.doc_b
-         |  FROM cand c
-         |  JOIN bits ba ON ba.doc_id = c.doc_a
-         |  JOIN bits bb ON bb.doc_id = c.doc_b AND bb.idx = ba.idx
-         |  GROUP BY 1, 2
-         |  HAVING sum(CASE WHEN ba.bit <> bb.bit THEN 1 ELSE 0 END)
-         |    <= 3),
-         |txt AS (SELECT doc_a, doc_b FROM (
-         |$jaccardSql)),
-         |u AS (SELECT
-         |    i.doc_a IS NOT NULL AS img_flag,
-         |    t2.doc_a IS NOT NULL AS txt_flag
-         |  FROM img i FULL OUTER JOIN txt t2
-         |    ON t2.doc_a = i.doc_a AND t2.doc_b = i.doc_b)
-         |SELECT CASE WHEN img_flag AND txt_flag THEN 'both'
-         |    WHEN img_flag THEN 'image_only'
-         |    ELSE 'text_only' END AS channel,
-         |  count(*) AS n_pairs
-         |FROM u GROUP BY 1""".stripMargin,
-
-    // q297: two token tallies, full outer join with zero-fill, the
-    // smoothed cross-rate in HUGEINT, two (score, token) top-20s
-    "q297_token_movers" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH ta AS (SELECT unnest($wordsSql) AS token
-         |  FROM documents WHERE lang = 'en'),
-         |tb AS (SELECT unnest($wordsSql) AS token
-         |  FROM documents WHERE lang <> 'en'),
-         |ca AS (SELECT token, count(*) AS c_a FROM ta GROUP BY 1),
-         |cb AS (SELECT token, count(*) AS c_b FROM tb GROUP BY 1),
-         |j AS (SELECT coalesce(ca.token, cb.token) AS token,
-         |    coalesce(ca.c_a, 0) AS c_a, coalesce(cb.c_b, 0) AS c_b
-         |  FROM ca FULL OUTER JOIN cb ON cb.token = ca.token),
-         |tot AS (SELECT CAST(sum(c_a) AS BIGINT) AS na,
-         |    CAST(sum(c_b) AS BIGINT) AS nb,
-         |    CAST(count(*) AS BIGINT) AS v FROM j),
-         |sc AS (SELECT token, c_a, c_b,
-         |    ${ratioScaledSql(
-             "CAST(c_a + 1 AS HUGEINT) * (tot.nb + tot.v)",
-             "CAST(c_b + 1 AS HUGEINT) * (tot.na + tot.v)", 6)}
-         |      AS score_e6
-         |  FROM j CROSS JOIN tot),
-         |up AS (SELECT 'a_heavy' AS direction, token, c_a, c_b,
-         |    score_e6
-         |  FROM sc ORDER BY score_e6 DESC, token ASC LIMIT 20),
-         |dn AS (SELECT 'b_heavy' AS direction, token, c_a, c_b,
-         |    score_e6
-         |  FROM sc ORDER BY score_e6 ASC, token ASC LIMIT 20)
-         |SELECT * FROM up UNION ALL SELECT * FROM dn""".stripMargin
-    },
-
-    // q298: daily tally, per-type (n, Σy, Σy²) with HUGEINT squares,
-    // one e6 division
-    "q298_fano_factor" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH d AS (SELECT event_type AS t,
-         |    epoch_ns(ts) // 86400000000000 AS day, count(*) AS y
-         |  FROM events GROUP BY 1, 2),
-         |a AS (SELECT t, count(*) AS n,
-         |    CAST(sum(y) AS BIGINT) AS sy,
-         |    sum(CAST(y AS HUGEINT) * y) AS syy FROM d GROUP BY 1)
-         |SELECT t AS event_type, n AS n_days, sy AS n_events,
-         |  ${ratioScaledSql(
-             "CAST(n AS HUGEINT) * syy - CAST(sy AS HUGEINT) * sy",
-             "CAST(n AS HUGEINT) * sy", 6)} AS fano_e6
-         |FROM a""".stripMargin
-    },
-
-    // q299: the q108 ladder twice (3 rounds) over base vs full edge
-    // sets, left-joined deltas, (|Δ| DESC, node) top 50
-    "q299_pagerank_delta" -> {
-      def ladder(tag: String, where: String) = {
-        def iter(k: Int) =
-          s"""r$tag$k AS (SELECT n.node,
-             |    (15000000 + 85 * coalesce(s.c, 0)) // 100 AS rank_e6
-             |  FROM nodes$tag n LEFT JOIN (
-             |    SELECT e.dst AS node,
-             |      CAST(sum(p.rank_e6 // d.deg) AS BIGINT) AS c
-             |    FROM edges$tag e JOIN r$tag${k - 1} p ON p.node = e.src
-             |    JOIN deg$tag d ON d.node = e.src GROUP BY 1) s
-             |    ON s.node = n.node)""".stripMargin
-        s"""edges$tag AS (SELECT DISTINCT o_custkey * 2 AS src,
-           |    l_suppkey * 2 + 1 AS dst
-           |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-           |  $where),
-           |nodes$tag AS (SELECT src AS node FROM edges$tag
-           |  UNION SELECT dst FROM edges$tag),
-           |deg$tag AS (SELECT src AS node, count(*) AS deg
-           |  FROM edges$tag GROUP BY 1),
-           |r${tag}0 AS (SELECT node, CAST(1000000 AS BIGINT) AS rank_e6
-           |  FROM nodes$tag),
-           |${(1 to 3).map(iter).mkString(",\n")}""".stripMargin
-      }
-      s"""WITH ${ladder("b", "WHERE o_orderkey % 5 <> 0")},
-         |${ladder("f", "")}
-         |SELECT f.node, coalesce(b.rank_e6, 0) AS rank_before,
-         |  f.rank_e6 AS rank_after,
-         |  f.rank_e6 - coalesce(b.rank_e6, 0) AS delta_e6
-         |FROM rf3 f LEFT JOIN rb3 b ON b.node = f.node
-         |ORDER BY abs(f.rank_e6 - coalesce(b.rank_e6, 0)) DESC,
-         |  f.node ASC LIMIT 50""".stripMargin
-    },
-
-    // q300: per-conversion latest in-window view gap, hour buckets,
-    // e6 share of attributed conversions
-    "q300_conversion_lag" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH c AS (SELECT user_id AS u, event_id AS conv_id,
-         |    epoch_ns(ts) AS ct FROM events
-         |  WHERE event_type = 'purchase' AND user_id IS NOT NULL),
-         |t AS (SELECT user_id AS u, epoch_ns(ts) AS tt FROM events
-         |  WHERE event_type = 'view' AND user_id IS NOT NULL),
-         |m AS (SELECT c.conv_id, max(c.ct) - max(t.tt) AS gap
-         |  FROM c JOIN t ON t.u = c.u
-         |  WHERE t.tt < c.ct AND c.ct - t.tt <= 86400000000000
-         |  GROUP BY 1),
-         |h AS (SELECT gap // 3600000000000 AS lag_hours,
-         |    count(*) AS n FROM m GROUP BY 1)
-         |SELECT lag_hours, n AS n_conversions,
-         |  ${ratioScaledSql("n", "(SELECT sum(n) FROM h)", 6)}
-         |    AS share_e6
-         |FROM h""".stripMargin
-    },
-
-    // q301: two leads per user stream, triple tally, (occurrences
-    // DESC, types ASC) top 20
-    "q301_path_trigrams" ->
-      """WITH e AS (SELECT user_id AS u, epoch_ns(ts) AS ts,
-        |    event_id AS id, event_type AS t1 FROM events
-        |  WHERE user_id IS NOT NULL),
-        |tr AS (SELECT u, t1,
-        |    lead(t1, 1) OVER w AS t2, lead(t1, 2) OVER w AS t3
-        |  FROM e WINDOW w AS (PARTITION BY u ORDER BY ts, id)),
-        |g AS (SELECT t1, t2, t3, count(*) AS n_occurrences,
-        |    count(DISTINCT u) AS n_users
-        |  FROM tr WHERE t3 IS NOT NULL GROUP BY 1, 2, 3)
-        |SELECT * FROM g
-        |ORDER BY n_occurrences DESC, t1 ASC, t2 ASC, t3 ASC
-        |LIMIT 20""".stripMargin,
-
-    // q316: the md5-band tombstone set cascaded through the key
-    // chain, per-table counts + e6 shares
-    "q316_forget_cascade" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH doomed AS (SELECT c_custkey FROM customer
-         |  WHERE substring(md5(CAST(c_custkey AS VARCHAR)), 1, 2)
-         |    < '10'),
-         |o AS (SELECT o_orderkey FROM orders
-         |  JOIN doomed ON o_custkey = c_custkey),
-         |l AS (SELECT l_orderkey FROM lineitem
-         |  JOIN o ON l_orderkey = o_orderkey),
-         |c AS (
-         |  SELECT 'customer' AS table_name,
-         |    (SELECT count(*) FROM doomed) AS n_delete,
-         |    (SELECT count(*) FROM customer) AS n_total
-         |  UNION ALL SELECT 'orders', (SELECT count(*) FROM o),
-         |    (SELECT count(*) FROM orders)
-         |  UNION ALL SELECT 'lineitem', (SELECT count(*) FROM l),
-         |    (SELECT count(*) FROM lineitem))
-         |SELECT table_name, n_delete, n_total,
-         |  ${ratioScaledSql("n_delete", "n_total", 6)} AS share_e6
-         |FROM c""".stripMargin
-    },
-
-    // q314: per-group (n, Σ, Σ²) with HUGEINT squares, per-term
-    // floored e6 sums of squares, clamped numerator, one division
-    "q314_eta_squared" ->
-      """WITH v AS (SELECT event_type AS g,
-        |    CAST(round(value * 100, 0) AS BIGINT) AS v
-        |  FROM events WHERE value IS NOT NULL),
-        |pg AS (SELECT g, count(*) AS n, CAST(sum(v) AS BIGINT) AS s,
-        |    sum(CAST(v AS HUGEINT) * v) AS q FROM v GROUP BY 1),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS n_rows,
-        |    CAST(count(*) AS BIGINT) AS n_groups,
-        |    CAST(sum(s) AS BIGINT) AS st, sum(q) AS qt,
-        |    sum((CAST(s AS HUGEINT) * s * 1000000) // n) AS b6
-        |  FROM pg),
-        |e AS (SELECT n_rows, n_groups, b6, qt,
-        |    (CAST(st AS HUGEINT) * st * 1000000) // n_rows AS gm
-        |  FROM t)
-        |SELECT n_rows, n_groups,
-        |  CASE WHEN CAST(qt AS HUGEINT) * 1000000 - gm > 0 THEN
-        |    CAST((greatest(b6 - gm, 0) * 1000000) //
-        |      (CAST(qt AS HUGEINT) * 1000000 - gm) AS BIGINT)
-        |  ELSE 0 END AS eta2_e6
-        |FROM e""".stripMargin,
-
-    // q315: the q164 pick convention over (type, week) buckets
-    "q315_weekly_quantiles" -> {
-      def pick(q: Int) =
-        s"""max(CASE WHEN rn = (n * $q + 999) // 1000 THEN u END)
-           |    AS p${q}_units""".stripMargin
-      s"""WITH c AS (SELECT event_type,
-         |    epoch_ns(ts) // 604800000000000 AS week,
-         |    CAST(round(value * 100, 0) AS BIGINT) AS u
-         |  FROM events),
-         |r AS (SELECT * FROM (SELECT *,
-         |    row_number() OVER (PARTITION BY event_type, week
-         |      ORDER BY u) AS rn,
-         |    count(*) OVER (PARTITION BY event_type, week) AS n
-         |  FROM c WHERE u IS NOT NULL))
-         |SELECT event_type, week, count(*) AS n,
-         |  ${pick(500)},
-         |  ${pick(900)}
-         |FROM r GROUP BY 1, 2""".stripMargin
-    },
-
-    // q312: the typo-injection construction (first word, 2nd char
-    // deleted, every 10th doc), then the deletion-variant expansion
-    // as a list comprehension, shared-variant join, levenshtein
-    // verify (both engines' classic unit-cost edit distance on
-    // ASCII-pure words)
-    "q312_symspell_pairs" ->
-      s"""WITH d0 AS (SELECT doc_id, text, ($wordsSql)[1] AS fw
-         |  FROM documents),
-         |documents2 AS (SELECT CASE WHEN doc_id % 10 = 0
-         |      AND length(fw) >= 5 AND strlen(fw) = length(fw)
-         |    THEN text || ' ' || substring(fw, 1, 1) ||
-         |      substring(fw, 3, length(fw))
-         |    ELSE text END AS text FROM d0),
-         |tok AS (SELECT unnest(${wordsSql}) AS w FROM documents2),
-         |v0 AS (SELECT w, count(*) AS c FROM tok
-         |  WHERE length(w) >= 4 AND strlen(w) = length(w)
-         |  GROUP BY 1),
-         |vr AS (SELECT w, unnest(list_append(
-         |    [substring(w, 1, i - 1) || substring(w, i + 1, length(w))
-         |     for i in range(1, length(w) + 1)], w)) AS v
-         |  FROM v0),
-         |p AS (SELECT DISTINCT a.w AS w1, b.w AS w2
-         |  FROM vr a JOIN vr b ON a.v = b.v AND a.w < b.w),
-         |f AS (SELECT w1, w2 FROM p WHERE levenshtein(w1, w2) <= 1)
-         |SELECT f.w1, f.w2, a.c AS c1, b.c AS c2
-         |FROM f JOIN v0 a ON a.w = f.w1
-         |JOIN v0 b ON b.w = f.w2""".stripMargin,
-
-    // q313: exact counts/ndv both sides, the |L|*|R|/max(ndv)
-    // estimate via HUGEINT floor division, e6 est/actual ratio
-    "q313_join_estimate" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH l AS (SELECT count(*) AS n_left,
-         |    count(DISTINCT l_partkey) AS ndv_left FROM lineitem),
-         |r AS (SELECT count(*) AS n_right,
-         |    count(DISTINCT p_partkey) AS ndv_right FROM part),
-         |a AS (SELECT count(*) AS n_actual
-         |  FROM lineitem JOIN part ON p_partkey = l_partkey),
-         |e AS (SELECT l.n_left, l.ndv_left, r.n_right, r.ndv_right,
-         |    a.n_actual,
-         |    CAST((CAST(l.n_left AS HUGEINT) * r.n_right) //
-         |      greatest(l.ndv_left, r.ndv_right) AS BIGINT)
-         |      AS n_estimate
-         |  FROM l, r, a)
-         |SELECT n_left, ndv_left, n_right, ndv_right, n_actual,
-         |  n_estimate,
-         |  ${ratioScaledSql("n_estimate", "n_actual", 6)}
-         |    AS est_over_actual_e6
-         |FROM e""".stripMargin
-    },
-
-    // q310: densified x/y series, 15-row lag frame joined on the
-    // shifted day, per-lag moments, the q275 two-stage ladder on
-    // sign(num)·num²/(dx·dy)
-    "q310_lead_lag" ->
-      """WITH b AS (SELECT event_type AS t,
-        |    epoch_ns(ts) // 86400000000000 AS day, count(*) AS c
-        |  FROM events WHERE event_type IN ('view', 'purchase')
-        |  GROUP BY 1, 2),
-        |h AS (SELECT min(day) AS d0, max(day) AS d1 FROM b),
-        |cal AS (SELECT CAST(unnest(range(h.d0, h.d1 + 1)) AS BIGINT)
-        |    AS day FROM h),
-        |x AS (SELECT cal.day, coalesce(b.c, 0) AS x FROM cal
-        |  LEFT JOIN b ON b.t = 'view' AND b.day = cal.day),
-        |y AS (SELECT cal.day, coalesce(b.c, 0) AS y FROM cal
-        |  LEFT JOIN b ON b.t = 'purchase' AND b.day = cal.day),
-        |lg AS (SELECT CAST(unnest(range(-7, 8)) AS BIGINT) AS lag),
-        |j AS (SELECT lg.lag, x.x, y.y
-        |  FROM lg CROSS JOIN y JOIN x ON x.day = y.day - lg.lag),
-        |ag AS (SELECT lag, count(*) AS n_days,
-        |    CAST(sum(x) AS BIGINT) AS sx,
-        |    CAST(sum(y) AS BIGINT) AS sy,
-        |    sum(CAST(x AS HUGEINT) * y) AS sxy,
-        |    sum(CAST(x AS HUGEINT) * x) AS sxx,
-        |    sum(CAST(y AS HUGEINT) * y) AS syy
-        |  FROM j GROUP BY 1),
-        |r AS (SELECT lag, n_days,
-        |    CAST(n_days AS HUGEINT) * sxy
-        |      - CAST(sx AS HUGEINT) * sy AS num,
-        |    CAST(n_days AS HUGEINT) * sxx
-        |      - CAST(sx AS HUGEINT) * sx AS dx,
-        |    CAST(n_days AS HUGEINT) * syy
-        |      - CAST(sy AS HUGEINT) * sy AS dy
-        |  FROM ag)
-        |SELECT lag, n_days,
-        |  CASE WHEN dx > 0 AND dy > 0 THEN
-        |    (CASE WHEN num < 0 THEN -1 ELSE 1 END) *
-        |    CAST((((abs(num) * 1000) // dx) * abs(num) * 1000) // dy
-        |      AS BIGINT)
-        |  ELSE 0 END AS r2_signed_e6
-        |FROM r""".stripMargin,
-
-    // q311: densified per-type series self-joined at day-7, exact e4
-    // MAE + e6 WAPE
-    "q311_seasonal_naive" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH b AS (SELECT event_type AS t,
-         |    epoch_ns(ts) // 86400000000000 AS day, count(*) AS c
-         |  FROM events GROUP BY 1, 2),
-         |h AS (SELECT min(day) AS d0, max(day) AS d1 FROM b),
-         |cal AS (SELECT ty.t,
-         |    CAST(unnest(range(h.d0, h.d1 + 1)) AS BIGINT) AS day
-         |  FROM (SELECT DISTINCT t FROM b) ty CROSS JOIN h),
-         |dn AS (SELECT cal.t, cal.day, coalesce(b.c, 0) AS y
-         |  FROM cal LEFT JOIN b ON b.t = cal.t AND b.day = cal.day),
-         |e AS (SELECT a.t, abs(a.y - p.y) AS err, a.y
-         |  FROM dn a JOIN dn p ON p.t = a.t AND p.day = a.day - 7
-         |  WHERE a.day >= (SELECT d0 FROM h) + 7),
-         |ag AS (SELECT t, count(*) AS n,
-         |    CAST(sum(err) AS BIGINT) AS se,
-         |    CAST(sum(y) AS BIGINT) AS sa FROM e GROUP BY 1)
-         |SELECT t AS event_type, n AS n_days_eval,
-         |  se AS sum_abs_err, sa AS sum_actual,
-         |  ${ratioScaledSql("se", "n", 4)} AS mae_e4,
-         |  ${ratioScaledSql("se", "sa", 6)} AS wape_e6
-         |FROM ag""".stripMargin
-    },
-
-    // q306: daily cents tally, prefix-max peak, (dd DESC, day ASC)
-    // argmax per priority
-    "q306_max_drawdown" ->
-      """WITH d AS (SELECT o_orderpriority AS g,
-        |    (epoch_ns(o_orderdate) // 1000000000) // 86400 AS day,
-        |    CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-        |      AS BIGINT) AS v
-        |  FROM orders GROUP BY 1, 2),
-        |p AS (SELECT g, day, v, max(v) OVER w AS peak
-        |  FROM d WINDOW w AS (PARTITION BY g ORDER BY day
-        |    ROWS UNBOUNDED PRECEDING)),
-        |r AS (SELECT g, day, v, peak, peak - v AS dd,
-        |    row_number() OVER (PARTITION BY g
-        |      ORDER BY peak - v DESC, day ASC) AS rn,
-        |    CAST(count(*) OVER (PARTITION BY g) AS BIGINT) AS n_days
-        |  FROM p)
-        |SELECT g AS o_orderpriority, n_days, dd AS max_drawdown,
-        |  day AS at_day, peak, v AS trough
-        |FROM r WHERE rn = 1""".stripMargin,
-
-    // q307: lagged deltas, 14-row gain/loss window sums, e6 gain
-    // share
-    "q307_rsi" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH d AS (SELECT o_orderpriority AS g,
-         |    (epoch_ns(o_orderdate) // 1000000000) // 86400 AS day,
-         |    CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-         |      AS BIGINT) AS v
-         |  FROM orders GROUP BY 1, 2),
-         |dl AS (SELECT g, day,
-         |    v - lag(v) OVER (PARTITION BY g ORDER BY day) AS delta
-         |  FROM d),
-         |f AS (SELECT * FROM dl WHERE delta IS NOT NULL),
-         |w AS (SELECT g, day, delta,
-         |    CAST(sum(CASE WHEN delta > 0 THEN delta ELSE 0 END)
-         |      OVER win AS BIGINT) AS gn,
-         |    CAST(sum(CASE WHEN delta < 0 THEN -delta ELSE 0 END)
-         |      OVER win AS BIGINT) AS ls,
-         |    CAST(count(*) OVER win AS BIGINT) AS win_rows
-         |  FROM f WINDOW win AS (PARTITION BY g ORDER BY day
-         |    ROWS 13 PRECEDING))
-         |SELECT g AS o_orderpriority, day, delta, win_rows,
-         |  ${ratioScaledSql("gn", "gn + ls", 6)} AS rsi_e6
-         |FROM w""".stripMargin
-    },
-
-    // q308: 20-row window stats, the squared band test in HUGEINT,
-    // per-priority breakout tally
-    "q308_bollinger" ->
-      """WITH d AS (SELECT o_orderpriority AS g,
-        |    (epoch_ns(o_orderdate) // 1000000000) // 86400 AS day,
-        |    CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-        |      AS BIGINT) AS v
-        |  FROM orders GROUP BY 1, 2),
-        |w AS (SELECT g, v,
-        |    CAST(count(*) OVER win AS BIGINT) AS n,
-        |    CAST(sum(v) OVER win AS BIGINT) AS sx,
-        |    sum(CAST(v AS HUGEINT) * v) OVER win AS sxx
-        |  FROM d WINDOW win AS (PARTITION BY g ORDER BY day
-        |    ROWS 19 PRECEDING)),
-        |b AS (SELECT g, CAST(n AS HUGEINT) * v - sx AS dev,
-        |    ((CAST(n AS HUGEINT) * v - sx) *
-        |     (CAST(n AS HUGEINT) * v - sx)) >
-        |      4 * (CAST(n AS HUGEINT) * sxx -
-        |        CAST(sx AS HUGEINT) * sx) AS brk
-        |  FROM w)
-        |SELECT g AS o_orderpriority, count(*) AS n_days,
-        |  CAST(sum(CASE WHEN brk AND dev > 0 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_above,
-        |  CAST(sum(CASE WHEN brk AND dev < 0 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_below
-        |FROM b GROUP BY 1""".stripMargin,
-
-    // q309: one daily aggregate, e4 extended/qty ratio
-    "q309_vwap" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH l AS (SELECT
-         |    (epoch_ns(l_shipdate) // 1000000000) // 86400 AS day,
-         |    CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS pq,
-         |    CAST(round(l_quantity, 0) AS BIGINT) AS q
-         |  FROM lineitem),
-         |a AS (SELECT day, count(*) AS n_lines,
-         |    CAST(sum(pq) AS BIGINT) AS sum_extended,
-         |    CAST(sum(q) AS BIGINT) AS sum_qty
-         |  FROM l GROUP BY 1)
-         |SELECT day, n_lines, sum_extended, sum_qty,
-         |  ${ratioScaledSql("sum_extended", "sum_qty", 4)} AS vwap_e4
-         |FROM a""".stripMargin
-    },
-
-    // q305: the q176 quantize CTE feeding 8 unrolled xy2d stages
-    // (quadrant digit + reflect-and-swap, each SELECT reading the
-    // previous stage's hx/hy — the engine's chained projections term
-    // for term), then the same 64-slice pruning report
-    "q305_hilbert_pruning" -> {
-      val bits = 8
-      val n = 1L << bits
-      def iter(idx: Int, k: Int): String = {
-        val s = 1L << k
-        s"""h$idx AS (SELECT o_totalprice, o_custkey,
-           |    CASE WHEN ((hy >> $k) & 1) = 0 THEN
-           |        CASE WHEN ((hx >> $k) & 1) = 1
-           |          THEN ${n - 1} - hy ELSE hy END
-           |      ELSE hx END AS hx,
-           |    CASE WHEN ((hy >> $k) & 1) = 0 THEN
-           |        CASE WHEN ((hx >> $k) & 1) = 1
-           |          THEN ${n - 1} - hx ELSE hx END
-           |      ELSE hy END AS hy,
-           |    hd + ${s * s} * (CASE
-           |      WHEN ((hx >> $k) & 1) = 0 AND ((hy >> $k) & 1) = 0
-           |        THEN 0
-           |      WHEN ((hx >> $k) & 1) = 0 THEN 1
-           |      WHEN ((hy >> $k) & 1) = 1 THEN 2 ELSE 3 END) AS hd
-           |  FROM h${idx - 1})""".stripMargin
-      }
-      val stages = (1 to bits)
-        .map(i => iter(i, bits - i)).mkString(",\n")
-      s"""WITH b AS (SELECT
-         |    min(CAST(o_totalprice AS DOUBLE)) AS amn,
-         |    max(CAST(o_totalprice AS DOUBLE)) AS amx,
-         |    min(CAST(o_custkey AS DOUBLE)) AS bmn,
-         |    max(CAST(o_custkey AS DOUBLE)) AS bmx
-         |  FROM orders),
-         |q AS (SELECT o_totalprice, o_custkey,
-         |    least(CAST(floor((CAST(o_totalprice AS DOUBLE) - amn)
-         |      * 256.0 / (amx - amn)) AS BIGINT), 255) AS qa,
-         |    least(CAST(floor((CAST(o_custkey AS DOUBLE) - bmn)
-         |      * 256.0 / (bmx - bmn)) AS BIGINT), 255) AS qb
-         |  FROM orders, b
-         |  WHERE o_totalprice IS NOT NULL AND o_custkey IS NOT NULL),
-         |h0 AS (SELECT o_totalprice, o_custkey, qa AS hx, qb AS hy,
-         |    CAST(0 AS BIGINT) AS hd FROM q),
-         |$stages,
-         |f AS (SELECT (hd * 64) // 65536 AS file_id,
-         |    count(*) AS n_rows,
-         |    min(CAST(o_totalprice AS DOUBLE)) AS min_a,
-         |    max(CAST(o_totalprice AS DOUBLE)) AS max_a,
-         |    min(CAST(o_custkey AS DOUBLE)) AS min_b,
-         |    max(CAST(o_custkey AS DOUBLE)) AS max_b
-         |  FROM h$bits GROUP BY 1)
-         |SELECT file_id, n_rows, min_a, max_a, min_b, max_b,
-         |  (min_a <= 100000.0 AND max_a >= 50000.0 AND
-         |   min_b <= 500.0 AND max_b >= 100.0) AS scanned
-         |FROM f""".stripMargin
-    },
-
-    // q303: distinct (user, day), per-user min day, daily split with
-    // the e6 returning share
-    "q303_new_vs_returning" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH ud AS (SELECT DISTINCT user_id AS u,
-         |    epoch_ns(ts) // 86400000000000 AS day FROM events
-         |  WHERE user_id IS NOT NULL),
-         |f AS (SELECT u, min(day) AS d0 FROM ud GROUP BY 1),
-         |a AS (SELECT ud.day, count(*) AS n_active,
-         |    CAST(sum(CASE WHEN ud.day = f.d0 THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n_new
-         |  FROM ud JOIN f ON f.u = ud.u GROUP BY 1)
-         |SELECT day, n_active, n_new,
-         |  n_active - n_new AS n_returning,
-         |  ${ratioScaledSql("n_active - n_new", "n_active", 6)}
-         |    AS returning_share_e6
-         |FROM a""".stripMargin
-    },
-
-    // q304: the e6-unit embedding table joined to both pair
-    // endpoints, per-pair (contrib DESC, dim ASC) top 3
-    "q304_vector_pair_explain" ->
-      s"""WITH ${lshPairCtes("0.3")},
-         |pe AS (SELECT vec_id,
-         |    CAST(generate_subscripts(embedding, 1) AS BIGINT) AS dim,
-         |    CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000,
-         |      0) AS BIGINT) AS u
-         |  FROM embeddings),
-         |c AS (SELECT p.id_a, p.id_b, a.dim, a.u AS ua_e6,
-         |    b.u AS ub_e6, CAST(a.u AS HUGEINT) * b.u AS contrib
-         |  FROM p JOIN pe a ON a.vec_id = p.id_a
-         |  JOIN pe b ON b.vec_id = p.id_b AND b.dim = a.dim),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY id_a, id_b
-         |    ORDER BY contrib DESC, dim ASC) AS rnk FROM c)
-         |SELECT id_a, id_b, dim, ua_e6, ub_e6,
-         |  CAST(contrib AS BIGINT) AS contrib_e12, rnk
-         |FROM r WHERE rnk <= 3""".stripMargin,
-
-    // q302: the q109 register ladder with the epoch-aligned day
-    // window as an extra group key; every (type, day) emits because
-    // the sentinel pushes the watermark past the last real window
-    "q302_stream_hll_window" -> {
-      val bucket = s"(${nibSql("h16", 1)} * 16 + ${nibSql("h16", 2)})"
-      val whi = (3 to 8)
-        .map(i => nibSql("h16", i) + s" * ${1L << (4 * (8 - i))}")
-        .mkString(" + ")
-      val ladder = (1 to 39).map(k =>
-        s"WHEN w >= ${BigInt(2).pow(56 - k)} THEN $k").mkString(" ")
-      s"""WITH h AS (SELECT DISTINCT event_type,
-         |    (epoch_ns(ts) // 86400000000000) * 86400 AS win_start,
-         |    substring(md5(CAST(user_id AS VARCHAR)), 1, 16) AS h16
-         |  FROM events WHERE user_id IS NOT NULL),
-         |hb AS (SELECT event_type, win_start, $bucket AS bucket,
-         |    CAST($whi AS HUGEINT) * 4294967296 +
-         |      ${hex32Sql("h16", 9)} AS w
-         |  FROM h),
-         |ranked AS (SELECT event_type, win_start, bucket,
-         |    CASE $ladder ELSE 40 END AS rank FROM hb),
-         |regs AS (SELECT event_type, win_start, bucket,
-         |    max(rank) AS mx FROM ranked GROUP BY 1, 2, 3),
-         |grid AS (SELECT g.event_type, g.win_start, b.bucket
-         |  FROM (SELECT DISTINCT event_type, win_start FROM h) g,
-         |    (SELECT unnest(range(0, 256)) AS bucket) b),
-         |m AS (SELECT grid.event_type, grid.win_start, grid.bucket,
-         |    coalesce(regs.mx, 0) AS mj
-         |  FROM grid LEFT JOIN regs
-         |    ON regs.event_type = grid.event_type
-         |    AND regs.win_start = grid.win_start
-         |    AND regs.bucket = grid.bucket),
-         |s AS (SELECT event_type, win_start,
-         |    CAST(sum(CASE WHEN mj = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS v_zero,
-         |    CAST(sum(CAST(1 AS BIGINT) << (40 - mj)) AS BIGINT)
-         |      AS s40
-         |  FROM m GROUP BY 1, 2)
-         |SELECT win_start, event_type, v_zero, s40,
-         |  CAST(0.7213 AS DOUBLE) / (CAST(1.0 AS DOUBLE) +
-         |    CAST(1.079 AS DOUBLE) / CAST(256.0 AS DOUBLE)) *
-         |    CAST(65536.0 AS DOUBLE) * CAST(1099511627776.0 AS DOUBLE) /
-         |    CAST(s40 AS DOUBLE) AS est_hll
-         |FROM s""".stripMargin
-    },
-
-    // q289: per purchase the (a.ts DESC, a.id DESC) row_number()=1
-    // view within the hour — "latest A if within window" = "latest A
-    // within window" since older As only widen the gap
-    "q289_stream_pattern" ->
-      """WITH e AS (SELECT user_id AS u, epoch_ns(ts) AS ts,
-        |    event_id AS id, event_type AS t FROM events
-        |  WHERE user_id IS NOT NULL),
-        |bb AS (SELECT u, ts, id FROM e WHERE t = 'purchase'),
-        |aa AS (SELECT u, ts, id FROM e WHERE t = 'view'),
-        |m AS (SELECT bb.u, aa.id AS a_event_id, bb.id AS b_event_id,
-        |    bb.ts - aa.ts AS gap_nanos,
-        |    row_number() OVER (PARTITION BY bb.id
-        |      ORDER BY aa.ts DESC, aa.id DESC) AS rn
-        |  FROM bb JOIN aa ON aa.u = bb.u AND aa.ts < bb.ts
-        |    AND bb.ts - aa.ts <= 3600000000000)
-        |SELECT u AS user_id, a_event_id, b_event_id, gap_nanos
-        |FROM m WHERE rn = 1""".stripMargin,
-
-    // q277: q22's exact pair surface at the 0.25 floor (double ratio
-    // compare is safe: integer operands, nearest tie exactly
-    // representable), e4 scores, tagged per-threshold counts with
-    // zero-fill
-    "q277_threshold_curve" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH t AS (SELECT doc_id, $wordsSql AS ws FROM documents),
-         |sh AS (SELECT doc_id, unnest(list_distinct(
-         |    [ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-         |     for i in range(1, len(ws)-1)])) AS shingle
-         |  FROM t WHERE len(ws) >= 3),
-         |sz AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-         |pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |    count(*) AS inter
-         |  FROM sh a JOIN sh b ON a.shingle = b.shingle
-         |    AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |scored AS (SELECT doc_a, doc_b,
-         |    ${ratioScaledSql("inter", "sa.n_sh + sb.n_sh - inter", 4)}
-         |      AS s
-         |  FROM pairs
-         |  JOIN sz sa ON sa.doc_id = doc_a
-         |  JOIN sz sb ON sb.doc_id = doc_b
-         |  WHERE CAST(inter AS DOUBLE) /
-         |    CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE) >= 0.25),
-         |thr AS (SELECT CAST(unnest(
-         |    [2500, 3500, 4500, 5500, 6500, 7500]) AS BIGINT) AS t),
-         |tagged AS (SELECT thr.t, doc_a, doc_b
-         |  FROM scored CROSS JOIN thr WHERE s >= thr.t),
-         |np AS (SELECT t, count(*) AS n_pairs FROM tagged GROUP BY 1),
-         |nd AS (SELECT t, count(*) AS n_docs FROM (
-         |    SELECT DISTINCT t, d FROM (
-         |      SELECT t, doc_a AS d FROM tagged
-         |      UNION ALL SELECT t, doc_b FROM tagged))
-         |  GROUP BY 1)
-         |SELECT thr.t AS threshold_e4,
-         |  coalesce(np.n_pairs, 0) AS n_pairs,
-         |  coalesce(nd.n_docs, 0) AS n_docs
-         |FROM thr
-         |LEFT JOIN np ON np.t = thr.t
-         |LEFT JOIN nd ON nd.t = thr.t""".stripMargin
-    },
-
-    // q260: gaps-and-islands — day − row_number is constant inside a
-    // consecutive run
-    "q260_streaks" ->
-      """WITH d AS (SELECT DISTINCT user_id,
-        |    epoch_ns(ts) // 86400000000000 AS d FROM events),
-        |i AS (SELECT user_id,
-        |    d - row_number() OVER (PARTITION BY user_id ORDER BY d)
-        |      AS isl
-        |  FROM d),
-        |r AS (SELECT user_id, isl, count(*) AS run FROM i
-        |  GROUP BY 1, 2)
-        |SELECT user_id, CAST(sum(run) AS BIGINT) AS n_days,
-        |  count(*) AS n_streaks, max(run) AS longest_streak
-        |FROM r GROUP BY 1""".stripMargin,
-
-    // q261: the centered normal equations via Cramer's rule, HUGEINT
-    // end to end, q116's signed half-away e6 rounding on each β
-    "q261_ols2" -> {
-      def sgn(a: String, b: String) =
-        s"CAST(sign($a) * sign($b) AS BIGINT)"
-      def e6(a: String, b: String) =
-        s"CASE WHEN det > 0 THEN ${sgn(a, b)} * " +
-          s"CAST((abs($a) * 2000000 + abs($b)) // (abs($b) * 2) " +
-          "AS BIGINT) END"
-      s"""WITH c AS (SELECT l_returnflag,
-         |    CAST(round(l_quantity, 0) AS BIGINT) AS x1,
-         |    CAST(round(l_discount * 100, 0) AS BIGINT) AS x2,
-         |    CAST(round(l_extendedprice, 0) AS BIGINT) AS y
-         |  FROM lineitem),
-         |s AS (SELECT l_returnflag, count(*) AS n,
-         |    sum(CAST(x1 AS HUGEINT)) AS s1,
-         |    sum(CAST(x2 AS HUGEINT)) AS s2,
-         |    sum(CAST(y AS HUGEINT)) AS sy,
-         |    sum(CAST(x1 AS HUGEINT) * x1) AS s11,
-         |    sum(CAST(x2 AS HUGEINT) * x2) AS s22,
-         |    sum(CAST(x1 AS HUGEINT) * x2) AS s12,
-         |    sum(CAST(x1 AS HUGEINT) * y) AS s1y,
-         |    sum(CAST(x2 AS HUGEINT) * y) AS s2y
-         |  FROM c GROUP BY 1),
-         |a AS (SELECT l_returnflag, n, s1, s2, sy,
-         |    CAST(n AS HUGEINT) * s11 - s1 * s1 AS a11,
-         |    CAST(n AS HUGEINT) * s12 - s1 * s2 AS a12,
-         |    CAST(n AS HUGEINT) * s22 - s2 * s2 AS a22,
-         |    CAST(n AS HUGEINT) * s1y - s1 * sy AS b1,
-         |    CAST(n AS HUGEINT) * s2y - s2 * sy AS b2
-         |  FROM s),
-         |d AS (SELECT l_returnflag, n, s1, s2, sy,
-         |    a11 * a22 - a12 * a12 AS det,
-         |    b1 * a22 - b2 * a12 AS n1,
-         |    b2 * a11 - b1 * a12 AS n2
-         |  FROM a),
-         |bb AS (SELECT l_returnflag, n, s1, s2, sy, det,
-         |    ${e6("n1", "det")} AS beta1_e6,
-         |    ${e6("n2", "det")} AS beta2_e6
-         |  FROM d)
-         |SELECT l_returnflag, n, beta1_e6, beta2_e6,
-         |  CASE WHEN det > 0 THEN
-         |    ${graft.functions.ExactRound.ratioScaledSignedSql(
-               "sy * 1000000 - CAST(beta1_e6 AS HUGEINT) * s1 " +
-                 "- CAST(beta2_e6 AS HUGEINT) * s2", "n", 0)}
-         |  END AS beta0_e6
-         |FROM bb""".stripMargin
-    },
-
-    // q262: the fixed peels unrolled — per round, degrees of the
-    // edge set induced by the previous alive set, keep >= k
-    "q262_kcore" -> {
-      def peel(t: Int) =
-        s"""e$t AS (SELECT e.u, e.v FROM e
-           |  JOIN a${t - 1} x ON x.node = e.u
-           |  JOIN a${t - 1} y ON y.node = e.v),
-           |d$t AS (SELECT node, count(*) AS degree FROM (
-           |    SELECT u AS node FROM e$t
-           |    UNION ALL SELECT v AS node FROM e$t) GROUP BY 1),
-           |a$t AS (SELECT node FROM d$t WHERE degree >= 8)"""
-          .stripMargin
-      materializedCtes(
-        s"""WITH e AS (SELECT DISTINCT o_custkey * 2 AS u,
-           |    l_suppkey * 2 + 1 AS v
-           |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-           |a0 AS (SELECT u AS node FROM e
-           |  UNION SELECT v AS node FROM e),
-           |${(1 to 4).map(peel).mkString(",\n")}
-           |SELECT node, degree FROM d4 WHERE degree >= 8"""
-          .stripMargin)
-    },
-
-    // q263: first purchase strictly after first signup; observed-
-    // value rank ceil(q·n/1000) per signup-day cohort
-    "q263_convert_cohort" ->
-      """WITH s AS (SELECT user_id, min(epoch_ns(ts)) AS t0
-        |  FROM events WHERE event_type = 'signup' GROUP BY 1),
-        |p AS (SELECT e.user_id, s.t0, min(epoch_ns(e.ts)) AS tc
-        |  FROM events e JOIN s ON s.user_id = e.user_id
-        |  WHERE e.event_type = 'purchase' AND epoch_ns(e.ts) > s.t0
-        |  GROUP BY 1, 2),
-        |dl AS (SELECT t0 // 86400000000000 AS cohort_day,
-        |    tc - t0 AS delay FROM p),
-        |r AS (SELECT cohort_day, delay,
-        |    CAST(row_number() OVER (PARTITION BY cohort_day
-        |      ORDER BY delay) AS BIGINT) AS rn,
-        |    count(*) OVER (PARTITION BY cohort_day) AS n
-        |  FROM dl)
-        |SELECT cohort_day, count(*) AS n,
-        |  max(CASE WHEN rn = (n * 250 + 999) // 1000 THEN delay END)
-        |    AS p250_units,
-        |  max(CASE WHEN rn = (n * 500 + 999) // 1000 THEN delay END)
-        |    AS p500_units,
-        |  max(CASE WHEN rn = (n * 750 + 999) // 1000 THEN delay END)
-        |    AS p750_units,
-        |  max(CASE WHEN rn = (n * 900 + 999) // 1000 THEN delay END)
-        |    AS p900_units
-        |FROM r GROUP BY 1""".stripMargin,
-
-    // q240: q75's five-sum mirror fed by doubled tie-averaged ranks
-    // from per-group distinct tallies + below-count windows
-    "q240_spearman" ->
-      """WITH c AS (SELECT l_returnflag,
-        |    CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS x,
-        |    CAST(round(l_quantity, 0) AS BIGINT) AS y
-        |  FROM lineitem),
-        |tx AS (SELECT l_returnflag, x, count(*) AS cnt,
-        |    coalesce(sum(count(*)) OVER (PARTITION BY l_returnflag
-        |      ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING
-        |      AND 1 PRECEDING), 0) AS below
-        |  FROM c GROUP BY 1, 2),
-        |ty AS (SELECT l_returnflag, y, count(*) AS cnt,
-        |    coalesce(sum(count(*)) OVER (PARTITION BY l_returnflag
-        |      ORDER BY y ROWS BETWEEN UNBOUNDED PRECEDING
-        |      AND 1 PRECEDING), 0) AS below
-        |  FROM c GROUP BY 1, 2),
-        |r AS (SELECT c.l_returnflag,
-        |    2 * tx.below + tx.cnt + 1 AS rx,
-        |    2 * ty.below + ty.cnt + 1 AS ry
-        |  FROM c JOIN tx ON tx.l_returnflag = c.l_returnflag
-        |    AND tx.x = c.x
-        |  JOIN ty ON ty.l_returnflag = c.l_returnflag AND ty.y = c.y),
-        |s AS (SELECT l_returnflag, count(*) AS n,
-        |    sum(CAST(rx AS HUGEINT)) AS sx,
-        |    sum(CAST(ry AS HUGEINT)) AS sy,
-        |    sum(CAST(rx AS HUGEINT) * CAST(rx AS HUGEINT)) AS sxx,
-        |    sum(CAST(ry AS HUGEINT) * CAST(ry AS HUGEINT)) AS syy,
-        |    sum(CAST(rx AS HUGEINT) * CAST(ry AS HUGEINT)) AS sxy
-        |  FROM r GROUP BY 1),
-        |v AS (SELECT l_returnflag, n,
-        |    CAST(n AS HUGEINT) * sxy - sx * sy AS num,
-        |    CAST(n AS HUGEINT) * sxx - sx * sx AS vx,
-        |    CAST(n AS HUGEINT) * syy - sy * sy AS vy
-        |  FROM s)
-        |SELECT l_returnflag, n,
-        |  CAST(CAST(num AS VARCHAR) AS DOUBLE) AS cov_num,
-        |  CASE WHEN vx > 0 AND vy > 0 THEN
-        |    round(CAST(CAST(num AS VARCHAR) AS DOUBLE) /
-        |      (sqrt(CAST(CAST(vx AS VARCHAR) AS DOUBLE)) *
-        |       sqrt(CAST(CAST(vy AS VARCHAR) AS DOUBLE))), 6)
-        |  END AS rho
-        |FROM v""".stripMargin,
-
-    // q238: native CUBE with GROUPING indicators (the q58 rollup
-    // oracle's cube twin)
-    "q238_cube_stats" ->
-      """SELECT source, lang,
-        |  CAST(GROUPING(source) AS BIGINT) AS g_source,
-        |  CAST(GROUPING(lang) AS BIGINT) AS g_lang,
-        |  count(*) AS n_rows,
-        |  CAST(sum(CAST(n_chars AS HUGEINT)) AS BIGINT) AS sum_units
-        |FROM documents
-        |GROUP BY CUBE (source, lang)""".stripMargin,
-
-    // q239: the greedy loop unrolled — per step, distances of every
-    // unselected candidate to each selected point (u self-join
-    // restricted to the selected ids), min per candidate, 1-row
-    // argmax by (d2 DESC, id ASC), selection grows by UNION ALL
-    "q239_kcenter_coreset" -> {
-      def iter(t: Int) =
-        s"""d$t AS (SELECT a.vec_id, s.vec_id AS sv,
-           |    sum(CAST(a.u - b.u AS HUGEINT) * (a.u - b.u)) AS d2
-           |  FROM u a, sel${t - 1} s
-           |  JOIN u b ON b.vec_id = s.vec_id
-           |  WHERE b.dim = a.dim
-           |    AND a.vec_id NOT IN (SELECT vec_id FROM sel${t - 1})
-           |  GROUP BY 1, 2),
-           |m$t AS (SELECT vec_id, min(d2) AS md FROM d$t GROUP BY 1),
-           |n$t AS (SELECT vec_id, md FROM m$t
-           |  ORDER BY md DESC, vec_id ASC LIMIT 1),
-           |sel$t AS (SELECT * FROM sel${t - 1}
-           |  UNION ALL SELECT $t AS step, vec_id,
-           |    CAST(md AS HUGEINT) AS md FROM n$t)""".stripMargin
-      s"""WITH u AS (SELECT vec_id,
-         |    CAST(generate_subscripts(embedding, 1) AS BIGINT) AS dim,
-         |    CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000, 0)
-         |      AS BIGINT) AS u
-         |  FROM embeddings),
-         |sel0 AS (SELECT 0 AS step, vec_id, CAST(0 AS HUGEINT) AS md
-         |  FROM (SELECT vec_id FROM embeddings
-         |    ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 1)),
-         |${(1 to 4).map(iter).mkString(",\n")}
-         |SELECT CAST(step AS BIGINT) AS step, vec_id,
-         |  CAST(md AS BIGINT) AS min_d2_e12
-         |FROM sel4""".stripMargin
-    },
-
-    // q237: last click per purchase (ct <= t, max ct), credited only
-    // inside the 24 h horizon; organic purchases null-extend
-    "q237_attribution" ->
-      """WITH p AS (SELECT event_id, user_id, epoch_ns(ts) AS t,
-        |    CAST(round(value * 100, 0) AS BIGINT) AS value_c
-        |  FROM events WHERE event_type = 'purchase'),
-        |c AS (SELECT user_id, event_id AS cid, epoch_ns(ts) AS ct
-        |  FROM events WHERE event_type = 'click'),
-        |j AS (SELECT p.event_id, p.t, c.cid, c.ct
-        |  FROM p JOIN c ON c.user_id = p.user_id AND c.ct <= p.t),
-        |b AS (SELECT event_id, t, cid, ct, row_number() OVER (
-        |    PARTITION BY event_id ORDER BY ct DESC) AS rn FROM j)
-        |SELECT p.event_id, p.user_id, p.value_c,
-        |  CASE WHEN b.ct IS NOT NULL
-        |      AND p.t - b.ct <= 86400000000000
-        |    THEN b.cid END AS attributed_click_id,
-        |  CASE WHEN b.ct IS NOT NULL
-        |      AND p.t - b.ct <= 86400000000000
-        |    THEN (p.t - b.ct) // 1000000000 END AS gap_s
-        |FROM p LEFT JOIN (SELECT * FROM b WHERE rn = 1) b
-        |  USING (event_id)""".stripMargin,
-
-    // q215: q203's t/j score/label derivation; per-distinct-score
-    // tally, exclusive below-window, one HUGEINT pair aggregate
-    "q215_roc_auc" -> {
-      import graft.functions.ExactRound.{ratioScaledSql,
-        ratioScaledSignedSql}
-      s"""WITH t AS (SELECT doc_id,
-         |    ${ratioScaledSql(qScoreNum, qScoreDen, 4)} AS q_e4,
-         |    $qNWords AS nw,
-         |    CAST(length(regexp_replace(text, '\\s+', '', 'g'))
-         |      AS BIGINT) AS nsp,
-         |    CAST(length(text) - length(regexp_replace(text, '#', '', 'g'))
-         |      + length(regexp_replace(text, '\\.{3,}|…', '@', 'g'))
-         |      - length(regexp_replace(text, '\\.{3,}|…', '', 'g'))
-         |      AS BIGINT) AS nsym,
-         |    CAST(len(list_filter($wordsSql,
-         |      w -> w IN ('the', 'a', 'of', 'to', 'and'))) AS BIGINT)
-         |      AS nstop
-         |  FROM documents),
-         |j AS (SELECT q_e4 AS s,
-         |    ((nw >= 50 AND nw <= 100000)
-         |      AND (nsp >= 3 * nw AND nsp <= 10 * nw)
-         |      AND (10 * nsym < nw) AND (nstop >= 2)) AS y
-         |  FROM t),
-         |g AS (SELECT s,
-         |    sum(CASE WHEN y THEN 1 ELSE 0 END) AS pos,
-         |    sum(CASE WHEN y THEN 0 ELSE 1 END) AS neg
-         |  FROM j GROUP BY 1),
-         |c AS (SELECT pos, neg,
-         |    coalesce(sum(neg) OVER (ORDER BY s
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS below
-         |  FROM g),
-         |a AS (SELECT sum(pos) AS n_pos, sum(neg) AS n_neg,
-         |    count(*) AS n_scores,
-         |    sum(CAST(pos AS HUGEINT) * below) AS wins,
-         |    sum(CAST(pos AS HUGEINT) * neg) AS ties
-         |  FROM c)
-         |SELECT CAST(n_pos AS BIGINT) AS n_pos,
-         |  CAST(n_neg AS BIGINT) AS n_neg, n_scores,
-         |  ${ratioScaledSql("2 * wins + ties",
-             "2 * CAST(n_pos AS HUGEINT) * n_neg", 6)} AS auc_e6,
-         |  ${ratioScaledSignedSql(
-             "2 * wins + ties - CAST(n_pos AS HUGEINT) * n_neg",
-             "CAST(n_pos AS HUGEINT) * n_neg", 6)} AS gini_e6
-         |FROM a""".stripMargin
-    },
-
-    // q214: the q130 prototype CTE + the same pair algebra
-    "q214_centroid_similarity" ->
-      Prototypes.centroidSimilaritySql("embeddings", "embedding",
-        "label"),
-
-    // q213: the q204 mirror wrapped in the same epoch decomposition
-    "q213_waterfill_epochs" ->
-      Apportion.waterFillEpochPlanSql(
-        "(SELECT source, length(text) AS n_chars FROM documents) d__",
-        "source", "n_chars", 17L, 10L, 2L),
-
-    // q212: same position math, slice + share mirror
-    "q212_shard_mix" ->
-      Apportion.interleaveShardMixSql("documents", "doc_id", "source",
-        shards = 10),
-
-    // q211: same rank order (md5 then id), same e12 position scaling
-    "q211_mixture_order" ->
-      Apportion.interleaveOrderSql("documents", "doc_id", "source"),
-
-    // q208: shared mirror — same inner-join + totals identity
-    "q208_lexical_tv_matrix" ->
-      Drift.lexicalTvMatrixSql("documents", "source", wordsSql),
-
-    // q210: the funnel's five stage counts from the stages' own
-    // mirrors chained on each other — q21 dedup, q51 bench rule +
-    // contamination ratio, q18 quality rational, q55 repetition flag,
-    // q56 scrub regexes (per-doc functions computed over `documents`
-    // and joined: doc-local, so values equal the staged computation),
-    // q19 langid over the SCRUBBED text, q52 sampling order
-    "q210_curation_funnel" -> {
-      import graft.functions.ExactRound.ratioSql
-      val email = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
-      val phone = "\\+?[0-9]{2,3}[- ][0-9]{3}[- ][0-9]{4}"
-      val ip = "[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}"
-      val ratio = "CASE WHEN coalesce(n_grams, 0) = 0 THEN 0.0 " +
-        "ELSE CAST(coalesce(n_hit, 0) AS DOUBLE) / coalesce(n_grams, 0) END"
-      val d2raw = "CAST(t2 - d2 AS DOUBLE) / CAST(t2 AS DOUBLE)"
-      val d3raw = "CAST(t3 - d3 AS DOUBLE) / CAST(t3 AS DOUBLE)"
-      val twraw = "CAST(mx AS DOUBLE) / CAST(nw AS DOUBLE)"
-      s"""WITH dd AS (SELECT min(doc_id) AS doc_id FROM documents
-         |  GROUP BY md5($wsNorm)),
-         |ddocs AS (SELECT d.doc_id, d.text FROM documents d
-         |  JOIN dd USING (doc_id)),
-         |bench AS (SELECT doc_id FROM documents
-         |  WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '1a'),
-         |bt AS (SELECT doc_id, $wordsSql AS ws FROM documents
-         |  JOIN bench USING (doc_id)),
-         |bg AS (SELECT DISTINCT unnest($gram5Sql) AS shingle FROM bt
-         |  WHERE len(ws) >= 5),
-         |ct AS (SELECT doc_id, $wordsSql AS ws FROM ddocs),
-         |cg AS (SELECT doc_id, unnest($gram5Sql) AS shingle FROM ct
-         |  WHERE len(ws) >= 5),
-         |sz AS (SELECT doc_id, count(*) AS n_grams FROM cg GROUP BY 1),
-         |hit AS (SELECT cg.doc_id, count(*) AS n_hit
-         |  FROM cg JOIN bg USING (shingle) GROUP BY 1),
-         |clean AS (SELECT ddocs.doc_id, ddocs.text FROM ddocs
-         |  LEFT JOIN sz USING (doc_id) LEFT JOIN hit USING (doc_id)
-         |  WHERE NOT (($ratio) >= 0.3)),
-         |qual AS (SELECT doc_id FROM documents
-         |  WHERE ${ratioSql(qScoreNum, qScoreDen)} >= 0.2),
-         |rt AS (SELECT doc_id, $wordsSql AS ws FROM documents),
-         |rwc AS (SELECT doc_id, count(*) AS c
-         |  FROM (SELECT doc_id, unnest(ws) AS w FROM rt)
-         |  GROUP BY doc_id, w),
-         |rws AS (SELECT doc_id, sum(c) AS nw, max(c) AS mx
-         |  FROM rwc GROUP BY 1),
-         |rs2 AS (SELECT doc_id, CAST(len(l) AS BIGINT) AS t2,
-         |    CAST(len(list_distinct(l)) AS BIGINT) AS d2
-         |  FROM (SELECT doc_id,
-         |      [ws[i] || ' ' || ws[i+1] for i in range(1, len(ws))] AS l
-         |    FROM rt WHERE len(ws) >= 2)),
-         |rs3 AS (SELECT doc_id, CAST(len(l) AS BIGINT) AS t3,
-         |    CAST(len(list_distinct(l)) AS BIGINT) AS d3
-         |  FROM (SELECT doc_id,
-         |      [ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-         |        for i in range(1, len(ws)-1)] AS l
-         |    FROM rt WHERE len(ws) >= 3)),
-         |rep AS (SELECT d.doc_id FROM documents d
-         |  LEFT JOIN rws USING (doc_id) LEFT JOIN rs2 USING (doc_id)
-         |  LEFT JOIN rs3 USING (doc_id)
-         |  WHERE NOT (coalesce(nw, 0) >= 10
-         |    AND (coalesce($d2raw, 0.0) > 0.2
-         |      OR coalesce($d3raw, 0.0) > 0.18
-         |      OR coalesce($twraw, 0.0) > 0.2))),
-         |gated AS (SELECT c.doc_id, c.text FROM clean c
-         |  JOIN qual USING (doc_id) JOIN rep USING (doc_id)),
-         |scr AS (SELECT doc_id, regexp_replace(regexp_replace(
-         |    regexp_replace(text, '$email', '<EMAIL>', 'g'),
-         |    '$phone', '<PHONE>', 'g'), '$ip', '<IP>', 'g') AS text
-         |  FROM gated),
-         |lid AS (${langIdSql("scr")}),
-         |samp AS (SELECT doc_id FROM (SELECT l.doc_id,
-         |      row_number() OVER (PARTITION BY pred_lang
-         |        ORDER BY md5(CAST(l.doc_id AS VARCHAR)), l.doc_id) AS rn
-         |    FROM lid l) WHERE rn <= 30)
-         |SELECT stage, n_docs FROM (
-         |  SELECT '0_input' AS stage, count(*) AS n_docs FROM documents
-         |  UNION ALL SELECT '1_deduped', count(*) FROM ddocs
-         |  UNION ALL SELECT '2_decontaminated', count(*) FROM clean
-         |  UNION ALL SELECT '3_quality_gated', count(*) FROM gated
-         |  UNION ALL SELECT '4_sampled', count(*) FROM samp)""".stripMargin
-    },
-
-    // q206: shared mirror — same split, HUGEINT Σc²/C², same
-    // (count desc, word asc) top-k order
-    "q206_lexical_diversity" ->
-      LexicalDiversity.perSourceSql("documents", "source", wordsSql,
-        topK = 10),
-
-    // q207: the q200 batched-train CTEs re-derive the word table;
-    // fertility is the same wtok join grouped by lang, e6-exact
-    "q207_bpe_fertility" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH ${bpeBatchedCtes(16)},
-         |wtok AS (SELECT w,
-         |    CAST(len(string_split(syms, ' ')) AS BIGINT) AS ntok,
-         |    CAST(length(w) AS BIGINT) AS nch
-         |  FROM bs17),
-         |t AS (SELECT lang, unnest($wordsSql) AS w FROM documents),
-         |tw AS (SELECT lang, count(*) AS n_words,
-         |    CAST(sum(ntok) AS BIGINT) AS n_bpe,
-         |    CAST(sum(nch) AS BIGINT) AS nchars
-         |  FROM t JOIN wtok USING (w) GROUP BY 1),
-         |dd AS (SELECT lang, count(*) AS n_docs
-         |  FROM documents GROUP BY 1)
-         |SELECT dd.lang, n_docs, coalesce(n_words, 0) AS n_words,
-         |  coalesce(n_bpe, 0) AS n_bpe_tokens,
-         |  coalesce(nchars, 0) AS n_word_chars,
-         |  ${ratioScaledSql("n_bpe", "n_words", 6)} AS fertility_e6,
-         |  ${ratioScaledSql("nchars", "n_bpe", 6)}
-         |    AS chars_per_token_e6
-         |FROM dd LEFT JOIN tw USING (lang)""".stripMargin
-    },
-
-    // q205: one token scan builds both count tables (target count as
-    // a conditional sum), scalar totals cross-join back, identical
-    // cross-multiplied HUGEINT rounding — the q85 shape
-    "q205_importance_score" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH t AS (SELECT doc_id, (lang = 'en') AS tgt,
-         |    unnest($wordsSql) AS w
-         |  FROM documents),
-         |c AS (SELECT w, count(*) AS cc,
-         |    sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS ct
-         |  FROM t GROUP BY 1),
-         |g AS (SELECT CAST(sum(cc) AS HUGEINT) AS allc,
-         |    CAST(sum(ct) AS HUGEINT) AS allt,
-         |    CAST(count(*) AS HUGEINT) AS vocab
-         |  FROM c),
-         |s AS (SELECT doc_id, ${ratioScaledSql(
-              "(ct + 1) * (allc + vocab)",
-              "(allt + vocab) * (cc + 1)", 6)} AS r6
-         |  FROM t JOIN c USING (w) CROSS JOIN g),
-         |p AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-         |    CAST(sum(r6) AS BIGINT) AS sum_r
-         |  FROM s GROUP BY 1)
-         |SELECT d.doc_id, coalesce(n_words, 0) AS n_words,
-         |  coalesce(sum_r, 0) AS sum_ratio_e6,
-         |  ${ratioScaledSql("sum_r", "n_words", 0)} AS mean_ratio_e6
-         |FROM documents d LEFT JOIN p USING (doc_id)""".stripMargin
-    },
-
-    // q204: the shared mirror emits the same prefix-saturation
-    // predicate, residual hand-out and HUGEINT lineage
-    "q204_unimax_waterfill" ->
-      s"""${Apportion.epochCappedWaterFillSql(
-            "(SELECT source, length(text) AS n_chars FROM documents) d__",
-            "source", "n_chars", 17L, 10L, 2L)}""".stripMargin,
-
-    // q202: the same md5("key:rep") membership rule and exact e6
-    // replicate means (char length: both engines count CHARACTERS)
-    "q202_bootstrap_ci" -> {
-      import graft.functions.ExactRound.ratioScaledSql
-      s"""WITH b AS (SELECT r.rep, length(d.text) AS v
-         |  FROM documents d,
-         |    (SELECT unnest(range(0, 32)) AS rep) r
-         |  WHERE substring(md5(CAST(d.doc_id AS VARCHAR) || ':'
-         |    || CAST(r.rep AS VARCHAR)), 1, 1) < '8')
-         |SELECT CAST(rep AS INTEGER) AS rep, count(*) AS n_rows,
-         |  ${ratioScaledSql("sum(v)", "count(*)", 6)} AS mean_e6
-         |FROM b GROUP BY 1""".stripMargin
-    },
-
-    // q201: both filters re-derived from their existing mirrors (q18
-    // quality rational, q81 Gopher rules), then the 2×2 table and
-    // κ = (n·agree − E)/(n² − E) in HUGEINT — the exact twin of the
-    // engine's DECIMAL(38,0) path
-    "q201_filter_agreement" -> {
-      import graft.functions.ExactRound.{ratioSql, ratioScaledSql,
-        ratioScaledSignedSql}
-      val eTerm = "(CAST(na AS HUGEINT) * nb + " +
-        "CAST(n - na AS HUGEINT) * (n - nb))"
-      s"""WITH t AS (SELECT doc_id,
-         |    ${ratioSql(qScoreNum, qScoreDen, 4)} AS q,
-         |    CAST(len($wordsSql) AS BIGINT) AS nw,
-         |    CAST(length(regexp_replace(text, '\\s+', '', 'g'))
-         |      AS BIGINT) AS nsp,
-         |    CAST(length(text) - length(regexp_replace(text, '#', '', 'g'))
-         |      + length(regexp_replace(text, '\\.{3,}|…', '@', 'g'))
-         |      - length(regexp_replace(text, '\\.{3,}|…', '', 'g'))
-         |      AS BIGINT) AS nsym,
-         |    CAST(len(list_filter($wordsSql,
-         |      w -> w IN ('the', 'a', 'of', 'to', 'and'))) AS BIGINT)
-         |      AS nstop
-         |  FROM documents),
-         |j AS (SELECT (q >= 0.5) AS a_keep,
-         |    ((nw >= 50 AND nw <= 100000)
-         |      AND (nsp >= 3 * nw AND nsp <= 10 * nw)
-         |      AND (10 * nsym < nw) AND (nstop >= 2)) AS b_keep
-         |  FROM t),
-         |g AS (SELECT count(*) AS n,
-         |    sum(CASE WHEN a_keep THEN 1 ELSE 0 END) AS na,
-         |    sum(CASE WHEN b_keep THEN 1 ELSE 0 END) AS nb,
-         |    sum(CASE WHEN a_keep AND b_keep THEN 1 ELSE 0 END) AS nab
-         |  FROM j)
-         |SELECT CAST(n AS BIGINT) AS n_docs, CAST(na AS BIGINT)
-         |    AS n_a_keep,
-         |  CAST(nb AS BIGINT) AS n_b_keep, CAST(nab AS BIGINT)
-         |    AS n_both_keep,
-         |  CAST(2 * nab + n - na - nb AS BIGINT) AS n_agree,
-         |  ${ratioScaledSql("2 * nab + n - na - nb", "n", 6)} AS po_e6,
-         |  ${ratioScaledSql(eTerm, "CAST(n AS HUGEINT) * n", 6)} AS pe_e6,
-         |  ${ratioScaledSignedSql(
-            s"CAST(n AS HUGEINT) * (2 * nab + n - na - nb) - $eTerm",
-            s"CAST(n AS HUGEINT) * n - $eTerm", 6)} AS kappa_e6
-         |FROM g""".stripMargin
-    },
-
-    // q200: q180's encode join keyed by the BATCHED (16-pass) word
-    // table bs17 instead of the sequential s4
-    "q200_bpe_encode_batched" ->
-      s"""WITH ${bpeBatchedCtes(16)},
-         |wtok AS (SELECT w,
-         |    CAST(len(string_split(syms, ' ')) AS BIGINT) AS ntok
-         |  FROM bs17),
-         |t AS (SELECT doc_id, unnest($wordsSql) AS w FROM documents),
-         |tw AS (SELECT doc_id, count(*) AS n_words,
-         |    CAST(sum(ntok) AS BIGINT) AS n_bpe
-         |  FROM t JOIN wtok USING (w) GROUP BY 1)
-         |SELECT d.doc_id, coalesce(n_words, 0) AS n_words,
-         |  coalesce(n_bpe, 0) AS n_bpe_tokens
-         |FROM documents d LEFT JOIN tw USING (doc_id)""".stripMargin,
-
-    // q199: recovery must land exactly the one-shot result — file i
-    // is batch i (mtime order, one file per trigger, numbering
-    // resumed from the checkpoint across the restart), each batch's
-    // partition written exactly once despite the batch-1 replay
-    "q199_stream_recovery" ->
-      """SELECT CAST(event_id % 4 AS BIGINT) AS graft_batch_id,
-        |  event_type, count(*) AS n_events,
-        |  CAST(sum(CAST(user_id AS BIGINT)) AS BIGINT) AS sum_uid
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    // q194-q198 (round 13): the CSV/serving/news surfaces gate through
-    // the staged-file trick — the engine stages deterministic CSVs
-    // derived from the gate tables under csvGateRoot; the oracle
-    // read_csv's the same files and mirrors every cleanse arm. The
-    // fixed stamp clock (2026-01-01 UTC = epoch 1767225600) replaces
-    // the wall clock on both sides.
-    "q194_csv_ingest" -> {
-      // clean_value mirror: unicode minus -> '-', strip %/,/+ and a
-      // trailing K/M/B/T INR unit, trim, TRY_CAST (coercion -> NULL),
-      // then the 2dp display round — Cleanse.cleanNumber/cleanDouble
-      def num(c: String) =
-        s"""round(try_cast(trim(regexp_replace(regexp_replace($c,
-           |    '−', '-', 'g'),
-           |    '[%,+]|\\s*[KMBT]?\\s*INR\\s*$$', '', 'g')) AS DOUBLE), 2)"""
-          .stripMargin
-      s"""WITH raw AS (SELECT * FROM read_csv(
-         |    '$csvGateRoot/q194/screener.csv',
-         |    header=true, all_varchar=true)),
-         |c AS (SELECT
-         |    nullif(trim("Symbol"), '') AS symbol,
-         |    nullif(trim("Description"), '') AS description,
-         |    nullif(trim("Analyst Rating"), '') AS analyst_rating,
-         |    ${num("\"Performance % Year to date\"")} AS performance_ytd,
-         |    ${num("\"Price\"")} AS price
-         |  FROM raw)
-         |SELECT *, CAST(1767225600 AS BIGINT) AS stamp_epoch FROM c
-         |WHERE symbol IS NOT NULL AND len(trim(symbol)) > 0""".stripMargin
-    },
-
-    // q195: the oracle names slice 2 (the newest mtime) explicitly —
-    // the engine resolving any other file by mtime hash-fails
-    "q195_latest_file" ->
-      s"""SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
-         |  CAST(n_regionkey AS BIGINT) AS n_regionkey
-         |FROM read_csv('$csvGateRoot/q195/nation-2.csv',
-         |  header=true, all_varchar=true)""".stripMargin,
-
-    // q196: every arm of the scrape-noise predicate mirrored
-    "q196_scrape_noise" ->
-      """WITH names AS (SELECT p_name AS name FROM part
-        |  UNION ALL SELECT unnest(['Sector: Financials',
-        |    '2024-01-01 report', 'filed 0001-01-01',
-        |    'Strengths: momentum', 'Neutral outlook', '   ',
-        |    repeat('x', 60), 'Acme Industrial Holdings']))
-        |SELECT name, count(*) AS n FROM names
-        |WHERE name IS NOT NULL AND len(name) <= 50
-        |  AND NOT contains(name, 'Sector')
-        |  AND NOT contains(name, '0001-01-01')
-        |  AND NOT contains(name, 'Strengths:')
-        |  AND NOT contains(name, 'Neutral')
-        |  AND len(trim(name)) > 0
-        |  AND NOT regexp_matches(name, '^\d{4}-\d{2}-\d{2}')
-        |GROUP BY 1""".stripMargin,
-
-    // q197: the btst screener is top-20 by (composite desc, symbol
-    // asc); the JSON string rebuilds exactly (integer score — no
-    // float formatting divergence; toJSON emits fields in schema
-    // order and the symbols are quote-free ASCII)
-    "q197_screener_serve" ->
-      """WITH sc AS (SELECT 'SYM' || CAST(p_partkey AS VARCHAR) AS symbol,
-        |    CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-        |      AS composite_score
-        |  FROM part),
-        |t AS (SELECT * FROM sc
-        |  ORDER BY composite_score DESC, symbol ASC LIMIT 20)
-        |SELECT '{"symbol":"' || symbol || '","composite_score":'
-        |  || CAST(composite_score AS VARCHAR) || '}' AS json
-        |FROM t""".stripMargin,
-
-    // q198: premium filter (NULL -> keep), key validity, 500-char
-    // truncation, md5 surrogate key, fixed posted-at clock
-    "q198_news_prepare" ->
-      """SELECT 'https://news.example/a/' || CAST(doc_id AS VARCHAR)
-        |    AS article_url,
-        |  substring(text, 1, 500) AS headline,
-        |  'tv_' || substring(md5('https://news.example/a/'
-        |    || CAST(doc_id AS VARCHAR)), 1, 20) AS tweet_id,
-        |  CASE WHEN doc_id % 3 = 0 THEN false ELSE true END AS is_critical,
-        |  CAST(1767225600 AS BIGINT) AS posted_epoch
-        |FROM documents
-        |WHERE doc_id % 11 <> 0
-        |  AND NOT coalesce(CASE WHEN doc_id % 7 = 0 THEN NULL
-        |    ELSE doc_id % 5 = 0 END, false)""".stripMargin,
-
-    // q193: the engine synthesizes + ImageIO-encodes + ImageIO-decodes
-    // real PNGs; the oracle never touches bytes — it enumerates the
-    // SAME pixels from the shared generator formula (synthChannel /
-    // synthDims mirrored verbatim) because lossless PNG makes
-    // decode(encode(pixels)) == pixels by construction. Resize mirrors
-    // the integer nearest-neighbor source index ((x*w)//5, (y*h)//3).
-    "q193_image_decode" ->
-      """WITH d AS (SELECT doc_id,
-        |    CAST(4 + doc_id % 13 AS INTEGER) AS w,
-        |    CAST(4 + doc_id % 11 AS INTEGER) AS h
-        |  FROM documents),
-        |px AS (SELECT d.doc_id,
-        |    ((d.doc_id % 100003) * 31 + x.i * 7 + y.i * 13 + c.i * 97)
-        |      % 256 AS v
-        |  FROM d,
-        |    (SELECT unnest(range(0, 16)) AS i) x,
-        |    (SELECT unnest(range(0, 14)) AS i) y,
-        |    (SELECT unnest(range(0, 3)) AS i) c
-        |  WHERE x.i < d.w AND y.i < d.h),
-        |s AS (SELECT doc_id, CAST(sum(v) AS BIGINT) AS px_sum,
-        |    CAST(min(v) AS INTEGER) AS px_min,
-        |    CAST(max(v) AS INTEGER) AS px_max
-        |  FROM px GROUP BY 1),
-        |rpx AS (SELECT d.doc_id,
-        |    ((d.doc_id % 100003) * 31 + ((x.i * d.w) // 5) * 7
-        |      + ((y.i * d.h) // 3) * 13 + c.i * 97) % 256 AS v
-        |  FROM d,
-        |    (SELECT unnest(range(0, 5)) AS i) x,
-        |    (SELECT unnest(range(0, 3)) AS i) y,
-        |    (SELECT unnest(range(0, 3)) AS i) c),
-        |r AS (SELECT doc_id, CAST(sum(v) AS BIGINT) AS rs_sum,
-        |    CAST(min(v) AS INTEGER) AS rs_min,
-        |    CAST(max(v) AS INTEGER) AS rs_max
-        |  FROM rpx GROUP BY 1)
-        |SELECT d.doc_id, 'png' AS px_format, d.w AS px_w, d.h AS px_h,
-        |  s.px_sum, s.px_min, s.px_max, r.rs_sum, r.rs_min, r.rs_max
-        |FROM d JOIN s USING (doc_id) JOIN r USING (doc_id)""".stripMargin,
-
-    // q191: the recursive component CTE over the mirrored-LSH edges,
-    // sizes (singletons via left join), then the size histogram
-    "q191_cluster_size_histogram" ->
-      s"""WITH RECURSIVE ${lshPairCtes("0.45")},
-         |cl(node, r) AS (SELECT a, b FROM e
-         |  UNION SELECT cl.node, e2.b FROM cl JOIN e e2 ON cl.r = e2.a),
-         |cc AS (SELECT node, least(node, min(r)) AS component
-         |  FROM cl GROUP BY node),
-         |sz AS (SELECT coalesce(cc.component, emb.vec_id) AS rep,
-         |    count(*) AS s
-         |  FROM embeddings emb LEFT JOIN cc ON cc.node = emb.vec_id
-         |  GROUP BY 1)
-         |SELECT s AS cluster_size, count(*) AS n_clusters
-         |FROM sz GROUP BY 1""".stripMargin,
-
-    // q192: the plain batch join + aggregate (stream-static enrich
-    // has no state: the stream path must equal this by construction)
-    "q192_stream_enrich" ->
-      """WITH dim AS (SELECT event_type,
-        |    count(*) % 7 + 1 AS type_weight
-        |  FROM events GROUP BY 1)
-        |SELECT e.event_type, CAST(d.type_weight AS BIGINT) AS type_weight,
-        |  count(*) AS n_events,
-        |  CAST(sum(e.user_id * d.type_weight) AS BIGINT) AS weighted_sum
-        |FROM events e JOIN dim d ON d.event_type = e.event_type
-        |GROUP BY 1, 2""".stripMargin,
-
-    // q190: the same e6 decay table as a list literal (q111 pattern),
-    // bounded offset fan-out over the DAILY aggregate, semi-join to
-    // observed days
-    "q190_ewma_series" -> ewmaSeriesOracleSql,
-
-    // q264: the STREAM path must equal the batch EWMA series
-    // row-for-row — same oracle verbatim (the q224 stream-equals-
-    // batch contract, trailing-ring edition)
-    "q264_stream_ewma" -> ewmaSeriesOracleSql,
-
-    // q189: q22's pair surface + shared-shingle fetch, ranked by
-    // (gram_df asc, shingle asc) within each pair
-    "q189_pair_explanations" ->
-      s"""WITH t AS (SELECT doc_id, $wordsSql AS ws FROM documents),
-         |sh AS (SELECT doc_id, unnest(list_distinct(
-         |    [ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-         |     for i in range(1, len(ws) - 1)])) AS shingle
-         |  FROM t WHERE len(ws) >= 3),
-         |sz AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-         |pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |    count(*) AS inter
-         |  FROM sh a JOIN sh b ON a.shingle = b.shingle
-         |    AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |p AS (SELECT doc_a, doc_b,
-         |    ${graft.functions.ExactRound.ratioSql("inter",
-              "sa.n_sh + sb.n_sh - inter", 4)} AS jaccard
-         |  FROM pairs
-         |  JOIN sz sa ON sa.doc_id = doc_a
-         |  JOIN sz sb ON sb.doc_id = doc_b
-         |  WHERE CAST(inter AS DOUBLE) /
-         |    CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE) >= 0.5),
-         |dfreq AS (SELECT shingle, count(*) AS gram_df FROM sh
-         |  GROUP BY 1),
-         |shared AS (SELECT p.doc_a, p.doc_b, p.jaccard,
-         |    x.shingle, dfreq.gram_df
-         |  FROM p JOIN sh x ON x.doc_id = p.doc_a
-         |    JOIN sh y ON y.doc_id = p.doc_b AND y.shingle = x.shingle
-         |    JOIN dfreq ON dfreq.shingle = x.shingle),
-         |r AS (SELECT *, CAST(row_number() OVER (
-         |      PARTITION BY doc_a, doc_b
-         |      ORDER BY gram_df ASC, shingle ASC) AS BIGINT) AS rnk
-         |  FROM shared)
-         |SELECT doc_a, doc_b, jaccard, rnk, shingle, gram_df
-         |FROM r WHERE rnk <= 3""".stripMargin,
-
-    // q188: per-half distinct 3-gram sets via the shared words/gram
-    // fragments, membership bits, one-row rationals
-    "q188_corpus_overlap" ->
-      s"""WITH t AS (SELECT doc_id, $wordsSql AS ws FROM documents),
-         |g AS (SELECT doc_id, unnest(list_distinct(
-         |    [ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-         |     for i in range(1, len(ws) - 1)])) AS shingle
-         |  FROM t WHERE len(ws) >= 3),
-         |sa AS (SELECT DISTINCT shingle FROM g WHERE doc_id % 2 = 0),
-         |sb AS (SELECT DISTINCT shingle FROM g WHERE doc_id % 2 = 1),
-         |bits AS (SELECT coalesce(sa.shingle, sb.shingle) AS shingle,
-         |    CASE WHEN sa.shingle IS NULL THEN 0 ELSE 1 END AS ia,
-         |    CASE WHEN sb.shingle IS NULL THEN 0 ELSE 1 END AS ib
-         |  FROM sa FULL JOIN sb ON sb.shingle = sa.shingle)
-         |SELECT CAST(sum(ia) AS BIGINT) AS n_a,
-         |  CAST(sum(ib) AS BIGINT) AS n_b,
-         |  CAST(sum(ia * ib) AS BIGINT) AS n_inter,
-         |  count(*) AS n_union,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "sum(ia * ib)", "count(*)", 6)} AS jaccard_e6,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "sum(ia * ib)", "sum(ia)", 6)} AS cont_a_e6,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "sum(ia * ib)", "sum(ib)", 6)} AS cont_b_e6
-         |FROM bits""".stripMargin,
-
-    // q187: identical permutation and round-robin arithmetic
-    "q187_stratified_kfold" ->
-      """SELECT doc_id, lang, (rn - 1) % 5 AS fold
-        |FROM (SELECT doc_id, lang, row_number() OVER (
-        |    PARTITION BY lang
-        |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-        |  FROM documents)""".stripMargin,
-
-    // q186: per-class tallies off the shared confusion CTE; F1 as the
-    // single rational 2tp/(n_true + n_pred)
-    "q186_class_metrics" ->
-      s"""WITH $protoConfusionCtes,
-         |cls AS (SELECT true_label AS label FROM conf
-         |  UNION SELECT assigned_label FROM conf),
-         |tp AS (SELECT true_label AS label,
-         |    CAST(sum(n_vecs) AS BIGINT) AS tp FROM conf
-         |  WHERE true_label = assigned_label GROUP BY 1),
-         |tc AS (SELECT true_label AS label,
-         |    CAST(sum(n_vecs) AS BIGINT) AS n_true FROM conf GROUP BY 1),
-         |pc AS (SELECT assigned_label AS label,
-         |    CAST(sum(n_vecs) AS BIGINT) AS n_pred FROM conf GROUP BY 1)
-         |SELECT cls.label, coalesce(tp, 0) AS tp,
-         |  coalesce(n_pred, 0) - coalesce(tp, 0) AS fp,
-         |  coalesce(n_true, 0) - coalesce(tp, 0) AS fn,
-         |  coalesce(n_true, 0) AS n_true, coalesce(n_pred, 0) AS n_pred,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "coalesce(tp, 0)", "coalesce(n_pred, 0)", 6)}
-         |    AS precision_e6,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "coalesce(tp, 0)", "coalesce(n_true, 0)", 6)}
-         |    AS recall_e6,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "2 * coalesce(tp, 0)",
-              "coalesce(n_true, 0) + coalesce(n_pred, 0)", 6)} AS f1_e6
-         |FROM cls LEFT JOIN tp USING (label)
-         |  LEFT JOIN tc USING (label) LEFT JOIN pc USING (label)"""
-        .stripMargin,
-
-    // q134: row_number rankings (total order: value desc, doc asc),
-    // full join, each RRF term through the rounding identity
-    "q134_rrf_fusion" ->
-      s"""WITH scored AS (SELECT doc_id,
-         |    CAST(len(regexp_extract_all(lower(text),
-         |      '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT) AS n_tokens,
-         |    ${graft.functions.ExactRound.ratioScaledSql(
-              qScoreNum, qScoreDen, 4)} AS quality_e4
-         |  FROM documents),
-         |ra AS (SELECT doc_id, row_number() OVER
-         |    (ORDER BY quality_e4 DESC, doc_id ASC) AS rank_1
-         |  FROM scored),
-         |rb AS (SELECT doc_id, row_number() OVER
-         |    (ORDER BY n_tokens DESC, doc_id ASC) AS rank_2
-         |  FROM scored),
-         |j AS (SELECT ra.doc_id, rank_1, rank_2
-         |  FROM ra JOIN rb ON ra.doc_id = rb.doc_id)
-         |SELECT doc_id, rank_1, rank_2,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "1", "rank_1 + 60", 6)} +
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "1", "rank_2 + 60", 6)} AS rrf_e6
-         |FROM j ORDER BY rrf_e6 DESC, doc_id ASC LIMIT 100"""
-        .stripMargin,
-
-    // q135: identical frequency rank (count desc, type asc), all
-    // checkpoints as conditional sums over one ranked pass
-    "q135_vocab_coverage" ->
-      s"""WITH t AS (SELECT unnest($wordsSql) AS w FROM documents),
-         |c AS (SELECT w, count(*) AS cnt FROM t GROUP BY 1),
-         |r AS (SELECT cnt, row_number() OVER
-         |    (ORDER BY cnt DESC, w ASC) AS rn FROM c),
-         |a AS (SELECT CAST(sum(cnt) AS BIGINT) AS total,
-         |    count(*) AS n_types,
-         |    CAST(sum(CASE WHEN rn <= 100 THEN cnt ELSE 0 END)
-         |      AS BIGINT) AS cov100,
-         |    CAST(sum(CASE WHEN rn <= 1000 THEN cnt ELSE 0 END)
-         |      AS BIGINT) AS cov1000,
-         |    CAST(sum(CASE WHEN rn <= 10000 THEN cnt ELSE 0 END)
-         |      AS BIGINT) AS cov10000
-         |  FROM r)
-         |SELECT CAST(100 AS BIGINT) AS k,
-         |  least(100, n_types) AS n_types_used,
-         |  cov100 AS covered_tokens, total AS total_tokens,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "cov100", "total", 6)} AS coverage_e6 FROM a
-         |UNION ALL SELECT CAST(1000 AS BIGINT),
-         |  least(1000, n_types), cov1000, total,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "cov1000", "total", 6)} FROM a
-         |UNION ALL SELECT CAST(10000 AS BIGINT),
-         |  least(10000, n_types), cov10000, total,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "cov10000", "total", 6)} FROM a""".stripMargin,
-
-    // q136: positional stream, hits expand to a ±2 window per hit
-    // (range join is fine oracle-side), pivot + concat_ws (both
-    // engines drop the NULL edge positions)
-    "q136_concordance" ->
-      s"""WITH d AS (SELECT doc_id, $wordsSql AS ws FROM documents),
-         |t AS (SELECT doc_id, generate_subscripts(ws, 1) AS i,
-         |    unnest(ws) AS w FROM d),
-         |h AS (SELECT doc_id, i AS hit FROM t WHERE w = 'scan'),
-         |x AS (SELECT h.doc_id, h.hit, t.i - h.hit AS delta, t.w
-         |  FROM h JOIN t ON t.doc_id = h.doc_id
-         |    AND t.i BETWEEN h.hit - 2 AND h.hit + 2),
-         |p AS (SELECT doc_id, hit,
-         |    max(CASE WHEN delta = -2 THEN w END) AS m_n2,
-         |    max(CASE WHEN delta = -1 THEN w END) AS m_n1,
-         |    max(CASE WHEN delta = 0 THEN w END) AS m_0,
-         |    max(CASE WHEN delta = 1 THEN w END) AS m_p1,
-         |    max(CASE WHEN delta = 2 THEN w END) AS m_p2
-         |  FROM x GROUP BY 1, 2)
-         |SELECT doc_id, CAST(hit - 1 AS BIGINT) AS hit_pos,
-         |  concat_ws(' ', m_n2, m_n1, m_0, m_p1, m_p2) AS snippet
-         |FROM p""".stripMargin,
-
-    // q137: q127's TVD math over the category grid (windows are fine
-    // oracle-side; the Spark plan broadcasts 1-row totals instead)
-    "q137_category_drift" ->
-      s"""WITH rc AS (SELECT event_type AS category, count(*) AS n_ref
-         |  FROM events WHERE user_id % 2 = 0 GROUP BY 1),
-         |cc AS (SELECT event_type AS category, count(*) AS n_cur
-         |  FROM events WHERE user_id % 2 = 1 GROUP BY 1),
-         |j AS (SELECT coalesce(rc.category, cc.category) AS category,
-         |    coalesce(n_ref, 0) AS n_ref, coalesce(n_cur, 0) AS n_cur
-         |  FROM rc FULL JOIN cc ON rc.category = cc.category),
-         |t0 AS (SELECT *, CAST(sum(n_ref) OVER () AS HUGEINT) AS nr,
-         |    CAST(sum(n_cur) OVER () AS HUGEINT) AS nc FROM j),
-         |t AS (SELECT *, sum(abs(CAST(n_ref AS HUGEINT) * nc -
-         |    CAST(n_cur AS HUGEINT) * nr)) OVER () AS tvd_num FROM t0)
-         |SELECT category, n_ref, n_cur,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "n_ref", "nr", 6)} AS share_ref_e6,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "n_cur", "nc", 6)} AS share_cur_e6,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "tvd_num", "2 * nr * nc", 6)} AS tvd_e6
-         |FROM t""".stripMargin,
-
-    // q138: the shared exact-pair CTE as the edge set; identical hash
-    // ring (md5 order), WRAPPED rank-offset candidates (r11 advice:
-    // successor rank modulo n, so tail nodes probe the ring head and
-    // every node emits exactly ringWidth candidates), anti-join, keep-2
-    "q138_negative_edges" ->
-      s"""WITH ${lshPairCtes("0.45")},
-         |ring AS (SELECT vec_id AS id,
-         |    row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-         |      vec_id) AS rn
-         |  FROM embeddings),
-         |cand AS (SELECT least(a.id, b.id) AS id_a,
-         |    greatest(a.id, b.id) AS id_b, a.id AS src,
-         |    o.off AS ring_dist
-         |  FROM ring a
-         |  CROSS JOIN (SELECT count(*) AS n FROM ring) c
-         |  CROSS JOIN (SELECT unnest([1, 2, 3]) AS off) o
-         |  JOIN ring b ON b.rn = ((a.rn + o.off - 1) % c.n) + 1
-         |    AND b.id <> a.id),
-         |surv AS (SELECT c.* FROM cand c
-         |  LEFT JOIN p ON p.id_a = c.id_a AND p.id_b = c.id_b
-         |  WHERE p.id_a IS NULL),
-         |dd AS (SELECT *, row_number() OVER (PARTITION BY src, id_a,
-         |    id_b ORDER BY ring_dist) AS dn FROM surv),
-         |k AS (SELECT *, row_number() OVER (PARTITION BY src
-         |    ORDER BY ring_dist) AS rk FROM dd WHERE dn = 1)
-         |SELECT id_a, id_b, CAST(ring_dist AS BIGINT) AS ring_dist
-         |FROM k WHERE rk <= 2""".stripMargin,
-
-    // q139: NULL-excluded distinct tuple counts, one pass, unpivoted
-    "q139_functional_deps" -> {
-      def pair(i: Int, a: String, b: String) =
-        s"""count(DISTINCT CASE WHEN $a IS NOT NULL AND $b IS NOT NULL
-           |      THEN $a END) AS nd$i,
-           |    count(DISTINCT CASE WHEN $a IS NOT NULL AND $b IS NOT NULL
-           |      THEN ($a, $b) END) AS np$i""".stripMargin
-      def row(i: Int, a: String, b: String) =
-        s"""SELECT '$a' AS determinant, '$b' AS dependent, nd$i AS n_det,
-           |  np$i AS n_pairs, np$i - nd$i AS n_violations,
-           |  np$i = nd$i AS fd_holds FROM a""".stripMargin
-      s"""WITH a AS (SELECT
-         |    ${pair(0, "o_orderkey", "o_custkey")},
-         |    ${pair(1, "o_custkey", "o_orderstatus")},
-         |    ${pair(2, "o_orderstatus", "o_orderpriority")}
-         |  FROM orders)
-         |${row(0, "o_orderkey", "o_custkey")}
-         |UNION ALL ${row(1, "o_custkey", "o_orderstatus")}
-         |UNION ALL ${row(2, "o_orderstatus", "o_orderpriority")}"""
-        .stripMargin
-    },
-
-    // q140: identical per-group/pooled ranks (value + id total order),
-    // the same round((r-1)(N-1)/(n-1)) mapping in HUGEINT, value
-    // picked AT the mapped rank (multiset property — tie-order free)
-    "q140_quantile_normalize" ->
-      """WITH b AS (SELECT l_orderkey, l_linenumber, l_returnflag,
-        |    CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS units
-        |  FROM lineitem),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY l_returnflag
-        |      ORDER BY units, l_orderkey, l_linenumber) AS r,
-        |    count(*) OVER (PARTITION BY l_returnflag) AS n FROM b),
-        |p AS (SELECT units AS pv, row_number() OVER (ORDER BY units)
-        |    AS pr FROM b),
-        |nt AS (SELECT CAST(count(*) AS HUGEINT) AS N FROM b),
-        |m AS (SELECT r.*, CASE WHEN n > 1 THEN
-        |      1 + (2 * CAST(r - 1 AS HUGEINT)
-        |        * ((SELECT N FROM nt) - 1) + (n - 1)) // (2 * (n - 1))
-        |    ELSE 1 + (2 * ((SELECT N FROM nt) - 1) + 2) // 4 END AS mm
-        |  FROM r)
-        |SELECT m.l_orderkey, m.l_linenumber, m.l_returnflag, m.units,
-        |  p.pv AS norm_units
-        |FROM m JOIN p ON p.pr = m.mm""".stripMargin,
-
-    // q141: same (ts, event_id) order, lead per user, exact
-    // conditional probability
-    "q141_transition_matrix" ->
-      s"""WITH s AS (SELECT user_id, epoch_ns(ts) AS tsn, event_id,
-         |    event_type FROM events),
-         |pp AS (SELECT event_type AS from_type,
-         |    lead(event_type) OVER (PARTITION BY user_id
-         |      ORDER BY tsn, event_id) AS to_type FROM s),
-         |c AS (SELECT from_type, to_type, count(*) AS n FROM pp
-         |  WHERE to_type IS NOT NULL GROUP BY 1, 2),
-         |t AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS n_from
-         |  FROM c GROUP BY 1)
-         |SELECT c.from_type, c.to_type, c.n, t.n_from,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "c.n", "t.n_from", 6)} AS p_e6
-         |FROM c JOIN t USING (from_type)""".stripMargin,
-
-    // q142: per-group cumulative weight, lower-median predicate
-    // 2·cum >= total, min(v) over crossing rows (tie-order free)
-    "q142_weighted_median" ->
-      """WITH b AS (SELECT l_returnflag,
-        |    CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS v,
-        |    CAST(round(l_quantity, 0) AS BIGINT) AS w FROM lineitem
-        |  WHERE CAST(round(l_quantity, 0) AS BIGINT) > 0),
-        |c AS (SELECT *, CAST(sum(w) OVER (PARTITION BY l_returnflag
-        |      ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
-        |    CAST(sum(w) OVER (PARTITION BY l_returnflag) AS BIGINT)
-        |      AS tw FROM b)
-        |SELECT l_returnflag, min(v) AS wmedian_units,
-        |  max(tw) AS w_total
-        |FROM c WHERE cum * 2 >= tw GROUP BY 1""".stripMargin,
-
-    // q143: Spark's rollup mirrored as the explicit grouping-set
-    // union (no natural NULLs in source/lang, asserted by the gate
-    // data; indicator columns disambiguate regardless)
-    "q143_rollup_stats" ->
-      """WITH b AS (SELECT source, lang, CAST(n_chars AS BIGINT) AS u
-        |  FROM documents)
-        |SELECT source, lang, CAST(0 AS BIGINT) AS g_source,
-        |  CAST(0 AS BIGINT) AS g_lang, count(*) AS n_rows,
-        |  CAST(sum(CAST(u AS HUGEINT)) AS BIGINT) AS sum_units
-        |FROM b GROUP BY 1, 2
-        |UNION ALL SELECT source, NULL, CAST(0 AS BIGINT),
-        |  CAST(1 AS BIGINT), count(*),
-        |  CAST(sum(CAST(u AS HUGEINT)) AS BIGINT)
-        |FROM b GROUP BY 1
-        |UNION ALL SELECT NULL, NULL, CAST(1 AS BIGINT),
-        |  CAST(1 AS BIGINT), count(*),
-        |  CAST(sum(CAST(u AS HUGEINT)) AS BIGINT)
-        |FROM b""".stripMargin,
-
-    // q144: q19's marker-argmax prediction joined to the declared
-    // lang, per-source agreement through the rounding identity
-    "q144_langid_agreement" -> {
-      def cnt(ms: Seq[String]) =
-        s"len(list_filter($wordsSql, w -> ${ms.map(m => s"w = '$m'").mkString(" OR ")}))"
-      val langs = TextAnalysis.langMarkers
-      val cols = langs.map { case (l, ms) => s"${cnt(ms)} AS cnt_$l" }
-        .mkString(",\n  ")
-      val mx = s"greatest(${langs.map(l => s"cnt_${l._1}").mkString(", ")})"
-      val cases = langs.map { case (l, _) =>
-        s"WHEN $mx > 0 AND cnt_$l = $mx THEN '$l'"
-      }.mkString(" ")
-      s"""WITH pred AS (SELECT doc_id, source, lang,
-         |    CASE $cases ELSE 'und' END AS pred_lang
-         |  FROM (SELECT doc_id, source, lang,
-         |    $cols
-         |  FROM documents))
-         |SELECT source, count(*) AS n_docs,
-         |  CAST(sum(CASE WHEN pred_lang = lang THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_match,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "sum(CASE WHEN pred_lang = lang THEN 1 ELSE 0 END)",
-              "count(*)", 4)} AS agreement_e4
-         |FROM pred GROUP BY 1""".stripMargin
-    },
-
-    // q145: identical gap rule (prev null OR gap > 1800), running-sum
-    // session ids, ORDER BY inside string_agg for the path
-    "q145_session_paths" ->
-      """WITH e AS (SELECT user_id, event_id,
-        |    epoch_ns(ts) // 1000000000 AS tss, event_type FROM events),
-        |l AS (SELECT *, lag(tss) OVER (PARTITION BY user_id
-        |    ORDER BY tss, event_id) AS prev FROM e),
-        |s AS (SELECT *, CASE WHEN prev IS NULL OR tss - prev > 1800
-        |    THEN 1 ELSE 0 END AS brk FROM l),
-        |g AS (SELECT *, sum(brk) OVER (PARTITION BY user_id
-        |    ORDER BY tss, event_id ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM s),
-        |p AS (SELECT user_id, sid,
-        |    string_agg(event_type, '>' ORDER BY tss, event_id) AS path
-        |  FROM g GROUP BY 1, 2),
-        |c AS (SELECT path, count(*) AS n_sessions FROM p GROUP BY 1)
-        |SELECT path, n_sessions FROM c
-        |ORDER BY n_sessions DESC, path ASC LIMIT 20""".stripMargin,
-
-    // q146: latest-wins log pick (seq desc, op asc), full-outer apply,
-    // D filtered, U payload coalesced over base
-    "q146_cdc_apply" ->
-      """WITH lg AS (SELECT o_custkey AS c_custkey, o_orderkey AS seq,
-        |    CASE WHEN o_custkey % 13 = 0 THEN 'D' ELSE 'U' END AS op,
-        |    'cust_upd_' || CAST(o_custkey AS VARCHAR) AS l_name,
-        |    o_totalprice AS l_bal
-        |  FROM orders),
-        |lt AS (SELECT * FROM (SELECT *, row_number() OVER
-        |      (PARTITION BY c_custkey ORDER BY seq DESC, op ASC) AS rn
-        |    FROM lg) WHERE rn = 1)
-        |SELECT coalesce(b.c_custkey, l.c_custkey) AS c_custkey,
-        |  CASE WHEN l.op = 'U' THEN l.l_name ELSE b.c_name END AS c_name,
-        |  CASE WHEN l.op = 'U' THEN l.l_bal ELSE b.c_acctbal END
-        |    AS c_acctbal
-        |FROM customer b FULL JOIN lt l ON l.c_custkey = b.c_custkey
-        |WHERE l.op IS NULL OR l.op <> 'D'""".stripMargin,
-
-    // q147: (N² − Σn²)/N² through the wide rounding identity
-    "q147_gini_diversity" ->
-      s"""WITH c AS (SELECT source, lang, count(*) AS n FROM documents
-         |  GROUP BY 1, 2),
-         |g AS (SELECT source, CAST(sum(n) AS HUGEINT) AS N,
-         |    sum(CAST(n AS HUGEINT) * n) AS ss, count(*) AS n_cats
-         |  FROM c GROUP BY 1)
-         |SELECT source, CAST(N AS BIGINT) AS n_rows, n_cats,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "N * N - ss", "N * N", 6)} AS gini_e6
-         |FROM g""".stripMargin,
-
-    // q148: per-user last day vs the corpus max day (data-derived
-    // cutoff)
-    "q148_churn_labels" ->
-      """WITH u AS (SELECT user_id, count(*) AS n_events,
-        |    max(epoch_ns(ts) // 86400000000000) AS last_day
-        |  FROM events GROUP BY 1),
-        |h AS (SELECT max(last_day) AS max_day FROM u)
-        |SELECT user_id, n_events, last_day,
-        |  max_day - last_day AS days_inactive,
-        |  max_day - last_day >= 7 AS churned
-        |FROM u, h""".stripMargin,
-
-    // q149: per-(user,type) lag gaps in floor-divided seconds, q76's
-    // doubled-units median/MAD per type
-    "q149_interarrival" -> {
-      def p50(rnc: String, v: String) =
-        s"""max(CASE WHEN $rnc = CAST(floor(0.5 * CAST(n - 1 AS DOUBLE)) AS BIGINT) + 1 THEN $v END)
-           | + max(CASE WHEN $rnc = CAST(ceil(0.5 * CAST(n - 1 AS DOUBLE)) AS BIGINT) + 1 THEN $v END)""".stripMargin
-      s"""WITH e AS (SELECT user_id, event_type, epoch_ns(ts) AS tsn,
-         |    event_id FROM events),
-         |l AS (SELECT event_type, tsn - lag(tsn) OVER (
-         |    PARTITION BY user_id, event_type ORDER BY tsn, event_id)
-         |      AS gap_ns FROM e),
-         |g AS (SELECT event_type, gap_ns // 1000000000 AS u FROM l
-         |  WHERE gap_ns IS NOT NULL),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY event_type
-         |      ORDER BY u) AS rn,
-         |    count(*) OVER (PARTITION BY event_type) AS n FROM g),
-         |m AS (SELECT event_type, ${p50("rn", "u")} AS med2
-         |  FROM r GROUP BY 1),
-         |d AS (SELECT r.event_type, r.u, r.n,
-         |    abs(r.u * 2 - m.med2) AS dev2
-         |  FROM r JOIN m USING (event_type)),
-         |d2 AS (SELECT *, row_number() OVER (PARTITION BY event_type
-         |    ORDER BY dev2) AS drn FROM d),
-         |md AS (SELECT event_type, ${p50("drn", "dev2")} AS mad4
-         |  FROM d2 GROUP BY 1)
-         |SELECT g.event_type, count(*) AS n_gaps, m.med2, md.mad4
-         |FROM g JOIN m USING (event_type) JOIN md USING (event_type)
-         |GROUP BY 1, 3, 4""".stripMargin
-    },
-
-    // q150: same lag rule; kept rows pass through raw
-    "q150_throttle" -> throttleOracleSql,
-
-    // q243: the streaming state machine reproduces the batch rule
-    // row-for-row (time-ordered feed) — SAME oracle as q150
-    "q243_stream_throttle" -> throttleOracleSql,
-
-    // q151: identical e6 quantization, exact HUGEINT norms; empty
-    // vectors survive via the left join
-    "q151_embedding_qa" ->
-      """WITH u AS (SELECT vec_id,
-        |    CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000, 0)
-        |      AS BIGINT) AS u
-        |  FROM embeddings),
-        |s AS (SELECT vec_id, count(*) AS n_dims,
-        |    CAST(sum(CAST(u AS HUGEINT) * u) AS BIGINT) AS norm2_e12
-        |  FROM u GROUP BY 1)
-        |SELECT e.vec_id, coalesce(s.n_dims, 0) AS n_dims,
-        |  coalesce(s.norm2_e12, 0) AS norm2_e12,
-        |  coalesce(s.norm2_e12, 0) = 0 AS is_zero,
-        |  coalesce(s.n_dims, 0) = 0 AS is_empty
-        |FROM embeddings e LEFT JOIN s ON s.vec_id = e.vec_id"""
-        .stripMargin,
-
-    // q152: the shared hist CTE filtered at the corpus midpoint
-    // (floor-divided, data-derived)
-    "q152_scd2_asof" ->
-      s"""WITH $scd2Ctes,
-         |b AS (SELECT (min(epoch_ns(ts)) + max(epoch_ns(ts))) // 2
-         |    AS t FROM events)
-         |SELECT user_id, version, value AS value_at_t, valid_from_ns
-         |FROM hist, b
-         |WHERE valid_from_ns <= t
-         |  AND (valid_to_ns IS NULL OR valid_to_ns > t)""".stripMargin,
-
-    // q154: identical lift rational (den = df always >= 1), per-doc
-    // row_number pick
-    "q154_doc_keywords" ->
-      s"""WITH t AS (SELECT doc_id, unnest($wordsSql) AS w FROM documents),
-         |tfs AS (SELECT doc_id, w, count(*) AS tf FROM t GROUP BY 1, 2),
-         |dfq AS (SELECT w, count(*) AS df FROM tfs GROUP BY 1
-         |  HAVING count(*) >= 2),
-         |nd AS (SELECT CAST(count(*) AS HUGEINT) AS n FROM documents),
-         |s AS (SELECT tfs.doc_id, tfs.w AS term, tfs.tf, dfq.df,
-         |    CAST((CAST(tfs.tf AS HUGEINT) * (SELECT n FROM nd)
-         |        * 2000000 + dfq.df)
-         |      // (2 * CAST(dfq.df AS HUGEINT)) AS BIGINT) AS lift_e6
-         |  FROM tfs JOIN dfq ON dfq.w = tfs.w),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY doc_id
-         |    ORDER BY lift_e6 DESC, term ASC) AS rk FROM s)
-         |SELECT doc_id, term, tf, df, lift_e6, CAST(rk AS BIGINT) AS rk
-         |FROM r WHERE rk <= 3""".stripMargin,
-
-    // q155: per-relation orphan accounting via NOT EXISTS; NULL child
-    // keys counted separately (unlinked, not dangling)
-    "q155_ref_integrity" -> {
-      def rel(name: String, child: String, ck: String, parent: String,
-          pk: String) =
-        s"""SELECT '$name' AS relation,
-           |  (SELECT count(*) FROM $child) AS n_child_rows,
-           |  (SELECT count(*) FROM $child WHERE $ck IS NULL)
-           |    AS n_null_keys,
-           |  (SELECT count(*) FROM $child c WHERE c.$ck IS NOT NULL
-           |    AND NOT EXISTS (SELECT 1 FROM $parent p
-           |      WHERE p.$pk = c.$ck)) AS n_orphans""".stripMargin
-      def row(name: String, child: String, ck: String, parent: String,
-          pk: String) =
-        s"""SELECT relation, n_child_rows, n_null_keys, n_orphans,
-           |  ${graft.functions.ExactRound.ratioScaledSql(
-              "n_orphans", "n_child_rows", 6)} AS orphan_share_e6
-           |FROM (${rel(name, child, ck, parent, pk)})""".stripMargin
-      s"""${row("orders->customer", "orders", "o_custkey",
-          "customer", "c_custkey")}
-         |UNION ALL ${row("lineitem->orders", "lineitem", "l_orderkey",
-          "orders", "o_orderkey")}
-         |UNION ALL ${row("lineitem->part", "lineitem", "l_partkey",
-          "part", "p_partkey")}""".stripMargin
-    },
-
-    // q157: the shared hist CTE + DuckDB's native backward ASOF
-    // (greatest valid_from <= event ts per user)
-    "q157_temporal_dim_join" ->
-      s"""WITH $scd2Ctes,
-         |f AS (SELECT event_id, user_id, epoch_ns(ts) AS tsn
-         |  FROM events WHERE event_type = 'purchase')
-         |SELECT f.event_id, f.user_id, h.version AS state_version,
-         |  h.value AS state_value
-         |FROM f ASOF LEFT JOIN hist h
-         |  ON f.user_id = h.user_id AND f.tsn >= h.valid_from_ns"""
-        .stripMargin,
-
-    // q158: identical (units desc, doc asc) cumulative order; band
-    // test on the PREVIOUS cumulative (the row that crosses a
-    // boundary belongs to the band it starts in), HUGEINT cross
-    // products
-    "q158_abc_classes" ->
-      """WITH toks AS (SELECT source, doc_id,
-        |    CAST(len(regexp_extract_all(lower(text),
-        |      '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT) AS units
-        |  FROM documents),
-        |c AS (SELECT source, doc_id, units,
-        |    CAST(sum(units) OVER (PARTITION BY source
-        |      ORDER BY units DESC, doc_id ASC
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_units,
-        |    CAST(sum(units) OVER (PARTITION BY source) AS BIGINT)
-        |      AS total_units
-        |  FROM toks)
-        |SELECT source, doc_id, units, cum_units, total_units,
-        |  CASE WHEN CAST(cum_units - units AS HUGEINT) * 1000
-        |         < CAST(total_units AS HUGEINT) * 800 THEN 'A'
-        |       WHEN CAST(cum_units - units AS HUGEINT) * 1000
-        |         < CAST(total_units AS HUGEINT) * 950 THEN 'B'
-        |       ELSE 'C' END AS abc_class
-        |FROM c""".stripMargin,
-
-    // q159: md5-prefix64 reconstructed per value by hex-nibble
-    // arithmetic (hi/lo 32-bit lanes), HUGEINT sums mod 2^62
-    "q159_column_checksums" -> {
-      val mod = 1L << 62
-      def one(c: String) = {
-        val md5c = s"md5(CAST($c AS VARCHAR))"
-        def lane(from: Int) =
-          s"""CAST(coalesce(sum(CASE WHEN $c IS NOT NULL THEN
-             |    CAST(${hex32Sql(md5c, from)} AS HUGEINT) END), 0)
-             |  % $mod AS BIGINT)""".stripMargin
-        s"""SELECT '$c' AS col_name,
-           |  CAST(count($c) AS BIGINT) AS n_values,
-           |  ${lane(1)} AS checksum_hi,
-           |  ${lane(9)} AS checksum_lo
-           |FROM customer""".stripMargin
-      }
-      s"""${one("c_custkey")}
-         |UNION ALL ${one("c_name")}
-         |UNION ALL ${one("c_mktsegment")}""".stripMargin
-    },
-
-    // q185: q159's hex-lane mirrors grouped by the low-32-bit bucket
-    "q185_bucket_checksums" -> {
-      val mod = 1L << 62
-      val bucket =
-        s"(${hex32Sql("md5(CAST(c_custkey AS VARCHAR))", 9)}) % 16"
-      def one(c: String) = {
-        val md5c = s"md5(CAST($c AS VARCHAR))"
-        def lane(from: Int) =
-          s"""CAST(coalesce(sum(CASE WHEN $c IS NOT NULL THEN
-             |    CAST(${hex32Sql(md5c, from)} AS HUGEINT) END), 0)
-             |  % $mod AS BIGINT)""".stripMargin
-        s"""SELECT $bucket AS bucket, '$c' AS col_name,
-           |  CAST(count($c) AS BIGINT) AS n_values,
-           |  ${lane(1)} AS checksum_hi,
-           |  ${lane(9)} AS checksum_lo
-           |FROM customer GROUP BY 1""".stripMargin
-      }
-      s"""${one("c_custkey")}
-         |UNION ALL ${one("c_name")}
-         |UNION ALL ${one("c_mktsegment")}""".stripMargin
-    },
-
-    // q160: two stacked counts; no tokenization drift possible (the
-    // shared words fragment)
-    "q160_freq_of_freqs" ->
-      s"""WITH t AS (SELECT unnest($wordsSql) AS w FROM documents),
-         |cc AS (SELECT w, count(*) AS cnt FROM t GROUP BY 1)
-         |SELECT cnt AS c, count(*) AS n_types FROM cc GROUP BY 1"""
-        .stripMargin,
-
-    // q161: recursive components over the MIRRORED-LSH edge set (r12;
-    // formerly the exact-pair CTE) -> cluster sizes -> q128's
-    // cumulative-weight stride draw over representatives
-    "q161_cluster_weighted_sample" ->
-      s"""WITH RECURSIVE ${lshPairCtes("0.45")},
-         |cl(node, r) AS (SELECT a, b FROM e
-         |  UNION SELECT cl.node, e2.b FROM cl JOIN e e2 ON cl.r = e2.a),
-         |cc AS (SELECT node, least(node, min(r)) AS component
-         |  FROM cl GROUP BY node),
-         |sz AS (SELECT coalesce(cc.component, emb.vec_id) AS rep,
-         |    count(*) AS cluster_size
-         |  FROM embeddings emb LEFT JOIN cc ON cc.node = emb.vec_id
-         |  GROUP BY 1),
-         |b AS (SELECT rep, cluster_size,
-         |    md5(CAST(rep AS VARCHAR)) AS h FROM sz),
-         |c AS (SELECT rep, cluster_size,
-         |    CAST(sum(cluster_size) OVER (ORDER BY h, rep
-         |      ROWS UNBOUNDED PRECEDING) AS HUGEINT) AS cum,
-         |    CAST(sum(cluster_size) OVER () AS HUGEINT) AS tot FROM b)
-         |SELECT rep, cluster_size AS weight,
-         |  CAST(cum AS BIGINT) AS cum_w,
-         |  CAST((cum * 100) // tot
-         |    - ((cum - cluster_size) * 100) // tot AS BIGINT) AS n_picks
-         |FROM c
-         |WHERE (cum * 100) // tot > ((cum - cluster_size) * 100) // tot"""
-        .stripMargin,
-
-    // q162: same floor-division day/hour bucketing, +4 dow offset,
-    // shares through the rounding identity
-    "q162_activity_heatmap" ->
-      s"""WITH c AS (SELECT event_type,
-         |    (epoch_ns(ts) // 86400000000000 + 4) % 7 AS dow,
-         |    (epoch_ns(ts) // 3600000000000) % 24 AS hour,
-         |    count(*) AS n
-         |  FROM events GROUP BY 1, 2, 3),
-         |t AS (SELECT *, CAST(sum(n) OVER (PARTITION BY event_type)
-         |    AS BIGINT) AS n_type FROM c)
-         |SELECT event_type, dow, hour, n, ${
-           graft.functions.ExactRound.ratioScaledSql("n", "n_type", 6)
-         } AS share_e6 FROM t""".stripMargin,
-
-    // q163: samples reconstructed from ASCII char codes (le16 pairs,
-    // high byte <= 0x7f so no sign wrap), 8-sample frames, exact
-    // HUGEINT energies
-    "q163_audio_frames" ->
-      """WITH d AS (SELECT doc_id, substring(text, 1, 64) AS t
-        |  FROM documents
-        |  WHERE length(text) >= 64 AND strlen(text) = length(text)),
-        |s AS (SELECT doc_id, CAST(i AS BIGINT) AS sidx,
-        |    ascii(substring(t, CAST(2 * i + 1 AS INTEGER), 1))
-        |      + 256 * ascii(substring(t, CAST(2 * i + 2 AS INTEGER), 1))
-        |      AS v
-        |  FROM d, (SELECT unnest(range(0, 32)) AS i) idx),
-        |f AS (SELECT doc_id, sidx // 8 AS frame,
-        |    count(*) AS n_samples,
-        |    CAST(sum(CAST(v AS HUGEINT) * v) AS BIGINT) AS energy,
-        |    CAST(max(v) AS BIGINT) AS peak
-        |  FROM s GROUP BY 1, 2)
-        |SELECT doc_id, frame, n_samples, energy, peak FROM f"""
-        .stripMargin,
-
-    // q164: value at rank ceil(q·n/1000) — identical rank pick per
-    // permille, conditional max
-    "q164_quantile_grid" -> {
-      def pick(q: Int) =
-        s"""max(CASE WHEN rn = (n * $q + 999) // 1000 THEN u END)
-           |    AS p${q}_units""".stripMargin
-      s"""WITH c AS (SELECT l_returnflag,
-         |    CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS u
-         |  FROM lineitem),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY l_returnflag
-         |      ORDER BY u) AS rn,
-         |    count(*) OVER (PARTITION BY l_returnflag) AS n FROM c)
-         |SELECT l_returnflag, count(*) AS n,
-         |  ${pick(250)},
-         |  ${pick(500)},
-         |  ${pick(750)},
-         |  ${pick(950)}
-         |FROM r GROUP BY 1""".stripMargin
-    },
-
-    // q165: same BIGINT string rendering for the leading digit
-    "q165_first_digit" ->
-      s"""WITH v AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2))
-         |      * 100 AS BIGINT) AS v FROM orders),
-         |d AS (SELECT CAST(substring(CAST(v AS VARCHAR), 1, 1)
-         |    AS BIGINT) AS digit, count(*) AS n
-         |  FROM v WHERE v > 0 GROUP BY 1),
-         |t AS (SELECT *, CAST(sum(n) OVER () AS BIGINT) AS n_total
-         |  FROM d)
-         |SELECT digit, n, n_total, ${
-           graft.functions.ExactRound.ratioScaledSql("n", "n_total", 6)
-         } AS share_e6 FROM t""".stripMargin,
-
-    // q166: identical per-position character compare (no
-    // split-semantics dependence on either side)
-    "q166_compressibility" ->
-      s"""WITH t AS (SELECT doc_id, text, i FROM documents,
-         |    unnest(range(1, length(text) + 1)) r(i)
-         |  WHERE length(text) > 0),
-         |s AS (SELECT doc_id, count(*) AS n,
-         |    CAST(sum(CASE WHEN i > 1
-         |        AND substring(text, CAST(i AS INTEGER), 1)
-         |          <> substring(text, CAST(i - 1 AS INTEGER), 1)
-         |      THEN 1 ELSE 0 END) + 1 AS BIGINT) AS rle
-         |  FROM t GROUP BY 1)
-         |SELECT d.doc_id, coalesce(s.n, 0) AS n_chars_obs,
-         |  coalesce(s.rle, 0) AS rle_len,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "coalesce(s.rle, 0)", "coalesce(s.n, 0)", 4)}
-         |    AS rle_ratio_e4
-         |FROM documents d LEFT JOIN s ON s.doc_id = d.doc_id"""
-        .stripMargin,
-
-    // q167: q107's distinct-per-doc 3-gram stream, document-frequency
-    // counts, 1-row conditional sums
-    "q167_dup_gram_share" ->
-      s"""WITH t AS (SELECT doc_id, $wordsSql AS ws FROM documents),
-         |sh AS (SELECT doc_id, unnest(list_distinct(
-         |    [ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-         |     for i in range(1, len(ws)-1)])) AS shingle
-         |  FROM t WHERE len(ws) >= 3),
-         |f AS (SELECT shingle, count(*) AS dfc FROM sh GROUP BY 1)
-         |SELECT count(*) AS n_grams_distinct,
-         |  CAST(sum(dfc) AS BIGINT) AS n_instances,
-         |  CAST(sum(CASE WHEN dfc >= 2 THEN dfc ELSE 0 END) AS BIGINT)
-         |    AS n_dup_instances,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "sum(CASE WHEN dfc >= 2 THEN dfc ELSE 0 END)",
-              "sum(dfc)", 6)} AS dup_share_e6
-         |FROM f""".stripMargin,
-
-    // q168: count-table equi-join, HUGEINT products, totals appended
-    "q168_join_fanout" ->
-      """WITH lc AS (SELECT l_partkey AS key, count(*) AS n_left
-        |  FROM lineitem GROUP BY 1),
-        |rc AS (SELECT l_partkey AS key, count(*) AS n_right
-        |  FROM lineitem GROUP BY 1),
-        |j AS (SELECT lc.key, n_left, n_right,
-        |    CAST(n_left AS HUGEINT) * n_right AS raw_out
-        |  FROM lc JOIN rc USING (key)),
-        |t AS (SELECT CAST(least(coalesce(sum(raw_out), 0),
-        |      9223372036854775807) AS BIGINT) AS est_total_rows,
-        |    count(*) AS n_matched_keys FROM j)
-        |SELECT j.key, j.n_left, j.n_right,
-        |  CAST(least(raw_out, 9223372036854775807) AS BIGINT) AS n_out,
-        |  t.est_total_rows, t.n_matched_keys
-        |FROM j, t ORDER BY raw_out DESC, key ASC LIMIT 10""".stripMargin,
-
-    // q169: the BATCH recomputation of the watermark run — the same
-    // deterministic batch assignment (on-time halves by value slice,
-    // late = eid % 10), then the admission rule a late row actually
-    // faces in Spark's micro-batch model, pinned empirically against
-    // the engine run and encoding BOTH subtleties:
-    //  (1) late-input filtering uses the PREVIOUS batch's watermark —
-    //      each batch filters input with the watermark computed before
-    //      the prior batch ran, and only state eviction/emission uses
-    //      the freshly-advanced one — so the late batch (3rd file)
-    //      filters against max(batch 0) − 1800, NOT max(batches 0∪1);
-    //  (2) the filter tests the row's WINDOW END, not its raw event
-    //      time: a row in a still-open window is mergeable even when
-    //      the row itself is older than the watermark.
-    // Sentinels never appear here (they are harness rows, not
-    // events), mirroring the engine gate's guarantee that their
-    // windows never emit.
-    "q169_watermark_window" ->
-      """WITH ev AS (SELECT event_type,
-        |    epoch_ns(ts) // 1000000000 AS tsec,
-        |    CAST(round(value * 100, 0) AS BIGINT) AS v,
-        |    event_id AS eid
-        |  FROM events),
-        |rng AS (SELECT min(tsec) AS mn, max(tsec) AS mx FROM ev
-        |  WHERE eid % 10 <> 0),
-        |b AS (SELECT event_type, tsec, v,
-        |    CASE WHEN eid % 10 = 0 THEN 2
-        |         ELSE (tsec - mn) * 2 // (mx - mn + 1) END AS bb
-        |  FROM ev, rng),
-        |w AS (SELECT max(tsec) - 1800 AS wl FROM b WHERE bb = 0),
-        |kept AS (SELECT event_type, tsec, v FROM b, w
-        |  WHERE bb IN (0, 1)
-        |     OR (tsec // 3600) * 3600 + 3600 > wl)
-        |SELECT (tsec // 3600) * 3600 AS win_start, event_type,
-        |  count(*) AS n_events, CAST(sum(v) AS BIGINT) AS value_sum
-        |FROM kept GROUP BY 1, 2""".stripMargin,
-
-    // q179: the mirrored bipartite bucket join — candidates need a
-    // batch endpoint (a.vec_id % 17 = 0), then the same candidate-
-    // restricted cosine verify at 0.3
-    "q179_incremental_embedding_neardup" ->
-      s"""WITH ${lshProbeCtes("0.3", "a.vec_id % 17 = 0")}
-         |SELECT id_a, id_b, cosine FROM p""".stripMargin,
-
-    // q184: identical string construction and truncation. PINNED
-    // PERMISSIVE reality: Spark returns a NON-null struct with
-    // all-null fields for a malformed record, so the flag keys on the
-    // required field k; DuckDB mirrors with json_valid (the truncated
-    // record is invalid JSON, all extractions null, flag true)
-    "q184_json_ingest" ->
-      """WITH j AS (SELECT c_custkey,
-        |    '{"k":' || CAST(c_custkey AS VARCHAR) || ',"n":"' ||
-        |      c_name || '","seg":"' || c_mktsegment || '"}' AS js
-        |  FROM customer),
-        |r AS (SELECT c_custkey,
-        |    CASE WHEN c_custkey % 50 = 0
-        |         THEN substring(js, 1, length(js) - 1) ELSE js END AS raw
-        |  FROM j)
-        |SELECT c_custkey,
-        |  CASE WHEN json_valid(raw)
-        |       THEN CAST(raw ->> 'k' AS BIGINT) END AS k,
-        |  CASE WHEN json_valid(raw) THEN raw ->> 'n' END AS n,
-        |  CASE WHEN json_valid(raw) THEN raw ->> 'seg' END AS seg,
-        |  NOT json_valid(raw) AS is_corrupt
-        |FROM r""".stripMargin,
-
-    // q183: identical window rank + filter
-    "q183_group_topk" ->
-      """SELECT o_orderpriority, o_orderkey, price_c, rnk FROM (
-        |  SELECT o_orderpriority, o_orderkey,
-        |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-        |      AS price_c,
-        |    CAST(row_number() OVER (PARTITION BY o_orderpriority
-        |      ORDER BY CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-        |          AS BIGINT) DESC,
-        |        o_orderkey ASC) AS BIGINT) AS rnk
-        |  FROM orders)
-        |WHERE rnk <= 3""".stripMargin,
-
-    // q178: same positive-weight group table, HUGEINT Σw²/total²
-    // rational for HHI, top-4 by (weight desc, group asc)
-    "q178_source_concentration" -> {
-      val rs = graft.functions.ExactRound
-      s"""WITH c AS (SELECT source AS g,
-         |    CAST(sum(n_chars) AS BIGINT) AS w
-         |  FROM documents GROUP BY 1 HAVING sum(n_chars) > 0),
-         |t AS (SELECT count(*) AS n_groups,
-         |    CAST(sum(w) AS BIGINT) AS total_units,
-         |    sum(CAST(w AS HUGEINT) * w) AS sumsq FROM c),
-         |tp AS (SELECT coalesce(max(w), 0) AS top1,
-         |    CAST(coalesce(sum(w), 0) AS BIGINT) AS top4
-         |  FROM (SELECT w FROM c ORDER BY w DESC, g ASC LIMIT 4))
-         |SELECT n_groups, total_units,
-         |  ${rs.ratioScaledSql("sumsq",
-              "CAST(total_units AS HUGEINT) * total_units", 6)} AS hhi_e6,
-         |  ${rs.ratioScaledSql("top1", "total_units", 6)} AS cr1_e6,
-         |  ${rs.ratioScaledSql("top4", "total_units", 6)} AS cr4_e6
-         |FROM t, tp""".stripMargin
-    },
-
-    // q177/q181: the full interval join minus what streaming loses to
-    // lateness/eviction. Pinned rules (engine-diffed to zero on both
-    // the inner and left-outer runs):
-    //  - INPUT filtering drops a row below the TWO-batch-lagged
-    //    global watermark W2(k) = min(maxL, maxR through k-2) − 1800
-    //    on the row's own event time (the q169/q175 "previous
-    //    watermark" rule — no gap allowance: the predicate is the
-    //    event-time column vs the global watermark);
-    //  - STATE eviction uses the freshly-advanced one-batch-lagged
-    //    W1(j): a left row dies once l_ts + gap < W1(j) (no
-    //    admissible right can match it), a right row once
-    //    r_ts < W1(j). Both are monotone, so "alive at the match
-    //    batch k*" collapses to l_ts >= W2(k*) − gap / r_ts >= W2(k*)
-    //    (W1(k*−1) = W2(k*)), and "ever evicted" collapses to the
-    //    final W1(3);
-    //  - a LEFT-OUTER null row emits for an admitted left row with NO
-    //    emitted match once eviction reaches it (l_ts + gap < W1(3)).
-    "q177_stream_interval_join" ->
-      s"""WITH $streamJoinCtes
-         |SELECT uid, l_ts, r_ts FROM mm""".stripMargin,
-
-    "q181_stream_left_join" ->
-      s"""WITH $streamJoinCtes,
-         |wfin AS (SELECT least(
-         |      (SELECT max(pmax) FROM pl WHERE b <= 2),
-         |      (SELECT max(pmax) FROM pr WHERE b <= 2)) - 1800 AS wv),
-         |nulls AS (SELECT l.uid, l.ts AS l_ts FROM l
-         |  LEFT JOIN w wa ON wa.k = l.b
-         |  WHERE (wa.wv IS NULL OR l.ts >= wa.wv)
-         |    AND NOT EXISTS (SELECT 1 FROM mm
-         |      WHERE mm.uid = l.uid AND mm.l_ts = l.ts)
-         |    AND l.ts + 3600 < (SELECT wv FROM wfin))
-         |SELECT uid, l_ts, r_ts FROM mm
-         |UNION ALL
-         |SELECT uid, l_ts, CAST(NULL AS BIGINT) AS r_ts FROM nulls"""
-        .stripMargin,
-
-    // q209: q181's rules applied to BOTH sides — a right-null row
-    // emits for an admitted left row with no emitted match once
-    // l_ts + gap < W1(3); a left-null row for an admitted right row
-    // with no emitted match once r_ts < W1(3) (the right-side
-    // eviction rule has no gap term)
-    "q209_stream_full_join" ->
-      s"""WITH $streamJoinCtes,
-         |wfin AS (SELECT least(
-         |      (SELECT max(pmax) FROM pl WHERE b <= 2),
-         |      (SELECT max(pmax) FROM pr WHERE b <= 2)) - 1800 AS wv),
-         |lnulls AS (SELECT l.uid, l.ts AS l_ts FROM l
-         |  LEFT JOIN w wa ON wa.k = l.b
-         |  WHERE (wa.wv IS NULL OR l.ts >= wa.wv)
-         |    AND NOT EXISTS (SELECT 1 FROM mm
-         |      WHERE mm.uid = l.uid AND mm.l_ts = l.ts)
-         |    AND l.ts + 3600 < (SELECT wv FROM wfin)),
-         |rnulls AS (SELECT r.uid, r.ts AS r_ts FROM r
-         |  LEFT JOIN w wb ON wb.k = r.b
-         |  WHERE (wb.wv IS NULL OR r.ts >= wb.wv)
-         |    AND NOT EXISTS (SELECT 1 FROM mm
-         |      WHERE mm.uid = r.uid AND mm.r_ts = r.ts)
-         |    AND r.ts < (SELECT wv FROM wfin))
-         |SELECT uid, l_ts, r_ts FROM mm
-         |UNION ALL
-         |SELECT uid, l_ts, CAST(NULL AS BIGINT) AS r_ts FROM lnulls
-         |UNION ALL
-         |SELECT uid, CAST(NULL AS BIGINT) AS l_ts, r_ts FROM rnulls"""
-        .stripMargin,
-
-    // q182: q78's batch sessionization, minus the sessions the
-    // timeout never reached — a user's FINAL session emits only if
-    // its timeout timestamp (end + gap) fell below the final
-    // watermark (global max event time − 1800). Pinned empirically:
-    // unlike the join operators, flatMapGroupsWithState timeouts DO
-    // get a post-final-file pass under AvailableNow, so the final
-    // watermark covers the last batch's data (13 tail sessions stay
-    // open at sf0.01 — the gated difference vs q78's sentinel flush).
-    // Every non-final session closed in-stream via the gap rule.
-    "q182_session_timeout" ->
-      """WITH e AS (SELECT user_id, event_id,
-        |    epoch_ns(ts) // 1000000000 AS ts_s FROM events),
-        |s AS (SELECT *, CASE WHEN lag(ts_s) OVER w IS NULL
-        |        OR ts_s - lag(ts_s) OVER w > 1800 THEN 1 ELSE 0 END AS is_new
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_s, event_id)),
-        |s2 AS (SELECT *, CAST(sum(is_new) OVER (PARTITION BY user_id
-        |    ORDER BY ts_s, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT)
-        |      AS session_seq FROM s),
-        |sess AS (SELECT user_id, min(ts_s) AS session_start,
-        |    max(ts_s) AS session_end, count(*) AS n_events
-        |  FROM s2 GROUP BY user_id, session_seq),
-        |f AS (SELECT *, max(session_end)
-        |    OVER (PARTITION BY user_id) AS umax FROM sess),
-        |mx AS (SELECT max(ts_s) AS m FROM e)
-        |SELECT user_id, session_start, session_end, n_events
-        |FROM f, mx
-        |WHERE session_end < umax
-        |   OR session_end + 1800 < m - 1800""".stripMargin,
-
-    // q175: the five-batch state machine unrolled — the same
-    // deterministic (user, file)-reduced feed, then per batch k:
-    // admission and eviction both use the TWO-BATCH-LAGGED watermark
-    // (max staged event time through batch k-2, minus 1800 s —
-    // pinned empirically, the q169 "previous watermark" rule applied
-    // to both sides of this operator; batches 0 and 1 run
-    // watermark-free), a row is dropped while its key's LATEST
-    // emitted state is alive (expiry = emitted ts + 1800 >= the
-    // lagged watermark), dropped duplicates do NOT refresh state
-    // expiry, and an evicted key re-emits. Assumes all five staged
-    // files are non-empty (true of the gate tables): a missing file
-    // would renumber Spark's batches but not the oracle's.
-    "q175_watermark_dedup" -> {
-      def wm(k: Int) =
-        s"(SELECT max(pmax) - 1800 FROM p WHERE b <= ${k - 2})"
-      def round_(k: Int) = {
-        val ems = (0 until k)
-          .map(j => s"SELECT uid, ts, $j AS j FROM em$j")
-          .mkString("\n|    UNION ALL ")
-        s"""stb$k AS (SELECT uid, ts FROM (
-           |    SELECT uid, ts, row_number() OVER (PARTITION BY uid
-           |      ORDER BY j DESC) AS rn
-           |    FROM ($ems)) WHERE rn = 1),
-           |em$k AS (SELECT a.uid, a.ts FROM base a
-           |  LEFT JOIN stb$k s ON s.uid = a.uid
-           |    AND s.ts + 1800 >= ${wm(k)}
-           |  WHERE a.b = $k AND a.ts >= ${wm(k)}
-           |    AND s.uid IS NULL)""".stripMargin
-      }
-      s"""WITH ev AS (SELECT user_id AS uid,
-         |    epoch_ns(ts) // 1000000000 AS ts, event_id AS eid
-         |  FROM events),
-         |rng AS (SELECT min(ts) AS mn, max(ts) AS mx FROM ev
-         |  WHERE eid % 10 <> 0),
-         |base AS (SELECT uid,
-         |    CASE WHEN eid % 10 = 0 THEN 4
-         |         ELSE (ts - mn) * 4 // (mx - mn + 1) END AS b,
-         |    min(ts) AS ts
-         |  FROM ev, rng GROUP BY 1, 2),
-         |p AS (SELECT b, max(ts) AS pmax FROM base GROUP BY 1),
-         |em0 AS (SELECT uid, ts FROM base WHERE b = 0),
-         |em1 AS (SELECT a.uid, a.ts FROM base a
-         |  LEFT JOIN em0 s ON s.uid = a.uid
-         |  WHERE a.b = 1 AND s.uid IS NULL),
-         |${round_(2)},
-         |${round_(3)},
-         |${round_(4)}
-         |SELECT uid, ts AS ts_emitted FROM (
-         |  SELECT * FROM em0 UNION ALL SELECT * FROM em1
-         |  UNION ALL SELECT uid, ts FROM em2
-         |  UNION ALL SELECT uid, ts FROM em3
-         |  UNION ALL SELECT uid, ts FROM em4)""".stripMargin
-    },
-
-    // q174: the 16 batched passes unrolled — per pass the same pair
-    // counts, candidate ranking, symbol-disjointness keep rule (NOT
-    // EXISTS over exploded {l, r, lr} triples vs every higher-ranked
-    // candidate), 16-pair adoption, and a list_reduce fold of the
-    // anchored replace applying the batch in kr order before the
-    // next pass counts; global merge_rank numbers (pass, kr)
-    "q174_bpe_merges" -> {
-      val union = (1 to 16).map(k =>
-        s"SELECT $k AS pass, l, r, cnt, kr FROM ba$k")
-        .mkString("\n|  UNION ALL ")
-      s"""WITH ${bpeBatchedCtes(16)}
-         |SELECT row_number() OVER (ORDER BY pass, kr) AS merge_rank,
-         |  pass, l AS left_sym, r AS right_sym, l || r AS merged,
-         |  cnt AS pair_count
-         |FROM ($union)""".stripMargin
-    },
-
-    // q180: the s4 word table (every adopted merge applied) keys the
-    // encode — tokens per distinct word, summed per document through
-    // the same word stream; docs with no words emit zeros
-    "q180_bpe_encode" ->
-      s"""WITH $bpeTrainCtes,
-         |wtok AS (SELECT w,
-         |    CAST(len(string_split(syms, ' ')) AS BIGINT) AS ntok
-         |  FROM s4),
-         |t AS (SELECT doc_id, unnest($wordsSql) AS w FROM documents),
-         |tw AS (SELECT doc_id, count(*) AS n_words,
-         |    CAST(sum(ntok) AS BIGINT) AS n_bpe
-         |  FROM t JOIN wtok USING (w) GROUP BY 1)
-         |SELECT d.doc_id, coalesce(n_words, 0) AS n_words,
-         |  coalesce(n_bpe, 0) AS n_bpe_tokens
-         |FROM documents d LEFT JOIN tw USING (doc_id)""".stripMargin,
-
-    // q173: identical rank/trim arithmetic ((n·1)//10 floor cut on
-    // both engines — positives, so div == //), identical rounding
-    // identity for the mean
-    "q173_trimmed_mean" ->
-      s"""WITH v AS (SELECT l_returnflag,
-         |    CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS u
-         |  FROM lineitem),
-         |r AS (SELECT l_returnflag, u,
-         |    row_number() OVER (PARTITION BY l_returnflag ORDER BY u)
-         |      AS rn,
-         |    count(*) OVER (PARTITION BY l_returnflag) AS n FROM v),
-         |k AS (SELECT * FROM r
-         |  WHERE rn > (n * 1) // 10 AND rn <= n - (n * 1) // 10)
-         |SELECT l_returnflag, CAST(max(n) AS BIGINT) AS n_total,
-         |  count(*) AS n_kept,
-         |  CAST(sum(u) AS BIGINT) AS sum_kept_units,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "sum(u)", "count(*)", 4)} AS trimmed_mean_e4
-         |FROM k GROUP BY 1""".stripMargin,
-
-    // q171: same md5-prefix bench split, exact cosine of every
-    // (corpus, bench) pair, max/count/flag with the threshold on the
-    // e6-ROUNDED cosine (r13: Spark and DuckDB sum the dot product in
-    // different orders — a pair exactly at the threshold must not
-    // flip the hit count between engines)
-    "q171_semantic_decontam" ->
-      """WITH bench AS (SELECT vec_id, embedding FROM embeddings
-        |  WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 2) < '1a'),
-        |corp AS (SELECT vec_id, embedding FROM embeddings
-        |  WHERE NOT substr(md5(CAST(vec_id AS VARCHAR)), 1, 2) < '1a'),
-        |cx AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-        |    CAST(unnest(embedding) AS DOUBLE) AS x FROM corp),
-        |bx AS (SELECT vec_id AS b_id, generate_subscripts(embedding, 1) AS i,
-        |    CAST(unnest(embedding) AS DOUBLE) AS y FROM bench),
-        |cn AS (SELECT vec_id, sum(x * x) AS nn FROM cx GROUP BY 1),
-        |bn AS (SELECT b_id, sum(y * y) AS nn FROM bx GROUP BY 1),
-        |d AS (SELECT cx.vec_id, bx.b_id, sum(x * y) AS dot
-        |  FROM cx JOIN bx USING (i) GROUP BY 1, 2),
-        |c AS (SELECT d.vec_id,
-        |    dot / (sqrt(cn.nn) * sqrt(bn.nn)) AS cos
-        |  FROM d JOIN cn USING (vec_id) JOIN bn USING (b_id))
-        |SELECT vec_id, max(round(cos, 4)) AS max_cosine,
-        |  CAST(sum(CASE WHEN round(cos, 6) >= 0.3 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_bench_hits,
-        |  sum(CASE WHEN round(cos, 6) >= 0.3 THEN 1 ELSE 0 END) > 0
-        |    AS contaminated
-        |FROM c GROUP BY 1""".stripMargin,
-
-    // q170: q82's exact ranked run (round(cos,6) desc, id tie-break)
-    // + the SAME e9 DCG weight / ideal-prefix tables as VALUES
-    // literals (RetrievalEval.dcgWeightsE9 — one Scala derivation for
-    // both engines) + the identical rounding identity for MRR /
-    // recall / nDCG
-    "q170_retrieval_metrics" -> {
-      val wt = graft.operators.RetrievalEval.dcgWeightsE9(10)
-        .zipWithIndex.map { case (w, i) => s"(${i + 1},$w)" }.mkString(",")
-      val ic = graft.operators.RetrievalEval.idcgPrefixE9(10)
-        .zipWithIndex.map { case (s0, i) => s"(${i + 1},$s0)" }.mkString(",")
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv,
-         |    CAST(label AS BIGINT) AS q_lab
-         |  FROM embeddings WHERE vec_id IN (0, 1, 2, 3, 4, 5, 6, 7)),
-         |qx AS (SELECT query_id, generate_subscripts(qv, 1) AS i,
-         |    CAST(unnest(qv) AS DOUBLE) AS y FROM q),
-         |ex AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-         |    CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-         |dots AS (SELECT query_id, vec_id,
-         |    sum(x * y) AS dot, sum(x * x) AS na
-         |  FROM ex JOIN qx USING (i)
-         |  WHERE vec_id <> query_id GROUP BY 1, 2),
-         |nq AS (SELECT query_id, sum(y * y) AS nb FROM qx GROUP BY 1),
-         |r AS (SELECT d.query_id, d.vec_id,
-         |    row_number() OVER (PARTITION BY d.query_id
-         |      ORDER BY round(dot / (sqrt(na) * sqrt(nb)), 6) DESC,
-         |        d.vec_id ASC) AS rk
-         |  FROM dots d JOIN nq USING (query_id)),
-         |run AS (SELECT query_id, vec_id, rk FROM r WHERE rk <= 10),
-         |wt AS (SELECT i, w FROM (VALUES $wt) t(i, w)),
-         |icg AS (SELECT n, s FROM (VALUES $ic) t(n, s)),
-         |lab AS (SELECT vec_id, CAST(label AS BIGINT) AS c_lab
-         |  FROM embeddings),
-         |labc AS (SELECT CAST(label AS BIGINT) AS q_lab,
-         |    count(*) AS n_lab FROM embeddings GROUP BY 1),
-         |per AS (SELECT run.query_id, q.q_lab,
-         |    CAST(sum(CASE WHEN l.c_lab = q.q_lab THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n_rel_at_k,
-         |    CAST(min(CASE WHEN l.c_lab = q.q_lab THEN rk END)
-         |      AS BIGINT) AS first_rel_rank,
-         |    CAST(sum(CASE WHEN l.c_lab = q.q_lab THEN wt.w ELSE 0 END)
-         |      AS BIGINT) AS dcg_e9
-         |  FROM run JOIN q USING (query_id)
-         |    JOIN lab l ON l.vec_id = run.vec_id
-         |    JOIN wt ON wt.i = run.rk
-         |  GROUP BY 1, 2),
-         |fin AS (SELECT per.*,
-         |    greatest(coalesce(n_lab, 1) - 1, 0) AS n_rel_total
-         |  FROM per LEFT JOIN labc USING (q_lab))
-         |SELECT query_id, n_rel_at_k, first_rel_rank,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "1", "first_rel_rank", 6)} AS rr_e6,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "n_rel_at_k", "n_rel_total", 6)} AS recall_e6,
-         |  dcg_e9,
-         |  CASE WHEN n_rel_total > 0 THEN
-         |    ${graft.functions.ExactRound.ratioScaledSql(
-               "dcg_e9", "icg.s", 6)}
-         |  ELSE CAST(0 AS BIGINT) END AS ndcg_e6
-         |FROM fin LEFT JOIN icg ON icg.n = least(n_rel_total, 10)""".stripMargin
-    },
-
-    // q156: q83's card per parity half, q119's diff shape keyed on
-    // source (flags in the sorted compare-column order)
-    "q156_datacard_diff" -> {
-      def card(tag: String, parity: Int) =
-        s"""base$tag AS (SELECT doc_id, source, lang,
-           |    CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT) AS nt,
-           |    CAST(length(text) AS BIGINT) AS nc,
-           |    md5($wsNorm) AS fp
-           |  FROM documents WHERE doc_id % 2 = $parity),
-           |dup$tag AS (SELECT fp FROM base$tag GROUP BY fp
-           |  HAVING count(*) >= 2),
-           |card$tag AS (SELECT source, count(*) AS n_docs,
-           |  CAST(sum(nt) AS BIGINT) AS n_tokens,
-           |  CAST(sum(nc) AS BIGINT) AS n_chars,
-           |  CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-           |  CAST(sum(CASE WHEN d.fp IS NOT NULL THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS n_dup_docs
-           |FROM base$tag LEFT JOIN dup$tag d ON base$tag.fp = d.fp
-           |GROUP BY 1)""".stripMargin
-      s"""WITH ${card("A", 0)},
-         |${card("B", 1)},
-         |j AS (SELECT coalesce(a.source, b.source) AS source,
-         |    a.source IS NOT NULL AS in_old,
-         |    b.source IS NOT NULL AS in_new,
-         |    CASE WHEN a.n_chars IS DISTINCT FROM b.n_chars
-         |      THEN 1 ELSE 0 END AS f_chars,
-         |    CASE WHEN a.n_docs IS DISTINCT FROM b.n_docs
-         |      THEN 1 ELSE 0 END AS f_docs,
-         |    CASE WHEN a.n_dup_docs IS DISTINCT FROM b.n_dup_docs
-         |      THEN 1 ELSE 0 END AS f_dup,
-         |    CASE WHEN a.n_langs IS DISTINCT FROM b.n_langs
-         |      THEN 1 ELSE 0 END AS f_langs,
-         |    CASE WHEN a.n_tokens IS DISTINCT FROM b.n_tokens
-         |      THEN 1 ELSE 0 END AS f_tokens
-         |  FROM cardA a FULL JOIN cardB b ON a.source = b.source)
-         |SELECT source,
-         |  CASE WHEN in_old AND NOT in_new THEN 'removed'
-         |       WHEN in_new AND NOT in_old THEN 'added'
-         |       WHEN f_chars + f_docs + f_dup + f_langs + f_tokens > 0
-         |         THEN 'changed'
-         |       ELSE 'unchanged' END AS change,
-         |  CASE WHEN in_old AND in_new THEN
-         |    CAST(f_chars + f_docs + f_dup + f_langs + f_tokens
-         |      AS BIGINT) ELSE 0 END AS n_cols_changed,
-         |  CASE WHEN in_old AND in_new THEN concat_ws(',',
-         |      CASE WHEN f_chars = 1 THEN 'n_chars' END,
-         |      CASE WHEN f_docs = 1 THEN 'n_docs' END,
-         |      CASE WHEN f_dup = 1 THEN 'n_dup_docs' END,
-         |      CASE WHEN f_langs = 1 THEN 'n_langs' END,
-         |      CASE WHEN f_tokens = 1 THEN 'n_tokens' END)
-         |    ELSE '' END AS changed_cols
-         |FROM j""".stripMargin
-    },
-
-    // q153: the same sort-scan — per-x max y, exclusive prefix max
-    // over x desc, strict survival, join-back keeps (x, y) ties
-    "q153_pareto_front" ->
-      s"""WITH scored AS (SELECT doc_id,
-         |    ${graft.functions.ExactRound.ratioScaledSql(
-              qScoreNum, qScoreDen, 4)} AS x_units,
-         |    CAST(len(regexp_extract_all(lower(text),
-         |      '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT) AS y_units
-         |  FROM documents),
-         |gm AS (SELECT x_units, max(y_units) AS my FROM scored
-         |  GROUP BY 1),
-         |sw AS (SELECT *, max(my) OVER (ORDER BY x_units DESC
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-         |  FROM gm),
-         |sky AS (SELECT x_units, my AS y_units FROM sw
-         |  WHERE pm IS NULL OR my > pm)
-         |SELECT s.doc_id, s.x_units, s.y_units
-         |FROM scored s JOIN sky k
-         |  ON k.x_units = s.x_units AND k.y_units = s.y_units"""
-        .stripMargin,
-
-    // q118: q47's recursive components; rep = coalesce(component,
-    // self); the q50 split CASE keyed on the representative
-    "q118_cluster_split" ->
-      s"""WITH RECURSIVE ${lshPairCtes("0.45")},
-         |cl(node, r) AS (SELECT a, b FROM e
-         |  UNION SELECT cl.node, e2.b FROM cl JOIN e e2 ON cl.r = e2.a),
-         |cc AS (SELECT node, least(node, min(r)) AS component
-         |  FROM cl GROUP BY node),
-         |rep AS (SELECT emb.vec_id,
-         |    coalesce(cc.component, emb.vec_id) AS rep_id
-         |  FROM embeddings emb LEFT JOIN cc ON cc.node = emb.vec_id)
-         |SELECT vec_id, rep_id,
-         |  CASE WHEN substr(md5(CAST(rep_id AS VARCHAR)), 1, 2) < 'c8'
-         |         THEN 'train'
-         |       WHEN substr(md5(CAST(rep_id AS VARCHAR)), 1, 2) < 'e8'
-         |         THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM rep""".stripMargin,
-
-    // q110: the MIRRORED-LSH pair surface (r12; formerly q29's exact
-    // SQL) joined to the q50 split CASE on both endpoints,
-    // cross-split rows only
-    "q110_split_leakage" -> {
-      val splitCase =
-        """CASE WHEN substr(md5(CAST(vec_id AS VARCHAR)), 1, 2) < 'c8'
-          |       THEN 'train'
-          |     WHEN substr(md5(CAST(vec_id AS VARCHAR)), 1, 2) < 'e8'
-          |       THEN 'val'
-          |     ELSE 'test' END""".stripMargin
-      s"""WITH ${lshPairCtes("0.45")},
-         |s AS (SELECT vec_id, $splitCase AS split FROM embeddings)
-         |SELECT p.id_a, p.id_b, p.cosine,
-         |  sa.split AS split_a, sb.split AS split_b
-         |FROM p JOIN s sa ON sa.vec_id = p.id_a
-         |JOIN s sb ON sb.vec_id = p.id_b
-         |WHERE sa.split <> sb.split""".stripMargin
-    },
-
-    // q111: the SAME e6 decay-power table (decayPowersE6 — one Scala
-    // source for both engines) as a list literal; floor day division
-    "q111_decay_activity" -> {
-      val arr = graft.operators.EventAnalytics.decayPowersE6(4, 5, 30)
-        .mkString("[", ", ", "]")
-      s"""WITH d AS (SELECT user_id,
-         |    epoch_ns(ts) // 86400000000000 AS d_ FROM events),
-         |r AS (SELECT max(d_) AS ref FROM d)
-         |SELECT user_id, count(*) AS n_events,
-         |  CAST(sum(CASE WHEN ref - d_ <= 30
-         |    THEN list_extract($arr, CAST(ref - d_ AS INTEGER) + 1)
-         |    ELSE 0 END) AS BIGINT) AS activity_e6
-         |FROM d, r GROUP BY user_id""".stripMargin
-    },
-
-    // q112: boundary = low-5-bits-zero of the window md5 prefix (the
-    // last two hex nibbles mod 32 — the same bits Md5Prefix64's long
-    // carries lowest); spans via lag, tail and whole-doc rows appended
-    "q112_cdc_chunks" -> {
-      val bmask = s"(${nibSql("h16", 15)} * 16 + ${nibSql("h16", 16)}) % 32 = 0"
-      s"""WITH t AS (SELECT doc_id, $wsNorm AS tn FROM documents),
-         |b AS (SELECT doc_id, i
-         |  FROM (SELECT doc_id, i,
-         |      substr(md5(substr(tn, CAST(i - 7 AS INTEGER), 8)), 1, 16) AS h16
-         |    FROM t, unnest(range(8, length(tn) + 1)) AS r(i))
-         |  WHERE $bmask),
-         |spans AS (SELECT doc_id,
-         |    coalesce(lag(i) OVER (PARTITION BY doc_id ORDER BY i) + 1, 1)
-         |      AS sa,
-         |    i AS sb FROM b),
-         |lastb AS (SELECT doc_id, max(i) AS e FROM b GROUP BY 1),
-         |tails AS (SELECT t.doc_id, l.e + 1 AS sa, length(t.tn) AS sb
-         |  FROM t JOIN lastb l USING (doc_id) WHERE length(t.tn) > l.e),
-         |wholes AS (SELECT t.doc_id, 1 AS sa, length(t.tn) AS sb
-         |  FROM t LEFT JOIN lastb l USING (doc_id)
-         |  WHERE l.doc_id IS NULL AND length(t.tn) > 0),
-         |alls AS (SELECT * FROM spans UNION ALL SELECT * FROM tails
-         |  UNION ALL SELECT * FROM wholes)
-         |SELECT a.doc_id, CAST(a.sa AS BIGINT) AS sa,
-         |  CAST(a.sb AS BIGINT) AS sb,
-         |  substring(t.tn, CAST(a.sa AS INTEGER),
-         |    CAST(a.sb - a.sa + 1 AS INTEGER)) AS chunk_text
-         |FROM alls a JOIN t USING (doc_id)""".stripMargin
-    },
-
-    // q113: the q67 vocabulary (same tie order) as the in-vocab set;
-    // OOV ratio through the shared exact-rounding identity
-    "q113_oov_rate" ->
-      s"""WITH toks AS (SELECT doc_id, unnest($wordsSql) AS token
-         |  FROM documents),
-         |v AS (SELECT token FROM (
-         |  SELECT token, count(*) AS cf
-         |  FROM toks GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2
-         |  ORDER BY cf DESC, token ASC LIMIT 20)),
-         |per AS (SELECT t.doc_id, count(*) AS n_tokens,
-         |    CAST(sum(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n_oov
-         |  FROM toks t LEFT JOIN v ON v.token = t.token GROUP BY 1)
-         |SELECT d.doc_id, coalesce(per.n_tokens, 0) AS n_tokens,
-         |  coalesce(per.n_oov, 0) AS n_oov,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "coalesce(per.n_oov, 0)", "coalesce(per.n_tokens, 0)", 4)}
-         |    AS oov_e4
-         |FROM documents d LEFT JOIN per ON per.doc_id = d.doc_id""".stripMargin,
-
-    // q107: first-carrier per gram via min(doc_id); novelty as the
-    // exact-rounded scaled integer ratio (no floats in the lineage)
-    "q107_ngram_novelty" ->
-      s"""WITH t AS (SELECT doc_id, $wordsSql AS ws FROM documents),
-         |sh AS (SELECT doc_id, unnest(list_distinct(
-         |    [ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] for i in range(1, len(ws)-1)])) AS shingle
-         |  FROM t WHERE len(ws) >= 3),
-         |f AS (SELECT shingle, min(doc_id) AS first_doc FROM sh GROUP BY 1),
-         |per AS (SELECT s.doc_id, count(*) AS n_grams,
-         |    CAST(sum(CASE WHEN f.first_doc = s.doc_id THEN 1 ELSE 0 END) AS BIGINT) AS n_novel
-         |  FROM sh s JOIN f USING (shingle) GROUP BY 1)
-         |SELECT d.doc_id, coalesce(per.n_grams, 0) AS n_grams,
-         |  coalesce(per.n_novel, 0) AS n_novel,
-         |  ${graft.functions.ExactRound.ratioScaledSql(
-              "coalesce(per.n_novel, 0)", "coalesce(per.n_grams, 0)", 4)} AS novelty_e4
-         |FROM documents d LEFT JOIN per ON per.doc_id = d.doc_id""".stripMargin,
-
-    // q24: SimHash is fully deterministic SQL — md5-prefix token hash,
-    // per-bit majority votes, exact all-pairs hamming filter (banding
-    // is pigeonhole-exact at hamming <= 3 over 4 bands, so the banded
-    // engine output equals this all-pairs set). Bit b (LSB-first) of
-    // the 64-bit value is nibble bit b%4 of hex char 16 - b/4.
-    "q24_simhash_pairs" -> {
-      def nib(i: Int) =
-        s"(strpos('0123456789abcdef', substring(h16, $i, 1)) - 1)"
-      val votes = (0 until 64).map { b =>
-        s"sum(CASE WHEN ((${nib(16 - b / 4)} >> ${b % 4}) & 1) = 1 " +
-          s"THEN 1 ELSE -1 END) AS v$b"
-      }.mkString(",\n  ")
-      val fp = (0 until 64).map(b =>
-        s"(CASE WHEN v$b > 0 THEN CAST(${1L << b} AS HUGEINT) " +
-          "ELSE CAST(0 AS HUGEINT) END)").mkString(" + ")
-      s"""WITH t AS (SELECT doc_id, unnest($wordsSql) AS w FROM documents),
-         |h AS (SELECT doc_id, substring(md5(w), 1, 16) AS h16 FROM t),
-         |v AS (SELECT doc_id,
-         |  $votes
-         |  FROM h GROUP BY doc_id),
-         |f AS (SELECT doc_id, CAST($fp AS BIGINT) AS fp FROM v)
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  CAST(bit_count(xor(a.fp, b.fp)) AS BIGINT) AS hamming
-         |FROM f a JOIN f b ON a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.fp, b.fp)) <= 3""".stripMargin
-    },
-
-    "q25_ann_bruteforce" -> annTop10Sql(),
-
-    // Graduated approximate gates (q64/q70 discipline): the rows are
-    // the exact surfaces above; the guarantee booleans are literal true
-    // on the oracle side — a recall collapse or invented pair flips the
-    // engine's boolean and fails the hash gate.
-    "q26_ann_lsh" -> annTop10Sql(",\n  true AS recall_ok"),
-    "q31_ann_ivf" -> annTop10Sql(",\n  true AS recall_ok"),
-    // the trailing sentinel row mirrors the engine's non-vacuous
-    // guarantee carrier (see neardupGuaranteeGate)
-    "q30_embedding_neardup_lsh" ->
-      (embPairsSql(",\n  true AS recall_ok, true AS precision_ok") +
-        "\nUNION ALL SELECT CAST(-1 AS BIGINT), CAST(-1 AS BIGINT), " +
-        "CAST(NULL AS DOUBLE), true, true"),
-    "q62_semantic_dedup" ->
-      (embPairsSql(",\n  true AS recall_ok, true AS precision_ok") +
-        "\nUNION ALL SELECT CAST(-1 AS BIGINT), CAST(-1 AS BIGINT), " +
-        "CAST(NULL AS DOUBLE), true, true"),
-    "q61_bloom_decontaminate" ->
-      decontamReportSql(",\n  true AS no_false_negative, true AS excess_ok"),
-
-    "q29_embedding_neardup" -> embPairsSql(),
-
-    // Transitive closure by recursive CTE over the MIRRORED-LSH
-    // near-dup pair list (r12; formerly the exact-pair CTE), then
-    // component = min reachable id — the declarative twin of the
-    // engine's path-halving label propagation.
-    "q47_neardup_components" ->
-      s"""WITH RECURSIVE ${lshPairCtes("0.45")},
-         |cl(node, r) AS (SELECT a, b FROM e
-         |  UNION SELECT cl.node, e2.b FROM cl JOIN e e2 ON cl.r = e2.a)
-         |SELECT node, least(node, min(r)) AS component
-         |FROM cl GROUP BY node""".stripMargin,
-
-    "q48_dedup_representatives" ->
-      s"""WITH RECURSIVE ${lshPairCtes("0.45")},
-         |cl(node, r) AS (SELECT a, b FROM e
-         |  UNION SELECT cl.node, e2.b FROM cl JOIN e e2 ON cl.r = e2.a),
-         |cc AS (SELECT node, least(node, min(r)) AS component
-         |  FROM cl GROUP BY node)
-         |SELECT vec_id FROM embeddings
-         |WHERE vec_id NOT IN (SELECT node FROM cc WHERE node != component)""".stripMargin,
-
-    // q86: q47's recursive components + the q18 rational as scaled
-    // integer + one per-component argmax window (quality desc, id asc)
-    "q86_dedup_keep_best" ->
-      s"""WITH RECURSIVE ${lshPairCtes("0.45")},
-         |cl(node, r) AS (SELECT a, b FROM e
-         |  UNION SELECT cl.node, e2.b FROM cl JOIN e e2 ON cl.r = e2.a),
-         |cc AS (SELECT node, least(node, min(r)) AS component
-         |  FROM cl GROUP BY node),
-         |q AS (SELECT d.doc_id AS vec_id,
-         |    ${graft.functions.ExactRound.ratioScaledSql(qScoreNum, qScoreDen, 4)} AS quality_e4
-         |  FROM documents d JOIN embeddings em ON em.vec_id = d.doc_id),
-         |r AS (SELECT cc.node AS vec_id, q.quality_e4,
-         |    row_number() OVER (PARTITION BY cc.component
-         |      ORDER BY q.quality_e4 DESC, cc.node ASC) AS rk
-         |  FROM cc JOIN q ON q.vec_id = cc.node)
-         |SELECT vec_id, quality_e4 FROM r WHERE rk = 1
-         |UNION ALL
-         |SELECT q.vec_id, q.quality_e4 FROM q
-         |WHERE q.vec_id NOT IN (SELECT node FROM cc)""".stripMargin,
-
-    // q27: payloads are ASCII text cast to binary, so of the real
-    // header parsers only the GIF branch is reachable (PNG's 0x89 and
-    // JPEG's 0xFF lead bytes cannot begin a UTF-8 string) — the oracle
-    // mirrors the GIF detection + little-endian dims exactly and emits
-    // unknown/NULL otherwise, the same contract parseImageHeader
-    // fulfills on arbitrary bytes.
-    // q27: header metadata as before, plus the real-pixel-decode px_*
-    // columns — the engine wraps the first 96 chars in a PPM container
-    // and decodes them; the oracle computes the same channel-byte
-    // statistics directly from the characters (ASCII corpora: char
-    // code == byte value).
-    "q27_multimodal_meta" ->
-      """WITH m AS (SELECT doc_id, CAST(strlen(text) AS BIGINT) AS byte_len,
-        |  ascii(substring(text, 1, 1)) AS first_byte,
-        |  ascii(substring(text, length(text), 1)) AS last_byte,
-        |  CASE WHEN strlen(text) >= 13
-        |    AND substring(text, 1, 6) IN ('GIF87a', 'GIF89a')
-        |    THEN 'gif' ELSE 'unknown' END AS format,
-        |  CASE WHEN strlen(text) >= 13
-        |    AND substring(text, 1, 6) IN ('GIF87a', 'GIF89a')
-        |    THEN CAST(ascii(substring(text, 7, 1))
-        |      + 256 * ascii(substring(text, 8, 1)) AS INTEGER)
-        |    ELSE CAST(NULL AS INTEGER) END AS img_width,
-        |  CASE WHEN strlen(text) >= 13
-        |    AND substring(text, 1, 6) IN ('GIF87a', 'GIF89a')
-        |    THEN CAST(ascii(substring(text, 9, 1))
-        |      + 256 * ascii(substring(text, 10, 1)) AS INTEGER)
-        |    ELSE CAST(NULL AS INTEGER) END AS img_height
-        |FROM documents),
-        |pxv AS (SELECT doc_id,
-        |    ascii(substring(text, CAST(idx.i AS INTEGER), 1)) AS b
-        |  FROM documents, (SELECT unnest(range(1, 97)) AS i) idx
-        |  WHERE length(text) >= 96 AND strlen(text) = length(text)),
-        |pxs AS (SELECT doc_id, CAST(sum(b) AS BIGINT) AS px_sum,
-        |    CAST(min(b) AS INTEGER) AS px_min,
-        |    CAST(max(b) AS INTEGER) AS px_max
-        |  FROM pxv GROUP BY 1)
-        |SELECT m.*,
-        |  CASE WHEN pxs.doc_id IS NOT NULL THEN 'ppm' END AS px_format,
-        |  CASE WHEN pxs.doc_id IS NOT NULL
-        |    THEN CAST(8 AS INTEGER) END AS px_w,
-        |  CASE WHEN pxs.doc_id IS NOT NULL
-        |    THEN CAST(4 AS INTEGER) END AS px_h,
-        |  pxs.px_sum, pxs.px_min, pxs.px_max
-        |FROM m LEFT JOIN pxs ON m.doc_id = pxs.doc_id""".stripMargin,
-
-    "q40_accuracy_audit" ->
-      """SELECT 'simhash_pigeonhole_exact' AS check, true AS pass
-        |UNION ALL SELECT 'ann_lsh_top10_overlap', true
-        |UNION ALL SELECT 'ann_ivf_top10_overlap', true
-        |UNION ALL SELECT 'embedding_lsh_recall', true
-        |UNION ALL SELECT 'semantic_dedup_recall', true
-        |UNION ALL SELECT 'bloom_decontaminate_superset', true
-        |UNION ALL SELECT 'kmv_rel_err_bound', true
-        |UNION ALL SELECT 'mg_tracked_bounds', true
-        |UNION ALL SELECT 'mg_no_missed_heavy', true
-        |UNION ALL SELECT 'hyperball_register_exact', true""".stripMargin,
-
-    // q59: quality formula mirrored from q18 (ExactRound integer
-    // rational — see q18), integer token cumsum — DuckDB sum(BIGINT)
-    // widens to HUGEINT, so the window sum casts back
-    "q59_token_budget" -> {
-      import graft.functions.ExactRound.ratioSql
-      val (nWords, stopHits, punct, len) = (qNWords, qStopHits, qPunct, qLen)
-      val (scoreNum, scoreDen) = (qScoreNum, qScoreDen)
-      s"""WITH q AS (SELECT doc_id,
-         |    CAST(len($wordsSql) AS BIGINT) AS n_tokens,
-         |    ${ratioSql(scoreNum, scoreDen)} AS quality
-         |  FROM documents),
-         |c AS (SELECT doc_id, n_tokens,
-         |    CAST(sum(n_tokens) OVER (ORDER BY quality DESC, doc_id) AS BIGINT)
-         |      AS cum_tokens
-         |  FROM q)
-         |SELECT doc_id, n_tokens, cum_tokens FROM c
-         |WHERE cum_tokens <= 10000""".stripMargin
-    },
-
-    "q60_source_mix" ->
-      """SELECT doc_id, source FROM documents
-        |WHERE doc_id IS NOT NULL AND (
-        |  CASE WHEN source = 'src0' THEN true
-        |       WHEN source = 'src1' THEN true
-        |       WHEN source = 'src2' THEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'c0'
-        |       WHEN source = 'src3' THEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '80'
-        |       WHEN source = 'src4' THEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '80'
-        |       ELSE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '40' END)""".stripMargin,
-
-    // q63: the q33 winnowing CTE + doc-frequency cap + posting-list
-    // pair count — same fingerprints, same cap, same threshold
-    "q63_fingerprint_overlap" ->
-      s"""WITH t AS (SELECT doc_id, $wsNorm AS tn FROM documents
-         |    WHERE length($wsNorm) >= 8),
-         |g AS (SELECT doc_id, i,
-         |    substr(md5(substr(tn, CAST(i AS INTEGER), 8)), 1, 16) AS h
-         |  FROM t, unnest(range(1, length(tn) - 6)) AS r(i)),
-         |f AS (SELECT DISTINCT doc_id,
-         |    min(h) OVER (PARTITION BY doc_id ORDER BY i
-         |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fingerprint
-         |  FROM g),
-         |rare AS (SELECT fingerprint FROM f GROUP BY 1 HAVING count(*) <= 5),
-         |fr AS (SELECT f.doc_id, f.fingerprint FROM f JOIN rare USING (fingerprint))
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared
-         |FROM fr a JOIN fr b
-         |  ON a.fingerprint = b.fingerprint AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin,
-
-    // q64: the oracle is the guarantee, not the sketch values (see
-    // ApproxQuantiles scaladoc) — constant-true per (group, q)
-    "q64_approx_quantiles" ->
-      """SELECT l_returnflag, CAST(q AS DOUBLE) AS q, true AS pass
-        |FROM (SELECT DISTINCT l_returnflag FROM lineitem),
-        |     (SELECT unnest([0.25, 0.5, 0.75]) AS q)""".stripMargin,
-
-    // q65: the heavy-hitter set is EXACT (φ = 1/65 support with exact
-    // counts), so the oracle is the plain full-groupBy answer the
-    // sketch-then-verify plan avoids computing at scale
-    "q65_frequent_tokens" ->
-      s"""WITH toks AS (SELECT unnest($wordsSql) AS token FROM documents),
-         |tot AS (SELECT count(*) AS n FROM toks)
-         |SELECT token, count(*) AS n_occurrences
-         |FROM toks, tot
-         |GROUP BY token, tot.n
-         |HAVING count(*) * 65 > tot.n""".stripMargin,
-
-    "q67_vocab_top" ->
-      s"""WITH toks AS (SELECT doc_id, unnest($wordsSql) AS token FROM documents),
-         |v AS (SELECT token, count(*) AS coll_freq,
-         |        count(DISTINCT doc_id) AS doc_freq
-         |      FROM toks GROUP BY token HAVING count(DISTINCT doc_id) >= 2)
-         |SELECT token, coll_freq, doc_freq,
-         |  row_number() OVER (ORDER BY coll_freq DESC, token ASC) AS rank
-         |FROM v
-         |ORDER BY coll_freq DESC, token ASC LIMIT 20""".stripMargin,
-
-    // q76: doubled-units medians keep every intermediate integral
-    "q76_robust_zscore" -> {
-      def p50(rnc: String, v: String) =
-        s"""max(CASE WHEN $rnc = CAST(floor(0.5 * CAST(n - 1 AS DOUBLE)) AS BIGINT) + 1 THEN $v END)
-           | + max(CASE WHEN $rnc = CAST(ceil(0.5 * CAST(n - 1 AS DOUBLE)) AS BIGINT) + 1 THEN $v END)""".stripMargin
-      s"""WITH c AS (SELECT l_orderkey, l_linenumber, l_returnflag,
-         |    CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS u
-         |  FROM lineitem),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY l_returnflag ORDER BY u) AS rn,
-         |    count(*) OVER (PARTITION BY l_returnflag) AS n FROM c),
-         |m AS (SELECT l_returnflag, ${p50("rn", "u")} AS med2
-         |  FROM r GROUP BY 1),
-         |d AS (SELECT r.l_returnflag, r.u, r.n, abs(r.u * 2 - m.med2) AS dev2
-         |  FROM r JOIN m USING (l_returnflag)),
-         |d2 AS (SELECT *, row_number() OVER (PARTITION BY l_returnflag ORDER BY dev2) AS drn
-         |  FROM d),
-         |md AS (SELECT l_returnflag, ${p50("drn", "dev2")} AS mad4
-         |  FROM d2 GROUP BY 1)
-         |SELECT c.l_orderkey, c.l_linenumber, c.l_returnflag,
-         |  m.med2, md.mad4,
-         |  CASE WHEN md.mad4 > 0 THEN
-         |    round(CAST(c.u * 2 - m.med2 AS DOUBLE) * 2.0
-         |      / (1.4826 * CAST(md.mad4 AS DOUBLE)), 4) + 0.0
-         |  END AS robust_z
-         |FROM c JOIN m USING (l_returnflag) JOIN md USING (l_returnflag)""".stripMargin
-    },
-
-    // q75: exact HUGEINT sums; decimal→double via VARCHAR (2⁵³ lesson)
-    "q75_group_correlation" ->
-      """WITH c AS (SELECT l_returnflag,
-        |    CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS x,
-        |    CAST(round(l_quantity, 0) AS BIGINT) AS y
-        |  FROM lineitem),
-        |s AS (SELECT l_returnflag, count(*) AS n,
-        |    sum(CAST(x AS HUGEINT)) AS sx, sum(CAST(y AS HUGEINT)) AS sy,
-        |    sum(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS sxx,
-        |    sum(CAST(y AS HUGEINT) * CAST(y AS HUGEINT)) AS syy,
-        |    sum(CAST(x AS HUGEINT) * CAST(y AS HUGEINT)) AS sxy
-        |  FROM c GROUP BY 1),
-        |v AS (SELECT l_returnflag, n,
-        |    CAST(n AS HUGEINT) * sxy - sx * sy AS num,
-        |    CAST(n AS HUGEINT) * sxx - sx * sx AS vx,
-        |    CAST(n AS HUGEINT) * syy - sy * sy AS vy
-        |  FROM s)
-        |SELECT l_returnflag, n,
-        |  CAST(CAST(num AS VARCHAR) AS DOUBLE) AS cov_num,
-        |  CASE WHEN vx > 0 AND vy > 0 THEN
-        |    round(CAST(CAST(num AS VARCHAR) AS DOUBLE) /
-        |      (sqrt(CAST(CAST(vx AS VARCHAR) AS DOUBLE)) *
-        |       sqrt(CAST(CAST(vy AS VARCHAR) AS DOUBLE))), 6)
-        |  END AS r
-        |FROM v""".stripMargin,
-
-    // q74: q35's integer-cents lerp at p05/p95 + broadcast-back clip
-    "q74_winsorize" -> {
-      def pick(nm: String, q: String) =
-        s"""max(CASE WHEN rn = CAST(floor($q * CAST(n - 1 AS DOUBLE)) AS BIGINT) + 1 THEN cents END) AS ${nm}_a,
-           |  max(CASE WHEN rn = CAST(ceil($q * CAST(n - 1 AS DOUBLE)) AS BIGINT) + 1 THEN cents END) AS ${nm}_b,
-           |  max($q * CAST(n - 1 AS DOUBLE) - floor($q * CAST(n - 1 AS DOUBLE))) AS ${nm}_f""".stripMargin
-      s"""WITH c AS (SELECT l_orderkey, l_linenumber, l_returnflag,
-         |    CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS cents
-         |  FROM lineitem),
-         |r AS (SELECT l_returnflag, cents,
-         |    row_number() OVER (PARTITION BY l_returnflag ORDER BY cents) AS rn,
-         |    count(*) OVER (PARTITION BY l_returnflag) AS n
-         |  FROM c),
-         |p AS (SELECT l_returnflag,
-         |  ${pick("lo", "0.05")},
-         |  ${pick("hi", "0.95")}
-         |  FROM r GROUP BY 1),
-         |b AS (SELECT l_returnflag,
-         |    (CAST(lo_a AS DOUBLE) + CAST(lo_b - lo_a AS DOUBLE) * lo_f) / 100.0 AS wins_lo,
-         |    (CAST(hi_a AS DOUBLE) + CAST(hi_b - hi_a AS DOUBLE) * hi_f) / 100.0 AS wins_hi
-         |  FROM p)
-         |SELECT c.l_orderkey, c.l_linenumber, c.l_returnflag,
-         |  b.wins_lo, b.wins_hi,
-         |  least(greatest(CAST(c.cents AS DOUBLE) / 100.0, b.wins_lo), b.wins_hi) AS wins_value
-         |FROM c JOIN b USING (l_returnflag)""".stripMargin
-    },
-
-    // q71: same window/merge construction; DuckDB range(a,b) is
-    // b-exclusive so the stop is len-18 for positions 1..len-19.
-    // The coverage fraction travels as round(frac·1e4) in pure integer
-    // arithmetic (ratioScaledSql) — r7's round(DOUBLE) tie flap AND
-    // r8's still-flapping ExactRound double both exit the gate; no
-    // float appears anywhere in this query's lineage.
-    "q71_repeated_substrings" ->
-      s"""WITH $repeatedSpanCtes,
-        |cov AS (SELECT doc_id, CAST(sum(b - a + 1) AS BIGINT) AS rep,
-        |  count(*) AS ns
-        |  FROM spans GROUP BY 1)
-        |SELECT t.doc_id, length(tn) AS n_chars,
-        |  coalesce(ns, 0) AS n_spans,
-        |  coalesce(rep, 0) AS repeated_chars,
-        |  ${graft.functions.ExactRound.ratioScaledSql("coalesce(rep, 0)", "length(tn)", 4)} AS repeated_frac_e4
-        |FROM t LEFT JOIN cov ON t.doc_id = cov.doc_id""".stripMargin,
-
-    // q87: the same span CTEs, complemented into KEPT segments (lag
-    // over span ends + a tail segment + whole-doc rows for span-free
-    // docs), gated by the q72 order-independent digest pattern —
-    // per-segment md5-prefix64 XOR in two 32-bit halves + kept_chars
-    "q87_trim_repeated" -> {
-      val hi = hex32Sql("h16", 1)
-      val lo = hex32Sql("h16", 9)
-      s"""WITH $repeatedSpanCtes,
-        |segi AS (SELECT doc_id,
-        |    coalesce(lag(b) OVER (PARTITION BY doc_id ORDER BY a), 0) + 1 AS sa,
-        |    a - 1 AS sb
-        |  FROM spans),
-        |segt AS (SELECT spans.doc_id, max(spans.b) + 1 AS sa,
-        |    length(t.tn) AS sb
-        |  FROM spans JOIN t ON t.doc_id = spans.doc_id
-        |  GROUP BY spans.doc_id, length(t.tn)),
-        |segn AS (SELECT doc_id, 1 AS sa, length(tn) AS sb FROM t
-        |  WHERE doc_id NOT IN (SELECT doc_id FROM spans)),
-        |segs AS (SELECT * FROM (SELECT * FROM segi UNION ALL
-        |    SELECT * FROM segt UNION ALL SELECT * FROM segn) u
-        |  WHERE sb >= sa),
-        |m AS (SELECT segs.doc_id, sb - sa + 1 AS seg_len,
-        |    substring(md5(concat(CAST(segs.doc_id AS VARCHAR), '@',
-        |      CAST(sa AS VARCHAR), '@',
-        |      substring(tn, CAST(sa AS INTEGER),
-        |        CAST(sb - sa + 1 AS INTEGER)))), 1, 16) AS h16
-        |  FROM segs JOIN t ON t.doc_id = segs.doc_id),
-        |d AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_segments,
-        |    CAST(sum(seg_len) AS BIGINT) AS kept_chars,
-        |    bit_xor(CAST($hi AS BIGINT)) AS digest_hi,
-        |    bit_xor(CAST($lo AS BIGINT)) AS digest_lo
-        |  FROM m GROUP BY 1)
-        |SELECT t.doc_id, length(tn) AS n_chars,
-        |  coalesce(n_segments, 0) AS n_segments,
-        |  coalesce(kept_chars, 0) AS kept_chars,
-        |  coalesce(digest_hi, 0) AS digest_hi,
-        |  coalesce(digest_lo, 0) AS digest_lo
-        |FROM t LEFT JOIN d ON d.doc_id = t.doc_id""".stripMargin
-    },
-
-    // q70: the guarantee is the oracle (q64 discipline) — a broken hash
-    // or indexing flips a boolean and fails the hash compare. The
-    // no-undercount check is deterministic; the excess check gates the
-    // MEAN against 3e·N/width (per-item bool_and would be a
-    // probabilistic gate that a correct sketch can fail at scale).
-    "q70_cms_frequency" ->
-      """SELECT DISTINCT event_type,
-        |  true AS no_underestimate, true AS avg_excess_bounded
-        |FROM events""".stripMargin,
-
-    // q77: the streaming MG summary's running total must equal the
-    // exact per-group count, and the two MG theorems (no missed heavy
-    // item, weight within [true − N/(k+1), true]) hold for any batch
-    // split — the q65/q70 guarantee-is-the-oracle discipline applied
-    // to the stateful streaming path.
-    "q77_streaming_heavy_hitters" ->
-      """SELECT event_type, count(*) AS n,
-        |  true AS no_missed_heavy, true AS bounds_ok
-        |FROM events GROUP BY 1""".stripMargin,
-
-    // q78: the stateful streaming sessionizer must reproduce the batch
-    // session structure exactly — q15's lag/cumsum CTE grouped to
-    // (user, start, end, count). Session identity is integer-only, so
-    // the compare is exact.
-    "q78_streaming_sessions" ->
-      """WITH e AS (SELECT user_id, event_id,
-        |    epoch_ns(ts) // 1000000000 AS ts_s FROM events),
-        |s AS (SELECT *, CASE WHEN lag(ts_s) OVER w IS NULL
-        |        OR ts_s - lag(ts_s) OVER w > 1800 THEN 1 ELSE 0 END AS is_new
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_s, event_id)),
-        |s2 AS (SELECT *, CAST(sum(is_new) OVER (PARTITION BY user_id
-        |    ORDER BY ts_s, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq FROM s)
-        |SELECT user_id, min(ts_s) AS session_start,
-        |  max(ts_s) AS session_end, count(*) AS n_events
-        |FROM s2 GROUP BY user_id, session_seq""".stripMargin,
-
-    // q69: the oracle is the plain range join DuckDB can afford at gate
-    // scale; sessionization mirrors q15's lag + cumulative-sum CTE
-    "q69_interval_join" ->
-      """WITH c AS (SELECT user_id, event_id,
-        |    epoch_ns(ts) // 1000000000 AS ts_s FROM events
-        |  WHERE event_type = 'click'),
-        |s AS (SELECT *, CASE WHEN lag(ts_s) OVER w IS NULL
-        |        OR ts_s - lag(ts_s) OVER w > 86400 THEN 1 ELSE 0 END AS is_new
-        |  FROM c WINDOW w AS (PARTITION BY user_id ORDER BY ts_s, event_id)),
-        |s2 AS (SELECT *, CAST(sum(is_new) OVER (PARTITION BY user_id
-        |    ORDER BY ts_s, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT)
-        |    AS session_seq FROM s),
-        |sess AS (SELECT user_id, session_seq,
-        |    min(ts_s) AS s_start, max(ts_s) AS s_end
-        |  FROM s2 GROUP BY 1, 2),
-        |p AS (SELECT user_id, event_id,
-        |    epoch_ns(ts) // 1000000000 AS ts_s FROM events
-        |  WHERE event_type = 'purchase')
-        |SELECT p.event_id, p.user_id, sess.session_seq, p.ts_s
-        |FROM p JOIN sess ON p.user_id = sess.user_id
-        |  AND p.ts_s >= sess.s_start AND p.ts_s <= sess.s_end""".stripMargin,
-
-    // q68: identical quantize+interleave arithmetic, bounds from a CTE
-    // (same IEEE doubles, same op order ⇒ same buckets)
-    "q68_zorder" -> {
-      val terms = (0 until 8).map(i =>
-        s"((qa >> $i) & 1) * ${1L << (2 * i)} + " +
-          s"((qb >> $i) & 1) * ${1L << (2 * i + 1)}").mkString(" + ")
-      s"""WITH b AS (SELECT
-         |    min(CAST(o_totalprice AS DOUBLE)) AS amn,
-         |    max(CAST(o_totalprice AS DOUBLE)) AS amx,
-         |    min(CAST(o_custkey AS DOUBLE)) AS bmn,
-         |    max(CAST(o_custkey AS DOUBLE)) AS bmx
-         |  FROM orders),
-         |q AS (SELECT o_orderkey,
-         |    least(CAST(floor((CAST(o_totalprice AS DOUBLE) - amn) * 256.0
-         |      / (amx - amn)) AS BIGINT), 255) AS qa,
-         |    least(CAST(floor((CAST(o_custkey AS DOUBLE) - bmn) * 256.0
-         |      / (bmx - bmn)) AS BIGINT), 255) AS qb
-         |  FROM orders, b)
-         |SELECT o_orderkey, $terms AS z FROM q""".stripMargin
-    },
-
-    // q176: q68's mirrored quantize/interleave arithmetic, the same
-    // equal-width z-slice file id, per-file min/max, and the same
-    // box-overlap test
-    "q176_zorder_pruning" -> {
-      val terms = (0 until 8).map(i =>
-        s"((qa >> $i) & 1) * ${1L << (2 * i)} + " +
-          s"((qb >> $i) & 1) * ${1L << (2 * i + 1)}").mkString(" + ")
-      s"""WITH b AS (SELECT
-         |    min(CAST(o_totalprice AS DOUBLE)) AS amn,
-         |    max(CAST(o_totalprice AS DOUBLE)) AS amx,
-         |    min(CAST(o_custkey AS DOUBLE)) AS bmn,
-         |    max(CAST(o_custkey AS DOUBLE)) AS bmx
-         |  FROM orders),
-         |q AS (SELECT o_totalprice, o_custkey,
-         |    least(CAST(floor((CAST(o_totalprice AS DOUBLE) - amn) * 256.0
-         |      / (amx - amn)) AS BIGINT), 255) AS qa,
-         |    least(CAST(floor((CAST(o_custkey AS DOUBLE) - bmn) * 256.0
-         |      / (bmx - bmn)) AS BIGINT), 255) AS qb
-         |  FROM orders, b
-         |  WHERE o_totalprice IS NOT NULL AND o_custkey IS NOT NULL),
-         |z AS (SELECT o_totalprice, o_custkey, $terms AS z FROM q),
-         |f AS (SELECT (z * 64) // 65536 AS file_id,
-         |    count(*) AS n_rows,
-         |    min(CAST(o_totalprice AS DOUBLE)) AS min_a,
-         |    max(CAST(o_totalprice AS DOUBLE)) AS max_a,
-         |    min(CAST(o_custkey AS DOUBLE)) AS min_b,
-         |    max(CAST(o_custkey AS DOUBLE)) AS max_b
-         |  FROM z GROUP BY 1)
-         |SELECT file_id, n_rows, min_a, max_a, min_b, max_b,
-         |  (min_a <= 100000.0 AND max_a >= 50000.0 AND
-         |   min_b <= 500.0 AND max_b >= 100.0) AS scanned
-         |FROM f""".stripMargin
-    },
-
-    // q66: the permutation is the (md5, key) sort order in both engines
-    "q66_shard_export" ->
-      """SELECT doc_id, (rn - 1) % 8 AS shard, (rn - 1) // 8 AS position
-        |FROM (SELECT doc_id, row_number() OVER
-        |        (ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-        |      FROM documents)""".stripMargin,
-
-    "q28_features_codec" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CAST(round(l_discount * 1000, 0) AS BIGINT) AS disc_enc,
-        |  CAST(CAST(round(l_discount * 1000, 0) AS BIGINT) AS DOUBLE) / 1000.0 AS disc_dec,
-        |  CASE WHEN l_extendedprice <> 0 AND l_extendedprice IS NOT NULL
-        |    THEN (l_extendedprice * (1.0 + l_tax) - l_extendedprice) / l_extendedprice
-        |    ELSE 0.0 END AS rel_tax,
-        |  coalesce(l_discount, 0.0) - coalesce(l_tax, 0.0) AS macd_h
-        |FROM lineitem""".stripMargin)
 }

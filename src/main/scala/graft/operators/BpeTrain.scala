@@ -53,7 +53,7 @@ object BpeTrain {
     * still exactly BPE's greedy rule ("a a a" merges positions 1-2,
     * not 2-3). On an already-applied (trimmed, single-spaced) input
     * with no match the wrap is the identity. Mirrored verbatim in the
-    * oracle ([[SparkEntry]] bpeTrainCtes / bpeBatchedCtes). */
+    * oracle ([[graft.catalog.TextQueries]] bpeTrainCtes / bpeBatchedCtes). */
   private[graft] def applyMerge(syms: Column, l: String, r: String): Column =
     trim(call_function("replace", call_function("replace",
       concat(lit(" "),

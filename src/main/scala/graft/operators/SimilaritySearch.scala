@@ -585,7 +585,7 @@ object SimilaritySearch {
     * same band join 8x; a production pipeline signs once and shares
     * the index). Key derivations are deterministic, so
     * `fromKeys(stagedKeys(df)) == embeddingNearDup(df)` exactly —
-    * the mirrored [[SparkEntry]] lshPairCtes oracle is unchanged. */
+    * the mirrored [[graft.catalog.OracleSql]] lshPairCtes oracle is unchanged. */
   def embeddingNearDupFromKeys(keys: DataFrame, vectors: DataFrame,
       idCol: String, vecCol: String, threshold: Double): DataFrame = {
     val pairs = keys.groupBy(col("pkey"))
