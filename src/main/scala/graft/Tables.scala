@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md).
   *
@@ -103,16 +104,28 @@ object Tables {
     * `build` must therefore overwrite whatever a killed run left.
     * Callers key `storeDir` by the source stamp(s) so a regenerated
     * corpus gets a new store. Readers skip `_`-prefixed names, so the
-    * marker never enters a scan. */
+    * marker never enters a scan. Returns whether this call built the
+    * store. */
   private[graft] def buildOnce(spark: SparkSession, storeDir: String)
-      (build: => Unit): Unit = {
+      (build: => Unit): Boolean = {
     val marker = new org.apache.hadoop.fs.Path(s"$storeDir/_staged")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+    val missing = !fs.exists(marker)
+    if (missing) {
       build
       fs.create(marker, true).close()
     }
+    missing
   }
+
+  /** Read a parquet dir: with `schema` — the schema of the frame just
+    * written there — the relation only lists the files and runs no
+    * job; without, Spark infers the schema from a footer, one job.
+    * Spark reads every file-source column as nullable either way, so
+    * both give the same schema. */
+  private[graft] def readParquet(spark: SparkSession, dir: String,
+      schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read.parquet(dir))(spark.read.schema(_).parquet(dir))
 
   /** [[stagedParquet]] with a HIVE-PARTITIONED layout: the build is
     * written `partitionBy(partitionCol)` so the store's directory tree
@@ -135,13 +148,18 @@ object Tables {
     * staged MinHash / band-key / BPE stores: a production pipeline
     * derives its standing tables (edge lists, indexes, models) ONCE
     * per corpus and every consumer reads the store instead of
-    * re-deriving per query. Built once through [[buildOnce]]. */
+    * re-deriving per query. Built once through [[buildOnce]]; the call
+    * that builds the store reads it back with the built frame's schema,
+    * so no footer job runs. */
   def stagedParquet(spark: SparkSession, storeDir: String)
       (build: => DataFrame): DataFrame = {
+    var schema: Option[StructType] = None
     buildOnce(spark, storeDir) {
-      build.write.mode("overwrite").parquet(s"$storeDir/data")
+      val df = build
+      df.write.mode("overwrite").parquet(s"$storeDir/data")
+      schema = Some(df.schema)
     }
-    spark.read.parquet(s"$storeDir/data")
+    readParquet(spark, s"$storeDir/data", schema)
   }
 
   /** [[stagedParquet]]'s ORC sibling — built once through

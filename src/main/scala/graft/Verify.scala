@@ -21,8 +21,13 @@ object Verify {
       .foreach { case (name, fn) =>
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        catch { case scala.util.control.NonFatal(e) =>
+          // the class and the top frames name the failing site; a fatal
+          // error ends the run instead of leaving later queries to a
+          // broken JVM
+          System.err.println(s"[verify] $name failed: " +
+            s"${e.getClass.getName}: ${e.getMessage}" +
+            e.getStackTrace.take(8).map(f => s"\n[verify]     at $f").mkString)
         }
         // Operators that persist() internally (scalable rank, MinHash)
         // would otherwise accumulate MEMORY_AND_DISK caches across the

@@ -26,8 +26,13 @@ import org.apache.spark.sql.types._
   *
   * Plane derivation matches [[HyperplaneSignature]] (MurmurHash3 of
   * (bit, dim) & 1), so signatures are deterministic across runs/plans.
+  *
+  * Each vector is projected over all of its elements: a plane element
+  * depends only on its (bit, index), so the planes grow with the
+  * longest vector seen and no caller has to learn the dimension from
+  * the data first.
   */
-case class HyperplaneBandKeys(child: Expression, dim: Int, baseBits: Int,
+case class HyperplaneBandKeys(child: Expression, baseBits: Int,
     bands: Int, bitsPerBand: Int) extends UnaryExpression {
 
   require(baseBits >= bitsPerBand && bitsPerBand >= 1 && bitsPerBand <= 32,
@@ -49,8 +54,8 @@ case class HyperplaneBandKeys(child: Expression, dim: Int, baseBits: Int,
 
   /** planes(j)(i) == true -> +x, false -> -x (same scheme as
     * HyperplaneSignature so both operators share one bit definition). */
-  @transient private lazy val planes: Array[Array[Boolean]] =
-    HyperplaneBandKeys.planes(baseBits, dim)
+  @transient private lazy val planes: HyperplanePlanes =
+    new HyperplanePlanes(baseBits)
 
   /** sel(b) = the base-bit indices band b gathers: first `bitsPerBand`
     * of a deterministic Fisher–Yates shuffle of 0..baseBits-1 seeded by
@@ -60,12 +65,13 @@ case class HyperplaneBandKeys(child: Expression, dim: Int, baseBits: Int,
     HyperplaneBandKeys.bandSelections(bands, bitsPerBand, baseBits)
 
   private def computeKeys(ad: ArrayData): Array[Long] = {
-    val n = math.min(ad.numElements(), dim)
+    val n = ad.numElements()
+    val rows = planes.covering(n)
     val isFloat = elemIsFloat
     val bits = new Array[Boolean](baseBits)
     var j = 0
     while (j < baseBits) {
-      val plane = planes(j)
+      val plane = rows(j)
       var proj = 0.0
       var i = 0
       while (i < n) {
@@ -96,7 +102,8 @@ case class HyperplaneBandKeys(child: Expression, dim: Int, baseBits: Int,
     new GenericArrayData(computeKeys(input.asInstanceOf[ArrayData]))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val planesRef = ctx.addReferenceObj("planes", planes, "boolean[][]")
+    val planesRef = ctx.addReferenceObj("planes", planes,
+      classOf[HyperplanePlanes].getName)
     val selRef = ctx.addReferenceObj("sel", sel, "int[][]")
     val getter = if (elemIsFloat) "getFloat" else "getDouble"
     nullSafeCodeGen(ctx, ev, a => {
@@ -111,12 +118,14 @@ case class HyperplaneBandKeys(child: Expression, dim: Int, baseBits: Int,
       val key = ctx.freshName("key")
       val s = ctx.freshName("s")
       val plane = ctx.freshName("plane")
+      val rows = ctx.freshName("rows")
       val x = ctx.freshName("x")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $dim);
+         |int $n = $a.numElements();
+         |boolean[][] $rows = $planesRef.covering($n);
          |boolean[] $bitsArr = new boolean[$baseBits];
          |for (int $j = 0; $j < $baseBits; $j++) {
-         |  boolean[] $plane = $planesRef[$j];
+         |  boolean[] $plane = $rows[$j];
          |  double $proj = 0.0;
          |  for (int $i = 0; $i < $n; $i++) {
          |    double $x = (double) $a.$getter($i);
@@ -145,10 +154,10 @@ case class HyperplaneBandKeys(child: Expression, dim: Int, baseBits: Int,
 object HyperplaneBandKeys {
   import org.apache.spark.sql.{Column, GraftSqlBridge}
 
-  def apply(vec: Column, dim: Int, baseBits: Int, bands: Int,
+  def apply(vec: Column, baseBits: Int, bands: Int,
       bitsPerBand: Int): Column =
     GraftSqlBridge.column(new HyperplaneBandKeys(
-      GraftSqlBridge.expression(vec), dim, baseBits, bands, bitsPerBand))
+      GraftSqlBridge.expression(vec), baseBits, bands, bitsPerBand))
 
   /** The ONE plane derivation (shared by the expression instance and
     * any oracle that mirrors it): planes(j)(i) == true -> +x. */
@@ -178,6 +187,24 @@ object HyperplaneBandKeys {
       row.zipWithIndex.foldLeft(0L) { case (m, (b, i)) =>
         if (b) m | (1L << i) else m
       }
+    }
+  }
+}
+
+/** The planes one expression instance projects with: as many columns
+  * as the longest vector seen so far, grown on demand and published
+  * whole, so concurrent readers see a complete table. */
+final class HyperplanePlanes(baseBits: Int) extends Serializable {
+  @volatile private var rows: Array[Array[Boolean]] =
+    HyperplaneBandKeys.planes(baseBits, 0)
+
+  /** Planes with at least `n` columns. */
+  def covering(n: Int): Array[Array[Boolean]] = {
+    val cur = rows
+    if (cur(0).length >= n) cur
+    else synchronized {
+      if (rows(0).length < n) rows = HyperplaneBandKeys.planes(baseBits, n)
+      rows
     }
   }
 }

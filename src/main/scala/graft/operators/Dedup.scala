@@ -796,18 +796,26 @@ object Dedup {
     * adopts min(own label, neighbors' labels), then labels jump to their
     * label's label (pointer doubling), so convergence is O(log diameter)
     * rounds rather than O(diameter) — near-dup clusters are shallow, but
-    * a chain of borderline pairs must not serialize the job. Each round
-    * is two shuffle joins + one aggregate over (long, long) rows; the
-    * edge list is persisted once, labels roll over round to round
-    * through [[Iterate.untilStable]] (the halving self-join embeds the
+    * a chain of borderline pairs must not serialize the job. The edge
+    * list (both directions plus one self-edge per node) is persisted
+    * once; the state rolls over round to round through
+    * [[Iterate.untilFixpoint]] (the halving self-join embeds the
     * previous round's plan twice, so the per-round checkpoint is what
     * keeps the plan from growing 2^rounds). Deterministic: min is
-    * order-free. Converged when a round leaves (count, Σ label)
-    * unchanged: labels only decrease, so an unchanged sum is unchanged
-    * labels, i.e. the propagation fixpoint (halving is the identity
-    * there). `maxIter` bounds the label-changing rounds (a
-    * 2^maxIter-diameter chain); the confirming no-op round after them
-    * is always allowed. */
+    * order-free.
+    *
+    * The state is (node, comp, nmin): nmin is the minimum label over
+    * the node and its neighbours, one edge join + aggregate over the
+    * halved labels (the self-edge brings in the node's own label).
+    * The next round propagates by taking nmin — no join — then halves.
+    * The state is at the fixpoint exactly when no node has a smaller
+    * neighbour label (nmin = comp everywhere): labels are then constant
+    * on each component, and a component's minimum id keeps its own
+    * label, so every label is that minimum. The check is observed in
+    * the state's own checkpoint, so there is no confirming round.
+    * Round 0's nmin is a plain groupBy(src).min(dst) over the edges.
+    * `maxIter` bounds the label-changing rounds (a 2^maxIter-diameter
+    * chain). */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 20): DataFrame = {
     import org.apache.spark.storage.StorageLevel
@@ -815,44 +823,38 @@ object Dedup {
     // reuses the cached partitioning (InMemoryRelation preserves it), so
     // each iteration shuffles only the labels side — the edge list, the
     // big side at corpus scale, moves once.
+    val a = col(aCol).cast("long")
+    val b = col(bCol).cast("long")
+    def edge(s: Column, d: Column) = struct(s.as("src"), d.as("dst"))
     val edges = pairs
-      .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .union(pairs
-        .select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
+      .select(explode(array(edge(a, b), edge(b, a), edge(a, a), edge(b, b))).as("e"))
+      .select(col("e.src"), col("e.dst"))
       .distinct()
       .repartition(col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val labels0 = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("comp"))
+    val state0 = edges.groupBy(col("src").as("node"))
+      .agg(min(col("dst")).as("nmin"))
+      .select(col("node"), col("node").as("comp"), col("nmin"))
     // A silent non-converged return would hand back labels where one
     // component carries several ids — keepRepresentatives would then
     // under-dedup with no signal. Fail loudly instead; the default
-    // maxIter=20 covers any diameter up to ~2^20. maxIter + 1 rounds:
-    // a graph whose labels settle on round maxIter needs the
-    // confirming no-op round after it.
-    val (labels, _) = try Iterate.untilStable(labels0, maxIter + 1,
-        s"connectedComponents (maxIter = $maxIter)") { (labels, _) =>
-      val nbrMin = edges
-        .join(labels.select(col("node").as("dst"), col("comp").as("ncomp")), "dst")
-        .groupBy(col("src")).agg(min(col("ncomp")).as("nmin"))
-        .withColumnRenamed("src", "node")
-      // a round-scoped persist: the halving self-join reads it twice,
-      // and without the cache each side re-ran the propagation
-      // (perfbench neardup_nightly on a 4-vCPU box: a delta night's
-      // merge took ~1.6 s without it, ~1.1 s with it)
-      val propagated = graft.Caches.register(labels
-        .join(nbrMin, Seq("node"), "left")
-        .select(col("node"),
-          least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    // maxIter=20 covers any diameter up to ~2^20.
+    val (state, _) = try Iterate.untilFixpoint(state0, maxIter,
+        s"connectedComponents (maxIter = $maxIter)") { (state, _) =>
+      val propagated = state.select(col("node"), col("nmin").as("comp"))
       // path halving: comp := comp's comp (labels always point at nodes)
-      propagated
+      val halved = propagated
         .join(propagated.select(col("node").as("comp"), col("comp").as("comp2")),
           Seq("comp"), "left")
         .select(col("node"), coalesce(col("comp2"), col("comp")).as("comp"))
-    }(count(lit(1)), sum(col("comp").cast("decimal(38,0)")))
+      edges
+        .join(halved.select(col("node").as("dst"), col("comp").as("ncomp")), "dst")
+        .groupBy(col("src").as("node"))
+        .agg(max(when(col("src") === col("dst"), col("ncomp"))).as("comp"),
+          min(col("ncomp")).as("nmin"))
+    }(count_if(col("nmin") < col("comp")) === 0)
     finally edges.unpersist(blocking = false)
-    labels.select(col("node"), col("comp").as("component"))
+    state.select(col("node"), col("comp").as("component"))
   }
 
   /** Incremental maintenance of a STAGED (node, component) map — the

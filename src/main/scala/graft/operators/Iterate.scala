@@ -36,13 +36,20 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
   * (q242 in the r20 bench: 5.5 s -> 9.4 s). There is deliberately no
   * every-k option.
   *
-  * The stop rule ([[untilStable]], and [[rounds]] given a witness): stop
-  * after the first round whose witness row equals the previous state's.
-  * That is sound only over a MONOTONE state — one whose every change
-  * moves the witness one way (labels only decrease, edge sets only
-  * shrink, registers only grow): then an unchanged witness means an
-  * unchanged state, and every later round is a no-op. A witness over a
-  * non-monotone state can repeat while the state still moves. */
+  * Two stop rules, both read from the round's own checkpoint:
+  *  - [[untilStable]] (and [[rounds]] given a witness) stops after the
+  *    first round whose witness row equals the previous state's. That
+  *    is sound only over a MONOTONE state — one whose every change
+  *    moves the witness one way (labels only decrease, edge sets only
+  *    shrink, registers only grow): then an unchanged witness means an
+  *    unchanged state, and every later round is a no-op. A witness over
+  *    a non-monotone state can repeat while the state still moves. The
+  *    round that shows the repeat is a whole round that changed nothing.
+  *  - [[untilFixpoint]] stops at the first state (the initial one
+  *    included) whose observed `atFixpoint` is true: the state carries
+  *    what the next round would read (e.g. each node's neighbour
+  *    minimum), so it can tell from its own rows that the next round
+  *    would change nothing, and that round is never run. */
 private[graft] object Iterate {
 
   /** Up to `n` rounds from `init`; the states of rounds 0..ran (index =
@@ -52,7 +59,7 @@ private[graft] object Iterate {
   def rounds(init: DataFrame, n: Int, stopWhenStable: Seq[Column] = Nil)(
       step: (DataFrame, Int) => DataFrame): IndexedSeq[DataFrame] = {
     val states = IndexedSeq.newBuilder[DataFrame]
-    loop(init, n, stopWhenStable, step)(states += _)
+    loop(init, n, stopWhenStable, step, repeats)(states += _)
     states.result()
   }
 
@@ -64,31 +71,55 @@ private[graft] object Iterate {
       step: (DataFrame, Int) => DataFrame)(
       witness: Column*): (DataFrame, Int) = {
     require(witness.nonEmpty, "untilStable needs a witness")
-    val (state, ran, stable) = loop(init, maxRounds, witness, step)(_ => ())
-    if (!stable) throw new IllegalStateException(
+    converged(loop(init, maxRounds, witness, step, repeats)(_ => ()),
+      maxRounds, what)
+  }
+
+  /** Rounds from `init` until a state observes `atFixpoint` (an
+    * aggregate boolean over the state's rows) as true; returns that
+    * state and the rounds it ran — 0 when `init` is already at the
+    * fixpoint, and no confirming round. Throws when `maxRounds` rounds
+    * pass without reaching it. */
+  def untilFixpoint(init: DataFrame, maxRounds: Int, what: String)(
+      step: (DataFrame, Int) => DataFrame)(
+      atFixpoint: Column): (DataFrame, Int) =
+    converged(loop(init, maxRounds, Seq(atFixpoint), step,
+      (_, cur) => cur("w0") == true)(_ => ()), maxRounds, what)
+
+  private val repeats: (Option[Map[String, Any]], Map[String, Any]) => Boolean =
+    (prev, cur) => prev.contains(cur)
+
+  private def converged(run: (DataFrame, Int, Boolean), maxRounds: Int,
+      what: String): (DataFrame, Int) = {
+    val (state, ran, done) = run
+    if (!done) throw new IllegalStateException(
       s"$what did not converge within $maxRounds rounds")
     (state, ran)
   }
 
+  /** The loop behind all three: `stop(previous observation, this
+    * observation)` is asked of every observed state, the initial one
+    * (with no previous) included. */
   private def loop(init: DataFrame, maxRounds: Int, witness: Seq[Column],
-      step: (DataFrame, Int) => DataFrame)(
+      step: (DataFrame, Int) => DataFrame,
+      stop: (Option[Map[String, Any]], Map[String, Any]) => Boolean)(
       visit: DataFrame => Unit): (DataFrame, Int, Boolean) = {
     var (state, seen) = materialize(init, witness)
     visit(state)
     var round = 0
-    var stable = false
-    while (!stable && round < maxRounds) {
+    var done = witness.nonEmpty && stop(None, seen)
+    while (!done && round < maxRounds) {
       round += 1
       val scope = graft.Caches.mark()
       val (next, observed) =
         try materialize(step(state, round), witness)
         finally graft.Caches.releaseSince(scope)
-      stable = witness.nonEmpty && observed == seen
+      done = witness.nonEmpty && stop(Some(seen), observed)
       state = next
       seen = observed
       visit(state)
     }
-    (state, round, stable)
+    (state, round, done)
   }
 
   /** One action: the eager checkpoint, with the witness observed in

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFns
@@ -202,7 +202,6 @@ object SimilaritySearch {
   def lshIndex(df: DataFrame, idCol: String, vecCol: String,
       baseBits: Int = 512, bands: Int = 4096,
       bitsPerBand: Int = 16): DataFrame = {
-    val dim = df.select(size(col(vecCol)).as("d")).head().getInt(0)
     // same single-split guard as embeddingNearDup
     val spread =
       if (df.rdd.getNumPartitions >=
@@ -210,7 +209,7 @@ object SimilaritySearch {
       else df.repartition(col(idCol))
     spread.select(col(idCol), explode(
       graft.expressions.HyperplaneBandKeys(
-        col(vecCol), dim, baseBits, bands, bitsPerBand)).as("pkey"))
+        col(vecCol), baseBits, bands, bitsPerBand)).as("pkey"))
   }
 
   /** Probe a prebuilt [[lshIndex]] table: score only rows whose banded
@@ -510,7 +509,6 @@ object SimilaritySearch {
       bitsPerBand: Int = 16, targetRecall: Double = 0.95): DataFrame = {
     val nBands =
       if (bands > 0) bands else adaptiveBands(threshold, bitsPerBand, targetRecall)
-    val dim = df.select(size(col(vecCol)).as("d")).head().getInt(0)
     // The signature+explode map stage parallelizes per input split; a
     // small/single-file corpus would otherwise run it in one task, so
     // spread it first (at real scale the source already has splits and
@@ -521,7 +519,7 @@ object SimilaritySearch {
       else df.repartition(col(idCol))
     val keyed = spread.select(col(idCol).as("id"),
       explode(graft.expressions.HyperplaneBandKeys(
-        col(vecCol), dim, baseBits, nBands, bitsPerBand)).as("pkey"))
+        col(vecCol), baseBits, nBands, bitsPerBand)).as("pkey"))
     // Bucket by key with ONE shuffle and expand pairs locally (a self-join
     // would shuffle the exploded key table twice and recompute its
     // lineage). Buckets are near-singleton by construction (birthday
@@ -547,34 +545,98 @@ object SimilaritySearch {
   /** Staged banded-hyperplane key table: the (id, pkey) rows of
     * [[embeddingNearDup]]'s bucket stage, persisted to `storeDir` on
     * first touch and read back as parquet ever after — the embedding
-    * twin of [[Dedup.stagedMinHashIndex]]: an append-only corpus
-    * never re-signs its standing vectors; only each new batch pays
-    * the signature cost. Plane/band derivations are deterministic
+    * twin of [[Dedup.stagedMinHashIndex]]: every consumer of one corpus
+    * reads the one signing instead of re-signing per query. The store
+    * is keyed by its corpus: a grown corpus is a new store, signed in
+    * full (the nightly refresh keeps its own append-only store instead,
+    * see [[signNewBandKeys]]). Plane/band derivations are deterministic
     * (HyperplaneBandKeys), so a staged store is exactly what a fresh
-    * build would produce. Built once through [[graft.Tables.buildOnce]]. */
+    * build would produce. Built once through [[graft.Tables.buildOnce]];
+    * the call that builds it reads it back with the frame's own schema,
+    * so no footer job runs. */
   def stagedBandKeys(df: DataFrame, idCol: String, vecCol: String,
       storeDir: String, baseBits: Int, bands: Int,
       bitsPerBand: Int): DataFrame = {
     val spark = df.sparkSession
-    graft.Tables.buildOnce(spark, storeDir) {
-      bandKeyRows(df, idCol, vecCol, baseBits, bands, bitsPerBand)
-        .write.mode("overwrite").parquet(s"$storeDir/keys")
+    val keys = bandKeyRows(df, idCol, vecCol, baseBits, bands, bitsPerBand)
+    val built = graft.Tables.buildOnce(spark, storeDir) {
+      keys.write.mode("overwrite").parquet(s"$storeDir/keys")
     }
-    spark.read.parquet(s"$storeDir/keys")
+    graft.Tables.readParquet(spark, s"$storeDir/keys",
+      Some(keys.schema).filter(_ => built))
   }
 
   /** (id, pkey) exploded band-key rows — the build kernel behind both
-    * [[embeddingNearDup]]'s inline bucket stage and [[stagedBandKeys]]. */
+    * [[embeddingNearDup]]'s inline bucket stage and [[stagedBandKeys]].
+    * Runs no job: the key expression needs no dimension up front. */
   def bandKeyRows(df: DataFrame, idCol: String, vecCol: String,
-      baseBits: Int, bands: Int, bitsPerBand: Int): DataFrame = {
-    // dim probe must survive an EMPTY frame (a nightly refresh whose
-    // delta batch has no rows): any dim yields the same empty result
-    // with the correct schema, so the fallback never reaches data
-    val dim = df.select(size(col(vecCol)).as("d")).limit(1).collect()
-      .headOption.map(_.getInt(0)).getOrElse(1)
+      baseBits: Int, bands: Int, bitsPerBand: Int): DataFrame =
     df.select(col(idCol).as("id"),
       explode(graft.expressions.HyperplaneBandKeys(
-        col(vecCol), dim, baseBits, bands, bitsPerBand)).as("pkey"))
+        col(vecCol), baseBits, bands, bitsPerBand)).as("pkey"))
+
+  /** One night's keys against the append-only band-key store of a
+    * growing corpus: `stored` is what the store held before the night,
+    * `fresh` the keys signed now, `freshRows` their row count. `fresh`
+    * reads the staged files, so use both before [[publishBandKeys]]
+    * moves them. */
+  final case class NewBandKeys(stored: DataFrame, fresh: DataFrame,
+      freshRows: Long) {
+    def all: DataFrame = stored.unionByName(fresh)
+  }
+
+  /** Sign every row of `vectors` whose id the band-key store at
+    * `storeDir` lacks — an id is signed once, however often the corpus
+    * that holds it is handed in. The store is flat parquet files of
+    * (id, pkey) rows directly under `storeDir`. The new keys are
+    * written to `storeDir/_delta` (readers skip `_` names) in one job
+    * that also counts them, and read back with their own schema, so
+    * they are signed once and reused for the night's candidates; they
+    * join the store only when [[publishBandKeys]] moves them in.
+    * Signing what the store lacks, rather than a given batch, is what
+    * keeps a re-run idempotent (it finds nothing to sign) and lets no
+    * id be silently missed. An id's vector never changes. One writer
+    * per store. */
+  def signNewBandKeys(vectors: DataFrame, idCol: String, vecCol: String,
+      storeDir: String, baseBits: Int, bands: Int,
+      bitsPerBand: Int): NewBandKeys = {
+    val spark = vectors.sparkSession
+    val schema = bandKeyRows(vectors, idCol, vecCol, baseBits, bands,
+      bitsPerBand).schema
+    val root = new org.apache.hadoop.fs.Path(storeDir)
+    val exists = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(root)
+    val stored =
+      if (exists) spark.read.schema(schema).parquet(storeDir)
+      else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    val unsigned =
+      if (exists) vectors.join(stored.select(col("id").as(idCol)), Seq(idCol),
+        "left_anti")
+      else vectors
+    val counted = Observation()
+    val staged = s"$storeDir/_delta"
+    bandKeyRows(unsigned, idCol, vecCol, baseBits, bands, bitsPerBand)
+      .observe(counted, count(lit(1)).as("rows"))
+      .write.mode("overwrite").parquet(staged)
+    NewBandKeys(stored, spark.read.schema(schema).parquet(staged),
+      counted.get("rows").asInstanceOf[Long])
+  }
+
+  /** Move the keys [[signNewBandKeys]] staged into the store. Run it
+    * only once whatever was derived from them is committed: a crash
+    * before the move leaves their ids unsigned, so the next run signs
+    * them again instead of skipping ids whose candidates were never
+    * merged. */
+  def publishBandKeys(spark: SparkSession, storeDir: String,
+      keys: NewBandKeys): Unit = {
+    import org.apache.hadoop.fs.Path
+    val staged = new Path(s"$storeDir/_delta")
+    val fs = staged.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (keys.freshRows > 0)
+      fs.listStatus(staged).map(_.getPath)
+        .filter(_.getName.endsWith(".parquet"))
+        .foreach(f => fs.rename(f, new Path(storeDir, f.getName)))
+    fs.delete(staged, true)
   }
 
   /** [[embeddingNearDup]]'s bucket-expand + cosine-verify stages over
@@ -644,10 +706,7 @@ object SimilaritySearch {
 
   /** Incremental embedding near-dup — pairs with at least one endpoint
     * in the NEW batch, against a standing key store plus the batch
-    * itself, WITHOUT re-signing the standing corpus: the batch's keys
-    * broadcast against the (billions-of-rows at scale) standing key
-    * table, candidates expand only where buckets collide, and the
-    * exact cosine verify touches candidate pairs only. `vectors` must
+    * itself, WITHOUT re-signing the standing corpus. `vectors` must
     * hold every id that can appear (standing ∪ batch) — the cold
     * store the verify fetches from. */
   def incrementalEmbeddingNearDup(standingKeys: DataFrame,
@@ -656,7 +715,18 @@ object SimilaritySearch {
       bitsPerBand: Int): DataFrame = {
     val batchKeys = bandKeyRows(batch, idCol, vecCol,
       baseBits, bands, bitsPerBand)
-    val allKeys = standingKeys.unionByName(batchKeys)
+    incrementalNearDupFromKeys(standingKeys.unionByName(batchKeys),
+      batchKeys, vectors, idCol, vecCol, threshold)
+  }
+
+  /** [[incrementalEmbeddingNearDup]] over keys already signed: the
+    * batch's keys broadcast against `allKeys` (standing ∪ batch; the
+    * billions-of-rows side at scale), candidates expand only where
+    * buckets collide, and the exact cosine verify touches candidate
+    * pairs only. */
+  def incrementalNearDupFromKeys(allKeys: DataFrame, batchKeys: DataFrame,
+      vectors: DataFrame, idCol: String, vecCol: String,
+      threshold: Double): DataFrame = {
     val pairs = broadcast(batchKeys).as("a")
       .join(allKeys.as("b"),
         col("a.pkey") === col("b.pkey") && col("a.id") =!= col("b.id"))

@@ -58,52 +58,61 @@ object Orchestration {
   /** NIGHTLY NEAR-DUP REFRESH (r17 verdict #8) — the staging chain the
     * per-query gates exercise piecewise (q179 incremental pairs, q344
     * component merge, q41 sink) wired end-to-end as the production
-    * cycle the README tells:
+    * cycle the README tells. Two stores under `warehouse`:
+    * `neardup_keys`, the band keys of every id merged so far, and
+    * `neardup_components`, the committed (node, component) map. A night
+    * costs what its delta costs:
     *
-    *   1. standing band keys from (or created into) the staged key
-    *      store at `stageDir` — the standing corpus is never re-signed;
-    *   2. the delta batch signs only itself, joins the standing keys
-    *      for candidates, cosine-verifies candidates only;
-    *   3. yesterday's committed (node, component) label map merges
-    *      with the delta pairs (star contraction ∪ delta — merge ==
-    *      full recompute, the q344 contract). First night, with no
-    *      committed map, the full standing pair surface from the
-    *      staged keys feeds connectedComponents instead;
-    *   4. the merged map upserts through the merge-by-key sink — the
-    *      snapshot readers keep resolving while the refresh runs.
+    *   1. every id of standing ∪ batch that the key store lacks — the
+    *      batch, and any standing id no earlier night signed — is
+    *      signed once ([[SimilaritySearch.signNewBandKeys]]); those keys
+    *      probe the stored keys ∪ themselves for candidates, and only
+    *      candidates are cosine-verified;
+    *   2. yesterday's committed label map merges with the new pairs
+    *      (star contraction ∪ delta — merge == full recompute, the q344
+    *      contract). The first night, with no committed map, feeds the
+    *      whole pair surface of the keys to connectedComponents instead;
+    *   3. the merged map upserts through the merge-by-key sink — the
+    *      snapshot readers keep resolving while the refresh runs;
+    *   4. only then do the new keys join the key store, so a night that
+    *      dies before its commit signs its ids again on the re-run
+    *      instead of skipping them.
     *
-    * After the refresh the batch belongs to the standing corpus;
-    * the next night's caller stages keys for the grown corpus (the
-    * stores are stamp-keyed, so growth forces a key re-stage while
-    * the LABEL map still rides the committed table + delta merge).
-    * Returns the newly committed label map. */
+    * A night with nothing to sign (a re-run of the same night, an empty
+    * batch) commits nothing and returns the committed map. The caller
+    * hands in the grown corpus as `standing` each night; nothing in it
+    * is signed twice. `stageDir` is not used: the keys live in
+    * `warehouse`, and the parameter stays so callers need not change.
+    * One writer per warehouse. Returns the committed label map. */
   def runNearDupRefresh(spark: SparkSession, standing: DataFrame,
       batch: DataFrame, idCol: String, vecCol: String,
       threshold: Double, stageDir: String, warehouse: String,
       baseBits: Int, bands: Int, bitsPerBand: Int): DataFrame = {
     import graft.operators.{Dedup, SimilaritySearch}
-    val keys = SimilaritySearch.stagedBandKeys(standing, idCol, vecCol,
-      stageDir, baseBits, bands, bitsPerBand)
-    val vectors = standing.unionByName(batch)
-    val deltaPairs = SimilaritySearch.incrementalEmbeddingNearDup(
-      keys, vectors, batch, idCol, vecCol, threshold,
-      baseBits, bands, bitsPerBand)
-      .select(col("id_a"), col("id_b"))
     val table = s"$warehouse/neardup_components"
-    val merged = MergeByKey.committedVersion(spark, table) match {
-      case Some(_) =>
-        Dedup.mergeComponentMap(
-          MergeByKey.readCommitted(spark, table)
-            .select(col("node"), col("component")),
-          deltaPairs, "id_a", "id_b")
-      case None =>
-        val standingPairs = SimilaritySearch.embeddingNearDupFromKeys(
-          keys, standing, idCol, vecCol, threshold)
-          .select(col("id_a"), col("id_b"))
-        Dedup.connectedComponents(
-          standingPairs.unionByName(deltaPairs), "id_a", "id_b")
+    val keyStore = s"$warehouse/neardup_keys"
+    val vectors = standing.unionByName(batch)
+    val keys = SimilaritySearch.signNewBandKeys(vectors, idCol, vecCol,
+      keyStore, baseBits, bands, bitsPerBand)
+    val committed = MergeByKey.committedVersion(spark, table)
+    if (committed.isEmpty || keys.freshRows > 0) {
+      val merged = committed match {
+        case Some(_) =>
+          Dedup.mergeComponentMap(
+            MergeByKey.readCommitted(spark, table)
+              .select(col("node"), col("component")),
+            SimilaritySearch.incrementalNearDupFromKeys(keys.all, keys.fresh,
+              vectors, idCol, vecCol, threshold).select(col("id_a"), col("id_b")),
+            "id_a", "id_b")
+        case None =>
+          Dedup.connectedComponents(
+            SimilaritySearch.embeddingNearDupFromKeys(keys.all, vectors,
+              idCol, vecCol, threshold).select(col("id_a"), col("id_b")),
+            "id_a", "id_b")
+      }
+      MergeByKey.upsert(spark, merged, table, "node")
     }
-    MergeByKey.upsert(spark, merged, table, "node")
+    SimilaritySearch.publishBandKeys(spark, keyStore, keys)
     MergeByKey.readCommitted(spark, table)
   }
 

@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** S7 — upsert ("merge-by-key") sink over parquet directories
   * (SURVEY.md §2.1 S7; ref uploadtodb.py:159-198 batched REST upsert).
@@ -52,23 +53,29 @@ import org.apache.spark.sql.functions._
   * read a parquet footer, so the first read of N in a session PINS it:
   * the relation is kept with one data file it listed, and later reads
   * of N in the same session reuse it after the manifest read and one
-  * existence check, running no Spark job. The commit loop reads its
-  * merge head through the same pin. A pin is valid only while the
-  * manifest still names N and its data file still exists; part-file
-  * names carry a per-write UUID, so a GC'd version, or a store deleted
-  * and recreated at the same path with the same version numbers, misses
-  * and is rebuilt instead of serving stale files. Bound: one pin per
-  * (session, path) — a newer version replaces it — a commit drops every
-  * pin of its path, since none can match the manifest again, and at most
-  * 32 pins per JVM, least recently used evicted. A pin holds no rows,
-  * but its key and its relation keep the reading SparkSession, with all
-  * of that session's state, reachable until the pin goes: a finished
-  * streaming query's per-query clone session lives on while one of its
-  * pins is among the 32 most recently used and its path has had no
-  * commit since. A pin's frame also keeps the screener plans
-  * `Screeners.respond` prepared over it reachable; `Screeners` uses
-  * them only while the frame is pinned ([[isPinned]]), so a commit or
-  * an eviction retires them with the pin.
+  * existence check, running no Spark job. A commit pins what it wrote:
+  * after the manifest flip it drops every pin of its path, since none
+  * can match the manifest again, and pins `v=N+1` for the writer's
+  * session, read with the schema of the frame it staged — a listing,
+  * no footer job — so the writer's next read of the head (the next
+  * night's merge, a read right after the upsert) runs no Spark job.
+  * Other sessions pin `v=N+1` on their own first read. The commit loop
+  * reads its merge head through the same pin. A pin is valid only
+  * while the manifest still names N and its data file still exists;
+  * part-file names carry a per-write UUID, so a GC'd version, or a
+  * store deleted and recreated at the same path with the same version
+  * numbers, misses and is rebuilt instead of serving stale files.
+  * Bound: one pin per (session, path) — a newer version replaces it —
+  * and at most 32 pins per JVM, least recently used evicted. A pin
+  * holds no rows, but its key and its relation keep the reading (or
+  * writing) SparkSession, with all of that session's state, reachable
+  * until the pin goes: a finished streaming query's per-query clone
+  * session lives on while one of its pins is among the 32 most
+  * recently used and its path has had no commit since. A pin's frame
+  * also keeps the screener plans `Screeners.respond` prepared over it
+  * reachable; `Screeners` uses them only while the frame is pinned
+  * ([[isPinned]]), so a commit or an eviction retires them with the
+  * pin.
   *
   * Crash window: a writer that dies AFTER claiming `v=N+1` but BEFORE
   * flipping the manifest leaves the claim dir orphaned; concurrent
@@ -200,13 +207,20 @@ object MergeByKey {
     val pin = pins.synchronized(pins.get(key))
     if (pin != null && pin.version == v && fs(spark, path).exists(pin.file))
       pin.df
-    else {
-      val df = spark.read.parquet(s"$path/v=$v")
-      df.inputFiles.headOption.foreach { f =>
-        pins.synchronized(pins.put(key, Pin(v, df, new Path(new java.net.URI(f)))))
-      }
-      df
+    else pinVersion(spark, path, v, None)
+  }
+
+  /** Read version `v` (with `schema`, the schema it was written with,
+    * when the caller holds it: then no footer job runs) and make it
+    * `spark`'s pin of `path`. */
+  private def pinVersion(spark: SparkSession, path: String, v: Long,
+      schema: Option[StructType]): DataFrame = {
+    val df = graft.Tables.readParquet(spark, s"$path/v=$v", schema)
+    df.inputFiles.headOption.foreach { f =>
+      pins.synchronized(pins.put((spark, path),
+        Pin(v, df, new Path(new java.net.URI(f)))))
     }
+    df
   }
 
   /** Name of the per-version commit record the claim winner drops into
@@ -413,8 +427,8 @@ object MergeByKey {
     if (cur.isEmpty) requireNoForeignContent(spark, path)
     val next = cur.getOrElse(-1L) + 1L
     val stage = new Path(s"$path/.stage-${java.util.UUID.randomUUID()}")
-    stageNext(cur.map(snapshot(spark, path, _)))
-      .write.mode(SaveMode.Overwrite).parquet(stage.toString)
+    val staged = stageNext(cur.map(snapshot(spark, path, _)))
+    staged.write.mode(SaveMode.Overwrite).parquet(stage.toString)
     val claimed = new Path(s"$path/v=$next")
     val won = claimVersion(spark, stage, claimed)
     // Stale-claim recheck: the claim can succeed against a GC'd slot — a
@@ -433,9 +447,12 @@ object MergeByKey {
       gc(spark, path, next)
       // the store gained a version: drop any cached listing of the root,
       // and every pin of it, so no session stays reachable through a pin
-      // that can never match the manifest again
+      // that can never match the manifest again; then pin what was just
+      // written for the writer's session, read with the schema it was
+      // written with, so its next read of the head runs no job
       spark.catalog.refreshByPath(path)
       pins.synchronized(pins.keySet.removeIf(_._2 == path))
+      pinVersion(spark, path, next, Some(staged.schema))
     } else {
       fs(spark, path).delete(if (won) claimed else stage, true)
       if (attempt >= maxAttempts) throw new IllegalStateException(

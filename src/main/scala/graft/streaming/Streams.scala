@@ -561,7 +561,10 @@ object Streams {
     * the update per micro-batch is the same decrement rule as the batch
     * aggregate, so the bound — every item with frequency > N/(k+1) is
     * tracked — carries over. Emits the group's current summary each
-    * trigger (Update mode): (group, total seen, tracked items sorted). */
+    * trigger (Update mode): (group, total seen, tracked items sorted).
+    * A NULL item is skipped, as pandas `value_counts` drops NaN: it is
+    * neither tracked nor counted in `n`, which is the number of non-NULL
+    * items seen. */
   case class ItemEvent(group: String, item: String)
   case class HHState(n: Long, counters: Map[String, Long])
   case class HHSummary(group: String, n: Long, items: Map[String, Long])
@@ -579,7 +582,7 @@ object Streams {
           var n = st.n
           val buf = new java.util.HashMap[String, Long](k * 2)
           st.counters.foreach { case (it, w) => buf.put(it, w) }
-          batch.foreach { e =>
+          batch.filter(_.item != null).foreach { e =>
             n += 1
             val cur = buf.get(e.item)
             if (cur != 0L || buf.containsKey(e.item)) buf.put(e.item, cur + 1)
@@ -734,17 +737,25 @@ object Streams {
       .partitionBy(batchCol).parquet(tmp)
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // A NULL batch value lands in Hive's default partition; name it as
+    // a harness error rather than failing on the number parse below
+    def batchOf(st: org.apache.hadoop.fs.FileStatus): Long = {
+      val v = st.getPath.getName.stripPrefix(s"$batchCol=")
+      v.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"staged batch values must be non-NULL integers, got $batchCol=$v " +
+          s"in $tmp — drop or assign the rows whose $batchCol is NULL " +
+          "before staging"))
+    }
     val batchDirs = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
       .filter(st => st.isDirectory &&
         st.getPath.getName.startsWith(s"$batchCol="))
-      .sortBy(_.getPath.getName.stripPrefix(s"$batchCol=").toLong)
+      .sortBy(batchOf)
     // The streaming oracles (q169/q175/q177/q181/q182/q192) pin
     // micro-batch numbering to the staged-file order, which assumes
     // every batch value 0..k-1 actually produced a file — a missing
     // value silently renumbers the engine's batches but not the
     // oracle's (r12 advice). Fail fast as a HARNESS error instead:
-    val staged = batchDirs
-      .map(_.getPath.getName.stripPrefix(s"$batchCol=").toLong).toSeq
+    val staged = batchDirs.map(batchOf).toSeq
     require(staged == staged.indices.map(_.toLong),
       s"staged batch values must be contiguous 0..k-1, got $staged — " +
         "a missing/empty batch would desync engine and oracle batch " +

@@ -571,7 +571,7 @@ object ScaleProbe {
     if (only.forall(_.contains("lsh_neardup_candidates"))) {
       val allVecPairs = nDocs * (nDocs - 1) / 2
       val bandKeys = graft.expressions.HyperplaneBandKeys(
-        col("embedding"), dim, 512, 96, 16)
+        col("embedding"), 512, 96, 16)
       val buckets = labeledVecs
         .select(explode(bandKeys).as("pkey"))
         .groupBy(col("pkey")).agg(count(lit(1)).as("s"))

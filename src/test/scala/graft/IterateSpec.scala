@@ -75,4 +75,19 @@ class IterateSpec extends SparkSpec {
     assert(xs(out) == Seq(4L))
     Caches.unpersistAll()
   }
+
+  test("untilFixpoint stops at the first state that observes its " +
+    "fixpoint, with no confirming round, and throws past its cap") {
+    val atCap = max(col("x")) === 3L
+    // 0 -> 1 -> 2 -> 3: the third state observes the fixpoint
+    val (out, ran) = Iterate.untilFixpoint(Seq(0L).toDF("x"), 10, "grow")(
+      grow(3L))(atCap)
+    assert(xs(out) == Seq(3L) && ran == 3)
+    assert(Iterate.untilFixpoint(Seq(3L).toDF("x"), 10, "grow")(grow(3L))(
+      atCap)._2 == 0, "an initial state at the fixpoint runs no round")
+    val e = intercept[IllegalStateException] {
+      Iterate.untilFixpoint(Seq(0L).toDF("x"), 2, "grow")(grow(3L))(atCap)
+    }
+    assert(e.getMessage == "grow did not converge within 2 rounds")
+  }
 }

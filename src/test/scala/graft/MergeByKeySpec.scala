@@ -110,7 +110,8 @@ class MergeByKeySpec extends SparkSpec {
     MergeByKey.upsert(other, other.createDataFrame(Seq(("B", 2.0))).toDF("k", "v"),
       dir, "k")
     assert(MergeByKey.pinnedVersion(spark, dir) === None)
-    assert(MergeByKey.pinnedVersion(other, dir) === None)
+    // the writer's own session is pinned to what it just committed
+    assert(MergeByKey.pinnedVersion(other, dir) === Some(1L))
     assert(MergeByKey.readCommitted(spark, dir).rowsSet ==
       Set(Seq("A", 1.0), Seq("B", 2.0)))
     assert(MergeByKey.pinnedVersion(spark, dir) === Some(1L))

@@ -106,6 +106,124 @@ class OrchestrationSpec extends SparkSpec {
       s"$wh/neardup_components") === Some(1L))
   }
 
+  /** A deterministic 8-d vector per seed: equal seeds are exact twins. */
+  private def vec8(seed: Int): Array[Float] = (0 until 8).map { d =>
+    val h = scala.util.hashing.MurmurHash3.productHash((seed, d))
+    (h % 1000) / 1000.0f
+  }.toArray
+
+  test("nightly near-dup refresh over a growing corpus: each night's key " +
+    "store is a fresh signing of the grown corpus, its map a full " +
+    "recompute, and a re-run of a night changes neither") {
+    import graft.operators.{Dedup, SimilaritySearch}
+    import graft.sinks.MergeByKey
+    val dir = Files.createTempDirectory("graft_refresh_grow")
+    val wh = s"$dir/warehouse"
+    def frame(rows: (Long, Int)*) =
+      rows.map { case (id, seed) => (id, vec8(seed)) }.toDF("vec_id", "embedding")
+    // night 1 builds; nights 2-4 each bring twins of earlier ids, a
+    // bridge between two clusters, and loners
+    val batches = Seq(
+      frame(1L -> 0, 2L -> 0, 3L -> 1, 4L -> 2),
+      frame(5L -> 1, 6L -> 3, 7L -> 3),
+      frame(8L -> 0, 9L -> 4, 10L -> 5),
+      frame(11L -> 4, 12L -> 3, 13L -> 6))
+    def refresh(standing: org.apache.spark.sql.DataFrame,
+        batch: org.apache.spark.sql.DataFrame, night: Int) =
+      Orchestration.runNearDupRefresh(spark, standing, batch, "vec_id",
+        "embedding", threshold = 0.999, s"$dir/stage/night$night", wh,
+        baseBits = 128, bands = 16, bitsPerBand = 8)
+    def keyRows = spark.read.parquet(s"$wh/neardup_keys")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    def mapRows(m: org.apache.spark.sql.DataFrame) =
+      m.select("node", "component").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    var standing = batches.head
+    val empty = frame()
+    batches.zipWithIndex.foreach { case (b, i) =>
+      val batch = if (i == 0) empty else b
+      val night = refresh(standing, batch, i + 1)
+      val grown = if (i == 0) standing else standing.unionByName(batch)
+      val fresh = SimilaritySearch.bandKeyRows(grown, "vec_id", "embedding",
+        128, 16, 8).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+      assert(keyRows == fresh, s"night ${i + 1}: key store != fresh signing")
+      val full = Dedup.connectedComponents(
+        SimilaritySearch.embeddingNearDupFromKeys(
+          SimilaritySearch.bandKeyRows(grown, "vec_id", "embedding", 128, 16, 8),
+          grown, "vec_id", "embedding", 0.999), "id_a", "id_b")
+      assert(mapRows(night) == mapRows(full),
+        s"night ${i + 1}: merged map != full recompute")
+      // the same night again: nothing to sign, nothing to commit
+      val version = MergeByKey.committedVersion(spark, s"$wh/neardup_components")
+      val again = refresh(standing, batch, i + 1)
+      assert(keyRows == fresh, s"night ${i + 1} re-run changed the key store")
+      assert(mapRows(again) == mapRows(full),
+        s"night ${i + 1} re-run changed the map")
+      assert(MergeByKey.committedVersion(spark, s"$wh/neardup_components") ==
+        version, s"night ${i + 1} re-run committed a version")
+      standing = grown
+    }
+    assert(mapRows(MergeByKey.readCommitted(spark, s"$wh/neardup_components")) ==
+      Seq(1L -> 1L, 2L -> 1L, 3L -> 3L, 5L -> 3L, 6L -> 6L, 7L -> 6L,
+        8L -> 1L, 9L -> 9L, 11L -> 9L, 12L -> 6L))
+  }
+
+  test("the nightly refresh signs a standing id its key store lacks") {
+    import graft.operators.SimilaritySearch
+    val dir = Files.createTempDirectory("graft_refresh_lacks")
+    val wh = s"$dir/warehouse"
+    val first = Seq((1L, vec8(0)), (2L, vec8(1))).toDF("vec_id", "embedding")
+    def refresh(standing: org.apache.spark.sql.DataFrame,
+        batch: org.apache.spark.sql.DataFrame) =
+      Orchestration.runNearDupRefresh(spark, standing, batch, "vec_id",
+        "embedding", threshold = 0.999, s"$dir/stage", wh,
+        baseBits = 128, bands = 16, bitsPerBand = 8)
+    refresh(first, first.limit(0))
+    // id 3 joins the standing corpus without a night of its own; the
+    // next night must sign it and find its twin 1 anyway
+    val standing = first.unionByName(Seq((3L, vec8(0))).toDF("vec_id", "embedding"))
+    val night = refresh(standing, Seq((4L, vec8(1))).toDF("vec_id", "embedding"))
+    assert(night.rowsSet == Set(Seq(1L, 1L), Seq(3L, 1L), Seq(2L, 2L), Seq(4L, 2L)))
+    val all = standing.unionByName(Seq((4L, vec8(1))).toDF("vec_id", "embedding"))
+    assert(spark.read.parquet(s"$wh/neardup_keys").rowsSet ==
+      SimilaritySearch.bandKeyRows(all, "vec_id", "embedding", 128, 16, 8).rowsSet)
+  }
+
+  test("a schema handed forward equals the inferred one, nullability " +
+    "included: staged corpus, key store, committed version") {
+    import org.apache.spark.sql.types._
+    import graft.operators.SimilaritySearch
+    import graft.sinks.MergeByKey
+    val dir = Files.createTempDirectory("graft_schema_forward")
+    val schema = StructType(Seq(StructField("vec_id", LongType, nullable = false),
+      StructField("embedding", ArrayType(FloatType, containsNull = false),
+        nullable = false),
+      StructField("tag", StringType)))
+    val rows = java.util.Arrays.asList(
+      org.apache.spark.sql.Row(1L, Array(0.5f, 0.25f), "a"),
+      org.apache.spark.sql.Row(2L, Array(0.5f, 0.25f), null))
+    val df = spark.createDataFrame(rows, schema)
+    def inferred(path: String) = spark.read.parquet(path).schema
+    val corpus = Tables.stagedParquet(spark, s"$dir/corpus")(df)
+    assert(corpus.schema == inferred(s"$dir/corpus/data"))
+    val keys = SimilaritySearch.stagedBandKeys(df, "vec_id", "embedding",
+      s"$dir/keys", 64, 4, 8)
+    assert(keys.schema == inferred(s"$dir/keys/keys"))
+    val signed = SimilaritySearch.signNewBandKeys(df, "vec_id", "embedding",
+      s"$dir/store", 64, 4, 8)
+    assert(signed.fresh.schema == inferred(s"$dir/store/_delta"))
+    SimilaritySearch.publishBandKeys(spark, s"$dir/store", signed)
+    val again = SimilaritySearch.signNewBandKeys(df, "vec_id", "embedding",
+      s"$dir/store", 64, 4, 8)
+    assert(again.freshRows == 0L)
+    assert(again.stored.schema == inferred(s"$dir/store"))
+    MergeByKey.upsert(spark, df, s"$dir/table", "vec_id")
+    assert(MergeByKey.readCommitted(spark, s"$dir/table").schema ==
+      inferred(s"$dir/table/v=0"))
+    assert(MergeByKey.readCommitted(spark, s"$dir/table").collect()
+      .map(_.getString(2)).toSet == Set("a", null))
+  }
+
   test("group momentum keyed update writes only score columns") {
     val dir = Files.createTempDirectory("graft_e2e_grp")
     val wh = s"$dir/warehouse"

@@ -1260,4 +1260,59 @@ class PlanAuditSpec extends SparkSpec {
       "the least recently read of maxPins + 1 stores must have been evicted")
     FileUtils.deleteDirectory(root)
   }
+
+  test("readCommitted right after an upsert runs no Spark job in the " +
+    "writer's session; a staged store's read right after its build runs " +
+    "none") {
+    import graft.sinks.MergeByKey
+    val root = java.nio.file.Files.createTempDirectory("graft_handed_forward")
+    val rows = (1 to 50).map(i => (i.toLong, s"r$i", i * 0.5)).toDF("id", "v", "x")
+    val table = s"$root/t"
+    MergeByKey.upsert(spark, rows, table, "id")
+    assert(jobsRunBy(MergeByKey.readCommitted(spark, table)) == 0,
+      "the first commit's read-back ran a job")
+    MergeByKey.upsert(spark, rows.limit(5).withColumn("x", lit(99.0)), table, "id")
+    var head: org.apache.spark.sql.DataFrame = null
+    assert(jobsRunBy { head = MergeByKey.readCommitted(spark, table) } == 0,
+      "a read right after a merge commit ran a job")
+    assert(head.filter(col("x") === 99.0).count() == 5 && head.count() == 50)
+    val writeJobs = jobsRunBy(rows.write.parquet(s"$root/plain"))
+    val stagedJobs = jobsRunBy(Tables.stagedParquet(spark, s"$root/staged")(rows))
+    assert(stagedJobs == writeJobs,
+      s"stagedParquet ran $stagedJobs jobs where its write alone runs $writeJobs")
+  }
+
+  test("a nightly refresh delta night runs no dimension probe, and no " +
+    "action but its two writes and the components' checkpoints") {
+    import graft.pipeline.Orchestration
+    val root = java.nio.file.Files.createTempDirectory("graft_night_actions")
+    def vec(seed: Int): Array[Float] = (0 until 8).map { d =>
+      val h = scala.util.hashing.MurmurHash3.productHash((seed, d))
+      (h % 1000) / 1000.0f
+    }.toArray
+    val standing = Seq((1L, vec(0)), (2L, vec(0)), (3L, vec(1)))
+      .toDF("vec_id", "embedding")
+    def night(standing: org.apache.spark.sql.DataFrame,
+        batch: org.apache.spark.sql.DataFrame) =
+      Orchestration.runNearDupRefresh(spark, standing, batch, "vec_id",
+        "embedding", threshold = 0.999, s"$root/stage", s"$root/wh",
+        baseBits = 128, bands = 16, bitsPerBand = 8)
+    night(standing, standing.limit(0))
+    val batch = Seq((4L, vec(0)), (5L, vec(1))).toDF("vec_id", "embedding")
+    val runs = executionsRunBy(night(standing, batch))
+    val names = runs.map(_._1)
+    val probes = runs.filter { case (_, qe) =>
+      qe.analyzed.exists(_.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.GlobalLimit])
+    }
+    assert(probes.isEmpty, s"a limit action ran: ${probes.map(_._1)}")
+    // the key signing and the map upsert write; everything else is a
+    // round's checkpoint
+    val (checkpoints, others) = runs.partition(_._1 == "localCheckpoint")
+    assert(checkpoints.nonEmpty && others.size == 2 &&
+      others.forall(_._2.analyzed.isInstanceOf[
+        org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand]),
+      s"actions other than the two writes and the checkpoints: $names")
+    Caches.unpersistAll()
+  }
 }

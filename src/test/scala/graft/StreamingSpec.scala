@@ -126,4 +126,39 @@ class StreamingSpec extends SparkSpec {
       assert(last.items("hot") <= 9L && last.items("hot") >= 9L - 14L / 3)
     } finally q.stop()
   }
+
+  test("streaming heavy hitters: a NULL item is skipped, not counted, and " +
+    "the stream lives on") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val input = MemoryStream[Streams.ItemEvent]
+    val hh = Streams.streamingHeavyHitters(input.toDS(), k = 2)
+    val q = hh.writeStream.format("memory")
+      .queryName("stream_hh_null").outputMode("update").start()
+    try {
+      input.addData(Streams.ItemEvent("g", "hot"), Streams.ItemEvent("g", null),
+        Streams.ItemEvent("g", "hot"))
+      q.processAllAvailable()
+      input.addData(Streams.ItemEvent("g", null), Streams.ItemEvent("g", "x"))
+      q.processAllAvailable()
+      assert(q.exception.isEmpty, q.exception.toString)
+      val last = spark.table("stream_hh_null").as[Streams.HHSummary]
+        .collect().maxBy(_.n)
+      assert(last.n === 3L, "n counts the non-NULL items only")
+      assert(last.items == Map("hot" -> 2L, "x" -> 1L))
+    } finally q.stop()
+  }
+
+  test("stageBatchFiles: a NULL batch value fails as a named harness " +
+    "error, not a number parse") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_null_batch")
+    val df = Seq(("a", Some(0)), ("b", None), ("c", Some(1))).toDF("v", "b")
+    val e = intercept[IllegalArgumentException] {
+      Streams.stageBatchFiles(df, "b", s"$dir/feed")
+    }
+    assert(!e.isInstanceOf[NumberFormatException])
+    assert(e.getMessage.contains("non-NULL") &&
+      e.getMessage.contains("b=__HIVE_DEFAULT_PARTITION__"), e.getMessage)
+  }
 }

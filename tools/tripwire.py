@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Driver-artifact tripwire (r16 verdict #1, the round's lead item).
 
-Usage: python3 tools/tripwire.py <CORRECTNESS_rN.json> [SparkEntry.scala]
+Usage: python3 tools/tripwire.py <CORRECTNESS_rN.json> [catalog dir]
 
 Round 16's official correctness record arrived as a literal `{}` — a
 driver-side artifact failure that nothing in the repo could catch, so
@@ -10,18 +10,21 @@ exits non-zero whenever a driver correctness artifact holds FEWER
 entries than `SparkEntry.queries` declares, so a silently-empty (or
 silently-truncated) artifact can never again read as all-green.
 
-The expected count comes from the query keys declared in
-SparkEntry.scala (the `"qNNN_name" -> ((s, dir)` registration pattern —
-the same keys Verify writes as output dirs and compare.py judges).
+The expected count comes from the query keys declared in the catalog
+(the `Query("qNNN_name", …)` entries in the .scala files under
+src/main/scala/graft/catalog/ — the same keys Verify writes as output
+dirs and compare.py judges).
 Supported artifact shapes: a {name: status} map (possibly nested under
 a "queries" key), or a list of per-query entries.
 """
-import sys, re, json
+import glob, json, os, re, sys
 
 
-def expected_queries(entry_path):
-    src = open(entry_path, encoding="utf-8").read()
-    names = re.findall(r'"(q[0-9]+[a-z0-9_]*)"\s*->\s*\(\(', src)
+def expected_queries(catalog_dir):
+    names = []
+    for f in sorted(glob.glob(os.path.join(catalog_dir, "*.scala"))):
+        src = open(f, encoding="utf-8").read()
+        names += re.findall(r'\bQuery\(\s*"(q[0-9]+[a-z0-9_]*)"', src)
     return sorted(set(names))
 
 
@@ -42,17 +45,17 @@ def artifact_entries(path):
     return []
 
 
-def main(artifact, entry_path="src/main/scala/graft/SparkEntry.scala"):
-    expected = expected_queries(entry_path)
+def main(artifact, catalog_dir="src/main/scala/graft/catalog"):
+    expected = expected_queries(catalog_dir)
     if not expected:
-        print(f"TRIPWIRE: could not parse any query keys from {entry_path}")
+        print(f"TRIPWIRE: could not parse any query keys from {catalog_dir}")
         return 2
     got = artifact_entries(artifact)
     missing = sorted(set(expected) - set(got))
     print(f"declared queries: {len(expected)}; artifact entries: {len(got)}")
-    if len(got) < len(expected):
+    if missing:
         print(f"TRIPWIRE: {artifact} holds {len(got)} entries but "
-              f"SparkEntry.queries declares {len(expected)} — the driver "
+              f"the catalog declares {len(expected)} — the "
               "artifact is empty or truncated, NOT all-green. "
               f"First missing: {missing[:10]}")
         return 1
