@@ -1,7 +1,7 @@
 package graft.serve
 
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.RankOps
 import graft.sinks.MergeByKey
@@ -23,28 +23,29 @@ import graft.sinks.MergeByKey
   * byte for byte (ScreenersSpec), but `toJSON` maps over the top-k and
   * so forces a single-partition shuffle and a second stage.
   *
-  * == Prepared plans over a pinned snapshot ==
+  * == One answer per committed version ==
   *
   * When [[respond]] gets a frame that is a live `MergeByKey` pin (the
-  * very object `readCommitted` returns), it keeps the screener's planned
-  * emit `Dataset` and later requests call `collect()` on it again:
-  * analysis, optimisation, physical planning and codegen are skipped,
-  * while each request still scans the pinned files and recomputes the
-  * top-k. Any other frame is planned anew on every call, so a caller's
-  * `current_timestamp()` is never frozen into a kept plan. Prepared
-  * plans are held weakly by their frame and looked up only while it is
-  * pinned: once a commit or LRU eviction drops the pin, they never
-  * answer again and become unreachable with the frame.
+  * very object `readCommitted` returns), the first request for a
+  * screener computes its records with the single-stage emit and keeps
+  * them; every later request for that (pin, screener) answers from the
+  * kept records and runs no Spark job. Only the records are kept: the
+  * envelope, with its `timestamp`, is built per request, and a run that
+  * failed keeps nothing, so the next request runs again. Any other
+  * frame is computed anew on every call, so a caller's
+  * `current_timestamp()` is never frozen into a kept answer.
   *
-  * One prepared plan is never run by two threads at once. The driver-side
-  * projection shares `to_json`'s generator and writer, so threads sharing
-  * one plan get corrupt replies: `{{"symbol":…`, a field written twice,
-  * or a `JsonGenerationException` (MergeByKeySpec's four-thread spec
-  * fails that way). So each (pin, screener) keeps a pool:
-  * a caller takes a plan, or plans one when the pool is empty, and puts
-  * it back after a successful run. The pool never holds more plans than
-  * the peak number of concurrent callers; a run that failed drops its
-  * plan.
+  * This is sound because a pin reads one immutable `v=N`, whose part
+  * files carry a per-write UUID, and each screener is deterministic with
+  * a total order (score desc nulls last, then symbol): the records are
+  * a function of the frame. Records are held weakly by their frame and
+  * looked up only while it is pinned. A commit or an LRU eviction drops
+  * the pin; the retired frame is then computed anew per call, and by
+  * snapshot isolation it still answers its own version, while readers of
+  * the new head get a new pin and compute its answer once.
+  *
+  * Negative result: one prepared emit `Dataset` run by two threads at
+  * once corrupts replies (its driver-side `to_json` writer is shared).
   *
   * Auth / rate limiting are HTTP-framework concerns that sit in front of
   * this registry, out of engine scope.
@@ -65,42 +66,26 @@ object Screeners {
   def run(name: String, scored: DataFrame): DataFrame =
     registry(name)(scored)
 
-  /** `/screeners` discovery analog — the reference's
-    * `list_available_screeners` returns its name→source map
-    * (`SCREENER_URLS.copy()`); here the registry's names, sorted. */
-  def listScreeners: Seq[String] = registry.keys.toSeq.sorted
-
   /** S11 CSV→JSON emit (`csv_to_json` in the recovered bytecode): one
-    * JSON object per row, driver-side only for final small results. */
-  def toJsonRecords(result: DataFrame, limit: Int = maxRecords): Seq[String] =
-    emit(result, limit).collect().toSeq
+    * JSON object per row, at most `limit` rows, driver-side only for
+    * final small results (see "Single-stage emit"). */
+  def toJsonRecords(result: DataFrame, limit: Int = 1000): Seq[String] =
+    result.limit(limit).select(to_json(struct(col("*"))))
+      .as(Encoders.STRING).collect().toSeq
 
-  /** Records a response carries at most. */
-  private val maxRecords = 1000
+  /** Records per pinned frame: frame → screener → records. Weakly
+    * keyed, so a frame's records go with it. */
+  private val memo =
+    new java.util.WeakHashMap[DataFrame, ConcurrentHashMap[String, Seq[String]]]()
 
-  /** The single-stage emit plan of `result` (see "Single-stage emit"). */
-  private def emit(result: DataFrame, limit: Int): Dataset[String] =
-    result.limit(limit).select(to_json(struct(col("*")))).as(Encoders.STRING)
-
-  /** Pools of prepared emit plans: pinned frame → screener → plans not
-    * running right now. Weakly keyed, so a frame's plans go with it. */
-  private val prepared = new java.util.WeakHashMap[DataFrame,
-    ConcurrentHashMap[String, ConcurrentLinkedQueue[Dataset[String]]]]()
-
-  /** The records of screener `name` over `scored`: from a pooled
-    * prepared plan when `scored` is a live pin, else planned anew. */
+  /** The records of screener `name` over `scored`: computed once per
+    * screener while `scored` is a live pin, else computed anew. */
   private def records(name: String, fn: DataFrame => DataFrame,
       scored: DataFrame): Seq[String] =
     if (!MergeByKey.isPinned(scored)) toJsonRecords(fn(scored))
-    else {
-      val pool = prepared.synchronized(prepared.computeIfAbsent(scored,
-        _ => new ConcurrentHashMap[String, ConcurrentLinkedQueue[Dataset[String]]]()))
-        .computeIfAbsent(name, _ => new ConcurrentLinkedQueue[Dataset[String]]())
-      val plan = Option(pool.poll()).getOrElse(emit(fn(scored), maxRecords))
-      val rows = plan.collect().toSeq
-      pool.offer(plan)
-      rows
-    }
+    else memo.synchronized(memo.computeIfAbsent(scored,
+        _ => new ConcurrentHashMap[String, Seq[String]]()))
+      .computeIfAbsent(name, _ => toJsonRecords(fn(scored)))
 
   /** Response envelope with the reference's exact `ScreenerResponse`
     * fields, in model order and always present (pydantic serializes

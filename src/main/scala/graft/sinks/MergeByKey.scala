@@ -72,10 +72,10 @@ import org.apache.spark.sql.types.StructType
   * until the pin goes: a finished streaming query's per-query clone
   * session lives on while one of its pins is among the 32 most
   * recently used and its path has had no commit since. A pin's frame
-  * also keeps the screener plans `Screeners.respond` prepared over it
-  * reachable; `Screeners` uses them only while the frame is pinned
-  * ([[isPinned]]), so a commit or an eviction retires them with the
-  * pin.
+  * also keeps the screener records `Screeners.respond` computed over it
+  * reachable; `Screeners` answers from them only while the frame is
+  * pinned ([[isPinned]]), so a commit or an eviction retires them with
+  * the pin.
   *
   * Crash window: a writer that dies AFTER claiming `v=N+1` but BEFORE
   * flipping the manifest leaves the claim dir orphaned; concurrent

@@ -1174,30 +1174,38 @@ class PlanAuditSpec extends SparkSpec {
     (dir, MergeByKey.readCommitted(spark, dir))
   }
 
-  test("a repeat screener response over the same pin runs 1 job of 1 " +
-    "stage: the first request's QueryExecution, with no exchange or " +
-    "adaptive node to replay") {
+  /** A screener envelope with its per-request timestamp blanked. */
+  private def blank(reply: String) =
+    reply.replaceAll("\"timestamp\":\"[^\"]*\"", "")
+
+  test("a screener's first response over a pin runs 1 job of 1 stage with " +
+    "no exchange or adaptive node; a repeat runs no job and answers the " +
+    "same body") {
     import graft.serve.Screeners
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.Exchange
-    val (_, pin) = pinnedScreenerStore("graft_prepared")
+    val (_, pin) = pinnedScreenerStore("graft_memo")
     for (name <- Seq("btst", "swing", "position")) {
-      val first = executionsRunBy(Screeners.respond(spark, name, pin))
-      assert(first.map(_._1) == Seq("collect"), s"$name: $first")
-      val firstPlan = first.head._2.executedPlan
-      assert(firstPlan.find {
+      var first = ""
+      var jobsAndStages = (0, 0)
+      val runs = executionsRunBy {
+        jobsAndStages = jobsAndStagesRunBy {
+          first = blank(Screeners.respond(spark, name, pin))
+        }
+      }
+      assert(first.startsWith("{\"success\":true,"), first)
+      assert(runs.map(_._1) == Seq("collect"), s"$name: $runs")
+      assert(jobsAndStages == (1, 1),
+        s"a first $name response ran $jobsAndStages (jobs, stages)")
+      val plan = runs.head._2.executedPlan
+      assert(plan.find {
         case _: Exchange | _: AdaptiveSparkPlanExec => true
         case _ => false
-      }.isEmpty, s"$name's emit plan is not single-stage:\n$firstPlan")
-      var reply = ""
-      val (jobs, stages) =
-        jobsAndStagesRunBy { reply = Screeners.respond(spark, name, pin) }
-      assert(reply.startsWith("{\"success\":true,"), reply)
-      assert((jobs, stages) == (1, 1),
-        s"a repeat $name response ran $jobs jobs of $stages stages")
-      val again = executionsRunBy(Screeners.respond(spark, name, pin))
-      assert(again.size == 1 && (again.head._2 eq first.head._2),
-        s"a repeat $name response planned anew")
+      }.isEmpty, s"$name's emit plan is not single-stage:\n$plan")
+      var repeat = ""
+      val repeatJobs = jobsRunBy { repeat = blank(Screeners.respond(spark, name, pin)) }
+      assert(repeatJobs == 0, s"a repeat $name response ran $repeatJobs jobs")
+      assert(repeat == first)
     }
   }
 
@@ -1214,32 +1222,89 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("a commit between two screener requests is visible to the second; " +
-    "the old pin's prepared plan never answers again") {
+    "the old frame, no longer a pin, is computed on every call and still " +
+    "answers its own snapshot") {
     import graft.serve.Screeners
     import graft.sinks.MergeByKey
-    def blank(reply: String) = reply.replaceAll("\"timestamp\":\"[^\"]*\"", "")
-    val (dir, pin) = pinnedScreenerStore("graft_prepared_commit")
+    val (dir, pin) = pinnedScreenerStore("graft_memo_commit")
     var before = ""
-    val prepared = executionsRunBy {
-      before = blank(Screeners.respond(spark, "btst", pin))
-    }.head._2
+    assert(jobsRunBy { before = blank(Screeners.respond(spark, "btst", pin)) } == 1)
     assert(before.contains("{\"symbol\":\"S30\","), before)
-    assert(executionsRunBy(Screeners.respond(spark, "btst", pin)).head._2 eq prepared)
+    assert(jobsRunBy(Screeners.respond(spark, "btst", pin)) == 0)
     MergeByKey.upsert(spark, Seq(("S1", 99.0)).toDF("symbol", "composite_score"),
       dir, "symbol")
     assert(!MergeByKey.isPinned(pin), "the commit must drop the old pin")
     val fresh = MergeByKey.readCommitted(spark, dir)
     var after = ""
-    var old = ""
-    val ran = executionsRunBy { after = Screeners.respond(spark, "btst", fresh) } ++
-      executionsRunBy { old = blank(Screeners.respond(spark, "btst", pin)) }
+    assert(jobsRunBy { after = blank(Screeners.respond(spark, "btst", fresh)) } == 1,
+      "the fresh pin's first request must compute its answer")
     assert(after.contains("\"data\":[{\"symbol\":\"S1\",\"market_cap_category\":" +
       "\"Small Cap\",\"composite_score\":99.0"), after)
-    // the frame read before the commit is planned anew and still answers
-    // with the snapshot it was resolved against
-    assert(old == before)
-    assert(ran.size == 2 && ran.forall(r => !(r._2 eq prepared)),
-      "a request after the commit ran the old pin's prepared plan")
+    var again = ""
+    assert(jobsRunBy { again = blank(Screeners.respond(spark, "btst", fresh)) } == 0,
+      "a repeat request over the fresh pin ran a job")
+    assert(again == after)
+    // the frame read before the commit is computed anew on each call and
+    // still answers with the snapshot it was resolved against
+    for (_ <- 1 to 2) {
+      var old = ""
+      assert(jobsRunBy { old = blank(Screeners.respond(spark, "btst", pin)) } == 1,
+        "a frame that is no longer a pin answered from a kept result")
+      assert(old == before)
+    }
+  }
+
+  test("first requests racing on a fresh pin compute each screener once and " +
+    "all answer the unpinned envelope") {
+    import graft.serve.Screeners
+    import graft.sinks.MergeByKey
+    val (dir, pin) = pinnedScreenerStore("graft_memo_race")
+    val names = Seq("btst", "swing", "position")
+    val expected = names.map(n =>
+      n -> blank(Screeners.respond(spark, n, spark.read.parquet(s"$dir/v=0")))).toMap
+    names.foreach(n => assert(expected(n).contains("\"count\":"), expected(n)))
+    val clients = 4
+    val step = new java.util.concurrent.CyclicBarrier(clients)
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val jobs = jobsRunBy {
+      val threads = (0 until clients).map { _ =>
+        new Thread(() => {
+          try names.foreach { n =>
+            step.await(120, java.util.concurrent.TimeUnit.SECONDS)
+            got.add(n -> blank(Screeners.respond(spark, n, pin)))
+          } catch { case e: Throwable => failures.add(e) }
+        })
+      }
+      threads.foreach(_.start())
+      threads.foreach(_.join(300000))
+    }
+    assert(failures.isEmpty, failures)
+    assert(MergeByKey.isPinned(pin))
+    assert(got.size == clients * names.size)
+    val wrong = got.toArray(Array.empty[(String, String)]).toSeq
+      .filterNot { case (n, reply) => reply == expected(n) }
+    assert(wrong.isEmpty, s"${wrong.size} replies differ, e.g. ${wrong.headOption}")
+    assert(jobs == names.size,
+      s"${clients * names.size} racing first requests ran $jobs jobs")
+  }
+
+  test("a failed screener request over a pin is not kept: the next request " +
+    "runs again and answers") {
+    import graft.serve.Screeners
+    import graft.sinks.MergeByKey
+    val (_, pin) = pinnedScreenerStore("graft_memo_failure")
+    val part = new java.io.File(new java.net.URI(pin.inputFiles.head))
+    val aside = new java.io.File(part.getParentFile.getParentFile, "aside.parquet")
+    assert(part.renameTo(aside), s"could not move $part aside")
+    val failed = try Screeners.respond(spark, "btst", pin)
+      finally assert(aside.renameTo(part), s"could not move $part back")
+    assert(failed.startsWith("{\"success\":false,\"data\":null,\"count\":0,"),
+      failed)
+    assert(MergeByKey.isPinned(pin))
+    val reply = Screeners.respond(spark, "btst", pin)
+    assert(reply.startsWith("{\"success\":true,") && reply.contains("\"count\":20,"),
+      reply)
   }
 
   test("pins are bounded per JVM: past maxPins the least recently read " +

@@ -15,7 +15,7 @@ class ScreenersSpec extends SparkSpec {
     keys.map(k => json.indexOf("\"" + k + "\":"))
 
   test("screener discovery lists the registry's btst/swing/position set") {
-    assert(Screeners.listScreeners == Seq("btst", "position", "swing"))
+    assert(Screeners.registry.keySet == Set("btst", "position", "swing"))
   }
 
   test("success envelope carries all six ScreenerResponse keys in model order") {
